@@ -365,7 +365,15 @@ object WavCodec {
     * makes MidiSystem throw InvalidMidiDataException, which it
     * rethrows as UnsupportedAudioFileException), so skipping it for
     * non-MThd payloads is behavior-identical for EVERY input and
-    * keeps first-accepting-provider order intact. */
+    * keeps first-accepting-provider order intact.
+    *
+    * SPI assumption: the MThd-only acceptance holds because this
+    * reader parses through MidiSystem's `MidiFileReader` providers, and
+    * the only one assumed installed is the stock JDK
+    * `StandardMidiFileReader`, which accepts MThd payloads only. A
+    * third-party `javax.sound.midi.spi.MidiFileReader` on the classpath
+    * that accepted other payloads would be bypassed by this skip, and
+    * decoding of those inputs would change. */
   private def acceptsOnlyMThd(r: javax.sound.sampled.spi.AudioFileReader) =
     r.getClass.getName == "com.sun.media.sound.SoftMidiAudioFileReader"
   private def hasMThdMagic(data: Array[Byte]): Boolean =

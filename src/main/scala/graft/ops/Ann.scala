@@ -1127,6 +1127,18 @@ object Ann {
     val spark = docs.sparkSession
     val hIdx = seeds.headOption.map(_.fieldIndex("__h")).getOrElse(0)
     val vIdx = seeds.headOption.map(_.fieldIndex(vecCol)).getOrElse(1)
+    // a null vector or element cannot seed a centroid: refuse it by
+    // name instead of failing inside the sort (NPE) or the element
+    // match below (MatchError)
+    seeds.foreach { r =>
+      if (r.isNullAt(vIdx) || r.isNullAt(hIdx))
+        throw new IllegalArgumentException(
+          s"buildIvfKMeans: column '$vecCol' holds a null vector")
+      if (r.getSeq[Any](vIdx).contains(null))
+        throw new IllegalArgumentException(
+          s"buildIvfKMeans: column '$vecCol' holds a vector with a null " +
+            "element")
+    }
     val seedRows: java.util.List[org.apache.spark.sql.Row] =
       java.util.Arrays.asList(
         seeds.sortBy(_.getLong(hIdx)).zipWithIndex.map { case (r, i) =>
@@ -2006,16 +2018,12 @@ object Ann {
   }
 
   /** 8-bit codes from per-dimension bound COLUMNS:
-    * round((x−mn)/(mx−mn)·255), clamped; constant dims code to 0. */
+    * round((x−mn)/(mx−mn)·255), clamped; constant dims code to 0. A
+    * native codegen'd kernel ([[org.apache.spark.sql.graft.SqEncode]]),
+    * bit-identical to the composed `transform` form. */
   def quantizeSqCols(vec: Column, mins: Column, maxs: Column): Column =
-    transform(vec.cast("array<double>"), (x, i) => {
-      val mn = element_at(mins, i + 1)
-      val mx = element_at(maxs, i + 1)
-      when(mx > mn,
-        least(greatest(round((x - mn) / (mx - mn) * 255.0, 0), lit(0.0)),
-          lit(255.0)).cast("int"))
-        .otherwise(lit(0))
-    })
+    org.apache.spark.sql.graft.VecExprs.sqEncode(
+      vec.cast("array<double>"), mins, maxs)
 
   /** [[quantizeSqCols]] with corpus-global bounds from an [[SqModel]]
     * (dim-sized literals — small, not a plan bomb). Map-only. Codes are
@@ -2029,18 +2037,12 @@ object Ann {
   /** Asymmetric SQ L2 distance vs bound COLUMNS: full-precision query
     * vs dequantized codes (dq_i = mn_i + c_i/255·(mx_i−mn_i)),
     * sequential left-to-right sum then sqrt — the same scale as
-    * [[L2]].dist. */
+    * [[L2]].dist. A native codegen'd kernel
+    * ([[org.apache.spark.sql.graft.SqL2Adc]]), bit-identical to the
+    * composed `transform` / `zip_with` / `aggregate` form. */
   def sqDistCols(queryVec: Column, codes: Column, mins: Column,
-                 maxs: Column): Column = {
-    val dq = transform(codes, (c, i) => {
-      val mn = element_at(mins, i + 1)
-      val mx = element_at(maxs, i + 1)
-      mn + c.cast("double") / 255.0 * (mx - mn)
-    })
-    sqrt(aggregate(
-      zip_with(queryVec, dq, (a, b) => (a - b) * (a - b)),
-      lit(0.0), (acc, v) => acc + v))
-  }
+                 maxs: Column): Column =
+    org.apache.spark.sql.graft.VecExprs.sqL2Adc(queryVec, codes, mins, maxs)
 
   /** [[sqDistCols]] with corpus-global [[SqModel]] bounds. */
   def sqDist(queryVec: Column, codes: Column, model: SqModel): Column =
@@ -4148,8 +4150,8 @@ object Ann {
     * with a FULLY DECLARATIVE phase-1: the broadcast probe relation
     * carries each query's vector beside its probed cell, so the
     * asymmetric distance is [[sqDistCols]] over (row codes, per-cell
-    * bounds, per-query vector) — builtin columns only, no UDF, the
-    * whole scan stays in WholeStageCodegen. Phase-1 keeps
+    * bounds, per-query vector) — a native codegen'd kernel, no UDF, so
+    * the whole scan compiles into WholeStageCodegen. Phase-1 keeps
     * top-(k·refine) per query by (qdist, id) with a rank window over
     * the probed cells' codes; phase-2 joins the survivors' raw vectors
     * against the broadcast (qid, query) relation for the exact
@@ -4212,10 +4214,13 @@ object Ann {
     * RaBitQ-style sign-bit estimator
     * `‖qr‖² + rnorm² − 2·rnorm/√D·Σ sign·qr` runs as pure builtin
     * columns over (bits, rnorm, cell centroid, per-query vector from
-    * the broadcast probe relation) — zero UDFs, the scan stays in
-    * WholeStageCodegen; per-query rank windows keep k·refine, phase-2
-    * re-ranks exactly. `refine <= 0` = auto ([[defaultBitqRefine]]).
-    * Cosine runs spherical per [[buildIvfBitq]]'s contract. */
+    * the broadcast probe relation) — zero UDFs, but its `zip_with` /
+    * `aggregate` / `transform` are `CodegenFallback`, so Spark
+    * interprets the estimator per element (the next kernel to go
+    * native, as [[knnJoinIvfSq]]'s distance did); per-query rank
+    * windows keep k·refine, phase-2 re-ranks exactly. `refine <= 0` =
+    * auto ([[defaultBitqRefine]]). Cosine runs spherical per
+    * [[buildIvfBitq]]'s contract. */
   def knnJoinIvfBitq(queries: DataFrame, qId: String, qVec: String,
                      index: IvfBitIndex, dId: String, vecCol: String,
                      metric: Metric, probes: Int, k: Int,

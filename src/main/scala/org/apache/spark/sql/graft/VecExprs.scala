@@ -4,10 +4,14 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, TernaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, QuaternaryExpression, TernaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.errors.QueryExecutionErrors
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for the vector hot path — the reference's
@@ -15,12 +19,16 @@ import org.apache.spark.sql.types._
   * spec.py:426-435, 447-456) with `doGenCode`, so brute-force distance
   * scans stay inside whole-stage codegen (the composed `aggregate`/
   * `zip_with` forms in [[graft.functions.Vec]] are higher-order
-  * functions, which Spark evaluates interpreted).
+  * functions, which Spark evaluates interpreted). The IVF-SQ family
+  * has its own pair: [[SqL2Adc]], the asymmetric SQ8 scan distance,
+  * and [[SqEncode]], the 8-bit encoder.
   *
   * Bit-compatibility contract: every expression folds left-to-right in
   * double, exactly like its Vec twin — swapping one for the other cannot
   * change any oracle-checked result. Inputs are implicitly cast to
-  * array<double>; elements are assumed non-null (embedding columns).
+  * array<double>; elements are assumed non-null (embedding columns),
+  * except in the two SQ kernels, which reproduce their composed forms'
+  * null and error behavior too.
   */
 abstract class VecBinary extends BinaryExpression with ImplicitCastInputTypes
   with Serializable {
@@ -332,6 +340,252 @@ case class ScaledL2(first: Expression, second: Expression,
     copy(first = newFirst, second = newSecond, third = newThird)
 }
 
+/** Per-dimension helpers shared by [[SqL2Adc]] and [[SqEncode]] — the
+  * interpreted `eval` and the generated code call the same functions,
+  * so the two evaluation modes cannot drift apart. */
+object SqKernels {
+
+  /** `element_at(bounds, i + 1)` is in range: false on a null array;
+    * past the end it raises Spark's `element_at` out-of-range error
+    * under ANSI (`failOnError`) and is false otherwise. */
+  def inBounds(bounds: ArrayData, i: Int, failOnError: Boolean): Boolean =
+    bounds != null && (i < bounds.numElements() || {
+      if (failOnError) throw QueryExecutionErrors
+        .invalidElementAtIndexError(i + 1, bounds.numElements(), null)
+      false
+    })
+
+  /** `mx > mn` under Spark's double ordering: NaN sorts above every
+    * other value and equals itself. */
+  def gt(mx: Double, mn: Double): Boolean =
+    mx > mn || (java.lang.Double.isNaN(mx) && !java.lang.Double.isNaN(mn))
+
+  /** `least(greatest(round(y, 0), 0), 255)` as an int, with Spark's NaN
+    * ordering (NaN is the greatest value, so it clamps to 255). Spark
+    * rounds HALF_UP on the decimal `Double.toString(y)`; that string
+    * parses back to y and k + 0.5 is itself a double, so it lies on the
+    * same side of k + 0.5 as y, and HALF_UP on y's exact binary value
+    * (`y − ⌊y⌋ ≥ 0.5`, exact below 2⁵²) gives the same integer. */
+  def code(y: Double): Int =
+    if (!(y < 255.0)) 255
+    else if (y < 0.0) 0
+    else {
+      val r = y.toInt
+      if (y - r >= 0.5) r + 1 else r
+    }
+}
+
+/** Asymmetric SQ8 L2 distance — the scan kernel of the IVF-SQ family
+  * ([[graft.ops.Ann.sqDistCols]]): the full-precision query against
+  * 8-bit codes dequantized through per-dimension bounds,
+  * `√ Σ (qᵢ − (mnᵢ + cᵢ/255·(mxᵢ − mnᵢ)))²`, summed left to right from
+  * 0.0.
+  *
+  * Bit-identical to the composed `transform` / `zip_with` / `aggregate`
+  * form it replaces, edge cases included: null on a null query or
+  * codes array, on any null element or null bound, and when the query
+  * and codes lengths differ (`zip_with` pads with null). Bounds shorter
+  * than the codes raise the `element_at` out-of-range error under ANSI
+  * (null otherwise), for the first such dimension, in the composed
+  * form's order: mnᵢ, then cᵢ, then mxᵢ. Bounds are array<double> in
+  * every caller (typed literals or `VecAgg.vecMinMax` output). */
+case class SqL2Adc(query: Expression, codes: Expression, mins: Expression,
+                   maxs: Expression,
+                   failOnError: Boolean = SQLConf.get.ansiEnabled)
+  extends QuaternaryExpression with ImplicitCastInputTypes with Serializable {
+  override def first: Expression = query
+  override def second: Expression = codes
+  override def third: Expression = mins
+  override def fourth: Expression = maxs
+  override def prettyName: String = "sq_l2_adc"
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(ArrayType(DoubleType), ArrayType(IntegerType),
+      ArrayType(DoubleType), ArrayType(DoubleType))
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+
+  override def eval(input: InternalRow): Any = {
+    val q = query.eval(input).asInstanceOf[ArrayData]
+    if (q == null) return null
+    val c = codes.eval(input).asInstanceOf[ArrayData]
+    if (c == null) return null
+    val lo = mins.eval(input).asInstanceOf[ArrayData]
+    val hi = maxs.eval(input).asInstanceOf[ArrayData]
+    val n = c.numElements()
+    var isNull = q.numElements() != n
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      if (SqKernels.inBounds(lo, i, failOnError) && !lo.isNullAt(i) &&
+          !c.isNullAt(i) &&
+          SqKernels.inBounds(hi, i, failOnError) && !hi.isNullAt(i)) {
+        val mn = lo.getDouble(i)
+        val dq = mn + c.getInt(i).toDouble / 255.0 * (hi.getDouble(i) - mn)
+        if (isNull || q.isNullAt(i)) isNull = true
+        else {
+          val d = q.getDouble(i) - dq
+          acc += d * d
+        }
+      } else isNull = true
+      i += 1
+    }
+    if (isNull) null else math.sqrt(acc)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext,
+                                   ev: ExprCode): ExprCode = {
+    val q = query.genCode(ctx)
+    val c = codes.genCode(ctx)
+    val mn = mins.genCode(ctx)
+    val mx = maxs.genCode(ctx)
+    val k = SqKernels.getClass.getName.stripSuffix("$")
+    val arr = classOf[ArrayData].getName
+    val lo = ctx.freshName("lo")
+    val hi = ctx.freshName("hi")
+    val n = ctx.freshName("n")
+    val nul = ctx.freshName("nul")
+    val acc = ctx.freshName("acc")
+    val i = ctx.freshName("i")
+    val m = ctx.freshName("m")
+    val dq = ctx.freshName("dq")
+    val d = ctx.freshName("d")
+    ev.copy(code = code"""
+      ${q.code}
+      boolean ${ev.isNull} = true;
+      double ${ev.value} = 0.0;
+      if (!${q.isNull}) {
+        ${c.code}
+        if (!${c.isNull}) {
+          ${mn.code}
+          ${mx.code}
+          $arr $lo = ${mn.isNull} ? null : ${mn.value};
+          $arr $hi = ${mx.isNull} ? null : ${mx.value};
+          int $n = ${c.value}.numElements();
+          boolean $nul = ${q.value}.numElements() != $n;
+          double $acc = 0.0;
+          for (int $i = 0; $i < $n; $i++) {
+            if ($k.inBounds($lo, $i, $failOnError) && !$lo.isNullAt($i)
+                && !${c.value}.isNullAt($i)
+                && $k.inBounds($hi, $i, $failOnError) && !$hi.isNullAt($i)) {
+              double $m = $lo.getDouble($i);
+              double $dq = $m + (double) ${c.value}.getInt($i) / 255.0
+                * ($hi.getDouble($i) - $m);
+              if ($nul || ${q.value}.isNullAt($i)) {
+                $nul = true;
+              } else {
+                double $d = ${q.value}.getDouble($i) - $dq;
+                $acc += $d * $d;
+              }
+            } else {
+              $nul = true;
+            }
+          }
+          if (!$nul) {
+            ${ev.isNull} = false;
+            ${ev.value} = Math.sqrt($acc);
+          }
+        }
+      }""")
+  }
+
+  override protected def withNewChildrenInternal(
+      newFirst: Expression, newSecond: Expression, newThird: Expression,
+      newFourth: Expression): Expression =
+    copy(query = newFirst, codes = newSecond, mins = newThird,
+      maxs = newFourth)
+}
+
+/** SQ8 encoder — the build, append and query-side quantizer of the
+  * IVF-SQ family ([[graft.ops.Ann.quantizeSqCols]]): per dimension,
+  * `round((x − mn)/(mx − mn)·255)` clamped to 0..255 when `mx > mn`,
+  * else 0.
+  *
+  * Bit-identical to the composed `transform` form it replaces: Spark's
+  * HALF_UP `round` and NaN ordering ([[SqKernels.code]]); a null
+  * element, a null bound or a constant dimension codes 0 (`greatest`
+  * skips nulls); a null vector gives null. Bounds shorter than the
+  * vector raise the `element_at` out-of-range error under ANSI (code 0
+  * otherwise) in the composed form's order: mxᵢ, then mnᵢ. */
+case class SqEncode(vec: Expression, mins: Expression, maxs: Expression,
+                    failOnError: Boolean = SQLConf.get.ansiEnabled)
+  extends TernaryExpression with ImplicitCastInputTypes with Serializable {
+  override def first: Expression = vec
+  override def second: Expression = mins
+  override def third: Expression = maxs
+  override def prettyName: String = "sq_encode"
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(ArrayType(DoubleType), ArrayType(DoubleType), ArrayType(DoubleType))
+  // the composed form's type: `transform` declares nullable elements
+  override def dataType: DataType = ArrayType(IntegerType)
+  override def nullable: Boolean = vec.nullable
+
+  override def eval(input: InternalRow): Any = {
+    val v = vec.eval(input).asInstanceOf[ArrayData]
+    if (v == null) return null
+    val lo = mins.eval(input).asInstanceOf[ArrayData]
+    val hi = maxs.eval(input).asInstanceOf[ArrayData]
+    val out = new Array[Int](v.numElements())
+    var i = 0
+    while (i < out.length) {
+      if (SqKernels.inBounds(hi, i, failOnError) && !hi.isNullAt(i) &&
+          SqKernels.inBounds(lo, i, failOnError) && !lo.isNullAt(i) &&
+          !v.isNullAt(i)) {
+        val mx = hi.getDouble(i)
+        val mn = lo.getDouble(i)
+        if (SqKernels.gt(mx, mn))
+          out(i) = SqKernels.code((v.getDouble(i) - mn) / (mx - mn) * 255.0)
+      }
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext,
+                                   ev: ExprCode): ExprCode = {
+    val v = vec.genCode(ctx)
+    val mn = mins.genCode(ctx)
+    val mx = maxs.genCode(ctx)
+    val k = SqKernels.getClass.getName.stripSuffix("$")
+    val arr = classOf[ArrayData].getName
+    val lo = ctx.freshName("lo")
+    val hi = ctx.freshName("hi")
+    val out = ctx.freshName("out")
+    val i = ctx.freshName("i")
+    val a = ctx.freshName("a")
+    val b = ctx.freshName("b")
+    ev.copy(code = code"""
+      ${v.code}
+      boolean ${ev.isNull} = ${v.isNull};
+      $arr ${ev.value} = null;
+      if (!${ev.isNull}) {
+        ${mn.code}
+        ${mx.code}
+        $arr $lo = ${mn.isNull} ? null : ${mn.value};
+        $arr $hi = ${mx.isNull} ? null : ${mx.value};
+        int[] $out = new int[${v.value}.numElements()];
+        for (int $i = 0; $i < $out.length; $i++) {
+          if ($k.inBounds($hi, $i, $failOnError) && !$hi.isNullAt($i)
+              && $k.inBounds($lo, $i, $failOnError) && !$lo.isNullAt($i)
+              && !${v.value}.isNullAt($i)) {
+            double $b = $hi.getDouble($i);
+            double $a = $lo.getDouble($i);
+            if ($k.gt($b, $a)) {
+              $out[$i] = $k.code(
+                (${v.value}.getDouble($i) - $a) / ($b - $a) * 255.0);
+            }
+          }
+        }
+        ${ev.value} = ${classOf[UnsafeArrayData].getName}
+          .fromPrimitiveArray($out);
+      }""")
+  }
+
+  override protected def withNewChildrenInternal(
+      newFirst: Expression, newSecond: Expression,
+      newThird: Expression): Expression =
+    copy(vec = newFirst, mins = newSecond, maxs = newThird)
+}
+
 /** Sparse dot of a document's (indices, values) column pair against a
   * FIXED query embedded as literals — the recognizable scalar form
   * behind the declarative sparse rewrite (the sparse twin of
@@ -437,6 +691,14 @@ object VecExprs {
   def sortedIntersectSize(a: Column, b: Column): Column =
     c(SortedIntersectSize(ExpressionUtils.expression(a),
       ExpressionUtils.expression(b)))
+  def sqL2Adc(query: Column, codes: Column, mins: Column,
+              maxs: Column): Column =
+    c(SqL2Adc(ExpressionUtils.expression(query),
+      ExpressionUtils.expression(codes), ExpressionUtils.expression(mins),
+      ExpressionUtils.expression(maxs)))
+  def sqEncode(vec: Column, mins: Column, maxs: Column): Column =
+    c(SqEncode(ExpressionUtils.expression(vec),
+      ExpressionUtils.expression(mins), ExpressionUtils.expression(maxs)))
   def scaledL2(a: Column, b: Column, scales: Column): Column =
     c(ScaledL2(ExpressionUtils.expression(a), ExpressionUtils.expression(b),
       ExpressionUtils.expression(scales)))

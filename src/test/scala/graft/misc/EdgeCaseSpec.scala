@@ -259,6 +259,28 @@ class EdgeCaseSpec extends SparkSpecBase {
     assert(!hits.head.getDouble(1).isNaN)
   }
 
+  test("k-means IVF build refuses a null vector and a null element " +
+      "with a typed error naming the column") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("emb", ArrayType(DoubleType, containsNull = true))))
+    def docs(rows: Row*) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1), schema)
+    val nullVec = intercept[IllegalArgumentException] {
+      Ann.buildIvfKMeans(docs(Row(1L, Seq(1.0, 2.0)), Row(2L, null),
+        Row(3L, Seq(5.0, 1.0))), "emb", k = 3)
+    }
+    assert(nullVec.getMessage.contains("'emb'") &&
+      nullVec.getMessage.contains("null vector"), nullVec.getMessage)
+    val nullElem = intercept[IllegalArgumentException] {
+      Ann.buildIvfKMeans(docs(Row(1L, Seq(1.0, 2.0)),
+        Row(2L, Seq(3.0, null)), Row(3L, Seq(5.0, 1.0))), "emb", k = 3)
+    }
+    assert(nullElem.getMessage.contains("'emb'") &&
+      nullElem.getMessage.contains("null element"), nullElem.getMessage)
+  }
+
   test("hash split with a single weight puts everything in it") {
     import graft.ops.Sampling
     val sp = spark
