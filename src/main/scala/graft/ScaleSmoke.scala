@@ -387,10 +387,11 @@ object ScaleSmoke {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       // returns (top-k rows, phase-1 files actually read post-DPP)
       def run(probes: Int): (Long, Long) = {
-        plans.AnnIndex.registerMaxsim("mv", "vec_id", () => stored,
-          refine = 100, Some(plans.AnnIndex.MaxsimIvf(
-            () => stored, "centroid_id", "mv_mean",
-            () => model.centroids, "centroid_id", "centroid", probes)), owner = "")
+        plans.AnnIndex.register(plans.Binding.Maxsim("mv", "vec_id",
+          () => stored, refine = 100,
+          Some(plans.Binding.ProbeDist("mv_mean", "centroid_id",
+            () => model.centroids, "centroid_id", "centroid",
+            ops.Ann.Cosine, probes))))
         try {
           val df = stored.withColumn("score",
               round(org.apache.spark.sql.graft.VecExprs
@@ -418,7 +419,7 @@ object ScaleSmoke {
                 f.metrics.get("numFiles")).map(_.value).getOrElse(0L)
           }.sum
           (n, cells)
-        } finally plans.AnnIndex.unregisterMaxsim("mv")
+        } finally plans.AnnIndex.unregister("mv")
       }
       try {
         val (n2, cells2) = run(2)
@@ -583,10 +584,10 @@ object ScaleSmoke {
       d
     }
     time("sparse_declarative_query") {
-      plans.AnnIndex.registerSparse("si", "sv", "doc_id",
+      plans.AnnIndex.register(plans.Binding.Sparse("si", "sv", "doc_id",
         () => functions.Sparse.invertedPostings(
           sparseDocsDecl, "doc_id", "si", "sv"),
-        refine = 2)
+        refine = 2))
       try {
         val q = sparseEmb.embed("spark merge hash window")
         val df = sparseDocsDecl.withColumn("score",
@@ -598,7 +599,7 @@ object ScaleSmoke {
             .contains("LeftSemi"),
           "declarative sparse rewrite did not engage at scale")
         df.count()
-      } finally plans.AnnIndex.unregisterSparse("si")
+      } finally plans.AnnIndex.unregister("si")
     }
 
     // Declarative BM25 at scale: index build is the corpus-linear part
@@ -616,8 +617,8 @@ object ScaleSmoke {
       val idx = ops.Bm25.buildCached(docs, "doc_id", "text",
         s"smoke|$xf")
       plans.AnnIndex.install(spark)
-      plans.AnnIndex.registerBm25("text", "doc_id", () => idx,
-        refine = 2)
+      plans.AnnIndex.register(plans.Binding.Bm25("text", "doc_id",
+        () => idx, refine = 2))
       try {
         val df = docs
           .withColumn("score", ops.Bm25.scoreColumn(idx,
@@ -627,7 +628,7 @@ object ScaleSmoke {
         require(df.queryExecution.optimizedPlan.toString
           .contains("LeftSemi"), "bm25 rewrite did not engage at scale")
         df.count()
-      } finally plans.AnnIndex.unregisterBm25("text")
+      } finally plans.AnnIndex.unregister("text")
     }
 
     // Batched provider ingest at scale: the inflated doc table through

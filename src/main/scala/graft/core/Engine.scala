@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import Spec._
 import graft.functions.Vec
 import graft.ops.{Ann, Bm25}
+import graft.plans.{AnnIndex, Binding}
 
 /** Typed search surface over a [[Registry]] — the Spark twin of
   * `VechordRegistry.search_by_vector` / `search_by_multivec` /
@@ -29,7 +30,7 @@ final class Engine(reg: Registry) {
     * index runs the matryoshka two-phase instead (flat prefix cut +
     * exact re-rank); there `refine` is the candidate MULTIPLIER with
     * auto = 5 (matching
-    * [[graft.plans.AnnIndex.registerMatryoshka]]'s default). */
+    * [[graft.plans.Binding.matryoshka]]'s default). */
   def searchByVector(td: TableDef[_], queryVec: Seq[Double], topk: Int = 10,
                      probes: Int = 0, refine: Int = -1,
                      returnFields: Seq[String] = Nil,
@@ -108,7 +109,7 @@ final class Engine(reg: Registry) {
         case _ if ix.mrlDims > 0 =>
           // matryoshka two-phase: `refine` is the candidate multiplier
           // (the quantized families' knob — candidates = topk·refine,
-          // default 5 matching AnnIndex.registerMatryoshka); the
+          // default 5 matching Binding.matryoshka); the
           // predicate thins the corpus BEFORE the prefix cut (the
           // family's no-starvation contract)
           val cand = topk * (if (refine > 0) refine else 5)
@@ -696,7 +697,7 @@ final class Engine(reg: Registry) {
                          maxsimRefine: Int = 1000): Unit = {
     // matryoshka's declarative form is DIR-backed (the rewrite's
     // candidate cut reads a writeMatryoshka root's emb_pre column —
-    // AnnIndex.registerMatryoshka); an in-memory registration here
+    // Binding.matryoshka); an in-memory registration here
     // would silently serve EXACT results while searchByVector serves
     // the cut, breaking the declarative/imperative parity contract.
     // Refuse loudly instead of registering nothing.
@@ -704,12 +705,12 @@ final class Engine(reg: Registry) {
       throw new IllegalStateException(
         s"${td.name}: declarative matryoshka needs an at-rest root — " +
           s"write one (Ann.writeMatryoshka) and register it via " +
-          s"AnnIndex.registerMatryoshka('${ix.column}', ...) — or, " +
-          s"for a composed lists+mrlDims table, a writeMatryoshkaIvf " +
-          s"root via AnnIndex.registerMatryoshkaIvf; " +
+          s"AnnIndex.register(Binding.matryoshka('${ix.column}', " +
+          s"...)) — or, for a composed lists+mrlDims table, a " +
+          s"writeMatryoshkaIvf root via Binding.matryoshkaIvf; " +
           "installDeclarative has no in-memory truncation form")
     }
-    graft.plans.AnnIndex.install(reg.spark)
+    AnnIndex.install(reg.spark)
     // lists == 0 means exact brute-force — nothing to register for the
     // dense column (the maxsim registration below still applies)
     td.vectorIndex.filter(_.lists > 0).foreach { ix =>
@@ -718,36 +719,36 @@ final class Engine(reg: Registry) {
       model // fail install-time, not first-query-time, when unbuilt
       val p = if (probes > 0) probes
         else math.ceil(ix.lists / 16.0).toInt.max(1)
-      if (ix.oneBit)
-        graft.plans.AnnIndex.registerOneBit(ix.column, td.pk,
-          () => ivfBitqCached(td, ix, model),
-          ix.distance, p, autoBitqRefine(ix, refine), owner = owner(td))
-      else if (ix.quantized)
-        graft.plans.AnnIndex.registerQuantized(ix.column, td.pk,
-          () => ivfSqCached(td, ix, model),
-          ix.distance, p, autoSqRefine(refine), owner = owner(td))
-      else if (ix.pq > 0)
-        graft.plans.AnnIndex.registerPq(ix.column, td.pk,
-          () => ivfPqCached(td, ix, model),
-          ix.distance, p, autoSqRefine(refine), owner = owner(td))
-      else
-        // resolver-backed like every other registration: a buildIndex
-        // re-run (new KMeans model) must reach declarative probe
-        // selection without a re-install; the centroid collect is
-        // memoized per __ivf side-table version
-        graft.plans.AnnIndex.register(ix.column, () => centsCached(td),
-          "centroid_id", ix.distance, p, owner = owner(td))
+      def quantized(index: () => Ann.QuantIndex, r: Int) =
+        Binding.Quantized(ix.column, td.pk, index, ix.distance, p, r,
+          owner(td))
+      AnnIndex.register(
+        if (ix.oneBit)
+          quantized(() => ivfBitqCached(td, ix, model),
+            autoBitqRefine(ix, refine))
+        else if (ix.quantized)
+          quantized(() => ivfSqCached(td, ix, model), autoSqRefine(refine))
+        else if (ix.pq > 0)
+          quantized(() => ivfPqCached(td, ix, model), autoSqRefine(refine))
+        else
+          // resolver-backed like every other registration: a buildIndex
+          // re-run (new KMeans model) must reach declarative probe
+          // selection without a re-install; the centroid collect is
+          // memoized per __ivf side-table version
+          Binding.Probe(ix.column, "centroid_id", () => centsCached(td),
+            ix.distance, p, owner(td)))
     }
     // multivector column: plain orderBy(maxsim_dot(q, mv).desc).limit(k)
     // plans rewrite into the two-phase refine (the declarative
     // `maxsim_refine`, registry.py:233) — resolver-backed like the
     // dense registrations, so post-install writes stay visible. A
     // LISTS-built multivec IVF additionally routes phase-1 through the
-    // probe + dynamic-pruning machinery (MaxsimIvf) so candidates come
-    // from probed cells, not a full token-matrix scan.
+    // probe + dynamic-pruning machinery (a ProbeDist over the assigned
+    // layout) so candidates come from probed cells, not a full
+    // token-matrix scan.
     td.indexes.collectFirst { case ix: Spec.MultiVectorIndex => ix }
       .foreach { ix =>
-        val ivf = if (ix.lists > 0) {
+        val binding = if (ix.lists > 0) {
           mvIndexModel(td).getOrElse(throw new IllegalStateException(
             s"${td.name} has no built multivec IVF model — run " +
               "buildIndex first")) // fail install-time, not query-time
@@ -757,21 +758,23 @@ final class Engine(reg: Registry) {
             throw new IllegalStateException(
               s"${td.name}'s multivec IVF model (__mvivf) vanished " +
                 "after install — rebuild with buildIndex"))
-          Some(graft.plans.AnnIndex.MaxsimIvf(
-            () => mvAssignedCached(td, ix, model),
-            "centroid_id", MvMeanCol,
-            () => model.centroids, "centroid_id", "centroid", p))
-        } else None
-        graft.plans.AnnIndex.registerMaxsim(ix.column, td.pk,
-          () => reg.table(td), maxsimRefine, ivf, owner = owner(td))
+          Binding.Maxsim(ix.column, td.pk,
+            () => mvAssignedCached(td, ix, model), maxsimRefine,
+            Some(Binding.ProbeDist(MvMeanCol, "centroid_id",
+              () => model.centroids, "centroid_id", "centroid",
+              Ann.Cosine, p)), owner(td))
+        } else
+          Binding.Maxsim(ix.column, td.pk, () => reg.table(td),
+            maxsimRefine, owner = owner(td))
+        AnnIndex.register(binding)
       }
     // keyword column: plain orderBy(bm25_score.desc).limit(k) plans
     // ([[keywordScoreColumn]] builds the score) rewrite into the
     // postings-index semi-join — the declarative `<&>` (client.py:
     // 356-380); resolver-backed via the version-keyed keywordIndex
     td.keywordIndex.foreach { kw =>
-      graft.plans.AnnIndex.registerBm25(kw.column, td.pk,
-        () => keywordIndex(td), owner = owner(td))
+      AnnIndex.register(Binding.Bm25(kw.column, td.pk,
+        () => keywordIndex(td), owner = owner(td)))
     }
     // sparse column: plain orderBy(sparse_dot_q.desc).limit(k) plans
     // ([[sparseScoreColumn]] builds the score) rewrite into the
@@ -779,9 +782,8 @@ final class Engine(reg: Registry) {
     // [[sparsePostings]]'s lazy current-version plan
     td.indexes.collectFirst { case ix: Spec.SparseIndex => ix }
       .foreach { ix =>
-        graft.plans.AnnIndex.registerSparse(ix.column,
-          ix.valuesColumn, td.pk,
-          () => sparsePostings(td), owner = owner(td))
+        AnnIndex.register(Binding.Sparse(ix.column, ix.valuesColumn,
+          td.pk, () => sparsePostings(td), owner = owner(td)))
       }
     if (td.vectorIndex.isEmpty && td.keywordIndex.isEmpty &&
         !td.indexes.exists(ix => ix.isInstanceOf[Spec.MultiVectorIndex] ||
@@ -1013,19 +1015,15 @@ final class Engine(reg: Registry) {
   private val storedAttachments =
     scala.collection.mutable.Map[(String, String), () => Unit]()
 
-  /** Remove [[installDeclarative]]'s registrations for the table. */
-  def uninstallDeclarative(td: TableDef[_]): Unit = {
-    td.vectorIndex.foreach { ix =>
-      graft.plans.AnnIndex.unregister(ix.column)
-      graft.plans.AnnIndex.unregisterQuantized(ix.column)
-    }
-    td.indexes.collectFirst { case Spec.MultiVectorIndex(c, _) => c }
-      .foreach(graft.plans.AnnIndex.unregisterMaxsim)
-    td.keywordIndex.foreach(kw =>
-      graft.plans.AnnIndex.unregisterBm25(kw.column, td.pk))
-    td.indexes.collectFirst { case s: Spec.SparseIndex => s.column }
-      .foreach(graft.plans.AnnIndex.unregisterSparse)
-  }
+  /** Remove [[installDeclarative]]'s registrations for the table —
+    * only this table's: another table bound on the same column names
+    * keeps its rewrites. */
+  def uninstallDeclarative(td: TableDef[_]): Unit =
+    (td.vectorIndex.map(_.column) ++ td.keywordIndex.map(_.column) ++
+      td.indexes.collect {
+        case Spec.MultiVectorIndex(c, _) => c
+        case s: Spec.SparseIndex => s.column
+      }).foreach(AnnIndex.unregister(_, owner(td)))
 
   /** Version key for the memoized index artifacts: the TABLE's segment
     * manifest AND the index side table's — a rebuilt model (buildIndex
@@ -1043,7 +1041,7 @@ final class Engine(reg: Registry) {
 
   /** Driver-side centroid collect for the PLAIN declarative IVF
     * registration, memoized per `__ivf` side-table version: probe cells
-    * are chosen at plan time (AnnIndex.Entry), so the centroids must be
+    * are chosen at plan time (Binding.Probe), so the centroids must be
     * driver-resident — but a buildIndex re-run must refresh them, and
     * re-collecting per query would be a per-plan job. */
   private val centsCache =
@@ -1059,8 +1057,7 @@ final class Engine(reg: Registry) {
             throw new IllegalStateException(
               s"${td.name}'s IVF model (__ivf) vanished after install — " +
                 "rebuild with buildIndex"))
-          val cs = model.centroids.collect().map(r =>
-            (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq.sortBy(_._1)
+          val cs = model.collectedCentroids.toSeq
           centsCache(key) = (version, cs)
           cs
       }

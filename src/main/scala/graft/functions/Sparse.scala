@@ -400,7 +400,7 @@ object Sparse {
     * codegen'd [[org.apache.spark.sql.graft.SparseDotQ]] expression,
     * which [[graft.plans.AnnTopKRule]] recognizes in
     * `orderBy(score.desc).limit(k)` plans and (when the indices column
-    * is registered via `AnnIndex.registerSparse`) rewrites into an
+    * is bound via `Binding.Sparse`) rewrites into an
     * inverted-postings candidate semi-join + this exact re-rank.
     * Score-identical to [[sparseDot]] with the same query. */
   def scoreColumn(indices: Column, values: Column,

@@ -942,7 +942,7 @@ object Ann {
       * disk state it was read from, unlike any dir-keyed cache. */
     @transient lazy val collectedCentroids: Array[(Long, Array[Double])] =
       centroids
-        .select(col(idCol).cast("long"), col(vecCol))
+        .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
         .collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
         .sortBy(_._1)
@@ -1891,7 +1891,7 @@ object Ann {
     * the family's reader guards (torn-merge refusal + marker
     * validation) — the resolve seat the declarative registration's
     * fingerprint-keyed cache re-collects through
-    * ([[graft.plans.AnnIndex.registerMatryoshkaIvf]]), so a
+    * ([[graft.plans.Binding.matryoshkaIvf]]), so a
     * maintenance re-pin reaches declarative probe selection while a
     * mid-merge root refuses loudly instead of serving half-moved
     * cells. */
@@ -2199,13 +2199,18 @@ object Ann {
     docs.withColumn(outCol, enc(col(vecCol).cast("array<double>")))
   }
 
-  /** Asymmetric PQ distance, codegen'd: the query is pre-folded
-    * driver-side into an m × |codes| lookup table of partial SQUARED
-    * L2 distances (m·codes·subDim flops ONCE per query — the classical
-    * ADC trade), shipped as a plan literal, and the scan then costs m
-    * array lookups + a sequential fold per row — builtins only, the
-    * whole distance stays inside WholeStageCodegen, no vector
-    * arithmetic and no UDF in the hot path. The literal is m·codes
+  /** Asymmetric PQ distance: the query is pre-folded driver-side into
+    * an m × |codes| lookup table of partial SQUARED L2 distances
+    * (m·codes·subDim flops ONCE per query — the classical ADC trade),
+    * shipped as a plan literal, and the scan then costs m array
+    * lookups + a sequential fold per row — builtins only, no vector
+    * arithmetic and no UDF in the hot path. NOT codegen'd: the
+    * `transform` and `aggregate` higher-order functions are
+    * `CodegenFallback` in Spark 4, so every row's fold runs in the
+    * expression interpreter with boxed lambdas and keeps its Project
+    * out of whole-stage codegen (the SQ kernels' finding; a native
+    * [[org.apache.spark.sql.graft.SqL2Adc]]-style kernel is the fix).
+    * The literal is m·codes
     * doubles (96×256 ≈ 200 KB worst case); a query BATCH at that size
     * should carry LUTs through a broadcast join instead — the
     * [[knnJoinIvf]] probe pattern. */
@@ -2714,7 +2719,7 @@ object Ann {
     * multi-root radii frames keep the plain collect. */
   private val dirRadiiCache =
     new graft.core.LruCache[String, Map[Long, Double]](64)
-  private[ops] def collectRadiiMap(model: IvfModel,
+  private[graft] def collectRadiiMap(model: IvfModel,
                                    radii: DataFrame): Map[Long, Double] = {
     def doCollect(): Map[Long, Double] = radii
       .select(col(model.idCol).cast("long"), col("radius").cast("double"))
@@ -4362,6 +4367,11 @@ object Ann {
     topK(pruned, idCol, vecCol, queryVec, metric, k, roundTo)
   }
 
+  /** An IVF index with a codes-only phase-1 scan — SQ
+    * ([[IvfSqIndex]]), PQ ([[IvfPqIndex]]) or 1-bit ([[IvfBitIndex]]);
+    * the declarative quantized rewrite serves all three. */
+  sealed trait QuantIndex
+
   /** IVF + scalar quantization composed — the actual vchordrq index
     * shape (RaBitQ-style quantized codes INSIDE IVF cells + exact
     * re-rank; /root/reference/vechord/spec.py:437-444, README.md:30-31):
@@ -4375,7 +4385,7 @@ object Ann {
     *    the probe scan happens). Exact min/max inputs, so any engine
     *    reproduces codes and distances bit-for-bit. */
   final case class IvfSqIndex(quantized: DataFrame, bounds: DataFrame,
-                              model: IvfModel)
+                              model: IvfModel) extends QuantIndex
 
   /** Build: assign cells, per-cell bound aggregation (one map-side-
     * combinable shuffle on centroid_id), quantize via the co-keyed
@@ -4597,6 +4607,7 @@ object Ann {
     * re-rank is true cosine distance. */
   final case class IvfPqIndex(encoded: DataFrame, pq: PqModel,
                               model: IvfModel, spherical: Boolean)
+      extends QuantIndex
 
   def buildIvfPq(docs: DataFrame, vecCol: String, model: IvfModel,
                  m: Int, metric: Metric, roundTo: Int = 5): IvfPqIndex =
@@ -4873,6 +4884,7 @@ object Ann {
     * `quantized` columns: doc cols + centroid_id + bits (array<int>
     * 0/1) + rnorm. */
   final case class IvfBitIndex(quantized: DataFrame, model: IvfModel)
+      extends QuantIndex
 
   /** Build: assign cells (map-only broadcast argmin), then a plain
     * equi-join with the centroid table on centroid_id for the residual
@@ -5143,7 +5155,7 @@ object Ann {
 
   /** Public (family, spherical) probe of a quantized root — what a
     * caller that must DISPATCH on the family (the declarative
-    * [[graft.plans.AnnIndex.registerQuantizedRoot]] — SQ, PQ and
+    * [[graft.plans.Binding.quantizedRoot]] — SQ, PQ and
     * 1-bit resolve to different index loaders and refine defaults)
     * needs from the geometry marker without reading any data.
     * Guarded like every quantized reader: refuses mid-merge and
@@ -5944,7 +5956,7 @@ object Ann {
     * the PERSISTED token-mean dot. The cell filter is driver-literal
     * (bounded by `lists`); the declarative rewrite's registration form
     * uses a semi-joined probe subplan instead
-    * ([[graft.plans.AnnIndex.registerMaxsim]] with an IVF). */
+    * ([[graft.plans.Binding.Maxsim]] with an IVF). */
   def maxsimCandidatesIvf(assigned: DataFrame, idCol: String,
                           meanCol: String, model: IvfModel,
                           queryVecs: Seq[Seq[Double]], n: Int, probes: Int,

@@ -501,7 +501,7 @@ object Bm25 {
     * `kw <&> to_bm25query('idx', q)` (client.py:356-380): write
     * `docs.withColumn("score", Bm25.scoreColumn(idx, q, col("text")))
     * .orderBy(desc("score"), asc(id)).limit(k)` and, with the column
-    * registered ([[graft.plans.AnnIndex.registerBm25]]), the plan
+    * registered ([[graft.plans.Binding.Bm25]]), the plan
     * rewrites into a candidate semi-join from the postings with this
     * expression as the exact re-rank. Un-registered it evaluates
     * brute-force (full scan, score 0 for no-term docs).

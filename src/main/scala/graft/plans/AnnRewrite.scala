@@ -1,137 +1,463 @@
 package graft.plans
 
+import java.util.concurrent.atomic.AtomicReference
+
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.{CosDist, DotProduct, L2Dist}
+import org.apache.spark.sql.graft.{CosDist, DotProduct, L2Dist, VecExprs}
+import org.apache.spark.sql.types.{DataType, IntegerType, ShortType,
+  StringType}
 
 import graft.ops.Ann
 
-/** Index-aware ANN top-k rewrite — a Catalyst optimizer rule that turns
-  * a brute-force `Sort(dist(vec, query)) [+ Limit]` over a REGISTERED
-  * IVF-indexed table into a probe-pruned scan: it injects
-  * `Filter(centroid_id IN nearest-probe cells)` below the sort. Physical
-  * planning then turns that filter into real partition pruning when the
-  * table is stored `partitionBy(centroid_id)` ([[Ann.writePartitioned]]).
+/** One declarative-rewrite registration — the user's opt-in to
+  * approximate (or, for [[Binding.Range]], provably exact pruned)
+  * search over an indexed column, consumed by [[AnnTopKRule]].
+  * Registered through [[AnnIndex.register]], keyed by [[column]].
   *
-  * This is the declarative twin of the reference's
-  * `SET LOCAL vchordrq.probes = N` (client.py:285-309): registering an
-  * index (with its probe budget) is the user's opt-in to approximate
-  * search; unregistered queries are untouched.
-  *
-  * Scope contract: registration keys on the (vector column name,
-  * centroid column name) pair — any plan whose scan exposes both columns
-  * and sorts by a recognized distance expression over that vector column
-  * is rewritten. Register distinct column names per logical index.
-  *
-  * MAINTENANCE-AWARENESS map (round 18) — which registrations keep
-  * serving a root's CURRENT geometry across out-of-band maintenance
-  * (split / merge / append / fresh-compaction), and which are frozen
-  * snapshots by design:
-  *  - root-backed, maintenance-aware: [[registerDenseRoot]] (centroids
+  * MAINTENANCE-AWARENESS map (round 18) — which bindings keep serving
+  * a root's CURRENT geometry across out-of-band maintenance (split /
+  * merge / append / fresh-compaction), and which are frozen snapshots
+  * by design:
+  *  - root-backed, maintenance-aware: [[Binding.denseRoot]] (centroids
   *    fingerprint-cached; appends move nothing else),
-  *    [[registerRangeRoot]] (centroids fingerprint-cached, radii
+  *    [[Binding.rangeRoot]] (centroids fingerprint-cached, radii
   *    re-collected per resolve — appends grow them without a re-pin),
-  *    [[registerQuantizedRoot]] (full re-load per resolve — compaction
+  *    [[Binding.quantizedRoot]] (full re-load per resolve — compaction
   *    changes the data listing without a re-pin),
-  *    [[registerMatryoshkaIvf]] (centroids fingerprint-cached, rows
+  *    [[Binding.matryoshkaIvf]] (centroids fingerprint-cached, rows
   *    re-read per candidate plan), and the EXECUTOR-SIDE twins
-  *    [[registerDenseRootDistributed]] / [[registerRangeRootDistributed]]
+  *    [[Binding.denseRootDistributed]] / [[Binding.rangeRootDistributed]]
   *    (probe/admission subplans over the root's own side tables,
   *    re-read per resolve — no driver collect at any cell count).
-  *  - resolver-backed (as current as the caller's closure):
-  *    [[registerDistributed]], [[registerBm25]], [[registerSparse]],
-  *    [[registerMaxsim]], and every `resolve:`-taking overload — the
-  *    Engine backs these with version-keyed caches.
-  *  - frozen snapshots, documented: [[register]](model),
-  *    [[registerRange]](model, radii), [[registerQuantized]](index)
-  *    and siblings taking a built index value, [[registerMatryoshka]]
-  *    (the flat root has no actuators — rebuilds replace it).
-  */
-object AnnIndex {
+  *  - resolver-backed (as current as the caller's closure): every case
+  *    class built with a live resolver — the Engine backs these with
+  *    version-keyed caches.
+  *  - frozen snapshots, documented: a case class built over a
+  *    collected value (`() => cents`, `() => index`), and
+  *    [[Binding.matryoshka]] (the flat root has no actuators — rebuilds
+  *    replace it). */
+sealed trait Binding extends Product with Serializable {
+  /** The indexed column the registry keys on. */
+  def column: String
+  /** The logical table behind the registration (Engine passes the
+    * table name); bindings with the same column names but different
+    * owners are a hard error, not a silent replacement. The default ""
+    * keeps ad-hoc single-table use terse. */
+  def owner: String
+}
 
-  final case class Entry(vecCol: String, cellCol: String,
-                         cents: () => Seq[(Long, Array[Double])],
-                         metric: Ann.Metric, probes: Int,
-                         owner: String = "") {
-    def probeCells(q: Array[Double]): Seq[Long] =
-      cents().map { case (id, c) => (metric.distScala(c, q), id) }
-        .sorted.take(probes).map(_._2)
+object Binding {
+  import org.apache.spark.sql.functions.{coalesce, col, lit, round, typedlit}
+
+  /** The `probes` nearest cells to `q` — (dist, id) tuple sort, so ties
+    * go to the lower id like `Ann.probeCells`' (__qdist asc, id asc). */
+  private def nearestCells(cents: Seq[(Long, Array[Double])],
+                           q: Array[Double], metric: Ann.Metric,
+                           probes: Int): Seq[Long] =
+    cents.map { case (id, c) => (metric.distScala(c, q), id) }
+      .sorted.take(probes).map(_._2)
+
+  /** Fingerprint-keyed centroid memo for a self-contained root: each
+    * call re-reads the root's model-fingerprint marker and re-collects
+    * the centroids exactly when maintenance re-pinned them (split /
+    * merge / graduation) — collection cost is paid once per re-pin,
+    * never per rewrite. `load` runs only on a re-pin, so a loader that
+    * refuses a torn root (pending merge) refuses at resolve time. */
+  private final class PinnedCentroids(dir: String) {
+    private val cache =
+      new AtomicReference[(String, Seq[(Long, Array[Double])])](null)
+    def apply(spark: SparkSession)(load: => Ann.IvfModel)
+        : Seq[(Long, Array[Double])] = {
+      val fp = Ann.readIvfModelMarker(spark, dir).getOrElse("unpinned")
+      val c = cache.get()
+      if (c != null && c._1 == fp) c._2
+      else {
+        val cents = load.collectedCentroids.toSeq
+        cache.set((fp, cents))
+        cents
+      }
+    }
   }
 
-  private val entries = TrieMap.empty[String, Entry]
-
-  /** Registration collision guard, shared by every registry here: the
-    * rewrite rule disambiguates by column NAMES, so a second TABLE
-    * registering the same column must fail loudly — a silent
-    * latest-wins would semi-join the first table's queries against the
-    * second table's candidate ids (the BM25 registry's round-8
-    * hardening, generalized). Same owner = legitimate re-install. */
-  private def requireFreeOrSameOwner(kind: String, colKey: String,
-                                     held: Option[String],
-                                     owner: String): Unit =
-    held.filter(_ != owner).foreach { h =>
-      throw new IllegalStateException(
-        s"$kind registration collision on '$colKey': held by '$h', " +
-          s"requested by '$owner'. The rewrite rule disambiguates by " +
-          "column NAMES, so two tables sharing them cannot both " +
-          "register — unregister the other table first, or rename " +
-          "one table's columns.")
-    }
-
-  /** Register an IVF index for `vecCol`; `model` as built by
-    * [[Ann.buildIvf]] / [[Ann.buildIvfKMeans]]. Collects the centroids
-    * ONCE at register time — a frozen snapshot; prefer the resolver
-    * form when the index can be rebuilt after install.
+  /** Plain IVF probe selection for `vecCol`: the rule injects
+    * `Filter(cellCol IN nearest-probe cells)` above the scan. `cents`
+    * runs at every rewrite — back it with a version-keyed cache (Engine
+    * does), so a rebuilt index reaches declarative probe selection
+    * without a re-install; `() => cents` over an
+    * [[Ann.IvfModel.collectedCentroids]] collect is a frozen snapshot.
     *
     * Centroids live driver-side BY DESIGN: probe cells are chosen at
     * PLAN time (the rule injects the cell filter before execution), so
     * the rule needs them where the optimizer runs — the same place
     * Catalyst keeps table statistics. Budget accordingly: ~1k cells ×
     * 768 dims ≈ 6 MB is nothing; at ~10⁵ cells collect cost grows to
-    * ~hundreds of MB of driver heap — prefer the executor-side probe
-    * path ([[graft.ops.Ann.searchIvf]]/[[graft.ops.Ann.knnJoinIvf]],
-    * broadcast-variable centroids) beyond that. */
-  def register(vecCol: String, model: Ann.IvfModel, metric: Ann.Metric,
-               probes: Int): Unit = {
-    val cents = model.centroids.collect().map(r =>
-      (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq.sortBy(_._1)
-    register(vecCol, () => cents, model.idCol, metric, probes, owner = "")
+    * ~hundreds of MB of driver heap — prefer [[ProbeDist]] or the
+    * executor-side probe path ([[graft.ops.Ann.searchIvf]] /
+    * [[graft.ops.Ann.knnJoinIvf]], broadcast-variable centroids)
+    * beyond that. */
+  final case class Probe(vecCol: String, cellCol: String,
+                         cents: () => Seq[(Long, Array[Double])],
+                         metric: Ann.Metric, probes: Int,
+                         owner: String = "") extends Binding {
+    def column: String = vecCol
+    def probeCells(q: Array[Double]): Seq[Long] =
+      nearestCells(cents(), q, metric, probes)
   }
 
-  /** Resolver form of [[register]]: `resolveCents` runs at every
-    * rewrite — back it with a version-keyed cache (Engine does), so a
-    * rebuilt index reaches declarative probe selection without a
-    * re-install. */
-  def register(vecCol: String,
-               resolveCents: () => Seq[(Long, Array[Double])],
-               cellCol: String, metric: Ann.Metric, probes: Int,
-               owner: String): Unit =
-    entries.synchronized {
-      requireFreeOrSameOwner("IVF", vecCol,
-        entries.get(vecCol).map(_.owner), owner)
-      entries(vecCol) = Entry(vecCol, cellCol, resolveCents, metric,
-        probes, owner)
+  /** EXECUTOR-SIDE probe selection — the fallback past [[Probe]]'s
+    * driver-side centroid budget (~10⁵ cells): instead of collecting
+    * centroids and injecting an `IN (cells...)` literal filter, the
+    * rule injects a LEFT SEMI join against a subplan that computes the
+    * `probes` nearest cells FROM THE CENTROIDS TABLE ITSELF
+    * (`orderBy(dist(centroid, q)).limit(probes)`) — centroids never
+    * leave the cluster, the candidate side is `probes` rows (statistics
+    * make it a broadcast join), and on a `partitionBy(cellCol)` layout
+    * dynamic partition pruning prunes the cell directories at runtime.
+    * `centroids` is re-resolved per rewrite. `cellCol` names the
+    * LAYOUT's cell column, which may differ from the centroid table's
+    * `centIdCol` (a mismatch with the scanned layout is a silent
+    * brute-force fallback: the rule only engages on leaves exposing
+    * `cellCol`). Also the IVF behind an index-pruned [[Maxsim]]. */
+  final case class ProbeDist(vecCol: String, cellCol: String,
+                             centroids: () => DataFrame,
+                             centIdCol: String, centVecCol: String,
+                             metric: Ann.Metric, probes: Int,
+                             owner: String = "") extends Binding {
+    def column: String = vecCol
+    /** The `probes`-nearest-cells subplan for `q`, cast to the scanned
+      * cell column's type (partition columns read back as int) and
+      * aliased for a fresh exprId — see [[Quantized]]. */
+    def probeCellsDf(q: Seq[Double], cellType: DataType): DataFrame =
+      centroids()
+        .withColumn("__d", metric.dist(
+          col(centVecCol).cast("array<double>"), typedlit(q)))
+        .orderBy(col("__d").asc, col(centIdCol).asc)
+        .limit(probes)
+        .select(col(centIdCol).cast(cellType).as(s"__cell_$centIdCol"))
+  }
+
+  /** Range search — the declarative form of
+    * [[Ann.rangeSearchIvfStored]]: a plain
+    * `filter(round(dist(vec, q), s) <= eps)` plan gets an EXACT cell
+    * filter injected from the per-cell covering radii
+    * ([[Ann.cellRadii]]): the triangle inequality proves pruned cells
+    * hold no match, so unlike the probes rewrites this one never
+    * changes results — it only removes provably-empty cell
+    * directories from the scan. `cents` yields (cell id, centroid,
+    * radius) at every rewrite ([[Probe]]'s driver-side budget); over
+    * collected values it is a FROZEN snapshot: prefer [[rangeRoot]]
+    * for a self-contained [[Ann.writeRangeIndex]] root, where
+    * maintenance (splits, merges, radius-growing appends) must keep
+    * reaching the installed plan. */
+  final case class Range(vecCol: String, cellCol: String,
+                         metric: Ann.Metric,
+                         cents: () => Seq[(Long, Array[Double], Double)],
+                         owner: String = "") extends Binding {
+    require(metric == Ann.L2,
+      "range registration needs a true metric (triangle inequality); " +
+        "cosine range queries go through the normalized-L2 reduction " +
+        "(l2Normalize + eps_l2 = sqrt(2*eps_cos)) — see Ann.cellRadii")
+    def column: String = vecCol
+    def cellsFor(q: Array[Double], eps: Double, slack: Double): Seq[Long] =
+      cents().filter { case (_, c, r) =>
+        metric.distScala(c, q) <= r + eps + slack }.map(_._1)
+  }
+
+  /** EXECUTOR-SIDE range — [[Range]]'s twin past the driver-side budget
+    * (the [[ProbeDist]] story for the EXACT rewrite): instead of
+    * collecting centroids + radii and injecting an `IN (cells...)`
+    * literal, the rule injects a LEFT SEMI join against a subplan that
+    * computes the ADMITTED cells from the (centroid, radius) side table
+    * itself — `filter(l2_dist(centroid, q) <= radius + eps + slack)` —
+    * plus the DynamicPruningSubquery that turns it into runtime
+    * partition pruning. The cut is the SAME triangle-inequality proof
+    * as the literal form, evaluated where the table lives: still exact,
+    * still never changes results. `resolveCentRad` yields
+    * (centroid_id, centroid, radius) and runs at every rewrite. */
+  final case class RangeDist(vecCol: String, cellCol: String,
+                             resolveCentRad: () => DataFrame,
+                             owner: String = "") extends Binding {
+    def column: String = vecCol
+    def metric: Ann.Metric = Ann.L2
+    def admittedCellsDf(q: Array[Double], eps: Double, slack: Double,
+                        cellType: DataType): DataFrame =
+      resolveCentRad()
+        .filter(VecExprs.l2Dist(
+            col("centroid").cast("array<double>"), typedlit(q.toSeq))
+          <= col("radius").cast("double") + lit(eps + slack))
+        // cast to the scanned cell column's type + fresh exprId — the
+        // Quantized discipline
+        .select(col("centroid_id").cast(cellType)
+          .as("__cell_centroid_id"))
+  }
+
+  /** Quantized (SQ / PQ / 1-bit) — a declarative
+    * `orderBy(dist).limit(k)` over the column is rewritten into the
+    * TWO-PHASE quantized path: a semi-join against the top-(k·refine)
+    * candidate ids from the probed code scan (1 byte/dim for SQ,
+    * m bytes for PQ, 1 bit/dim + norm for the RaBitQ-style index),
+    * with the plan's own Sort+Limit as the exact re-rank of the
+    * survivors. The full-precision vector column is then only read for
+    * the candidate rows — the vchordrq scan shape, reachable from a
+    * plain DataFrame query. L2 and cosine (cosine indexes are built
+    * spherical — normalize-then-L2, the reference's
+    * `spherical_centroids` default for cos/dot, spec.py:437-444);
+    * inner-product has no bounded-norm equivalence and stays out.
+    *
+    * `resolve` runs at every rewrite, so a binding backed by the
+    * Engine's version-keyed cache picks up table writes automatically —
+    * declarative queries after an insert see the new rows (advisor
+    * round-6 finding: a frozen snapshot silently excluded them);
+    * `() => index` freezes it. `refine <= 0` = the family default. */
+  final case class Quantized(vecCol: String, idCol: String,
+                             resolve: () => Ann.QuantIndex,
+                             metric: Ann.Metric, probes: Int,
+                             refine: Int = -1, owner: String = "")
+      extends Binding {
+    require(metric == Ann.L2 || metric == Ann.Cosine,
+      "quantized rewrite supports L2 and cosine (spherical) only")
+    def column: String = vecCol
+    /** The candidate multiplier for `index`: `refine`, else 5 — 1-bit:
+      * [[Ann.defaultBitqRefine]] (the spherical estimator needs a larger
+      * exact-re-rank budget than L2). */
+    def refineFor(index: Ann.QuantIndex): Int =
+      if (refine > 0) refine
+      else index match {
+        case _: Ann.IvfBitIndex => Ann.defaultBitqRefine(metric)
+        case _ => 5
+      }
+    def candidateIds(q: Array[Double], k: Int): DataFrame = {
+      val index = resolve()
+      val n = math.max(k * refineFor(index), k)
+      (index match {
+        case ix: Ann.IvfSqIndex =>
+          Ann.sqCandidates(ix, idCol, typedlit(q.toSeq), metric, probes, n)
+        case ix: Ann.IvfBitIndex =>
+          Ann.bitqCandidates(ix, idCol, typedlit(q.toSeq), metric, probes,
+            n)
+        case ix: Ann.IvfPqIndex =>
+          Ann.pqCandidates(ix, idCol, q.toSeq, metric, probes, n)
+      })
+        // Alias mints a FRESH exprId: the index tables usually derive
+        // from the very relation the rewritten plan scans, and a
+        // semi-join whose right output reuses the left's exprIds is an
+        // unresolved (ambiguous) plan
+        .select(col(idCol).as(s"__cand_$idCol"))
     }
+  }
 
-  def unregister(vecCol: String): Unit = entries.remove(vecCol)
-  private[plans] def lookup(vecCol: String): Option[Entry] =
-    entries.get(vecCol)
+  /** Matryoshka member of the quantized-rewrite family (same registry
+    * slot as [[Quantized]]): candidates are the top-(k·refine) ids by
+    * PREFIX distance from the `dims`-wide `emb_pre` column of a
+    * [[Ann.writeMatryoshka]] root (`probes == 0`; column-pruned phase 1
+    * — the truncation analog of the codes-only scans) or, within the
+    * `probes` nearest cells, of a [[Ann.writeMatryoshkaIvf]] root
+    * (phase 1 partition-prunes to probed cell directories AND
+    * column-prunes to `emb_pre`, the two prunings the composed layout
+    * exists for). The plan's own Sort+Limit re-ranks at full precision.
+    * L2 only (the family's metric). Build through [[matryoshka]] /
+    * [[matryoshkaIvf]], which read `dims` from the root's marker. */
+  final case class Matryoshka(vecCol: String, idCol: String, dir: String,
+                              dims: Int, probes: Int, refine: Int,
+                              owner: String = "") extends Binding {
+    def column: String = vecCol
+    def metric: Ann.Metric = Ann.L2
+    // MAINTENANCE-AWARE probe selection, the [[denseRoot]] recipe:
+    // centroids are collected once per model-fingerprint re-pin, not
+    // once per rewrite (the pre-round-18 shape ran a collect JOB on
+    // every candidate plan) and never frozen at register time; a torn
+    // root refuses at resolve time through [[Ann.loadMrlIvfModel]].
+    private val pinned = new PinnedCentroids(dir)
+    def candidateIds(q: Array[Double], k: Int): DataFrame = {
+      // a query SHORTER than the stored prefix would silently
+      // truncate (q.take(dims)) and cut candidates in the wrong space
+      val label = if (probes > 0) "matryoshka-IVF" else "matryoshka"
+      require(q.length >= dims,
+        s"$label rewrite: query has ${q.length} dims but the " +
+          s"root's prefix is $dims — wrong embedding space")
+      val spark = SparkSession.active
+      val rows = spark.read.parquet(s"$dir/rows")
+      val probed = if (probes == 0) rows else rows.filter(
+        col("centroid_id").isin(nearestCells(
+          pinned(spark)(Ann.loadMrlIvfModel(spark, dir)), q, Ann.L2,
+          probes): _*))
+      probed
+        .select(col(idCol), round(VecExprs.l2Dist(
+            col("emb_pre"), typedlit(q.take(dims).toSeq)), 6).as("__pre"))
+        .orderBy(col("__pre").asc, col(idCol).asc)
+        .limit(math.max(k * refine, k))
+        .select(col(idCol).as(s"__cand_$idCol")) // fresh exprId
+    }
+  }
 
-  /** Register a SELF-CONTAINED dense cell root
-    * ([[Ann.writeDenseRoot]]) for declarative rewrites,
-    * MAINTENANCE-AWARE: vector column and metric come from the root's
-    * own marker, and the resolver re-reads the pinned model
+  /** MAXSIM — the declarative form of the reference's `maxsim_refine`
+    * two-phase (client.py:337-343, registry.py:233): a plain
+    * `orderBy(maxsim_dot(q, mv).desc).limit(k)` plan over the
+    * multivector column rewrites into a semi-join against the
+    * top-max(refine, k) ids of the cheap phase-1 scan (one dot of the
+    * doc's token-mean vs the query-token centroid per doc,
+    * [[Ann.maxsimCandidates]]); the plan's own Sort+Limit is the exact
+    * maxsim re-rank, so the O(|q|·|d|·dim) interaction runs only on
+    * the candidates. `resolve` yields the doc table at every rewrite.
+    *
+    * With an `ivf` ([[graft.ops.Ann.buildMaxsimIvf]]) the doc table is
+    * the ASSIGNED layout: it carries the persisted token-mean
+    * (`ivf.vecCol`) and cell (`ivf.cellCol`) columns — ideally a
+    * `partitionBy(cellCol)` stored layout so probe pruning is disk
+    * pruning — and `ivf.centroids` is the centroid side table, probed
+    * under the BUILD's metric (the reference pins
+    * spherical_centroids for vector_maxsim_ops, spec.py:459-464). */
+  final case class Maxsim(mvCol: String, idCol: String,
+                          resolve: () => DataFrame,
+                          refine: Int = 1000,
+                          ivf: Option[ProbeDist] = None,
+                          owner: String = "") extends Binding {
+    def column: String = mvCol
+    /** Phase-1 candidate plan, pre-optimized (see the rule's inject).
+      * Without an IVF: the full token-mean scan. With one: probe cells
+      * come from a semi-joined Sort+Limit subplan over the centroids
+      * table (nearest cells to the QUERY-TOKEN CENTROID — maxsim's
+      * single probe vector), phase-1 reads ONLY probed cells and ONLY
+      * the persisted mean column, and a DynamicPruningSubquery turns
+      * the probe semi-join into runtime partition pruning on a
+      * `partitionBy(cellCol)` layout. */
+    def candidatePlan(q: Array[Array[Double]], k: Int): LogicalPlan = {
+      val n = math.max(refine, k)
+      ivf match {
+        case None =>
+          Ann.maxsimCandidates(resolve(), idCol, mvCol,
+              q.map(_.toSeq).toSeq, n)
+            .select(col(idCol).as(s"__cand_$idCol")) // fresh exprId
+            .queryExecution.optimizedPlan
+        case Some(ix) =>
+          val centroid = Ann.queryCentroid(q.map(_.toSeq).toSeq)
+          val assigned = resolve()
+          val probes = ix.probeCellsDf(centroid,
+            assigned.schema(ix.cellCol).dataType)
+          val cands = assigned
+            // phase-1 reads id + cell + mean ONLY: the full token
+            // matrix column is column-pruned out of the parquet scan
+            .select(col(idCol), col(ix.cellCol), col(ix.vecCol))
+            .join(probes, col(ix.cellCol) === col(s"__cell_${ix.centIdCol}"),
+              "left_semi")
+            .withColumn("__approx", round(VecExprs.dot(
+              col(ix.vecCol).cast("array<double>"), typedlit(centroid)), 6))
+            .orderBy(col("__approx").desc, col(idCol).asc)
+            .limit(n)
+            .select(col(idCol).as(s"__cand_$idCol"))
+          // plant the DynamicPruningSubquery under the probe semi-join
+          // POST-optimization (the rule's [[ProbeDist]] trick, and the
+          // same rationale: Spark's own PartitionPruning never fires
+          // for a Sort+Limit build side; CleanupDynamicPruningFilters
+          // has already run on this sub-plan, and physical planning
+          // executes the subquery as a plain in-filter on leaves that
+          // cannot prune)
+          cands.queryExecution.optimizedPlan.transformUp {
+            case j @ Join(l, r, LeftSemi, Some(EqualTo(
+                x: AttributeReference, y: AttributeReference)), _)
+                if (l.outputSet.contains(x) && r.outputSet.contains(y)) ||
+                  (l.outputSet.contains(y) && r.outputSet.contains(x)) =>
+              val (a, b) = if (l.outputSet.contains(x) &&
+                r.outputSet.contains(y)) (x, y) else (y, x)
+              j.copy(left = Filter(DynamicPruningSubquery(
+                a, r, Seq(b), Seq(0), onlyInBroadcast = false), l))
+          }
+      }
+    }
+  }
+
+  /** BM25 — the declarative form of the reference's keyword search
+    * (`ORDER BY kw <&> to_bm25query(...)`, client.py:356-380): a plain
+    * `orderBy(bm25_score.desc).limit(k)` plan
+    * ([[graft.ops.Bm25.scoreColumn]] builds the score) over the text
+    * column rewrites into a semi-join against the top-(k·refine) ids
+    * of the postings-index search ([[graft.ops.Bm25.searchTerms]] —
+    * map-side term-pruned, never a full-corpus tokenize), with the
+    * plan's own Sort+Limit as the exact re-rank. Scoring is EXACT on
+    * both sides, so the rewrite only changes semantics for docs
+    * containing NO query term (brute scores them 0, the index never
+    * ranks them — the reference's contract); `refine` buffers
+    * tie-break divergence at the k boundary.
+    *
+    * Keyword columns are commonly all named "text", so unlike the
+    * vector bindings (scope contract: distinct column names per
+    * logical index) BM25 is scoped per (textCol, idCol) and the rule
+    * disambiguates by which binding's id column the plan's leaf
+    * exposes — two tables with keyword column "text" but different
+    * primary keys coexist. The same pair from a DIFFERENT owner
+    * throws — with the common (id, text) naming, "latest wins" would
+    * silently semi-join one table's query against the other table's
+    * postings index. */
+  final case class Bm25(textCol: String, idCol: String,
+                        resolve: () => graft.ops.Bm25.Bm25Index,
+                        refine: Int = 4, owner: String = "")
+      extends Binding {
+    def column: String = textCol
+    def candidateIds(terms: Seq[String], k: Int): DataFrame = {
+      val ix = resolve()
+      // loud failure instead of a silent mis-join: every build path
+      // normalizes the postings id column to "id" (Bm25.build,
+      // loadStoredPostings), and searchTerms groups by it — a future
+      // non-normalized index would otherwise join candidates on the
+      // wrong column
+      require(ix.postings.columns.contains("id"),
+        s"BM25 index for column '$textCol' must expose postings id " +
+          s"column 'id' (got: ${ix.postings.columns.mkString(", ")})")
+      graft.ops.Bm25.searchTerms(ix, terms, math.max(k * refine, k))
+        .select(col("id").as(s"__cand_$idCol")) // fresh exprId
+    }
+  }
+
+  /** Sparse vectors: `idxCol`/`valCol` are the document table's sparse
+    * (indices, values) column pair — BOTH are validated by the rule (a
+    * score over the registered indices but a DIFFERENT values column
+    * must NOT rewrite: its candidates would come from the wrong
+    * postings) — and `resolve` yields the inverted postings (id,
+    * bucket, v — [[graft.functions.Sparse.invertedPostings]]).
+    * Candidates come from the postings top-n
+    * ([[graft.functions.Sparse.invertedTopKW]] — the query touches
+    * only its buckets' posting lists), and since the inverted score
+    * EQUALS the row-scan score exactly (small-int products), the
+    * re-rank returns the same top-k as the full scan among
+    * POSITIVE-scoring docs whenever n ≥ k. Like the BM25 rewrite,
+    * docs sharing no bucket with the query are not candidates — when
+    * fewer than k docs match, the rewritten result is SHORTER than
+    * the brute plan's (which would pad with zero-score rows); that is
+    * the documented keyword/sparse rewrite contract, not a bug. Keyed
+    * by the indices column name alone, like the vector bindings. */
+  final case class Sparse(idxCol: String, valCol: String, idCol: String,
+                          resolve: () => DataFrame,
+                          refine: Int = 4, owner: String = "")
+      extends Binding {
+    def column: String = idxCol
+    def candidateIds(qIdx: Seq[Int], qVal: Seq[Double], k: Int)
+        : DataFrame = {
+      val postings = resolve()
+      require(Seq("id", "bucket", "v")
+          .forall(postings.columns.contains),
+        s"sparse postings for column '$idxCol' must expose " +
+          s"(id, bucket, v) (got: ${postings.columns.mkString(", ")})")
+      graft.functions.Sparse.invertedTopKW(postings, qIdx, qVal,
+          math.max(k * refine, k))
+        .select(col("id").as(s"__cand_$idCol"))
+    }
+  }
+
+  /** A SELF-CONTAINED dense cell root ([[Ann.writeDenseRoot]]) as a
+    * [[Probe]], MAINTENANCE-AWARE: vector column and metric come from
+    * the root's own marker, and the resolver re-reads the pinned model
     * FINGERPRINT per rewrite, re-collecting the disk centroids
     * exactly when maintenance re-pinned them (split / merge /
     * graduation) — so a declarative plan over `dir/rows` keeps
     * probing the root's CURRENT geometry with no re-install, where a
-    * frozen [[register]] snapshot would keep injecting DISSOLVED cell
+    * frozen [[Probe]] snapshot would keep injecting DISSOLVED cell
     * ids after a split (empty pruned scans — silent recall loss, the
     * exact failure the stale-caller-model refusals exist to prevent
     * on the imperative path). Collection cost is paid once per re-pin
@@ -139,110 +465,42 @@ object AnnIndex {
     * merge) REFUSES at resolve time through [[Ann.loadDenseRoot]] —
     * declarative readers honor the family's loud-never-wrong
     * contract like every other reader. */
-  def registerDenseRoot(spark: SparkSession, dir: String, probes: Int,
-                        owner: String = ""): Unit = {
+  def denseRoot(spark: SparkSession, dir: String, probes: Int,
+                owner: String = ""): Probe = {
     val (_, metric, vecCol) = Ann.loadDenseRoot(spark, dir)
-    val cache = new java.util.concurrent.atomic.AtomicReference[
-      (String, Seq[(Long, Array[Double])])](null)
-    val resolve: () => Seq[(Long, Array[Double])] = () => {
-      val fp = Ann.readIvfModelMarker(spark, dir).getOrElse("unpinned")
-      val c = cache.get()
-      if (c != null && c._1 == fp) c._2
-      else {
-        val (model, _, _) = Ann.loadDenseRoot(spark, dir)
-        val cents = model.centroids
-          .select(org.apache.spark.sql.functions
-              .col(model.idCol).cast("long"),
-            org.apache.spark.sql.functions
-              .col(model.vecCol).cast("array<double>"))
-          .collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-          .toSeq.sortBy(_._1)
-        cache.set((fp, cents))
-        cents
-      }
-    }
-    register(vecCol, resolve, "centroid_id", metric, probes, owner)
+    val pinned = new PinnedCentroids(dir)
+    Probe(vecCol, "centroid_id",
+      () => pinned(spark)(Ann.loadDenseRoot(spark, dir)._1), metric,
+      probes, owner)
   }
 
-  /** [[registerDenseRoot]]'s EXECUTOR-SIDE twin — the registration
-    * that stays viable past the driver's centroid-collect budget
-    * (the [[register]] scaladoc's ~10⁵-cell ceiling; at 100 TB a
-    * dense root's cell count sits there): probe selection runs as a
-    * semi-joined Sort+Limit SUBPLAN over the root's own centroids
-    * table ([[registerDistributed]]'s machinery — centroids never
-    * leave the cluster, DynamicPruningSubquery prunes the cell
-    * directories at runtime), while metric and vector column still
-    * come from the root's marker and the centroid table is re-read
-    * per resolve through [[Ann.loadDenseRoot]] — a CURRENT file
-    * listing every rewrite (splits/merges re-write `centroids/`) and
-    * the torn-merge refusal live, with no per-rewrite collect and no
-    * driver cache to go stale. */
-  def registerDenseRootDistributed(spark: SparkSession, dir: String,
-                                   probes: Int,
-                                   owner: String = ""): Unit = {
+  /** [[denseRoot]]'s EXECUTOR-SIDE twin — the binding that stays viable
+    * past the driver's centroid-collect budget (the [[Probe]]
+    * scaladoc's ~10⁵-cell ceiling; at 100 TB a dense root's cell count
+    * sits there): probe selection runs as a semi-joined Sort+Limit
+    * SUBPLAN over the root's own centroids table ([[ProbeDist]]'s
+    * machinery — centroids never leave the cluster,
+    * DynamicPruningSubquery prunes the cell directories at runtime),
+    * while metric and vector column still come from the root's marker
+    * and the centroid table is re-read per resolve through
+    * [[Ann.loadDenseRoot]] — a CURRENT file listing every rewrite
+    * (splits/merges re-write `centroids/`) and the torn-merge refusal
+    * live, with no per-rewrite collect and no driver cache to go
+    * stale. */
+  def denseRootDistributed(spark: SparkSession, dir: String, probes: Int,
+                           owner: String = ""): ProbeDist = {
     val (_, metric, vecCol) = Ann.loadDenseRoot(spark, dir)
-    registerDistributed(vecCol,
+    ProbeDist(vecCol, "centroid_id",
       () => Ann.loadDenseRoot(spark, dir)._1.centroids,
-      "centroid_id", "centroid", metric, probes,
-      cellCol = "centroid_id", owner = owner)
+      "centroid_id", "centroid", metric, probes, owner)
   }
 
-  /** Range-search registry — the declarative form of
-    * [[Ann.rangeSearchIvfStored]]: a plain
-    * `filter(round(dist(vec, q), s) <= eps)` plan gets an EXACT cell
-    * filter injected from the per-cell covering radii
-    * ([[Ann.cellRadii]]): the triangle inequality proves pruned cells
-    * hold no match, so unlike the probes rewrites this one never
-    * changes results — it only removes provably-empty cell
-    * directories from the scan. Radii and centroids are collected at
-    * register time (k rows each, the [[register]] driver-side
-    * budget) — a FROZEN snapshot: prefer [[registerRangeRoot]] for a
-    * self-contained [[Ann.writeRangeIndex]] root, where maintenance
-    * (splits, merges, radius-growing appends) must keep reaching the
-    * installed plan. */
-  final case class RangeEntry(vecCol: String, cellCol: String,
-                              metric: Ann.Metric,
-                              cents: () => Seq[(Long, Array[Double], Double)],
-                              owner: String = "") {
-    def cellsFor(q: Array[Double], eps: Double, slack: Double): Seq[Long] =
-      cents().filter { case (_, c, r) =>
-        metric.distScala(c, q) <= r + eps + slack }.map(_._1)
-  }
-
-  private val rangeEntries = TrieMap.empty[String, RangeEntry]
-
-  def registerRange(vecCol: String, model: Ann.IvfModel,
-                    radii: org.apache.spark.sql.DataFrame,
-                    metric: Ann.Metric, owner: String = ""): Unit = {
-    require(metric == Ann.L2,
-      "range registration needs a true metric (triangle inequality); " +
-        "cosine range queries go through the normalized-L2 reduction " +
-        "(l2Normalize + eps_l2 = sqrt(2*eps_cos)) — see Ann.cellRadii")
-    val rad = radii
-      .select(org.apache.spark.sql.functions.col(model.idCol)
-        .cast("long"),
-        org.apache.spark.sql.functions.col("radius").cast("double"))
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-    val cents = model.centroids.collect().map(r =>
-        (r.getLong(0), r.getSeq[Double](1).toArray))
-      .map { case (id, c) => (id, c, rad.getOrElse(id, 0.0)) }
-      .toSeq.sortBy(_._1)
-    rangeEntries.synchronized {
-      requireFreeOrSameOwner("Range", vecCol,
-        rangeEntries.get(vecCol).map(_.owner), owner)
-      rangeEntries(vecCol) =
-        RangeEntry(vecCol, model.idCol, metric, () => cents, owner)
-    }
-  }
-
-  /** Register a SELF-CONTAINED range root ([[Ann.writeRangeIndex]])
-    * for declarative rewrites, MAINTENANCE-AWARE — the
-    * [[registerDenseRoot]] recipe applied to the family where a
-    * frozen snapshot is SHARPEST: the range rewrite's entire
-    * justification is "never changes results" (the injected cell
-    * filter removes provably-empty directories only), but a frozen
-    * [[registerRange]] snapshot taken before an out-of-band
+  /** A SELF-CONTAINED range root ([[Ann.writeRangeIndex]]) as a
+    * [[Range]], MAINTENANCE-AWARE — the [[denseRoot]] recipe applied to
+    * the family where a frozen snapshot is SHARPEST: the range
+    * rewrite's entire justification is "never changes results" (the
+    * injected cell filter removes provably-empty directories only),
+    * but a frozen [[Range]] snapshot taken before an out-of-band
     * [[Ann.splitOverfullCells]] keeps admitting the DISSOLVED
     * parent's cell id — whose directory no longer exists — while the
     * new sub-cells holding its rows are absent from the frozen list,
@@ -260,11 +518,11 @@ object AnnIndex {
     * loss). Radii are k rows; the per-rewrite collect is the same
     * bounded cost the generic resolver contract documents. A torn
     * root (pending merge) refuses at resolve time through
-    * [[Ann.loadRangeIndex]]. L2 pinned like [[registerRange]]
+    * [[Ann.loadRangeIndex]]. L2 pinned like every [[Range]]
     * (spherical roots store normalized columns and L2 radii — the
     * cosine reduction happens before the plan reaches this rule). */
-  def registerRangeRoot(spark: SparkSession, dir: String,
-                        vecCol: String, owner: String = ""): Unit = {
+  def rangeRoot(spark: SparkSession, dir: String, vecCol: String,
+                owner: String = ""): Range = {
     // typed refusal before the loader's raw path error — the triad's
     // discipline: a mis-pointed dir refuses by contract, not accident
     require(Ann.isRangeRoot(spark, dir),
@@ -272,120 +530,43 @@ object AnnIndex {
         "writeRangeIndex root (register a dense root via " +
         "registerDenseRoot, a quantized root via registerQuantizedRoot)")
     Ann.loadRangeIndex(spark, dir) // refuse torn dirs at install
-    val centCache = new java.util.concurrent.atomic.AtomicReference[
-      (String, Seq[(Long, Array[Double])])](null)
-    val resolve: () => Seq[(Long, Array[Double], Double)] = () => {
+    val pinned = new PinnedCentroids(dir)
+    Range(vecCol, "centroid_id", Ann.L2, () => {
       // loadRangeIndex per resolve: torn-merge refusal stays live and
       // the radii frame reads the CURRENT file listing
       val (model, radii) = Ann.loadRangeIndex(spark, dir)
-      val fp = Ann.readIvfModelMarker(spark, dir).getOrElse("unpinned")
-      val c = centCache.get()
-      val cents =
-        if (c != null && c._1 == fp) c._2
-        else {
-          val collected = model.centroids
-            .select(org.apache.spark.sql.functions.col(model.idCol)
-                .cast("long"),
-              org.apache.spark.sql.functions.col(model.vecCol)
-                .cast("array<double>"))
-            .collect()
-            .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-            .toSeq.sortBy(_._1)
-          centCache.set((fp, collected))
-          collected
-        }
+      val cents = pinned(spark)(model)
       val rad = radii
-        .select(org.apache.spark.sql.functions.col(model.idCol)
-            .cast("long"),
-          org.apache.spark.sql.functions.col("radius").cast("double"))
+        .select(col(model.idCol).cast("long"),
+          col("radius").cast("double"))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
       cents.map { case (id, v) => (id, v, rad.getOrElse(id, 0.0)) }
-    }
-    rangeEntries.synchronized {
-      requireFreeOrSameOwner("Range", vecCol,
-        rangeEntries.get(vecCol).map(_.owner), owner)
-      rangeEntries(vecCol) =
-        RangeEntry(vecCol, "centroid_id", Ann.L2, resolve, owner)
-    }
+    }, owner)
   }
 
-  def unregisterRange(vecCol: String): Unit = rangeEntries.remove(vecCol)
-  private[plans] def lookupRange(vecCol: String): Option[RangeEntry] =
-    rangeEntries.get(vecCol)
-
-  /** EXECUTOR-SIDE range registration — [[registerRangeRoot]]'s twin
-    * past the driver-side budget (the [[registerDenseRootDistributed]]
-    * story for the EXACT rewrite): instead of collecting centroids +
-    * radii and injecting an `IN (cells...)` literal, the rule injects
-    * a LEFT SEMI join against a subplan that computes the ADMITTED
-    * cells from the (centroid, radius) side table itself —
-    * `filter(l2_dist(centroid, q) <= radius + eps + slack)` — plus
-    * the DynamicPruningSubquery that turns it into runtime partition
-    * pruning. The cut is the SAME triangle-inequality proof as the
-    * literal form, evaluated where the table lives: still exact,
-    * still never changes results. `resolveCentRad` yields
-    * (centroid_id, centroid, radius) and runs at every rewrite. */
-  final case class RangeDistEntry(vecCol: String, cellCol: String,
-                                  resolveCentRad: () => org.apache.spark
-                                    .sql.DataFrame,
-                                  owner: String = "") {
-    def metric: Ann.Metric = Ann.L2
-    def admittedCellsDf(q: Array[Double], eps: Double, slack: Double,
-                        cellType: org.apache.spark.sql.types.DataType)
-        : org.apache.spark.sql.DataFrame = {
-      import org.apache.spark.sql.functions._
-      resolveCentRad()
-        .filter(org.apache.spark.sql.graft.VecExprs.l2Dist(
-            col("centroid").cast("array<double>"), typedlit(q.toSeq))
-          <= col("radius").cast("double") + lit(eps + slack))
-        // cast to the scanned cell column's type + fresh exprId — the
-        // SqQuant discipline
-        .select(col("centroid_id").cast(cellType)
-          .as("__cell_centroid_id"))
-    }
-  }
-
-  private val rangeDistEntries = TrieMap.empty[String, RangeDistEntry]
-
-  /** Resolver form: `resolveCentRad` yields (centroid_id, centroid,
-    * radius) — re-run at every rewrite, so back it with whatever
-    * freshness discipline the layout needs (the root form below
-    * re-reads the root's own side tables). */
-  def registerRangeDistributed(vecCol: String,
-                               resolveCentRad: () => org.apache.spark
-                                 .sql.DataFrame,
-                               owner: String = ""): Unit =
-    rangeDistEntries.synchronized {
-      requireFreeOrSameOwner("distributed range", vecCol,
-        rangeDistEntries.get(vecCol).map(_.owner), owner)
-      rangeDistEntries(vecCol) =
-        RangeDistEntry(vecCol, "centroid_id", resolveCentRad, owner)
-    }
-
-  /** [[registerRangeRoot]]'s executor-side form over a self-contained
-    * [[Ann.writeRangeIndex]] root: the admitted-cells subplan joins
-    * the root's OWN centroids and radii side tables, re-read through
-    * the guarded loader at every resolve — current file listings per
-    * rewrite (appends grow radii without a re-pin; splits rewrite
-    * both tables), torn-merge refusal live, and NO driver-side
-    * collect at any point, which is what keeps the exact rewrite
-    * viable at 100 TB cell counts. */
-  def registerRangeRootDistributed(spark: SparkSession, dir: String,
-                                   vecCol: String,
-                                   owner: String = ""): Unit = {
+  /** [[rangeRoot]]'s executor-side form ([[RangeDist]]) over a
+    * self-contained [[Ann.writeRangeIndex]] root: the admitted-cells
+    * subplan joins the root's OWN centroids and radii side tables,
+    * re-read through the guarded loader at every resolve — current
+    * file listings per rewrite (appends grow radii without a re-pin;
+    * splits rewrite both tables), torn-merge refusal live, and NO
+    * driver-side collect at any point, which is what keeps the exact
+    * rewrite viable at 100 TB cell counts. */
+  def rangeRootDistributed(spark: SparkSession, dir: String,
+                           vecCol: String,
+                           owner: String = ""): RangeDist = {
     require(Ann.isRangeRoot(spark, dir),
       s"registerRangeRootDistributed: $dir has no radii side table — " +
         "not a writeRangeIndex root")
     Ann.loadRangeIndex(spark, dir) // refuse torn dirs at install
-    registerRangeDistributed(vecCol, () => {
-      import org.apache.spark.sql.functions.{coalesce, col, lit}
+    RangeDist(vecCol, "centroid_id", () => {
       val (model, radii) = Ann.loadRangeIndex(spark, dir)
       // LEFT join + coalesce(radius, 0.0): a cell missing its radii
       // row must be admitted with radius 0 exactly like the driver-
-      // literal twins (registerRange/registerRangeRoot use
-      // rad.getOrElse(id, 0.0)) — an inner join would silently prune
-      // a live cell under a damaged/partial radii side table, making
-      // the two 'exact' engines diverge
+      // literal twin (rangeRoot uses rad.getOrElse(id, 0.0)) — an
+      // inner join would silently prune a live cell under a
+      // damaged/partial radii side table, making the two 'exact'
+      // engines diverge
       model.centroids.join(
         radii.select(col(model.idCol), col("radius")),
         Seq(model.idCol), "left")
@@ -393,342 +574,20 @@ object AnnIndex {
     }, owner)
   }
 
-  def unregisterRangeDistributed(vecCol: String): Unit =
-    rangeDistEntries.remove(vecCol)
-  private[plans] def lookupRangeDist(vecCol: String)
-      : Option[RangeDistEntry] =
-    rangeDistEntries.get(vecCol)
-
-  /** EXECUTOR-SIDE probe selection — the fallback past [[register]]'s
-    * driver-side centroid budget (~10⁵ cells): instead of collecting
-    * centroids and injecting an `IN (cells...)` literal filter, the
-    * rule injects a LEFT SEMI join against a subplan that computes the
-    * `probes` nearest cells FROM THE CENTROIDS TABLE ITSELF
-    * (`orderBy(dist(centroid, q)).limit(probes)`) — centroids never
-    * leave the cluster, the candidate side is `probes` rows (statistics
-    * make it a broadcast join), and on a `partitionBy(cellCol)` layout
-    * dynamic partition pruning prunes the cell directories at runtime.
-    * Resolver-backed like the quantized entries: the centroid table is
-    * re-resolved per rewrite. */
-  final case class DistEntry(vecCol: String, cellCol: String,
-                             resolveCentroids: () => org.apache.spark.sql
-                               .DataFrame,
-                             centIdCol: String, centVecCol: String,
-                             metric: Ann.Metric, probes: Int,
-                             owner: String = "") {
-    def probeCellsDf(q: Array[Double],
-                     cellType: org.apache.spark.sql.types.DataType)
-        : org.apache.spark.sql.DataFrame = {
-      import org.apache.spark.sql.functions._
-      resolveCentroids()
-        .withColumn("__d", metric.dist(
-          col(centVecCol).cast("array<double>"), typedlit(q.toSeq)))
-        .orderBy(col("__d").asc, col(centIdCol).asc)
-        .limit(probes)
-        // cast to the scanned cell column's type (partition columns
-        // read back as int) and alias for a fresh exprId — see SqQuant
-        .select(col(centIdCol).cast(cellType).as(s"__cell_$centIdCol"))
-    }
-  }
-
-  private val distEntries = TrieMap.empty[String, DistEntry]
-
-  def registerDistributed(vecCol: String, model: Ann.IvfModel,
-                          metric: Ann.Metric, probes: Int): Unit =
-    registerDistributed(vecCol, () => model.centroids, model.idCol,
-      model.vecCol, metric, probes)
-
-  /** Resolver form of [[registerDistributed]]. The scanned layout's
-    * cell column is assumed to carry the centroid table's id column
-    * NAME — use the explicit-`cellCol` overload when the layout names
-    * it differently (a mismatch is a silent brute-force fallback: the
-    * rule only engages on leaves exposing the registered cell column).
-    */
-  def registerDistributed(vecCol: String,
-                          resolveCentroids: () => org.apache.spark.sql
-                            .DataFrame,
-                          centIdCol: String, centVecCol: String,
-                          metric: Ann.Metric, probes: Int): Unit =
-    registerDistributed(vecCol, resolveCentroids, centIdCol, centVecCol,
-      metric, probes, cellCol = centIdCol)
-
-  /** [[registerDistributed]] with the LAYOUT's cell column named
-    * explicitly (decoupled from the centroid table's id column). */
-  def registerDistributed(vecCol: String,
-                          resolveCentroids: () => org.apache.spark.sql
-                            .DataFrame,
-                          centIdCol: String, centVecCol: String,
-                          metric: Ann.Metric, probes: Int,
-                          cellCol: String, owner: String = ""): Unit =
-    distEntries.synchronized {
-      requireFreeOrSameOwner("distributed IVF", vecCol,
-        distEntries.get(vecCol).map(_.owner), owner)
-      distEntries(vecCol) = DistEntry(vecCol, cellCol, resolveCentroids,
-        centIdCol, centVecCol, metric, probes, owner)
-    }
-
-  def unregisterDistributed(vecCol: String): Unit =
-    distEntries.remove(vecCol)
-  private[plans] def lookupDist(vecCol: String): Option[DistEntry] =
-    distEntries.get(vecCol)
-
-  /** Quantized registrations: a declarative `orderBy(dist).limit(k)`
-    * over a registered column is rewritten into the TWO-PHASE quantized
-    * path — a semi-join against the top-(k·refine) candidate ids from
-    * the probed code scan (1 byte/dim for SQ, 1 bit/dim + norm for the
-    * RaBitQ-style index), with the plan's own Sort+Limit as the exact
-    * re-rank of the survivors. The full-precision vector column is then
-    * only read for the candidate rows — the vchordrq scan shape, now
-    * reachable from a plain DataFrame query. L2 and cosine (cosine
-    * indexes are built spherical — normalize-then-L2, the reference's
-    * `spherical_centroids` default for cos/dot, spec.py:437-444);
-    * inner-product has no bounded-norm equivalence and stays out.
-    *
-    * Registrations hold a RESOLVER, not a snapshot: the index is
-    * re-resolved at every rewrite, so an Engine registration backed by
-    * its version-keyed cache picks up table writes automatically —
-    * declarative queries after an insert see the new rows (advisor
-    * round-6 finding: a frozen snapshot silently excluded them). */
-  sealed trait QuantEntry {
-    def idCol: String
-    def metric: Ann.Metric
-    def probes: Int
-    def refine: Int
-    def owner: String
-    def candidateIds(q: Array[Double],
-                     n: Int): org.apache.spark.sql.DataFrame
-  }
-
-  private final case class SqQuant(resolve: () => Ann.IvfSqIndex,
-                                   idCol: String,
-                                   metric: Ann.Metric, probes: Int,
-                                   refine: Int, owner: String = "")
-      extends QuantEntry {
-    def candidateIds(q: Array[Double], n: Int) =
-      Ann.sqCandidates(resolve(), idCol,
-          org.apache.spark.sql.functions.typedlit(q.toSeq), metric,
-          probes, n)
-        // Alias mints a FRESH exprId: the index tables usually derive
-        // from the very relation the rewritten plan scans, and a
-        // semi-join whose right output reuses the left's exprIds is an
-        // unresolved (ambiguous) plan
-        .select(org.apache.spark.sql.functions.col(idCol)
-          .as(s"__cand_$idCol"))
-  }
-
-  private final case class BitQuant(resolve: () => Ann.IvfBitIndex,
-                                    idCol: String,
-                                    metric: Ann.Metric, probes: Int,
-                                    refine: Int, owner: String = "")
-      extends QuantEntry {
-    def candidateIds(q: Array[Double], n: Int) =
-      Ann.bitqCandidates(resolve(), idCol,
-          org.apache.spark.sql.functions.typedlit(q.toSeq), metric,
-          probes, n)
-        .select(org.apache.spark.sql.functions.col(idCol)
-          .as(s"__cand_$idCol")) // fresh exprId — see SqQuant
-  }
-
-  private final case class PqQuant(resolve: () => Ann.IvfPqIndex,
-                                   idCol: String,
-                                   metric: Ann.Metric, probes: Int,
-                                   refine: Int, owner: String = "")
-      extends QuantEntry {
-    def candidateIds(q: Array[Double], n: Int) =
-      Ann.pqCandidates(resolve(), idCol, q.toSeq, metric, probes, n)
-        .select(org.apache.spark.sql.functions.col(idCol)
-          .as(s"__cand_$idCol")) // fresh exprId — see SqQuant
-  }
-
-  /** Matryoshka member of the quantized-rewrite family: candidates
-    * are the top-(k·refine) ids by PREFIX distance from a
-    * [[Ann.writeMatryoshka]] root's `emb_pre` column (column-pruned
-    * phase 1 — the truncation analog of the codes-only scans), and
-    * the plan's own Sort+Limit re-ranks at full precision. L2 only
-    * (the family's metric); `dims` comes from the root's marker at
-    * register time, so a re-sliced root needs a re-register. */
-  private final case class MrlQuant(dir: String, idCol: String,
-                                    dims: Int, refine: Int,
-                                    owner: String = "")
-      extends QuantEntry {
-    def metric: Ann.Metric = Ann.L2
-    def probes: Int = 0 // the prefix scan probes nothing
-    def candidateIds(q: Array[Double], n: Int) = {
-      // a query SHORTER than the stored prefix would silently
-      // truncate (q.take(dims)) and cut candidates in the wrong space
-      require(q.length >= dims,
-        s"matryoshka rewrite: query has ${q.length} dims but the " +
-          s"root's prefix is $dims — wrong embedding space")
-      val spark = org.apache.spark.sql.SparkSession.active
-      import org.apache.spark.sql.functions.{col, round, typedlit}
-      spark.read.parquet(s"$dir/rows")
-        .select(col(idCol),
-          round(org.apache.spark.sql.graft.VecExprs.l2Dist(
-            col("emb_pre"), typedlit(q.take(dims).toSeq)), 6)
-            .as("__pre"))
-        .orderBy(col("__pre").asc, col(idCol).asc)
-        .limit(n)
-        .select(col(idCol).as(s"__cand_$idCol")) // fresh exprId — see SqQuant
-    }
-  }
-
-  /** The COMPOSED matryoshka-IVF member ([[Ann.writeMatryoshkaIvf]]
-    * roots): candidates are the top-(k·refine) ids by prefix distance
-    * WITHIN the `probes` nearest cells — phase 1 partition-prunes to
-    * probed cell directories AND column-prunes to `emb_pre`, the two
-    * prunings the composed layout exists for; the plan's own
-    * Sort+Limit re-ranks at full precision. Centroids come from the
-    * root itself (self-contained), dims/metric from its marker at
-    * register time. */
-  private final case class MrlIvfQuant(dir: String, idCol: String,
-                                       dims: Int, probes: Int,
-                                       refine: Int, owner: String = "")
-      extends QuantEntry {
-    def metric: Ann.Metric = Ann.L2
-    // MAINTENANCE-AWARE probe selection, the [[registerDenseRoot]]
-    // recipe: centroids are collected once per model-fingerprint
-    // re-pin (split / merge re-pin the marker), not once per rewrite
-    // (the pre-round-18 shape ran a collect JOB on every candidate
-    // plan) and never frozen at register time; a torn root (pending
-    // merge) refuses at resolve time through [[Ann.loadMrlIvfModel]].
-    private val centCache =
-      new java.util.concurrent.atomic.AtomicReference[
-        (String, Seq[(Long, Array[Double])])](null)
-    private def cents(spark: org.apache.spark.sql.SparkSession)
-        : Seq[(Long, Array[Double])] = {
-      val fp = Ann.readIvfModelMarker(spark, dir).getOrElse("unpinned")
-      val c = centCache.get()
-      if (c != null && c._1 == fp) c._2
-      else {
-        import org.apache.spark.sql.functions.col
-        val model = Ann.loadMrlIvfModel(spark, dir)
-        val collected = model.centroids
-          .select(col(model.idCol).cast("long"),
-            col(model.vecCol).cast("array<double>"))
-          .collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-          .toSeq.sortBy(_._1)
-        centCache.set((fp, collected))
-        collected
-      }
-    }
-    def candidateIds(q: Array[Double], n: Int) = {
-      require(q.length >= dims,
-        s"matryoshka-IVF rewrite: query has ${q.length} dims but the " +
-          s"root's prefix is $dims — wrong embedding space")
-      val spark = org.apache.spark.sql.SparkSession.active
-      import org.apache.spark.sql.functions.{col, round, typedlit}
-      // (dist, id) tuple sort = probeCells' (__qdist asc, id asc)
-      val cells = cents(spark)
-        .map { case (id, c) => (Ann.L2.distScala(c, q), id) }
-        .sorted.take(probes).map(_._2)
-      spark.read.parquet(s"$dir/rows")
-        .filter(col("centroid_id").isin(cells: _*))
-        .select(col(idCol),
-          round(org.apache.spark.sql.graft.VecExprs.l2Dist(
-            col("emb_pre"), typedlit(q.take(dims).toSeq)), 6)
-            .as("__pre"))
-        .orderBy(col("__pre").asc, col(idCol).asc)
-        .limit(n)
-        .select(col(idCol).as(s"__cand_$idCol")) // fresh exprId — see SqQuant
-    }
-  }
-
-  private val quantEntries = TrieMap.empty[String, QuantEntry]
-
-  private def requireQuantMetric(metric: Ann.Metric): Unit =
-    require(metric == Ann.L2 || metric == Ann.Cosine,
-      "quantized rewrite supports L2 and cosine (spherical) only")
-
-  /** Register an IVF+SQ index ([[Ann.buildIvfSq]]) for declarative
-    * rewrite of `orderBy(dist(vecCol, q)).limit(k)` plans. The fixed
-    * `index` form freezes the registered snapshot; prefer the resolver
-    * form when the underlying table can be written after install. */
-  def registerQuantized(vecCol: String, idCol: String,
-                        index: Ann.IvfSqIndex, metric: Ann.Metric,
-                        probes: Int, refine: Int = 5): Unit =
-    registerQuantized(vecCol, idCol, () => index, metric, probes, refine,
-      owner = "")
-
-  /** Resolver form of [[registerQuantized]]: `resolve` runs at every
-    * rewrite (back it with a version-keyed cache — Engine does). */
-  def registerQuantized(vecCol: String, idCol: String,
-                        resolve: () => Ann.IvfSqIndex, metric: Ann.Metric,
-                        probes: Int, refine: Int,
-                        owner: String): Unit = {
-    requireQuantMetric(metric)
-    quantEntries.synchronized {
-      requireFreeOrSameOwner("quantized", vecCol,
-        quantEntries.get(vecCol).map(_.owner), owner)
-      quantEntries(vecCol) =
-        SqQuant(resolve, idCol, metric, probes, refine, owner)
-    }
-  }
-
-  /** Register an IVF+1-bit (RaBitQ-style) index ([[Ann.buildIvfBitq]])
-    * for declarative rewrite — `VectorIndex.oneBit`'s Engine shape.
-    * `refine <= 0` = auto ([[Ann.defaultBitqRefine]]: the spherical
-    * estimator needs a larger exact-re-rank budget than L2). */
-  def registerOneBit(vecCol: String, idCol: String,
-                     index: Ann.IvfBitIndex, metric: Ann.Metric,
-                     probes: Int, refine: Int = -1): Unit =
-    registerOneBit(vecCol, idCol, () => index, metric, probes, refine,
-      owner = "")
-
-  /** Resolver form of [[registerOneBit]] (see [[registerQuantized]]). */
-  def registerOneBit(vecCol: String, idCol: String,
-                     resolve: () => Ann.IvfBitIndex, metric: Ann.Metric,
-                     probes: Int, refine: Int,
-                     owner: String): Unit = {
-    requireQuantMetric(metric)
-    quantEntries.synchronized {
-      requireFreeOrSameOwner("one-bit", vecCol,
-        quantEntries.get(vecCol).map(_.owner), owner)
-      quantEntries(vecCol) = BitQuant(resolve, idCol, metric, probes,
-        if (refine > 0) refine else Ann.defaultBitqRefine(metric), owner)
-    }
-  }
-
-  /** Register an IVF+PQ index ([[Ann.buildIvfPq]]) for declarative
-    * rewrite — `VectorIndex.pq`'s Engine shape: phase-1 is the probed
-    * codes-only ADC scan ([[Ann.pqCandidates]]), the plan's own
-    * Sort+Limit re-ranks the survivors exactly. */
-  def registerPq(vecCol: String, idCol: String,
-                 index: Ann.IvfPqIndex, metric: Ann.Metric,
-                 probes: Int, refine: Int = 5): Unit =
-    registerPq(vecCol, idCol, () => index, metric, probes, refine,
-      owner = "")
-
-  /** Resolver form of [[registerPq]] (see [[registerQuantized]]). */
-  def registerPq(vecCol: String, idCol: String,
-                 resolve: () => Ann.IvfPqIndex, metric: Ann.Metric,
-                 probes: Int, refine: Int,
-                 owner: String): Unit = {
-    requireQuantMetric(metric)
-    quantEntries.synchronized {
-      requireFreeOrSameOwner("pq", vecCol,
-        quantEntries.get(vecCol).map(_.owner), owner)
-      quantEntries(vecCol) =
-        PqQuant(resolve, idCol, metric, probes, refine, owner)
-    }
-  }
-
-  /** Register a STORED quantized root for declarative rewrite,
-    * MAINTENANCE-AWARE — the family member of [[registerDenseRoot]]'s
-    * recipe for SQ / PQ / 1-bit layouts: the family and metric come
-    * from the root's own geometry marker
-    * ([[Ann.quantizedRootFamily]] — spherical roots serve cosine
-    * plans, the build's own contract), and the resolver RE-LOADS the
-    * root at every resolve, so every maintenance wave reaches
-    * declarative probe selection with no re-install — where the
-    * frozen [[registerQuantized]](index) form keeps scanning the
-    * install-time FILE LISTING: after a split, the dissolved
-    * parent's files are gone (the probed scan dies on FileNotFound
-    * at best) and the sub-cells holding its rows are invisible at
-    * worst. Loading per resolve rather than caching by fingerprint
-    * is deliberate: a fresh-rows COMPACTION
-    * ([[Ann.compactQuantizedFresh]]) appends encoded rows to the
-    * main layout WITHOUT a model re-pin (the quantizer didn't
+  /** A STORED quantized root as a [[Quantized]], MAINTENANCE-AWARE —
+    * the family member of [[denseRoot]]'s recipe for SQ / PQ / 1-bit
+    * layouts: the family and metric come from the root's own geometry
+    * marker ([[Ann.quantizedRootFamily]] — spherical roots serve
+    * cosine plans, the build's own contract), and the resolver
+    * RE-LOADS the root at every resolve, so every maintenance wave
+    * reaches declarative probe selection with no re-install — where a
+    * frozen `() => index` keeps scanning the install-time FILE
+    * LISTING: after a split, the dissolved parent's files are gone
+    * (the probed scan dies on FileNotFound at best) and the sub-cells
+    * holding its rows are invisible at worst. Loading per resolve
+    * rather than caching by fingerprint is deliberate: a fresh-rows
+    * COMPACTION ([[Ann.compactQuantizedFresh]]) appends encoded rows
+    * to the main layout WITHOUT a model re-pin (the quantizer didn't
     * change), so a fingerprint-keyed listing would silently exclude
     * every compacted row from phase-1 candidates — and per-resolve
     * loading keeps the torn-merge refusal live mid-maintenance
@@ -737,39 +596,29 @@ object AnnIndex {
     * listings; PQ re-collects its m·codes codebook rows — the
     * generic resolver contract's documented budget). `refine <= 0` =
     * the family default (5; 1-bit [[Ann.defaultBitqRefine]]). */
-  def registerQuantizedRoot(spark: SparkSession, dir: String,
-                            vecCol: String, idCol: String, probes: Int,
-                            refine: Int = -1,
-                            owner: String = ""): Unit = {
+  def quantizedRoot(spark: SparkSession, dir: String, vecCol: String,
+                    idCol: String, probes: Int, refine: Int = -1,
+                    owner: String = ""): Quantized = {
     val (family, spherical) = Ann.quantizedRootFamily(spark, dir)
-    val metric: Ann.Metric = if (spherical) Ann.Cosine else Ann.L2
-    val eff = if (refine > 0) refine else 5
-    family match {
-      case "sq" =>
-        registerQuantized(vecCol, idCol,
-          () => Ann.loadIvfSq(spark, dir),
-          metric, probes, eff, owner)
-      case "pq" =>
-        registerPq(vecCol, idCol,
-          () => Ann.loadIvfPq(spark, dir),
-          metric, probes, eff, owner)
-      case _ =>
-        registerOneBit(vecCol, idCol,
-          () => Ann.loadIvfBitq(spark, dir),
-          metric, probes, refine, owner) // <= 0 = defaultBitqRefine
+    val load: () => Ann.QuantIndex = family match {
+      case "sq" => () => Ann.loadIvfSq(spark, dir)
+      case "pq" => () => Ann.loadIvfPq(spark, dir)
+      case _ => () => Ann.loadIvfBitq(spark, dir)
     }
+    Quantized(vecCol, idCol, load, if (spherical) Ann.Cosine else Ann.L2,
+      probes, refine, owner)
   }
 
-  /** Register a [[Ann.writeMatryoshka]] root for declarative rewrite
-    * of `orderBy(l2_dist(vecCol, q)).limit(k)` plans — the truncation
+  /** A [[Ann.writeMatryoshka]] root as a [[Matryoshka]] for
+    * `orderBy(l2_dist(vecCol, q)).limit(k)` plans — the truncation
     * member of the quantized-rewrite family. The root's marker is
     * read HERE (loudly — a missing or unreadable marker refuses the
     * registration, not the first query), pinning `dims` for the
-    * entry's lifetime. */
-  def registerMatryoshka(vecCol: String, idCol: String, dir: String,
-                         refine: Int = 5, owner: String = ""): Unit = {
+    * binding's lifetime. */
+  def matryoshka(vecCol: String, idCol: String, dir: String,
+                 refine: Int = 5, owner: String = ""): Matryoshka = {
     require(refine >= 1, s"registerMatryoshka: refine >= 1, got $refine")
-    val spark = org.apache.spark.sql.SparkSession.active
+    val spark = SparkSession.active
     val (dims, rootMetric) =
       Ann.readMatryoshkaMeta(spark, dir, "registerMatryoshka")
     // the rewrite matches l2_dist plans; a cosine root's emb_pre is a
@@ -781,323 +630,127 @@ object AnnIndex {
       s"registerMatryoshka: $dir is a metric=$rootMetric root — the " +
         "declarative rewrite serves l2_dist plans only; query cosine " +
         "roots via Ann.matryoshkaTopKStored(metric = Cosine)")
-    quantEntries.synchronized {
-      requireFreeOrSameOwner("matryoshka", vecCol,
-        quantEntries.get(vecCol).map(_.owner), owner)
-      quantEntries(vecCol) = MrlQuant(dir, idCol, dims, refine, owner)
-    }
+    Matryoshka(vecCol, idCol, dir, dims, probes = 0, refine, owner)
   }
 
-  /** Register a [[Ann.writeMatryoshkaIvf]] root for declarative
-    * rewrite — [[registerMatryoshka]]'s composed twin: same l2_dist
-    * plan shape, but the candidate cut probes cells first. The
-    * root's marker is read HERE (missing/cosine roots refuse the
-    * registration, not the first query — the rewrite serves l2_dist
-    * plans only). */
-  def registerMatryoshkaIvf(vecCol: String, idCol: String, dir: String,
-                            probes: Int = 3, refine: Int = 5,
-                            owner: String = ""): Unit = {
+  /** A [[Ann.writeMatryoshkaIvf]] root as a [[Matryoshka]] —
+    * [[matryoshka]]'s composed twin: same l2_dist plan shape, but the
+    * candidate cut probes cells first. The root's marker is read HERE
+    * (missing/cosine roots refuse the registration, not the first
+    * query — the rewrite serves l2_dist plans only). */
+  def matryoshkaIvf(vecCol: String, idCol: String, dir: String,
+                    probes: Int = 3, refine: Int = 5,
+                    owner: String = ""): Matryoshka = {
     require(refine >= 1, s"registerMatryoshkaIvf: refine >= 1, got $refine")
     require(probes >= 1, s"registerMatryoshkaIvf: probes >= 1, got $probes")
-    val spark = org.apache.spark.sql.SparkSession.active
+    val spark = SparkSession.active
     val (dims, rootMetric) = Ann.readMatryoshkaMeta(spark, dir,
       "registerMatryoshkaIvf", "_graft_matryoshka_ivf")
     require(rootMetric == Ann.L2,
       s"registerMatryoshkaIvf: $dir is a metric=$rootMetric root — " +
         "the declarative rewrite serves l2_dist plans only; query " +
         "cosine roots via Ann.matryoshkaTopKIvf(metric = Cosine)")
-    quantEntries.synchronized {
-      requireFreeOrSameOwner("matryoshka-ivf", vecCol,
-        quantEntries.get(vecCol).map(_.owner), owner)
-      quantEntries(vecCol) = MrlIvfQuant(dir, idCol, dims, probes,
-        refine, owner)
-    }
+    Matryoshka(vecCol, idCol, dir, dims, probes, refine, owner)
+  }
+}
+
+/** Index-aware ANN top-k rewrite registry — the bindings
+  * [[AnnTopKRule]] consults. The rule turns a brute-force
+  * `Sort(dist(vec, query)) [+ Limit]` over a REGISTERED IVF-indexed
+  * table into a probe-pruned scan: it injects
+  * `Filter(centroid_id IN nearest-probe cells)` below the sort.
+  * Physical planning then turns that filter into real partition
+  * pruning when the table is stored `partitionBy(centroid_id)`
+  * ([[Ann.writePartitioned]]).
+  *
+  * This is the declarative twin of the reference's
+  * `SET LOCAL vchordrq.probes = N` (client.py:285-309): registering an
+  * index (with its probe budget) is the user's opt-in to approximate
+  * search; unregistered queries are untouched.
+  *
+  * Scope contract: a [[Binding]] keys on its column NAME (with the
+  * cell or id column it names) — any plan whose scan exposes those
+  * columns and sorts by a recognized distance expression over that
+  * column is rewritten. Register distinct column names per logical
+  * index. */
+object AnnIndex {
+
+  /** Every binding, keyed by its column: one per family slot (see
+    * [[slot]]); bindings of different families on one column
+    * coexist. */
+  private val bindings = TrieMap.empty[String, List[Binding]]
+
+  /** The slot a binding fills on its column. The quantized family
+    * (codes and matryoshka prefixes) shares one — the rule serves one
+    * candidate cut per column — and BM25 has one per id column. */
+  private def slot(b: Binding): String = b match {
+    case _: Binding.Quantized | _: Binding.Matryoshka => "quantized"
+    case bm: Binding.Bm25 => s"Bm25/${bm.idCol}"
+    case other => other.productPrefix
   }
 
-  def unregisterQuantized(vecCol: String): Unit =
-    quantEntries.remove(vecCol)
-  private[plans] def lookupQuant(vecCol: String): Option[QuantEntry] =
-    quantEntries.get(vecCol)
-
-  /** MAXSIM registrations — the declarative form of the reference's
-    * `maxsim_refine` two-phase (client.py:337-343, registry.py:233):
-    * a plain `orderBy(maxsim_dot(q, mv).desc).limit(k)` plan over a
-    * registered multivector column rewrites into a semi-join against
-    * the top-max(refine, k) ids of the cheap phase-1 scan (one dot of
-    * the doc's token-mean vs the query-token centroid per doc,
-    * [[Ann.maxsimCandidates]]); the plan's own Sort+Limit is the exact
-    * maxsim re-rank, so the O(|q|·|d|·dim) interaction runs only on
-    * the candidates. Resolver-backed like the quantized entries. */
-  /** The IVF behind an index-pruned maxsim registration
-    * ([[graft.ops.Ann.buildMaxsimIvf]]): `resolveAssigned` is the
-    * doc table WITH its persisted token-mean (`meanCol`) and cell
-    * (`cellCol`) columns — ideally a `partitionBy(cellCol)` stored
-    * layout so probe pruning is disk pruning; `resolveCentroids` is
-    * the centroid side table. Resolver-backed like every other
-    * registration so post-install writes stay visible. */
-  final case class MaxsimIvf(resolveAssigned: () => org.apache.spark.sql
-                               .DataFrame,
-                             cellCol: String, meanCol: String,
-                             resolveCentroids: () => org.apache.spark.sql
-                               .DataFrame,
-                             centIdCol: String, centVecCol: String,
-                             probes: Int,
-                             // the reference pins spherical_centroids
-                             // for vector_maxsim_ops (spec.py:459-464):
-                             // probe under the BUILD's metric
-                             metric: Ann.Metric = Ann.Cosine) {
-    /** The `probes`-nearest-cells subplan for a query-token centroid —
-      * shared by phase-1's semi-join/DPP and the phase-2 re-rank DPP.
-      * Cast to the scanned cell column's type (partition columns read
-      * back as int) and aliased for a fresh exprId — see SqQuant. */
-    private[plans] def probesDf(centroid: Seq[Double],
-        cellType: org.apache.spark.sql.types.DataType)
-        : org.apache.spark.sql.DataFrame = {
-      import org.apache.spark.sql.functions._
-      resolveCentroids()
-        .withColumn("__d", metric.dist(
-          col(centVecCol).cast("array<double>"), typedlit(centroid)))
-        .orderBy(col("__d").asc, col(centIdCol).asc)
-        .limit(probes)
-        .select(col(centIdCol).cast(cellType).as(s"__cell_$centIdCol"))
+  /** Registration collision guard: the rewrite rule disambiguates by
+    * column NAMES, so a second TABLE binding the same column — in ANY
+    * family: one table's probe index and another's SQ codes on
+    * `embedding` would semi-join the first table's queries against the
+    * second table's candidate ids — must fail loudly, not go silently
+    * latest-wins (the BM25 registry's round-8 hardening, generalized).
+    * BM25 scopes by (textCol, idCol), so keyword bindings on
+    * different id columns never collide. Same owner = legitimate
+    * re-install. */
+  private def requireFreeOrSameOwner(b: Binding,
+                                     held: List[Binding]): Unit =
+    held.find(h => h.owner != b.owner && ((h, b) match {
+      case (x: Binding.Bm25, y: Binding.Bm25) => x.idCol == y.idCol
+      case _ => true
+    })).foreach { h =>
+      throw new IllegalStateException(
+        s"${b.productPrefix} registration collision on '${b.column}': " +
+          s"held by '${h.owner}' (${h.productPrefix}), requested by " +
+          s"'${b.owner}'. The rewrite rule disambiguates by column " +
+          "NAMES, so two tables sharing them cannot both register — " +
+          "unregister the other table first, or rename one table's " +
+          "columns.")
     }
+
+  /** Bind `b` for declarative rewrites; a same-owner binding in the
+    * same slot is replaced. */
+  def register(b: Binding): Unit = bindings.synchronized {
+    val held = bindings.getOrElse(b.column, Nil)
+    requireFreeOrSameOwner(b, held)
+    bindings(b.column) = b :: held.filterNot(h => slot(h) == slot(b))
   }
 
-  final case class MaxsimEntry(mvCol: String, idCol: String,
-                               resolve: () => org.apache.spark.sql
-                                 .DataFrame,
-                               refine: Int,
-                               ivf: Option[MaxsimIvf] = None,
-                               owner: String = "") {
-    /** Phase-1 candidate plan, pre-optimized (see inject()). Without an
-      * IVF: the full token-mean scan. With one: probe cells come from a
-      * semi-joined Sort+Limit subplan over the centroids table (nearest
-      * cells to the QUERY-TOKEN CENTROID — maxsim's single probe
-      * vector), phase-1 reads ONLY probed cells and ONLY the persisted
-      * mean column, and the rule's own DynamicPruningSubquery trick
-      * (see the distRewritten scaladoc) turns the probe semi-join into
-      * runtime partition pruning on a `partitionBy(cellCol)` layout. */
-    def candidatePlan(q: Array[Array[Double]], n: Int): LogicalPlan =
-      ivf match {
-        case None =>
-          Ann.maxsimCandidates(resolve(), idCol, mvCol,
-              q.map(_.toSeq).toSeq, n)
-            .select(org.apache.spark.sql.functions.col(idCol)
-              .as(s"__cand_$idCol")) // fresh exprId — see SqQuant
-            .queryExecution.optimizedPlan
-        case Some(ix) =>
-          import org.apache.spark.sql.functions._
-          val centroid = Ann.queryCentroid(q.map(_.toSeq).toSeq)
-          val assigned = ix.resolveAssigned()
-          val cellType = assigned.schema(ix.cellCol).dataType
-          val probeAlias = s"__cell_${ix.centIdCol}"
-          val probesDf = ix.probesDf(centroid, cellType)
-          val cands = assigned
-            // phase-1 reads id + cell + mean ONLY: the full token
-            // matrix column is column-pruned out of the parquet scan
-            .select(col(idCol), col(ix.cellCol), col(ix.meanCol))
-            .join(probesDf, col(ix.cellCol) === col(probeAlias),
-              "left_semi")
-            .withColumn("__approx", round(org.apache.spark.sql.graft
-              .VecExprs.dot(col(ix.meanCol).cast("array<double>"),
-                typedlit(centroid)), 6))
-            .orderBy(col("__approx").desc, col(idCol).asc)
-            .limit(n)
-            .select(col(idCol).as(s"__cand_$idCol"))
-          // plant the DynamicPruningSubquery under the probe semi-join
-          // POST-optimization (the same trick, and the same rationale,
-          // as distRewritten: Spark's own PartitionPruning never fires
-          // for a Sort+Limit build side; CleanupDynamicPruningFilters
-          // has already run on this sub-plan, and physical planning
-          // executes the subquery as a plain in-filter on leaves that
-          // cannot prune)
-          cands.queryExecution.optimizedPlan.transformUp {
-            case j @ Join(l, r, LeftSemi, Some(EqualTo(
-                a: AttributeReference, b: AttributeReference)), _)
-                if r.outputSet.contains(b) && l.outputSet.contains(a) =>
-              j.copy(left = Filter(DynamicPruningSubquery(
-                a, r, Seq(b), Seq(0), onlyInBroadcast = false), l))
-            case j @ Join(l, r, LeftSemi, Some(EqualTo(
-                b: AttributeReference, a: AttributeReference)), _)
-                if r.outputSet.contains(b) && l.outputSet.contains(a) =>
-              j.copy(left = Filter(DynamicPruningSubquery(
-                a, r, Seq(b), Seq(0), onlyInBroadcast = false), l))
-          }
-      }
-  }
+  /** Remove every binding on the column, whoever owns it. */
+  def unregister(column: String): Unit =
+    bindings.synchronized(bindings.remove(column))
 
-  private val maxsimEntries = TrieMap.empty[String, MaxsimEntry]
-
-  def registerMaxsim(mvCol: String, idCol: String,
-                     resolve: () => org.apache.spark.sql.DataFrame,
-                     refine: Int = 1000): Unit =
-    registerMaxsim(mvCol, idCol, resolve, refine, None, owner = "")
-  /** Index-pruned form: phase-1 rides the IVF (see [[MaxsimIvf]]). */
-  def registerMaxsim(mvCol: String, idCol: String,
-                     resolve: () => org.apache.spark.sql.DataFrame,
-                     refine: Int, ivf: Option[MaxsimIvf],
-                     owner: String): Unit =
-    maxsimEntries.synchronized {
-      requireFreeOrSameOwner("maxsim", mvCol,
-        maxsimEntries.get(mvCol).map(_.owner), owner)
-      maxsimEntries(mvCol) =
-        MaxsimEntry(mvCol, idCol, resolve, refine, ivf, owner)
+  /** Remove one table's bindings on the column only. Holds the same
+    * monitor as [[register]] — an unsynchronized updateWith could
+    * interleave with a concurrent register's read-modify-write and
+    * resurrect the removed binding. */
+  def unregister(column: String, owner: String): Unit =
+    bindings.synchronized {
+      bindings.updateWith(column)(
+        _.map(_.filterNot(_.owner == owner)).filter(_.nonEmpty))
     }
-  def unregisterMaxsim(mvCol: String): Unit = maxsimEntries.remove(mvCol)
-  private[plans] def lookupMaxsim(mvCol: String): Option[MaxsimEntry] =
-    maxsimEntries.get(mvCol)
 
-  /** BM25 registrations — the declarative form of the reference's
-    * keyword search (`ORDER BY kw <&> to_bm25query(...)`,
-    * client.py:356-380): a plain `orderBy(bm25_score.desc).limit(k)`
-    * plan ([[graft.ops.Bm25.scoreColumn]] builds the score) over a
-    * registered text column rewrites into a semi-join against the
-    * top-(k·refine) ids of the postings-index search
-    * ([[graft.ops.Bm25.searchTerms]] — map-side term-pruned, never a
-    * full-corpus tokenize), with the plan's own Sort+Limit as the exact
-    * re-rank. Scoring is EXACT on both sides, so the rewrite only
-    * changes semantics for docs containing NO query term (brute scores
-    * them 0, the index never ranks them — the reference's contract);
-    * `refine` buffers tie-break divergence at the k boundary.
-    * Resolver-backed like the quantized entries. */
-  final case class Bm25Entry(textCol: String, idCol: String,
-                             resolve: () => graft.ops.Bm25.Bm25Index,
-                             refine: Int, owner: String = "") {
-    def candidateIds(terms: Seq[String], n: Int) = {
-      val ix = resolve()
-      // loud failure instead of a silent mis-join: every build path
-      // normalizes the postings id column to "id" (Bm25.build,
-      // loadStoredPostings), and searchTerms groups by it — a future
-      // non-normalized index would otherwise join candidates on the
-      // wrong column
-      require(ix.postings.columns.contains("id"),
-        s"BM25 index for column '$textCol' must expose postings id " +
-          s"column 'id' (got: ${ix.postings.columns.mkString(", ")})")
-      graft.ops.Bm25.searchTerms(ix, terms, n)
-        .select(org.apache.spark.sql.functions.col("id")
-          .as(s"__cand_$idCol")) // fresh exprId — see SqQuant
-    }
-  }
+  private[plans] def lookup(column: String): List[Binding] =
+    bindings.getOrElse(column, Nil)
 
-  /** Sparse-vector registration: `idxCol`/`valCol` are the document
-    * table's sparse (indices, values) column pair — BOTH are validated
-    * by the rule (a score over the registered indices but a DIFFERENT
-    * values column must NOT rewrite: its candidates would come from
-    * the wrong postings) — and `resolve` yields the inverted postings
-    * (id, bucket, v — [[graft.functions.Sparse.invertedPostings]]).
-    * Candidates come from the postings top-n
-    * ([[graft.functions.Sparse.invertedTopKW]] — the query touches
-    * only its buckets' posting lists), and since the inverted score
-    * EQUALS the row-scan score exactly (small-int products), the
-    * re-rank returns the same top-k as the full scan among
-    * POSITIVE-scoring docs whenever n ≥ k. Like the BM25 rewrite,
-    * docs sharing no bucket with the query are not candidates — when
-    * fewer than k docs match, the rewritten result is SHORTER than
-    * the brute plan's (which would pad with zero-score rows); that is
-    * the documented keyword/sparse rewrite contract, not a bug. */
-  final case class SparseEntry(idxCol: String, valCol: String,
-                               idCol: String,
-                               resolve: () => org.apache.spark.sql.DataFrame,
-                               refine: Int, owner: String = "") {
-    def candidateIds(qIdx: Seq[Int], qVal: Seq[Double], n: Int) = {
-      val postings = resolve()
-      require(Seq("id", "bucket", "v")
-          .forall(postings.columns.contains),
-        s"sparse postings for column '$idxCol' must expose " +
-          s"(id, bucket, v) (got: ${postings.columns.mkString(", ")})")
-      graft.functions.Sparse.invertedTopKW(postings, qIdx, qVal, n)
-        .select(org.apache.spark.sql.functions.col("id")
-          .as(s"__cand_$idCol"))
-    }
-  }
-
-  private val sparseEntries = TrieMap.empty[String, SparseEntry]
-
-  /** Scope contract: like the VECTOR registries (and stricter than
-    * BM25's per-(column, id) list), sparse registrations are keyed by
-    * the indices column name alone — two tables sharing an indices
-    * column name cannot both register (the second owner throws);
-    * rename one table's column or unregister the other first. */
-  def registerSparse(idxCol: String, valCol: String, idCol: String,
-                     resolve: () => org.apache.spark.sql.DataFrame,
-                     refine: Int = 4, owner: String = ""): Unit =
-    sparseEntries.synchronized {
-      sparseEntries.get(idxCol).filter(_.owner != owner).foreach { p =>
-        throw new IllegalStateException(
-          s"sparse registration collision on '$idxCol': held by " +
-            s"'${p.owner}', requested by '$owner' — unregisterSparse " +
-            "the other table first, or rename one table's column.")
-      }
-      sparseEntries(idxCol) =
-        SparseEntry(idxCol, valCol, idCol, resolve, refine, owner)
-    }
-  def unregisterSparse(idxCol: String): Unit = sparseEntries.remove(idxCol)
-  private[plans] def lookupSparse(idxCol: String): Option[SparseEntry] =
-    sparseEntries.get(idxCol)
-
-  /** Keyword columns are commonly all named "text", so unlike the
-    * vector registries (scope contract: distinct column names per
-    * logical index) BM25 keeps a LIST per column name and the rule
-    * disambiguates by which entry's id column the plan's leaf exposes
-    * — two tables with keyword column "text" but different primary
-    * keys coexist. Same (textCol, idCol) pair from the SAME owner
-    * re-registers in place; the same pair from a DIFFERENT owner
-    * throws — with the common (id, text) naming, "latest wins" would
-    * silently semi-join one table's query against the other table's
-    * postings index. */
-  private val bm25Entries = TrieMap.empty[String, List[Bm25Entry]]
-
-  /** `owner` identifies the logical table behind the registration
-    * (Engine passes the table name); registrations with the same
-    * column names but different owners are a hard error, not a silent
-    * replacement. The default "" keeps ad-hoc single-table use terse. */
-  def registerBm25(textCol: String, idCol: String,
-                   resolve: () => graft.ops.Bm25.Bm25Index,
-                   refine: Int = 4, owner: String = ""): Unit =
-    bm25Entries.synchronized {
-      val existing = bm25Entries.getOrElse(textCol, Nil)
-      existing.find(p => p.idCol == idCol && p.owner != owner).foreach {
-        p => throw new IllegalStateException(
-          s"BM25 registration collision on ($textCol, $idCol): held by " +
-            s"'${p.owner}', requested by '$owner'. The rewrite rule " +
-            "disambiguates by column NAMES, so two tables sharing them " +
-            "cannot both register — unregisterBm25 the other table " +
-            "first, or rename one table's columns.")
-      }
-      val e = Bm25Entry(textCol, idCol, resolve, refine, owner)
-      bm25Entries(textCol) = e :: existing.filterNot(_.idCol == idCol)
-    }
-  /** Remove ALL registrations for the column (test teardown). */
-  def unregisterBm25(textCol: String): Unit = bm25Entries.remove(textCol)
-  /** Remove one table's registration (its id column) only. Holds the
-    * same monitor as [[registerBm25]] — an unsynchronized updateWith
-    * could interleave with a concurrent register's read-modify-write
-    * and resurrect the removed entry. */
-  def unregisterBm25(textCol: String, idCol: String): Unit =
-    bm25Entries.synchronized {
-      bm25Entries.updateWith(textCol)(
-        _.map(_.filterNot(_.idCol == idCol)).filter(_.nonEmpty))
-    }
-  private[plans] def lookupBm25(textCol: String): List[Bm25Entry] =
-    bm25Entries.getOrElse(textCol, Nil)
-
-  /** True when ANY index family holds a registration — the rule's
-    * fast-path guard. Once installed the rule outlives every
-    * register/unregister pair in the session (extraOptimizations has
-    * no uninstall), so a long-lived session — notebook, service, the
-    * 119-gate bench — pays the Sort/Limit pattern-match on every
-    * optimization pass of every query even with nothing registered.
-    * Empty registries ⇒ no rewrite can fire ⇒ skip the traversal. */
-  private[plans] def hasAny: Boolean =
-    entries.nonEmpty || distEntries.nonEmpty || quantEntries.nonEmpty ||
-      maxsimEntries.nonEmpty || bm25Entries.nonEmpty ||
-      sparseEntries.nonEmpty || rangeEntries.nonEmpty ||
-      rangeDistEntries.nonEmpty
+  /** True when ANY binding exists — the rule's fast-path guard. Once
+    * installed the rule outlives every register/unregister pair in the
+    * session (extraOptimizations has no uninstall), so a long-lived
+    * session — notebook, service, the 119-gate bench — pays the
+    * Sort/Limit pattern-match on every optimization pass of every
+    * query even with nothing registered. Empty registry ⇒ no rewrite
+    * can fire ⇒ skip the traversal. */
+  private[plans] def hasAny: Boolean = bindings.nonEmpty
 
   /** Install the rewrite on a session (the
     * `spark.experimental.extraOptimizations` injection point; for a
     * config-driven install use `spark.sql.extensions` with
-    * [[GraftExtensions]]). */
+    * [[GraftExtensions]]). Idempotent. */
   def install(spark: SparkSession): Unit =
     if (!spark.experimental.extraOptimizations.exists(
         _.isInstanceOf[AnnTopKRule]))
@@ -1115,12 +768,12 @@ object AnnTopKRule {
     * structural `Filter(In(...), LeafNode)` match and the batch then
     * re-injects every iteration until "Max iterations reached". Catalyst
     * copies tags through makeCopy/withNewChildren, so the tag outlives
-    * those rewrites; the semantic In/InSet check below is the backstop
-    * for rules that build a replacement Filter from scratch. */
+    * those rewrites; the semantic In/InSet check is the backstop for
+    * rules that build a replacement Filter from scratch. */
   private[plans] val Injected =
     org.apache.spark.sql.catalyst.trees.TreeNodeTag[Unit]("graft.ann.injected")
-  /** Marks the semi-join injected by the QUANTIZED rewrite (same
-    * idempotence rationale as [[Injected]]). */
+  /** Marks the semi-join injected by the candidate and subplan
+    * rewrites (same idempotence rationale as [[Injected]]). */
   private[plans] val InjectedQuant =
     org.apache.spark.sql.catalyst.trees
       .TreeNodeTag[Unit]("graft.ann.injectedQuant")
@@ -1220,9 +873,46 @@ case class AnnTopKRule() extends Rule[LogicalPlan] {
     }
   }
 
+  /** (distance expression, eps) from the first `dist <= eps` /
+    * `dist < eps` conjunct of a filter condition. */
+  private def rangeConjunct(cond: Expression): Option[(Expression, Double)] = {
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    def litDouble(e: Expression): Option[Double] = e match {
+      case Literal(v: Double, _) => Some(v)
+      case Literal(v: Float, _) => Some(v.toDouble)
+      case Literal(v: Int, _) => Some(v.toDouble)
+      case Literal(v: Long, _) => Some(v.toDouble)
+      case Literal(d: org.apache.spark.sql.types.Decimal, _) =>
+        Some(d.toDouble)
+      case _ => None
+    }
+    conjuncts(cond).collectFirst(Function.unlift {
+      case LessThanOrEqual(d, l) if extractDist(d).isDefined =>
+        litDouble(l).map((d, _))
+      case LessThan(d, l) if extractDist(d).isDefined =>
+        litDouble(l).map((d, _))
+      case _ => None
+    })
+  }
+
+  /** The alias behind the plan's leading sort key, when it sorts in
+    * `dir`. */
+  private def sortAlias(order: Seq[SortOrder], fields: Seq[NamedExpression],
+                        dir: SortDirection): Option[Alias] = for {
+    key <- order.head match {
+      case SortOrder(a: Attribute, d, _, _) if d == dir => Some(a)
+      case _ => None
+    }
+    alias <- fields.collectFirst {
+      case a: Alias if a.exprId == key.exprId => a }
+  } yield alias
+
   /** True when `child` already carries an injected (or semantically
     * equivalent) candidate semi-join on this id attribute — the shared
-    * idempotence guard of the quantized and maxsim rewrites. */
+    * idempotence guard of the semi-join rewrites. */
   private def hasCandidateSemiJoin(child: LogicalPlan,
                                    idAttr: Attribute): Boolean =
     child.exists {
@@ -1236,85 +926,165 @@ case class AnnTopKRule() extends Rule[LogicalPlan] {
       case _ => false
     }
 
+  /** True when a probe filter on `cellAttr` already exists in `plan` —
+    * by tag (survives makeCopy/withNewChildren rewrites) or
+    * semantically as In/InSet on the same exprId (survives rules that
+    * rebuild the Filter). A user's own In-filter on the cell column
+    * also matches: they have pruned cells themselves, re-pruning could
+    * only hide rows. `self` (the range arm's own Filter) is exempt
+    * from the semantic match. */
+  private def cellFiltered(plan: LogicalPlan, cellAttr: Attribute,
+                           self: Option[Filter] = None): Boolean =
+    plan.exists {
+      case f: Filter =>
+        f.getTagValue(AnnTopKRule.Injected).isDefined ||
+          (!self.exists(_ fastEquals f) && f.condition.exists {
+            case In(c: AttributeReference, _) => c.exprId == cellAttr.exprId
+            case InSet(c: AttributeReference, _) =>
+              c.exprId == cellAttr.exprId
+            case _ => false
+          })
+      case _ => false
+    }
+
+  /** `child` rebuilt with `node(leaf)` in place of the target leaf. */
+  private def plantAbove(child: LogicalPlan, leaf: LeafNode)(
+      node: LeafNode => LogicalPlan): Option[LogicalPlan] = {
+    var injected = false
+    val out = child.transformUp {
+      case l: LeafNode if !injected && (l fastEquals leaf) =>
+        injected = true
+        node(l)
+    }
+    if (injected) Some(out) else None
+  }
+
+  /** Plant a cell cut above the leaf that PRODUCES `vecAttr` (exprId
+    * match, so a same-named column on the other side of a join never
+    * confuses the rule) and exposes `cellCol`, unless `done` says the
+    * cut already happened. `node` builds the cut from the cell
+    * attribute. */
+  private def plantCut(child: LogicalPlan, vecAttr: AttributeReference,
+                       cellCol: String)(done: Attribute => Boolean)(
+      node: Attribute => LeafNode => LogicalPlan): Option[LogicalPlan] =
+    for {
+      leaf <- child.collectFirst {
+        case l: LeafNode if l.output.exists(_.exprId == vecAttr.exprId) &&
+            l.output.exists(_.name == cellCol) => l
+      }
+      cellAttr = leaf.output.find(_.name == cellCol).get
+      if !done(cellAttr)
+      planted <- plantAbove(child, leaf)(node(cellAttr))
+    } yield planted
+
+  /** `Filter(cellAttr IN cells)` directly above the target leaf —
+    * FileSourceStrategy then lifts it into PartitionFilters. The
+    * literal type must match the column (partition columns read back
+    * as int) or the plan becomes unresolved post-analysis. */
+  private def cellFilter(cellAttr: Attribute, cells: Seq[Long])(
+      l: LeafNode): LogicalPlan = {
+    val lits = cells.map { p =>
+      cellAttr.dataType match {
+        case IntegerType => Literal(p.toInt)
+        case ShortType => Literal(p.toShort)
+        case StringType => Literal(p.toString)
+        case _ => Literal(p)
+      }
+    }
+    val f = Filter(In(cellAttr, lits), l)
+    f.setTagValue(AnnTopKRule.Injected, ())
+    f
+  }
+
+  /** Tagged LEFT SEMI join of `left` against the single-column `cand`
+    * plan on `key`. `cand` arrives pre-optimized: this rule can run as
+    * the LAST optimizer batch (experimental.extraOptimizations), where
+    * an un-optimized injected subtree would never get its own
+    * pruning/pushdown. */
+  private def semiJoin(left: LogicalPlan, key: Attribute,
+                       cand: LogicalPlan): LogicalPlan = {
+    val j = Join(left, cand, LeftSemi, Some(EqualTo(key, cand.output.head)),
+      JoinHint.NONE)
+    j.setTagValue(AnnTopKRule.InjectedQuant, ())
+    j
+  }
+
+  /** `l` filtered by a DynamicPruningSubquery on `cellAttr` against the
+    * single-column `cells` plan. The semi-join alone bounds COMPUTE
+    * but not IO: on a partitionBy(cellCol) layout the scan would still
+    * read every cell directory, because Spark's own PartitionPruning
+    * rule only fires when the build side carries a selective Filter (a
+    * Sort+Limit probe subplan has none — and a no-op tautology
+    * predicate gets constant-folded away before the heuristic sees
+    * it). So the rule plants the DynamicPruningSubquery itself —
+    * exactly the expression PartitionPruning would have placed, build
+    * side = the same subplan, with onlyInBroadcast=false so it
+    * executes as a plain in-subquery even if the join side is not
+    * broadcast (duplicated probe work = one scan of the tiny centroids
+    * table). CleanupDynamicPruningFilters drops the filter harmlessly
+    * when the leaf is not a pruning-capable scan (in-memory tables,
+    * non-partitioned layouts). */
+  private def dppFilter(cellAttr: Attribute, cells: LogicalPlan,
+                        l: LogicalPlan): LogicalPlan =
+    Filter(DynamicPruningSubquery(cellAttr, cells, Seq(cells.output.head),
+      Seq(0), onlyInBroadcast = false), l)
+
+  /** The executor-side cell cut: semi-join + DPP against `cells`. */
+  private def cellSemiJoin(cellAttr: Attribute, cells: DataFrame)(
+      l: LeafNode): LogicalPlan = {
+    val plan = cells.queryExecution.optimizedPlan
+    semiJoin(dppFilter(cellAttr, plan, l), cellAttr, plan)
+  }
+
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (!AnnIndex.hasAny) plan else plan.transform {
-    // QUANTIZED rewrite: needs k (phase-1 scans top-k·refine codes), so
-    // it matches the Limit over the Sort. The candidate sub-plan is
-    // built from the registered index's DataFrames and injected as a
-    // LEFT SEMI join above the leaf — the surviving Sort+Limit then IS
-    // the exact re-rank, and the full-precision vectors are only read
-    // for candidate rows.
+    // CANDIDATE rewrites (quantized > maxsim > bm25 > sparse): need k
+    // (phase-1 scans top-k·refine candidates), so they match the Limit
+    // over the Sort. The candidate sub-plan is built from the bound
+    // index's DataFrames and injected as a LEFT SEMI join above the
+    // leaf — the surviving Sort+Limit then IS the exact re-rank, and
+    // the full-precision vectors are only read for candidate rows.
     case gl @ GlobalLimit(IntegerLiteral(k),
         ll @ LocalLimit(_,
           s @ Sort(order, true, proj @ Project(fields, child), _)))
         if order.nonEmpty && k > 0 =>
-      // shared injection: semi-join the candidate plan above the leaf,
-      // keep the plan's own Sort+Limit as the exact re-rank.
       // `dpp` (maxsim-IVF): ALSO wrap the re-rank leaf in a
       // DynamicPruningSubquery on its cell column — candidates only
       // come from probed cells, so the phase-2 scan may skip unprobed
       // cell directories too (without it the token-matrix read is
       // corpus-sized even though phase-1 is pruned).
-      def inject(leaf: LeafNode, idAttr: Attribute,
-                 candPlan: LogicalPlan,
+      def inject(leaf: LeafNode, idAttr: Attribute, candPlan: LogicalPlan,
                  dpp: Option[(Attribute, LogicalPlan)] = None)
-          : LogicalPlan = {
-        // candPlan arrives pre-optimized: this rule can run as the LAST
-        // optimizer batch (experimental.extraOptimizations), where an
-        // un-optimized injected subtree would never get its own
-        // pruning/pushdown
-        val candId = candPlan.output.head
-        var injected = false
-        val newChild = child.transformUp {
-          case l: LeafNode if !injected && (l fastEquals leaf) =>
-            injected = true
-            val base: LogicalPlan = dpp match {
-              case Some((cellAttr, probePlan)) =>
-                Filter(DynamicPruningSubquery(cellAttr, probePlan,
-                  Seq(probePlan.output.head), Seq(0),
-                  onlyInBroadcast = false), l)
-              case None => l
-            }
-            // prune the leaf to what the plan above consumes (+ join
-            // key + DPP cell column): the injected Join sits directly
-            // over the scan, breaking the PhysicalOperation pattern
-            // FileSourceStrategy prunes columns through — without this
-            // Project the re-rank scan reads EVERY column of the table
-            val consumed = AttributeSet(
-              fields.flatMap(_.references) ++
-                order.flatMap(_.references) ++
-                child.collect { case n if !(n fastEquals leaf) => n }
-                  .flatMap(_.references)) ++
-              AttributeSet(dpp.map(_._1).toSeq) + idAttr
-            val keep = l.output.filter(consumed.contains)
-            val pruned: LogicalPlan =
-              if (keep.length == l.output.length) base
-              else Project(keep, base)
-            val j = Join(pruned, candPlan, LeftSemi,
-              Some(EqualTo(idAttr, candId)),
-              org.apache.spark.sql.catalyst.plans.logical.JoinHint.NONE)
-            j.setTagValue(AnnTopKRule.InjectedQuant, ())
-            j
-        }
-        if (injected)
+          : LogicalPlan =
+        plantAbove(child, leaf) { l =>
+          val base = dpp.fold[LogicalPlan](l) {
+            case (cellAttr, probePlan) => dppFilter(cellAttr, probePlan, l)
+          }
+          // prune the leaf to what the plan above consumes (+ join
+          // key + DPP cell column): the injected Join sits directly
+          // over the scan, breaking the PhysicalOperation pattern
+          // FileSourceStrategy prunes columns through — without this
+          // Project the re-rank scan reads EVERY column of the table
+          val consumed = AttributeSet(
+            fields.flatMap(_.references) ++
+              order.flatMap(_.references) ++
+              child.collect { case n if !(n fastEquals leaf) => n }
+                .flatMap(_.references)) ++
+            AttributeSet(dpp.map(_._1).toSeq) + idAttr
+          val keep = l.output.filter(consumed.contains)
+          semiJoin(if (keep.length == l.output.length) base
+            else Project(keep, base), idAttr, candPlan)
+        }.fold[LogicalPlan](gl)(c =>
           gl.copy(child = ll.copy(child =
-            s.copy(child = proj.copy(child = newChild))))
-        else gl
-      }
-      def sortKey(dir: SortDirection): Option[Alias] = for {
-        key <- order.head match {
-          case SortOrder(a: Attribute, d, _, _) if d == dir => Some(a)
-          case _ => None
-        }
-        alias <- fields.collectFirst {
-          case a: Alias if a.exprId == key.exprId => a }
-      } yield alias
+            s.copy(child = proj.copy(child = c)))))
+      // the target leaf produces the sort attribute and exposes the
+      // binding's id column
       def leafFor(attr: AttributeReference,
-                  idCol: String): Option[LeafNode] =
+                  idCol: String): Option[(LeafNode, Attribute)] =
         child.collectFirst {
           case l: LeafNode if l.output.exists(_.exprId == attr.exprId) &&
               l.output.exists(_.name == idCol) => l
-        }
+        }.map(l => (l, l.output.find(_.name == idCol).get))
       // The k-limited injections are UNSOUND under a Filter between the
       // Sort and the leaf: candidate budgets (k·refine) are computed
       // over the UNFILTERED corpus, so a selective predicate would
@@ -1328,34 +1098,36 @@ case class AnnTopKRule() extends Rule[LogicalPlan] {
       lazy val hasUserFilter =
         child.collectFirst { case _: Filter => () }.isDefined
       // quantized dense path: ASCENDING by a recognized distance
-      val quant = for {
-        alias <- sortKey(Ascending)
+      def quant = for {
+        alias <- sortAlias(order, fields, Ascending)
         if !hasUserFilter
         (vecAttr, q, metric) <- extractDist(alias.child)
-        entry <- AnnIndex.lookupQuant(vecAttr.name)
-        if entry.metric == metric
-        leaf <- leafFor(vecAttr, entry.idCol)
-        idAttr = leaf.output.find(_.name == entry.idCol).get
+        (idCol, candidateIds) <- AnnIndex.lookup(vecAttr.name).collectFirst {
+          case b: Binding.Quantized if b.metric == metric =>
+            (b.idCol, () => b.candidateIds(q, k))
+          case b: Binding.Matryoshka if b.metric == metric =>
+            (b.idCol, () => b.candidateIds(q, k))
+        }
+        (leaf, idAttr) <- leafFor(vecAttr, idCol)
         // idempotence: one injected semi-join per plan (tag survives
         // makeCopy/withNewChildren; a LeftSemi on the same id exprId is
         // the semantic backstop)
         if !hasCandidateSemiJoin(child, idAttr)
       } yield inject(leaf, idAttr,
-        entry.candidateIds(q, math.max(k * entry.refine, k))
-          .queryExecution.optimizedPlan)
+        candidateIds().queryExecution.optimizedPlan)
       // maxsim path: DESCENDING by a maxsim_dot score. With an IVF the
       // re-rank leaf ALSO gets the probe DPP (phase-2 cell pruning).
-      val maxsim = for {
-        alias <- sortKey(Descending)
+      def maxsim = for {
+        alias <- sortAlias(order, fields, Descending)
         if !hasUserFilter
         (mvAttr, qs) <- extractMaxsim(alias.child)
-        entry <- AnnIndex.lookupMaxsim(mvAttr.name)
-        leaf <- leafFor(mvAttr, entry.idCol)
-        idAttr = leaf.output.find(_.name == entry.idCol).get
+        b <- AnnIndex.lookup(mvAttr.name).collectFirst {
+          case b: Binding.Maxsim => b }
+        (leaf, idAttr) <- leafFor(mvAttr, b.idCol)
         if !hasCandidateSemiJoin(child, idAttr)
       } yield {
         val dpp = for {
-          ix <- entry.ivf
+          ix <- b.ivf
           cellAttr <- leaf.output.collectFirst {
             case a: AttributeReference if a.name == ix.cellCol => a }
           // the cell column must belong to the ASSIGNED layout itself:
@@ -1363,192 +1135,80 @@ case class AnnTopKRule() extends Rule[LogicalPlan] {
           // name, and filtering IT against probe ids would silently
           // drop re-rank rows — plant the phase-2 DPP only when the
           // re-rank leaf IS the assigned relation
-          if ix.resolveAssigned().queryExecution.analyzed.collectLeaves()
+          if b.resolve().queryExecution.analyzed.collectLeaves()
             .exists(_ fastEquals leaf)
-        } yield {
-          val centroid = Ann.queryCentroid(qs.map(_.toSeq).toSeq)
-          (cellAttr: Attribute,
-            ix.probesDf(centroid, cellAttr.dataType)
-              .queryExecution.optimizedPlan)
-        }
-        inject(leaf, idAttr,
-          entry.candidatePlan(qs, math.max(entry.refine, k)), dpp)
+        } yield (cellAttr: Attribute,
+          ix.probeCellsDf(Ann.queryCentroid(qs.map(_.toSeq).toSeq),
+            cellAttr.dataType).queryExecution.optimizedPlan)
+        inject(leaf, idAttr, b.candidatePlan(qs, k), dpp)
       }
       // keyword path: DESCENDING by a bm25_score; among same-named
-      // registrations, the entry whose id column this plan's leaf
-      // exposes wins (see the bm25Entries scope note)
-      val bm25 = for {
-        alias <- sortKey(Descending)
+      // bindings, the one whose id column this plan's leaf exposes
+      // wins (see the Binding.Bm25 scope note)
+      def bm25 = for {
+        alias <- sortAlias(order, fields, Descending)
         if !hasUserFilter
         (textAttr, terms) <- extractBm25(alias.child)
-        (entry, leaf) <- AnnIndex.lookupBm25(textAttr.name)
-          .flatMap(e => leafFor(textAttr, e.idCol).map((e, _)))
+        (b, (leaf, idAttr)) <- AnnIndex.lookup(textAttr.name)
+          .collect { case b: Binding.Bm25 => b }
+          .flatMap(b => leafFor(textAttr, b.idCol).map((b, _)))
           .headOption
-        idAttr = leaf.output.find(_.name == entry.idCol).get
         if !hasCandidateSemiJoin(child, idAttr)
       } yield inject(leaf, idAttr,
-        entry.candidateIds(terms, math.max(k * entry.refine, k))
-          .queryExecution.optimizedPlan)
+        b.candidateIds(terms, k).queryExecution.optimizedPlan)
       // sparse path: DESCENDING by a sparse_dot_q score — candidates
       // from the inverted postings, same-score exact re-rank
-      val sparse = for {
-        alias <- sortKey(Descending)
+      def sparse = for {
+        alias <- sortAlias(order, fields, Descending)
         if !hasUserFilter
         (idxAttr, valAttr, qIdx, qVal) <- extractSparse(alias.child)
-        entry <- AnnIndex.lookupSparse(idxAttr.name)
-        // the VALUES side must be the registered pair's values column
-        // and come from the same relation — a score over different
+        b <- AnnIndex.lookup(idxAttr.name).collectFirst {
+          case b: Binding.Sparse => b }
+        // the VALUES side must be the bound pair's values column and
+        // come from the same relation — a score over different
         // weights must not be answered from these postings
-        if valAttr.name == entry.valCol
-        leaf <- leafFor(idxAttr, entry.idCol)
+        if valAttr.name == b.valCol
+        (leaf, idAttr) <- leafFor(idxAttr, b.idCol)
         if leaf.output.exists(_.exprId == valAttr.exprId)
-        idAttr = leaf.output.find(_.name == entry.idCol).get
         if !hasCandidateSemiJoin(child, idAttr)
       } yield inject(leaf, idAttr,
-        entry.candidateIds(qIdx, qVal, math.max(k * entry.refine, k))
-          .queryExecution.optimizedPlan)
+        b.candidateIds(qIdx, qVal, k).queryExecution.optimizedPlan)
       quant.orElse(maxsim).orElse(bm25).orElse(sparse).getOrElse(gl)
 
+    // PROBE rewrite: the literal probe filter ([[Binding.Probe]]) first,
+    // else the executor-side probe subplan ([[Binding.ProbeDist]]).
     case s @ Sort(order, true, proj @ Project(fields, child), _)
         if order.nonEmpty =>
-      val rewritten = for {
-        key <- order.head match {
-          case SortOrder(k: Attribute, Ascending, _, _) => Some(k)
-          case _ => None
-        }
-        alias <- fields.collectFirst {
-          case a: Alias if a.exprId == key.exprId => a }
+      (for {
+        alias <- sortAlias(order, fields, Ascending)
         (vecAttr, q, metric) <- extractDist(alias.child)
-        entry <- AnnIndex.lookup(vecAttr.name)
-        if entry.metric == metric
-        // target leaf: the one that PRODUCES this sort's vector attribute
-        // (exprId match, so a same-named column on the other side of a
-        // join never confuses the rule) and exposes the cell column
-        leaf <- child.collectFirst {
-          case l: LeafNode if l.output.exists(_.exprId == vecAttr.exprId) &&
-              l.output.exists(_.name == entry.cellCol) => l
-        }
-        cellAttr = leaf.output.find(_.name == entry.cellCol).get
-        // idempotence: skip when a probe filter for THIS leaf's cell
-        // attribute already exists anywhere above — by tag (survives
-        // makeCopy/withNewChildren rewrites) or semantically as In/InSet
-        // on the same exprId (survives rules that rebuild the Filter).
-        // A user's own In-filter on the cell column also matches: they
-        // have pruned cells themselves, re-pruning could only hide rows.
-        if !child.exists {
-          case f: Filter =>
-            f.getTagValue(AnnTopKRule.Injected).isDefined ||
-              f.condition.exists {
-                case In(c: AttributeReference, _) => c.exprId == cellAttr.exprId
-                case InSet(c: AttributeReference, _) =>
-                  c.exprId == cellAttr.exprId
-                case _ => false
-              }
-          case _ => false
-        }
-      } yield {
-        val probes = entry.probeCells(q)
-        // literal type must match the column (partition columns read
-        // back as int) or the plan becomes unresolved post-analysis
-        val lits = probes.map { p =>
-          cellAttr.dataType match {
-            case org.apache.spark.sql.types.IntegerType =>
-              Literal(p.toInt)
-            case org.apache.spark.sql.types.ShortType =>
-              Literal(p.toShort)
-            case org.apache.spark.sql.types.StringType =>
-              Literal(p.toString)
-            case _ => Literal(p)
-          }
-        }
-        // place the filter directly above the target leaf —
-        // FileSourceStrategy then lifts it into PartitionFilters
-        var injected = false
-        val newChild = child.transformUp {
-          case l: LeafNode if !injected && (l fastEquals leaf) =>
-            injected = true
-            val probeFilter = Filter(In(cellAttr, lits), l)
-            probeFilter.setTagValue(AnnTopKRule.Injected, ())
-            probeFilter
-        }
-        if (injected) s.copy(child = proj.copy(child = newChild)) else s
-      }
-      // fallback: DISTRIBUTED probe selection (registerDistributed) —
-      // same recognition, but probe cells come from a semi-joined
-      // subplan over the centroids table instead of driver literals
-      lazy val distRewritten = for {
-        key <- order.head match {
-          case SortOrder(k: Attribute, Ascending, _, _) => Some(k)
-          case _ => None
-        }
-        alias <- fields.collectFirst {
-          case a: Alias if a.exprId == key.exprId => a }
-        (vecAttr, q, metric) <- extractDist(alias.child)
-        entry <- AnnIndex.lookupDist(vecAttr.name)
-        if entry.metric == metric
-        leaf <- child.collectFirst {
-          case l: LeafNode if l.output.exists(_.exprId == vecAttr.exprId) &&
-              l.output.exists(_.name == entry.cellCol) => l
-        }
-        cellAttr = leaf.output.find(_.name == entry.cellCol).get
-        if !hasCandidateSemiJoin(child, cellAttr)
-      } yield {
-        val candPlan = entry.probeCellsDf(q, cellAttr.dataType)
-          .queryExecution.optimizedPlan // pre-optimized — see inject()
-        val candId = candPlan.output.head
-        var injected = false
-        val newChild = child.transformUp {
-          case l: LeafNode if !injected && (l fastEquals leaf) =>
-            injected = true
-            // The semi-join alone bounds COMPUTE but not IO: on a
-            // partitionBy(cellCol) layout the scan would still read
-            // every cell directory, because Spark's own PartitionPruning
-            // rule only fires when the build side carries a selective
-            // Filter (a Sort+Limit probe subplan has none — and a no-op
-            // tautology predicate gets constant-folded away before the
-            // heuristic sees it). So inject the DynamicPruningSubquery
-            // ourselves — exactly the expression PartitionPruning would
-            // have placed, build side = the same probe subplan, with
-            // onlyInBroadcast=false so it executes as a plain
-            // in-subquery even if the join side is not broadcast
-            // (duplicated probe work = one scan of the tiny centroids
-            // table). CleanupDynamicPruningFilters drops the filter
-            // harmlessly when the leaf is not a pruning-capable scan
-            // (in-memory tables, non-partitioned layouts).
-            val pruned = Filter(
-              DynamicPruningSubquery(cellAttr, candPlan, Seq(candId),
-                Seq(0), onlyInBroadcast = false), l)
-            val j = Join(pruned, candPlan, LeftSemi,
-              Some(EqualTo(cellAttr, candId)),
-              org.apache.spark.sql.catalyst.plans.logical.JoinHint.NONE)
-            j.setTagValue(AnnTopKRule.InjectedQuant, ())
-            j
-        }
-        if (injected) s.copy(child = proj.copy(child = newChild)) else s
-      }
-      rewritten.orElse(distRewritten).getOrElse(s)
+        bound = AnnIndex.lookup(vecAttr.name)
+        planted <- bound
+          .collectFirst { case b: Binding.Probe if b.metric == metric => b }
+          .flatMap(b => plantCut(child, vecAttr, b.cellCol)(
+            cellFiltered(child, _))(c => cellFilter(c, b.probeCells(q))))
+          .orElse(bound
+            .collectFirst {
+              case b: Binding.ProbeDist if b.metric == metric => b }
+            .flatMap(b => plantCut(child, vecAttr, b.cellCol)(
+              hasCandidateSemiJoin(child, _))(c =>
+              cellSemiJoin(c, b.probeCellsDf(q.toSeq, c.dataType)))))
+      } yield s.copy(child = proj.copy(child = planted))).getOrElse(s)
 
     // RANGE rewrite: a plain `filter(round(dist(vec, qLit), s) <= eps)`
-    // over a table with a registered range index gets the EXACT
-    // radii-based cell filter injected above its leaf — provably-empty
-    // cell directories leave the scan, results never change (the one
+    // over a table with a bound range index gets the EXACT radii-based
+    // cell cut injected above its leaf — provably-empty cell
+    // directories leave the scan, results never change (the one
     // rewrite here with no approximation contract at all). The eps
     // conjunct may sit anywhere in a conjunction; other conjuncts
     // (user predicates) are untouched and compose as PushedFilters.
+    // The literal cut ([[Binding.Range]]) first, else the same cut
+    // computed by a subplan over the (centroid, radius) side table
+    // ([[Binding.RangeDist]]: LeftSemi bounds compute, the planted
+    // DynamicPruningSubquery bounds IO).
     case f @ Filter(cond, child) =>
-      def conjuncts(e: Expression): Seq[Expression] = e match {
-        case And(l, r) => conjuncts(l) ++ conjuncts(r)
-        case other => Seq(other)
-      }
-      def litDouble(e: Expression): Option[Double] = e match {
-        case Literal(v: Double, _) => Some(v)
-        case Literal(v: Float, _) => Some(v.toDouble)
-        case Literal(v: Int, _) => Some(v.toDouble)
-        case Literal(v: Long, _) => Some(v.toDouble)
-        case Literal(d: org.apache.spark.sql.types.Decimal, _) =>
-          Some(d.toDouble)
-        case _ => None
-      }
+      // fp headroom under the query's own rounding: a rounded distance
+      // can sit up to one unit of its last digit below the true one
       def roundSlack(e: Expression): Double = e match {
         case r: Round => r.scale match {
           case Literal(s: Int, _) => math.pow(10.0, -s)
@@ -1556,117 +1216,31 @@ case class AnnTopKRule() extends Rule[LogicalPlan] {
         }
         case _ => 1.0e-9 // unrounded distance: fp-noise headroom only
       }
-      val rewritten = for {
-        (distE, eps) <- conjuncts(cond).collectFirst(Function.unlift {
-          case LessThanOrEqual(d, l) if extractDist(d).isDefined =>
-            litDouble(l).map((d, _))
-          case LessThan(d, l) if extractDist(d).isDefined =>
-            litDouble(l).map((d, _))
-          case _ => None
-        })
+      (for {
+        (distE, eps) <- rangeConjunct(cond)
         (vecAttr, q, metric) <- extractDist(distE)
-        entry <- AnnIndex.lookupRange(vecAttr.name)
-        if entry.metric == metric
-        leaf <- (child +: child.collect { case n => n }).collectFirst {
-          case l: LeafNode if l.output.exists(_.exprId == vecAttr.exprId) &&
-              l.output.exists(_.name == entry.cellCol) => l
-        }
-        cellAttr = leaf.output.find(_.name == entry.cellCol).get
-        // idempotence: an injected (or user-planted) In/InSet on this
-        // cell attribute anywhere below means pruning already happened
-        if !f.exists {
-          case pf: Filter =>
-            pf.getTagValue(AnnTopKRule.Injected).isDefined ||
-              (!(pf fastEquals f) && pf.condition.exists {
-                case In(c: AttributeReference, _) =>
-                  c.exprId == cellAttr.exprId
-                case InSet(c: AttributeReference, _) =>
-                  c.exprId == cellAttr.exprId
-                case _ => false
-              })
-          case _ => false
-        }
-      } yield {
-        val cells = entry.cellsFor(q, eps, roundSlack(distE))
-        val lits = cells.map { p =>
-          cellAttr.dataType match {
-            case org.apache.spark.sql.types.IntegerType => Literal(p.toInt)
-            case org.apache.spark.sql.types.ShortType => Literal(p.toShort)
-            case org.apache.spark.sql.types.StringType =>
-              Literal(p.toString)
-            case _ => Literal(p)
-          }
-        }
-        var injected = false
-        val newChild = child.transformUp {
-          case l: LeafNode if !injected && (l fastEquals leaf) =>
-            injected = true
-            val probeFilter = Filter(In(cellAttr, lits.toSeq), l)
-            probeFilter.setTagValue(AnnTopKRule.Injected, ())
-            probeFilter
-        }
-        if (injected) f.copy(child = newChild) else f
-      }
-      // EXECUTOR-SIDE range arm — the same exact radii cut computed by
-      // a subplan over the (centroid, radius) side table instead of
-      // driver-collected literals (the distRewritten recipe on the
-      // one rewrite with no approximation contract): LeftSemi bounds
-      // compute, the hand-planted DynamicPruningSubquery bounds IO.
-      lazy val rangeDistRewritten = for {
-        (distE, eps) <- conjuncts(cond).collectFirst(Function.unlift {
-          case LessThanOrEqual(d, l) if extractDist(d).isDefined =>
-            litDouble(l).map((d, _))
-          case LessThan(d, l) if extractDist(d).isDefined =>
-            litDouble(l).map((d, _))
-          case _ => None
-        })
-        (vecAttr, q, metric) <- extractDist(distE)
-        entry <- AnnIndex.lookupRangeDist(vecAttr.name)
-        if entry.metric == metric
-        leaf <- (child +: child.collect { case n => n }).collectFirst {
-          case l: LeafNode if l.output.exists(_.exprId == vecAttr.exprId) &&
-              l.output.exists(_.name == entry.cellCol) => l
-        }
-        cellAttr = leaf.output.find(_.name == entry.cellCol).get
-        if !hasCandidateSemiJoin(child, cellAttr)
-        // the literal range arm's work also counts: a vecCol registered
-        // in BOTH range registries would otherwise get a redundant
-        // LeftSemi + DynamicPruningSubquery stacked on the already-
-        // injected literal cell filter on a second rule application —
-        // results stay exact but the admitted-cells subplan runs for
-        // nothing
-        if !f.exists {
-          case pf: Filter =>
-            pf.getTagValue(AnnTopKRule.Injected).isDefined ||
-              (!(pf fastEquals f) && pf.condition.exists {
-                case In(c: AttributeReference, _) =>
-                  c.exprId == cellAttr.exprId
-                case InSet(c: AttributeReference, _) =>
-                  c.exprId == cellAttr.exprId
-                case _ => false
-              })
-          case _ => false
-        }
-      } yield {
-        val candPlan = entry.admittedCellsDf(q, eps, roundSlack(distE),
-          cellAttr.dataType).queryExecution.optimizedPlan
-        val candId = candPlan.output.head
-        var injected = false
-        val newChild = child.transformUp {
-          case l: LeafNode if !injected && (l fastEquals leaf) =>
-            injected = true
-            val pruned = Filter(
-              DynamicPruningSubquery(cellAttr, candPlan, Seq(candId),
-                Seq(0), onlyInBroadcast = false), l)
-            val j = Join(pruned, candPlan, LeftSemi,
-              Some(EqualTo(cellAttr, candId)),
-              org.apache.spark.sql.catalyst.plans.logical.JoinHint.NONE)
-            j.setTagValue(AnnTopKRule.InjectedQuant, ())
-            j
-        }
-        if (injected) f.copy(child = newChild) else f
-      }
-      rewritten.orElse(rangeDistRewritten).getOrElse(f)
+        bound = AnnIndex.lookup(vecAttr.name)
+        slack = roundSlack(distE)
+        planted <- bound
+          .collectFirst { case b: Binding.Range if b.metric == metric => b }
+          .flatMap(b => plantCut(child, vecAttr, b.cellCol)(
+            cellFiltered(f, _, Some(f)))(c =>
+            cellFilter(c, b.cellsFor(q, eps, slack))))
+          .orElse(bound
+            .collectFirst {
+              case b: Binding.RangeDist if b.metric == metric => b }
+            // the literal arm's work also counts: a column bound in
+            // BOTH range forms would otherwise get a redundant
+            // LeftSemi + DynamicPruningSubquery stacked on the already-
+            // injected literal cell filter on a second rule
+            // application — results stay exact but the admitted-cells
+            // subplan runs for nothing
+            .flatMap(b => plantCut(child, vecAttr, b.cellCol)(c =>
+              hasCandidateSemiJoin(child, c) ||
+                cellFiltered(f, c, Some(f)))(c =>
+              cellSemiJoin(c, b.admittedCellsDf(q, eps, slack,
+                c.dataType)))))
+      } yield f.copy(child = planted)).getOrElse(f)
   }
 }
 

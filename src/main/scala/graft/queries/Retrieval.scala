@@ -184,8 +184,8 @@ object Retrieval {
     val model = Ann.buildIvf(e, "label", "embedding")
     val index = Ann.buildIvfPq(e, "embedding", model, m = 8, Ann.L2)
     graft.plans.AnnIndex.install(s)
-    graft.plans.AnnIndex.registerPq("embedding", "vec_id", index,
-      Ann.L2, probes = 3, refine = 5)
+    graft.plans.AnnIndex.register(graft.plans.Binding.Quantized(
+      "embedding", "vec_id", () => index, Ann.L2, probes = 3, refine = 5))
     try {
       val df = e
         .withColumn("dist", round(org.apache.spark.sql.graft.VecExprs
@@ -197,7 +197,7 @@ object Retrieval {
         "pq rewrite did not engage")
       // materialize while the registration is live (see annRewriteStored)
       df.localCheckpoint(true)
-    } finally graft.plans.AnnIndex.unregisterQuantized("embedding")
+    } finally graft.plans.AnnIndex.unregister("embedding")
   }
 
   /** r41: batch IVF+PQ kNN join ([[Ann.knnJoinIvfPq]]) — the PQ member
@@ -387,8 +387,9 @@ object Retrieval {
     val model = Ann.buildIvf(e, "label", "embedding")
     val index = Ann.buildIvfPq(e, "embedding", model, m = 8, Ann.Cosine)
     graft.plans.AnnIndex.install(s)
-    graft.plans.AnnIndex.registerPq("embedding", "vec_id", index,
-      Ann.Cosine, probes = 3, refine = 5)
+    graft.plans.AnnIndex.register(graft.plans.Binding.Quantized(
+      "embedding", "vec_id", () => index, Ann.Cosine, probes = 3,
+      refine = 5))
     try {
       val df = e
         .withColumn("dist", round(org.apache.spark.sql.graft.VecExprs
@@ -400,7 +401,7 @@ object Retrieval {
         "spherical pq rewrite did not engage")
       // materialize while the registration is live (see annRewriteStored)
       df.localCheckpoint(true)
-    } finally graft.plans.AnnIndex.unregisterQuantized("embedding")
+    } finally graft.plans.AnnIndex.unregister("embedding")
   }
 
   /** r44: the COSINE batch IVF+PQ kNN join ([[Ann.knnJoinIvfPqCos]])
@@ -662,7 +663,9 @@ object Retrieval {
       .createTempDirectory("graft_ivf_store").toString
     Ann.writePartitioned(assigned, path)
     graft.plans.AnnIndex.install(s)
-    graft.plans.AnnIndex.register("embedding", model, Ann.L2, probes = 3)
+    val cents = model.collectedCentroids.toSeq
+    graft.plans.AnnIndex.register(graft.plans.Binding.Probe("embedding",
+      model.idCol, () => cents, Ann.L2, probes = 3))
     try {
       val q = qvec(s, d, 5)
       val df = s.read.parquet(path)
@@ -700,7 +703,9 @@ object Retrieval {
     Ann.writePartitioned(assigned, path)
     org.apache.spark.sql.graft.VecExprs.register(s)
     graft.plans.AnnIndex.install(s)
-    graft.plans.AnnIndex.register("embedding", model, Ann.L2, probes = 3)
+    val cents = model.collectedCentroids.toSeq
+    graft.plans.AnnIndex.register(graft.plans.Binding.Probe("embedding",
+      model.idCol, () => cents, Ann.L2, probes = 3))
     try {
       s.read.parquet(path).createOrReplaceTempView("graft_sql_emb")
       val qarr = qvecSeq(s, d, 5)
@@ -717,7 +722,7 @@ object Retrieval {
 
   /** Declarative DISTRIBUTED-probe rewrite gate: r09's semantics with
     * the probe cells computed by a semi-joined subplan over the
-    * centroids table ([[graft.plans.AnnIndex.registerDistributed]])
+    * centroids table ([[graft.plans.Binding.ProbeDist]])
     * instead of driver-side literals — the registration form that keeps
     * the rewrite available past the driver's centroid budget
     * (AnnRewrite.scala's documented ~10⁵-cell collect ceiling; at 10⁶
@@ -733,8 +738,9 @@ object Retrieval {
       .createTempDirectory("graft_ivf_dist").toString
     Ann.writePartitioned(assigned, path)
     graft.plans.AnnIndex.install(s)
-    graft.plans.AnnIndex.registerDistributed("embedding", model, Ann.L2,
-      probes = 3)
+    graft.plans.AnnIndex.register(graft.plans.Binding.ProbeDist(
+      "embedding", model.idCol, () => model.centroids, model.idCol,
+      model.vecCol, Ann.L2, probes = 3))
     try {
       val df = s.read.parquet(path)
         .withColumn("dist",
@@ -756,7 +762,7 @@ object Retrieval {
         "expected runtime partition pruning on the stored scan")
       // materialize while the registration is live (see annRewriteStored)
       df.localCheckpoint(true)
-    } finally graft.plans.AnnIndex.unregisterDistributed("embedding")
+    } finally graft.plans.AnnIndex.unregister("embedding")
   }
 
   /** Declarative QUANTIZED rewrite gate: a plain orderBy(dist).limit(k)
@@ -770,8 +776,8 @@ object Retrieval {
     val model = Ann.buildIvf(e, "label", "embedding")
     val index = Ann.buildIvfSq(e, "embedding", model, Ann.L2)
     graft.plans.AnnIndex.install(s)
-    graft.plans.AnnIndex.registerQuantized("embedding", "vec_id", index,
-      Ann.L2, probes = 3, refine = 5)
+    graft.plans.AnnIndex.register(graft.plans.Binding.Quantized(
+      "embedding", "vec_id", () => index, Ann.L2, probes = 3, refine = 5))
     try {
       val df = e
         .withColumn("dist", round(org.apache.spark.sql.graft.VecExprs
@@ -783,7 +789,7 @@ object Retrieval {
         "quantized rewrite did not engage")
       // materialize while the registration is live (see annRewriteStored)
       df.localCheckpoint(true)
-    } finally graft.plans.AnnIndex.unregisterQuantized("embedding")
+    } finally graft.plans.AnnIndex.unregister("embedding")
   }
 
   /** IVF + per-cell SQ on a COSINE index — the spherical build
@@ -811,8 +817,9 @@ object Retrieval {
     val model = Ann.buildIvf(e, "label", "embedding")
     val index = Ann.buildIvfSq(e, "embedding", model, Ann.Cosine)
     graft.plans.AnnIndex.install(s)
-    graft.plans.AnnIndex.registerQuantized("embedding", "vec_id", index,
-      Ann.Cosine, probes = 3, refine = 5)
+    graft.plans.AnnIndex.register(graft.plans.Binding.Quantized(
+      "embedding", "vec_id", () => index, Ann.Cosine, probes = 3,
+      refine = 5))
     try {
       val df = e
         .withColumn("dist", round(org.apache.spark.sql.graft.VecExprs
@@ -824,7 +831,7 @@ object Retrieval {
         "cosine quantized rewrite did not engage")
       // materialize while the registration is live (see annRewriteStored)
       df.localCheckpoint(true)
-    } finally graft.plans.AnnIndex.unregisterQuantized("embedding")
+    } finally graft.plans.AnnIndex.unregister("embedding")
   }
 
   /** Index maintenance on the AT-REST layout: write the r12 IVF+SQ
@@ -997,8 +1004,8 @@ object Retrieval {
     docs.write.mode("overwrite").parquet(dir)
     val stored = s.read.parquet(dir)
     graft.plans.AnnIndex.install(s)
-    graft.plans.AnnIndex.registerMaxsim("vecs", "label", () => stored,
-      refine = 3)
+    graft.plans.AnnIndex.register(graft.plans.Binding.Maxsim("vecs",
+      "label", () => stored, refine = 3))
     try {
       val df = stored
         .withColumn("score", round(org.apache.spark.sql.graft.VecExprs
@@ -1010,7 +1017,7 @@ object Retrieval {
         "maxsim rewrite did not engage")
       // materialize while the registration is live (see annRewriteStored)
       df.localCheckpoint(true)
-    } finally graft.plans.AnnIndex.unregisterMaxsim("vecs")
+    } finally graft.plans.AnnIndex.unregister("vecs")
   }
 
   /** Declarative INDEX-PRUNED maxsim — the multivec index's read path
@@ -1052,10 +1059,11 @@ object Retrieval {
     Ann.writePartitioned(assigned, dir)
     val stored = s.read.parquet(dir)
     graft.plans.AnnIndex.install(s)
-    graft.plans.AnnIndex.registerMaxsim("vecs", "vec_id", () => stored,
-      refine = 20, Some(graft.plans.AnnIndex.MaxsimIvf(
-        () => stored, "centroid_id", "mv_mean",
-        () => model.centroids, "centroid_id", "centroid", probes = 3)), owner = "")
+    graft.plans.AnnIndex.register(graft.plans.Binding.Maxsim("vecs",
+      "vec_id", () => stored, refine = 20,
+      Some(graft.plans.Binding.ProbeDist("mv_mean", "centroid_id",
+        () => model.centroids, "centroid_id", "centroid", Ann.Cosine,
+        probes = 3))))
     try {
       val df = stored
         .withColumn("score", round(org.apache.spark.sql.graft.VecExprs
@@ -1086,7 +1094,7 @@ object Retrieval {
           scanLines.mkString("\n"))
       // materialize while the registration is live (see annRewriteStored)
       df.localCheckpoint(true)
-    } finally graft.plans.AnnIndex.unregisterMaxsim("vecs")
+    } finally graft.plans.AnnIndex.unregister("vecs")
   }
 
   /** r33: batch maxsim query-log replay ([[Ann.maxsimBatch]]) — the
@@ -1169,8 +1177,8 @@ object Retrieval {
     val idx = Bm25.buildCached(documents(s, d), "doc_id", "text",
       s"$d|${Bm25.dirVersion(s, s"$d/documents.parquet")}")
     graft.plans.AnnIndex.install(s)
-    graft.plans.AnnIndex.registerBm25("text", "doc_id", () => idx,
-      refine = 2)
+    graft.plans.AnnIndex.register(graft.plans.Binding.Bm25("text",
+      "doc_id", () => idx, refine = 2))
     try {
       val df = documents(s, d)
         .withColumn("score",
@@ -1182,7 +1190,7 @@ object Retrieval {
         "bm25 rewrite did not engage")
       // materialize while the registration is live (see annRewriteStored)
       df.localCheckpoint(true)
-    } finally graft.plans.AnnIndex.unregisterBm25("text")
+    } finally graft.plans.AnnIndex.unregister("text")
   }
 
   /** BM25 over the AT-REST term-bucketed postings layout — the full
@@ -1326,10 +1334,10 @@ object Retrieval {
       .write.mode("overwrite").parquet(dir)
     val stored = s.read.parquet(dir)
     graft.plans.AnnIndex.install(s)
-    graft.plans.AnnIndex.registerSparse("si", "sv", "doc_id",
-      () => graft.functions.Sparse.invertedPostings(
+    graft.plans.AnnIndex.register(graft.plans.Binding.Sparse("si", "sv",
+      "doc_id", () => graft.functions.Sparse.invertedPostings(
         stored, "doc_id", "si", "sv"),
-      refine = 2)
+      refine = 2))
     try {
       val q = emb.embed(SparseQueryText)
       val df = stored.withColumn("score",
@@ -1341,7 +1349,7 @@ object Retrieval {
       require(df.queryExecution.optimizedPlan.toString.contains("LeftSemi"),
         "sparse rewrite did not engage")
       df.localCheckpoint(true)
-    } finally graft.plans.AnnIndex.unregisterSparse("si")
+    } finally graft.plans.AnnIndex.unregister("si")
   }
 
   /** r32: BATCH sparse search under the oracle — the query-log-replay
@@ -1492,7 +1500,9 @@ object Retrieval {
       .createTempDirectory("graft_fann_rw").toString
     Ann.writePartitioned(assigned, path)
     graft.plans.AnnIndex.install(s)
-    graft.plans.AnnIndex.register("embedding", model, Ann.L2, probes = 3)
+    val cents = model.collectedCentroids.toSeq
+    graft.plans.AnnIndex.register(graft.plans.Binding.Probe("embedding",
+      model.idCol, () => cents, Ann.L2, probes = 3))
     try {
       val df = s.read.parquet(path)
         .filter(col("label").isin(1, 3, 5))
@@ -1882,7 +1892,7 @@ object Retrieval {
   }
 
   /** r101: MAINTENANCE-AWARE declarative rewrite over a dense root
-    * ([[graft.plans.AnnIndex.registerDenseRoot]]) — the declarative
+    * ([[graft.plans.Binding.denseRoot]]) — the declarative
     * path made safe under the round's actuators: a frozen r09-style
     * registration snapshots centroids at install, so after a SPLIT it
     * keeps injecting the dissolved parent's cell id (an empty pruned
@@ -1924,8 +1934,8 @@ object Retrieval {
         .select(col("vec_id"),
           col("embedding").cast("array<double>"))
         .orderBy(col("vec_id")).head()
-      graft.plans.AnnIndex.registerDenseRoot(s, dir, probes = 4096,
-        owner = "r101")
+      graft.plans.AnnIndex.register(graft.plans.Binding.denseRoot(s, dir,
+        probes = 4096, owner = "r101"))
       val splits = Ann.splitOverfullCellsDense(s, dir,
         math.max(1L, maxOcc - 1))
       require(splits.contains(hotCell),
@@ -1935,8 +1945,8 @@ object Retrieval {
       // a frozen snapshot injects the dead parent cell and returns
       // nothing; the fingerprint-keyed resolver probes the live
       // sub-cell that now holds the row
-      graft.plans.AnnIndex.registerDenseRoot(s, dir, probes = 1,
-        owner = "r101")
+      graft.plans.AnnIndex.register(graft.plans.Binding.denseRoot(s, dir,
+        probes = 1, owner = "r101"))
       val near = declarative(
           typedlit(parentRow.getSeq[Double](1).toSeq))
         .localCheckpoint(true)
@@ -1946,8 +1956,8 @@ object Retrieval {
           "dissolved parent's row — the registration resolved a " +
           "STALE geometry")
       // oracled read: all-probe (4096 >= any cell count) = exact
-      graft.plans.AnnIndex.registerDenseRoot(s, dir, probes = 4096,
-        owner = "r101")
+      graft.plans.AnnIndex.register(graft.plans.Binding.denseRoot(s, dir,
+        probes = 4096, owner = "r101"))
       val df = declarative(qvec(s, d, 0))
       val phys = df.queryExecution.executedPlan.toString
       assertPartitionPruned(phys, "centroid_id",
@@ -1982,12 +1992,12 @@ object Retrieval {
   }
 
   /** r103: MAINTENANCE-AWARE declarative rewrite over a RANGE root
-    * ([[graft.plans.AnnIndex.registerRangeRoot]]) — r101's recipe on
+    * ([[graft.plans.Binding.rangeRoot]]) — r101's recipe on
     * the family where a frozen snapshot is sharpest: the range
     * rewrite is the ONE rewrite documented as never changing results
     * (the injected cell filter removes provably-empty directories
-    * only), but a frozen r62-style [[graft.plans.AnnIndex
-    * .registerRange]] snapshot taken before an out-of-band
+    * only), but a frozen r62-style [[graft.plans.Binding.Range]]
+    * snapshot taken before an out-of-band
     * [[Ann.splitOverfullCells]] keeps admitting the dissolved
     * parent's cell id — whose directory is GONE — while the live
     * sub-cells holding its rows are absent from the frozen list:
@@ -2010,8 +2020,8 @@ object Retrieval {
       .createTempDirectory("graft_range_rw_maint").toString
     Ann.writeRangeIndex(assigned, "embedding", model, dir)
     graft.plans.AnnIndex.install(s)
-    graft.plans.AnnIndex.registerRangeRoot(s, dir, "embedding",
-      owner = "r103")
+    graft.plans.AnnIndex.register(graft.plans.Binding.rangeRoot(s, dir,
+      "embedding", owner = "r103"))
     def declarative(q: org.apache.spark.sql.Column, eps: Double) =
       s.read.parquet(s"$dir/rows")
         .filter(col("label").isin(1, 3, 5) &&
@@ -2084,7 +2094,7 @@ object Retrieval {
       assertPartitionPruned(phys, "centroid_id",
         "maintained declarative range")
       df.localCheckpoint(true)
-    } finally graft.plans.AnnIndex.unregisterRange("embedding")
+    } finally graft.plans.AnnIndex.unregister("embedding")
   }
 
   /** r104: the r66 INDEX-HEALTH signal on a QUANTIZED root
@@ -2141,7 +2151,7 @@ object Retrieval {
   }
 
   /** r112: the MAINTENANCE-AWARE declarative rewrite at EXECUTOR-SIDE
-    * probe scale ([[graft.plans.AnnIndex.registerDenseRootDistributed]])
+    * probe scale ([[graft.plans.Binding.denseRootDistributed]])
     * — r101's staleness story on the registration that survives past
     * the driver's centroid-collect budget (~10⁵ cells): probe
     * selection is a semi-joined Sort+Limit subplan over the root's own
@@ -2162,8 +2172,8 @@ object Retrieval {
     Ann.writeDenseRoot(assigned, "embedding", model, Ann.L2, dir)
     graft.plans.AnnIndex.install(s)
     def reg(probes: Int): Unit =
-      graft.plans.AnnIndex.registerDenseRootDistributed(s, dir,
-        probes = probes, owner = "r112")
+      graft.plans.AnnIndex.register(graft.plans.Binding
+        .denseRootDistributed(s, dir, probes = probes, owner = "r112"))
     def declarative(q: org.apache.spark.sql.Column) = {
       val df = s.read.parquet(s"$dir/rows")
         .withColumn("dist",
@@ -2211,11 +2221,11 @@ object Retrieval {
           "centroids listing")
       reg(4096)
       declarative(qvec(s, d, 0)).localCheckpoint(true)
-    } finally graft.plans.AnnIndex.unregisterDistributed("embedding")
+    } finally graft.plans.AnnIndex.unregister("embedding")
   }
 
   /** r113: the EXECUTOR-SIDE range rewrite
-    * ([[graft.plans.AnnIndex.registerRangeRootDistributed]]) — r103's
+    * ([[graft.plans.Binding.rangeRootDistributed]]) — r103's
     * maintained story past the driver's collect budget: the admitted
     * cells come from a SUBPLAN over the root's own (centroid, radius)
     * side tables (`l2_dist(centroid, q) <= radius + eps + slack` —
@@ -2237,8 +2247,8 @@ object Retrieval {
       .createTempDirectory("graft_range_rw_dist").toString
     Ann.writeRangeIndex(assigned, "embedding", model, dir)
     graft.plans.AnnIndex.install(s)
-    graft.plans.AnnIndex.registerRangeRootDistributed(s, dir,
-      "embedding", owner = "r113")
+    graft.plans.AnnIndex.register(graft.plans.Binding
+      .rangeRootDistributed(s, dir, "embedding", owner = "r113"))
     def declarative(q: org.apache.spark.sql.Column, eps: Double) = {
       val df = s.read.parquet(s"$dir/rows")
         .filter(col("label").isin(1, 3, 5) &&
@@ -2303,7 +2313,7 @@ object Retrieval {
         "r113: post-split distributed range query lost the dissolved " +
           "parent's row")
       declarative(qvec(s, d, 9), 1.3).localCheckpoint(true)
-    } finally graft.plans.AnnIndex.unregisterRangeDistributed("embedding")
+    } finally graft.plans.AnnIndex.unregister("embedding")
   }
 
   /** r110: [[quantizedIndexHealth]]'s PQ arm — the audit reconstructs
@@ -2357,9 +2367,9 @@ object Retrieval {
   }
 
   /** r105: MAINTENANCE-AWARE declarative rewrite over a QUANTIZED
-    * root ([[graft.plans.AnnIndex.registerQuantizedRoot]]) — r101's
+    * root ([[graft.plans.Binding.quantizedRoot]]) — r101's
     * recipe for the SQ/PQ/1-bit family: the frozen r16-style
-    * [[graft.plans.AnnIndex.registerQuantized]](index) form holds
+    * `() => index` [[graft.plans.Binding.Quantized]] form holds
     * the INSTALL-TIME FILE LISTING, so after an out-of-band
     * [[Ann.splitOverfullCellsQuantized]] the dissolved parent's
     * files are gone (the probed scan dies on FileNotFound at best,
@@ -2383,8 +2393,9 @@ object Retrieval {
     Ann.ensureIvfSqRoot(s, dir, index, spherical = false)
     graft.plans.AnnIndex.install(s)
     def reg(probes: Int): Unit =
-      graft.plans.AnnIndex.registerQuantizedRoot(s, dir, "embedding",
-        "vec_id", probes = probes, refine = 5, owner = "r105")
+      graft.plans.AnnIndex.register(graft.plans.Binding.quantizedRoot(s,
+        dir, "embedding", "vec_id", probes = probes, refine = 5,
+        owner = "r105"))
     def declarative(q: org.apache.spark.sql.Column) = {
       val df = e
         .withColumn("dist", round(org.apache.spark.sql.graft.VecExprs
@@ -2462,13 +2473,13 @@ object Retrieval {
       // inheritance
       reg(4096)
       declarative(qvec(s, d, 11)).localCheckpoint(true)
-    } finally graft.plans.AnnIndex.unregisterQuantized("embedding")
+    } finally graft.plans.AnnIndex.unregister("embedding")
   }
 
   /** r106: MAINTENANCE-AWARE declarative rewrite over the COMPOSED
     * matryoshka-IVF root — the round's recipe completing the
     * declarative-registration matrix (dense r101, range r103,
-    * quantized r105): [[graft.plans.AnnIndex.registerMatryoshkaIvf]]
+    * quantized r105): [[graft.plans.Binding.matryoshkaIvf]]
     * now resolves centroids through a fingerprint-keyed cache
     * (collected once per maintenance re-pin, not once per rewrite —
     * and refusing torn roots through [[Ann.loadMrlIvfModel]]), so an
@@ -2489,8 +2500,9 @@ object Retrieval {
       dir)
     graft.plans.AnnIndex.install(s)
     def reg(probes: Int): Unit =
-      graft.plans.AnnIndex.registerMatryoshkaIvf("embedding", "vec_id",
-        dir, probes = probes, refine = 5, owner = "r106")
+      graft.plans.AnnIndex.register(graft.plans.Binding.matryoshkaIvf(
+        "embedding", "vec_id", dir, probes = probes, refine = 5,
+        owner = "r106"))
     def declarative(q: org.apache.spark.sql.Column) = {
       val df = e
         .withColumn("dist", round(org.apache.spark.sql.graft.VecExprs
@@ -2534,7 +2546,7 @@ object Retrieval {
       // oracled read: all probes = the flat prefix cut (r91)
       reg(4096)
       declarative(qvec(s, d, 3)).localCheckpoint(true)
-    } finally graft.plans.AnnIndex.unregisterQuantized("embedding")
+    } finally graft.plans.AnnIndex.unregister("embedding")
   }
 
   final case class EmbT(vec_id: Long, embedding: Seq[Double],
@@ -2711,7 +2723,7 @@ object Retrieval {
   /** r62: the DECLARATIVE range search — a plain
     * `filter(round(l2Dist(embedding, q), 6) <= eps AND label IN …)`
     * over the stored layout with a registered RANGE index
-    * ([[graft.plans.AnnIndex.registerRange]]): the optimizer injects
+    * ([[graft.plans.Binding.Range]]): the optimizer injects
     * the radii-based cell filter (EXACT — the one rewrite with no
     * approximation contract), which becomes `PartitionFilters` on the
     * cell directories, while the user predicate pushes into the same
@@ -2726,7 +2738,11 @@ object Retrieval {
     Ann.writePartitioned(assigned, path)
     val radii = Ann.cellRadii(assigned, "embedding", model, Ann.L2)
     graft.plans.AnnIndex.install(s)
-    graft.plans.AnnIndex.registerRange("embedding", model, radii, Ann.L2)
+    val rad = Ann.collectRadiiMap(model, radii)
+    val cents = model.collectedCentroids.toSeq
+      .map { case (id, c) => (id, c, rad.getOrElse(id, 0.0)) }
+    graft.plans.AnnIndex.register(graft.plans.Binding.Range("embedding",
+      model.idCol, Ann.L2, () => cents))
     try {
       val df = s.read.parquet(path)
         .filter(col("label").isin(1, 3, 5) &&
@@ -2743,7 +2759,7 @@ object Retrieval {
           .findFirstIn(phys).isDefined,
         s"declarative range did not push the label predicate:\n$phys")
       df.localCheckpoint(true)
-    } finally graft.plans.AnnIndex.unregisterRange("embedding")
+    } finally graft.plans.AnnIndex.unregister("embedding")
   }
 
   /** r63: COSINE range search at rest — the normalized-L2 reduction
@@ -3077,7 +3093,7 @@ object Retrieval {
   }
 
   /** r83: the composed DECLARATIVE rewrite
-    * ([[graft.plans.AnnIndex.registerMatryoshkaIvf]]) — r74's twin
+    * ([[graft.plans.Binding.matryoshkaIvf]]) — r74's twin
     * over the r78 layout: a plain `orderBy(l2_dist(embedding, q))
     * .limit(10)` plan rewrites into a LeftSemi against the
     * top-(k·refine) prefix-distance candidates read from the probed
@@ -3093,8 +3109,8 @@ object Retrieval {
     Ann.writeMatryoshkaIvf(e, "vec_id", "embedding", dims = 8, model,
       dir)
     graft.plans.AnnIndex.install(s)
-    graft.plans.AnnIndex.registerMatryoshkaIvf("embedding", "vec_id",
-      dir, probes = 3, refine = 5)
+    graft.plans.AnnIndex.register(graft.plans.Binding.matryoshkaIvf(
+      "embedding", "vec_id", dir, probes = 3, refine = 5))
     try {
       val df = e
         .withColumn("dist", round(org.apache.spark.sql.graft.VecExprs
@@ -3105,7 +3121,7 @@ object Retrieval {
       require(df.queryExecution.optimizedPlan.toString.contains("LeftSemi"),
         "matryoshka-IVF rewrite did not engage")
       df.localCheckpoint(true)
-    } finally graft.plans.AnnIndex.unregisterQuantized("embedding")
+    } finally graft.plans.AnnIndex.unregister("embedding")
   }
 
   /** r85: the composed matryoshka-IVF root's BATCH join form
@@ -3208,8 +3224,8 @@ object Retrieval {
       .createTempDirectory("graft_mrl_rw").toString
     Ann.writeMatryoshka(e, "vec_id", "embedding", dims = 8, dir)
     graft.plans.AnnIndex.install(s)
-    graft.plans.AnnIndex.registerMatryoshka("embedding", "vec_id", dir,
-      refine = 5)
+    graft.plans.AnnIndex.register(graft.plans.Binding.matryoshka(
+      "embedding", "vec_id", dir, refine = 5))
     try {
       val df = e
         .withColumn("dist", round(org.apache.spark.sql.graft.VecExprs
@@ -3220,7 +3236,7 @@ object Retrieval {
       require(df.queryExecution.optimizedPlan.toString.contains("LeftSemi"),
         "matryoshka rewrite did not engage")
       df.localCheckpoint(true)
-    } finally graft.plans.AnnIndex.unregisterQuantized("embedding")
+    } finally graft.plans.AnnIndex.unregister("embedding")
   }
 
   /** r73: the matryoshka BATCH query-log replay

@@ -880,6 +880,68 @@ class EngineSpec extends SparkSpecBase {
         quantized = true)
     }
   }
+
+  /** A built PChunk table named `name` with the given vector index —
+    * every such table shares the `vec` / `pid` column names. */
+  private def pchunkTable(name: String, ix: VectorIndex) = {
+    val sp = spark
+    import sp.implicits._
+    val td = TableDef[PChunk](name, primaryKey = Some("pid"),
+      indexes = Seq(ix), vectorDims = Map("vec" -> 2))
+    val reg = new Registry(spark,
+      Files.createTempDirectory(s"graft-engine-$name").toString)
+      .register(td)
+    reg.insert(td, (0 until 20).map { i =>
+      val base = if (i % 2 == 0) 0f else 10f
+      PChunk(i.toLong, s"t$i", Seq(base, base + i * 0.01f))
+    })
+    val eng = new Engine(reg)
+    eng.buildIndex(td)
+    (reg, td, eng)
+  }
+
+  test("installDeclarative refuses a second table's binding on shared " +
+      "column names even in another index family") {
+    val (_, tdA, engA) = pchunkTable("pcolplain",
+      VectorIndex("vec", Ann.L2, lists = 2))
+    val (_, tdB, engB) = pchunkTable("pcolsq",
+      VectorIndex("vec", Ann.L2, lists = 2, quantized = true))
+    engA.installDeclarative(tdA, probes = 1)
+    try {
+      // B's SQ candidate semi-join would otherwise hijack A's
+      // declarative orderBy(l2_dist(vec, q)).limit(k) plans
+      val ex = intercept[IllegalStateException] {
+        engB.installDeclarative(tdB, probes = 1)
+      }
+      assert(ex.getMessage.contains("collision") &&
+        ex.getMessage.contains("pcolplain"))
+    } finally {
+      engA.uninstallDeclarative(tdA)
+      engB.uninstallDeclarative(tdB)
+    }
+  }
+
+  test("uninstallDeclarative of one table keeps another table's " +
+      "bindings on the same column names") {
+    import org.apache.spark.sql.functions._
+    val (regA, tdA, engA) = pchunkTable("pcolkeep",
+      VectorIndex("vec", Ann.L2, lists = 2, quantized = true))
+    val (_, tdB, engB) = pchunkTable("pcoldrop",
+      VectorIndex("vec", Ann.L2, lists = 2, quantized = true))
+    engA.installDeclarative(tdA, probes = 1)
+    try {
+      engB.uninstallDeclarative(tdB)
+      val df = regA.table(tdA)
+        .withColumn("dist", round(org.apache.spark.sql.graft.VecExprs
+          .l2Dist(col("vec"), typedlit(Seq(0.0, 0.0))), 6))
+        .orderBy(col("dist").asc, col("pid").asc)
+        .limit(5).select("pid", "dist")
+      val optimized = df.queryExecution.optimizedPlan.toString
+      assert(optimized.contains("LeftSemi"),
+        s"table A's quantized rewrite must survive B's uninstall:\n" +
+          optimized)
+    } finally engA.uninstallDeclarative(tdA)
+  }
 }
 
 /** Payload-bearing fixture: a non-pk, non-vector column the projection

@@ -268,7 +268,10 @@ class AnnRangeSpec extends SparkSpecBase {
     Ann.writePartitioned(assigned, dir)
     val radii = Ann.cellRadii(assigned, "embedding", model, Ann.L2)
     graft.plans.AnnIndex.install(sp)
-    graft.plans.AnnIndex.registerRange("embedding", model, radii, Ann.L2)
+    val rad = Ann.collectRadiiMap(model, radii)
+    graft.plans.AnnIndex.register(graft.plans.Binding.Range("embedding",
+      model.idCol, Ann.L2, () => model.collectedCentroids.toSeq.map {
+        case (id, c) => (id, c, rad.getOrElse(id, 0.0)) }))
     try {
       val q = Seq(0.1, 0.1)
       def plan(eps: Double) = sp.read.parquet(dir)
@@ -305,7 +308,7 @@ class AnnRangeSpec extends SparkSpecBase {
           }
         case _ => false
       }, "cosine filter must not get L2 cell pruning")
-    } finally graft.plans.AnnIndex.unregisterRange("embedding")
+    } finally graft.plans.AnnIndex.unregister("embedding")
     // after unregister, the same plan gets no injection
     val df2 = sp.read.parquet(dir)
       .filter(round(org.apache.spark.sql.graft.VecExprs

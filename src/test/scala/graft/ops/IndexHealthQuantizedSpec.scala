@@ -166,12 +166,13 @@ class IndexHealthQuantizedSpec extends SparkSpecBase {
     val sp = spark
     val bogus = tmp("graft_rr_bogus")
     val err = intercept[IllegalArgumentException] {
-      graft.plans.AnnIndex.registerRangeRoot(sp, bogus, "embedding")
+      graft.plans.AnnIndex.register(graft.plans.Binding.rangeRoot(sp, bogus,
+        "embedding"))
     }
     assert(err.getMessage.contains("no radii side table"))
     val err2 = intercept[IllegalArgumentException] {
-      graft.plans.AnnIndex.registerRangeRootDistributed(sp, bogus,
-        "embedding")
+      graft.plans.AnnIndex.register(graft.plans.Binding.rangeRootDistributed(sp,
+        bogus, "embedding"))
     }
     assert(err2.getMessage.contains("no radii side table"))
   }
@@ -191,8 +192,8 @@ class IndexHealthQuantizedSpec extends SparkSpecBase {
     val pqDir = tmp("graft_root_pq")
     Ann.writeIvfPq(Ann.buildIvfPq(df, "embedding", model, 4, Ann.L2),
       pqDir)
-    graft.plans.AnnIndex.registerQuantizedRoot(sp, pqDir, "embedding",
-      "vec_id", probes = 2, refine = 5, owner = "spec")
+    graft.plans.AnnIndex.register(graft.plans.Binding.quantizedRoot(sp, pqDir,
+      "embedding", "vec_id", probes = 2, refine = 5, owner = "spec"))
     try {
       val decl = scan
         .withColumn("dist", round(org.apache.spark.sql.graft.VecExprs
@@ -204,14 +205,14 @@ class IndexHealthQuantizedSpec extends SparkSpecBase {
       val want = Ann.searchIvfPqStored(sp, pqDir, "vec_id", "embedding",
         q, Ann.L2, probes = 2, k = 5, refine = 5).collect().toSeq
       assert(decl.collect().toSeq == want)
-    } finally graft.plans.AnnIndex.unregisterQuantized("embedding")
+    } finally graft.plans.AnnIndex.unregister("embedding")
 
     val bqDir = tmp("graft_root_bq")
     Ann.writeIvfBitq(Ann.buildIvfBitq(df, "embedding", model, Ann.L2),
       bqDir)
     Ann.ensureIvfBitqRoot(sp, bqDir, model, spherical = false)
-    graft.plans.AnnIndex.registerQuantizedRoot(sp, bqDir, "embedding",
-      "vec_id", probes = 2, owner = "spec")
+    graft.plans.AnnIndex.register(graft.plans.Binding.quantizedRoot(sp, bqDir,
+      "embedding", "vec_id", probes = 2, owner = "spec"))
     try {
       val decl = scan
         .withColumn("dist", round(org.apache.spark.sql.graft.VecExprs
@@ -224,6 +225,6 @@ class IndexHealthQuantizedSpec extends SparkSpecBase {
         "embedding", typedlit(q), Ann.L2, probes = 2, k = 5)
         .collect().toSeq
       assert(decl.collect().toSeq == want)
-    } finally graft.plans.AnnIndex.unregisterQuantized("embedding")
+    } finally graft.plans.AnnIndex.unregister("embedding")
   }
 }

@@ -1731,8 +1731,8 @@ class OpsSpec extends SparkSpecBase {
     // the declarative rewrite serves l2_dist plans — a cosine root
     // must refuse at registration, not first query
     intercept[IllegalArgumentException] {
-      graft.plans.AnnIndex.registerMatryoshka("embedding", "vec_id",
-        dir)
+      graft.plans.AnnIndex.register(graft.plans.Binding.matryoshka("embedding",
+        "vec_id", dir))
     }
   }
 

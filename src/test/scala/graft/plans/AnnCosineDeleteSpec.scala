@@ -33,8 +33,8 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     val index = Ann.IvfSqIndex(built.quantized.persist(),
       built.bounds.persist(), built.model)
     AnnIndex.install(spark)
-    AnnIndex.registerQuantized("embedding", "vec_id", index, Ann.Cosine,
-      probes = 3, refine = 5)
+    AnnIndex.register(Binding.Quantized("embedding", "vec_id", () => index,
+      Ann.Cosine, probes = 3, refine = 5))
     try {
       val df = e
         .withColumn("dist", round(
@@ -55,7 +55,7 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
         val d = r(1).asInstanceOf[Double]; d >= 0.0 && d <= 2.0
       }))
     } finally {
-      AnnIndex.unregisterQuantized("embedding")
+      AnnIndex.unregister("embedding")
       index.quantized.unpersist(false)
       index.bounds.unpersist(false)
     }
@@ -68,8 +68,8 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     val built = Ann.buildIvfBitq(e, "embedding", model, Ann.Cosine)
     val index = Ann.IvfBitIndex(built.quantized.persist(), built.model)
     AnnIndex.install(spark)
-    AnnIndex.registerOneBit("embedding", "vec_id", index, Ann.Cosine,
-      probes = 3, refine = 5)
+    AnnIndex.register(Binding.Quantized("embedding", "vec_id", () => index,
+      Ann.Cosine, probes = 3, refine = 5))
     try {
       val df = e
         .withColumn("dist", round(
@@ -84,7 +84,7 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
         .select("vec_id", "dist").collect().map(_.toSeq).toSeq
       assert(df.collect().map(_.toSeq).toSeq === viaOp)
     } finally {
-      AnnIndex.unregisterQuantized("embedding")
+      AnnIndex.unregister("embedding")
       index.quantized.unpersist(false)
     }
   }
@@ -111,8 +111,8 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     val model = Ann.buildIvf(e, "label", "embedding")
     val index = Ann.buildIvfSq(e, "embedding", model, Ann.L2)
     intercept[IllegalArgumentException] {
-      AnnIndex.registerQuantized("embedding", "vec_id", index,
-        Ann.InnerProduct, probes = 3, refine = 5)
+      AnnIndex.register(Binding.Quantized("embedding", "vec_id", () => index,
+        Ann.InnerProduct, probes = 3, refine = 5))
     }
   }
 
@@ -135,8 +135,8 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     val model = Ann.buildIvf(after, "cell", "embedding")
     var current = Ann.buildIvfSq(before, "embedding", model, Ann.L2)
     AnnIndex.install(spark)
-    AnnIndex.registerQuantized("embedding", "vec_id", () => current,
-      Ann.L2, probes = 2, refine = 21, owner = "")
+    AnnIndex.register(Binding.Quantized("embedding", "vec_id", () => current,
+      Ann.L2, probes = 2, refine = 21, owner = ""))
     try {
       def topIds = after
         .withColumn("dist", round(
@@ -152,7 +152,7 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
       // the write path refreshes what the resolver returns -> visible
       current = Ann.buildIvfSq(after, "embedding", model, Ann.L2)
       assert(topIds.head === 20L)
-    } finally AnnIndex.unregisterQuantized("embedding")
+    } finally AnnIndex.unregister("embedding")
   }
 
   test("maxsim rewrite is a fixpoint on its own output") {
@@ -164,7 +164,7 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
       .toDF("doc_id", "mv").write.mode("overwrite").parquet(dir)
     val stored = spark.read.parquet(dir)
     AnnIndex.install(spark)
-    AnnIndex.registerMaxsim("mv", "doc_id", () => stored, refine = 4)
+    AnnIndex.register(Binding.Maxsim("mv", "doc_id", () => stored, refine = 4))
     try {
       val q: Seq[Seq[Double]] = Seq(Seq(1.0, 0.0))
       val df = stored
@@ -179,7 +179,7 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
       val twice = AnnTopKRule()(once)
       assert(once.fastEquals(twice),
         s"maxsim rewrite not idempotent:\nonce: $once\ntwice: $twice")
-    } finally AnnIndex.unregisterMaxsim("mv")
+    } finally AnnIndex.unregister("mv")
   }
 
   test("deleteStored rewrites only affected cells and removes emptied " +

@@ -25,7 +25,8 @@ class AnnRewriteSpec extends SparkSpecBase {
 
   test("registered index: sort+limit is rewritten to a probed scan") {
     val (_, model, dir) = setup()
-    AnnIndex.register("embedding", model, Ann.L2, probes = 3)
+    AnnIndex.register(Binding.Probe("embedding", model.idCol,
+        () => model.collectedCentroids.toSeq, Ann.L2, probes = 3))
     try {
       val stored = spark.read.parquet(dir)
       val df = stored
@@ -52,7 +53,8 @@ class AnnRewriteSpec extends SparkSpecBase {
   test("registerDistributed: probe cells from a semi-joined centroid " +
       "subplan — no driver-collected centroid literals in the plan") {
     val (_, model, dir) = setup()
-    AnnIndex.registerDistributed("embedding", model, Ann.L2, probes = 3)
+    AnnIndex.register(Binding.ProbeDist("embedding", model.idCol,
+      () => model.centroids, model.idCol, model.vecCol, Ann.L2, probes = 3))
     try {
       val stored = spark.read.parquet(dir)
       val df = stored
@@ -95,7 +97,7 @@ class AnnRewriteSpec extends SparkSpecBase {
       val once = AnnTopKRule()(df.queryExecution.analyzed)
       val twice = AnnTopKRule()(once)
       assert(once.fastEquals(twice))
-    } finally AnnIndex.unregisterDistributed("embedding")
+    } finally AnnIndex.unregister("embedding")
   }
 
   test("registerDistributed decouples the layout's cell column name: " +
@@ -118,14 +120,16 @@ class AnnRewriteSpec extends SparkSpecBase {
     // default registration assumes cellCol == centroid id col: the
     // mismatch means NO rewrite (the documented silent fallback —
     // semantics stay exact brute force, just unpruned)
-    AnnIndex.registerDistributed("embedding", model, Ann.L2, probes = 3)
+    AnnIndex.register(Binding.ProbeDist("embedding", model.idCol,
+      () => model.centroids, model.idCol, model.vecCol, Ann.L2, probes = 3))
     try assert(!query().queryExecution.optimizedPlan.toString
         .contains("LeftSemi"))
-    finally AnnIndex.unregisterDistributed("embedding")
+    finally AnnIndex.unregister("embedding")
     // the explicit-cellCol overload closes the gap: pruned plan
     // engages and equals the driver-side probe path over the same data
-    AnnIndex.registerDistributed("embedding", () => model.centroids,
-      model.idCol, model.vecCol, Ann.L2, probes = 3, cellCol = "cell")
+    AnnIndex.register(Binding.ProbeDist("embedding", "cell",
+      () => model.centroids, model.idCol, model.vecCol, Ann.L2,
+      probes = 3))
     try {
       val df = query()
       assert(df.queryExecution.optimizedPlan.toString.contains("LeftSemi"),
@@ -135,7 +139,7 @@ class AnnRewriteSpec extends SparkSpecBase {
         model, typedlit(q64), Ann.L2, probes = 3, k = 5)
         .select("vec_id", "dist").collect().map(_.toSeq).toSeq
       assert(got === viaOp)
-    } finally AnnIndex.unregisterDistributed("embedding")
+    } finally AnnIndex.unregister("embedding")
   }
 
   test("maxsim-IVF phase-2 DPP only engages when the re-rank leaf IS " +
@@ -167,17 +171,17 @@ class AnnRewriteSpec extends SparkSpecBase {
     // the no-IVF registration returns. Pre-guard, the rule planted the
     // probe DPP on the USER's centroid_id (all 999, never a probe id)
     // and the re-rank silently returned zero rows.
-    AnnIndex.registerMaxsim("vecs", "id", () => docs, refine = 20,
-      Some(AnnIndex.MaxsimIvf(() => assigned, "centroid_id", "mv_mean",
-        () => cents, "centroid_id", "centroid", probes = 2)), owner = "")
+    AnnIndex.register(Binding.Maxsim("vecs", "id", () => assigned,
+      refine = 20, Some(Binding.ProbeDist("mv_mean", "centroid_id",
+        () => cents, "centroid_id", "centroid", Ann.Cosine, probes = 2))))
     val withIvf =
       try query().localCheckpoint(true).collect().map(_.toSeq).toSeq
-      finally AnnIndex.unregisterMaxsim("vecs")
-    AnnIndex.registerMaxsim("vecs", "id", () => docs, refine = 20, None,
-      owner = "")
+      finally AnnIndex.unregister("vecs")
+    AnnIndex.register(Binding.Maxsim("vecs", "id", () => docs,
+      refine = 20))
     val without =
       try query().localCheckpoint(true).collect().map(_.toSeq).toSeq
-      finally AnnIndex.unregisterMaxsim("vecs")
+      finally AnnIndex.unregister("vecs")
     assert(withIvf.nonEmpty)
     assert(withIvf === without)
   }
@@ -190,7 +194,8 @@ class AnnRewriteSpec extends SparkSpecBase {
     // the raw parquet relation and is correctly left untouched
     val assigned = Ann.assign(e, "embedding", model, Ann.L2).persist()
     assigned.count()
-    AnnIndex.registerDistributed("embedding", model, Ann.L2, probes = 3)
+    AnnIndex.register(Binding.ProbeDist("embedding", model.idCol,
+      () => model.centroids, model.idCol, model.vecCol, Ann.L2, probes = 3))
     try {
       val df = assigned
         .withColumn("dist", round(
@@ -207,14 +212,15 @@ class AnnRewriteSpec extends SparkSpecBase {
         .select("vec_id", "dist").collect().map(_.toSeq).toSeq
       assert(df.collect().map(_.toSeq).toSeq === viaOp)
     } finally {
-      AnnIndex.unregisterDistributed("embedding")
+      AnnIndex.unregister("embedding")
       assigned.unpersist(false)
     }
   }
 
   test("rule is a fixpoint: re-applying to a rewritten plan is a no-op") {
     val (_, model, dir) = setup()
-    AnnIndex.register("embedding", model, Ann.L2, probes = 3)
+    AnnIndex.register(Binding.Probe("embedding", model.idCol,
+        () => model.collectedCentroids.toSeq, Ann.L2, probes = 3))
     try {
       val stored = spark.read.parquet(dir)
       val df = stored
@@ -264,7 +270,8 @@ class AnnRewriteSpec extends SparkSpecBase {
       val assigned = Ann.assign(docs, "embedding", model, Ann.L2)
       val dir = Files.createTempDirectory("graft-rewrite-ext").toString
       Ann.writePartitioned(assigned, dir)
-      AnnIndex.register("embedding", model, Ann.L2, probes = 12)
+      AnnIndex.register(Binding.Probe("embedding", model.idCol,
+        () => model.collectedCentroids.toSeq, Ann.L2, probes = 12))
       val q8 = (0 until 8).map(_ => 0.1)
       val df = s2.read.parquet(dir)
         .withColumn("dist", round(
@@ -322,8 +329,8 @@ class AnnRewriteSpec extends SparkSpecBase {
       built.bounds.persist(), model)
     // tight refine: were the rewrite to engage, the global top-10
     // candidates would shrink to ~1-2 rows under the 1-in-7 filter
-    AnnIndex.registerQuantized("embedding", "vec_id", index, Ann.L2,
-      probes = 3, refine = 2)
+    AnnIndex.register(Binding.Quantized("embedding", "vec_id", () => index,
+      Ann.L2, probes = 3, refine = 2))
     try {
       val df = e.filter(col("vec_id") % 7 === 0)
         .withColumn("dist", round(
@@ -346,7 +353,7 @@ class AnnRewriteSpec extends SparkSpecBase {
         .limit(5).select("vec_id", "dist")
       assert(bare.queryExecution.optimizedPlan.toString.contains("LeftSemi"))
     } finally {
-      AnnIndex.unregisterQuantized("embedding")
+      AnnIndex.unregister("embedding")
       index.quantized.unpersist(false)
       index.bounds.unpersist(false)
     }
@@ -355,15 +362,15 @@ class AnnRewriteSpec extends SparkSpecBase {
   test("resolver-backed plain registration re-resolves centroids per " +
       "plan; registration collisions across owners fail loudly") {
     var cents = Seq((0L, Array(0.0, 0.0)), (1L, Array(100.0, 100.0)))
-    AnnIndex.register("embedding", () => cents, "centroid_id", Ann.L2,
-      probes = 1, owner = "tableA")
+    AnnIndex.register(Binding.Probe("embedding", "centroid_id", () => cents,
+      Ann.L2, probes = 1, owner = "tableA"))
     try {
       // swapping the resolved centroids swaps the probed cell — no
       // re-register (the round-10 frozen-snapshot fix for plain IVF);
-      // exercised through the public Entry the rule consumes at plan
-      // time
+      // exercised through the public Probe binding the rule consumes
+      // at plan time
       def probe(): Seq[Long] =
-        AnnIndex.Entry("embedding", "centroid_id", () => cents, Ann.L2,
+        Binding.Probe("embedding", "centroid_id", () => cents, Ann.L2,
           1).probeCells(Array(90.0, 90.0))
       assert(probe() === Seq(1L))
       cents = Seq((0L, Array(90.0, 90.0)), (1L, Array(0.0, 0.0)))
@@ -372,14 +379,14 @@ class AnnRewriteSpec extends SparkSpecBase {
       // steal the registration (its candidates would hijack tableA's
       // declarative queries)
       val ex = intercept[IllegalStateException] {
-        AnnIndex.register("embedding", () => cents, "centroid_id",
-          Ann.L2, probes = 1, owner = "tableB")
+        AnnIndex.register(Binding.Probe("embedding", "centroid_id", () => cents,
+          Ann.L2, probes = 1, owner = "tableB"))
       }
       assert(ex.getMessage.contains("collision") &&
         ex.getMessage.contains("tableA"))
       // same owner = legitimate re-install, no error
-      AnnIndex.register("embedding", () => cents, "centroid_id",
-        Ann.L2, probes = 2, owner = "tableA")
+      AnnIndex.register(Binding.Probe("embedding", "centroid_id", () => cents,
+        Ann.L2, probes = 2, owner = "tableA"))
     } finally AnnIndex.unregister("embedding")
   }
 
@@ -387,25 +394,49 @@ class AnnRewriteSpec extends SparkSpecBase {
     val (e, model, _) = setup()
     val built = Ann.buildIvfSq(e, "embedding", model, Ann.L2)
     val index = Ann.IvfSqIndex(built.quantized, built.bounds, model)
-    AnnIndex.registerQuantized("embedding", "vec_id", () => index,
-      Ann.L2, probes = 3, refine = 5, owner = "tabA")
+    AnnIndex.register(Binding.Quantized("embedding", "vec_id", () => index,
+      Ann.L2, probes = 3, refine = 5, owner = "tabA"))
     try {
       val ex = intercept[IllegalStateException] {
-        AnnIndex.registerOneBit("embedding", "vec_id",
+        AnnIndex.register(Binding.Quantized("embedding", "vec_id",
           () => Ann.buildIvfBitq(e, "embedding", model, Ann.L2),
-          Ann.L2, probes = 3, refine = 5, owner = "tabB")
+          Ann.L2, probes = 3, refine = 5, owner = "tabB"))
       }
       assert(ex.getMessage.contains("collision"))
-    } finally AnnIndex.unregisterQuantized("embedding")
-    AnnIndex.registerMaxsim("vecs", "id", () => e, refine = 10, None,
-      owner = "tabA")
+    } finally AnnIndex.unregister("embedding")
+    AnnIndex.register(Binding.Maxsim("vecs", "id", () => e, refine = 10, None,
+      owner = "tabA"))
     try {
       val ex = intercept[IllegalStateException] {
-        AnnIndex.registerMaxsim("vecs", "id", () => e, refine = 10,
-          None, owner = "tabB")
+        AnnIndex.register(Binding.Maxsim("vecs", "id", () => e, refine = 10,
+          None, owner = "tabB"))
       }
       assert(ex.getMessage.contains("collision"))
-    } finally AnnIndex.unregisterMaxsim("vecs")
+    } finally AnnIndex.unregister("vecs")
+  }
+
+  test("registration collisions span families: another owner's SQ " +
+      "binding on a probe-bound column refuses") {
+    val (e, model, _) = setup()
+    val built = Ann.buildIvfSq(e, "embedding", model, Ann.L2)
+    AnnIndex.register(Binding.Probe("embedding", "centroid_id",
+      () => model.collectedCentroids.toSeq, Ann.L2, probes = 3,
+      owner = "tableA"))
+    try {
+      // tableB's candidate semi-join would hijack tableA's
+      // orderBy(l2_dist(embedding, q)).limit(k) plans
+      val ex = intercept[IllegalStateException] {
+        AnnIndex.register(Binding.Quantized("embedding", "vec_id",
+          () => built, Ann.L2, probes = 3, owner = "tableB"))
+      }
+      assert(ex.getMessage.contains("collision") &&
+        ex.getMessage.contains("tableA"))
+      assert(AnnIndex.lookup("embedding").map(_.owner) === List("tableA"))
+      // the same owner may bind a second family on its own column
+      AnnIndex.register(Binding.Quantized("embedding", "vec_id",
+        () => built, Ann.L2, probes = 3, owner = "tableA"))
+      assert(AnnIndex.lookup("embedding").size === 2)
+    } finally AnnIndex.unregister("embedding")
   }
 
   test("quantized (SQ) index: sort+limit becomes the two-phase " +
@@ -416,8 +447,8 @@ class AnnRewriteSpec extends SparkSpecBase {
     // codes, never the full-precision vector column
     val index = Ann.IvfSqIndex(built.quantized.persist(),
       built.bounds.persist(), model)
-    AnnIndex.registerQuantized("embedding", "vec_id", index, Ann.L2,
-      probes = 3, refine = 5)
+    AnnIndex.register(Binding.Quantized("embedding", "vec_id", () => index,
+      Ann.L2, probes = 3, refine = 5))
     try {
       val df = e
         .withColumn("dist", round(
@@ -441,7 +472,7 @@ class AnnRewriteSpec extends SparkSpecBase {
         .select("vec_id", "dist").collect().map(_.toSeq).toSeq
       assert(df.collect().map(_.toSeq).toSeq === viaOp)
     } finally {
-      AnnIndex.unregisterQuantized("embedding")
+      AnnIndex.unregister("embedding")
       index.quantized.unpersist(false)
       index.bounds.unpersist(false)
     }
@@ -452,8 +483,8 @@ class AnnRewriteSpec extends SparkSpecBase {
     val (e, model, _) = setup()
     val built = Ann.buildIvfBitq(e, "embedding", model, Ann.L2)
     val index = Ann.IvfBitIndex(built.quantized.persist(), model)
-    AnnIndex.registerOneBit("embedding", "vec_id", index, Ann.L2,
-      probes = 3, refine = 5)
+    AnnIndex.register(Binding.Quantized("embedding", "vec_id", () => index,
+      Ann.L2, probes = 3, refine = 5))
     try {
       val df = e
         .withColumn("dist", round(
@@ -470,7 +501,7 @@ class AnnRewriteSpec extends SparkSpecBase {
         .select("vec_id", "dist").collect().map(_.toSeq).toSeq
       assert(df.collect().map(_.toSeq).toSeq === viaOp)
     } finally {
-      AnnIndex.unregisterQuantized("embedding")
+      AnnIndex.unregister("embedding")
       index.quantized.unpersist(false)
     }
   }
@@ -482,15 +513,18 @@ class AnnRewriteSpec extends SparkSpecBase {
     val (e, model, _) = setup()
     val built = Ann.buildIvfBitq(e, "embedding", model, Ann.Cosine)
     val index = Ann.IvfBitIndex(built.quantized.persist(), model)
+    // the candidate multiplier the rewrite uses for the bound index
+    def refine = AnnIndex.lookup("embedding").collectFirst {
+      case b: Binding.Quantized => b.refineFor(b.resolve()) }
     try {
-      AnnIndex.registerOneBit("embedding", "vec_id", index, Ann.Cosine,
-        probes = 3) // refine unset = auto
-      assert(AnnIndex.lookupQuant("embedding").map(_.refine) === Some(40))
-      AnnIndex.registerOneBit("embedding", "vec_id", index, Ann.Cosine,
-        probes = 3, refine = 7) // explicit wins
-      assert(AnnIndex.lookupQuant("embedding").map(_.refine) === Some(7))
+      AnnIndex.register(Binding.Quantized("embedding", "vec_id",
+        () => index, Ann.Cosine, probes = 3)) // refine unset = auto
+      assert(refine === Some(40))
+      AnnIndex.register(Binding.Quantized("embedding", "vec_id",
+        () => index, Ann.Cosine, probes = 3, refine = 7)) // explicit wins
+      assert(refine === Some(7))
     } finally {
-      AnnIndex.unregisterQuantized("embedding")
+      AnnIndex.unregister("embedding")
       index.quantized.unpersist(false)
     }
   }
@@ -500,8 +534,8 @@ class AnnRewriteSpec extends SparkSpecBase {
     val built = Ann.buildIvfSq(e, "embedding", model, Ann.L2)
     val index = Ann.IvfSqIndex(built.quantized.persist(),
       built.bounds.persist(), model)
-    AnnIndex.registerQuantized("embedding", "vec_id", index, Ann.L2,
-      probes = 3, refine = 5)
+    AnnIndex.register(Binding.Quantized("embedding", "vec_id", () => index,
+      Ann.L2, probes = 3, refine = 5))
     try {
       val df = e
         .withColumn("dist", round(
@@ -515,7 +549,7 @@ class AnnRewriteSpec extends SparkSpecBase {
       assert(once.fastEquals(twice),
         s"quantized rewrite not idempotent:\nonce: $once\ntwice: $twice")
     } finally {
-      AnnIndex.unregisterQuantized("embedding")
+      AnnIndex.unregister("embedding")
       index.quantized.unpersist(false)
       index.bounds.unpersist(false)
     }
@@ -543,7 +577,8 @@ class AnnRewriteSpec extends SparkSpecBase {
 
   test("metric mismatch does not rewrite") {
     val (_, model, dir) = setup()
-    AnnIndex.register("embedding", model, Ann.L2, probes = 2)
+    AnnIndex.register(Binding.Probe("embedding", model.idCol,
+        () => model.collectedCentroids.toSeq, Ann.L2, probes = 2))
     try {
       val stored = spark.read.parquet(dir)
       val df = stored
@@ -563,7 +598,8 @@ class AnnRewriteSpec extends SparkSpecBase {
     // plain IVF registration: filter + orderBy + limit → probe filter
     // injected ON TOP of the user predicate, result equals the explicit
     // filtered stored search
-    AnnIndex.register("embedding", model, Ann.L2, probes = 3)
+    AnnIndex.register(Binding.Probe("embedding", model.idCol,
+        () => model.collectedCentroids.toSeq, Ann.L2, probes = 3))
     try {
       val df = spark.read.parquet(dir)
         .filter(col("vec_id") >= 100)
@@ -589,8 +625,8 @@ class AnnRewriteSpec extends SparkSpecBase {
     // the candidate injection (budgets are unfiltered-corpus-sized) and
     // the untouched exact plan must return the true filtered top-k
     val idx = Ann.buildIvfSq(e, "embedding", model, Ann.L2)
-    AnnIndex.registerQuantized("embedding", "vec_id", idx, Ann.L2,
-      probes = 3, refine = 5)
+    AnnIndex.register(Binding.Quantized("embedding", "vec_id", () => idx,
+      Ann.L2, probes = 3, refine = 5))
     try {
       val df = e.filter(col("vec_id") >= 100)
         .withColumn("dist", round(
@@ -606,7 +642,7 @@ class AnnRewriteSpec extends SparkSpecBase {
           "embedding", typedlit(q64), Ann.L2, 5)
         .select("vec_id", "dist").collect().map(_.toSeq).toSeq
       assert(df.collect().map(_.toSeq).toSeq === exact)
-    } finally AnnIndex.unregisterQuantized("embedding")
+    } finally AnnIndex.unregister("embedding")
   }
 
   test("matryoshka rewrite: LeftSemi against the prefix cut, result " +
@@ -621,7 +657,8 @@ class AnnRewriteSpec extends SparkSpecBase {
     val q = e.filter(col("vec_id") === 2)
       .select(col("embedding").cast("array<double>"))
       .head().getSeq[Double](0).toSeq
-    AnnIndex.registerMatryoshka("embedding", "vec_id", dir, refine = 4)
+    AnnIndex.register(Binding.matryoshka("embedding", "vec_id", dir,
+      refine = 4))
     try {
       val df = e.withColumn("dist",
           round(org.apache.spark.sql.graft.VecExprs
@@ -634,7 +671,7 @@ class AnnRewriteSpec extends SparkSpecBase {
           dims = 8, candidates = 20, k = 5)
         .collect().map(r => (r.getLong(0), r.getDouble(2)))
       assert(got.toSeq === want.toSeq)
-    } finally AnnIndex.unregisterQuantized("embedding")
+    } finally AnnIndex.unregister("embedding")
     // after unregister the same plan is untouched
     val plain = e.withColumn("dist",
         round(org.apache.spark.sql.graft.VecExprs
@@ -645,10 +682,11 @@ class AnnRewriteSpec extends SparkSpecBase {
     val bare = Files.createTempDirectory("graft-mrl-bare").toString
     e.limit(1).write.parquet(s"$bare/rows")
     intercept[IllegalStateException] {
-      AnnIndex.registerMatryoshka("embedding", "vec_id", bare)
+      AnnIndex.register(Binding.matryoshka("embedding", "vec_id", bare))
     }
     intercept[IllegalArgumentException] {
-      AnnIndex.registerMatryoshka("embedding", "vec_id", dir, refine = 0)
+      AnnIndex.register(Binding.matryoshka("embedding", "vec_id", dir,
+        refine = 0))
     }
   }
 
@@ -665,8 +703,8 @@ class AnnRewriteSpec extends SparkSpecBase {
     val q = e.filter(col("vec_id") === 2)
       .select(col("embedding").cast("array<double>"))
       .head().getSeq[Double](0).toSeq
-    AnnIndex.registerMatryoshkaIvf("embedding", "vec_id", dir,
-      probes = 2, refine = 4)
+    AnnIndex.register(Binding.matryoshkaIvf("embedding", "vec_id", dir,
+      probes = 2, refine = 4))
     try {
       val df = e.withColumn("dist",
           round(org.apache.spark.sql.graft.VecExprs
@@ -679,19 +717,19 @@ class AnnRewriteSpec extends SparkSpecBase {
           probes = 2, candidates = 20, k = 5)
         .collect().map(r => (r.getLong(0), r.getDouble(2)))
       assert(got.toSeq === want.toSeq)
-    } finally AnnIndex.unregisterQuantized("embedding")
+    } finally AnnIndex.unregister("embedding")
     // a cosine root refuses at REGISTER time (wrong reduction space
     // for an l2_dist plan)
     val cdir = Files.createTempDirectory("graft-mrlivf-rw-cos").toString
     Ann.writeMatryoshkaIvf(e, "vec_id", "embedding", 8, model, cdir,
       metric = Ann.Cosine)
     intercept[IllegalArgumentException] {
-      AnnIndex.registerMatryoshkaIvf("embedding", "vec_id", cdir)
+      AnnIndex.register(Binding.matryoshkaIvf("embedding", "vec_id", cdir))
     }
     // a dir with no composed marker refuses at register time too
     intercept[IllegalStateException] {
-      AnnIndex.registerMatryoshkaIvf("embedding", "vec_id",
-        Files.createTempDirectory("graft-mrlivf-rw-bare").toString)
+      AnnIndex.register(Binding.matryoshkaIvf("embedding", "vec_id",
+        Files.createTempDirectory("graft-mrlivf-rw-bare").toString))
     }
   }
 }

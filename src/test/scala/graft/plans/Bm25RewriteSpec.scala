@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** The declarative BM25 rewrite — keyword search as a plain
   * `orderBy(bm25_score.desc).limit(k)` plan ([[Bm25.scoreColumn]] +
-  * [[AnnIndex.registerBm25]]), the fourth query shape of the
+  * [[Binding.Bm25]]), the fourth query shape of the
   * declarative layer. */
 class Bm25RewriteSpec extends SparkSpecBase {
 
@@ -53,7 +53,7 @@ class Bm25RewriteSpec extends SparkSpecBase {
     // brute answer BEFORE registration (no rewrite installed)
     val brute = plan(3).collect().map(_.toSeq).toSeq
     AnnIndex.install(spark)
-    AnnIndex.registerBm25("text", "doc_id", () => idx, refine = 2)
+    AnnIndex.register(Binding.Bm25("text", "doc_id", () => idx, refine = 2))
     try {
       val df = plan(3)
       val opt = df.queryExecution.optimizedPlan
@@ -66,7 +66,7 @@ class Bm25RewriteSpec extends SparkSpecBase {
       assert(once.fastEquals(twice),
         s"bm25 rewrite not idempotent:\nonce: $once\ntwice: $twice")
     } finally {
-      AnnIndex.unregisterBm25("text")
+      AnnIndex.unregister("text")
       idx.postings.unpersist(false)
     }
   }
@@ -82,8 +82,10 @@ class Bm25RewriteSpec extends SparkSpecBase {
     val idxA = Bm25.build(a, "doc_id", "text")
     val idxB = Bm25.build(b, "cid", "text")
     AnnIndex.install(spark)
-    AnnIndex.registerBm25("text", "doc_id", () => idxA, refine = 2)
-    AnnIndex.registerBm25("text", "cid", () => idxB, refine = 2)
+    AnnIndex.register(Binding.Bm25("text", "doc_id", () => idxA,
+      refine = 2, owner = "tableA"))
+    AnnIndex.register(Binding.Bm25("text", "cid", () => idxB, refine = 2,
+      owner = "tableB"))
     try {
       def top(docs: org.apache.spark.sql.DataFrame, idx: Bm25.Bm25Index,
               id: String, k: Int) = docs
@@ -99,11 +101,11 @@ class Bm25RewriteSpec extends SparkSpecBase {
       assert(idsA.nonEmpty && idsA.subsetOf((1L to 8L).toSet))
       assert(dfB.collect().map(_.getLong(0)).toSeq === Seq(10L))
       // removing one table's registration leaves the other's live
-      AnnIndex.unregisterBm25("text", "cid")
+      AnnIndex.unregister("text", "tableB")
       assert(top(a, idxA, "doc_id", 3).queryExecution.optimizedPlan
         .toString.contains("LeftSemi"))
     } finally {
-      AnnIndex.unregisterBm25("text")
+      AnnIndex.unregister("text")
       idxA.postings.unpersist(false)
       idxB.postings.unpersist(false)
     }
@@ -113,22 +115,22 @@ class Bm25RewriteSpec extends SparkSpecBase {
       "loudly; same owner re-registers in place") {
     val docs = corpus
     val idx = Bm25.build(docs, "doc_id", "text")
-    AnnIndex.registerBm25("text", "doc_id", () => idx, refine = 2,
-      owner = "tableA")
+    AnnIndex.register(Binding.Bm25("text", "doc_id", () => idx, refine = 2,
+      owner = "tableA"))
     try {
       // same owner: replace in place, no error
-      AnnIndex.registerBm25("text", "doc_id", () => idx, refine = 3,
-        owner = "tableA")
+      AnnIndex.register(Binding.Bm25("text", "doc_id", () => idx, refine = 3,
+        owner = "tableA"))
       // different owner, same column names: silent "latest wins" would
       // serve tableA's queries from tableB's postings — throw instead
       val ex = intercept[IllegalStateException] {
-        AnnIndex.registerBm25("text", "doc_id", () => idx, refine = 2,
-          owner = "tableB")
+        AnnIndex.register(Binding.Bm25("text", "doc_id", () => idx, refine = 2,
+          owner = "tableB"))
       }
       assert(ex.getMessage.contains("tableA") &&
         ex.getMessage.contains("tableB"))
     } finally {
-      AnnIndex.unregisterBm25("text")
+      AnnIndex.unregister("text")
       idx.postings.unpersist(false)
     }
   }
@@ -139,14 +141,15 @@ class Bm25RewriteSpec extends SparkSpecBase {
     val idx = Bm25.build(docs, "doc_id", "text")
     val broken = idx.copy(postings =
       idx.postings.withColumnRenamed("id", "doc"))
-    AnnIndex.registerBm25("text", "doc_id", () => broken, refine = 2)
+    AnnIndex.register(Binding.Bm25("text", "doc_id", () => broken, refine = 2))
     try {
       val ex = intercept[IllegalArgumentException] {
-        AnnIndex.lookupBm25("text").head.candidateIds(Seq("shuffle"), 5)
+        AnnIndex.lookup("text").collectFirst { case b: Binding.Bm25 => b }
+          .get.candidateIds(Seq("shuffle"), 5)
       }
       assert(ex.getMessage.contains("'id'"))
     } finally {
-      AnnIndex.unregisterBm25("text")
+      AnnIndex.unregister("text")
       idx.postings.unpersist(false)
     }
   }

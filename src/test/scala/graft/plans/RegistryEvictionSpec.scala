@@ -5,7 +5,7 @@ import graft.ops.{Ann, Bm25, Dedup}
 import org.apache.spark.sql.functions._
 
 /** The README single-JVM-seams inventory, executable (VERDICT r11 #8):
-  * every driver-resident registry — [[AnnIndex]]'s per-family TrieMaps,
+  * every driver-resident registry — [[AnnIndex]]'s binding registry,
   * [[Bm25]]'s index cache, [[Dedup]]'s shingle/gate/pair memo caches,
   * [[graft.queries.GraphQ]]'s graph cache — must drain to exactly its
   * pre-test state after the matching unregister/clear sweep, so the
@@ -17,58 +17,64 @@ class RegistryEvictionSpec extends SparkSpecBase {
 
   test("AnnIndex registrations across all families unregister to empty") {
     val before = AnnIndex.hasAny
-    // one registration per family, all thunk-backed (resolvers run at
-    // rewrite time, never at registration) under spec-unique names
-    AnnIndex.register("ev_dense", () => Seq((0L, Array(0.0))),
-      "ev_cell", Ann.L2, 1, owner = "evspec")
-    AnnIndex.registerDistributed("ev_dist",
-      () => sys.error("never resolved"), "cid", "cent", Ann.L2, 1,
-      cellCol = "cid", owner = "evspec")
-    AnnIndex.registerQuantized("ev_sq", "id",
-      () => sys.error("never resolved"), Ann.L2, 1, 4, owner = "evspec")
-    AnnIndex.registerPq("ev_pq", "id",
-      () => sys.error("never resolved"), Ann.L2, 1, 4, owner = "evspec")
-    AnnIndex.registerMaxsim("ev_mv", "id",
-      () => sys.error("never resolved"), 10, None, owner = "evspec")
-    locally { // matryoshka needs a real marker root (read at register)
+    val never = () => sys.error("never resolved")
+    // matryoshka needs real marker roots (read by the factories)
+    def mrlRoot(marker: String) = {
       val dir = java.nio.file.Files
         .createTempDirectory("graft_ev_mrl").toString
-      graft.io.Markers.write(spark, dir, "_graft_matryoshka", "dims=2")
-      AnnIndex.registerMatryoshka("ev_mrl", "id", dir, owner = "evspec")
+      graft.io.Markers.write(spark, dir, marker, "dims=2")
+      dir
     }
-    AnnIndex.registerBm25("ev_text", "ev_id",
-      () => sys.error("never resolved"), owner = "evspec")
-    AnnIndex.registerSparse("ev_idx", "ev_val", "id",
-      () => sys.error("never resolved"), owner = "evspec")
-    locally {
-      val sp = spark
-      import sp.implicits._
-      val model = Ann.IvfModel(
-        Seq((0L, Seq(0.0))).toDF("centroid_id", "centroid"),
-        "centroid_id", "centroid")
-      AnnIndex.registerRange("ev_range", model,
-        Seq((0L, 0.0)).toDF("centroid_id", "radius"), Ann.L2,
-        owner = "evspec")
+    // one binding per Binding case — plus the 1-bit, PQ, IVF-composed
+    // and IVF-pruned variants — all thunk-backed (resolvers run at
+    // rewrite time, never at registration) under spec-unique names
+    val bindings: Seq[Binding] = Seq(
+      Binding.Probe("ev_dense", "ev_cell", () => Seq((0L, Array(0.0))),
+        Ann.L2, 1, owner = "evspec"),
+      Binding.ProbeDist("ev_dist", "cid", never, "cid", "cent", Ann.L2, 1,
+        owner = "evspec"),
+      Binding.Range("ev_range", "centroid_id", Ann.L2,
+        () => Seq((0L, Array(0.0), 0.0)), owner = "evspec"),
+      Binding.RangeDist("ev_range_dist", "centroid_id", never,
+        owner = "evspec"),
+      Binding.Quantized("ev_sq", "id", never, Ann.L2, 1, 4,
+        owner = "evspec"),
+      Binding.Quantized("ev_pq", "id", never, Ann.L2, 1, 4,
+        owner = "evspec"),
+      Binding.Quantized("ev_bit", "id", never, Ann.Cosine, 1,
+        owner = "evspec"),
+      Binding.matryoshka("ev_mrl", "id", mrlRoot("_graft_matryoshka"),
+        owner = "evspec"),
+      Binding.matryoshkaIvf("ev_mrl_ivf", "id",
+        mrlRoot("_graft_matryoshka_ivf"), owner = "evspec"),
+      Binding.Maxsim("ev_mv", "id", never, 10, owner = "evspec"),
+      Binding.Maxsim("ev_mv_ivf", "id", never, 10,
+        Some(Binding.ProbeDist("mv_mean", "centroid_id", never,
+          "centroid_id", "centroid", Ann.Cosine, 1)), owner = "evspec"),
+      Binding.Bm25("ev_text", "ev_id", never, owner = "evspec"),
+      Binding.Sparse("ev_idx", "ev_val", "id", never, owner = "evspec"))
+    // wildcard-free on purpose: a new Binding case makes this match
+    // non-exhaustive, so the spec must grow a registration for it
+    def family(b: Binding): String = b match {
+      case _: Binding.Probe => "Probe"
+      case _: Binding.ProbeDist => "ProbeDist"
+      case _: Binding.Range => "Range"
+      case _: Binding.RangeDist => "RangeDist"
+      case _: Binding.Quantized => "Quantized"
+      case _: Binding.Matryoshka => "Matryoshka"
+      case _: Binding.Maxsim => "Maxsim"
+      case _: Binding.Bm25 => "Bm25"
+      case _: Binding.Sparse => "Sparse"
     }
+    val cases = scala.reflect.runtime.universe.typeOf[Binding].typeSymbol
+      .asClass.knownDirectSubclasses.map(_.name.toString)
+    assert(bindings.map(family).toSet === cases,
+      "the spec must register one binding of every Binding case")
+    bindings.foreach(AnnIndex.register)
     assert(AnnIndex.hasAny, "registrations must be visible to the rule")
-    AnnIndex.unregister("ev_dense")
-    AnnIndex.unregisterDistributed("ev_dist")
-    AnnIndex.unregisterQuantized("ev_sq")
-    AnnIndex.unregisterQuantized("ev_pq")
-    AnnIndex.unregisterQuantized("ev_mrl")
-    AnnIndex.unregisterMaxsim("ev_mv")
-    AnnIndex.unregisterBm25("ev_text", "ev_id")
-    AnnIndex.unregisterSparse("ev_idx")
-    AnnIndex.unregisterRange("ev_range")
-    assert(AnnIndex.lookup("ev_dense").isEmpty &&
-      AnnIndex.lookupDist("ev_dist").isEmpty &&
-      AnnIndex.lookupQuant("ev_sq").isEmpty &&
-      AnnIndex.lookupQuant("ev_pq").isEmpty &&
-      AnnIndex.lookupQuant("ev_mrl").isEmpty &&
-      AnnIndex.lookupMaxsim("ev_mv").isEmpty &&
-      AnnIndex.lookupBm25("ev_text").isEmpty &&
-      AnnIndex.lookupSparse("ev_idx").isEmpty &&
-      AnnIndex.lookupRange("ev_range").isEmpty,
+    assert(bindings.forall(b => AnnIndex.lookup(b.column).contains(b)))
+    bindings.foreach(b => AnnIndex.unregister(b.column, b.owner))
+    assert(bindings.forall(b => AnnIndex.lookup(b.column).isEmpty),
       "every spec registration must be gone after its unregister")
     assert(AnnIndex.hasAny == before,
       "the sweep must restore the registries' pre-spec emptiness")

@@ -9,7 +9,7 @@ case class SparseDoc(doc_id: Long, si: Seq[Int], sv: Seq[Float],
 
 /** The declarative sparse rewrite — sparse top-k as a plain
   * `orderBy(sparse_dot_q.desc).limit(k)` plan ([[Sparse.scoreColumn]]
-  * + [[AnnIndex.registerSparse]]), completing the declarative layer's
+  * + [[Binding.Sparse]]), completing the declarative layer's
   * fourth search modality. */
 class SparseRewriteSpec extends SparkSpecBase {
 
@@ -64,25 +64,25 @@ class SparseRewriteSpec extends SparkSpecBase {
     val exact = topk(stored, q, 4).collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
     AnnIndex.install(spark)
-    AnnIndex.registerSparse("si", "sv", "doc_id",
+    AnnIndex.register(Binding.Sparse("si", "sv", "doc_id",
       () => Sparse.invertedPostings(stored, "doc_id", "si", "sv"),
-      refine = 2)
+      refine = 2))
     try {
       val df = topk(stored, q, 4)
       assert(df.queryExecution.optimizedPlan.toString.contains("LeftSemi"),
         "rewrite did not engage")
       assert(df.collect().map(r => (r.getLong(0), r.getDouble(1)))
         .toSeq === exact.toSeq)
-    } finally AnnIndex.unregisterSparse("si")
+    } finally AnnIndex.unregister("si")
   }
 
   test("a user filter between sort and leaf bails to the exact plan") {
     val stored = storedCorpus()
     val q = emb.embed("shuffle join window")
     AnnIndex.install(spark)
-    AnnIndex.registerSparse("si", "sv", "doc_id",
+    AnnIndex.register(Binding.Sparse("si", "sv", "doc_id",
       () => Sparse.invertedPostings(stored, "doc_id", "si", "sv"),
-      refine = 2)
+      refine = 2))
     try {
       val df = stored.filter(col("doc_id") > 4L)
         .withColumn("score",
@@ -93,7 +93,7 @@ class SparseRewriteSpec extends SparkSpecBase {
       assert(!df.queryExecution.optimizedPlan.toString.contains("LeftSemi"),
         "k-limited candidate budgets are unsound under a user filter")
       assert(df.collect().forall(_.getLong(0) > 4L))
-    } finally AnnIndex.unregisterSparse("si")
+    } finally AnnIndex.unregister("si")
   }
 
   test("a score over a DIFFERENT values column does not rewrite") {
@@ -113,9 +113,9 @@ class SparseRewriteSpec extends SparkSpecBase {
     val stored = spark.read.parquet(dir)
     val q = emb.embed("shuffle join")
     AnnIndex.install(spark)
-    AnnIndex.registerSparse("si", "sv", "doc_id",
+    AnnIndex.register(Binding.Sparse("si", "sv", "doc_id",
       () => Sparse.invertedPostings(stored, "doc_id", "si", "sv"),
-      refine = 2)
+      refine = 2))
     try {
       val df = stored.withColumn("score",
           round(Sparse.scoreColumn(col("si"), col("sv2"), q), 6))
@@ -131,7 +131,7 @@ class SparseRewriteSpec extends SparkSpecBase {
         .collect().map(_.getDouble(1))
       val viaSv2 = df.collect().map(_.getDouble(1))
       assert(viaSv2.toSeq === viaSv.map(_ * 2).toSeq)
-    } finally AnnIndex.unregisterSparse("si")
+    } finally AnnIndex.unregister("si")
   }
 
   test("Engine: a SparseIndex table searches imperatively AND " +
@@ -186,7 +186,7 @@ class SparseRewriteSpec extends SparkSpecBase {
         "Engine-registered sparse rewrite did not engage")
       assert(df.collect().map(r => (r.getLong(0), r.getDouble(1)))
         .toSeq === impPairs)
-    } finally AnnIndex.unregisterSparse("si")
+    } finally AnnIndex.unregister("si")
   }
 
   test("attachStoredIndex wires registry deletes to a sparse layout") {
@@ -223,16 +223,16 @@ class SparseRewriteSpec extends SparkSpecBase {
   }
 
   test("registration collisions across owners are refused") {
-    AnnIndex.registerSparse("si_x", "sv_x", "doc_id", () => storedCorpus(),
-      owner = "tableA")
+    AnnIndex.register(Binding.Sparse("si_x", "sv_x", "doc_id",
+      () => storedCorpus(), owner = "tableA"))
     try {
       intercept[IllegalStateException] {
-        AnnIndex.registerSparse("si_x", "sv_x", "doc_id", () => storedCorpus(),
-          owner = "tableB")
+        AnnIndex.register(Binding.Sparse("si_x", "sv_x", "doc_id",
+          () => storedCorpus(), owner = "tableB"))
       }
       // same owner re-registers in place
-      AnnIndex.registerSparse("si_x", "sv_x", "doc_id", () => storedCorpus(),
-        owner = "tableA")
-    } finally AnnIndex.unregisterSparse("si_x")
+      AnnIndex.register(Binding.Sparse("si_x", "sv_x", "doc_id",
+        () => storedCorpus(), owner = "tableA"))
+    } finally AnnIndex.unregister("si_x")
   }
 }
