@@ -97,11 +97,11 @@ object RecallSmoke {
             Map[Long, Set[Long]] =
           qVecs.map { case (q, v) => q -> search(v).toSet }.toMap
         rows += (("ivf_sq", probes, recallOf(perQuery(v =>
-          Ann.searchIvfSq(sq, "vec_id", "embedding", typedlit(v), metric,
+          Ann.searchQuantized(sq, "vec_id", "embedding", typedlit(v), metric,
               probes, k, sqRefine)
             .select("vec_id").collect().map(_.getLong(0)))), sqRefine))
         rows += (("ivf_bitq", probes, recallOf(perQuery(v =>
-          Ann.searchIvfBitq(bitq, "vec_id", "embedding", typedlit(v),
+          Ann.searchQuantized(bitq, "vec_id", "embedding", typedlit(v),
               metric, probes, k, bitqRefine)
             .select("vec_id").collect().map(_.getLong(0)))), bitqRefine))
       }

@@ -219,13 +219,13 @@ object ScaleSmoke {
         ops.Ann.L2)
       val dir = java.nio.file.Files
         .createTempDirectory("graft_smoke_knnpq").toString
-      ops.Ann.writeIvfPq(idx, dir)
-      val stored = ops.Ann.loadIvfPq(spark, dir)
+      ops.Ann.writeQuantized(idx, dir)
+      val stored = ops.Ann.loadQuantized(spark, dir)
       val queries = vecs.limit(1000)
         .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
       time("pq_knn_join_batch") {
-        val df = ops.Ann.knnJoinIvfPq(queries, "q_id", "qv", stored,
-          "vec_id", "embedding", probes = 4, k = 10)
+        val df = ops.Ann.knnJoinQuantized(queries, "q_id", "qv", stored,
+          "vec_id", "embedding", ops.Ann.L2, probes = 4, k = 10)
         val phys = df.queryExecution.executedPlan.toString
         val schemas = "ReadSchema: struct<([^>]*)>".r
           .findAllMatchIn(phys).map(_.group(1)).toSeq
@@ -353,7 +353,7 @@ object ScaleSmoke {
         iters = 1)
       val index = ops.Ann.buildIvfBitq(vecs, "embedding", model, ops.Ann.L2)
       val q = typedlit((0 until 64).map(i => 0.01 * i))
-      ops.Ann.searchIvfBitq(index, "vec_id", "embedding", q, ops.Ann.L2,
+      ops.Ann.searchQuantized(index, "vec_id", "embedding", q, ops.Ann.L2,
         probes = 8, k = 10, refine = 10).count()
     }
 
@@ -444,11 +444,11 @@ object ScaleSmoke {
       val index = ops.Ann.buildIvfSq(vecs, "embedding", model, ops.Ann.L2)
       val dir = java.nio.file.Files
         .createTempDirectory("graft_smoke_del").toString
-      ops.Ann.writeIvfSq(index, dir)
+      ops.Ann.writeQuantized(index, dir)
       val removed = ops.Ann.deleteStored(spark, s"$dir/quantized",
         col("vec_id") >= 10000000L && col("vec_id") < 20000000L)
       val q = typedlit((0 until 64).map(i => 0.01 * i))
-      ops.Ann.searchIvfSqStored(spark, dir, "vec_id", "embedding", q,
+      ops.Ann.searchQuantizedStored(spark, dir, "vec_id", "embedding", q,
         ops.Ann.L2, probes = 8, k = 10).count()
       removed
     }
@@ -1182,7 +1182,7 @@ object ScaleSmoke {
         ops.Ann.L2)
       val qmDir = java.nio.file.Files
         .createTempDirectory("graft_smoke_qmerge").toString
-      ops.Ann.writeIvfSq(qmIdx, qmDir)
+      ops.Ann.writeQuantized(qmIdx, qmDir)
       ops.Ann.ensureIvfSqRoot(spark, qmDir, qmIdx, spherical = false)
       val qmRows = spark.read.parquet(s"$qmDir/quantized")
       val (drainCell, _) = qmRows
@@ -1210,7 +1210,7 @@ object ScaleSmoke {
         val q = emb0.limit(1)
           .select(col("embedding").cast("array<double>"))
           .head().getSeq[Double](0).toSeq
-        val topn = ops.Ann.searchIvfSqStored(spark, qmDir, "vec_id",
+        val topn = ops.Ann.searchQuantizedStored(spark, qmDir, "vec_id",
           "embedding", typedlit(q), ops.Ann.L2, probes = 2, k = 10,
           refine = 5).count()
         require(topn == 10L, s"post-merge SQ top-10 got $topn")
@@ -1296,7 +1296,7 @@ object ScaleSmoke {
         ops.Ann.L2)
       val sqDir = java.nio.file.Files
         .createTempDirectory("graft_smoke_sqstream").toString
-      ops.Ann.writeIvfSq(sqIdx, sqDir)
+      ops.Ann.writeQuantized(sqIdx, sqDir)
       ops.Ann.ensureIvfSqRoot(spark, sqDir, sqIdx, spherical = false)
       val maxOcc = ops.Ann.assign(vecs, "embedding", sqModel, ops.Ann.L2)
         .groupBy(col("centroid_id")).count()
@@ -1547,7 +1547,7 @@ object ScaleSmoke {
         ops.Ann.L2)
       val sqDir = java.nio.file.Files
         .createTempDirectory("graft_smoke_apsq").toString
-      ops.Ann.writeIvfSq(sqIdx, sqDir)
+      ops.Ann.writeQuantized(sqIdx, sqDir)
       ops.Ann.ensureIvfSqRoot(spark, sqDir, sqIdx, spherical = false)
       // cell-drawn like the dense row: the claim is about TOUCHED
       // cells, so the batch must demonstrably touch few
@@ -1584,7 +1584,7 @@ object ScaleSmoke {
         val q = emb0.limit(1)
           .select(col("embedding").cast("array<double>"))
           .head().getSeq[Double](0).toSeq
-        val hits = ops.Ann.searchIvfSqStoredFresh(spark, sqDir,
+        val hits = ops.Ann.searchQuantizedStored(spark, sqDir,
           "vec_id", "embedding", typedlit(q), ops.Ann.L2, probes = 2,
           k = 10).count()
         require(hits == 10L, s"fresh-aware 16x search returned $hits")
@@ -1612,7 +1612,7 @@ object ScaleSmoke {
         ops.Ann.L2)
       val sfDir = java.nio.file.Files
         .createTempDirectory("graft_smoke_sqfresh").toString
-      ops.Ann.writeIvfSq(sfIdx, sfDir)
+      ops.Ann.writeQuantized(sfIdx, sfDir)
       ops.Ann.ensureIvfSqRoot(spark, sfDir, sfIdx, spherical = false)
       val grown = ops.Ann.appendQuantizedFreshIdempotent(spark, sfDir,
         freshPart, "vec_id", "embedding")
@@ -1626,7 +1626,7 @@ object ScaleSmoke {
         .select(col("embedding").cast("array<double>"))
         .head().getSeq[Double](0).toSeq
       time("search_quantized_fresh") {
-        val hits = ops.Ann.searchIvfSqStoredFresh(spark, sfDir,
+        val hits = ops.Ann.searchQuantizedStored(spark, sfDir,
           "vec_id", "embedding", typedlit(qv), ops.Ann.L2, probes = 2,
           k = 10).count()
         require(hits == 10L,
@@ -1695,7 +1695,7 @@ object ScaleSmoke {
           s"fresh encode input not probed-fraction-bounded: " +
             s"$probedFresh of $freshN under ${cells.length} of " +
             s"$cellCount probed cells")
-        val beforeFold = ops.Ann.searchIvfSqStoredFresh(spark, sfDir,
+        val beforeFold = ops.Ann.searchQuantizedStored(spark, sfDir,
             "vec_id", "embedding", typedlit(qv), ops.Ann.L2,
             probes = 2, k = 10)
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -1703,7 +1703,7 @@ object ScaleSmoke {
         require(ops.Ann.compactQuantizedFreshIfNeeded(spark, sfDir,
             "vec_id", "embedding", 0.25).contains(freshN),
           "policy did not fold the whole fresh side at 16x")
-        val afterFold = ops.Ann.searchIvfSqStored(spark, sfDir,
+        val afterFold = ops.Ann.searchQuantizedStored(spark, sfDir,
             "vec_id", "embedding", typedlit(qv), ops.Ann.L2,
             probes = 2, k = 10)
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq

@@ -51,30 +51,14 @@ final class Engine(reg: Registry) {
     // table and reaches them as a pk semi-join.
     def allowed(df: DataFrame): DataFrame =
       allowedBy(td, base, filter)(df)
+    val p = probesFor(ix.lists, probes)
     val ranked =
-      indexModel(td) match {
-        case Some(model) if ix.lists > 0 && ix.oneBit =>
-          val p = if (probes > 0) probes
-            else math.ceil(ix.lists / 16.0).toInt.max(1)
-          val idx = ivfBitqCached(td, ix, model)
-          Ann.searchIvfBitq(idx.copy(quantized = allowed(idx.quantized)),
-            td.pk, ix.column, q, ix.distance, p, topk,
-            autoBitqRefine(ix, refine))
-        case Some(model) if ix.lists > 0 && ix.quantized =>
-          val p = if (probes > 0) probes
-            else math.ceil(ix.lists / 16.0).toInt.max(1)
-          val idx = ivfSqCached(td, ix, model)
-          Ann.searchIvfSq(idx.copy(quantized = allowed(idx.quantized)),
-            td.pk, ix.column, q, ix.distance, p, topk,
-            autoSqRefine(refine))
-        case Some(model) if ix.lists > 0 && ix.pq > 0 =>
-          val p = if (probes > 0) probes
-            else math.ceil(ix.lists / 16.0).toInt.max(1)
-          val idx = ivfPqCached(td, ix, model)
-          Ann.searchIvfPq(idx.copy(encoded = allowed(idx.encoded)),
-            td.pk, ix.column, queryVec, ix.distance, p, topk,
-            autoSqRefine(refine))
-        case Some(model) if ix.lists > 0 && ix.mrlDims > 0 =>
+      (indexModel(td).filter(_ => ix.lists > 0), quantFamily(ix)) match {
+        case (Some(model), Some(fam)) =>
+          val idx = quantizedCached(td, ix, model, fam)
+          Ann.searchQuantized(idx.withRows(allowed(idx.rows)), td.pk,
+            ix.column, q, ix.distance, p, topk, autoRefine(fam, ix, refine))
+        case (Some(model), None) if ix.mrlDims > 0 =>
           // the COMPOSED index on the engine surface (the r78 shape
           // declaratively: cells prune first, the prefix cut runs
           // within probed cells, the re-rank at full precision) —
@@ -85,8 +69,6 @@ final class Engine(reg: Registry) {
           // monotone-equivalent to raw-cosine but not bit-identical on
           // floating-point near-ties; the two paths must pick the SAME
           // cells)
-          val p = if (probes > 0) probes
-            else math.ceil(ix.lists / 16.0).toInt.max(1)
           val (probeModel, qProbe) = ix.distance match {
             case Ann.Cosine =>
               (Ann.normalizeModel(model),
@@ -100,9 +82,7 @@ final class Engine(reg: Registry) {
           val cand = topk * (if (refine > 0) refine else 5)
           Ann.matryoshkaTopK(pruned, td.pk, ix.column, queryVec,
             ix.mrlDims, cand.max(topk), topk, metric = ix.distance)
-        case Some(model) if ix.lists > 0 =>
-          val p = if (probes > 0) probes
-            else math.ceil(ix.lists / 16.0).toInt.max(1)
+        case (Some(model), None) =>
           val assigned = assignedCached(td, ix, model)
           Ann.searchIvf(allowed(assigned), td.pk, ix.column, model, q,
             ix.distance, p, topk)
@@ -147,13 +127,26 @@ final class Engine(reg: Registry) {
         "left_semi")
   }
 
-  /** The engine-default exact-re-rank budgets, shared by
-    * [[searchByVector]] and [[installDeclarative]] so the declarative
-    * and imperative paths return identical results at defaults. */
-  private def autoSqRefine(refine: Int): Int =
-    if (refine > 0) refine else 8
-  private def autoBitqRefine(ix: VectorIndex, refine: Int): Int =
-    if (refine > 0) refine else Ann.defaultBitqRefine(ix.distance).max(8)
+  /** The engine-default exact-re-rank budget, shared by every
+    * quantized path so the declarative and imperative ones return
+    * identical results at defaults: 8, raised to the family's own
+    * default where that is larger (spherical 1-bit). */
+  private def autoRefine(fam: Ann.QuantFamily, ix: VectorIndex,
+                         refine: Int): Int =
+    if (refine > 0) refine else fam.defaultRefine(ix.distance).max(8)
+
+  /** The quantized family a vector index declares; the flags rank
+    * oneBit > quantized > pq. */
+  private def quantFamily(ix: VectorIndex): Option[Ann.QuantFamily] =
+    if (ix.oneBit) Some(Ann.Bitq)
+    else if (ix.quantized) Some(Ann.Sq)
+    else if (ix.pq > 0) Some(Ann.Pq)
+    else None
+
+  /** `probes` when given, else the reference's default ceil(lists/16)
+    * (client.py:285-292). */
+  private def probesFor(lists: Int, probes: Int): Int =
+    if (probes > 0) probes else math.ceil(lists / 16.0).toInt.max(1)
 
   /** BATCH dense top-k — the query-log replay form of
     * [[searchByVector]]: one distributed job for the whole query frame
@@ -162,7 +155,7 @@ final class Engine(reg: Registry) {
     * examples/anthropic.py:205-225, one `query_vec` per question).
     * Delegates to the already-oracled batch operators
     * ([[graft.ops.Ann.knnJoin]] exact, [[graft.ops.Ann.knnJoinIvf]] /
-    * `knnJoinIvfSq` / `knnJoinIvfPq(Cos)` / `knnJoinIvfBitq` under the
+    * [[graft.ops.Ann.knnJoinQuantized]] under the
     * table's declared index), so the per-query results are
     * bit-identical to `searchByVector`'s and the shuffle is
     * corpus-partitioned, never Q×driver. Matryoshka and composed
@@ -196,29 +189,14 @@ final class Engine(reg: Registry) {
     // per-family placement identical to searchByVector's
     def allowed(df: DataFrame): DataFrame =
       allowedBy(td, base, filter)(df)
-    def p = if (probes > 0) probes
-      else math.ceil(ix.lists / 16.0).toInt.max(1)
-    indexModel(td) match {
-      case Some(model) if ix.lists > 0 && ix.oneBit =>
-        val idx = ivfBitqCached(td, ix, model)
-        Ann.knnJoinIvfBitq(queries, qIdCol, qVecCol,
-          idx.copy(quantized = allowed(idx.quantized)), td.pk,
-          ix.column, ix.distance, p, topk, autoBitqRefine(ix, refine))
-      case Some(model) if ix.lists > 0 && ix.quantized =>
-        val idx = ivfSqCached(td, ix, model)
-        Ann.knnJoinIvfSq(queries, qIdCol, qVecCol,
-          idx.copy(quantized = allowed(idx.quantized)), td.pk,
-          ix.column, ix.distance, p, topk, autoSqRefine(refine))
-      case Some(model) if ix.lists > 0 && ix.pq > 0 =>
-        val idx = ivfPqCached(td, ix, model)
-        val fidx = idx.copy(encoded = allowed(idx.encoded))
-        if (ix.distance == Ann.Cosine)
-          Ann.knnJoinIvfPqCos(queries, qIdCol, qVecCol, fidx, td.pk,
-            ix.column, p, topk, autoSqRefine(refine))
-        else
-          Ann.knnJoinIvfPq(queries, qIdCol, qVecCol, fidx, td.pk,
-            ix.column, p, topk, autoSqRefine(refine))
-      case Some(model) if ix.lists > 0 && ix.mrlDims > 0 =>
+    val p = probesFor(ix.lists, probes)
+    (indexModel(td).filter(_ => ix.lists > 0), quantFamily(ix)) match {
+      case (Some(model), Some(fam)) =>
+        val idx = quantizedCached(td, ix, model, fam)
+        Ann.knnJoinQuantized(queries, qIdCol, qVecCol,
+          idx.withRows(allowed(idx.rows)), td.pk, ix.column, ix.distance,
+          p, topk, autoRefine(fam, ix, refine))
+      case (Some(model), None) if ix.mrlDims > 0 =>
         // the COMPOSED index's batch form — cells prune per query,
         // the prefix cut runs within each query's probed cells, the
         // re-rank at full precision; `refine` stays the candidate
@@ -227,7 +205,7 @@ final class Engine(reg: Registry) {
         Ann.knnJoinMrlIvf(queries, qIdCol, qVecCol,
           allowed(assignedCached(td, ix, model)), td.pk, ix.column,
           model, ix.mrlDims, ix.distance, p, cand.max(topk), topk)
-      case Some(model) if ix.lists > 0 =>
+      case (Some(model), None) =>
         Ann.knnJoinIvf(queries, qIdCol, qVecCol,
           allowed(assignedCached(td, ix, model)), td.pk, ix.column,
           model, ix.distance, p, topk)
@@ -273,12 +251,6 @@ final class Engine(reg: Registry) {
     // `filter`: the family contract (r60's maxsim member) — the
     // predicate thins the frames FEEDING phase 1, so disallowed docs
     // never consume refine/probe candidate slots; scoring unchanged
-    def allowedF(df: DataFrame): DataFrame = filter match {
-      case None => df
-      case Some(pred) =>
-        df.join(base.filter(pred).select(col(td.pk)), Seq(td.pk),
-          "left_semi")
-    }
     val q = typedlit(queryVecs)
     val dim = queryVecs.head.length
     val centroid = Ann.queryCentroid(queryVecs)
@@ -292,17 +264,16 @@ final class Engine(reg: Registry) {
       ix <- mvIx if ix.lists > 0 && rf > 0
       model <- mvIndexModel(td)
     } yield {
-      val p = if (probes > 0) probes
-        else math.ceil(ix.lists / 16.0).toInt.max(1)
       val ids = Ann.maxsimCandidatesIvf(
-          allowedF(mvAssignedCached(td, ix, model)),
-          td.pk, MvMeanCol, model, queryVecs, rf, p)
+          allowedBy(td, base, filter)(mvAssignedCached(td, ix, model)),
+          td.pk, MvMeanCol, model, queryVecs, rf,
+          probesFor(ix.lists, probes))
         .withColumnRenamed(td.pk, "__cand_id")
       base.join(broadcast(ids), col(td.pk) === col("__cand_id"),
         "left_semi")
     }
     // base filters directly (the searchByVector idiom — pred names
-    // base's own columns, so it pushes into the scan); allowedF is
+    // base's own columns, so it pushes into the scan); allowedBy is
     // only for the ASSIGNED frame, which lacks the predicate columns
     val baseAllowed = filter.fold(base)(base.filter)
     val candidates = ivfPhase1.getOrElse {
@@ -504,11 +475,7 @@ final class Engine(reg: Registry) {
     td.vectorIndex.filter(_.lists > 0).foreach { ix =>
       val base = reg.table(td)
       val model = Ann.buildIvfKMeans(base, ix.column, ix.lists, ix.distance)
-      val t = s"${td.name}__ivf"
-      val seg = reg.catalog.writeSegment(s"${reg.namespace}_$t",
-        model.centroids)
-      reg.catalog.commit(reg.catalog.current +
-        (s"${reg.namespace}_$t" -> Vector(seg)))
+      writeSideModel(td, "__ivf", model)
     }
     // multivec IVF (the reference's vector_maxsim_ops index with
     // `lists`, spec.py:447-464): KMeans over the per-doc token means,
@@ -523,11 +490,56 @@ final class Engine(reg: Registry) {
       val dim = mvDim(td, ix.column)
       val (_, model) = Ann.buildMaxsimIvf(reg.table(td), ix.column, dim,
         ix.lists, MvMeanCol)
-      val t = s"${td.name}__mvivf"
-      val seg = reg.catalog.writeSegment(s"${reg.namespace}_$t",
-        model.centroids)
-      reg.catalog.commit(reg.catalog.current +
-        (s"${reg.namespace}_$t" -> Vector(seg)))
+      writeSideModel(td, "__mvivf", model)
+    }
+  }
+
+  /** Commit `model`'s centroids as the table's `<table><suffix>` side
+    * table — the catalog table [[sideModel]] reads back. */
+  private def writeSideModel(td: TableDef[_], suffix: String,
+                             model: Ann.IvfModel): Unit = {
+    val t = s"${reg.namespace}_${td.name}$suffix"
+    val seg = reg.catalog.writeSegment(t, model.centroids)
+    reg.catalog.commit(reg.catalog.current + (t -> Vector(seg)))
+  }
+
+  /** An installable model, validated at INSTALL (not first query): the
+    * catalog side table is read back as (centroid_id: long,
+    * centroid: array<double>) — a model with other column names or
+    * types would install fine and NPE in the first search's centroid
+    * collect, far from the mistake; it must carry exactly `lists`
+    * cells (a mismatched install would silently skew the auto-probe
+    * arithmetic, probes = lists/16, and misdescribe the layout); and
+    * the dimension pinned for `dimCol` must match the centroids' (a
+    * wrong-space install would rank every assignment in garbage). */
+  private def requireInstallable(td: TableDef[_], model: Ann.IvfModel,
+                                 lists: Int, dimCol: String): Unit = {
+    require(model.idCol == "centroid_id" && model.vecCol == "centroid",
+      s"${td.name}: install needs canonical model columns " +
+        s"(centroid_id, centroid) — got (${model.idCol}, " +
+        s"${model.vecCol}); rename before installing")
+    val sch = model.centroids.schema
+    val okTypes = sch.fields.exists(f => f.name == "centroid_id" &&
+        f.dataType == org.apache.spark.sql.types.LongType) &&
+      sch.fields.exists(f => f.name == "centroid" &&
+        (f.dataType match {
+          case org.apache.spark.sql.types.ArrayType(
+            org.apache.spark.sql.types.DoubleType, _) => true
+          case _ => false
+        }))
+    require(okTypes,
+      s"${td.name}: install needs centroid_id: bigint and " +
+        s"centroid: array<double> — got ${sch.simpleString}")
+    val n = model.centroids.count()
+    require(n == lists,
+      s"${td.name}: model carries $n cells but the index declares " +
+        s"lists=$lists — the auto-probe arithmetic would skew")
+    td.vectorDims.get(dimCol).foreach { dim =>
+      val clen = model.centroids
+        .select(size(col("centroid"))).head().getInt(0)
+      require(clen == dim,
+        s"${td.name}: centroids have $clen dims but $dimCol declares " +
+          s"$dim — wrong embedding space")
     }
   }
 
@@ -547,45 +559,8 @@ final class Engine(reg: Registry) {
     require(ix.lists > 0,
       s"${td.name}: installIndexModel needs lists > 0 (a flat index " +
         "has no cells to install)")
-    // canonical shape, validated at INSTALL (not first query): the
-    // catalog side table is read back as (centroid_id: long,
-    // centroid: array<double>) — a model with other column names or
-    // types would install fine and NPE in the first search's
-    // centroid collect, far from the mistake
-    require(model.idCol == "centroid_id" && model.vecCol == "centroid",
-      s"${td.name}: installIndexModel needs canonical model columns " +
-        s"(centroid_id, centroid) — got (${model.idCol}, " +
-        s"${model.vecCol}); rename before installing")
-    val sch = model.centroids.schema
-    val okTypes = sch.fields.exists(f => f.name == "centroid_id" &&
-        f.dataType == org.apache.spark.sql.types.LongType) &&
-      sch.fields.exists(f => f.name == "centroid" &&
-        (f.dataType match {
-          case org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType, _) => true
-          case _ => false
-        }))
-    require(okTypes,
-      s"${td.name}: installIndexModel needs centroid_id: bigint and " +
-        s"centroid: array<double> — got ${sch.simpleString}")
-    val n = model.centroids.count()
-    require(n == ix.lists,
-      s"${td.name}: model carries $n cells but the index declares " +
-        s"lists=${ix.lists} — the auto-probe arithmetic would skew")
-    // the pinned vector dimension must match the centroids' — a
-    // wrong-space install would rank every assignment in garbage
-    td.vectorDims.get(ix.column).foreach { dim =>
-      val clen = model.centroids
-        .select(size(col("centroid"))).head().getInt(0)
-      require(clen == dim,
-        s"${td.name}: centroids have $clen dims but ${ix.column} " +
-          s"declares vectorDims=$dim — wrong embedding space")
-    }
-    val t = s"${td.name}__ivf"
-    val seg = reg.catalog.writeSegment(s"${reg.namespace}_$t",
-      model.centroids)
-    reg.catalog.commit(reg.catalog.current +
-      (s"${reg.namespace}_$t" -> Vector(seg)))
+    requireInstallable(td, model, ix.lists, ix.column)
+    writeSideModel(td, "__ivf", model)
   }
 
   /** [[installIndexModel]]'s MULTIVEC twin: externally-trained
@@ -602,27 +577,8 @@ final class Engine(reg: Registry) {
     }.getOrElse(throw new IllegalStateException(
       s"${td.name}: installMultivecIndexModel needs a " +
         "MultiVectorIndex with lists > 0"))
-    require(model.idCol == "centroid_id" && model.vecCol == "centroid",
-      s"${td.name}: install needs canonical model columns " +
-        s"(centroid_id, centroid) — got (${model.idCol}, " +
-        s"${model.vecCol}); rename before installing")
-    val n = model.centroids.count()
-    require(n == ix.lists,
-      s"${td.name}: model carries $n cells but the multivec index " +
-        s"declares lists=${ix.lists} — the auto-probe arithmetic " +
-        "would skew")
-    td.vectorDims.get(ix.column).foreach { dim =>
-      val clen = model.centroids
-        .select(size(col("centroid"))).head().getInt(0)
-      require(clen == dim,
-        s"${td.name}: centroids have $clen dims but ${ix.column} " +
-          s"declares token dim $dim — wrong embedding space")
-    }
-    val t = s"${td.name}__mvivf"
-    val seg = reg.catalog.writeSegment(s"${reg.namespace}_$t",
-      model.centroids)
-    reg.catalog.commit(reg.catalog.current +
-      (s"${reg.namespace}_$t" -> Vector(seg)))
+    requireInstallable(td, model, ix.lists, ix.column)
+    writeSideModel(td, "__mvivf", model)
   }
 
   /** BATCH multivec maxsim — the fourth batch member (dense c13,
@@ -651,8 +607,7 @@ final class Engine(reg: Registry) {
         s"${td.name}: multivec IVF model not built — call buildIndex " +
           "or installMultivecIndexModel first"))
     val dim = mvDim(td, ix.column)
-    val p = if (probes > 0) probes
-      else math.ceil(ix.lists / 16.0).toInt.max(1)
+    val p = probesFor(ix.lists, probes)
     // `filter`: the r60 contract on the batch surface — maxsimBatch
     // reads BOTH phases from the assigned frame (probed means phase 1,
     // candidate token matrices phase 2), so one pk semi-join thins
@@ -710,33 +665,35 @@ final class Engine(reg: Registry) {
           s"writeMatryoshkaIvf root via Binding.matryoshkaIvf; " +
           "installDeclarative has no in-memory truncation form")
     }
-    AnnIndex.install(reg.spark)
+    if (td.vectorIndex.isEmpty && td.keywordIndex.isEmpty &&
+        !td.indexes.exists(ix => ix.isInstanceOf[Spec.MultiVectorIndex] ||
+          ix.isInstanceOf[Spec.SparseIndex]))
+      throw new IllegalStateException(
+        s"${td.name} has no vector, multivector, keyword, or sparse " +
+          "index")
     // lists == 0 means exact brute-force — nothing to register for the
     // dense column (the maxsim registration below still applies)
-    td.vectorIndex.filter(_.lists > 0).foreach { ix =>
+    val dense = td.vectorIndex.filter(_.lists > 0).map { ix =>
       def model = indexModel(td).getOrElse(throw new IllegalStateException(
         s"${td.name} has no built IVF model — run buildIndex first"))
       model // fail install-time, not first-query-time, when unbuilt
-      val p = if (probes > 0) probes
-        else math.ceil(ix.lists / 16.0).toInt.max(1)
-      def quantized(index: () => Ann.QuantIndex, r: Int) =
-        Binding.Quantized(ix.column, td.pk, index, ix.distance, p, r,
-          owner(td))
-      AnnIndex.register(
-        if (ix.oneBit)
-          quantized(() => ivfBitqCached(td, ix, model),
-            autoBitqRefine(ix, refine))
-        else if (ix.quantized)
-          quantized(() => ivfSqCached(td, ix, model), autoSqRefine(refine))
-        else if (ix.pq > 0)
-          quantized(() => ivfPqCached(td, ix, model), autoSqRefine(refine))
-        else
+      val p = probesFor(ix.lists, probes)
+      quantFamily(ix) match {
+        case Some(fam) =>
+          Binding.Quantized(ix.column, td.pk,
+            () => quantizedCached(td, ix, model, fam), ix.distance, p,
+            autoRefine(fam, ix, refine), owner(td))
+        case None =>
           // resolver-backed like every other registration: a buildIndex
           // re-run (new KMeans model) must reach declarative probe
           // selection without a re-install; the centroid collect is
-          // memoized per __ivf side-table version
+          // memoized per __ivf side-table version. The table itself
+          // carries no cell column, so the cut is an id semi-join
+          // against the assigned layout's probed cells.
           Binding.Probe(ix.column, "centroid_id", () => centsCached(td),
-            ix.distance, p, owner(td)))
+            ix.distance, p, owner(td), td.pk,
+            Some(() => assignedCached(td, ix, model)))
+      }
     }
     // multivector column: plain orderBy(maxsim_dot(q, mv).desc).limit(k)
     // plans rewrite into the two-phase refine (the declarative
@@ -746,64 +703,59 @@ final class Engine(reg: Registry) {
     // probe + dynamic-pruning machinery (a ProbeDist over the assigned
     // layout) so candidates come from probed cells, not a full
     // token-matrix scan.
-    td.indexes.collectFirst { case ix: Spec.MultiVectorIndex => ix }
-      .foreach { ix =>
-        val binding = if (ix.lists > 0) {
-          mvIndexModel(td).getOrElse(throw new IllegalStateException(
-            s"${td.name} has no built multivec IVF model — run " +
-              "buildIndex first")) // fail install-time, not query-time
-          val p = if (probes > 0) probes
-            else math.ceil(ix.lists / 16.0).toInt.max(1)
-          def model = mvIndexModel(td).getOrElse(
-            throw new IllegalStateException(
-              s"${td.name}'s multivec IVF model (__mvivf) vanished " +
-                "after install — rebuild with buildIndex"))
-          Binding.Maxsim(ix.column, td.pk,
-            () => mvAssignedCached(td, ix, model), maxsimRefine,
-            Some(Binding.ProbeDist(MvMeanCol, "centroid_id",
-              () => model.centroids, "centroid_id", "centroid",
-              Ann.Cosine, p)), owner(td))
-        } else
-          Binding.Maxsim(ix.column, td.pk, () => reg.table(td),
-            maxsimRefine, owner = owner(td))
-        AnnIndex.register(binding)
-      }
+    val multivec = td.indexes.collectFirst {
+      case ix: Spec.MultiVectorIndex => ix
+    }.map { ix =>
+      if (ix.lists > 0) {
+        mvIndexModel(td).getOrElse(throw new IllegalStateException(
+          s"${td.name} has no built multivec IVF model — run " +
+            "buildIndex first")) // fail install-time, not query-time
+        def model = mvIndexModel(td).getOrElse(
+          throw new IllegalStateException(
+            s"${td.name}'s multivec IVF model (__mvivf) vanished " +
+              "after install — rebuild with buildIndex"))
+        Binding.Maxsim(ix.column, td.pk,
+          () => mvAssignedCached(td, ix, model), maxsimRefine,
+          Some(Binding.ProbeDist(MvMeanCol, "centroid_id",
+            () => model.centroids, "centroid_id", "centroid",
+            Ann.Cosine, probesFor(ix.lists, probes))), owner(td))
+      } else
+        Binding.Maxsim(ix.column, td.pk, () => reg.table(td),
+          maxsimRefine, owner = owner(td))
+    }
     // keyword column: plain orderBy(bm25_score.desc).limit(k) plans
     // ([[keywordScoreColumn]] builds the score) rewrite into the
     // postings-index semi-join — the declarative `<&>` (client.py:
     // 356-380); resolver-backed via the version-keyed keywordIndex
-    td.keywordIndex.foreach { kw =>
-      AnnIndex.register(Binding.Bm25(kw.column, td.pk,
-        () => keywordIndex(td), owner = owner(td)))
-    }
+    val keyword = td.keywordIndex.map(kw =>
+      Binding.Bm25(kw.column, td.pk, () => keywordIndex(td),
+        owner = owner(td)))
     // sparse column: plain orderBy(sparse_dot_q.desc).limit(k) plans
     // ([[sparseScoreColumn]] builds the score) rewrite into the
     // inverted-postings candidate semi-join; resolver-backed via
     // [[sparsePostings]]'s lazy current-version plan
-    td.indexes.collectFirst { case ix: Spec.SparseIndex => ix }
-      .foreach { ix =>
-        AnnIndex.register(Binding.Sparse(ix.column, ix.valuesColumn,
-          td.pk, () => sparsePostings(td), owner = owner(td)))
-      }
-    if (td.vectorIndex.isEmpty && td.keywordIndex.isEmpty &&
-        !td.indexes.exists(ix => ix.isInstanceOf[Spec.MultiVectorIndex] ||
-          ix.isInstanceOf[Spec.SparseIndex]))
-      throw new IllegalStateException(
-        s"${td.name} has no vector, multivector, keyword, or sparse " +
-          "index")
+    val sparse = td.indexes.collectFirst {
+      case ix: Spec.SparseIndex => ix
+    }.map(ix => Binding.Sparse(ix.column, ix.valuesColumn, td.pk,
+      () => sparsePostings(td), owner = owner(td)))
+    AnnIndex.install(reg.spark)
+    // all or none: a collision on any binding leaves none of the
+    // table's rewrites live
+    AnnIndex.register(
+      Seq[Option[Binding]](dense, multivec, keyword, sparse).flatten: _*)
   }
 
   /** Attach an AT-REST index layout to a table's delete lifecycle:
     * after this, every committed `Registry.removeBy` on the table
     * (including rows deleted INTO it by FK cascade) rewrites the
     * layout's affected cell directories ([[Ann.deleteStoredIds]]), so
-    * stored searches ([[Ann.searchIvfSqStored]] etc.) and declarative
-    * rewrites over the loaded layout never surface removed rows — the
-    * maintenance PostgreSQL's DELETE performs implicitly on the
-    * reference's indexes (client.py:268-283). `dir` is a
-    * [[Ann.writeIvfSq]] / [[Ann.writeIvfBitq]] root (the `quantized`
-    * subdir is detected), a [[Ann.writeIvfPq]] root (geometry marker —
-    * deletes rewrite `encoded/` cells, codebooks stay trained), a
+    * stored searches ([[Ann.searchQuantizedStored]] etc.) and
+    * declarative rewrites over the loaded layout never surface removed
+    * rows — the maintenance PostgreSQL's DELETE performs implicitly on
+    * the reference's indexes (client.py:268-283). `dir` is a
+    * [[Ann.writeQuantized]] root (family from
+    * [[Ann.quantizedRootFamily]] — deletes rewrite the cells of its
+    * data subdir and of `fresh/`, side tables stay trained), a
     * [[Ann.writePartitioned]] path, a [[Bm25.writePostings]]
     * keyword layout (detected by its `_graft_buckets` marker — deletes
     * rewrite the affected term buckets), a [[Ann.writeMatryoshka]]
@@ -815,17 +767,15 @@ final class Engine(reg: Registry) {
     * eventually dissolve). */
   def attachStoredIndex(td: TableDef[_], dir: String): Unit = {
     val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(reg.spark.sparkContext.hadoopConfiguration)
-    val q = new org.apache.hadoop.fs.Path(root, "quantized")
-    // keyword / sparse / PQ layouts are self-describing (their
-    // bucket-modulus / geometry markers)
+    // keyword / sparse layouts are self-describing (their
+    // bucket-modulus markers)
     val keyword = Bm25.readBucketsMarker(reg.spark, dir).isDefined
     val sparse = graft.functions.Sparse.isStoredLayout(reg.spark, dir)
     val mrl = Ann.isMatryoshkaRoot(reg.spark, dir)
     val mrlIvf = Ann.isMatryoshkaIvfRoot(reg.spark, dir)
     // detected ONCE at attach like the flags above — the layout kind
     // is immutable, and the hook runs per committed delete
-    val quantized = Ann.isQuantizedRoot(reg.spark, dir)
+    val quantized = Ann.quantizedRootFamily(reg.spark, dir)
     val path =
       if (mrlIvf)
         // cell-composed truncation root: rows/ is an ordinary
@@ -835,12 +785,11 @@ final class Engine(reg: Registry) {
       else if (mrl)
         // flat truncation root: rows/ swaps whole-directory on delete
         new org.apache.hadoop.fs.Path(root, "rows").toString
-      else if (Ann.isPqStoredLayout(reg.spark, dir))
-        // PQ roots keep cell-partitioned data under encoded/ (beside
-        // the trained codebooks/centroids, which deletes never touch —
-        // the same codes-outlive-rows contract as SQ bounds)
-        new org.apache.hadoop.fs.Path(root, "encoded").toString
-      else if (fs.exists(q)) q.toString
+      else if (quantized.nonEmpty)
+        // quantized roots keep cell-partitioned data under their
+        // family's subdir (beside the trained side tables, which
+        // deletes never touch — codes outlive rows)
+        new org.apache.hadoop.fs.Path(root, quantized.get.dataSub).toString
       else if (Ann.isDenseRoot(reg.spark, dir))
         // self-contained dense cell root: data under rows/ (beside
         // the root-owned centroids, which deletes never touch)
@@ -871,7 +820,7 @@ final class Engine(reg: Registry) {
               // a quantized root may hold not-yet-compacted appends in
               // its fresh side table — purge those too, or the
               // fresh-aware searches resurrect the deleted rows
-              if (quantized)
+              if (quantized.nonEmpty)
                 Ann.deleteQuantizedFreshIds(reg.spark, dir, td.pk,
                   deleted.select(td.pk))
             }
@@ -894,7 +843,7 @@ final class Engine(reg: Registry) {
                            maxFreshRatio: Double): Option[Long] = {
     val ix = td.vectorIndex.getOrElse(throw new IllegalStateException(
       s"${td.name} has no vector index"))
-    require(Ann.isQuantizedRoot(reg.spark, dir),
+    require(Ann.quantizedRootFamily(reg.spark, dir).nonEmpty,
       s"$dir is not a quantized root — fresh-table compaction only " +
         "applies to SQ/PQ/1-bit layouts")
     Ann.compactQuantizedFreshIfNeeded(reg.spark, dir, td.pk, ix.column,
@@ -925,7 +874,7 @@ final class Engine(reg: Registry) {
                              minRows: Long): Map[Long, Long] =
     if (Ann.isMatryoshkaIvfRoot(reg.spark, dir))
       Ann.mergeUnderfullCellsMrlIvf(reg.spark, dir, minRows)
-    else if (Ann.isQuantizedRoot(reg.spark, dir))
+    else if (Ann.quantizedRootFamily(reg.spark, dir).nonEmpty)
       Ann.mergeUnderfullCellsQuantized(reg.spark, dir,
         vectorColumn(td), minRows)
     else if (Ann.isDenseRoot(reg.spark, dir))
@@ -954,7 +903,7 @@ final class Engine(reg: Registry) {
                             maxRows: Long): Map[Long, Seq[Long]] =
     if (Ann.isMatryoshkaIvfRoot(reg.spark, dir))
       Ann.splitOverfullCellsMrlIvf(reg.spark, dir, maxRows)
-    else if (Ann.isQuantizedRoot(reg.spark, dir))
+    else if (Ann.quantizedRootFamily(reg.spark, dir).nonEmpty)
       Ann.splitOverfullCellsQuantized(reg.spark, dir,
         vectorColumn(td), maxRows)
     else if (Ann.isDenseRoot(reg.spark, dir))
@@ -978,7 +927,7 @@ final class Engine(reg: Registry) {
   def indexHealthFor(td: TableDef[_], dir: String): DataFrame =
     if (Ann.isMatryoshkaIvfRoot(reg.spark, dir))
       Ann.indexHealthMrlIvf(reg.spark, dir)
-    else if (Ann.isQuantizedRoot(reg.spark, dir))
+    else if (Ann.quantizedRootFamily(reg.spark, dir).nonEmpty)
       Ann.indexHealthQuantized(reg.spark, dir)
     else if (Ann.isDenseRoot(reg.spark, dir))
       Ann.indexHealthDense(reg.spark, dir)
@@ -1093,77 +1042,32 @@ final class Engine(reg: Registry) {
     }
   }
 
-  /** IVF+SQ index memoized per table VERSION (same lifecycle as
-    * [[assignedCached]]): per-cell bounds + quantized codes persist
-    * until the table is rewritten. */
-  private val ivfSqCacheMap =
-    scala.collection.mutable.HashMap[String, (String, Ann.IvfSqIndex)]()
-  private def ivfSqCached(td: TableDef[_], ix: VectorIndex,
-                          model: Ann.IvfModel): Ann.IvfSqIndex = {
+  /** Quantized IVF index (SQ, PQ or 1-bit) memoized per table VERSION
+    * (same lifecycle as [[assignedCached]]): codes and side tables
+    * persist until the table or model is rewritten, or the table's
+    * declared family changes. */
+  private val quantizedCache =
+    scala.collection.mutable.HashMap[String, (String, Ann.QuantIndex)]()
+  private def quantizedCached(td: TableDef[_], ix: VectorIndex,
+                              model: Ann.IvfModel,
+                              fam: Ann.QuantFamily): Ann.QuantIndex = {
     // version before table resolve — see assignedCached
     val version = segVersion(td.name, s"${td.name}__ivf")
     val key = s"${reg.instanceId}|${td.name}|${ix.column}"
-    ivfSqCacheMap.synchronized {
-      ivfSqCacheMap.get(key) match {
-        case Some((v, idx)) if v == version => idx
+    quantizedCache.synchronized {
+      quantizedCache.get(key) match {
+        case Some((v, idx)) if v == version && idx.family == fam => idx
         case stale =>
-          stale.foreach { case (_, old) =>
-            old.quantized.unpersist(false)
-            old.bounds.unpersist(false)
-          }
-          val built = Ann.buildIvfSq(reg.table(td), ix.column, model,
-            ix.distance)
-          val idx = Ann.IvfSqIndex(built.quantized.persist(),
-            built.bounds.persist(), built.model)
-          ivfSqCacheMap(key) = (version, idx)
-          idx
-      }
-    }
-  }
-
-  /** IVF+1-bit index memoized per table VERSION (same lifecycle as
-    * [[ivfSqCached]]): residual-sign codes + norms persist until the
-    * table is rewritten. */
-  private val ivfBitqCacheMap =
-    scala.collection.mutable.HashMap[String, (String, Ann.IvfBitIndex)]()
-  private def ivfBitqCached(td: TableDef[_], ix: VectorIndex,
-                            model: Ann.IvfModel): Ann.IvfBitIndex = {
-    // version before table resolve — see assignedCached
-    val version = segVersion(td.name, s"${td.name}__ivf")
-    val key = s"${reg.instanceId}|${td.name}|${ix.column}"
-    ivfBitqCacheMap.synchronized {
-      ivfBitqCacheMap.get(key) match {
-        case Some((v, idx)) if v == version => idx
-        case stale =>
-          stale.foreach(_._2.quantized.unpersist(false))
-          val built = Ann.buildIvfBitq(reg.table(td), ix.column, model,
-            ix.distance)
-          val idx = Ann.IvfBitIndex(built.quantized.persist(), built.model)
-          ivfBitqCacheMap(key) = (version, idx)
-          idx
-      }
-    }
-  }
-
-  /** IVF+PQ index memoized per table VERSION (same lifecycle as
-    * [[ivfSqCached]]): codebooks + positional codes persist until the
-    * table is rewritten. */
-  private val ivfPqCacheMap =
-    scala.collection.mutable.HashMap[String, (String, Ann.IvfPqIndex)]()
-  private def ivfPqCached(td: TableDef[_], ix: VectorIndex,
-                          model: Ann.IvfModel): Ann.IvfPqIndex = {
-    // version before table resolve — see assignedCached
-    val version = segVersion(td.name, s"${td.name}__ivf")
-    val key = s"${reg.instanceId}|${td.name}|${ix.column}"
-    ivfPqCacheMap.synchronized {
-      ivfPqCacheMap.get(key) match {
-        case Some((v, idx)) if v == version => idx
-        case stale =>
-          stale.foreach(_._2.encoded.unpersist(false))
-          val built = Ann.buildIvfPq(reg.table(td), ix.column, model,
-            ix.pq, ix.distance)
-          val idx = built.copy(encoded = built.encoded.persist())
-          ivfPqCacheMap(key) = (version, idx)
+          stale.foreach(_._2.unpersist())
+          val base = reg.table(td)
+          val idx = (fam match {
+            case Ann.Sq => Ann.buildIvfSq(base, ix.column, model, ix.distance)
+            case Ann.Pq =>
+              Ann.buildIvfPq(base, ix.column, model, ix.pq, ix.distance)
+            case Ann.Bitq =>
+              Ann.buildIvfBitq(base, ix.column, model, ix.distance)
+          }).persisted()
+          quantizedCache(key) = (version, idx)
           idx
       }
     }

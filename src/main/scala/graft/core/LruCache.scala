@@ -1,9 +1,13 @@
 package graft.core
 
-/** Access-ordered bounded driver memo — the ONE cache policy behind
-  * every per-process memo in the repo ([[graft.ops.Bm25.buildCached]],
-  * the Dedup shingle/gate/pair tables, the GraphQ graph builds, the
-  * Retrieval WordPiece vocab, the DataOps BPE artifacts).
+/** Access-ordered bounded driver memo — the cache policy behind the
+  * ops-level memos ([[graft.ops.Bm25.buildCached]], the Ann root-model,
+  * radii and geometry-probe memos, the Dedup shingle/gate/pair tables,
+  * the GraphQ graph builds, the Retrieval WordPiece vocab, the DataOps
+  * BPE artifacts). [[graft.core.Engine]]'s per-table memos (centroids,
+  * assignments, quantized indexes) are not on it: they are unbounded
+  * maps keyed by table and invalidated by table VERSION, one entry per
+  * registered table.
   *
   * Why access-ordered and not insertion-ordered: the round-13 warm-path
   * regression. An insertion-order `LinkedHashMap` with head-eviction is

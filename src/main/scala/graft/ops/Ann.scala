@@ -355,7 +355,7 @@ object Ann {
   }
 
   /** Is `dir` a matryoshka root? The detection twin of
-    * [[isPqStoredLayout]] / Sparse.isStoredLayout — callers (layout
+    * [[quantizedRootFamily]] / Sparse.isStoredLayout — callers (layout
     * auto-detect) go through this, never the marker name. */
   def isMatryoshkaRoot(spark: org.apache.spark.sql.SparkSession,
                        dir: String): Boolean =
@@ -1936,7 +1936,7 @@ object Ann {
     * actuators' own precondition). */
   def indexHealthQuantized(spark: org.apache.spark.sql.SparkSession,
                            dir: String, roundTo: Int = 6): DataFrame = {
-    val (family, dataSub, _) = quantizedFamily(spark, dir)
+    val (family, _) = quantizedFamily(spark, dir)
     require(!freshExists(spark, dir),
       s"indexHealthQuantized: $dir carries a fresh/ side table — " +
         "compact it first (compactQuantizedFresh); a codes-only " +
@@ -1944,34 +1944,13 @@ object Ann {
         "under-report the cells the signal exists to flag")
     val model = ivfModelAt(spark, dir)
     // validates against an existing pin; on a never-pinned root
-    // (writeIvfSq/writeIvfPq do not pin _graft_ivf_model) this ADOPTS
+    // (writeQuantized does not pin _graft_ivf_model) this ADOPTS
     // the fingerprint of the root's own on-disk centroids — a
     // one-time metadata write on first read, pinning exactly the
     // state being audited
     ensureIvfModelMarker(spark, dir, model)
-    val rows = spark.read.parquet(s"$dir/$dataSub")
-    val withD = family match {
-      case "sq" =>
-        rows.select(col(model.idCol), col("codes"))
-          .withColumn("codes", unpackCodes(col("codes")))
-          .join(broadcast(spark.read.parquet(s"$dir/bounds")
-            .select(col(model.idCol), col("__mins"), col("__maxs"))),
-            model.idCol)
-          .join(broadcast(model.centroids), model.idCol)
-          .withColumn("__d", round(sqDistCols(col(model.vecCol),
-            col("codes"), col("__mins"), col("__maxs")), roundTo))
-      case "pq" =>
-        val (pq, _, _) = loadPqArtifacts(spark, dir)
-        rows.select(col(model.idCol), col("pq_codes"))
-          .join(broadcast(model.centroids), model.idCol)
-          .withColumn("__d", round(L2.dist(
-            pqReconstructCol(col("pq_codes"), pq),
-            col(model.vecCol)), roundTo))
-      case _ =>
-        // 1-bit: dist(centroid + r̂, centroid) = ‖r̂‖ = rnorm, already
-        // rounded at encode time — the audit reads ONE double per row
-        rows.select(col(model.idCol), col("rnorm").as("__d"))
-    }
+    val withD = family.artifacts(spark, dir, model).healthDist(
+      spark.read.parquet(s"$dir/${family.dataSub}"), roundTo)
     withD.groupBy(col(model.idCol))
       .agg(count(lit(1)).as("n_rows"),
         round(avg(col("__d")), roundTo).as("mean_dist"))
@@ -2346,8 +2325,8 @@ object Ann {
   }
 
   /** Driver-side spherical query reduction — the ONE normalization
-    * every quantized batch delegate ([[knnJoinIvfSq]]/[[knnJoinIvfPq]]
-    * cos/[[knnJoinIvfBitq]]) and the fresh-pruning union
+    * the quantized batch join ([[knnJoinQuantized]]) and the
+    * fresh-pruning union
     * ([[knnJoinQuantizedFresh]]) run, so an ulp-level arithmetic
     * divergence between the union and a delegate's own probe can
     * never admit a cell outside the pruned fresh slice (which would
@@ -4016,274 +3995,6 @@ object Ann {
       .orderBy(col(qId).asc, col("dist").asc, col(dId).asc)
   }
 
-  /** Batch IVF+PQ kNN join: [[knnJoinIvf]]'s query-log shape with the
-    * candidate phase on PQ codes — the ADC batch form. Per-query
-    * lookup tables are built DRIVER-side from the collected query set
-    * (the [[knnJoin]] broadcast-queries contract: queries are the
-    * small side; Q·m·codes·subDim flops once) and shipped as ONE
-    * broadcast map, so the phase-1 scan does m map-lookups per
-    * (query, row) pair over the codes column only — never touching
-    * full-precision vectors. Phase-1 keeps top-(k·refine) per query by
-    * (ADC, id) with a rank window; phase-2 fetches ONLY the surviving
-    * (qid, id) pairs' vectors through a broadcast join for the exact
-    * re-rank. Returns (qId, dId, dist, rank). L2 form; the spherical
-    * (cosine) twin is [[knnJoinIvfPqCos]]. */
-  def knnJoinIvfPq(queries: DataFrame, qId: String, qVec: String,
-                   index: IvfPqIndex, dId: String, vecCol: String,
-                   probes: Int, k: Int, refine: Int = 5,
-                   roundTo: Int = 6): DataFrame = {
-    require(!index.spherical,
-      "knnJoinIvfPq runs L2; a spherical (cosine) index replays " +
-        "through knnJoinIvfPqCos")
-    knnJoinIvfPqImpl(queries, qId, qVec, index, dId, vecCol, probes,
-      k, refine, roundTo, L2)
-  }
-
-  /** Cosine batch IVF+PQ kNN join — the SPHERICAL twin of
-    * [[knnJoinIvfPq]] (reference: `spherical_centroids` for cos
-    * vchordrq indexes, spec.py:458-464): queries L2-normalize
-    * driver-side, probes and per-query ADC LUTs run as L2 on the unit
-    * sphere against the spherical index's codes (built over normalized
-    * docs — [[buildIvfPq]] cosine), and the exact per-query re-rank is
-    * TRUE cosine distance on the raw vectors. */
-  def knnJoinIvfPqCos(queries: DataFrame, qId: String, qVec: String,
-                      index: IvfPqIndex, dId: String, vecCol: String,
-                      probes: Int, k: Int, refine: Int = 5,
-                      roundTo: Int = 6): DataFrame = {
-    require(index.spherical,
-      "knnJoinIvfPqCos needs a spherical index — buildIvfPq with " +
-        "metric = Cosine")
-    knnJoinIvfPqImpl(queries, qId, qVec, index, dId, vecCol, probes,
-      k, refine, roundTo, Cosine)
-  }
-
-  private def knnJoinIvfPqImpl(queries: DataFrame, qId: String,
-                               qVec: String, index: IvfPqIndex,
-                               dId: String, vecCol: String, probes: Int,
-                               k: Int, refine: Int, roundTo: Int,
-                               exactMetric: Metric): DataFrame = {
-    val spark = queries.sparkSession
-    val model = index.model
-    val pq = index.pq
-    // driver-side query set: (qid, vec) — bounded by the batch contract
-    val qRows = queries
-      .select(col(qId).cast("long"), col(qVec).cast("array<double>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    require(qRows.nonEmpty, "knnJoinIvfPq over an empty query set")
-    // spherical: probes + LUTs see the normalized query (the index's
-    // cells and codes live on the unit sphere); the exact re-rank
-    // below always sees the ORIGINAL query under `exactMetric`
-    val qPhase1: Array[(Long, Array[Double])] =
-      if (index.spherical) qRows.map { case (id, v) =>
-        (id, normalizeDriver(v))
-      } else qRows
-    val cents = collectCentroids(model)
-    // probe relation: (qid, cell) for each query's `probes` nearest
-    val probeRows = qPhase1.flatMap { case (id, v) =>
-      nearestCellsDriver(v, cents, probes).map(cid => (id, cid))
-    }.toSeq
-    // per-query ADC LUTs: m × codes partial squared distances
-    val luts: Map[Long, Array[Array[Double]]] =
-      qPhase1.map { case (id, v) =>
-        id -> Array.tabulate(pq.m) { s =>
-          val off = s * pq.subDim
-          pq.codebooks(s).map { case (_, c) =>
-            var d = 0.0
-            var j = 0
-            while (j < pq.subDim) {
-              val t = v(off + j) - c(j); d += t * t; j += 1
-            }
-            d
-          }
-        }
-      }.toMap
-    val bcLuts = spark.sparkContext.broadcast(luts)
-    val bcQ = spark.sparkContext.broadcast(qRows.toMap)
-    // same malformed-code contract as [[pqAdcDist]]: out-of-range or
-    // negative codes (truncated/corrupt layout) sink to +Inf instead
-    // of crashing the whole replay job or reading a plausible value
-    val adc = udf { (qid: Long, codes: Seq[Int]) =>
-      val lut = bcLuts.value(qid)
-      var d = 0.0
-      var s = 0
-      var bad = codes.length != lut.length
-      while (!bad && s < codes.length) {
-        val c = codes(s)
-        if (c < 0 || c >= lut(s).length) bad = true
-        else { d += lut(s)(c); s += 1 }
-      }
-      if (bad) Double.PositiveInfinity else math.sqrt(d)
-    }
-    val exact = udf { (qid: Long, v: Seq[Double]) =>
-      val q = bcQ.value(qid)
-      val arr = v.toArray
-      exactMetric.distScala(arr, q)
-    }
-    import spark.implicits._
-    val probeDf = probeRows.toDF("__qid", model.idCol)
-    // the batch's probed-cell union is already on the driver — plant it
-    // as a LITERAL isin so an at-rest cell-partitioned layout prunes
-    // unprobed dirs with PartitionFilters (a local probe relation does
-    // not earn dynamic pruning; the literal filter is stronger anyway)
-    val probedCells = probeRows.map(_._2).distinct
-    val w1 = Window.partitionBy("__qid")
-      .orderBy(col("__qdist").asc, col(dId).asc)
-    val cand = index.encoded
-      .select(col(dId), col("pq_codes"), col(model.idCol))
-      .filter(col(model.idCol).isin(probedCells: _*))
-      .join(broadcast(probeDf), Seq(model.idCol))
-      .withColumn("__qdist",
-        round(adc(col("__qid"), col("pq_codes")), roundTo))
-      .withColumn("__r", row_number().over(w1))
-      .filter(col("__r") <= k * refine)
-      .select(col("__qid"), col(dId))
-    val w2 = Window.partitionBy("__qid")
-      .orderBy(col("dist").asc, col(dId).asc)
-    index.encoded.select(col(dId), col(vecCol))
-      .join(broadcast(cand), Seq(dId))
-      .withColumn("dist", round(
-        exact(col("__qid"), col(vecCol).cast("array<double>")), roundTo))
-      .withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= k)
-      .select(col("__qid").as(qId), col(dId), col("dist"), col("rank"))
-  }
-
-  /** Batch IVF+SQ kNN join — the batch query-log replay over the
-    * reference's DEFAULT quantization family (residual 8-bit codes
-    * inside vchordrq cells, spec.py:437-444), [[knnJoinIvfPq]]'s shape
-    * with a FULLY DECLARATIVE phase-1: the broadcast probe relation
-    * carries each query's vector beside its probed cell, so the
-    * asymmetric distance is [[sqDistCols]] over (row codes, per-cell
-    * bounds, per-query vector) — a native codegen'd kernel, no UDF, so
-    * the whole scan compiles into WholeStageCodegen. Phase-1 keeps
-    * top-(k·refine) per query by (qdist, id) with a rank window over
-    * the probed cells' codes; phase-2 joins the survivors' raw vectors
-    * against the broadcast (qid, query) relation for the exact
-    * per-query re-rank — also pure builtins ([[Metric.dist]] on two
-    * columns). Cosine runs spherical (normalized phase-1 over the
-    * spherical index, TRUE-cosine re-rank on raw vectors), exactly
-    * [[buildIvfSq]]'s contract. Returns (qId, dId, dist, rank). */
-  def knnJoinIvfSq(queries: DataFrame, qId: String, qVec: String,
-                   index: IvfSqIndex, dId: String, vecCol: String,
-                   metric: Metric, probes: Int, k: Int, refine: Int = 5,
-                   roundTo: Int = 6): DataFrame = {
-    val spark = queries.sparkSession
-    val qRows = queries
-      .select(col(qId).cast("long"), col(qVec).cast("array<double>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    require(qRows.nonEmpty, "knnJoinIvfSq over an empty query set")
-    val spherical = metric == Cosine
-    val qPhase1: Array[(Long, Array[Double])] =
-      if (spherical) qRows.map { case (id, v) =>
-        (id, normalizeDriver(v))
-      } else qRows
-    val cents = collectCentroids(index.model)
-    val probeRows = qPhase1.flatMap { case (id, v) =>
-      nearestCellsDriver(v, cents, probes).map(cid => (id, cid, v.toSeq))
-    }.toSeq
-    import spark.implicits._
-    val cellCol = index.model.idCol
-    val probeDf = probeRows.toDF("__qid", cellCol, "__qv")
-    val probedCells = probeRows.map(_._2).distinct
-    val w1 = Window.partitionBy("__qid")
-      .orderBy(col("__qdist").asc, col(dId).asc)
-    val cand = index.quantized
-      .select(col(dId), col("codes"), col(cellCol))
-      .filter(col(cellCol).isin(probedCells: _*))
-      .join(broadcast(probeDf), Seq(cellCol))
-      .join(broadcast(index.bounds), Seq(cellCol))
-      .withColumn("__qdist", round(
-        sqDistCols(col("__qv"), col("codes"),
-          col("__mins"), col("__maxs")), roundTo))
-      .withColumn("__r", row_number().over(w1))
-      .filter(col("__r") <= k * refine)
-      .select(col("__qid"), col(dId))
-    val qRawDf = qRows.toSeq.map { case (id, v) => (id, v.toSeq) }
-      .toDF("__qid", "__qraw")
-    val w2 = Window.partitionBy("__qid")
-      .orderBy(col("dist").asc, col(dId).asc)
-    index.quantized.select(col(dId), col(vecCol))
-      .join(broadcast(cand), Seq(dId))
-      .join(broadcast(qRawDf), Seq("__qid"))
-      .withColumn("dist", round(metric.dist(
-        col(vecCol).cast("array<double>"), col("__qraw")), roundTo))
-      .withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= k)
-      .select(col("__qid").as(qId), col(dId), col("dist"), col("rank"))
-  }
-
-  /** Batch IVF+1-bit kNN join — completes the quantized batch trio
-    * (PQ [[knnJoinIvfPq]], SQ [[knnJoinIvfSq]], 1-bit here): the
-    * RaBitQ-style sign-bit estimator
-    * `‖qr‖² + rnorm² − 2·rnorm/√D·Σ sign·qr` runs as pure builtin
-    * columns over (bits, rnorm, cell centroid, per-query vector from
-    * the broadcast probe relation) — zero UDFs, but its `zip_with` /
-    * `aggregate` / `transform` are `CodegenFallback`, so Spark
-    * interprets the estimator per element (the next kernel to go
-    * native, as [[knnJoinIvfSq]]'s distance did); per-query rank
-    * windows keep k·refine, phase-2 re-ranks exactly. `refine <= 0` =
-    * auto ([[defaultBitqRefine]]). Cosine runs spherical per
-    * [[buildIvfBitq]]'s contract. */
-  def knnJoinIvfBitq(queries: DataFrame, qId: String, qVec: String,
-                     index: IvfBitIndex, dId: String, vecCol: String,
-                     metric: Metric, probes: Int, k: Int,
-                     refine: Int = -1, roundTo: Int = 6): DataFrame = {
-    val spark = queries.sparkSession
-    val rf = if (refine > 0) refine else defaultBitqRefine(metric)
-    val qRows = queries
-      .select(col(qId).cast("long"), col(qVec).cast("array<double>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    require(qRows.nonEmpty, "knnJoinIvfBitq over an empty query set")
-    val spherical = metric == Cosine
-    val qPhase1: Array[(Long, Array[Double])] =
-      if (spherical) qRows.map { case (id, v) =>
-        (id, normalizeDriver(v))
-      } else qRows
-    val cents = collectCentroids(index.model)
-    val probeRows = qPhase1.flatMap { case (id, v) =>
-      nearestCellsDriver(v, cents, probes).map(cid => (id, cid, v.toSeq))
-    }.toSeq
-    import spark.implicits._
-    val cellCol = index.model.idCol
-    val probeDf = probeRows.toDF("__qid", cellCol, "__qv")
-    val probedCells = probeRows.map(_._2).distinct
-    val qv = col("__qv")
-    val centCol = col(index.model.vecCol)
-    val qr = zip_with(qv, centCol, (a, b) => a - b)
-    val qr2 = aggregate(transform(qr, x => x * x), lit(0.0), (a, x) => a + x)
-    val dot = aggregate(
-      zip_with(col("bits"), qr, (b, x) => (b * 2 - 1).cast("double") * x),
-      lit(0.0), (a, x) => a + x)
-    val est = qr2 + col("rnorm") * col("rnorm") -
-      lit(2.0) * col("rnorm") / sqrt(size(col("bits")).cast("double")) * dot
-    val w1 = Window.partitionBy("__qid")
-      .orderBy(col("__qdist").asc, col(dId).asc)
-    val cand = index.quantized
-      .select(col(dId), col("bits"), col("rnorm"), col(cellCol))
-      .filter(col(cellCol).isin(probedCells: _*))
-      .join(broadcast(probeDf), Seq(cellCol))
-      .join(broadcast(index.model.centroids), Seq(cellCol))
-      .withColumn("__qdist", round(est, roundTo))
-      .withColumn("__r", row_number().over(w1))
-      .filter(col("__r") <= k * rf)
-      .select(col("__qid"), col(dId))
-    val qRawDf = qRows.toSeq.map { case (id, v) => (id, v.toSeq) }
-      .toDF("__qid", "__qraw")
-    val w2 = Window.partitionBy("__qid")
-      .orderBy(col("dist").asc, col(dId).asc)
-    index.quantized.select(col(dId), col(vecCol))
-      .join(broadcast(cand), Seq(dId))
-      .join(broadcast(qRawDf), Seq("__qid"))
-      .withColumn("dist", round(metric.dist(
-        col(vecCol).cast("array<double>"), col("__qraw")), roundTo))
-      .withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= k)
-      .select(col("__qid").as(qId), col(dId), col("dist"), col("rank"))
-  }
-
   /** Batch maxsim: the top-k docs for EVERY query bag in ONE job — the
     * multivec twin of [[knnJoinIvf]] (dense), `Bm25.searchBatch`
     * (keyword), and `Sparse.invertedTopKBatch` (sparse), completing the
@@ -4367,10 +4078,139 @@ object Ann {
     topK(pruned, idCol, vecCol, queryVec, metric, k, roundTo)
   }
 
+  /** The three quantized IVF families — codes inside IVF cells, exact
+    * re-rank of the survivors (vchordrq, spec.py:437-444). A family
+    * names what differs AT REST: its code columns, its data subdir,
+    * its geometry marker and its trained side tables. Everything else
+    * — probe, phase-1 cut, exact re-rank, fresh encode-on-read, load,
+    * write, detection and maintenance — is written once over it and
+    * over [[QuantIndex]]. */
+  sealed trait QuantFamily extends Product with Serializable {
+    /** The root subdir holding the cell-partitioned code rows. */
+    private[graft] def dataSub: String = "quantized"
+    /** The columns the family's rows carry beyond the raw doc columns
+      * — what a fresh (not yet encoded) row must not carry. */
+    private[ops] def codeCols: Set[String]
+    /** The marker pinning the root's geometry (spherical flag). */
+    private[ops] def marker: String
+    /** The spherical flag a marker value pins. */
+    private[ops] def pinnedSpherical(meta: String): Boolean = meta.toBoolean
+    /** The exact-re-rank budget (candidate multiplier) for
+      * `refine <= 0`. */
+    def defaultRefine(metric: Metric): Int = 5
+    /** The root's trained artifacts under `model`, with no rows. */
+    private[ops] def artifacts(spark: org.apache.spark.sql.SparkSession,
+                               dir: String, model: IvfModel): QuantIndex
+    /** A split's side-table step before its parents dissolve:
+      * `newIds` are (parent cell, new sub-cell) pairs. */
+    private[ops] def inheritSide(spark: org.apache.spark.sql.SparkSession,
+                                 dir: String,
+                                 newIds: Seq[(Long, Long)]): Unit = ()
+  }
+
+  /** 8-bit codes against per-cell bounds ([[IvfSqIndex]]). */
+  case object Sq extends QuantFamily {
+    private[ops] val codeCols = Set("codes")
+    private[ops] def marker = SqMetaMarker
+    private[ops] def artifacts(spark: org.apache.spark.sql.SparkSession,
+                               dir: String, model: IvfModel): QuantIndex =
+      IvfSqIndex(spark.emptyDataFrame, spark.read.parquet(s"$dir/bounds"),
+        model)
+    /** Each sub-cell DUPLICATES its parent's frozen bounds row, keeping
+      * every inherited code decodable; filter-out-then-union so a
+      * crashed run's re-execution with the same fresh ids cannot
+      * duplicate bounds rows (duplicates fan out in every bounds join,
+      * doubling ids in search results). */
+    override private[ops] def inheritSide(
+        spark: org.apache.spark.sql.SparkSession, dir: String,
+        newIds: Seq[(Long, Long)]): Unit = {
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val bounds = spark.read.parquet(s"$dir/bounds")
+      val cidType = bounds.schema("centroid_id").dataType
+      val dup = newIds.map { case (old, nid) =>
+        bounds.filter(col("centroid_id").cast("long") === old)
+          .withColumn("centroid_id", lit(nid).cast(cidType)) }
+        .reduce(_ unionByName _)
+      val subIds = newIds.map(_._2)
+      swapSideTable(fs, dir, "bounds",
+        bounds.filter(!col("centroid_id").cast("long").isin(subIds: _*))
+          .unionByName(dup).localCheckpoint(true))
+    }
+  }
+
+  /** Product-quantization codes over shared codebooks
+    * ([[IvfPqIndex]]); its marker also pins the (m, subDim) geometry. */
+  case object Pq extends QuantFamily {
+    override private[graft] val dataSub = "encoded"
+    private[ops] val codeCols = Set("pq_codes")
+    private[ops] def marker = PqMetaMarker
+    override private[ops] def pinnedSpherical(meta: String): Boolean =
+      meta.split(",")(2).toBoolean
+    private[ops] def artifacts(spark: org.apache.spark.sql.SparkSession,
+                               dir: String, model: IvfModel): QuantIndex =
+      loadPqArtifacts(spark, dir, model)
+  }
+
+  /** 1-bit residual sign codes plus the residual norm
+    * ([[IvfBitIndex]]). */
+  case object Bitq extends QuantFamily {
+    private[ops] val codeCols = Set("bits", "rnorm")
+    private[ops] def marker = BitqMetaMarker
+    override def defaultRefine(metric: Metric): Int =
+      defaultBitqRefine(metric)
+    private[ops] def artifacts(spark: org.apache.spark.sql.SparkSession,
+                               dir: String, model: IvfModel): QuantIndex =
+      IvfBitIndex(spark.emptyDataFrame, model)
+  }
+
   /** An IVF index with a codes-only phase-1 scan — SQ
-    * ([[IvfSqIndex]]), PQ ([[IvfPqIndex]]) or 1-bit ([[IvfBitIndex]]);
-    * the declarative quantized rewrite serves all three. */
-  sealed trait QuantIndex
+    * ([[IvfSqIndex]]), PQ ([[IvfPqIndex]]) or 1-bit ([[IvfBitIndex]]).
+    * Each case supplies only what its codes need: the per-cell side
+    * table the scan joins, the phase-1 estimate, the at-rest
+    * encode/pack/unpack and side tables, and the health distance.
+    * [[quantizedCandidates]], [[searchQuantized]], [[knnJoinQuantized]],
+    * [[writeQuantized]], [[loadQuantized]] and [[searchQuantizedStored]]
+    * are the one implementation over all three; the declarative
+    * quantized rewrite serves all three. */
+  sealed trait QuantIndex {
+    def model: IvfModel
+    def family: QuantFamily
+    /** The doc rows plus cell id and codes, codes in scan form. */
+    def rows: DataFrame
+    /** This index over other rows (a filtered or fresh-augmented
+      * frame of the same shape). */
+    def withRows(rows: DataFrame): QuantIndex
+    /** The spherical flag the index itself pins, if it carries one. */
+    private[ops] def sphericalPin: Option[Boolean] = None
+    /** The per-cell table phase 1 joins onto the probed rows. */
+    private[ops] def cellSide: Option[DataFrame]
+    /** Phase-1 distance estimate for the phase-1-space query `qv`. */
+    private[ops] def estimate(qv: Column): Column
+    /** [[estimate]] in the batch join, where each row carries its
+      * query id `__qid` and phase-1-space vector `__qv`; `queries` is
+      * that collected query set. */
+    private[ops] def batchEstimate(
+        queries: Array[(Long, Array[Double])]): Column =
+      estimate(col("__qv"))
+    /** Assign + encode raw rows under this index's artifacts, codes at
+      * rest — the streaming-ingest transform, bit-identical to the
+      * batch build's codes. */
+    private[ops] def encode(raw: DataFrame, vecCol: String,
+                            metric: Metric): DataFrame
+    /** Scan-form codes to their at-rest form, and back. */
+    private[ops] def pack(df: DataFrame): DataFrame = df
+    private[ops] def unpack(df: DataFrame): DataFrame = df
+    /** Write the trained side tables beside the code rows. */
+    private[ops] def writeSide(dir: String): Unit
+    /** (cell, `__d`) per at-rest row: the distance between the row's
+      * code reconstruction and its cell centroid, reading the code
+      * columns only ([[indexHealthQuantized]]'s per-row input). */
+    private[ops] def healthDist(atRest: DataFrame, roundTo: Int): DataFrame
+    /** A persisted copy for a per-process memo, and its release. */
+    private[graft] def persisted(): QuantIndex = withRows(rows.persist())
+    private[graft] def unpersist(): Unit = rows.unpersist(false)
+  }
 
   /** IVF + scalar quantization composed — the actual vchordrq index
     * shape (RaBitQ-style quantized codes INSIDE IVF cells + exact
@@ -4385,7 +4225,39 @@ object Ann {
     *    the probe scan happens). Exact min/max inputs, so any engine
     *    reproduces codes and distances bit-for-bit. */
   final case class IvfSqIndex(quantized: DataFrame, bounds: DataFrame,
-                              model: IvfModel) extends QuantIndex
+                              model: IvfModel) extends QuantIndex {
+    def family: QuantFamily = Sq
+    def rows: DataFrame = quantized
+    def withRows(rows: DataFrame): QuantIndex = copy(quantized = rows)
+    private[ops] def cellSide: Option[DataFrame] = Some(bounds)
+    private[ops] def estimate(qv: Column): Column =
+      sqDistCols(qv, col("codes"), col("__mins"), col("__maxs"))
+    private[ops] def encode(raw: DataFrame, vecCol: String,
+                            metric: Metric): DataFrame =
+      assignQuantizeSq(raw, vecCol, this, metric)
+    override private[ops] def pack(df: DataFrame): DataFrame =
+      df.withColumn("codes", packCodes(col("codes")))
+    override private[ops] def unpack(df: DataFrame): DataFrame =
+      df.withColumn("codes", unpackCodes(col("codes")))
+    private[ops] def writeSide(dir: String): Unit = {
+      bounds.write.mode("overwrite").parquet(s"$dir/bounds")
+      model.centroids.write.mode("overwrite").parquet(s"$dir/centroids")
+    }
+    private[ops] def healthDist(atRest: DataFrame,
+                                roundTo: Int): DataFrame =
+      unpack(atRest.select(col(model.idCol), col("codes")))
+        .join(broadcast(bounds.select(col(model.idCol), col("__mins"),
+          col("__maxs"))), model.idCol)
+        .join(broadcast(model.centroids), model.idCol)
+        .select(col(model.idCol), round(sqDistCols(col(model.vecCol),
+          col("codes"), col("__mins"), col("__maxs")), roundTo).as("__d"))
+    override private[graft] def persisted(): QuantIndex =
+      IvfSqIndex(quantized.persist(), bounds.persist(), model)
+    override private[graft] def unpersist(): Unit = {
+      quantized.unpersist(false)
+      bounds.unpersist(false)
+    }
+  }
 
   /** Build: assign cells, per-cell bound aggregation (one map-side-
     * combinable shuffle on centroid_id), quantize via the co-keyed
@@ -4427,90 +4299,6 @@ object Ann {
       IvfSqIndex(quantized, bounds, model)
     }
 
-  /** Search: probe `probes` cells, asymmetric quantized scan WITHIN the
-    * probed cells only (top-k·refine), exact re-rank of the survivors.
-    * The per-cell bounds for the scan arrive via a broadcast of the
-    * ≤`probes` relevant bounds rows — query-derived, never the full
-    * bounds table. */
-  def searchIvfSq(index: IvfSqIndex, idCol: String, vecCol: String,
-                  queryVec: Column, metric: Metric, probes: Int, k: Int,
-                  refine: Int = 5, roundTo: Int = 6): DataFrame =
-    sqCandidates(index, idCol, queryVec, metric, probes, k * refine, roundTo)
-      .withColumn("dist", round(metric.dist(
-        col(vecCol).cast("array<double>"), queryVec), roundTo))
-      .orderBy(col("dist").asc, col(idCol).asc)
-      .limit(k)
-      .select(col(idCol), col("dist"))
-
-  /** Phase-1 of [[searchIvfSq]] alone: the probed asymmetric-quantized
-    * scan, top-`n` by (qdist, id) with all doc columns — the candidate
-    * generator the declarative [[graft.plans.AnnTopKRule]] rewrite
-    * injects as a semi-join (its exact re-rank is the plan's own
-    * Sort+Limit). */
-  def sqCandidates(index: IvfSqIndex, idCol: String, queryVec: Column,
-                   metric: Metric, probes: Int, n: Int,
-                   roundTo: Int = 6): DataFrame = {
-    // cosine index = spherical ([[buildIvfSq]]): codes and centroids
-    // live on the unit sphere, so the query joins them there and the
-    // asymmetric scan is plain L2 — ordering identical to cosine
-    val (qv, m) =
-      if (metric == Cosine) (l2NormalizeQuery(queryVec), L2: Metric)
-      else (queryVec, metric)
-    val cellCol = index.model.idCol
-    val cells = probeCells(index.model, qv, m, probes)
-    val probedBounds = index.bounds.join(broadcast(cells), Seq(cellCol))
-    index.quantized
-      .join(broadcast(probedBounds), Seq(cellCol))
-      .withColumn("qdist", round(
-        sqDistCols(qv, col("codes"), col("__mins"), col("__maxs")),
-        roundTo))
-      .orderBy(col("qdist").asc, col(idCol).asc)
-      .limit(n)
-  }
-
-  /** Persist an [[IvfSqIndex]] at rest — the index layout the scaladocs
-    * promise: `dir/quantized` is the doc table disk-partitioned by
-    * centroid_id with codes PACKED to 1 byte/dim binary ([[packCodes]]),
-    * `dir/bounds` / `dir/centroids` the side tables. Probed searches
-    * over the loaded layout prune whole cell directories. */
-  def writeIvfSq(index: IvfSqIndex, dir: String): Unit = {
-    index.quantized
-      .withColumn("codes", packCodes(col("codes")))
-      .write.mode("overwrite").partitionBy(index.model.idCol)
-      .parquet(s"$dir/quantized")
-    index.bounds.write.mode("overwrite").parquet(s"$dir/bounds")
-    index.model.centroids.write.mode("overwrite")
-      .parquet(s"$dir/centroids")
-  }
-
-  /** Load a [[writeIvfSq]] layout; codes unpack at scan time. Refuses
-    * mid-merge ([[mergeUnderfullCellsQuantized]]'s torn window). */
-  def loadIvfSq(spark: org.apache.spark.sql.SparkSession,
-                dir: String): IvfSqIndex = {
-    requireNoPendingMerge(spark, dir)
-    val quantized = spark.read.parquet(s"$dir/quantized")
-      .withColumn("codes", unpackCodes(col("codes")))
-    IvfSqIndex(quantized, spark.read.parquet(s"$dir/bounds"),
-      ivfModelAt(spark, dir))
-  }
-
-  /** [[searchIvfSq]] over a stored layout: probe cells become a LITERAL
-    * isin on the partition column (PartitionFilters in the scan — whole
-    * unprobed cell directories are never read), then the usual
-    * asymmetric scan + exact re-rank. */
-  def searchIvfSqStored(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, idCol: String, vecCol: String,
-                        queryVec: Column, metric: Metric, probes: Int,
-                        k: Int, refine: Int = 5,
-                        roundTo: Int = 6): DataFrame = {
-    val index = loadIvfSq(spark, dir)
-    val cells = probeCellIds(index.model, queryVec, metric, probes)
-    val pruned = index.copy(quantized = index.quantized
-      .filter(col(index.model.idCol).isin(cells: _*)))
-    searchIvfSq(pruned, idCol, vecCol, queryVec, metric, probes, k,
-      refine, roundTo)
-  }
-
   private val SqMetaMarker = "_graft_sq_meta"
   private val SqBoundsDigestMarker = "_graft_sq_bounds_digest"
 
@@ -4532,7 +4320,7 @@ object Ann {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  /** Idempotently establish a [[writeIvfSq]]-shaped ROOT for streaming
+  /** Idempotently establish a [[writeQuantized]] SQ ROOT for streaming
     * ingest ([[graft.streaming.Stream.ingestIvfSq]]): first call writes
     * the trained side tables (bounds, centroids) plus markers pinning
     * the spherical flag, the bounds digest and the coarse-quantizer
@@ -4570,7 +4358,7 @@ object Ann {
     * broadcast stream-static join against the ≤k-row bounds table, so
     * codes are BIT-IDENTICAL to the batch build's and
     * [[graft.streaming.Stream.ingestIvfSq]] appends are
-    * indistinguishable at rest from [[writeIvfSq]] output. Cosine
+    * indistinguishable at rest from [[writeQuantized]] output. Cosine
     * assigns and quantizes on normalized vectors (the spherical
     * contract) while the stored vecCol stays RAW for the exact
     * re-rank. */
@@ -4607,7 +4395,69 @@ object Ann {
     * re-rank is true cosine distance. */
   final case class IvfPqIndex(encoded: DataFrame, pq: PqModel,
                               model: IvfModel, spherical: Boolean)
-      extends QuantIndex
+      extends QuantIndex {
+    def family: QuantFamily = Pq
+    def rows: DataFrame = encoded
+    def withRows(rows: DataFrame): QuantIndex = copy(encoded = rows)
+    override private[ops] def sphericalPin: Option[Boolean] =
+      Some(spherical)
+    private[ops] def cellSide: Option[DataFrame] = None
+    /** ADC over the codes only: the lookup tables are built on the
+      * driver, so the query must be a literal. */
+    private[ops] def estimate(qv: Column): Column =
+      pqAdcDist(literalVec(qv).getOrElse(throw new IllegalArgumentException(
+          "PQ ADC needs a literal query vector (its lookup tables are " +
+            "built on the driver)")).toSeq,
+        col("pq_codes"), pq)
+    /** Per-query ADC lookup tables (m × codes partial squared
+      * distances) built once on the driver from the collected query
+      * set and shipped as ONE broadcast map, so each (query, row) pair
+      * costs m lookups. Malformed codes (out of range, negative — a
+      * truncated layout) sink to +Inf, [[pqAdcDist]]'s contract. */
+    override private[ops] def batchEstimate(
+        queries: Array[(Long, Array[Double])]): Column = {
+      val luts: Map[Long, Array[Array[Double]]] =
+        queries.map { case (id, v) =>
+          id -> Array.tabulate(pq.m) { s =>
+            val off = s * pq.subDim
+            pq.codebooks(s).map { case (_, c) =>
+              var d = 0.0
+              var j = 0
+              while (j < pq.subDim) {
+                val t = v(off + j) - c(j); d += t * t; j += 1
+              }
+              d
+            }
+          }
+        }.toMap
+      val bcLuts = encoded.sparkSession.sparkContext.broadcast(luts)
+      val adc = udf { (qid: Long, codes: Seq[Int]) =>
+        val lut = bcLuts.value(qid)
+        var d = 0.0
+        var s = 0
+        var bad = codes.length != lut.length
+        while (!bad && s < codes.length) {
+          val c = codes(s)
+          if (c < 0 || c >= lut(s).length) bad = true
+          else { d += lut(s)(c); s += 1 }
+        }
+        if (bad) Double.PositiveInfinity else math.sqrt(d)
+      }
+      adc(col("__qid"), col("pq_codes"))
+    }
+    private[ops] def encode(raw: DataFrame, vecCol: String,
+                            metric: Metric): DataFrame =
+      assignEncodePq(raw, vecCol, pq, model, metric)
+    private[ops] def writeSide(dir: String): Unit =
+      writePqSideTables(encoded.sparkSession, dir, pq, model, spherical)
+    private[ops] def healthDist(atRest: DataFrame,
+                                roundTo: Int): DataFrame =
+      atRest.select(col(model.idCol), col("pq_codes"))
+        .join(broadcast(model.centroids), model.idCol)
+        .select(col(model.idCol), round(L2.dist(
+          pqReconstructCol(col("pq_codes"), pq), col(model.vecCol)),
+          roundTo).as("__d"))
+  }
 
   def buildIvfPq(docs: DataFrame, vecCol: String, model: IvfModel,
                  m: Int, metric: Metric, roundTo: Int = 5): IvfPqIndex =
@@ -4625,84 +4475,7 @@ object Ann {
         spherical = false)
     }
 
-  /** Search: probe `probes` cells, ADC scan WITHIN the probed cells
-    * over (id, codes, cell) ONLY — [[searchPq]]'s codes-only phase 1
-    * composed with the probe semi-join (disk-partitioned layouts prune
-    * whole cell dirs), then the k·refine survivors fetch their raw
-    * vectors by id for the exact re-rank. */
-  def searchIvfPq(index: IvfPqIndex, idCol: String, vecCol: String,
-                  query: Seq[Double], metric: Metric, probes: Int,
-                  k: Int, refine: Int = 5, roundTo: Int = 6): DataFrame = {
-    val cand = pqCandidates(index, idCol, query, metric, probes,
-        k * refine, roundTo)
-      .select(col(idCol))
-    pqRerank(index.encoded, cand, idCol, vecCol, query, metric, k,
-      roundTo)
-  }
-
-  /** Shared PQ phase-2: the k·refine survivors fetch their raw vectors
-    * by id (broadcast semi-join) for the exact re-rank under the
-    * ORIGINAL metric over the ORIGINAL query. */
-  private def pqRerank(encoded: DataFrame, cand: DataFrame,
-                       idCol: String, vecCol: String, query: Seq[Double],
-                       metric: Metric, k: Int, roundTo: Int): DataFrame =
-    encoded.select(col(idCol), col(vecCol))
-      .join(broadcast(cand), Seq(idCol))
-      .withColumn("dist", round(metric.dist(
-        col(vecCol).cast("array<double>"), typedlit(query)), roundTo))
-      .orderBy(col("dist").asc, col(idCol).asc)
-      .limit(k)
-      .select(col(idCol), col("dist"))
-
-  /** Phase-1 of [[searchIvfPq]] alone: the probed codes-only ADC scan,
-    * top-`n` by (qdist, id) — the candidate generator the declarative
-    * [[graft.plans.AnnTopKRule]] rewrite injects as a semi-join (its
-    * exact re-rank is the plan's own Sort+Limit), the PQ twin of
-    * [[sqCandidates]]. */
-  def pqCandidates(index: IvfPqIndex, idCol: String, query: Seq[Double],
-                   metric: Metric, probes: Int, n: Int,
-                   roundTo: Int = 6): DataFrame = {
-    val (qs, m) =
-      if (index.spherical) {
-        val norm = math.sqrt(query.foldLeft(0.0)((a, x) => a + x * x))
-        (query.map(_ / norm), L2: Metric)
-      } else (query, metric)
-    val cellCol = index.model.idCol
-    val cells = probeCells(index.model, typedlit(qs), m, probes)
-    index.encoded
-      .select(col(idCol), col("pq_codes"), col(cellCol))
-      .join(broadcast(cells), Seq(cellCol))
-      .withColumn("qdist",
-        round(pqAdcDist(qs, col("pq_codes"), index.pq), roundTo))
-      .orderBy(col("qdist").asc, col(idCol).asc)
-      .limit(n)
-  }
-
   private val PqMetaMarker = "_graft_pq_meta"
-
-  /** True when `dir` is a [[writeIvfPq]] root (its geometry marker is
-    * present) — the layout self-description
-    * [[graft.core.Engine.attachStoredIndex]] dispatches on: PQ roots
-    * keep their cell-partitioned data under `encoded/` (beside
-    * `codebooks/` and `centroids/`), so delete maintenance must target
-    * that subdir, not the root. */
-  def isPqStoredLayout(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): Boolean =
-    graft.io.Markers.exists(spark, dir, PqMetaMarker)
-
-  /** Persist an [[IvfPqIndex]] at rest — the PQ twin of [[writeIvfSq]]:
-    * `dir/encoded` is the doc table disk-partitioned by centroid_id
-    * (probed searches prune whole cell directories; the m-slot code
-    * column dictionary-encodes to ~1 byte/slot in parquet),
-    * `dir/codebooks` / `dir/centroids` the side tables, and the
-    * (m, subDim, spherical) geometry pinned in a marker so a reader
-    * cannot mis-assemble the LUT. */
-  def writeIvfPq(index: IvfPqIndex, dir: String): Unit = {
-    index.encoded.write.mode("overwrite")
-      .partitionBy(index.model.idCol).parquet(s"$dir/encoded")
-    writePqSideTables(index.encoded.sparkSession, dir, index.pq,
-      index.model, index.spherical)
-  }
 
   /** The trained artifacts beside `encoded/`: codebooks, centroids,
     * the (m, subDim, spherical) geometry marker, and a sha-256 digest
@@ -4739,7 +4512,7 @@ object Ann {
       .map("%02x".format(_)).mkString
   }
 
-  /** Idempotently establish a [[writeIvfPq]] ROOT for streaming ingest
+  /** Idempotently establish a [[writeQuantized]] PQ ROOT for streaming ingest
     * ([[graft.streaming.Stream.ingestIvfPq]]): first call writes the
     * trained artifacts; a restart verifies the geometry marker, the
     * codebook digest AND the coarse-quantizer fingerprint
@@ -4753,7 +4526,7 @@ object Ann {
                       dir: String, pq: PqModel, model: IvfModel,
                       spherical: Boolean): Unit = {
     // spherical roots operate on NORMALIZED centroids throughout —
-    // what loadIvfPq probes against, what writeIvfPq persists, and
+    // what loadQuantized probes against, what writeQuantized persists, and
     // what the assignment fingerprint must pin
     val stored = if (spherical) normalizeModel(model) else model
     graft.io.Markers.read(spark, dir, PqMetaMarker) match {
@@ -4791,27 +4564,15 @@ object Ann {
     } else
       encodePq(assign(docs, vecCol, model, metric), vecCol, pq)
 
-  /** Load a [[writeIvfPq]] layout (geometry from the marker; codebooks
-    * collected driver-side in (s, code) order — m·codes·subDim doubles,
-    * bounded by construction). Refuses mid-merge (rows may be mid-move
-    * between cell directories — [[mergeUnderfullCellsQuantized]]). */
-  def loadIvfPq(spark: org.apache.spark.sql.SparkSession,
-                dir: String): IvfPqIndex = {
-    requireNoPendingMerge(spark, dir)
-    val (pq, model, spherical) = loadPqArtifacts(spark, dir)
-    IvfPqIndex(spark.read.parquet(s"$dir/encoded"), pq, model,
-      spherical)
-  }
-
-  /** The trained PQ artifacts SANS data — codebooks + centroids +
-    * spherical flag, for transforms that need the frozen training but
-    * not the encoded frame (fresh compaction, the underfull-cell
-    * merge — which runs precisely when [[loadIvfPq]] refuses). */
+  /** The trained PQ artifacts under `model`, with no rows — codebooks
+    * (collected driver-side in (s, code) order: m·codes·subDim doubles,
+    * bounded by construction) and the (m, subDim, spherical) geometry
+    * from the marker. */
   private def loadPqArtifacts(spark: org.apache.spark.sql.SparkSession,
-                              dir: String): (PqModel, IvfModel, Boolean) = {
+                              dir: String, model: IvfModel): IvfPqIndex = {
     val meta = graft.io.Markers.read(spark, dir, PqMetaMarker)
       .getOrElse(throw new IllegalStateException(
-        s"$dir has no PQ geometry marker — not a writeIvfPq layout"))
+        s"$dir has no PQ geometry marker — not a writeQuantized PQ layout"))
     val Array(m, subDim, spherical) = meta.split(",")
     val rows = spark.read.parquet(s"$dir/codebooks")
       .select(col("s").cast("int"), col("code").cast("int"),
@@ -4825,55 +4586,8 @@ object Ann {
     require(books.forall(_.length == books.head.length) &&
         books.head.forall(_._2.length == subDim.toInt),
       s"$dir codebooks disagree with the marker geometry $meta")
-    (PqModel(m.toInt, subDim.toInt, books),
-      ivfModelAt(spark, dir), spherical.toBoolean)
-  }
-
-  /** [[searchIvfPq]] over a stored layout: probe cells become a
-    * LITERAL isin on the partition column (PartitionFilters in the
-    * scan — whole unprobed cell directories are never read, for BOTH
-    * the ADC phase and the survivor vector fetch), then the usual
-    * codes-only ADC scan + exact re-rank. */
-  def searchIvfPqStored(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, idCol: String, vecCol: String,
-                        query: Seq[Double], metric: Metric, probes: Int,
-                        k: Int, refine: Int = 5,
-                        roundTo: Int = 6): DataFrame = {
-    val index = loadIvfPq(spark, dir)
-    searchIvfPqRestricted(index, (df, _) => df, idCol, vecCol, query,
-      metric, probes, k, refine, roundTo)
-  }
-
-  /** The ONE stored-PQ two-phase body behind [[searchIvfPqStored]] and
-    * [[searchIvfPqStoredFresh]] (a drift here must hit both): probe
-    * cells become a literal isin (whole unprobed cell dirs never read,
-    * for BOTH the ADC phase and the survivor fetch — the isin IS the
-    * probe, so the two-phase runs directly instead of re-probing
-    * inside searchIvfPq), `augment(restricted, cells)` widens the
-    * restricted frame (the fresh union; pass-through for the plain
-    * stored search). */
-  private def searchIvfPqRestricted(
-      index: IvfPqIndex,
-      augment: (DataFrame, Array[Long]) => DataFrame,
-      idCol: String, vecCol: String,
-      query: Seq[Double], metric: Metric,
-      probes: Int, k: Int, refine: Int,
-      roundTo: Int): DataFrame = {
-    val (qs, m) =
-      if (index.spherical) {
-        val n = math.sqrt(query.foldLeft(0.0)((a, x) => a + x * x))
-        (query.map(_ / n), L2: Metric)
-      } else (query, metric)
-    val cells = probeCellIds(index.model, typedlit(qs), m, probes)
-    val restricted = augment(index.encoded
-      .filter(col(index.model.idCol).isin(cells: _*)), cells)
-    val cand = restricted.select(col(idCol), col("pq_codes"))
-      .withColumn("qdist",
-        round(pqAdcDist(qs, col("pq_codes"), index.pq), roundTo))
-      .orderBy(col("qdist").asc, col(idCol).asc)
-      .limit(k * refine)
-      .select(col(idCol))
-    pqRerank(restricted, cand, idCol, vecCol, query, metric, k, roundTo)
+    IvfPqIndex(spark.emptyDataFrame, PqModel(m.toInt, subDim.toInt, books),
+      model, spherical.toBoolean)
   }
 
   /** 1-bit (RaBitQ-style) IVF index: per vector, the SIGN of each
@@ -4884,7 +4598,46 @@ object Ann {
     * `quantized` columns: doc cols + centroid_id + bits (array<int>
     * 0/1) + rnorm. */
   final case class IvfBitIndex(quantized: DataFrame, model: IvfModel)
-      extends QuantIndex
+      extends QuantIndex {
+    def family: QuantFamily = Bitq
+    def rows: DataFrame = quantized
+    def withRows(rows: DataFrame): QuantIndex = copy(quantized = rows)
+    private[ops] def cellSide: Option[DataFrame] = Some(model.centroids)
+    /** Asymmetric 1-bit L2 estimator, all builtin column math (no UDF;
+      * its `zip_with`/`aggregate`/`transform` are `CodegenFallback`,
+      * so Spark interprets it per element): with qr = query − centroid
+      * and r̂ = rnorm·sign(bits)/√D,
+      * est‖q − v‖² = ‖qr‖² + rnorm² − 2·(rnorm/√D)·Σ signᵢ·qrᵢ.
+      * An ESTIMATOR, not a bound — hence top-(k·refine) by estimate,
+      * then the exact re-rank. */
+    private[ops] def estimate(qv: Column): Column = {
+      val qr = zip_with(qv, col(model.vecCol), (a, b) => a - b)
+      val qr2 = aggregate(transform(qr, x => x * x), lit(0.0),
+        (a, x) => a + x)
+      val dot = aggregate(
+        zip_with(col("bits"), qr, (b, x) => (b * 2 - 1).cast("double") * x),
+        lit(0.0), (a, x) => a + x)
+      qr2 + col("rnorm") * col("rnorm") -
+        lit(2.0) * col("rnorm") / sqrt(size(col("bits")).cast("double")) *
+          dot
+    }
+    private[ops] def encode(raw: DataFrame, vecCol: String,
+                            metric: Metric): DataFrame =
+      assignQuantizeBitq(raw, vecCol, model, metric)
+    override private[ops] def pack(df: DataFrame): DataFrame =
+      df.withColumn("bits", packBits(col("bits")))
+    // dims from the memoized centroid array — no per-load job
+    override private[ops] def unpack(df: DataFrame): DataFrame =
+      df.withColumn("bits", unpackBits(col("bits"),
+        model.collectedCentroids.head._2.length))
+    private[ops] def writeSide(dir: String): Unit =
+      model.centroids.write.mode("overwrite").parquet(s"$dir/centroids")
+    // dist(centroid + r̂, centroid) = ‖r̂‖ = rnorm, already rounded at
+    // encode time — the audit reads ONE double per row
+    private[ops] def healthDist(atRest: DataFrame,
+                                roundTo: Int): DataFrame =
+      atRest.select(col(model.idCol), col("rnorm").as("__d"))
+  }
 
   /** Build: assign cells (map-only broadcast argmin), then a plain
     * equi-join with the centroid table on centroid_id for the residual
@@ -4939,58 +4692,9 @@ object Ann {
   def defaultBitqRefine(metric: Metric): Int =
     if (metric == Cosine) 40 else 5
 
-  /** Asymmetric 1-bit L2 estimator, all codegen'd column math (no UDF):
-    * with qr = query − centroid and r̂ = rnorm·sign(bits)/√D,
-    * est‖q − v‖² = ‖qr‖² + rnorm² − 2·(rnorm/√D)·Σ signᵢ·qrᵢ.
-    * An ESTIMATOR, not a bound — so the contract is top-(k·refine) by
-    * estimate, exact re-rank of the survivors (same two-phase shape as
-    * [[searchIvfSq]]); the probed centroids ship as a query-derived
-    * broadcast (≤ probes rows), never the full centroid table.
-    * `refine <= 0` = auto ([[defaultBitqRefine]]). */
-  def searchIvfBitq(index: IvfBitIndex, idCol: String, vecCol: String,
-                    queryVec: Column, metric: Metric, probes: Int, k: Int,
-                    refine: Int = -1, roundTo: Int = 6): DataFrame =
-    bitqCandidates(index, idCol, queryVec, metric, probes,
-        k * (if (refine > 0) refine else defaultBitqRefine(metric)),
-        roundTo)
-      .withColumn("dist", round(metric.dist(
-        col(vecCol).cast("array<double>"), queryVec), roundTo))
-      .orderBy(col("dist").asc, col(idCol).asc)
-      .limit(k)
-      .select(col(idCol), col("dist"))
-
-  /** Phase-1 of [[searchIvfBitq]] alone: probed 1-bit estimator scan,
-    * top-`n` by (estimate, id) with all doc columns — the candidate
-    * generator for the declarative quantized rewrite (see
-    * [[sqCandidates]]). */
-  def bitqCandidates(index: IvfBitIndex, idCol: String, queryVec: Column,
-                     metric: Metric, probes: Int, n: Int,
-                     roundTo: Int = 6): DataFrame = {
-    // cosine index = spherical (see [[sqCandidates]]): normalized query,
-    // L2 estimator on the unit sphere
-    val (qv, m) =
-      if (metric == Cosine) (l2NormalizeQuery(queryVec), L2: Metric)
-      else (queryVec, metric)
-    val cellCol = index.model.idCol
-    val cells = probeCells(index.model, qv, m, probes)
-    val probedCents = index.model.centroids.join(broadcast(cells), Seq(cellCol))
-    val pruned = index.quantized.join(broadcast(probedCents), Seq(cellCol))
-    val qr = zip_with(qv, col(index.model.vecCol), (a, b) => a - b)
-    val qr2 = aggregate(transform(qr, x => x * x), lit(0.0), (a, x) => a + x)
-    val dot = aggregate(
-      zip_with(col("bits"), qr, (b, x) => (b * 2 - 1).cast("double") * x),
-      lit(0.0), (a, x) => a + x)
-    val est = qr2 + col("rnorm") * col("rnorm") -
-      lit(2.0) * col("rnorm") / sqrt(size(col("bits")).cast("double")) * dot
-    pruned
-      .withColumn("qdist", round(est, roundTo))
-      .orderBy(col("qdist").asc, col(idCol).asc)
-      .limit(n)
-  }
-
   private val BitqMetaMarker = "_graft_bitq_meta"
 
-  /** Idempotently establish a [[writeIvfBitq]]-shaped ROOT for
+  /** Idempotently establish a [[writeQuantized]] 1-bit ROOT for
     * streaming ingest ([[graft.streaming.Stream.ingestIvfBitq]]):
     * first call writes the centroid side table and pins the spherical
     * flag + model fingerprint; a restart with a different metric class
@@ -5023,7 +4727,7 @@ object Ann {
     * the residual, sign bits packed 1 bit/dim. Codes and rnorm are
     * bit-identical to the batch build's, so
     * [[graft.streaming.Stream.ingestIvfBitq]] appends are
-    * indistinguishable at rest from [[writeIvfBitq]] output. */
+    * indistinguishable at rest from [[writeQuantized]] output. */
   def assignQuantizeBitq(docs: DataFrame, vecCol: String,
                          model: IvfModel, metric: Metric,
                          roundTo: Int = 6): DataFrame = {
@@ -5047,54 +4751,213 @@ object Ann {
       .drop(model.vecCol, "__nvec")
   }
 
-  /** Persist an [[IvfBitIndex]] at rest: cell-partitioned parquet with
-    * bits PACKED 1 bit/dim ([[packBits]]) — 32× vs float32 for the code
-    * column — plus the centroid side table. */
-  def writeIvfBitq(index: IvfBitIndex, dir: String): Unit = {
-    index.quantized
-      .withColumn("bits", packBits(col("bits")))
-      .write.mode("overwrite").partitionBy(index.model.idCol)
-      .parquet(s"$dir/quantized")
-    index.model.centroids.write.mode("overwrite")
-      .parquet(s"$dir/centroids")
-  }
+  /** The candidate multiplier: `refine`, else the family default. */
+  private def refineOf(index: QuantIndex, refine: Int,
+                       metric: Metric): Int =
+    if (refine > 0) refine else index.family.defaultRefine(metric)
 
-  /** Load a [[writeIvfBitq]] layout (dims come from the centroid
-    * table); bits unpack at scan time. */
-  def loadIvfBitq(spark: org.apache.spark.sql.SparkSession,
-                  dir: String): IvfBitIndex = {
-    requireNoPendingMerge(spark, dir)
-    val model = ivfModelAt(spark, dir)
-    // dims from the memoized centroid array — no per-load head() job
-    val dims = model.collectedCentroids.headOption
-      .map(_._2.length)
-      .getOrElse(spark.read.parquet(s"$dir/centroids")
-        .select(size(col("centroid"))).head().getInt(0))
-    val quantized = spark.read.parquet(s"$dir/quantized")
-      .withColumn("bits", unpackBits(col("bits"), dims))
-    IvfBitIndex(quantized, model)
-  }
+  /** Refuse a query metric outside the space `pin` fixes: a spherical
+    * index serves cosine only, a non-spherical one never cosine. */
+  private def requireSpace(where: String, pin: Option[Boolean],
+                           metric: Metric): Unit =
+    pin.foreach(s => require(s == (metric == Cosine),
+      s"$where pins spherical=$s but the query metric is $metric — " +
+        "query a spherical index with metric = Cosine, any other with " +
+        "its build metric (L2)"))
 
-  /** [[searchIvfBitq]] over a stored layout with literal partition
-    * pruning (see [[searchIvfSqStored]]). */
-  def searchIvfBitqStored(spark: org.apache.spark.sql.SparkSession,
-                          dir: String, idCol: String, vecCol: String,
+  /** The phase-1 query and probe metric: a cosine index is spherical
+    * (built over normalized vectors — `spherical_centroids`,
+    * spec.py:437-444), so the query normalizes and phase 1 runs L2 on
+    * the unit sphere, ordering identical to cosine. */
+  private def phase1Query(queryVec: Column,
+                          metric: Metric): (Column, Metric) =
+    if (metric == Cosine) (l2NormalizeQuery(queryVec), L2)
+    else (queryVec, metric)
+
+  /** Phase 1 of [[searchQuantized]] alone: probe `probes` cells, scan
+    * the probed cells' codes, keep the top-`n` rows by (estimate, id)
+    * with all their columns — the candidate generator the declarative
+    * [[graft.plans.AnnTopKRule]] rewrite injects as a semi-join (its
+    * exact re-rank is the plan's own Sort+Limit). Cosine runs
+    * spherical ([[phase1Query]]). The per-cell side table (SQ bounds,
+    * 1-bit centroids) arrives as a broadcast of the ≤`probes` probed
+    * rows — query-derived, never the full table. */
+  def quantizedCandidates(index: QuantIndex, idCol: String,
                           queryVec: Column, metric: Metric, probes: Int,
-                          k: Int, refine: Int = -1,
-                          roundTo: Int = 6): DataFrame = {
-    val index = loadIvfBitq(spark, dir)
-    val cells = probeCellIds(index.model, queryVec, metric, probes)
-    val pruned = index.copy(quantized = index.quantized
-      .filter(col(index.model.idCol).isin(cells: _*)))
-    searchIvfBitq(pruned, idCol, vecCol, queryVec, metric, probes, k,
-      refine, roundTo)
+                          n: Int, roundTo: Int = 6): DataFrame = {
+    requireSpace("the index", index.sphericalPin, metric)
+    val (qv, m) = phase1Query(queryVec, metric)
+    val cellCol = index.model.idCol
+    val cells = broadcast(probeCells(index.model, qv, m, probes))
+    index.cellSide
+      .fold(index.rows.join(cells, Seq(cellCol)))(side =>
+        index.rows.join(broadcast(side.join(cells, Seq(cellCol))),
+          Seq(cellCol)))
+      .withColumn("qdist", round(index.estimate(qv), roundTo))
+      .orderBy(col("qdist").asc, col(idCol).asc)
+      .limit(n)
   }
+
+  /** Quantized IVF search: [[quantizedCandidates]] keeps the
+    * top-(k·refine) rows of the probed code scan, then the exact
+    * re-rank under the ORIGINAL metric over the ORIGINAL query.
+    * `refine <= 0` = the family default (5; 1-bit
+    * [[defaultBitqRefine]]). Returns (idCol, dist). */
+  def searchQuantized(index: QuantIndex, idCol: String, vecCol: String,
+                      queryVec: Column, metric: Metric, probes: Int,
+                      k: Int, refine: Int = -1,
+                      roundTo: Int = 6): DataFrame =
+    quantizedCandidates(index, idCol, queryVec, metric, probes,
+        k * refineOf(index, refine, metric), roundTo)
+      .withColumn("dist", round(metric.dist(
+        col(vecCol).cast("array<double>"), queryVec), roundTo))
+      .orderBy(col("dist").asc, col(idCol).asc)
+      .limit(k)
+      .select(col(idCol), col("dist"))
+
+  /** Batch quantized IVF kNN join — the query-log replay of
+    * [[searchQuantized]] in one job. The query set is collected on the
+    * driver (the [[knnJoin]] broadcast-queries contract) and each
+    * query's `probes` nearest cells go out as ONE broadcast
+    * (qid, cell, phase-1 query) relation; the batch's probed-cell
+    * union is also planted as a LITERAL isin, so an at-rest
+    * cell-partitioned layout prunes unprobed dirs with
+    * PartitionFilters. Phase 1 scores the probed rows' codes per
+    * query ([[QuantIndex.batchEstimate]] — SQ's codegen'd kernel, the
+    * 1-bit estimator, PQ's broadcast lookup tables) and keeps
+    * top-(k·refine) per query by (estimate, id) with a rank window;
+    * phase 2 joins ONLY the survivors' raw vectors against the
+    * broadcast raw queries for the exact per-query re-rank
+    * ([[Metric.dist]], bit-identical to [[Metric.distScala]]). Cosine
+    * runs spherical like [[quantizedCandidates]]. `refine <= 0` = the
+    * family default. Returns (qId, dId, dist, rank). */
+  def knnJoinQuantized(queries: DataFrame, qId: String, qVec: String,
+                       index: QuantIndex, dId: String, vecCol: String,
+                       metric: Metric, probes: Int, k: Int,
+                       refine: Int = -1, roundTo: Int = 6): DataFrame = {
+    requireSpace("the index", index.sphericalPin, metric)
+    val spark = queries.sparkSession
+    val qRows = queries
+      .select(col(qId).cast("long"), col(qVec).cast("array<double>"))
+      .collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    require(qRows.nonEmpty, "knnJoinQuantized over an empty query set")
+    val qPhase1 =
+      if (metric == Cosine) qRows.map { case (id, v) =>
+        (id, normalizeDriver(v))
+      } else qRows
+    val cents = collectCentroids(index.model)
+    val probeRows = qPhase1.flatMap { case (id, v) =>
+      nearestCellsDriver(v, cents, probes).map(cid => (id, cid, v.toSeq))
+    }.toSeq
+    import spark.implicits._
+    val cellCol = index.model.idCol
+    val probed = index.rows
+      .filter(col(cellCol).isin(probeRows.map(_._2).distinct: _*))
+      .join(broadcast(probeRows.toDF("__qid", cellCol, "__qv")),
+        Seq(cellCol))
+    val w1 = Window.partitionBy("__qid")
+      .orderBy(col("__qdist").asc, col(dId).asc)
+    val cand = index.cellSide
+      .fold(probed)(side => probed.join(broadcast(side), Seq(cellCol)))
+      .withColumn("__qdist", round(index.batchEstimate(qPhase1), roundTo))
+      .withColumn("__r", row_number().over(w1))
+      .filter(col("__r") <= k * refineOf(index, refine, metric))
+      .select(col("__qid"), col(dId))
+    val qRawDf = qRows.toSeq.map { case (id, v) => (id, v.toSeq) }
+      .toDF("__qid", "__qraw")
+    val w2 = Window.partitionBy("__qid")
+      .orderBy(col("dist").asc, col(dId).asc)
+    index.rows.select(col(dId), col(vecCol))
+      .join(broadcast(cand), Seq(dId))
+      .join(broadcast(qRawDf), Seq("__qid"))
+      .withColumn("dist", round(metric.dist(
+        col(vecCol).cast("array<double>"), col("__qraw")), roundTo))
+      .withColumn("rank", row_number().over(w2))
+      .filter(col("rank") <= k)
+      .select(col("__qid").as(qId), col(dId), col("dist"), col("rank"))
+  }
+
+  /** Persist a [[QuantIndex]] at rest: `dir/<dataSub>` is the row table
+    * disk-partitioned by the cell column with codes in their packed
+    * form (SQ 1 byte/dim, 1-bit 1 bit/dim, PQ m ints that
+    * dictionary-encode to ~1 byte/slot), so probed searches over the
+    * loaded layout prune whole cell directories; beside it the
+    * family's side tables (centroids; SQ bounds; PQ codebooks plus the
+    * (m, subDim, spherical) marker and codebook digest, so a reader
+    * cannot mis-assemble the lookup tables). */
+  def writeQuantized(index: QuantIndex, dir: String): Unit = {
+    index.pack(index.rows).write.mode("overwrite")
+      .partitionBy(index.model.idCol)
+      .parquet(s"$dir/${index.family.dataSub}")
+    index.writeSide(dir)
+  }
+
+  /** Load a [[writeQuantized]] root (family from [[quantizedRootFamily]];
+    * codes unpack at scan time). Refuses mid-merge
+    * ([[mergeUnderfullCellsQuantized]]'s torn window) and a dir that is
+    * no quantized root. */
+  def loadQuantized(spark: org.apache.spark.sql.SparkSession,
+                    dir: String): QuantIndex = loadPinned(spark, dir)._1
+
+  /** [[loadQuantized]] plus the spherical flag the root's marker pins
+    * (None on an unmarked root). */
+  private def loadPinned(spark: org.apache.spark.sql.SparkSession,
+                         dir: String): (QuantIndex, Option[Boolean]) = {
+    val (family, pin) = detectQuantized(spark, dir).getOrElse(
+      throw new IllegalStateException(s"$dir carries no SQ/PQ/1-bit " +
+        "geometry marker and no quantized layout — not a quantized root"))
+    requireNoPendingMerge(spark, dir)
+    val art = family.artifacts(spark, dir, ivfModelAt(spark, dir))
+    (art.withRows(art.unpack(
+      spark.read.parquet(s"$dir/${family.dataSub}"))), pin)
+  }
+
+  /** [[searchQuantized]] over a stored root: probe cells become a
+    * LITERAL isin on the partition column (PartitionFilters — whole
+    * unprobed cell directories are never read), then the usual
+    * phase-1 scan + exact re-rank. With a `fresh/` side table
+    * ([[appendQuantizedFreshIdempotent]]) the probed fresh rows are
+    * encoded on read under the root's frozen artifacts (the streaming
+    * transforms, bit-identical to the batch build's codes) and unioned
+    * in, so the result equals a one-shot rebuild that had always held
+    * them. `pred` is the metadata filter: it thins the stored rows AND
+    * the fresh slice BEFORE the phase-1 cut, so disallowed rows never
+    * consume refine slots. A metric outside the space the root's
+    * marker pins refuses. */
+  def searchQuantizedStored(spark: org.apache.spark.sql.SparkSession,
+                            dir: String, idCol: String, vecCol: String,
+                            queryVec: Column, metric: Metric,
+                            probes: Int, k: Int, refine: Int = -1,
+                            roundTo: Int = 6,
+                            pred: Column = lit(true)): DataFrame = {
+    val (index, pin) = loadPinned(spark, dir)
+    requireSpace(dir, pin, metric)
+    val (qv, m) = phase1Query(queryVec, metric)
+    val cells = probeCellIds(index.model, qv, m, probes)
+    val all = withFresh(spark, dir, index,
+      index.rows.filter(col(index.model.idCol).isin(cells: _*)), cells,
+      vecCol, metric)
+    searchQuantized(index.withRows(all.filter(pred)), idCol, vecCol,
+      queryVec, metric, probes, k, refine, roundTo)
+  }
+
+  /** `rows` plus the root's fresh rows in `cells`, encoded on read
+    * under `index`'s artifacts ([[freshEncodedForQuery]]). */
+  private def withFresh(spark: org.apache.spark.sql.SparkSession,
+                        dir: String, index: QuantIndex, rows: DataFrame,
+                        cells: Array[Long], vecCol: String,
+                        metric: Metric): DataFrame =
+    freshEncodedForQuery(spark, dir, cells,
+        fr => index.unpack(index.encode(fr, vecCol, metric)))
+      .map(f => rows.unionByName(f.select(rows.columns.map(col): _*)))
+      .getOrElse(rows)
 
   // --- Quantized-root fresh-rows maintenance --------------------------
   //
-  // The quantized layouts (SQ [[writeIvfSq]], PQ [[writeIvfPq]], 1-bit
-  // [[writeIvfBitq]]) bind their codes to training-time bounds /
-  // codebooks, so unlike the exact layouts they cannot simply grow —
+  // The quantized layouts ([[writeQuantized]]: SQ, PQ, 1-bit) bind
+  // their codes to training-time bounds / codebooks, so unlike the
+  // exact layouts they cannot simply grow —
   // but at 100 TB a streaming corpus cannot take a full rebuild per
   // append cycle either. The standard incremental answer (the shape the
   // reference's underlying index maintains postings with —
@@ -5110,15 +4973,48 @@ object Ann {
   // and phase-2 re-ranks are indistinguishable from a layout that had
   // always contained the rows.
 
-  /** Family + data-subdir + spherical flag of a quantized root, read
-    * from its geometry marker — refuses a dir that is none of the
-    * three (an unmarked dir must never silently become a fresh-rows
-    * root: adopt-on-append would mix geometries). */
-  private def quantizedFamily(spark: org.apache.spark.sql.SparkSession,
-                              dir: String): (String, String, Boolean) = {
-    // every fresh-family entry point (append/search/compact/delete)
+  /** The family of the quantized root at `dir` and the spherical flag
+    * its geometry marker pins. `ensure*Root` (PQ: also
+    * [[writeQuantized]]) writes the marker; a root written by
+    * [[writeQuantized]] alone self-describes by layout instead, as
+    * [[isRangeRoot]]'s do — SQ keeps its `bounds/` side table, 1-bit
+    * only `quantized/` codes — and pins no flag. None for any other
+    * dir. */
+  private def detectQuantized(spark: org.apache.spark.sql.SparkSession,
+                              dir: String)
+      : Option[(QuantFamily, Option[Boolean])] =
+    Iterator[QuantFamily](Pq, Sq, Bitq)
+      .flatMap(f => graft.io.Markers.read(spark, dir, f.marker)
+        .map(meta => (f, Some(f.pinnedSpherical(meta)))))
+      .nextOption()
+      .orElse {
+        val root = new org.apache.hadoop.fs.Path(dir)
+        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        def has(sub: String) =
+          fs.exists(new org.apache.hadoop.fs.Path(root, sub))
+        if (has("bounds")) Some((Sq, None))
+        else if (has(Bitq.dataSub)) Some((Bitq, None))
+        else None
+      }
+
+  /** The quantized family of the root at `dir` (marker or layout —
+    * [[detectQuantized]]), None when it is none of the three: the
+    * self-description the engine's attach and maintenance seats and
+    * the streaming start-time refusal dispatch on. */
+  def quantizedRootFamily(spark: org.apache.spark.sql.SparkSession,
+                          dir: String): Option[QuantFamily] =
+    detectQuantized(spark, dir).map(_._1)
+
+  /** Family + pinned spherical flag of a MARKED quantized root —
+    * refuses an unmarked dir (an unpinned root must never silently
+    * become a fresh-rows root or a maintenance target: adopt-on-append
+    * would mix geometries) and, like every quantized reader, a root
+    * mid-merge. */
+  private[graft] def quantizedFamily(spark: org.apache.spark.sql.SparkSession,
+                                     dir: String): (QuantFamily, Boolean) = {
+    // every fresh-family entry point (append/compact/delete/health)
     // funnels through this detect — the ONE guard seat for the
-    // quantized torn-merge refusal (the load* seats cover searches)
+    // quantized torn-merge refusal (loadQuantized covers searches)
     requireNoPendingMerge(spark, dir)
     quantizedFamilyUnguarded(spark, dir)
   }
@@ -5128,43 +5024,12 @@ object Ann {
     * guarded readers refuse. */
   private def quantizedFamilyUnguarded(
       spark: org.apache.spark.sql.SparkSession,
-      dir: String): (String, String, Boolean) =
-    graft.io.Markers.read(spark, dir, PqMetaMarker) match {
-      case Some(meta) => ("pq", "encoded", meta.split(",")(2).toBoolean)
-      case None => graft.io.Markers.read(spark, dir, SqMetaMarker) match {
-        case Some(s) => ("sq", "quantized", s.toBoolean)
-        case None =>
-          graft.io.Markers.read(spark, dir, BitqMetaMarker) match {
-            case Some(s) => ("bitq", "quantized", s.toBoolean)
-            case None => throw new IllegalStateException(
-              s"$dir carries no SQ/PQ/1-bit geometry marker — not a " +
-                "quantized root; pin the layout at build time " +
-                "(writeIvfSq/writeIvfPq/writeIvfBitq + ensure*Root)")
-          }
-      }
-    }
-
-  /** True when `dir` carries one of the three quantized geometry
-    * markers — the start-time refusal probe for
-    * [[graft.streaming.Stream.ingestQuantizedFreshAppend]]. */
-  def isQuantizedRoot(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): Boolean =
-    graft.io.Markers.read(spark, dir, PqMetaMarker).nonEmpty ||
-      graft.io.Markers.read(spark, dir, SqMetaMarker).nonEmpty ||
-      graft.io.Markers.read(spark, dir, BitqMetaMarker).nonEmpty
-
-  /** Public (family, spherical) probe of a quantized root — what a
-    * caller that must DISPATCH on the family (the declarative
-    * [[graft.plans.Binding.quantizedRoot]] — SQ, PQ and
-    * 1-bit resolve to different index loaders and refine defaults)
-    * needs from the geometry marker without reading any data.
-    * Guarded like every quantized reader: refuses mid-merge and
-    * refuses unmarked dirs with the family's typed message. */
-  def quantizedRootFamily(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): (String, Boolean) = {
-    val (family, _, spherical) = quantizedFamily(spark, dir)
-    (family, spherical)
-  }
+      dir: String): (QuantFamily, Boolean) =
+    detectQuantized(spark, dir).collect { case (f, Some(s)) => (f, s) }
+      .getOrElse(throw new IllegalStateException(
+        s"$dir carries no SQ/PQ/1-bit geometry marker — not a pinned " +
+          "quantized root; pin the layout at build time " +
+          "(writeQuantized + ensure*Root)"))
 
   private def freshPath(dir: String) = s"$dir/fresh"
 
@@ -5182,7 +5047,7 @@ object Ann {
     * assign normalized-query-side, the geometry their stored
     * centroids live in) and land RAW under `fresh/` partitioned by
     * centroid_id — no codes are computed at append time: encoding is
-    * deferred to query ([[searchIvfSqStoredFresh]] family) and to
+    * deferred to query ([[searchQuantizedStored]]) and to
     * [[compactQuantizedFresh]]. The existence probe reads ONLY the
     * touched cells' partitions of `fresh/` AND of the main layout (a
     * batch redelivered AFTER compaction must also append nothing), so
@@ -5214,7 +5079,8 @@ object Ann {
       spark: org.apache.spark.sql.SparkSession, dir: String,
       newRows: DataFrame, idCol: String, vecCol: String,
       probeAllCells: Boolean = false): Long = {
-    val (family, dataSub, spherical) = quantizedFamily(spark, dir)
+    val (family, spherical) = quantizedFamily(spark, dir)
+    val dataSub = family.dataSub
     if (readIvfModelMarker(spark, dir).isEmpty)
       throw new IllegalStateException(
         s"appendQuantizedFreshIdempotent: $dir has no IVF model " +
@@ -5258,8 +5124,7 @@ object Ann {
       // poison fresh/ and surface as an unresolved column at query
       // time, far from the bad write (appendIvfIdempotent's rule)
       val expected = org.apache.spark.sql.types.StructType(
-        main.schema.filterNot(f => quantizedCodeCols(family)
-          .contains(f.name)))
+        main.schema.filterNot(f => family.codeCols.contains(f.name)))
       requireAppendSchema(expected, fresh.schema, Set(model.idCol),
         "appendQuantizedFreshIdempotent")
       fresh.write.mode("append").partitionBy(model.idCol)
@@ -5267,15 +5132,6 @@ object Ann {
     }
     n
   }
-
-  /** The columns a quantized family's main layout carries BEYOND the
-    * raw doc columns — what fresh rows must NOT carry. */
-  private def quantizedCodeCols(family: String): Set[String] =
-    family match {
-      case "pq" => Set("pq_codes")
-      case "sq" => Set("codes")
-      case _ => Set("bits", "rnorm")
-    }
 
   /** The assignment-geometry consistency probe behind
     * [[appendQuantizedFreshIdempotent]]: the marker expresses only
@@ -5383,124 +5239,25 @@ object Ann {
       .filter(col("centroid_id").isin(cells: _*))
       .drop("centroid_id")))
 
-  /** [[searchIvfSqStored]] over a root WITH a fresh side table: the
-    * probed fresh rows are SQ-encoded on read under the stored bounds
-    * ([[assignQuantizeSq]] — bit-identical to the batch build's codes)
-    * and unioned into the asymmetric scan, so the result equals a
-    * one-shot rebuild that had always contained them. `pred` is the
-    * family's metadata filter with the r82 placement, composed with
-    * the fresh story for the first time: it thins the main codes scan
-    * AND the encode-on-read fresh slice BEFORE the phase-1 cut
-    * (Catalyst pushes the one filter through the union into both
-    * scans), so disallowed rows never consume refine slots — a
-    * post-cut filter would starve the result set under a selective
-    * predicate exactly as the non-fresh filtered family documents. */
-  def searchIvfSqStoredFresh(spark: org.apache.spark.sql.SparkSession,
-                             dir: String, idCol: String, vecCol: String,
-                             queryVec: Column, metric: Metric,
-                             probes: Int, k: Int, refine: Int = 5,
-                             roundTo: Int = 6,
-                             pred: Column = lit(true)): DataFrame = {
-    val index = loadIvfSq(spark, dir)
-    val spherical = graft.io.Markers.read(spark, dir, SqMetaMarker)
-      .exists(_.toBoolean)
-    require(spherical == (metric == Cosine),
-      s"$dir pins spherical=$spherical but the query metric is $metric")
-    val cells = probeCellIds(index.model, queryVec, metric, probes)
-    val stored = index.quantized
-      .filter(col(index.model.idCol).isin(cells: _*))
-    val all = freshEncodedForQuery(spark, dir, cells, fr =>
-        assignQuantizeSq(fr, vecCol, index, metric)
-          .withColumn("codes", unpackCodes(col("codes"))))
-      .map(f => stored.unionByName(f.select(stored.columns.map(col): _*)))
-      .getOrElse(stored)
-    searchIvfSq(index.copy(quantized = all.filter(pred)), idCol, vecCol,
-      queryVec, metric, probes, k, refine, roundTo)
-  }
-
-  /** [[searchIvfPqStored]] over a root WITH a fresh side table — the
-    * PQ member: probed fresh rows PQ-encode on read under the stored
-    * codebooks ([[assignEncodePq]], bit-identical to the batch
-    * build's codes) and join both the ADC phase and the exact
-    * re-rank. */
-  def searchIvfPqStoredFresh(spark: org.apache.spark.sql.SparkSession,
-                             dir: String, idCol: String, vecCol: String,
-                             query: Seq[Double], metric: Metric,
-                             probes: Int, k: Int, refine: Int = 5,
-                             roundTo: Int = 6,
-                             pred: Column = lit(true)): DataFrame = {
-    val index = loadIvfPq(spark, dir)
-    require(index.spherical == (metric == Cosine),
-      s"$dir pins spherical=${index.spherical} but the query metric " +
-        s"is $metric")
-    searchIvfPqRestricted(index, (stored, cells) =>
-      // index.model holds the STORED (spherical ⇒ already-normalized)
-      // centroids; assignEncodePq re-normalizes idempotently. `pred`
-      // thins BOTH sides before the ADC cut (r82 placement — a
-      // disallowed row must never consume a refine slot)
-      freshEncodedForQuery(spark, dir, cells, fr =>
-          assignEncodePq(fr, vecCol, index.pq, index.model, metric))
-        .map(f =>
-          stored.unionByName(f.select(stored.columns.map(col): _*)))
-        .getOrElse(stored).filter(pred),
-      idCol, vecCol, query, metric, probes, k, refine, roundTo)
-  }
-
-  /** [[searchIvfBitqStored]] over a root WITH a fresh side table — the
-    * 1-bit member ([[assignQuantizeBitq]] on read). */
-  def searchIvfBitqStoredFresh(spark: org.apache.spark.sql.SparkSession,
-                               dir: String, idCol: String,
-                               vecCol: String, queryVec: Column,
-                               metric: Metric, probes: Int, k: Int,
-                               refine: Int = -1,
-                               roundTo: Int = 6,
-                               pred: Column = lit(true)): DataFrame = {
-    val index = loadIvfBitq(spark, dir)
-    val spherical = graft.io.Markers.read(spark, dir, BitqMetaMarker)
-      .exists(_.toBoolean)
-    require(spherical == (metric == Cosine),
-      s"$dir pins spherical=$spherical but the query metric is $metric")
-    val dims = index.model.centroids
-      .select(size(col(index.model.vecCol))).head().getInt(0)
-    val cells = probeCellIds(index.model, queryVec, metric, probes)
-    val stored = index.quantized
-      .filter(col(index.model.idCol).isin(cells: _*))
-    val all = freshEncodedForQuery(spark, dir, cells, fr =>
-        assignQuantizeBitq(fr, vecCol, index.model, metric)
-          .withColumn("bits", unpackBits(col("bits"), dims)))
-      .map(f => stored.unionByName(f.select(stored.columns.map(col): _*)))
-      .getOrElse(stored)
-    searchIvfBitq(index.copy(quantized = all.filter(pred)), idCol,
-      vecCol, queryVec, metric, probes, k, refine, roundTo)
-  }
-
   /** Fresh-aware BATCH kNN join over a quantized root — the query-log
-    * replay twin of the [[searchIvfSqStoredFresh]] family, closing the
-    * intersection of the two maintenance stories: a
-    * streaming-maintained SQ/PQ/1-bit root is exactly the layout an
-    * eval loop replays a query log against, yet the fresh-aware
-    * searches were single-query only, forcing Q per-query driver
-    * round-trips over the live index (the anti-pattern the batch
-    * family exists to kill). Family auto-detected from the geometry
-    * marker ([[quantizedFamily]]); the BATCH's probed-cell UNION —
-    * each query's `probes` nearest stored centroids under the
-    * delegates' own driver-side arithmetic (spherical roots rank
-    * normalized queries against the stored already-normalized
-    * centroids, L2 on the unit sphere) — prunes `fresh/` to the
+    * replay twin of [[searchQuantizedStored]]: a streaming-maintained
+    * root is exactly the layout an eval loop replays a query log
+    * against, and per-query stored searches would cost Q driver
+    * round-trips. The BATCH's probed-cell UNION — each query's
+    * `probes` nearest stored centroids under [[knnJoinQuantized]]'s
+    * own driver-side arithmetic (spherical roots rank normalized
+    * queries, L2 on the unit sphere) — prunes `fresh/` to the
     * partitions ANY query in the batch can see BEFORE encode-on-read
     * ([[freshEncodedForQuery]]'s contract, batch form: fresh IO is
     * bounded by the union's fraction, never |fresh|), the encoded
-    * slice unions into the main layout's frame, and the whole job
-    * delegates to the oracled [[knnJoinIvfSq]] /
-    * [[knnJoinIvfPq]]/[[knnJoinIvfPqCos]] / [[knnJoinIvfBitq]] — whose
-    * own per-query cell joins restrict each query to ITS probed
-    * cells, so per-query results are identical to the single-query
-    * fresh-aware searches (specced) and to a one-shot rebuild that
-    * had always held the fresh rows (the family's
-    * results-invisibility contract, r87-gated). No fresh side table ⇒
-    * pure delegation over the main layout. `refine <= 0` = auto (5
-    * for SQ/PQ, [[defaultBitqRefine]] for 1-bit). Returns
-    * (qId, dId, dist, rank). */
+    * slice unions into the main layout's rows, and the whole job
+    * delegates to [[knnJoinQuantized]] — whose per-query cell joins
+    * restrict each query to ITS probed cells, so per-query results
+    * equal the single-query [[searchQuantizedStored]] and a one-shot
+    * rebuild that had always held the fresh rows. No fresh side table
+    * ⇒ pure delegation over the main layout. `pred` thins main AND
+    * fresh before every per-query cut. `refine <= 0` = the family
+    * default. Returns (qId, dId, dist, rank). */
   def knnJoinQuantizedFresh(spark: org.apache.spark.sql.SparkSession,
                             dir: String, queries: DataFrame,
                             qId: String, qVec: String, dId: String,
@@ -5508,9 +5265,8 @@ object Ann {
                             probes: Int, k: Int, refine: Int = -1,
                             roundTo: Int = 6,
                             pred: Column = lit(true)): DataFrame = {
-    val (family, _, spherical) = quantizedFamily(spark, dir)
-    require(spherical == (metric == Cosine),
-      s"$dir pins spherical=$spherical but the query metric is $metric")
+    val (index, pin) = loadPinned(spark, dir)
+    requireSpace(dir, pin, metric)
     // ONE evaluation of the query frame: the fresh-pruning union and
     // the delegate's own probes must see the SAME rows — a second
     // evaluation of a non-deterministic input (limit/sample) could
@@ -5526,64 +5282,16 @@ object Ann {
     val qLocal = spark.createDataFrame(
       java.util.Arrays.asList(collected: _*), qProjected.schema)
     val qVecs = collected.map(_.getSeq[Double](1).toArray)
-    // the batch's probed-cell union — the same (L2 dist, cell id)
-    // sorted-take the delegate operators run per query, so the fresh
-    // slice covers exactly the cells any query's own probe can reach
-    def unionCells(model: IvfModel): Array[Long] = {
-      val cents = collectCentroids(model)
-      val phase1 = if (spherical) qVecs.map(normalizeDriver) else qVecs
-      // LITERALLY the delegates' probe arithmetic
-      // ([[nearestCellsDriver]] + [[normalizeDriver]] — one shared
-      // implementation, not a re-derivation), so the union covers
-      // exactly the cells any delegate's own probe can reach
-      phase1.flatMap(v => nearestCellsDriver(v, cents, probes)).distinct
-    }
-    val rf = if (refine > 0) refine else 5
-    family match {
-      case "sq" =>
-        val index = loadIvfSq(spark, dir)
-        val all = freshEncodedForQuery(spark, dir,
-            unionCells(index.model), fr =>
-              assignQuantizeSq(fr, vecCol, index, metric)
-                .withColumn("codes", unpackCodes(col("codes"))))
-          .map(f => index.quantized.unionByName(
-            f.select(index.quantized.columns.map(col): _*)))
-          .getOrElse(index.quantized)
-        // pred thins main AND fresh before every per-query cut (r82
-        // placement, batch form) — same seat in all three families
-        knnJoinIvfSq(qLocal, qId, qVec,
-          index.copy(quantized = all.filter(pred)),
-          dId, vecCol, metric, probes, k, rf, roundTo)
-      case "pq" =>
-        val index = loadIvfPq(spark, dir)
-        val all = freshEncodedForQuery(spark, dir,
-            unionCells(index.model), fr =>
-              assignEncodePq(fr, vecCol, index.pq, index.model, metric))
-          .map(f => index.encoded.unionByName(
-            f.select(index.encoded.columns.map(col): _*)))
-          .getOrElse(index.encoded)
-        val aug = index.copy(encoded = all.filter(pred))
-        if (metric == Cosine)
-          knnJoinIvfPqCos(qLocal, qId, qVec, aug, dId, vecCol,
-            probes, k, rf, roundTo)
-        else
-          knnJoinIvfPq(qLocal, qId, qVec, aug, dId, vecCol,
-            probes, k, rf, roundTo)
-      case _ =>
-        val index = loadIvfBitq(spark, dir)
-        val dims = index.model.centroids
-          .select(size(col(index.model.vecCol))).head().getInt(0)
-        val all = freshEncodedForQuery(spark, dir,
-            unionCells(index.model), fr =>
-              assignQuantizeBitq(fr, vecCol, index.model, metric)
-                .withColumn("bits", unpackBits(col("bits"), dims)))
-          .map(f => index.quantized.unionByName(
-            f.select(index.quantized.columns.map(col): _*)))
-          .getOrElse(index.quantized)
-        knnJoinIvfBitq(qLocal, qId, qVec,
-          index.copy(quantized = all.filter(pred)),
-          dId, vecCol, metric, probes, k, refine, roundTo)
-    }
+    // LITERALLY the delegate's probe arithmetic ([[nearestCellsDriver]]
+    // + [[normalizeDriver]] — one shared implementation), so the union
+    // covers exactly the cells any query's own probe can reach
+    val cents = collectCentroids(index.model)
+    val cells = (if (metric == Cosine) qVecs.map(normalizeDriver) else qVecs)
+      .flatMap(v => nearestCellsDriver(v, cents, probes)).distinct
+    val all = withFresh(spark, dir, index, index.rows, cells, vecCol,
+      metric)
+    knnJoinQuantized(qLocal, qId, qVec, index.withRows(all.filter(pred)),
+      dId, vecCol, metric, probes, k, refine, roundTo)
   }
 
   /** Fold a quantized root's fresh side table into its main layout —
@@ -5599,24 +5307,14 @@ object Ann {
   def compactQuantizedFresh(spark: org.apache.spark.sql.SparkSession,
                             dir: String, idCol: String,
                             vecCol: String): Long = {
-    val (family, dataSub, spherical) = quantizedFamily(spark, dir)
+    val (family, spherical) = quantizedFamily(spark, dir)
     if (!freshExists(spark, dir)) return 0L
     val metric = if (spherical) Cosine else (L2: Metric)
     val fresh = spark.read.parquet(freshPath(dir)).drop("centroid_id")
-    val encoded = family match {
-      case "sq" =>
-        assignQuantizeSq(fresh, vecCol, loadIvfSqMeta(spark, dir), metric)
-      case "pq" =>
-        val idx = loadIvfPq(spark, dir)
-        assignEncodePq(fresh, vecCol, idx.pq, idx.model, metric)
-      case _ =>
-        val model = ivfModelAt(spark, dir)
-        // assignQuantizeBitq already packs bits — its output IS the
-        // at-rest form ingestIvfBitq appends verbatim (a second
-        // packBits over the binary column would throw)
-        assignQuantizeBitq(fresh, vecCol, model, metric)
-    }
-    val mainPath = s"$dir/$dataSub"
+    // the at-rest form ingestIvf* appends verbatim (codes packed)
+    val encoded = family.artifacts(spark, dir, ivfModelAt(spark, dir))
+      .encode(fresh, vecCol, metric)
+    val mainPath = s"$dir/${family.dataSub}"
     val stored = spark.read.parquet(mainPath)
     val touched = distinctLongKeys(encoded, col("centroid_id"))
     val existing = stored.filter(col("centroid_id").isin(touched: _*))
@@ -5665,10 +5363,10 @@ object Ann {
         !maxFreshRatio.isInfinity,
       s"compactQuantizedFreshIfNeeded: maxFreshRatio must be a " +
         s"finite ratio >= 0, got $maxFreshRatio")
-    val (_, dataSub, _) = quantizedFamily(spark, dir)
+    val (family, _) = quantizedFamily(spark, dir)
     if (!freshExists(spark, dir)) return None
     val freshN = spark.read.parquet(freshPath(dir)).count()
-    val mainN = spark.read.parquet(s"$dir/$dataSub").count()
+    val mainN = spark.read.parquet(s"$dir/${family.dataSub}").count()
     if (freshN > maxFreshRatio * mainN)
       Some(compactQuantizedFresh(spark, dir, idCol, vecCol))
     else None
@@ -5692,8 +5390,8 @@ object Ann {
     * rows would produce (spherical roots re-assign normalized, raw
     * vecCol stays for the exact re-rank; bounds/codebooks stay frozen
     * — the ensure*Root digest pins survive). ALL quantized readers,
-    * appends and compactions refuse mid-merge ([[loadIvfSq]]/
-    * [[loadIvfPq]]/[[loadIvfBitq]] + [[quantizedFamily]] seats;
+    * appends and compactions refuse mid-merge ([[loadQuantized]] +
+    * [[quantizedFamily]] seats;
     * cell-dir deletes refuse through [[deleteStoredImpl]]'s parent
     * guard). Refuses while a `fresh/` side table exists (compact
     * first — a merge would orphan fresh rows homed in doomed cells).
@@ -5740,7 +5438,7 @@ object Ann {
       spark: org.apache.spark.sql.SparkSession, dir: String,
       vecCol: String, maxRows: Long,
       iters: Int = 2): Map[Long, Seq[Long]] = {
-    val (family, dataSub, spherical) = quantizedFamilyUnguarded(spark, dir)
+    val (family, spherical) = quantizedFamilyUnguarded(spark, dir)
     require(!freshExists(spark, dir),
       s"splitOverfullCellsQuantized: $dir carries a fresh/ side " +
         "table — compact it first (compactQuantizedFresh); fresh " +
@@ -5750,32 +5448,12 @@ object Ann {
       if (spherical)
         ((df: DataFrame) => withNormalized(df, vecCol, "__nv"), "__nv")
       else (identity[DataFrame] _, vecCol)
-    // SQ bounds inheritance — each sub-cell DUPLICATES its parent's
-    // frozen bounds row, keeping every inherited code decodable;
-    // filter-out-then-union so a crashed run's re-execution with the
-    // same fresh ids cannot duplicate bounds rows (duplicates fan out
-    // in every bounds join, doubling ids in search results)
-    val preDissolve: Seq[(Long, Long)] => Unit =
-      if (family == "sq") { newIds =>
-        val fs = new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val bounds = spark.read.parquet(s"$dir/bounds")
-        val cidType = bounds.schema("centroid_id").dataType
-        val dup = newIds.map { case (old, nid) =>
-          bounds.filter(col("centroid_id").cast("long") === old)
-            .withColumn("centroid_id", lit(nid).cast(cidType)) }
-          .reduce(_ unionByName _)
-        val subIds = newIds.map(_._2)
-        swapSideTable(fs, dir, "bounds",
-          bounds.filter(!col("centroid_id").cast("long")
-              .isin(subIds: _*))
-            .unionByName(dup).localCheckpoint(true))
-      } else (_: Seq[(Long, Long)]) => ()
-    splitViaDissolve(spark, dir, maxRows, iters, dataSub = dataSub,
-      growRadii = false, prep = prep, spaceCol = spaceCol,
+    splitViaDissolve(spark, dir, maxRows, iters,
+      dataSub = family.dataSub, growRadii = false, prep = prep,
+      spaceCol = spaceCol,
       // spherical sub-centroids store UNIT (disk-verbatim readers)
       centroidForm = if (spherical) l2Normalize else identity,
-      preDissolve = preDissolve,
+      preDissolve = family.inheritSide(spark, dir, _),
       dissolve = parents => {
         mergeQuantizedImpl(spark, dir, vecCol, minRows = 1L,
           doomed = Some(parents), who = "splitOverfullCellsQuantized")
@@ -5793,28 +5471,19 @@ object Ann {
       spark: org.apache.spark.sql.SparkSession, dir: String,
       vecCol: String, minRows: Long, doomed: Option[Seq[Long]],
       who: String): Map[Long, Long] = {
-    val (family, dataSub, spherical) = quantizedFamilyUnguarded(spark, dir)
+    val (family, spherical) = quantizedFamilyUnguarded(spark, dir)
     require(!freshExists(spark, dir),
       s"$who: $dir carries a fresh/ side " +
         "table — compact it first (compactQuantizedFresh); a merge " +
         "would orphan fresh rows homed in doomed cells")
     val metric = if (spherical) Cosine else (L2: Metric)
-    val stored = spark.read.parquet(s"$dir/$dataSub")
+    val stored = spark.read.parquet(s"$dir/${family.dataSub}")
     mergeUnderfullImpl(spark, dir, minRows, growRadii = false,
-      radiiVecCol = "", dataSub = dataSub, doomed = doomed,
+      radiiVecCol = "", dataSub = family.dataSub, doomed = doomed,
       reassign = (dropped, reduced) => {
-        val raw = quantizedCodeCols(family).foldLeft(dropped)(_ drop _)
-        val encoded = family match {
-          case "sq" =>
-            assignQuantizeSq(raw, vecCol,
-              IvfSqIndex(spark.emptyDataFrame,
-                spark.read.parquet(s"$dir/bounds"), reduced), metric)
-          case "pq" =>
-            val (pq, _, _) = loadPqArtifacts(spark, dir)
-            assignEncodePq(raw, vecCol, pq, reduced, metric)
-          case _ =>
-            assignQuantizeBitq(raw, vecCol, reduced, metric)
-        }
+        val raw = family.codeCols.foldLeft(dropped)(_ drop _)
+        val encoded = family.artifacts(spark, dir, reduced)
+          .encode(raw, vecCol, metric)
         // guard + order-normalize against the stored footer: a
         // drifted encode transform must fail HERE, not as a
         // nondeterministic mixed-schema read at query time
@@ -5848,20 +5517,11 @@ object Ann {
       n
     }
 
-  /** The SQ index SANS data — bounds + centroids only, for transforms
-    * that need the trained artifacts but not the quantized frame
-    * (compaction encodes the fresh rows, not the corpus). */
-  private def loadIvfSqMeta(spark: org.apache.spark.sql.SparkSession,
-                            dir: String): IvfSqIndex =
-    IvfSqIndex(spark.emptyDataFrame,
-      spark.read.parquet(s"$dir/bounds"),
-      ivfModelAt(spark, dir))
-
   /** Pack 0/1 bit codes into a `binary` column, 8 bits per byte
     * MSB-first (dims pad to a whole byte) — the at-rest form of a
     * [[IvfBitIndex]]: 1 bit/dim in storage, shuffle buffers, and
     * executor memory. [[unpackBits]] restores `array<int>` for
-    * [[searchIvfBitq]]'s estimator. */
+    * the 1-bit estimator ([[IvfBitIndex]]). */
   def packBits(bits: Column): Column = {
     val pack = udf { (bs: Seq[Int]) =>
       val out = new Array[Byte]((bs.length + 7) / 8)
@@ -5975,7 +5635,7 @@ object Ann {
 
   /** DELETE from a stored cell-partitioned index layout
     * ([[writePartitioned]] dir, or the `quantized` subdir of
-    * [[writeIvfSq]] / [[writeIvfBitq]]): rewrite ONLY the cell
+    * [[writeQuantized]] SQ / 1-bit roots): rewrite ONLY the cell
     * directories that contain matching rows — the index-maintenance
     * twin of the reference's `DELETE` (which PostgreSQL's index AM
     * gives it for free, /root/reference/vechord/client.py:268-283).

@@ -101,14 +101,27 @@ object Binding {
     * ~hundreds of MB of driver heap — prefer [[ProbeDist]] or the
     * executor-side probe path ([[graft.ops.Ann.searchIvf]] /
     * [[graft.ops.Ann.knnJoinIvf]], broadcast-variable centroids)
-    * beyond that. */
+    * beyond that.
+    *
+    * `layout` (with `idCol`) is the assigned layout — rows with their
+    * `cellCol` — for a table that does not carry the cell column
+    * itself (the Engine's tables): the rule then cuts the scanned
+    * table with an id semi-join against the layout rows in the probed
+    * cells. `layout` runs at every rewrite, like `cents`. */
   final case class Probe(vecCol: String, cellCol: String,
                          cents: () => Seq[(Long, Array[Double])],
                          metric: Ann.Metric, probes: Int,
-                         owner: String = "") extends Binding {
+                         owner: String = "", idCol: String = "",
+                         layout: Option[() => DataFrame] = None)
+      extends Binding {
     def column: String = vecCol
     def probeCells(q: Array[Double]): Seq[Long] =
       nearestCells(cents(), q, metric, probes)
+    /** The ids of the layout rows in the probed cells, aliased for a
+      * fresh exprId (see [[Quantized]]). */
+    def probedIds(rows: DataFrame, q: Array[Double]): DataFrame =
+      rows.filter(col(cellCol).isin(probeCells(q): _*))
+        .select(col(idCol).as(s"__cand_$idCol"))
   }
 
   /** EXECUTOR-SIDE probe selection — the fallback past [[Probe]]'s
@@ -224,27 +237,15 @@ object Binding {
     require(metric == Ann.L2 || metric == Ann.Cosine,
       "quantized rewrite supports L2 and cosine (spherical) only")
     def column: String = vecCol
-    /** The candidate multiplier for `index`: `refine`, else 5 — 1-bit:
-      * [[Ann.defaultBitqRefine]] (the spherical estimator needs a larger
-      * exact-re-rank budget than L2). */
+    /** The candidate multiplier for `index`: `refine`, else the
+      * family's default (5; 1-bit [[Ann.defaultBitqRefine]] — the
+      * spherical estimator needs a larger exact-re-rank budget). */
     def refineFor(index: Ann.QuantIndex): Int =
-      if (refine > 0) refine
-      else index match {
-        case _: Ann.IvfBitIndex => Ann.defaultBitqRefine(metric)
-        case _ => 5
-      }
+      if (refine > 0) refine else index.family.defaultRefine(metric)
     def candidateIds(q: Array[Double], k: Int): DataFrame = {
       val index = resolve()
-      val n = math.max(k * refineFor(index), k)
-      (index match {
-        case ix: Ann.IvfSqIndex =>
-          Ann.sqCandidates(ix, idCol, typedlit(q.toSeq), metric, probes, n)
-        case ix: Ann.IvfBitIndex =>
-          Ann.bitqCandidates(ix, idCol, typedlit(q.toSeq), metric, probes,
-            n)
-        case ix: Ann.IvfPqIndex =>
-          Ann.pqCandidates(ix, idCol, q.toSeq, metric, probes, n)
-      })
+      Ann.quantizedCandidates(index, idCol, typedlit(q.toSeq), metric,
+          probes, math.max(k * refineFor(index), k))
         // Alias mints a FRESH exprId: the index tables usually derive
         // from the very relation the rewritten plan scans, and a
         // semi-join whose right output reuses the left's exprIds is an
@@ -576,9 +577,9 @@ object Binding {
 
   /** A STORED quantized root as a [[Quantized]], MAINTENANCE-AWARE —
     * the family member of [[denseRoot]]'s recipe for SQ / PQ / 1-bit
-    * layouts: the family and metric come from the root's own geometry
-    * marker ([[Ann.quantizedRootFamily]] — spherical roots serve
-    * cosine plans, the build's own contract), and the resolver
+    * layouts: the metric comes from the root's own geometry marker
+    * (spherical roots serve cosine plans, the build's own contract;
+    * an unmarked root refuses), and the resolver
     * RE-LOADS the root at every resolve, so every maintenance wave
     * reaches declarative probe selection with no re-install — where a
     * frozen `() => index` keeps scanning the install-time FILE
@@ -599,14 +600,9 @@ object Binding {
   def quantizedRoot(spark: SparkSession, dir: String, vecCol: String,
                     idCol: String, probes: Int, refine: Int = -1,
                     owner: String = ""): Quantized = {
-    val (family, spherical) = Ann.quantizedRootFamily(spark, dir)
-    val load: () => Ann.QuantIndex = family match {
-      case "sq" => () => Ann.loadIvfSq(spark, dir)
-      case "pq" => () => Ann.loadIvfPq(spark, dir)
-      case _ => () => Ann.loadIvfBitq(spark, dir)
-    }
-    Quantized(vecCol, idCol, load, if (spherical) Ann.Cosine else Ann.L2,
-      probes, refine, owner)
+    val (_, spherical) = Ann.quantizedFamily(spark, dir)
+    Quantized(vecCol, idCol, () => Ann.loadQuantized(spark, dir),
+      if (spherical) Ann.Cosine else Ann.L2, probes, refine, owner)
   }
 
   /** A [[Ann.writeMatryoshka]] root as a [[Matryoshka]] for
@@ -713,12 +709,16 @@ object AnnIndex {
           "columns.")
     }
 
-  /** Bind `b` for declarative rewrites; a same-owner binding in the
-    * same slot is replaced. */
-  def register(b: Binding): Unit = bindings.synchronized {
-    val held = bindings.getOrElse(b.column, Nil)
-    requireFreeOrSameOwner(b, held)
-    bindings(b.column) = b :: held.filterNot(h => slot(h) == slot(b))
+  /** Bind `bs` for declarative rewrites, all or none: a collision on
+    * any of them registers none. A same-owner binding in the same slot
+    * is replaced. */
+  def register(bs: Binding*): Unit = bindings.synchronized {
+    val next = bs.foldLeft(Map.empty[String, List[Binding]]) { (acc, b) =>
+      val held = acc.getOrElse(b.column, bindings.getOrElse(b.column, Nil))
+      requireFreeOrSameOwner(b, held)
+      acc.updated(b.column, b :: held.filterNot(h => slot(h) == slot(b)))
+    }
+    bindings ++= next
   }
 
   /** Remove every binding on the column, whoever owns it. */
@@ -1029,6 +1029,42 @@ case class AnnTopKRule() extends Rule[LogicalPlan] {
     Filter(DynamicPruningSubquery(cellAttr, cells, Seq(cells.output.head),
       Seq(0), onlyInBroadcast = false), l)
 
+  /** The leaf of `child` that produces `attr` and exposes `idCol`,
+    * with its id attribute. */
+  private def idLeaf(child: LogicalPlan, attr: AttributeReference,
+                     idCol: String): Option[(LeafNode, Attribute)] =
+    child.collectFirst {
+      case l: LeafNode if l.output.exists(_.exprId == attr.exprId) &&
+          l.output.exists(_.name == idCol) => l
+    }.map(l => (l, l.output.find(_.name == idCol).get))
+
+  /** `child` with the candidate semi-join against `candPlan` planted
+    * above `leaf` (and, with `dpp`, a DynamicPruningSubquery on the
+    * leaf's cell column). The leaf is pruned to what `consumers` and
+    * the rest of `child` read (+ join key + DPP cell column): the
+    * injected Join sits directly over the scan, breaking the
+    * PhysicalOperation pattern FileSourceStrategy prunes columns
+    * through — without this Project the scan reads EVERY column of
+    * the table. */
+  private def candidateCut(child: LogicalPlan, consumers: Seq[Expression],
+                           leaf: LeafNode, idAttr: Attribute,
+                           candPlan: LogicalPlan,
+                           dpp: Option[(Attribute, LogicalPlan)] = None)
+      : Option[LogicalPlan] =
+    plantAbove(child, leaf) { l =>
+      val base = dpp.fold[LogicalPlan](l) {
+        case (cellAttr, probePlan) => dppFilter(cellAttr, probePlan, l)
+      }
+      val consumed = AttributeSet(
+        consumers.flatMap(_.references) ++
+          child.collect { case n if !(n fastEquals leaf) => n }
+            .flatMap(_.references)) ++
+        AttributeSet(dpp.map(_._1).toSeq) + idAttr
+      val keep = l.output.filter(consumed.contains)
+      semiJoin(if (keep.length == l.output.length) base
+        else Project(keep, base), idAttr, candPlan)
+    }
+
   /** The executor-side cell cut: semi-join + DPP against `cells`. */
   private def cellSemiJoin(cellAttr: Attribute, cells: DataFrame)(
       l: LeafNode): LogicalPlan = {
@@ -1056,35 +1092,10 @@ case class AnnTopKRule() extends Rule[LogicalPlan] {
       def inject(leaf: LeafNode, idAttr: Attribute, candPlan: LogicalPlan,
                  dpp: Option[(Attribute, LogicalPlan)] = None)
           : LogicalPlan =
-        plantAbove(child, leaf) { l =>
-          val base = dpp.fold[LogicalPlan](l) {
-            case (cellAttr, probePlan) => dppFilter(cellAttr, probePlan, l)
-          }
-          // prune the leaf to what the plan above consumes (+ join
-          // key + DPP cell column): the injected Join sits directly
-          // over the scan, breaking the PhysicalOperation pattern
-          // FileSourceStrategy prunes columns through — without this
-          // Project the re-rank scan reads EVERY column of the table
-          val consumed = AttributeSet(
-            fields.flatMap(_.references) ++
-              order.flatMap(_.references) ++
-              child.collect { case n if !(n fastEquals leaf) => n }
-                .flatMap(_.references)) ++
-            AttributeSet(dpp.map(_._1).toSeq) + idAttr
-          val keep = l.output.filter(consumed.contains)
-          semiJoin(if (keep.length == l.output.length) base
-            else Project(keep, base), idAttr, candPlan)
-        }.fold[LogicalPlan](gl)(c =>
-          gl.copy(child = ll.copy(child =
-            s.copy(child = proj.copy(child = c)))))
-      // the target leaf produces the sort attribute and exposes the
-      // binding's id column
-      def leafFor(attr: AttributeReference,
-                  idCol: String): Option[(LeafNode, Attribute)] =
-        child.collectFirst {
-          case l: LeafNode if l.output.exists(_.exprId == attr.exprId) &&
-              l.output.exists(_.name == idCol) => l
-        }.map(l => (l, l.output.find(_.name == idCol).get))
+        candidateCut(child, fields ++ order, leaf, idAttr, candPlan, dpp)
+          .fold[LogicalPlan](gl)(c =>
+            gl.copy(child = ll.copy(child =
+              s.copy(child = proj.copy(child = c)))))
       // The k-limited injections are UNSOUND under a Filter between the
       // Sort and the leaf: candidate budgets (k·refine) are computed
       // over the UNFILTERED corpus, so a selective predicate would
@@ -1108,7 +1119,7 @@ case class AnnTopKRule() extends Rule[LogicalPlan] {
           case b: Binding.Matryoshka if b.metric == metric =>
             (b.idCol, () => b.candidateIds(q, k))
         }
-        (leaf, idAttr) <- leafFor(vecAttr, idCol)
+        (leaf, idAttr) <- idLeaf(child, vecAttr, idCol)
         // idempotence: one injected semi-join per plan (tag survives
         // makeCopy/withNewChildren; a LeftSemi on the same id exprId is
         // the semantic backstop)
@@ -1123,7 +1134,7 @@ case class AnnTopKRule() extends Rule[LogicalPlan] {
         (mvAttr, qs) <- extractMaxsim(alias.child)
         b <- AnnIndex.lookup(mvAttr.name).collectFirst {
           case b: Binding.Maxsim => b }
-        (leaf, idAttr) <- leafFor(mvAttr, b.idCol)
+        (leaf, idAttr) <- idLeaf(child, mvAttr, b.idCol)
         if !hasCandidateSemiJoin(child, idAttr)
       } yield {
         val dpp = for {
@@ -1151,7 +1162,7 @@ case class AnnTopKRule() extends Rule[LogicalPlan] {
         (textAttr, terms) <- extractBm25(alias.child)
         (b, (leaf, idAttr)) <- AnnIndex.lookup(textAttr.name)
           .collect { case b: Binding.Bm25 => b }
-          .flatMap(b => leafFor(textAttr, b.idCol).map((b, _)))
+          .flatMap(b => idLeaf(child, textAttr, b.idCol).map((b, _)))
           .headOption
         if !hasCandidateSemiJoin(child, idAttr)
       } yield inject(leaf, idAttr,
@@ -1168,15 +1179,17 @@ case class AnnTopKRule() extends Rule[LogicalPlan] {
         // come from the same relation — a score over different
         // weights must not be answered from these postings
         if valAttr.name == b.valCol
-        (leaf, idAttr) <- leafFor(idxAttr, b.idCol)
+        (leaf, idAttr) <- idLeaf(child, idxAttr, b.idCol)
         if leaf.output.exists(_.exprId == valAttr.exprId)
         if !hasCandidateSemiJoin(child, idAttr)
       } yield inject(leaf, idAttr,
         b.candidateIds(qIdx, qVal, k).queryExecution.optimizedPlan)
       quant.orElse(maxsim).orElse(bm25).orElse(sparse).getOrElse(gl)
 
-    // PROBE rewrite: the literal probe filter ([[Binding.Probe]]) first,
-    // else the executor-side probe subplan ([[Binding.ProbeDist]]).
+    // PROBE rewrite: the literal probe filter ([[Binding.Probe]]) first —
+    // on the scanned cell column, else as an id semi-join against the
+    // binding's assigned layout in the probed cells — else the
+    // executor-side probe subplan ([[Binding.ProbeDist]]).
     case s @ Sort(order, true, proj @ Project(fields, child), _)
         if order.nonEmpty =>
       (for {
@@ -1186,7 +1199,14 @@ case class AnnTopKRule() extends Rule[LogicalPlan] {
         planted <- bound
           .collectFirst { case b: Binding.Probe if b.metric == metric => b }
           .flatMap(b => plantCut(child, vecAttr, b.cellCol)(
-            cellFiltered(child, _))(c => cellFilter(c, b.probeCells(q))))
+              cellFiltered(child, _))(c => cellFilter(c, b.probeCells(q)))
+            .orElse(for {
+              rows <- b.layout
+              (leaf, idAttr) <- idLeaf(child, vecAttr, b.idCol)
+              if !hasCandidateSemiJoin(child, idAttr)
+              cut <- candidateCut(child, fields ++ order, leaf, idAttr,
+                b.probedIds(rows(), q).queryExecution.optimizedPlan)
+            } yield cut))
           .orElse(bound
             .collectFirst {
               case b: Binding.ProbeDist if b.metric == metric => b }

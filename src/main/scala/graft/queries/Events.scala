@@ -369,7 +369,7 @@ object Events {
     * exactly-once into `encoded/`'s cell dirs; geometry AND codebook
     * digest pinned by markers so a retrained quantizer is refused),
     * the grown layout GRADUATES via compactStored, and
-    * [[graft.ops.Ann.searchIvfPqStored]] answers r38's exact query
+    * [[graft.ops.Ann.searchQuantizedStored]] answers r38's exact query
     * over the root — shared oracle, so the streamed path must be
     * byte-identical to the batch index. */
   def streamPqTwin(s: SparkSession, d: String): DataFrame = {
@@ -406,8 +406,8 @@ object Events {
       "commit log must be gone after graduation")
     val qv = rows.find(_._1 == 5L)
       .getOrElse(throw new IllegalStateException("no vec_id 5"))._2
-    graft.ops.Ann.searchIvfPqStored(s, dir, "vec_id", "embedding",
-      qv, graft.ops.Ann.L2, probes = 3, k = 10, refine = 5)
+    graft.ops.Ann.searchQuantizedStored(s, dir, "vec_id", "embedding",
+      typedlit(qv), graft.ops.Ann.L2, probes = 3, k = 10, refine = 5)
   }
 
   /** s13: the SQ streaming lifecycle under the oracle — the 8-bit twin
@@ -416,10 +416,10 @@ object Events {
     * codes streamed in three micro-batches through
     * [[graft.streaming.Stream.ingestIvfSq]] (map-only assign +
     * quantize + pack, bit-identical to [[graft.ops.Ann.buildIvfSq]]),
-    * compactStored graduation, then [[graft.ops.Ann
-    * .searchIvfSqStored]] with r12's exact parameters — so the
-    * streamed-then-compacted layout must reproduce the batch index
-    * bit-for-bit (shared oracle). */
+    * compactStored graduation, then
+    * [[graft.ops.Ann.searchQuantizedStored]] with r12's exact
+    * parameters — so the streamed-then-compacted layout must
+    * reproduce the batch index bit-for-bit (shared oracle). */
   def streamSqTwin(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     implicit val sc = s.sqlContext
@@ -455,7 +455,7 @@ object Events {
       "commit log must be gone after graduation")
     val qv = rows.find(_._1 == 11L)
       .getOrElse(throw new IllegalStateException("no vec_id 11"))._2
-    graft.ops.Ann.searchIvfSqStored(s, dir, "vec_id", "embedding",
+    graft.ops.Ann.searchQuantizedStored(s, dir, "vec_id", "embedding",
       typedlit(qv), graft.ops.Ann.L2, probes = 3, k = 10, refine = 5)
   }
 
@@ -464,7 +464,7 @@ object Events {
     * batch-side and pinned at the root, sign-bit residual codes + rnorm
     * streamed in three micro-batches through
     * [[graft.streaming.Stream.ingestIvfBitq]], compactStored
-    * graduation, then [[graft.ops.Ann.searchIvfBitqStored]] with r14's
+    * graduation, then [[graft.ops.Ann.searchQuantizedStored]] with r14's
     * exact parameters (shared oracle — the streamed layout must
     * reproduce the batch index bit-for-bit). */
   def streamBitqTwin(s: SparkSession, d: String): DataFrame = {
@@ -500,7 +500,7 @@ object Events {
       "commit log must be gone after graduation")
     val qv = rows.find(_._1 == 13L)
       .getOrElse(throw new IllegalStateException("no vec_id 13"))._2
-    graft.ops.Ann.searchIvfBitqStored(s, dir, "vec_id", "embedding",
+    graft.ops.Ann.searchQuantizedStored(s, dir, "vec_id", "embedding",
       typedlit(qv), graft.ops.Ann.L2, probes = 3, k = 10, refine = 5)
   }
 
@@ -942,7 +942,7 @@ object Events {
     * AND main, so a batch redelivered even AFTER compaction appends
     * nothing), and the fresh-aware search PQ-encodes them ON READ
     * under the frozen codebooks
-    * ([[graft.ops.Ann.searchIvfPqStoredFresh]]) — bit-identical codes
+    * ([[graft.ops.Ann.searchQuantizedStored]]) — bit-identical codes
     * to the batch build, so the result is EXACTLY a one-shot
     * full-corpus build's. Codebooks and centroids train on the full
     * corpus (the label-mean / offline-model seat s19 and c10 use),
@@ -966,10 +966,10 @@ object Events {
       graft.ops.Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_s25_root").toString
-    graft.ops.Ann.writeIvfPq(
+    graft.ops.Ann.writeQuantized(
       full.copy(encoded = full.encoded.filter(col("vec_id") % 2 === 0)),
       dir)
-    // pin the coarse model at build time (writeIvfPq pins geometry +
+    // pin the coarse model at build time (writeQuantized pins geometry +
     // codebook digest; the IVF fingerprint comes from ensureIvfPqRoot)
     graft.ops.Ann.ensureIvfPqRoot(s, dir, full.pq, model,
       spherical = false)
@@ -999,8 +999,9 @@ object Events {
     // encoded layout and the fresh side table partition-prune
     val qv = e.filter(col("vec_id") === 5)
       .select(col("embedding")).head().getSeq[Double](0).toSeq
-    val df = graft.ops.Ann.searchIvfPqStoredFresh(s, dir, "vec_id",
-      "embedding", qv, graft.ops.Ann.L2, probes = 3, k = 10, refine = 5)
+    val df = graft.ops.Ann.searchQuantizedStored(s, dir, "vec_id",
+      "embedding", typedlit(qv), graft.ops.Ann.L2, probes = 3, k = 10,
+      refine = 5)
     Retrieval.assertPartitionPruned(
       df.queryExecution.executedPlan.toString, "centroid_id",
       "grown PQ-root search")
@@ -1040,7 +1041,7 @@ object Events {
       graft.ops.Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_s28_root").toString
-    graft.ops.Ann.writeIvfSq(
+    graft.ops.Ann.writeQuantized(
       full.copy(quantized =
         full.quantized.filter(col("vec_id") % 2 === 0)), dir)
     graft.ops.Ann.ensureIvfSqRoot(s, dir, full, spherical = false)
@@ -1076,14 +1077,14 @@ object Events {
       .select(col("embedding")).head().getSeq[Double](0).toSeq
     // the fresh-AWARE search on a fully-graduated root degenerates to
     // the stored search — r12's oracle lands verbatim
-    graft.ops.Ann.searchIvfSqStoredFresh(s, dir, "vec_id", "embedding",
+    graft.ops.Ann.searchQuantizedStored(s, dir, "vec_id", "embedding",
       typedlit(qv), graft.ops.Ann.L2, probes = 3, k = 10, refine = 5)
   }
 
   /** s26: s25's SQ twin — streamed maintenance of a graduated
-    * [[graft.ops.Ann.writeIvfSq]] root through the same fresh-rows
+    * [[graft.ops.Ann.writeQuantized]] root through the same fresh-rows
     * side table, searched via
-    * [[graft.ops.Ann.searchIvfSqStoredFresh]] (fresh rows SQ-encoded
+    * [[graft.ops.Ann.searchQuantizedStored]] (fresh rows SQ-encoded
     * on read under the stored per-cell bounds — codes bit-identical
     * to the batch build), then COMPACTED
     * ([[graft.ops.Ann.compactQuantizedFresh]]) and searched again:
@@ -1104,7 +1105,7 @@ object Events {
       graft.ops.Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_s26_root").toString
-    graft.ops.Ann.writeIvfSq(
+    graft.ops.Ann.writeQuantized(
       full.copy(quantized =
         full.quantized.filter(col("vec_id") % 2 === 0)), dir)
     graft.ops.Ann.ensureIvfSqRoot(s, dir, full, spherical = false)
@@ -1126,7 +1127,7 @@ object Events {
     } finally q.stop()
     val qv = e.filter(col("vec_id") === 11)
       .select(col("embedding")).head().getSeq[Double](0).toSeq
-    def search() = graft.ops.Ann.searchIvfSqStoredFresh(s, dir,
+    def search() = graft.ops.Ann.searchQuantizedStored(s, dir,
       "vec_id", "embedding", typedlit(qv), graft.ops.Ann.L2,
       probes = 3, k = 10, refine = 5)
     // pin: compaction is OBSERVABLY a no-op — encode-on-read before,
@@ -1149,10 +1150,10 @@ object Events {
 
   /** s27: the 1-bit member completing the quantized fresh-rows trio
     * (s25 PQ, s26 SQ) — same lifecycle over a
-    * [[graft.ops.Ann.writeIvfBitq]] root: half the corpus at rest
+    * [[graft.ops.Ann.writeQuantized]] root: half the corpus at rest
     * under full-corpus-trained centroids, the other half streamed RAW
     * into `fresh/`, searched via
-    * [[graft.ops.Ann.searchIvfBitqStoredFresh]] (fresh rows
+    * [[graft.ops.Ann.searchQuantizedStored]] (fresh rows
     * sign-bit-encoded on read — residuals against the same frozen
     * centroids, so codes are bit-identical to the batch build's) with
     * r14's exact parameters, landing on r14's oracle verbatim.
@@ -1170,7 +1171,7 @@ object Events {
       graft.ops.Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_s27_root").toString
-    graft.ops.Ann.writeIvfBitq(
+    graft.ops.Ann.writeQuantized(
       full.copy(quantized =
         full.quantized.filter(col("vec_id") % 2 === 0)), dir)
     graft.ops.Ann.ensureIvfBitqRoot(s, dir, full.model,
@@ -1198,7 +1199,7 @@ object Events {
       s"s27: replayed batch appended $dup rows — append not replay-safe")
     val qv = e.filter(col("vec_id") === 13)
       .select(col("embedding")).head().getSeq[Double](0).toSeq
-    graft.ops.Ann.searchIvfBitqStoredFresh(s, dir, "vec_id",
+    graft.ops.Ann.searchQuantizedStored(s, dir, "vec_id",
       "embedding", typedlit(qv), graft.ops.Ann.L2, probes = 3, k = 10,
       refine = 5)
   }
@@ -1404,7 +1405,7 @@ object Events {
       graft.ops.Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_s32_root").toString
-    graft.ops.Ann.writeIvfSq(
+    graft.ops.Ann.writeQuantized(
       full.copy(quantized =
         full.quantized.filter(col("vec_id") % 2 === 0)), dir)
     graft.ops.Ann.ensureIvfSqRoot(s, dir, full, spherical = false)
@@ -1445,7 +1446,7 @@ object Events {
     require(dup == 0L,
       s"s32: replayed batch appended $dup rows post-split+fold")
     val total = s.read.parquet(s"$dir/quantized").count()
-    graft.ops.Ann.searchIvfSqStored(s, dir, "vec_id", "embedding",
+    graft.ops.Ann.searchQuantizedStored(s, dir, "vec_id", "embedding",
       typedlit(qvecSeqOf(s, d, 7)), graft.ops.Ann.L2,
       probes = cellsNow.toInt, k = 10,
       refine = (total / 10 + 1).toInt)

@@ -140,7 +140,7 @@ object Retrieval {
     df
   }
 
-  /** r38: IVF + PQ composed ([[Ann.buildIvfPq]]/[[Ann.searchIvfPq]]) —
+  /** r38: IVF + PQ composed ([[Ann.buildIvfPq]]/[[Ann.searchQuantized]]) —
     * probe 3 cells, ADC over (id, codes, cell) within them only, exact
     * re-rank of the top-50 survivors fetched by id. The quantization
     * family's third member at the index level (SQ r12, 1-bit r14). */
@@ -148,12 +148,12 @@ object Retrieval {
     val e = embeddings(s, d)
     val model = Ann.buildIvf(e, "label", "embedding")
     val idx = Ann.buildIvfPq(e, "embedding", model, m = 8, Ann.L2)
-    Ann.searchIvfPq(idx, "vec_id", "embedding", qvecSeq(s, d, 5),
+    Ann.searchQuantized(idx, "vec_id", "embedding", typedlit(qvecSeq(s, d, 5)),
       Ann.L2, probes = 3, k = 10, refine = 5)
   }
 
-  /** r40: r38 with the index AT REST ([[Ann.writeIvfPq]] →
-    * [[Ann.searchIvfPqStored]]) — probe cells become literal partition
+  /** r40: r38 with the index AT REST ([[Ann.writeQuantized]] →
+    * [[Ann.searchQuantizedStored]]) — probe cells become literal partition
     * filters on the cell-partitioned layout, so BOTH the codes-only
     * ADC scan and the survivor vector fetch read only probed cell
     * directories (pinned in-query); geometry pinned by marker; results
@@ -164,9 +164,9 @@ object Retrieval {
     val idx = Ann.buildIvfPq(e, "embedding", model, m = 8, Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_ivfpq_store").toString
-    Ann.writeIvfPq(idx, dir)
-    val df = Ann.searchIvfPqStored(s, dir, "vec_id", "embedding",
-      qvecSeq(s, d, 5), Ann.L2, probes = 3, k = 10, refine = 5)
+    Ann.writeQuantized(idx, dir)
+    val df = Ann.searchQuantizedStored(s, dir, "vec_id", "embedding",
+      typedlit(qvecSeq(s, d, 5)), Ann.L2, probes = 3, k = 10, refine = 5)
     val phys = df.queryExecution.executedPlan.toString
     assertPartitionPruned(phys, "centroid_id",
       "stored ivf-pq search")
@@ -200,10 +200,10 @@ object Retrieval {
     } finally graft.plans.AnnIndex.unregister("embedding")
   }
 
-  /** r41: batch IVF+PQ kNN join ([[Ann.knnJoinIvfPq]]) — the PQ member
+  /** r41: batch IVF+PQ kNN join ([[Ann.knnJoinQuantized]]) — the PQ member
     * of the batch query-log-replay family (dense r10/r36, BM25 r13/r35,
     * sparse r32/r34, maxsim r33): five queries replayed in ONE job over
-    * a [[Ann.writeIvfPq]] layout. Per-query ADC lookup tables travel as
+    * a [[Ann.writeQuantized]] layout. Per-query ADC lookup tables travel as
     * ONE broadcast beside the (qid, cell) probe relation, so phase-1 is
     * a single codes-only scan of the probed cell dirs (ReadSchema must
     * exclude the fp vector column AND the batch's probed-cell union —
@@ -219,12 +219,12 @@ object Retrieval {
     val idx = Ann.buildIvfPq(e, "embedding", model, m = 8, Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_knnpq_store").toString
-    Ann.writeIvfPq(idx, dir)
-    val stored = Ann.loadIvfPq(s, dir)
+    Ann.writeQuantized(idx, dir)
+    val stored = Ann.loadQuantized(s, dir)
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    val df = Ann.knnJoinIvfPq(queries, "q_id", "qv", stored, "vec_id",
-        "embedding", probes = 2, k = 3, refine = 5)
+    val df = Ann.knnJoinQuantized(queries, "q_id", "qv", stored, "vec_id",
+        "embedding", Ann.L2, probes = 2, k = 3, refine = 5)
       .withColumnRenamed("vec_id", "d_id")
     val phys = df.queryExecution.executedPlan.toString
     val schemas = "ReadSchema: struct<([^>]*)>".r
@@ -249,11 +249,11 @@ object Retrieval {
     val e = embeddings(s, d)
     val model = Ann.buildIvf(e, "label", "embedding")
     val idx = Ann.buildIvfPq(e, "embedding", model, m = 8, Ann.Cosine)
-    Ann.searchIvfPq(idx, "vec_id", "embedding", qvecSeq(s, d, 17),
+    Ann.searchQuantized(idx, "vec_id", "embedding", typedlit(qvecSeq(s, d, 17)),
       Ann.Cosine, probes = 3, k = 10, refine = 5)
   }
 
-  /** r48: batch IVF+SQ kNN join ([[Ann.knnJoinIvfSq]]) — the batch
+  /** r48: batch IVF+SQ kNN join ([[Ann.knnJoinQuantized]]) — the batch
     * query-log replay over the reference's DEFAULT quantization
     * (residual 8-bit codes, spec.py:437-444), with a FULLY DECLARATIVE
     * phase-1: the broadcast probe relation carries each query's vector,
@@ -268,7 +268,7 @@ object Retrieval {
     val index = Ann.buildIvfSq(e, "embedding", model, Ann.L2)
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    val df = Ann.knnJoinIvfSq(queries, "q_id", "qv", index, "vec_id",
+    val df = Ann.knnJoinQuantized(queries, "q_id", "qv", index, "vec_id",
         "embedding", Ann.L2, probes = 2, k = 3, refine = 5)
       .withColumnRenamed("vec_id", "d_id")
     val phys = df.queryExecution.executedPlan.toString
@@ -280,8 +280,8 @@ object Retrieval {
     df
   }
 
-  /** r50: r48 with the SQ index AT REST ([[Ann.writeIvfSq]] →
-    * [[Ann.loadIvfSq]] → [[Ann.knnJoinIvfSq]]) — the at-rest batch
+  /** r50: r48 with the SQ index AT REST ([[Ann.writeQuantized]] →
+    * [[Ann.loadQuantized]] → [[Ann.knnJoinQuantized]]) — the at-rest batch
     * story for the quantized family: the batch's probed-cell union
     * plants literal PartitionFilters on the cell-partitioned layout
     * AND phase-1 reads (id, packed codes) ONLY — the full-precision
@@ -294,11 +294,11 @@ object Retrieval {
     val index = Ann.buildIvfSq(e, "embedding", model, Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_knnsq_store").toString
-    Ann.writeIvfSq(index, dir)
-    val stored = Ann.loadIvfSq(s, dir)
+    Ann.writeQuantized(index, dir)
+    val stored = Ann.loadQuantized(s, dir)
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    val df = Ann.knnJoinIvfSq(queries, "q_id", "qv", stored, "vec_id",
+    val df = Ann.knnJoinQuantized(queries, "q_id", "qv", stored, "vec_id",
         "embedding", Ann.L2, probes = 2, k = 3, refine = 5)
       .withColumnRenamed("vec_id", "d_id")
     val phys = df.queryExecution.executedPlan.toString
@@ -311,7 +311,7 @@ object Retrieval {
     df
   }
 
-  /** r49: batch IVF+1-bit kNN join ([[Ann.knnJoinIvfBitq]]) —
+  /** r49: batch IVF+1-bit kNN join ([[Ann.knnJoinQuantized]]) —
     * completes the QUANTIZED batch trio (PQ r41/r44, SQ r48): the
     * sign-bit residual estimator over (bits, rnorm, cell centroid,
     * per-query vector) as pure builtin columns — zero UDFs (pinned),
@@ -322,7 +322,7 @@ object Retrieval {
     val index = Ann.buildIvfBitq(e, "embedding", model, Ann.L2)
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    val df = Ann.knnJoinIvfBitq(queries, "q_id", "qv", index, "vec_id",
+    val df = Ann.knnJoinQuantized(queries, "q_id", "qv", index, "vec_id",
         "embedding", Ann.L2, probes = 2, k = 3, refine = 5)
       .withColumnRenamed("vec_id", "d_id")
     val phys = df.queryExecution.executedPlan.toString
@@ -347,16 +347,16 @@ object Retrieval {
     val idx = Ann.buildIvfPq(e, "embedding", model, m = 8, Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_ivfpq_del").toString
-    Ann.writeIvfPq(idx, dir)
+    Ann.writeQuantized(idx, dir)
     val removed = Ann.deleteStored(s, s"$dir/encoded",
       col("vec_id") % 7 === 0)
     require(removed > 0, "stored delete removed nothing — gate is vacuous")
-    Ann.searchIvfPqStored(s, dir, "vec_id", "embedding",
-      qvecSeq(s, d, 5), Ann.L2, probes = 3, k = 10, refine = 5)
+    Ann.searchQuantizedStored(s, dir, "vec_id", "embedding",
+      typedlit(qvecSeq(s, d, 5)), Ann.L2, probes = 3, k = 10, refine = 5)
   }
 
-  /** r46: r43 with the spherical index AT REST ([[Ann.writeIvfPq]] →
-    * [[Ann.searchIvfPqStored]] — r40's cosine twin): geometry
+  /** r46: r43 with the spherical index AT REST ([[Ann.writeQuantized]] →
+    * [[Ann.searchQuantizedStored]] — r40's cosine twin): geometry
     * including the spherical flag pinned by marker, probe cells as
     * literal partition filters on BOTH phases, results byte-identical
     * to r43 (shared oracle). */
@@ -366,9 +366,9 @@ object Retrieval {
     val idx = Ann.buildIvfPq(e, "embedding", model, m = 8, Ann.Cosine)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_ivfpqc_store").toString
-    Ann.writeIvfPq(idx, dir)
-    val df = Ann.searchIvfPqStored(s, dir, "vec_id", "embedding",
-      qvecSeq(s, d, 17), Ann.Cosine, probes = 3, k = 10, refine = 5)
+    Ann.writeQuantized(idx, dir)
+    val df = Ann.searchQuantizedStored(s, dir, "vec_id", "embedding",
+      typedlit(qvecSeq(s, d, 17)), Ann.Cosine, probes = 3, k = 10, refine = 5)
     val phys = df.queryExecution.executedPlan.toString
     assertPartitionPruned(phys, "centroid_id",
       "stored spherical ivf-pq search")
@@ -404,7 +404,7 @@ object Retrieval {
     } finally graft.plans.AnnIndex.unregister("embedding")
   }
 
-  /** r44: the COSINE batch IVF+PQ kNN join ([[Ann.knnJoinIvfPqCos]])
+  /** r44: the COSINE batch IVF+PQ kNN join ([[Ann.knnJoinQuantized]])
     * over an at-rest spherical layout — r41's batch replay with r43's
     * spherical semantics: probes and per-query ADC LUTs on the unit
     * sphere, TRUE-cosine exact re-rank on raw vectors, one job for the
@@ -417,12 +417,12 @@ object Retrieval {
     val idx = Ann.buildIvfPq(e, "embedding", model, m = 8, Ann.Cosine)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_knnpqc_store").toString
-    Ann.writeIvfPq(idx, dir)
-    val stored = Ann.loadIvfPq(s, dir)
+    Ann.writeQuantized(idx, dir)
+    val stored = Ann.loadQuantized(s, dir)
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    val df = Ann.knnJoinIvfPqCos(queries, "q_id", "qv", stored,
-        "vec_id", "embedding", probes = 2, k = 3, refine = 5)
+    val df = Ann.knnJoinQuantized(queries, "q_id", "qv", stored,
+        "vec_id", "embedding", Ann.Cosine, probes = 2, k = 3, refine = 5)
       .withColumnRenamed("vec_id", "d_id")
     val phys = df.queryExecution.executedPlan.toString
     val schemas = "ReadSchema: struct<([^>]*)>".r
@@ -473,13 +473,13 @@ object Retrieval {
   }
 
   /** IVF + per-cell scalar quantization composed ([[Ann.buildIvfSq]] /
-    * [[Ann.searchIvfSq]] — the actual vchordrq shape: quantized codes
+    * [[Ann.searchQuantized]] — the actual vchordrq shape: quantized codes
     * inside probed IVF cells, asymmetric scan, exact re-rank). */
   def ivfSqTopk(s: SparkSession, d: String): DataFrame = {
     val e = embeddings(s, d)
     val model = Ann.buildIvf(e, "label", "embedding")
     val index = Ann.buildIvfSq(e, "embedding", model, Ann.L2)
-    Ann.searchIvfSq(index, "vec_id", "embedding", qvec(s, d, 11), Ann.L2,
+    Ann.searchQuantized(index, "vec_id", "embedding", qvec(s, d, 11), Ann.L2,
       probes = 3, k = 10, refine = 5)
   }
 
@@ -490,7 +490,7 @@ object Retrieval {
     val e = embeddings(s, d)
     val model = Ann.buildIvf(e, "label", "embedding")
     val index = Ann.buildIvfBitq(e, "embedding", model, Ann.L2)
-    Ann.searchIvfBitq(index, "vec_id", "embedding", qvec(s, d, 13), Ann.L2,
+    Ann.searchQuantized(index, "vec_id", "embedding", qvec(s, d, 13), Ann.L2,
       probes = 3, k = 10, refine = 5)
   }
 
@@ -802,7 +802,7 @@ object Retrieval {
     val e = embeddings(s, d)
     val model = Ann.buildIvf(e, "label", "embedding")
     val index = Ann.buildIvfSq(e, "embedding", model, Ann.Cosine)
-    Ann.searchIvfSq(index, "vec_id", "embedding", qvec(s, d, 17),
+    Ann.searchQuantized(index, "vec_id", "embedding", qvec(s, d, 17),
       Ann.Cosine, probes = 3, k = 10, refine = 5)
   }
 
@@ -835,7 +835,7 @@ object Retrieval {
   }
 
   /** Index maintenance on the AT-REST layout: write the r12 IVF+SQ
-    * index to disk ([[Ann.writeIvfSq]]), DELETE every vec_id divisible
+    * index to disk ([[Ann.writeQuantized]]), DELETE every vec_id divisible
     * by 7 via the cell-rewrite delete ([[Ann.deleteStored]] — only
     * affected cell directories are rewritten), then run the stored
     * search: removed vectors must never surface, while codes/bounds
@@ -846,11 +846,11 @@ object Retrieval {
     val index = Ann.buildIvfSq(e, "embedding", model, Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_ivfsq_del").toString
-    Ann.writeIvfSq(index, dir)
+    Ann.writeQuantized(index, dir)
     val removed = Ann.deleteStored(s, s"$dir/quantized",
       col("vec_id") % 7 === 0)
     require(removed > 0, "stored delete removed nothing — gate is vacuous")
-    Ann.searchIvfSqStored(s, dir, "vec_id", "embedding", qvec(s, d, 11),
+    Ann.searchQuantizedStored(s, dir, "vec_id", "embedding", qvec(s, d, 11),
       Ann.L2, probes = 3, k = 10, refine = 5)
   }
 
@@ -871,7 +871,7 @@ object Retrieval {
     val index = Ann.buildIvfSq(e, "embedding", model, Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_sqfresh_del").toString
-    Ann.writeIvfSq(index.copy(quantized =
+    Ann.writeQuantized(index.copy(quantized =
       index.quantized.filter(col("vec_id") % 2 === 0)), dir)
     Ann.ensureIvfSqRoot(s, dir, index, spherical = false)
     val appended = Ann.appendQuantizedFreshIdempotent(s, dir,
@@ -886,7 +886,7 @@ object Retrieval {
       doomed)
     require(removedMain > 0 && removedFresh > 0,
       s"r84 vacuous: removed $removedMain main / $removedFresh fresh")
-    Ann.searchIvfSqStoredFresh(s, dir, "vec_id", "embedding",
+    Ann.searchQuantizedStored(s, dir, "vec_id", "embedding",
       qvec(s, d, 11), Ann.L2, probes = 3, k = 10, refine = 5)
   }
 
@@ -911,7 +911,7 @@ object Retrieval {
     val index = Ann.buildIvfSq(e, "embedding", model, Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_qfresh_batch").toString
-    Ann.writeIvfSq(index.copy(quantized =
+    Ann.writeQuantized(index.copy(quantized =
       index.quantized.filter(col("vec_id") % 2 === 0)), dir)
     Ann.ensureIvfSqRoot(s, dir, index, spherical = false)
     val appended = Ann.appendQuantizedFreshIdempotent(s, dir,
@@ -951,7 +951,7 @@ object Retrieval {
     val index = Ann.buildIvfSq(e, "embedding", model, Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_qfresh_fbatch").toString
-    Ann.writeIvfSq(index.copy(quantized =
+    Ann.writeQuantized(index.copy(quantized =
       index.quantized.filter(col("vec_id") % 2 === 0)), dir)
     Ann.ensureIvfSqRoot(s, dir, index, spherical = false)
     val appended = Ann.appendQuantizedFreshIdempotent(s, dir,
@@ -2116,7 +2116,7 @@ object Retrieval {
     val index = Ann.buildIvfSq(e, "embedding", model, Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_sq_health").toString
-    Ann.writeIvfSq(index, dir)
+    Ann.writeQuantized(index, dir)
     Ann.ensureIvfSqRoot(s, dir, index, spherical = false)
     val df = Ann.indexHealthQuantized(s, dir).orderBy("centroid_id")
     val phys = df.queryExecution.executedPlan.toString
@@ -2140,7 +2140,7 @@ object Retrieval {
     val index = Ann.buildIvfSq(e, "embedding", model, Ann.Cosine)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_sq_health_cos").toString
-    Ann.writeIvfSq(index, dir)
+    Ann.writeQuantized(index, dir)
     Ann.ensureIvfSqRoot(s, dir, index, spherical = true)
     val df = Ann.indexHealthQuantized(s, dir).orderBy("centroid_id")
     val phys = df.queryExecution.executedPlan.toString
@@ -2331,7 +2331,7 @@ object Retrieval {
     val index = Ann.buildIvfPq(e, "embedding", model, m = 8, Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_pq_health_g").toString
-    Ann.writeIvfPq(index, dir)
+    Ann.writeQuantized(index, dir)
     val df = Ann.indexHealthQuantized(s, dir).orderBy("centroid_id")
     val phys = df.queryExecution.executedPlan.toString
     require(phys.contains("ReadSchema") && !phys.contains("vec_id") &&
@@ -2355,7 +2355,7 @@ object Retrieval {
     val index = Ann.buildIvfBitq(e, "embedding", model, Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_bitq_health_g").toString
-    Ann.writeIvfBitq(index, dir)
+    Ann.writeQuantized(index, dir)
     Ann.ensureIvfBitqRoot(s, dir, model, spherical = false)
     val df = Ann.indexHealthQuantized(s, dir).orderBy("centroid_id")
     val phys = df.queryExecution.executedPlan.toString
@@ -2389,7 +2389,7 @@ object Retrieval {
     val index = Ann.buildIvfSq(e, "embedding", model, Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_sq_rw_maint").toString
-    Ann.writeIvfSq(index, dir)
+    Ann.writeQuantized(index, dir)
     Ann.ensureIvfSqRoot(s, dir, index, spherical = false)
     graft.plans.AnnIndex.install(s)
     def reg(probes: Int): Unit =
@@ -3375,7 +3375,7 @@ object Retrieval {
     val index = Ann.buildIvfSq(e, "embedding", model, Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_sq_merge").toString
-    Ann.writeIvfSq(index, dir)
+    Ann.writeQuantized(index, dir)
     Ann.ensureIvfSqRoot(s, dir, index, spherical = false)
     val lists = model.centroids.count()
     val cell4 = s.read.parquet(s"$dir/quantized")
@@ -3397,7 +3397,7 @@ object Retrieval {
     val cellsNow = (lists - merged.size).toInt
     // reachability: every surviving row (moved included) surfaces
     // under all-probe — row conservation through the re-encode
-    val all = Ann.searchIvfSqStored(s, dir, "vec_id", "embedding",
+    val all = Ann.searchQuantizedStored(s, dir, "vec_id", "embedding",
       qvec(s, d, 5), Ann.L2, probes = cellsNow, k = remaining.toInt,
       refine = 1)
     require(all.count() == remaining,
@@ -3407,7 +3407,7 @@ object Retrieval {
       "r93 vacuous: no moved (cell-4 survivor) row reachable")
     // the oracle cut: all-probe + corpus-covering refine makes the
     // exact re-rank the index-free post-delete top-10
-    Ann.searchIvfSqStored(s, dir, "vec_id", "embedding", qvec(s, d, 5),
+    Ann.searchQuantizedStored(s, dir, "vec_id", "embedding", qvec(s, d, 5),
       Ann.L2, probes = cellsNow, k = 10,
       refine = (remaining / 10 + 1).toInt)
   }
@@ -3430,7 +3430,7 @@ object Retrieval {
     val index = Ann.buildIvfSq(e, "embedding", model, Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_sq_split").toString
-    Ann.writeIvfSq(index, dir)
+    Ann.writeQuantized(index, dir)
     Ann.ensureIvfSqRoot(s, dir, index, spherical = false)
     val lists = model.centroids.count()
     val total = s.read.parquet(s"$dir/quantized").count()
@@ -3452,7 +3452,7 @@ object Retrieval {
       .select(col("centroid_id").cast("long")).distinct().count()
     require(bounded == newIds.size,
       s"r95: $bounded of ${newIds.size} sub-cells carry bounds")
-    Ann.searchIvfSqStored(s, dir, "vec_id", "embedding", qvec(s, d, 7),
+    Ann.searchQuantizedStored(s, dir, "vec_id", "embedding", qvec(s, d, 7),
       Ann.L2, probes = cellsNow.toInt, k = 10,
       refine = (total / 10 + 1).toInt)
   }
@@ -3556,7 +3556,7 @@ object Retrieval {
         Ann.L2, 10)
       .select(col("q_id"), col("d_id")).localCheckpoint(true)
     val rows = Seq(1, 2, 5).map { p =>
-      val approx = Ann.knnJoinIvfBitq(qs, "q_id", "qv", index, "vec_id",
+      val approx = Ann.knnJoinQuantized(qs, "q_id", "qv", index, "vec_id",
           "embedding", Ann.L2, probes = 10, k = 10, refine = p)
         .select(col("q_id"), col("vec_id").as("d_id"))
       val hits = exact.join(approx, Seq("q_id", "d_id"), "left_semi")

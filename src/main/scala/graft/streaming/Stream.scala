@@ -251,8 +251,8 @@ object Stream {
     * with different geometry OR retrained codebooks is refused — two
     * code spaces can never mix in one layout. After
     * [[compactStored]](`dir/encoded`, "centroid_id") graduation the
-    * root IS a [[graft.ops.Ann.writeIvfPq]] layout:
-    * `loadIvfPq`/`searchIvfPqStored`/`attachStoredIndex` work
+    * root IS a [[graft.ops.Ann.writeQuantized]] layout:
+    * `loadQuantized`/`searchQuantizedStored`/`attachStoredIndex` work
     * unchanged. `metric` is [[graft.ops.Ann.buildIvfPq]]'s metric
     * argument verbatim (cosine ⇒ spherical: normalization happens
     * inside the transform over the RAW un-normalized `model`, exactly
@@ -291,8 +291,8 @@ object Stream {
     * the stream starts ([[graft.ops.Ann.ensureIvfSqRoot]]); a restart
     * with retrained bounds or a different model is refused. After
     * [[compactStored]](`dir/quantized`, "centroid_id") graduation the
-    * root IS a [[graft.ops.Ann.writeIvfSq]] layout:
-    * `loadIvfSq`/`searchIvfSqStored` work unchanged. */
+    * root IS a [[graft.ops.Ann.writeQuantized]] layout:
+    * `loadQuantized`/`searchQuantizedStored` work unchanged. */
   def ingestIvfSq(vectors: DataFrame, vecCol: String,
                   index: graft.ops.Ann.IvfSqIndex,
                   metric: graft.ops.Ann.Metric,
@@ -324,8 +324,8 @@ object Stream {
     * root pins the spherical flag and the model fingerprint
     * ([[graft.ops.Ann.ensureIvfBitqRoot]]); a retrained model is
     * refused. After [[compactStored]](`dir/quantized`, "centroid_id")
-    * graduation the root IS a [[graft.ops.Ann.writeIvfBitq]] layout:
-    * `loadIvfBitq`/`searchIvfBitqStored` work unchanged. */
+    * graduation the root IS a [[graft.ops.Ann.writeQuantized]] layout:
+    * `loadQuantized`/`searchQuantizedStored` work unchanged. */
   def ingestIvfBitq(vectors: DataFrame, vecCol: String,
                     model: graft.ops.Ann.IvfModel,
                     metric: graft.ops.Ann.Metric,
@@ -792,10 +792,10 @@ object Stream {
     val spark = vectors.sparkSession
     // loud on a non-root BEFORE any mutation: the append itself also
     // family-detects, but a stream must refuse at start
-    if (!graft.ops.Ann.isQuantizedRoot(spark, root))
+    if (graft.ops.Ann.quantizedRootFamily(spark, root).isEmpty)
       throw new IllegalStateException(
         s"ingestQuantizedFreshAppend: $root has no SQ/PQ/1-bit " +
-          "geometry marker — not a quantized root")
+          "geometry marker or layout — not a quantized root")
     if (graft.ops.Ann.readIvfModelMarker(spark, root).isEmpty)
       throw new IllegalStateException(
         s"ingestQuantizedFreshAppend: $root has no pinned IVF model " +

@@ -704,14 +704,13 @@ class EngineSpec extends SparkSpecBase {
     eng.buildIndex(td)
     eng.installDeclarative(td, probes = 1)
     try {
-      def declarativeTop(k: Int) = {
-        val df = reg.table(td)
-          .withColumn("dist", round(org.apache.spark.sql.graft.VecExprs
-            .l2Dist(col("vec"), typedlit(Seq(100.0, 100.0))), 6))
-          .orderBy(col("dist").asc, col("pid").asc)
-          .limit(k).select("pid", "dist")
-        df.collect().map(_.getLong(0)).toSeq
-      }
+      def declarative(k: Int) = reg.table(td)
+        .withColumn("dist", round(org.apache.spark.sql.graft.VecExprs
+          .l2Dist(col("vec"), typedlit(Seq(100.0, 100.0))), 6))
+        .orderBy(col("dist").asc, col("pid").asc)
+        .limit(k).select("pid", "dist")
+      def declarativeTop(k: Int) =
+        declarative(k).collect().map(_.getLong(0)).toSeq
       // dominate the corpus with a far blob and REBUILD: the new
       // KMeans centroids move; frozen install-time centroids would
       // keep probing the stale cell and miss the new blob entirely
@@ -723,6 +722,11 @@ class EngineSpec extends SparkSpecBase {
       assert(declarativeTop(5) === imperative,
         "declarative probe selection must track the rebuilt model")
       assert(declarativeTop(5).forall(_ >= 100L))
+      // the table carries no cell column: the probe cut is an id
+      // semi-join against the assigned layout's probed cells
+      val optimized = declarative(5).queryExecution.optimizedPlan.toString
+      assert(optimized.contains("LeftSemi"),
+        s"expected the probe cut:\n$optimized")
     } finally eng.uninstallDeclarative(td)
   }
 
@@ -919,6 +923,68 @@ class EngineSpec extends SparkSpecBase {
       engA.uninstallDeclarative(tdA)
       engB.uninstallDeclarative(tdB)
     }
+  }
+
+  test("installDeclarative is all or none: a collision on a later " +
+      "binding leaves none of the table's rewrites live") {
+    val sp = spark
+    import sp.implicits._
+    import org.apache.spark.sql.functions._
+    val td = TableDef[EChunk]("echunkatomic", primaryKey = Some("cid"),
+      indexes = Seq(
+        VectorIndex("vec", Ann.L2, lists = 2, quantized = true),
+        KeywordIndex("text", model = "simple")),
+      vectorDims = Map("vec" -> 2))
+    val reg = new Registry(spark,
+      Files.createTempDirectory("graft-engine-atomic").toString)
+      .register(td)
+    reg.insert(td, (0 until 20).map { i =>
+      val base = if (i % 2 == 0) 0f else 10f
+      EChunk(i.toLong, s"row $i", Seq(base + i * 0.01f, base),
+        Seq(Seq(base, base)))
+    })
+    val eng = new Engine(reg)
+    eng.buildIndex(td)
+    graft.plans.AnnIndex.install(spark)
+    graft.plans.AnnIndex.register(graft.plans.Binding.Bm25("text", "cid",
+      () => eng.keywordIndex(td), owner = "another.table"))
+    try {
+      val ex = intercept[IllegalStateException] {
+        eng.installDeclarative(td, probes = 1)
+      }
+      assert(ex.getMessage.contains("collision"))
+      val optimized = reg.table(td)
+        .withColumn("dist", round(org.apache.spark.sql.graft.VecExprs
+          .l2Dist(col("vec"), typedlit(Seq(0.0, 0.0))), 6))
+        .orderBy(col("dist").asc, col("cid").asc)
+        .limit(5).select("cid", "dist")
+        .queryExecution.optimizedPlan.toString
+      assert(!optimized.contains("LeftSemi"),
+        s"a failed install must leave no rewrite live:\n$optimized")
+    } finally {
+      graft.plans.AnnIndex.unregister("text", "another.table")
+      eng.uninstallDeclarative(td)
+    }
+  }
+
+  test("installMultivecIndexModel refuses a model whose column types " +
+      "the catalog cannot read back, like installIndexModel") {
+    val sp = spark
+    import sp.implicits._
+    val td = TableDef[EChunk]("echunkmvtypes", primaryKey = Some("cid"),
+      indexes = Seq(MultiVectorIndex("mv", lists = 2)),
+      vectorDims = Map("mv" -> 2))
+    val reg = new Registry(spark,
+      Files.createTempDirectory("graft-engine-mvtypes").toString)
+      .register(td)
+    val eng = new Engine(reg)
+    val model = Ann.IvfModel(
+      Seq(("0", Seq(0.0, 0.0)), ("1", Seq(10.0, 10.0)))
+        .toDF("centroid_id", "centroid"), "centroid_id", "centroid")
+    val ex = intercept[IllegalArgumentException] {
+      eng.installMultivecIndexModel(td, model)
+    }
+    assert(ex.getMessage.contains("centroid_id: bigint"))
   }
 
   test("uninstallDeclarative of one table keeps another table's " +

@@ -300,7 +300,7 @@ class EdgeCaseSpec extends SparkSpecBase {
     val model = Ann.buildIvf(docs, "cell", "vec")
     val index = Ann.buildIvfSq(docs, "vec", model, Ann.L2)
     // probes/k/refine all exceed what exists — returns everything probed
-    val got = Ann.searchIvfSq(index, "id", "vec",
+    val got = Ann.searchQuantized(index, "id", "vec",
       typedlit(Seq(0.0, 0.0)), Ann.L2, probes = 10, k = 10, refine = 10)
       .collect().map(_.getLong(0)).toSeq
     assert(got === Seq(1L, 3L, 2L))
@@ -311,7 +311,7 @@ class EdgeCaseSpec extends SparkSpecBase {
     val i1 = Ann.buildIvfSq(one, "vec", m1, Ann.L2)
     assert(i1.quantized.select(col("codes")).head()
       .getSeq[Int](0) === Seq(0, 0))
-    assert(Ann.searchIvfSq(i1, "id", "vec", typedlit(Seq(0.0, 0.0)),
+    assert(Ann.searchQuantized(i1, "id", "vec", typedlit(Seq(0.0, 0.0)),
       Ann.L2, probes = 1, k = 1).count() === 1L)
   }
 

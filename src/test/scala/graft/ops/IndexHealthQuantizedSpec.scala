@@ -37,7 +37,7 @@ class IndexHealthQuantizedSpec extends SparkSpecBase {
     val model = Ann.buildIvf(df, "label", "embedding")
     val index = Ann.buildIvfPq(df, "embedding", model, m = 4, Ann.L2)
     val dir = tmp("graft_pq_health")
-    Ann.writeIvfPq(index, dir)
+    Ann.writeQuantized(index, dir)
     val got = Ann.indexHealthQuantized(sp, dir)
       .collect().map(r => (r.getAs[Number]("centroid_id").longValue(),
         (r.getAs[Long]("n_rows"), r.getAs[Double]("mean_dist")))).toMap
@@ -78,7 +78,7 @@ class IndexHealthQuantizedSpec extends SparkSpecBase {
     val model = Ann.buildIvf(df, "label", "embedding")
     val index = Ann.buildIvfBitq(df, "embedding", model, Ann.L2)
     val dir = tmp("graft_bitq_health")
-    Ann.writeIvfBitq(index, dir)
+    Ann.writeQuantized(index, dir)
     Ann.ensureIvfBitqRoot(sp, dir, model, spherical = false)
     val got = Ann.indexHealthQuantized(sp, dir)
       .collect().map(r => (r.getAs[Number]("centroid_id").longValue(),
@@ -96,7 +96,7 @@ class IndexHealthQuantizedSpec extends SparkSpecBase {
     val model = Ann.buildIvf(df, "label", "embedding")
     val index = Ann.buildIvfSq(df, "embedding", model, Ann.L2)
     val dir = tmp("graft_sq_health_fresh")
-    Ann.writeIvfSq(index, dir)
+    Ann.writeQuantized(index, dir)
     Ann.ensureIvfSqRoot(sp, dir, index, spherical = false)
     val sp2 = spark
     import sp2.implicits._
@@ -125,7 +125,7 @@ class IndexHealthQuantizedSpec extends SparkSpecBase {
     val model = Ann.buildIvf(df, "label", "embedding")
     val index = Ann.buildIvfSq(df, "embedding", model, Ann.L2)
     val dir = tmp("graft_seat_sq")
-    Ann.writeIvfSq(index, dir)
+    Ann.writeQuantized(index, dir)
     Ann.ensureIvfSqRoot(sp, dir, index, spherical = false)
     val viaSeat = eng.indexHealthFor(td, dir).orderBy("centroid_id")
       .collect().toSeq
@@ -190,7 +190,7 @@ class IndexHealthQuantizedSpec extends SparkSpecBase {
     graft.plans.AnnIndex.install(sp)
 
     val pqDir = tmp("graft_root_pq")
-    Ann.writeIvfPq(Ann.buildIvfPq(df, "embedding", model, 4, Ann.L2),
+    Ann.writeQuantized(Ann.buildIvfPq(df, "embedding", model, 4, Ann.L2),
       pqDir)
     graft.plans.AnnIndex.register(graft.plans.Binding.quantizedRoot(sp, pqDir,
       "embedding", "vec_id", probes = 2, refine = 5, owner = "spec"))
@@ -202,13 +202,13 @@ class IndexHealthQuantizedSpec extends SparkSpecBase {
         .limit(5).select("vec_id", "dist")
       assert(decl.queryExecution.optimizedPlan.toString
         .contains("LeftSemi"), "PQ root rewrite did not engage")
-      val want = Ann.searchIvfPqStored(sp, pqDir, "vec_id", "embedding",
-        q, Ann.L2, probes = 2, k = 5, refine = 5).collect().toSeq
+      val want = Ann.searchQuantizedStored(sp, pqDir, "vec_id", "embedding",
+        typedlit(q), Ann.L2, probes = 2, k = 5, refine = 5).collect().toSeq
       assert(decl.collect().toSeq == want)
     } finally graft.plans.AnnIndex.unregister("embedding")
 
     val bqDir = tmp("graft_root_bq")
-    Ann.writeIvfBitq(Ann.buildIvfBitq(df, "embedding", model, Ann.L2),
+    Ann.writeQuantized(Ann.buildIvfBitq(df, "embedding", model, Ann.L2),
       bqDir)
     Ann.ensureIvfBitqRoot(sp, bqDir, model, spherical = false)
     graft.plans.AnnIndex.register(graft.plans.Binding.quantizedRoot(sp, bqDir,
@@ -221,7 +221,7 @@ class IndexHealthQuantizedSpec extends SparkSpecBase {
         .limit(5).select("vec_id", "dist")
       assert(decl.queryExecution.optimizedPlan.toString
         .contains("LeftSemi"), "1-bit root rewrite did not engage")
-      val want = Ann.searchIvfBitqStored(sp, bqDir, "vec_id",
+      val want = Ann.searchQuantizedStored(sp, bqDir, "vec_id",
         "embedding", typedlit(q), Ann.L2, probes = 2, k = 5)
         .collect().toSeq
       assert(decl.collect().toSeq == want)

@@ -641,13 +641,13 @@ class OpsSpec extends SparkSpecBase {
       .toMap
     Seq(Ann.L2: Ann.Metric, Ann.Cosine).foreach { metric =>
       val index = Ann.buildIvfSq(e, "embedding", model, metric)
-      val got = Ann.knnJoinIvfSq(queries, "q_id", "qv", index, "vec_id",
+      val got = Ann.knnJoinQuantized(queries, "q_id", "qv", index, "vec_id",
           "embedding", metric, probes = 2, k = 3, refine = 6)
         .collect()
         .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
         .groupBy(_._1).view.mapValues(_.map(_._2).sortBy(_._2)).toMap
       qids.foreach { qid =>
-        val single = Ann.searchIvfSq(index, "vec_id", "embedding",
+        val single = Ann.searchQuantized(index, "vec_id", "embedding",
             typedlit(qvecs(qid)), metric, probes = 2, k = 3, refine = 6)
           .collect().map(r => (r.getLong(0), r.getDouble(1)))
         assert(got(qid).sameElements(single),
@@ -670,13 +670,13 @@ class OpsSpec extends SparkSpecBase {
       .toMap
     Seq(Ann.L2: Ann.Metric, Ann.Cosine).foreach { metric =>
       val index = Ann.buildIvfBitq(e, "embedding", model, metric)
-      val got = Ann.knnJoinIvfBitq(queries, "q_id", "qv", index,
+      val got = Ann.knnJoinQuantized(queries, "q_id", "qv", index,
           "vec_id", "embedding", metric, probes = 2, k = 3, refine = 8)
         .collect()
         .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
         .groupBy(_._1).view.mapValues(_.map(_._2).sortBy(_._2)).toMap
       qids.foreach { qid =>
-        val single = Ann.searchIvfBitq(index, "vec_id", "embedding",
+        val single = Ann.searchQuantized(index, "vec_id", "embedding",
             typedlit(qvecs(qid)), metric, probes = 2, k = 3, refine = 8)
           .collect().map(r => (r.getLong(0), r.getDouble(1)))
         assert(got(qid).sameElements(single),
@@ -696,7 +696,7 @@ class OpsSpec extends SparkSpecBase {
       (0 until 64).map(i => 0.01 * i))
     // probing every cell + refine >> k makes the quantized scan a
     // recall-complete candidate stage, so the re-rank must equal exact
-    val got = Ann.searchIvfSq(index, "vec_id", "embedding", q, Ann.L2,
+    val got = Ann.searchQuantized(index, "vec_id", "embedding", q, Ann.L2,
       probes = nCells, k = 5, refine = 40)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val exact = Ann.topK(e, "vec_id", "embedding", q, Ann.L2, 5)
@@ -730,10 +730,10 @@ class OpsSpec extends SparkSpecBase {
     val sq = Ann.buildIvfSq(e, "embedding", model, Ann.L2)
     val sqDir = java.nio.file.Files
       .createTempDirectory("graft-sq-rest").toString
-    Ann.writeIvfSq(sq, sqDir)
-    val sqMem = Ann.searchIvfSq(sq, "vec_id", "embedding", q, Ann.L2,
+    Ann.writeQuantized(sq, sqDir)
+    val sqMem = Ann.searchQuantized(sq, "vec_id", "embedding", q, Ann.L2,
       probes = 3, k = 5).collect().map(_.toSeq).toSeq
-    val sqStoredDf = Ann.searchIvfSqStored(spark, sqDir, "vec_id",
+    val sqStoredDf = Ann.searchQuantizedStored(spark, sqDir, "vec_id",
       "embedding", q, Ann.L2, probes = 3, k = 5)
     assert(sqStoredDf.collect().map(_.toSeq).toSeq === sqMem)
     // probes reach the scan as PartitionFilters (directory pruning)
@@ -743,10 +743,10 @@ class OpsSpec extends SparkSpecBase {
     val bitq = Ann.buildIvfBitq(e, "embedding", model, Ann.L2)
     val bDir = java.nio.file.Files
       .createTempDirectory("graft-bitq-rest").toString
-    Ann.writeIvfBitq(bitq, bDir)
-    val bMem = Ann.searchIvfBitq(bitq, "vec_id", "embedding", q, Ann.L2,
+    Ann.writeQuantized(bitq, bDir)
+    val bMem = Ann.searchQuantized(bitq, "vec_id", "embedding", q, Ann.L2,
       probes = 3, k = 5).collect().map(_.toSeq).toSeq
-    val bStoredDf = Ann.searchIvfBitqStored(spark, bDir, "vec_id",
+    val bStoredDf = Ann.searchQuantizedStored(spark, bDir, "vec_id",
       "embedding", q, Ann.L2, probes = 3, k = 5)
     assert(bStoredDf.collect().map(_.toSeq).toSeq === bMem)
     assert(bStoredDf.queryExecution.executedPlan.toString
@@ -771,7 +771,7 @@ class OpsSpec extends SparkSpecBase {
       (0 until 64).map(i => 0.01 * i))
     // all cells probed + refine covering the whole corpus → the
     // estimator stage is recall-complete and re-rank must equal exact
-    val got = Ann.searchIvfBitq(index, "vec_id", "embedding", q, Ann.L2,
+    val got = Ann.searchQuantized(index, "vec_id", "embedding", q, Ann.L2,
       probes = nCells, k = 5, refine = nVecs)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val exact = Ann.topK(e, "vec_id", "embedding", q, Ann.L2, 5)
@@ -806,7 +806,7 @@ class OpsSpec extends SparkSpecBase {
     val model = Ann.buildIvf(df, "label", "embedding")
     val index = Ann.buildIvfBitq(df, "embedding", model, Ann.L2)
     val q = org.apache.spark.sql.functions.typedlit(vecs(7)._2)
-    val top = Ann.searchIvfBitq(index, "vec_id", "embedding", q, Ann.L2,
+    val top = Ann.searchQuantized(index, "vec_id", "embedding", q, Ann.L2,
       probes = 1, k = 3, refine = 10).collect()
     assert(top.head.getLong(0) === 7L && top.head.getDouble(1) === 0.0)
   }

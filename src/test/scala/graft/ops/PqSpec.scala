@@ -115,8 +115,8 @@ class PqSpec extends SparkSpecBase {
     val idx = Ann.buildIvfPq(df, "embedding", model, m, Ann.L2)
     assert(!idx.spherical)
     val q = corpus(4)._2
-    val got = Ann.searchIvfPq(idx, "vec_id", "embedding", q, Ann.L2,
-      probes = 2, k = 5, refine = 6).collect()
+    val got = Ann.searchQuantized(idx, "vec_id", "embedding", typedlit(q),
+      Ann.L2, probes = 2, k = 5, refine = 6).collect()
     assert(got.length == 5)
     val exact = Ann.topK(df, "vec_id", "embedding", typedlit(q),
       Ann.L2, 5).select("vec_id", "dist").collect()
@@ -132,8 +132,8 @@ class PqSpec extends SparkSpecBase {
     // the raw vector column survives un-normalized for the re-rank
     assert(!idx.encoded.columns.contains("__nvec"))
     val q = corpus(4)._2
-    val got = Ann.searchIvfPq(idx, "vec_id", "embedding", q, Ann.Cosine,
-      probes = 3, k = 5, refine = 12).collect()
+    val got = Ann.searchQuantized(idx, "vec_id", "embedding", typedlit(q),
+      Ann.Cosine, probes = 3, k = 5, refine = 12).collect()
     val exact = Ann.topK(df, "vec_id", "embedding", typedlit(q),
       Ann.Cosine, 5).select("vec_id", "dist").collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
@@ -146,8 +146,8 @@ class PqSpec extends SparkSpecBase {
     val idx = Ann.buildIvfPq(df, "embedding", model, m, Ann.Cosine)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_pq_rt").toString
-    Ann.writeIvfPq(idx, dir)
-    val loaded = Ann.loadIvfPq(spark, dir)
+    Ann.writeQuantized(idx, dir)
+    val loaded = Ann.loadQuantized(spark, dir).asInstanceOf[Ann.IvfPqIndex]
     assert(loaded.pq.m == idx.pq.m &&
       loaded.pq.subDim == idx.pq.subDim &&
       loaded.spherical == idx.spherical)
@@ -158,16 +158,16 @@ class PqSpec extends SparkSpecBase {
     // stored search == in-memory search, and a layout without the
     // geometry marker is refused
     val q = corpus(9)._2
-    val mem = Ann.searchIvfPq(idx, "vec_id", "embedding", q, Ann.Cosine,
-      probes = 2, k = 5, refine = 4).collect()
+    val mem = Ann.searchQuantized(idx, "vec_id", "embedding", typedlit(q),
+      Ann.Cosine, probes = 2, k = 5, refine = 4).collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
-    val stored = Ann.searchIvfPqStored(spark, dir, "vec_id", "embedding",
-      q, Ann.Cosine, probes = 2, k = 5, refine = 4).collect()
+    val stored = Ann.searchQuantizedStored(spark, dir, "vec_id", "embedding",
+      typedlit(q), Ann.Cosine, probes = 2, k = 5, refine = 4).collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
     assert(stored.sameElements(mem))
     val bare = java.nio.file.Files
       .createTempDirectory("graft_pq_bare").toString
-    val e = intercept[IllegalStateException](Ann.loadIvfPq(spark, bare))
+    val e = intercept[IllegalStateException](Ann.loadQuantized(spark, bare))
     assert(e.getMessage.contains("marker"))
   }
 
@@ -179,8 +179,8 @@ class PqSpec extends SparkSpecBase {
     val qids = Seq(3L, 17L, 31L, 45L)
     val queries = df.filter(col("vec_id").isin(qids: _*))
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    val got = Ann.knnJoinIvfPq(queries, "q_id", "qv", idx, "vec_id",
-      "embedding", probes = 2, k = 3, refine = 6)
+    val got = Ann.knnJoinQuantized(queries, "q_id", "qv", idx, "vec_id",
+      "embedding", Ann.L2, probes = 2, k = 3, refine = 6)
     // the caller's qId/dId names survive into the output schema
     assert(got.columns.toSeq == Seq("q_id", "vec_id", "dist", "rank"))
     val byQ = got.collect()
@@ -188,8 +188,8 @@ class PqSpec extends SparkSpecBase {
       .groupBy(_._1).view.mapValues(_.map(_._2).sortBy(_._2)).toMap
     qids.foreach { qid =>
       val q = corpus(qid.toInt)._2
-      val single = Ann.searchIvfPq(idx, "vec_id", "embedding", q,
-        Ann.L2, probes = 2, k = 3, refine = 6).collect()
+      val single = Ann.searchQuantized(idx, "vec_id", "embedding",
+        typedlit(q), Ann.L2, probes = 2, k = 3, refine = 6).collect()
         .map(r => (r.getLong(0), r.getDouble(1)))
       assert(byQ(qid).sameElements(single),
         s"query $qid: batch ${byQ(qid).toSeq} vs single ${single.toSeq}")
@@ -204,25 +204,25 @@ class PqSpec extends SparkSpecBase {
     val qids = Seq(5L, 23L, 41L)
     val queries = df.filter(col("vec_id").isin(qids: _*))
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    val got = Ann.knnJoinIvfPqCos(queries, "q_id", "qv", idx, "vec_id",
-        "embedding", probes = 3, k = 3, refine = 6)
+    val got = Ann.knnJoinQuantized(queries, "q_id", "qv", idx, "vec_id",
+        "embedding", Ann.Cosine, probes = 3, k = 3, refine = 6)
       .collect()
       .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
       .groupBy(_._1).view.mapValues(_.map(_._2).sortBy(_._2)).toMap
     qids.foreach { qid =>
       val q = corpus(qid.toInt)._2
-      val single = Ann.searchIvfPq(idx, "vec_id", "embedding", q,
-        Ann.Cosine, probes = 3, k = 3, refine = 6).collect()
+      val single = Ann.searchQuantized(idx, "vec_id", "embedding",
+        typedlit(q), Ann.Cosine, probes = 3, k = 3, refine = 6).collect()
         .map(r => (r.getLong(0), r.getDouble(1)))
       assert(got(qid).sameElements(single),
         s"query $qid: batch ${got(qid).toSeq} vs single ${single.toSeq}")
     }
     // and the L2 form refuses the spherical index
     val e = intercept[IllegalArgumentException] {
-      Ann.knnJoinIvfPq(queries, "q_id", "qv", idx, "vec_id",
-        "embedding", probes = 2, k = 3)
+      Ann.knnJoinQuantized(queries, "q_id", "qv", idx, "vec_id",
+        "embedding", Ann.L2, probes = 2, k = 3)
     }
-    assert(e.getMessage.contains("knnJoinIvfPqCos"))
+    assert(e.getMessage.contains("metric = Cosine"))
   }
 
   test("knnJoinIvfPq refuses a spherical index") {
@@ -233,8 +233,8 @@ class PqSpec extends SparkSpecBase {
     val queries = df.limit(2)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
     val e = intercept[IllegalArgumentException] {
-      Ann.knnJoinIvfPq(queries, "q_id", "qv", idx, "vec_id",
-        "embedding", probes = 2, k = 3)
+      Ann.knnJoinQuantized(queries, "q_id", "qv", idx, "vec_id",
+        "embedding", Ann.L2, probes = 2, k = 3)
     }
     assert(e.getMessage.contains("L2"))
   }

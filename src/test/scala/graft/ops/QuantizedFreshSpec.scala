@@ -42,14 +42,14 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val sp = spark
     val model = Ann.buildIvf(df, "label", "embedding")
     val full = Ann.buildIvfSq(df, "embedding", model, Ann.L2)
-    val want = ids(Ann.searchIvfSq(full, "vec_id", "embedding",
+    val want = ids(Ann.searchQuantized(full, "vec_id", "embedding",
       typedlit(q), Ann.L2, probes = 2, k = 8, refine = 5))
     // root holds the even half only; markers pinned at build
     val idx = full.copy(quantized =
       full.quantized.filter(col("vec_id") % 2 === 0))
     val dir = java.nio.file.Files
       .createTempDirectory("graft-sqfresh").toString
-    Ann.writeIvfSq(idx, dir)
+    Ann.writeQuantized(idx, dir)
     Ann.ensureIvfSqRoot(sp, dir, idx, spherical = false)
     // append the odd half in two batches
     val n1 = Ann.appendQuantizedFreshIdempotent(sp, dir,
@@ -60,7 +60,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     // crash-redelivery: the same batch appends NOTHING
     assert(Ann.appendQuantizedFreshIdempotent(sp, dir,
       odd.filter(col("vec_id") < 30), "vec_id", "embedding") == 0L)
-    val before = ids(Ann.searchIvfSqStoredFresh(sp, dir, "vec_id",
+    val before = ids(Ann.searchQuantizedStored(sp, dir, "vec_id",
       "embedding", typedlit(q), Ann.L2, probes = 2, k = 8, refine = 5))
     assert(before == want,
       s"fresh-aware search diverged from the one-shot build:\n" +
@@ -70,12 +70,12 @@ class QuantizedFreshSpec extends SparkSpecBase {
     assert(folded == 30L, s"compaction folded $folded, wanted 30")
     assert(!new java.io.File(dir, "fresh").exists(),
       "fresh/ must be gone after compaction")
-    val after = ids(Ann.searchIvfSqStoredFresh(sp, dir, "vec_id",
+    val after = ids(Ann.searchQuantizedStored(sp, dir, "vec_id",
       "embedding", typedlit(q), Ann.L2, probes = 2, k = 8, refine = 5))
     assert(after == want, "post-compaction search diverged")
     // the plain stored search agrees too: the folded layout IS a
-    // one-shot writeIvfSq layout
-    val plain = ids(Ann.searchIvfSqStored(sp, dir, "vec_id",
+    // one-shot writeQuantized layout
+    val plain = ids(Ann.searchQuantizedStored(sp, dir, "vec_id",
       "embedding", typedlit(q), Ann.L2, probes = 2, k = 8, refine = 5))
     assert(plain == want, "folded layout diverged under the plain search")
     // redelivery AFTER compaction still appends zero (the main-layout
@@ -91,16 +91,16 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val sp = spark
     val model = Ann.buildIvf(df, "label", "embedding")
     val full = Ann.buildIvfPq(df, "embedding", model, m = 4, Ann.Cosine)
-    def search(d: String) = ids(Ann.searchIvfPqStoredFresh(sp, d,
-      "vec_id", "embedding", q, Ann.Cosine, probes = 2, k = 8,
+    def search(d: String) = ids(Ann.searchQuantizedStored(sp, d,
+      "vec_id", "embedding", typedlit(q), Ann.Cosine, probes = 2, k = 8,
       refine = 5))
-    val want = ids(Ann.searchIvfPq(full, "vec_id", "embedding", q,
-      Ann.Cosine, probes = 2, k = 8, refine = 5))
+    val want = ids(Ann.searchQuantized(full, "vec_id", "embedding",
+      typedlit(q), Ann.Cosine, probes = 2, k = 8, refine = 5))
     val idx = full.copy(encoded =
       full.encoded.filter(col("vec_id") % 2 === 0))
     val dir = java.nio.file.Files
       .createTempDirectory("graft-pqfresh").toString
-    Ann.writeIvfPq(idx, dir)
+    Ann.writeQuantized(idx, dir)
     // ensure* takes the RAW model (it normalizes internally for
     // spherical roots — idx.model is already normalized, and unit
     // vectors re-normalize to different bits)
@@ -120,17 +120,17 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val sp = spark
     val model = Ann.buildIvf(df, "label", "embedding")
     val full = Ann.buildIvfBitq(df, "embedding", model, Ann.L2)
-    val want = ids(Ann.searchIvfBitq(full, "vec_id", "embedding",
+    val want = ids(Ann.searchQuantized(full, "vec_id", "embedding",
       typedlit(q), Ann.L2, probes = 2, k = 8, refine = 8))
     val idx = full.copy(quantized =
       full.quantized.filter(col("vec_id") % 2 === 0))
     val dir = java.nio.file.Files
       .createTempDirectory("graft-bitqfresh").toString
-    Ann.writeIvfBitq(idx, dir)
+    Ann.writeQuantized(idx, dir)
     Ann.ensureIvfBitqRoot(sp, dir, idx.model, spherical = false)
     assert(Ann.appendQuantizedFreshIdempotent(sp, dir, odd,
       "vec_id", "embedding") == 30L)
-    val got = ids(Ann.searchIvfBitqStoredFresh(sp, dir, "vec_id",
+    val got = ids(Ann.searchQuantizedStored(sp, dir, "vec_id",
       "embedding", typedlit(q), Ann.L2, probes = 2, k = 8, refine = 8))
     assert(got == want,
       s"1-bit fresh-aware search diverged:\ngot  $got\nwant $want")
@@ -140,10 +140,10 @@ class QuantizedFreshSpec extends SparkSpecBase {
     assert(Ann.compactQuantizedFresh(sp, dir, "vec_id",
       "embedding") == 30L)
     assert(!new java.io.File(dir, "fresh").exists())
-    val after = ids(Ann.searchIvfBitqStoredFresh(sp, dir, "vec_id",
+    val after = ids(Ann.searchQuantizedStored(sp, dir, "vec_id",
       "embedding", typedlit(q), Ann.L2, probes = 2, k = 8, refine = 8))
     assert(after == want, "post-compaction 1-bit search diverged")
-    val plain = ids(Ann.searchIvfBitqStored(sp, dir, "vec_id",
+    val plain = ids(Ann.searchQuantizedStored(sp, dir, "vec_id",
       "embedding", typedlit(q), Ann.L2, probes = 2, k = 8, refine = 8))
     assert(plain == want, "folded 1-bit layout diverged (plain search)")
   }
@@ -158,19 +158,19 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val pred = col("label").isin(1, 2)
     // --- SQ, thorough (search + batch, before/after compaction) ---
     val fullSq = Ann.buildIvfSq(df, "embedding", model, Ann.L2)
-    val wantSq = ids(Ann.searchIvfSq(
+    val wantSq = ids(Ann.searchQuantized(
       fullSq.copy(quantized = fullSq.quantized.filter(pred)),
       "vec_id", "embedding", typedlit(q), Ann.L2, probes = 2, k = 8,
       refine = 5))
     assert(wantSq.nonEmpty, "vacuous: the filtered reference is empty")
     val dir = java.nio.file.Files
       .createTempDirectory("graft-sqfresh-filt").toString
-    Ann.writeIvfSq(fullSq.copy(quantized =
+    Ann.writeQuantized(fullSq.copy(quantized =
       fullSq.quantized.filter(col("vec_id") % 2 === 0)), dir)
     Ann.ensureIvfSqRoot(sp, dir, fullSq, spherical = false)
     assert(Ann.appendQuantizedFreshIdempotent(sp, dir, odd,
       "vec_id", "embedding") == 30L)
-    def sqFresh() = ids(Ann.searchIvfSqStoredFresh(sp, dir, "vec_id",
+    def sqFresh() = ids(Ann.searchQuantizedStored(sp, dir, "vec_id",
       "embedding", typedlit(q), Ann.L2, probes = 2, k = 8, refine = 5,
       pred = pred))
     val before = sqFresh()
@@ -187,7 +187,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
         refine = 5, pred = pred)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getInt(3))).toSet
-    val wantBatch = Ann.knnJoinIvfSq(queries, "qid", "qv",
+    val wantBatch = Ann.knnJoinQuantized(queries, "qid", "qv",
         fullSq.copy(quantized = fullSq.quantized.filter(pred)),
         "vec_id", "embedding", Ann.L2, probes = 2, k = 5, refine = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
@@ -203,36 +203,36 @@ class QuantizedFreshSpec extends SparkSpecBase {
     // --- PQ (spherical) + 1-bit: before-compaction parity ---
     val fullPq = Ann.buildIvfPq(df, "embedding", model, m = 4,
       Ann.Cosine)
-    val wantPq = ids(Ann.searchIvfPq(
+    val wantPq = ids(Ann.searchQuantized(
       fullPq.copy(encoded = fullPq.encoded.filter(pred)),
-      "vec_id", "embedding", q, Ann.Cosine, probes = 2, k = 8,
+      "vec_id", "embedding", typedlit(q), Ann.Cosine, probes = 2, k = 8,
       refine = 5))
     val dirPq = java.nio.file.Files
       .createTempDirectory("graft-pqfresh-filt").toString
-    Ann.writeIvfPq(fullPq.copy(encoded =
+    Ann.writeQuantized(fullPq.copy(encoded =
       fullPq.encoded.filter(col("vec_id") % 2 === 0)), dirPq)
     Ann.ensureIvfPqRoot(sp, dirPq, fullPq.pq, model, spherical = true)
     assert(Ann.appendQuantizedFreshIdempotent(sp, dirPq, odd,
       "vec_id", "embedding") == 30L)
-    val gotPq = ids(Ann.searchIvfPqStoredFresh(sp, dirPq, "vec_id",
-      "embedding", q, Ann.Cosine, probes = 2, k = 8, refine = 5,
+    val gotPq = ids(Ann.searchQuantizedStored(sp, dirPq, "vec_id",
+      "embedding", typedlit(q), Ann.Cosine, probes = 2, k = 8, refine = 5,
       pred = pred))
     assert(gotPq == wantPq,
       s"filtered fresh PQ diverged:\ngot  $gotPq\nwant $wantPq")
     assert(gotPq.forall(r => !disallowed(r._1)))
     val fullBq = Ann.buildIvfBitq(df, "embedding", model, Ann.L2)
-    val wantBq = ids(Ann.searchIvfBitq(
+    val wantBq = ids(Ann.searchQuantized(
       fullBq.copy(quantized = fullBq.quantized.filter(pred)),
       "vec_id", "embedding", typedlit(q), Ann.L2, probes = 2, k = 8,
       refine = 8))
     val dirBq = java.nio.file.Files
       .createTempDirectory("graft-bitqfresh-filt").toString
-    Ann.writeIvfBitq(fullBq.copy(quantized =
+    Ann.writeQuantized(fullBq.copy(quantized =
       fullBq.quantized.filter(col("vec_id") % 2 === 0)), dirBq)
     Ann.ensureIvfBitqRoot(sp, dirBq, fullBq.model, spherical = false)
     assert(Ann.appendQuantizedFreshIdempotent(sp, dirBq, odd,
       "vec_id", "embedding") == 30L)
-    val gotBq = ids(Ann.searchIvfBitqStoredFresh(sp, dirBq, "vec_id",
+    val gotBq = ids(Ann.searchQuantizedStored(sp, dirBq, "vec_id",
       "embedding", typedlit(q), Ann.L2, probes = 2, k = 8, refine = 8,
       pred = pred))
     assert(gotBq == wantBq,
@@ -247,7 +247,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val idx = Ann.buildIvfSq(df, "embedding", model, Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft-fresh-narrow").toString
-    Ann.writeIvfSq(idx, dir)
+    Ann.writeQuantized(idx, dir)
     Ann.ensureIvfSqRoot(sp, dir, idx, spherical = false)
     // fresh ids (the root holds the full corpus here, so same-id rows
     // would dedup away before the schema check) and a MISSING doc col
@@ -279,7 +279,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val idx = Ann.buildIvfSq(df, "embedding", model, Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft-freshdel").toString
-    Ann.writeIvfSq(idx.copy(quantized =
+    Ann.writeQuantized(idx.copy(quantized =
       idx.quantized.filter(col("vec_id") % 2 === 0)), dir)
     Ann.ensureIvfSqRoot(sp, dir, idx, spherical = false)
     assert(Ann.appendQuantizedFreshIdempotent(sp, dir, odd, "vec_id",
@@ -293,7 +293,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
       "the fresh side table still holds the deleted row")
     assert(sp.read.parquet(s"$dir/quantized")
       .filter(col("vec_id") === 8L).count() == 0L)
-    val got = Ann.searchIvfSqStoredFresh(sp, dir, "vec_id", "embedding",
+    val got = Ann.searchQuantizedStored(sp, dir, "vec_id", "embedding",
         typedlit(corpus(7)._2), Ann.L2, probes = 10, k = 60, refine = 60)
       .collect().map(_.getLong(0)).toSet
     assert(!got.contains(7L) && !got.contains(8L),
@@ -307,7 +307,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     Ann.deleteQuantizedFreshIds(sp, dir, "vec_id", restOdd)
     assert(!new java.io.File(dir, "fresh").exists(),
       "an emptied fresh/ must disappear, not linger unreadable")
-    val after = Ann.searchIvfSqStoredFresh(sp, dir, "vec_id",
+    val after = Ann.searchQuantizedStored(sp, dir, "vec_id",
         "embedding", typedlit(corpus(7)._2), Ann.L2, probes = 10,
         k = 60, refine = 60).count()
     assert(after == 29L, s"expected 29 even survivors, saw $after")
@@ -335,7 +335,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val fullSq = Ann.buildIvfSq(df, "embedding", model, Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft-sqmerge").toString
-    Ann.writeIvfSq(fullSq, dir)
+    Ann.writeQuantized(fullSq, dir)
     Ann.ensureIvfSqRoot(sp, dir, fullSq, spherical = false)
     drain("quantized", dir)
     val merged = Ann.mergeUnderfullCellsQuantized(sp, dir,
@@ -345,7 +345,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     assert(sp.read.parquet(s"$dir/centroids").count() === 2L)
     // moved rows re-encoded under the receiving cells' frozen bounds:
     // all-probe + covering refine == the exact scan over survivors
-    val got = ids(Ann.searchIvfSqStored(sp, dir, "vec_id", "embedding",
+    val got = ids(Ann.searchQuantizedStored(sp, dir, "vec_id", "embedding",
       typedlit(q), Ann.L2, probes = 2, k = 8, refine = 6))
     assert(got == exactWant(8),
       s"merged SQ root diverged from exact:\n$got\n${exactWant(8)}")
@@ -359,7 +359,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
       spherical = false)
     // torn merge: every quantized entry point refuses; a re-run heals
     graft.io.Markers.write(sp, dir, "_graft_merge_pending", "quantized|")
-    intercept[IllegalStateException] { Ann.loadIvfSq(sp, dir) }
+    intercept[IllegalStateException] { Ann.loadQuantized(sp, dir) }
     intercept[IllegalStateException] {
       Ann.appendQuantizedFreshIdempotent(sp, dir,
         Seq((900L, Seq.fill(dim)(0.1), 0)).toDF(
@@ -370,7 +370,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     }
     assert(Ann.mergeUnderfullCellsQuantized(sp, dir,
       "embedding", minRows = 5).isEmpty) // heals, nothing left to merge
-    assert(ids(Ann.searchIvfSqStored(sp, dir, "vec_id", "embedding",
+    assert(ids(Ann.searchQuantizedStored(sp, dir, "vec_id", "embedding",
       typedlit(q), Ann.L2, probes = 2, k = 8, refine = 6)) == got)
     // a live fresh/ refuses the merge (compact first)
     assert(Ann.appendQuantizedFreshIdempotent(sp, dir,
@@ -386,21 +386,21 @@ class QuantizedFreshSpec extends SparkSpecBase {
       Ann.Cosine)
     val dirPq = java.nio.file.Files
       .createTempDirectory("graft-pqmerge").toString
-    Ann.writeIvfPq(fullPq, dirPq)
+    Ann.writeQuantized(fullPq, dirPq)
     drain("encoded", dirPq)
     assert(Ann.mergeUnderfullCellsQuantized(sp, dirPq,
       "embedding", minRows = 5).values.sum === 2L)
-    assert(Ann.searchIvfPqStored(sp, dirPq, "vec_id", "embedding", q,
-      Ann.Cosine, probes = 2, k = 42, refine = 1).count() === 42L)
+    assert(Ann.searchQuantizedStored(sp, dirPq, "vec_id", "embedding",
+      typedlit(q), Ann.Cosine, probes = 2, k = 42, refine = 1).count() === 42L)
     val fullBq = Ann.buildIvfBitq(df, "embedding", model, Ann.L2)
     val dirBq = java.nio.file.Files
       .createTempDirectory("graft-bqmerge").toString
-    Ann.writeIvfBitq(fullBq, dirBq)
+    Ann.writeQuantized(fullBq, dirBq)
     Ann.ensureIvfBitqRoot(sp, dirBq, fullBq.model, spherical = false)
     drain("quantized", dirBq)
     assert(Ann.mergeUnderfullCellsQuantized(sp, dirBq,
       "embedding", minRows = 5).values.sum === 2L)
-    assert(Ann.searchIvfBitqStored(sp, dirBq, "vec_id", "embedding",
+    assert(Ann.searchQuantizedStored(sp, dirBq, "vec_id", "embedding",
       typedlit(q), Ann.L2, probes = 2, k = 42, refine = 1).count()
       === 42L)
   }
@@ -419,7 +419,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val fullSq = Ann.buildIvfSq(df, "embedding", model1, Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft-sqsplit").toString
-    Ann.writeIvfSq(fullSq, dir)
+    Ann.writeQuantized(fullSq, dir)
     Ann.ensureIvfSqRoot(sp, dir, fullSq, spherical = false)
     def codeBytes(): Map[Long, Seq[Byte]] =
       sp.read.parquet(s"$dir/quantized")
@@ -449,7 +449,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
         s"sub-cell $nid did not inherit the parent's bounds")
     }
     // all-probe + covering refine == exact over the whole corpus
-    assert(ids(Ann.searchIvfSqStored(sp, dir, "vec_id", "embedding",
+    assert(ids(Ann.searchQuantizedStored(sp, dir, "vec_id", "embedding",
       typedlit(q), Ann.L2, probes = 2, k = 8, refine = 8))
       == exactWant(8), "post-split SQ search diverged from exact")
     // --- PQ spherical: rows verbatim, sub-centroids unit-norm ---
@@ -457,7 +457,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
       Ann.Cosine)
     val dirPq = java.nio.file.Files
       .createTempDirectory("graft-pqsplit").toString
-    Ann.writeIvfPq(fullPq, dirPq)
+    Ann.writeQuantized(fullPq, dirPq)
     assert(Ann.splitOverfullCellsQuantized(sp, dirPq,
       "embedding", maxRows = 30).values.head.size === 2)
     val pqCents = sp.read.parquet(s"$dirPq/centroids")
@@ -465,17 +465,17 @@ class QuantizedFreshSpec extends SparkSpecBase {
       .map(_.getSeq[Double](0).map(x => x * x).sum)
     pqCents.foreach(n => assert(math.abs(n - 1.0) < 1e-9,
       s"spherical sub-centroid not unit-norm: $n"))
-    assert(Ann.searchIvfPqStored(sp, dirPq, "vec_id", "embedding", q,
-      Ann.Cosine, probes = 2, k = 60, refine = 1).count() === 60L)
+    assert(Ann.searchQuantizedStored(sp, dirPq, "vec_id", "embedding",
+      typedlit(q), Ann.Cosine, probes = 2, k = 60, refine = 1).count() === 60L)
     // --- 1-bit: residuals re-encode under the new sub-centroids ---
     val fullBq = Ann.buildIvfBitq(df, "embedding", model1, Ann.L2)
     val dirBq = java.nio.file.Files
       .createTempDirectory("graft-bqsplit").toString
-    Ann.writeIvfBitq(fullBq, dirBq)
+    Ann.writeQuantized(fullBq, dirBq)
     Ann.ensureIvfBitqRoot(sp, dirBq, fullBq.model, spherical = false)
     assert(Ann.splitOverfullCellsQuantized(sp, dirBq,
       "embedding", maxRows = 30).values.head.size === 2)
-    assert(ids(Ann.searchIvfBitqStored(sp, dirBq, "vec_id",
+    assert(ids(Ann.searchQuantizedStored(sp, dirBq, "vec_id",
       "embedding", typedlit(q), Ann.L2, probes = 2, k = 8,
       refine = 8)) == exactWant(8),
       "post-split 1-bit search diverged — residual re-encode broken")
@@ -500,7 +500,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val fullSq = Ann.buildIvfSq(df, "embedding", model, Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft-sqdrift").toString
-    Ann.writeIvfSq(fullSq, dir)
+    Ann.writeQuantized(fullSq, dir)
     Ann.ensureIvfSqRoot(sp, dir, fullSq, spherical = false)
     // strand row 1's copy in a non-argmin cell (raw cell-dir move)
     val argminCell = Ann.assign(df.filter(col("vec_id") === 1),
@@ -543,7 +543,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val idx = Ann.buildIvfSq(df, "embedding", model, Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft-fresh-retrain").toString
-    Ann.writeIvfSq(idx, dir)
+    Ann.writeQuantized(idx, dir)
     Ann.ensureIvfSqRoot(sp, dir, idx, spherical = false)
     val retrained = Ann.buildIvf(
       df.withColumn("label", (col("label") + 1) % 3), "label",
@@ -557,10 +557,10 @@ class QuantizedFreshSpec extends SparkSpecBase {
     // metric/spherical mismatch refuses at query time
     val dir2 = java.nio.file.Files
       .createTempDirectory("graft-fresh-metric").toString
-    Ann.writeIvfSq(idx, dir2)
+    Ann.writeQuantized(idx, dir2)
     Ann.ensureIvfSqRoot(sp, dir2, idx, spherical = false)
     intercept[IllegalArgumentException] {
-      Ann.searchIvfSqStoredFresh(sp, dir2, "vec_id", "embedding",
+      Ann.searchQuantizedStored(sp, dir2, "vec_id", "embedding",
         typedlit(q), Ann.Cosine, probes = 2, k = 8)
     }
   }
@@ -576,9 +576,9 @@ class QuantizedFreshSpec extends SparkSpecBase {
       full.quantized.filter(col("vec_id") < 40))
     val dir = java.nio.file.Files
       .createTempDirectory("graft-fresh-policy").toString
-    Ann.writeIvfSq(idx, dir)
+    Ann.writeQuantized(idx, dir)
     Ann.ensureIvfSqRoot(sp, dir, idx, spherical = false)
-    def search() = ids(Ann.searchIvfSqStoredFresh(sp, dir, "vec_id",
+    def search() = ids(Ann.searchQuantizedStored(sp, dir, "vec_id",
       "embedding", typedlit(q), Ann.L2, probes = 2, k = 8, refine = 5))
     // no fresh side at all → None (nothing to decide)
     assert(Ann.compactQuantizedFreshIfNeeded(sp, dir, "vec_id",
@@ -653,7 +653,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
       val full = Ann.buildIvfSq(df, "embedding", model, Ann.L2)
       val dir = java.nio.file.Files
         .createTempDirectory("graft-sqfreshb").toString
-      Ann.writeIvfSq(full.copy(quantized =
+      Ann.writeQuantized(full.copy(quantized =
         full.quantized.filter(col("vec_id") % 2 === 0)), dir)
       Ann.ensureIvfSqRoot(sp, dir, full, spherical = false)
       assert(Ann.appendQuantizedFreshIdempotent(sp, dir, odd,
@@ -663,7 +663,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
         k = 8, refine = 5))
       val got = batch()
       qids.foreach { qid =>
-        val single = ids(Ann.searchIvfSqStoredFresh(sp, dir, "vec_id",
+        val single = ids(Ann.searchQuantizedStored(sp, dir, "vec_id",
           "embedding", typedlit(corpus(qid.toInt)._2), Ann.L2,
           probes = 2, k = 8, refine = 5))
         assert(got(qid) == single,
@@ -690,7 +690,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
         Ann.Cosine)
       val dir = java.nio.file.Files
         .createTempDirectory("graft-pqfreshb").toString
-      Ann.writeIvfPq(full.copy(encoded =
+      Ann.writeQuantized(full.copy(encoded =
         full.encoded.filter(col("vec_id") % 2 === 0)), dir)
       Ann.ensureIvfPqRoot(sp, dir, full.pq, model, spherical = true)
       assert(Ann.appendQuantizedFreshIdempotent(sp, dir, odd,
@@ -699,8 +699,8 @@ class QuantizedFreshSpec extends SparkSpecBase {
         "q_id", "qv", "vec_id", "embedding", Ann.Cosine, probes = 2,
         k = 8, refine = 5))
       qids.foreach { qid =>
-        val single = ids(Ann.searchIvfPqStoredFresh(sp, dir, "vec_id",
-          "embedding", corpus(qid.toInt)._2, Ann.Cosine, probes = 2,
+        val single = ids(Ann.searchQuantizedStored(sp, dir, "vec_id",
+          "embedding", typedlit(corpus(qid.toInt)._2), Ann.Cosine, probes = 2,
           k = 8, refine = 5))
         assert(got(qid) == single,
           s"PQ qid=$qid: batch ${got(qid)} != single $single")
@@ -712,7 +712,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
       val full = Ann.buildIvfBitq(df, "embedding", model, Ann.L2)
       val dir = java.nio.file.Files
         .createTempDirectory("graft-bitqfreshb").toString
-      Ann.writeIvfBitq(full.copy(quantized =
+      Ann.writeQuantized(full.copy(quantized =
         full.quantized.filter(col("vec_id") % 2 === 0)), dir)
       Ann.ensureIvfBitqRoot(sp, dir, full.model, spherical = false)
       assert(Ann.appendQuantizedFreshIdempotent(sp, dir, odd,
@@ -721,7 +721,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
         "q_id", "qv", "vec_id", "embedding", Ann.L2, probes = 2,
         k = 8, refine = 8))
       qids.foreach { qid =>
-        val single = ids(Ann.searchIvfBitqStoredFresh(sp, dir,
+        val single = ids(Ann.searchQuantizedStored(sp, dir,
           "vec_id", "embedding", typedlit(corpus(qid.toInt)._2),
           Ann.L2, probes = 2, k = 8, refine = 8))
         assert(got(qid) == single,

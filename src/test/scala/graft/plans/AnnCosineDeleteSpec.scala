@@ -46,7 +46,7 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
       val optimized = df.queryExecution.optimizedPlan.toString
       assert(optimized.contains("LeftSemi"),
         s"expected injected candidate semi-join:\n$optimized")
-      val viaOp = Ann.searchIvfSq(index, "vec_id", "embedding",
+      val viaOp = Ann.searchQuantized(index, "vec_id", "embedding",
         typedlit(q64), Ann.Cosine, probes = 3, k = 5, refine = 5)
         .select("vec_id", "dist").collect().map(_.toSeq).toSeq
       assert(df.collect().map(_.toSeq).toSeq === viaOp)
@@ -79,7 +79,7 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
         .limit(5)
         .select("vec_id", "dist")
       assert(df.queryExecution.optimizedPlan.toString.contains("LeftSemi"))
-      val viaOp = Ann.searchIvfBitq(index, "vec_id", "embedding",
+      val viaOp = Ann.searchQuantized(index, "vec_id", "embedding",
         typedlit(q64), Ann.Cosine, probes = 3, k = 5, refine = 5)
         .select("vec_id", "dist").collect().map(_.toSeq).toSeq
       assert(df.collect().map(_.toSeq).toSeq === viaOp)
@@ -97,7 +97,7 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     val lists = model.centroids.count().toInt
     // probe everything + refine spanning the table: phase 1 is
     // recall-complete, so the exact re-rank equals brute force
-    val got = Ann.searchIvfSq(index, "vec_id", "embedding", typedlit(q64),
+    val got = Ann.searchQuantized(index, "vec_id", "embedding", typedlit(q64),
       Ann.Cosine, probes = lists, k = 10, refine = 1000)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     val brute = Ann.topK(e, "vec_id", "embedding", typedlit(q64),
@@ -212,12 +212,12 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     val model = Ann.buildIvf(e, "label", "embedding")
     val index = Ann.buildIvfBitq(e, "embedding", model, Ann.L2)
     val dir = Files.createTempDirectory("graft-del-bitq").toString
-    Ann.writeIvfBitq(index, dir)
-    val doomed = Ann.searchIvfBitqStored(spark, dir, "vec_id", "embedding",
+    Ann.writeQuantized(index, dir)
+    val doomed = Ann.searchQuantizedStored(spark, dir, "vec_id", "embedding",
       typedlit(q64), Ann.L2, probes = 3, k = 3)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     Ann.deleteStored(spark, s"$dir/quantized", col("vec_id").isin(doomed: _*))
-    val after = Ann.searchIvfBitqStored(spark, dir, "vec_id", "embedding",
+    val after = Ann.searchQuantizedStored(spark, dir, "vec_id", "embedding",
       typedlit(q64), Ann.L2, probes = 3, k = 10)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(doomed.forall(d => !after.contains(d)))
@@ -417,7 +417,7 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     val model = Ann.buildIvfKMeans(reg.table(td), "v", 3)
     val idx = Ann.buildIvfSq(reg.table(td), "v", model, Ann.L2)
     val root = Files.createTempDirectory("graft-qseat-root").toString
-    Ann.writeIvfSq(idx, root)
+    Ann.writeQuantized(idx, root)
     Ann.ensureIvfSqRoot(sp, root, idx, spherical = false)
     // drain one cluster's cell to a single row, then the MERGE seat
     val doomed = (5 until 30 by 3).map(_.toLong).toDF("rid")
@@ -436,7 +436,7 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     assert(split.nonEmpty, "engine-seat quantized split never fired")
     assert(sp.read.parquet(s"$root/centroids").count() === 3L)
     // every survivor reachable through the re-partitioned root
-    assert(Ann.searchIvfSqStored(sp, root, "rid", "v",
+    assert(Ann.searchQuantizedStored(sp, root, "rid", "v",
       typedlit(Seq(0.0, 0.0)), Ann.L2, probes = 3, k = 21,
       refine = 1).count() === 21L)
   }
@@ -612,7 +612,7 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     val model = Ann.buildIvfKMeans(reg.table(td), "v", 2)
     val idx = Ann.buildIvfPq(reg.table(td), "v", model, m = 2, Ann.L2)
     val dir = Files.createTempDirectory("graft-pqdel-attach").toString
-    Ann.writeIvfPq(idx, dir)
+    Ann.writeQuantized(idx, dir)
     eng.attachStoredIndex(td, dir) // PQ root via its geometry marker
     val booksBefore = spark.read.parquet(s"$dir/codebooks").count()
     reg.removeBy(td, Map("rid" -> 5L))
@@ -621,8 +621,8 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     // trained artifacts untouched by the delete
     assert(spark.read.parquet(s"$dir/codebooks").count() === booksBefore)
     // stored search over the maintained layout never surfaces rid 5
-    val got = Ann.searchIvfPqStored(spark, dir, "rid", "v",
-      Seq(0.0, 0.0), Ann.L2, probes = 2, k = 30, refine = 5)
+    val got = Ann.searchQuantizedStored(spark, dir, "rid", "v",
+      typedlit(Seq(0.0, 0.0)), Ann.L2, probes = 2, k = 30, refine = 5)
       .collect().map(_.getLong(0))
     assert(!got.contains(5L) && got.nonEmpty)
   }

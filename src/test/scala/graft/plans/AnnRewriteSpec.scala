@@ -467,7 +467,7 @@ class AnnRewriteSpec extends SparkSpecBase {
       val physical = df.queryExecution.executedPlan.toString
       assert(physical.contains("InMemoryTableScan"),
         s"expected code-table scan:\n$physical")
-      val viaOp = Ann.searchIvfSq(index, "vec_id", "embedding",
+      val viaOp = Ann.searchQuantized(index, "vec_id", "embedding",
         typedlit(q64), Ann.L2, probes = 3, k = 5, refine = 5)
         .select("vec_id", "dist").collect().map(_.toSeq).toSeq
       assert(df.collect().map(_.toSeq).toSeq === viaOp)
@@ -496,7 +496,7 @@ class AnnRewriteSpec extends SparkSpecBase {
       val optimized = df.queryExecution.optimizedPlan.toString
       assert(optimized.contains("LeftSemi"),
         s"expected injected candidate semi-join:\n$optimized")
-      val viaOp = Ann.searchIvfBitq(index, "vec_id", "embedding",
+      val viaOp = Ann.searchQuantized(index, "vec_id", "embedding",
         typedlit(q64), Ann.L2, probes = 3, k = 5, refine = 5)
         .select("vec_id", "dist").collect().map(_.toSeq).toSeq
       assert(df.collect().map(_.toSeq).toSeq === viaOp)

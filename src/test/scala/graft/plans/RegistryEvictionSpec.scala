@@ -70,7 +70,7 @@ class RegistryEvictionSpec extends SparkSpecBase {
       .asClass.knownDirectSubclasses.map(_.name.toString)
     assert(bindings.map(family).toSet === cases,
       "the spec must register one binding of every Binding case")
-    bindings.foreach(AnnIndex.register)
+    bindings.foreach(AnnIndex.register(_))
     assert(AnnIndex.hasAny, "registrations must be visible to the rule")
     assert(bindings.forall(b => AnnIndex.lookup(b.column).contains(b)))
     bindings.foreach(b => AnnIndex.unregister(b.column, b.owner))

@@ -345,12 +345,12 @@ class PlanSpec extends SparkSpecBase {
     val index = Ann.buildIvfSq(e, "embedding", model, Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft-plan-del").toString
-    Ann.writeIvfSq(index, dir)
+    Ann.writeQuantized(index, dir)
     val removed = Ann.deleteStored(spark, s"$dir/quantized",
       col("vec_id") % 3 === 0)
     assert(removed > 0)
     val q = typedlit((0 until 64).map(_ => 0.0))
-    val hits = Ann.searchIvfSqStored(spark, dir, "vec_id", "embedding",
+    val hits = Ann.searchQuantizedStored(spark, dir, "vec_id", "embedding",
       q, Ann.L2, probes = 2, k = 5)
     val p = plan(hits)
     assert(p.contains("PartitionFilters:") && p.contains("centroid_id#"),

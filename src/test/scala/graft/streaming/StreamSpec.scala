@@ -678,22 +678,22 @@ class StreamSpec extends SparkSpecBase {
     } finally q.stop()
     Stream.compactStored(sp, s"$dir/quantized", "centroid_id",
       maxFilesPerCell = 1)
-    // the graduated layout loads as a writeIvfSq layout and its codes
+    // the graduated layout loads as a writeQuantized SQ layout and its codes
     // equal the batch index's (packed) codes row for row
-    val loaded = Ann.loadIvfSq(sp, dir)
-    val got = loaded.quantized.select("vec_id", "codes")
+    val loaded = Ann.loadQuantized(sp, dir)
+    val got = loaded.rows.select("vec_id", "codes")
       .as[(Long, Seq[Int])].collect().toMap
     val want = idx.quantized.select(col("vec_id"), col("codes"))
       .as[(Long, Seq[Int])].collect().toMap
     assert(got === want)
     // a search over the streamed layout equals the in-memory index path
     val qv = typedlit(Seq.fill(4)(0.5))
-    val a = Ann.searchIvfSqStored(sp, dir, "vec_id", "embedding", qv,
+    val a = Ann.searchQuantizedStored(sp, dir, "vec_id", "embedding", qv,
       Ann.L2, probes = 2, k = 5).collect().map(_.toSeq).toSeq
     val b = {
       val cells = Ann.probeCells(model, qv, Ann.L2, 2)
         .collect().map(_.getLong(0))
-      Ann.searchIvfSq(idx.copy(quantized = idx.quantized
+      Ann.searchQuantized(idx.copy(quantized = idx.quantized
           .filter(col("centroid_id").isin(cells: _*))),
         "vec_id", "embedding", qv, Ann.L2, probes = 2, k = 5)
         .collect().map(_.toSeq).toSeq
@@ -741,7 +741,7 @@ class StreamSpec extends SparkSpecBase {
     } finally q.stop()
     Stream.compactStored(sp, s"$dir/quantized", "centroid_id",
       maxFilesPerCell = 1)
-    // the graduated layout IS a writeIvfBitq layout: its packed bytes
+    // the graduated layout IS a writeQuantized 1-bit layout: its packed bytes
     // equal the batch build's, row for row
     val batch = Ann.buildIvfBitq(docs, "embedding", model, Ann.L2)
     val want = batch.quantized
@@ -756,12 +756,12 @@ class StreamSpec extends SparkSpecBase {
     assert(got === want)
     // stored search over the streamed layout == in-memory index path
     val qv = typedlit(Seq.fill(4)(0.5))
-    val a = Ann.searchIvfBitqStored(sp, dir, "vec_id", "embedding", qv,
+    val a = Ann.searchQuantizedStored(sp, dir, "vec_id", "embedding", qv,
       Ann.L2, probes = 2, k = 5).collect().map(_.toSeq).toSeq
     val b = {
       val cells = Ann.probeCells(model, qv, Ann.L2, 2)
         .collect().map(_.getLong(0))
-      Ann.searchIvfBitq(batch.copy(quantized = batch.quantized
+      Ann.searchQuantized(batch.copy(quantized = batch.quantized
           .filter(col("centroid_id").isin(cells: _*))),
         "vec_id", "embedding", qv, Ann.L2, probes = 2, k = 5)
         .collect().map(_.toSeq).toSeq
