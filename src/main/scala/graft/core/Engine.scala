@@ -46,9 +46,9 @@ final class Engine(reg: Registry) {
     // RETURNED (applied before every top-k/phase-1 cut, so disallowed
     // docs never consume candidate slots), never how anything is
     // scored; selective predicates are compensated with `probes` /
-    // `refine`, the reference's own knobs. Quantized layouts carry
-    // only (pk, codes, cell), so the predicate evaluates on the base
-    // table and reaches them as a pk semi-join.
+    // `refine`, the reference's own knobs. The quantized memo rows
+    // carry every table column, so the predicate applies to them
+    // directly; the assigned layouts take it as a pk semi-join.
     def allowed(df: DataFrame): DataFrame =
       allowedBy(td, base, filter)(df)
     val p = probesFor(ix.lists, probes)
@@ -56,8 +56,10 @@ final class Engine(reg: Registry) {
       (indexModel(td).filter(_ => ix.lists > 0), quantFamily(ix)) match {
         case (Some(model), Some(fam)) =>
           val idx = quantizedCached(td, ix, model, fam)
-          Ann.searchQuantized(idx.withRows(allowed(idx.rows)), td.pk,
-            ix.column, q, ix.distance, p, topk, autoRefine(fam, ix, refine))
+          Ann.searchQuantized(filter.fold(idx)(f =>
+              idx.withRows(idx.rows.filter(f))), td.pk,
+            ix.column, q, ix.distance, p, topk,
+            autoRefine(fam, ix, refine), fields = fields)
         case (Some(model), None) if ix.mrlDims > 0 =>
           // the COMPOSED index on the engine surface (the r78 shape
           // declaratively: cells prune first, the prefix cut runs
@@ -71,14 +73,12 @@ final class Engine(reg: Registry) {
           // cells)
           val (probeModel, qProbe) = ix.distance match {
             case Ann.Cosine =>
-              (Ann.normalizeModel(model),
-                typedlit(Ann.normalizeSeq(queryVec)))
+              (sphericalModel(td), typedlit(Ann.normalizeSeq(queryVec)))
             case _ => (model, q)
           }
+          val cells = Ann.probeCellIds(probeModel, qProbe, Ann.L2, p)
           val pruned = allowed(assignedCached(td, ix, model))
-            .join(org.apache.spark.sql.functions.broadcast(
-              Ann.probeCells(probeModel, qProbe, Ann.L2, p)),
-              Seq(model.idCol))
+            .filter(col(model.idCol).isin(cells: _*))
           val cand = topk * (if (refine > 0) refine else 5)
           Ann.matryoshkaTopK(pruned, td.pk, ix.column, queryVec,
             ix.mrlDims, cand.max(topk), topk, metric = ix.distance)
@@ -100,15 +100,14 @@ final class Engine(reg: Registry) {
           Ann.topK(filter.fold(base)(base.filter), td.pk, ix.column,
             q, ix.distance, topk)
       }
-    // the quantized searchers return (pk, dist) only — join the top-k
-    // back to the base table when the caller wants more columns (k
-    // rows, broadcast; re-sorted to keep the ranked order)
+    // the matryoshka searchers return (pk, pre_dist, dist) only — when
+    // the caller wants more columns, the k hits fetch their rows by
+    // literal pk
     val need = fields :+ "dist"
     val out =
       if (need.forall(ranked.columns.contains)) ranked
-      else base
-        .join(broadcast(ranked.select(col(td.pk), col("dist"))), td.pk)
-        .orderBy(col("dist").asc, col(td.pk).asc)
+      else reg.fetchHits(td, ranked.select(col(td.pk), col("dist")),
+        col("dist").asc, col(td.pk).asc)
     out.select(need.map(col): _*)
   }
 
@@ -310,12 +309,12 @@ final class Engine(reg: Registry) {
     // (scores of surviving docs identical to the unfiltered search),
     // the predicate only thins which docs can be returned, applied
     // BEFORE the top-k cut so disallowed docs never consume slots
-    val hits = (filter match {
+    val hits = filter match {
       case None => Bm25.search(idx, query, topk)
       case Some(pred) => Bm25.searchFiltered(idx, query, topk,
         reg.table(td).filter(pred), td.pk)
-    }).withColumnRenamed("id", "__hit_id")
-    joinHitsBack(td, hits, fields)
+    }
+    hitRows(td, hits, fields)
   }
 
   /** BATCH keyword top-k — [[searchByVectorBatch]]'s keyword twin and
@@ -344,18 +343,20 @@ final class Engine(reg: Registry) {
     }
   }
 
-  /** Shared hits→payload join for the keyword/sparse searches. The
-    * result carries the reserved `score` column, so a table declaring
-    * its own `score` (or `__hit_id`) would make the projection
-    * ambiguous — refuse loudly instead of an AnalysisException. */
-  private def joinHitsBack(td: TableDef[_], hits: DataFrame,
-                           fields: Seq[String]): DataFrame = {
-    Seq("score", "__hit_id").foreach(c => require(!td.columns.contains(c),
-      s"${td.name} declares reserved column '$c' — rename it or " +
-        "project it away before searching"))
-    reg.table(td)
-      .join(broadcast(hits), col(td.pk) === col("__hit_id"))
-      .orderBy(col("score").desc, col(td.pk).asc)
+  /** The ranked (id, score) hits of the keyword/sparse searches as
+    * (`fields`, score) rows: the hits themselves when only the pk is
+    * asked for, else the rows fetched by literal pk
+    * ([[Registry.fetchHits]]). The result carries the reserved `score`
+    * column, so a table declaring its own `score` would make the
+    * projection ambiguous — refuse loudly instead of an
+    * AnalysisException. */
+  private def hitRows(td: TableDef[_], hits: DataFrame,
+                      fields: Seq[String]): DataFrame = {
+    require(!td.columns.contains("score"),
+      s"${td.name} declares reserved column 'score' — rename it or " +
+        "project it away before searching")
+    if (fields == Seq(td.pk)) hits.select(col("id").as(td.pk), col("score"))
+    else reg.fetchHits(td, hits, col("score").desc, col(td.pk).asc)
       .select((fields :+ "score").map(col): _*)
   }
 
@@ -440,8 +441,8 @@ final class Engine(reg: Registry) {
 
   /** Sparse top-k through the inverted postings (the imperative
     * sibling of [[searchByVector]]/[[searchByKeyword]] for the sparse
-    * column): query-bucket join + per-doc sum, top-k joined back for
-    * the payload fields. */
+    * column): query-bucket join + per-doc sum, the top-k rows fetched
+    * by literal pk for the payload fields. */
   def searchBySparse(td: TableDef[_], query: graft.functions.SparseVec,
                      topk: Int = 10,
                      returnFields: Seq[String] = Nil,
@@ -452,7 +453,7 @@ final class Engine(reg: Registry) {
     // dot has no corpus statistics to protect, so the predicate
     // semi-joins the postings before scoring; surviving scores
     // identical to the unfiltered search
-    val hits = (filter match {
+    val hits = filter match {
       case None =>
         graft.functions.Sparse.invertedTopK(sparsePostings(td), query,
           topk)
@@ -461,8 +462,8 @@ final class Engine(reg: Registry) {
           sparsePostings(td), query.indices,
           query.values.map(_.toDouble), topk,
           reg.table(td).filter(pred), td.pk)
-    }).withColumnRenamed("id", "__hit_id")
-    joinHitsBack(td, hits, fields)
+    }
+    hitRows(td, hits, fields)
   }
 
   /** IVF index build job (`create_index_if_not_exists` twin for vector
@@ -686,13 +687,14 @@ final class Engine(reg: Registry) {
         case None =>
           // resolver-backed like every other registration: a buildIndex
           // re-run (new KMeans model) must reach declarative probe
-          // selection without a re-install; the centroid collect is
-          // memoized per __ivf side-table version. The table itself
+          // selection without a re-install; `model` re-resolves the
+          // memoized per-version model, whose centroid collect runs
+          // once per __ivf side-table version. The table itself
           // carries no cell column, so the cut is an id semi-join
           // against the assigned layout's probed cells.
-          Binding.Probe(ix.column, "centroid_id", () => centsCached(td),
-            ix.distance, p, owner(td), td.pk,
-            Some(() => assignedCached(td, ix, model)))
+          Binding.Probe(ix.column, "centroid_id",
+            () => model.collectedCentroids.toSeq, ix.distance, p,
+            owner(td), td.pk, Some(() => assignedCached(td, ix, model)))
       }
     }
     // multivector column: plain orderBy(maxsim_dot(q, mv).desc).limit(k)
@@ -988,31 +990,6 @@ final class Engine(reg: Registry) {
   private def owner(td: TableDef[_]): String =
     s"${reg.namespace}.${td.name}"
 
-  /** Driver-side centroid collect for the PLAIN declarative IVF
-    * registration, memoized per `__ivf` side-table version: probe cells
-    * are chosen at plan time (Binding.Probe), so the centroids must be
-    * driver-resident — but a buildIndex re-run must refresh them, and
-    * re-collecting per query would be a per-plan job. */
-  private val centsCache =
-    scala.collection.mutable.HashMap[String, (String, Seq[(Long, Array[Double])])]()
-  private def centsCached(td: TableDef[_]): Seq[(Long, Array[Double])] = {
-    val version = segVersion(s"${td.name}__ivf")
-    val key = s"${reg.instanceId}|${td.name}"
-    centsCache.synchronized {
-      centsCache.get(key) match {
-        case Some((v, cs)) if v == version => cs
-        case _ =>
-          val model = indexModel(td).getOrElse(
-            throw new IllegalStateException(
-              s"${td.name}'s IVF model (__ivf) vanished after install — " +
-                "rebuild with buildIndex"))
-          val cs = model.collectedCentroids.toSeq
-          centsCache(key) = (version, cs)
-          cs
-      }
-    }
-  }
-
   /** IVF assignment memoized per table+model VERSION: assigning is a
     * map-only stage but still O(N·cells) compute — the index at rest is
     * the assignment, recomputed only when the table or model is
@@ -1073,8 +1050,32 @@ final class Engine(reg: Registry) {
     }
   }
 
+  /** The table's IVF model (the `__ivf` side table [[buildIndex]] /
+    * [[installIndexModel]] write), memoized per side-table VERSION with
+    * its spherical form: its driver-side centroid collect
+    * ([[Ann.IvfModel.collectedCentroids]]) then runs once per model
+    * build, not once per request, so every single-query probe picks
+    * its cells without a job. */
+  private val modelCache = scala.collection.mutable.HashMap[String,
+    (String, Option[(Ann.IvfModel, Ann.IvfModel)])]()
+  private def modelPair(td: TableDef[_]): Option[(Ann.IvfModel, Ann.IvfModel)] = {
+    val version = segVersion(s"${td.name}__ivf")
+    val key = s"${reg.instanceId}|${td.name}"
+    modelCache.synchronized {
+      modelCache.get(key) match {
+        case Some((v, m)) if v == version => m
+        case _ =>
+          val m = sideModel(td, "__ivf").map(m => (m, Ann.normalizeModel(m)))
+          modelCache(key) = (version, m)
+          m
+      }
+    }
+  }
   private def indexModel(td: TableDef[_]): Option[Ann.IvfModel] =
-    sideModel(td, "__ivf")
+    modelPair(td).map(_._1)
+  /** [[indexModel]] with unit-norm centroids — the cosine probe form. */
+  private def sphericalModel(td: TableDef[_]): Ann.IvfModel =
+    modelPair(td).get._2
 
   /** The multivec IVF built by [[buildIndex]] (the `__mvivf` centroid
     * side table) — the read half of the reference's `vector_maxsim_ops`

@@ -178,6 +178,30 @@ final class Registry(val spark: SparkSession, root: String,
     if (limit >= 0) projected.limit(limit) else projected
   }
 
+  /** The rows behind a bounded top-k `hits` frame: its first column
+    * holds primary-key values of `td`, its other columns ride onto
+    * the matching rows. The ≤k hits are collected, the rows fetched
+    * with a LITERAL pk `isin` (which the Parquet scan pushes down),
+    * the hit columns bound by pk as literal maps, and the result
+    * sorted by `order` as a top-n — no join against a full scan, no
+    * range exchange. Keys are unique: `hits` is a top-k over ids. */
+  def fetchHits(td: TableDef[_], hits: DataFrame,
+                order: Column*): DataFrame = {
+    val rows = hits.collect()
+    val carried = hits.schema.fields.toSeq.zipWithIndex.tail.map {
+      case (f, i) =>
+        val byKey =
+          if (rows.isEmpty) lit(null)
+          else element_at(map(rows.toSeq.flatMap(r =>
+            Seq(lit(r.get(0)), lit(r.get(i)))): _*), col(td.pk))
+        byKey.cast(f.dataType).as(f.name)
+    }
+    table(td).filter(col(td.pk).isin(rows.map(_.get(0)).toSeq: _*))
+      .select(col("*") +: carried: _*)
+      .orderBy(order: _*)
+      .limit(rows.length)
+  }
+
   /** Filtered DELETE with FK cascade (client.py:268-283 + the ON DELETE
     * CASCADE edges, spec.py:170-173): rewrite each affected table's
     * segment list to its survivors; children are cascaded via anti-joins

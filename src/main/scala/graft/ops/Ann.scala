@@ -259,14 +259,8 @@ object Ann {
     * IDENTICAL IEEE ops in the identical order (left-to-right squared-
     * sum fold, sqrt, divide), so a driver-normalized query is
     * bit-for-bit what the column form would produce. */
-  private[graft] def normalizeSeq(q: Seq[Double]): Seq[Double] = {
-    val arr = q.toArray
-    var n2 = 0.0
-    var i = 0
-    while (i < arr.length) { n2 += arr(i) * arr(i); i += 1 }
-    val n = math.sqrt(n2)
-    arr.toSeq.map(_ / n)
-  }
+  private[graft] def normalizeSeq(q: Seq[Double]): Seq[Double] =
+    normalizeDriver(q.toArray).toSeq
 
   /** At-rest matryoshka layout — the storage form that makes
     * [[matryoshkaTopK]]'s truncation REAL at scale: the prefix is
@@ -1162,23 +1156,6 @@ object Ann {
     Some(model)
   }
 
-  /** Scale-adaptive parallelism FLOOR (optimization guide §2.5 "input
-    * skew: one unsplittable file — repartition immediately after the
-    * read"): when a frame's physical plan yields fewer partitions than
-    * the session's cores — the small-file case; a tiny parquet file is
-    * one split and single-row-group files cannot be range-split — every
-    * per-row vector-math stage downstream runs on a single core while
-    * the rest of the machine idles. The floor is the session's own
-    * `defaultParallelism`, never a constant: at cluster scale a corpus
-    * scan already carries >= cores partitions and this is a no-op.
-    *
-    * The partition probe reads `queryExecution.sparkPlan` and builds
-    * its RDD lazily — NO job runs (unlike `df.rdd`, which under AQE
-    * eagerly materializes every shuffle stage of the plan just to
-    * count partitions). Round-robin keeps results invariant: every
-    * caller re-aggregates or re-sorts with deterministic tiebreaks
-    * downstream. Streaming frames pass through (micro-batch
-    * parallelism is the source's business). */
   /** Partition count of `df`'s non-adaptive physical plan WITHOUT
     * running anything — None when the probe itself would not be free.
     * `sparkPlan.execute()` builds the RDD lazily (zero jobs) ONLY for
@@ -1210,20 +1187,6 @@ object Ann {
     if (unsafe) None else Some(plan.execute().getNumPartitions)
   }
 
-  /** The append/compact existence probes' EXISTING side under a
-    * SIZE-GATED broadcast pin. foreachBatch maintenance runs with AQE
-    * off, and the planner's file-size stats — which include the
-    * vector/code payload the id-only projection never ships — push
-    * every micro-batch's anti-join into a sort-merge: THREE exchanges
-    * plus sorts at full shuffle.partitions, per batch, on a probe
-    * whose right side is bounded by the batch's touched cells. When
-    * even the UNPROJECTED scan estimate fits
-    * `spark.graft.append.broadcastMaxBytes` (default 256 MB of raw
-    * file bytes — a hard over-estimate of the id column actually
-    * shipped, comfortably inside Spark's 8 GB broadcast cap), the pin
-    * makes the join a broadcast-anti and the batch never shuffles.
-    * Past the bound the hint is withheld and the planner's own choice
-    * stands (sort-merge — the scale-correct fallback). */
   /** Distinct values of ONE non-null key column, driver-side, through
     * a single-partition collect_set aggregate: the naive
     * `select(key).distinct().collect()` hash-shuffles the frame across
@@ -1241,6 +1204,20 @@ object Ann {
                                      key: Column): Array[Int] =
     df.agg(collect_set(key)).head().getSeq[Int](0).toArray
 
+  /** The append/compact existence probes' EXISTING side under a
+    * SIZE-GATED broadcast pin. foreachBatch maintenance runs with AQE
+    * off, and the planner's file-size stats — which include the
+    * vector/code payload the id-only projection never ships — push
+    * every micro-batch's anti-join into a sort-merge: THREE exchanges
+    * plus sorts at full shuffle.partitions, per batch, on a probe
+    * whose right side is bounded by the batch's touched cells. When
+    * even the UNPROJECTED scan estimate fits
+    * `spark.graft.append.broadcastMaxBytes` (default 256 MB of raw
+    * file bytes — a hard over-estimate of the id column actually
+    * shipped, comfortably inside Spark's 8 GB broadcast cap), the pin
+    * makes the join a broadcast-anti and the batch never shuffles.
+    * Past the bound the hint is withheld and the planner's own choice
+    * stands (sort-merge — the scale-correct fallback). */
   private[graft] def broadcastExistingIfBounded(
       existing: DataFrame): DataFrame = {
     val maxBytes = BigInt(existing.sparkSession.conf
@@ -1250,15 +1227,39 @@ object Ann {
     else existing
   }
 
+  /** Scale-adaptive parallelism FLOOR (optimization guide §2.5 "input
+    * skew: one unsplittable file — repartition immediately after the
+    * read"): when a frame's physical plan yields fewer partitions than
+    * the session's cores — the small-file case; a tiny parquet file is
+    * one split and single-row-group files cannot be range-split — every
+    * per-row vector-math stage downstream runs on a single core while
+    * the rest of the machine idles. The floor is the session's own
+    * `defaultParallelism`, never a constant: at cluster scale a corpus
+    * scan already carries >= cores partitions and this is a no-op.
+    *
+    * The partition probe reads `queryExecution.sparkPlan` and builds
+    * its RDD lazily — NO job runs (unlike `df.rdd`, which under AQE
+    * eagerly materializes every shuffle stage of the plan just to
+    * count partitions). Round-robin keeps results invariant: every
+    * caller re-aggregates or re-sorts with deterministic tiebreaks
+    * downstream. Streaming frames pass through (micro-batch
+    * parallelism is the source's business). A frame whose root is a
+    * shuffle (an explicit `repartition(n)`) runs at that shuffle's
+    * partition count, which its plan states without running anything;
+    * any other exchange- or subquery-bearing plan cannot be probed for
+    * free ([[lazyPartitionCount]]) and skips the floor rather than pay
+    * jobs for it. */
   private[graft] def parallelismFloor(df: DataFrame): DataFrame =
     if (df.isStreaming) df
     else {
       val target = df.sparkSession.sparkContext.defaultParallelism
-      // A plan with an exchange already runs at >= shuffle.partitions
-      // downstream, and a subquery-bearing plan cannot be probed for
-      // free (above) — both skip the floor rather than pay jobs for it.
-      lazyPartitionCount(df) match {
-        case Some(parts) if parts < target => df.repartition(target)
+      val parts = df.queryExecution.sparkPlan match {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
+          Some(e.outputPartitioning.numPartitions)
+        case _ => lazyPartitionCount(df)
+      }
+      parts match {
+        case Some(n) if n < target => df.repartition(target)
         case _ => df
       }
     }
@@ -2325,14 +2326,18 @@ object Ann {
   }
 
   /** Driver-side spherical query reduction — the ONE normalization
-    * the quantized batch join ([[knnJoinQuantized]]) and the
-    * fresh-pruning union
+    * the single-query quantized probe ([[quantizedCandidates]], via
+    * [[normalizeSeq]]), the quantized batch join ([[knnJoinQuantized]])
+    * and the fresh-pruning union
     * ([[knnJoinQuantizedFresh]]) run, so an ulp-level arithmetic
     * divergence between the union and a delegate's own probe can
     * never admit a cell outside the pruned fresh slice (which would
     * silently drop that query's fresh-resident neighbors). */
   private def normalizeDriver(v: Array[Double]): Array[Double] = {
-    val n = math.sqrt(v.foldLeft(0.0)((a, x) => a + x * x))
+    var n2 = 0.0
+    var i = 0
+    while (i < v.length) { n2 += v(i) * v(i); i += 1 }
+    val n = math.sqrt(n2)
     v.map(_ / n)
   }
 
@@ -4068,14 +4073,16 @@ object Ann {
 
   /** IVF-pruned ANN top-k: scan only the probed cells, then exact top-k
     * within them. `assigned` must carry a `centroid_id` column (from
-    * [[assign]]); when the underlying table is disk-partitioned by it,
-    * the semi join / isin prunes whole partitions. */
+    * [[assign]]). The probe cells are chosen on the driver
+    * ([[probeCellIds]] over the model's memoized centroids) and filter
+    * as a literal isin, so a disk-partitioned layout prunes whole
+    * partitions. */
   def searchIvf(assigned: DataFrame, idCol: String, vecCol: String,
                 model: IvfModel, queryVec: Column, metric: Metric,
                 probes: Int, k: Int, roundTo: Int = 6): DataFrame = {
-    val cells = probeCells(model, queryVec, metric, probes)
-    val pruned = assigned.join(broadcast(cells), Seq(model.idCol))
-    topK(pruned, idCol, vecCol, queryVec, metric, k, roundTo)
+    val cells = probeCellIds(model, queryVec, metric, probes)
+    topK(assigned.filter(col(model.idCol).isin(cells: _*)), idCol, vecCol,
+      queryVec, metric, k, roundTo)
   }
 
   /** The three quantized IVF families — codes inside IVF cells, exact
@@ -4207,8 +4214,15 @@ object Ann {
       * code reconstruction and its cell centroid, reading the code
       * columns only ([[indexHealthQuantized]]'s per-row input). */
     private[ops] def healthDist(atRest: DataFrame, roundTo: Int): DataFrame
-    /** A persisted copy for a per-process memo, and its release. */
-    private[graft] def persisted(): QuantIndex = withRows(rows.persist())
+    /** A persisted copy for a per-process memo, and its release. The
+      * copy's per-cell side table is collected on its first probe and
+      * kept driver-side for the copy's lifetime ([[quantizedCandidates]]). */
+    private[graft] def persisted(): QuantIndex = {
+      val p = persistedCopy()
+      p.cellSide.foreach(memoizeSide)
+      p
+    }
+    protected def persistedCopy(): QuantIndex = withRows(rows.persist())
     private[graft] def unpersist(): Unit = rows.unpersist(false)
   }
 
@@ -4251,7 +4265,7 @@ object Ann {
         .join(broadcast(model.centroids), model.idCol)
         .select(col(model.idCol), round(sqDistCols(col(model.vecCol),
           col("codes"), col("__mins"), col("__maxs")), roundTo).as("__d"))
-    override private[graft] def persisted(): QuantIndex =
+    override protected def persistedCopy(): QuantIndex =
       IvfSqIndex(quantized.persist(), bounds.persist(), model)
     override private[graft] def unpersist(): Unit = {
       quantized.unpersist(false)
@@ -4779,41 +4793,79 @@ object Ann {
     * with all their columns — the candidate generator the declarative
     * [[graft.plans.AnnTopKRule]] rewrite injects as a semi-join (its
     * exact re-rank is the plan's own Sort+Limit). Cosine runs
-    * spherical ([[phase1Query]]). The per-cell side table (SQ bounds,
-    * 1-bit centroids) arrives as a broadcast of the ≤`probes` probed
-    * rows — query-derived, never the full table. */
+    * spherical ([[phase1Query]]). The probe cells are chosen on the
+    * driver from the model's memoized centroids ([[probeCellIds]]) and
+    * reach the scan as a LITERAL isin on the cell column. The per-cell
+    * side table (SQ bounds, 1-bit centroids) of a memoized index
+    * ([[QuantIndex.persisted]]) is collected once, ≤ one row per cell,
+    * and its probed rows join as a local relation — one broadcast, no
+    * scan; any other index broadcasts its side table cut to the probed
+    * cells. */
   def quantizedCandidates(index: QuantIndex, idCol: String,
                           queryVec: Column, metric: Metric, probes: Int,
                           n: Int, roundTo: Int = 6): DataFrame = {
     requireSpace("the index", index.sphericalPin, metric)
     val (qv, m) = phase1Query(queryVec, metric)
     val cellCol = index.model.idCol
-    val cells = broadcast(probeCells(index.model, qv, m, probes))
+    val cells = probeCellIds(index.model, qv, m, probes)
+    val probed = index.rows.filter(col(cellCol).isin(cells: _*))
     index.cellSide
-      .fold(index.rows.join(cells, Seq(cellCol)))(side =>
-        index.rows.join(broadcast(side.join(cells, Seq(cellCol))),
-          Seq(cellCol)))
+      .fold(probed)(side => probed.join(
+        broadcast(probedSide(side, cellCol, cells)), Seq(cellCol)))
       .withColumn("qdist", round(index.estimate(qv), roundTo))
       .orderBy(col("qdist").asc, col(idCol).asc)
       .limit(n)
   }
 
+  /** Driver-side copies of memoized indexes' side tables, keyed by the
+    * side-table INSTANCE (the [[IvfModel.collectedCentroids]] scope:
+    * every `withRows` copy of a memoized index shares its side table,
+    * and the entry dies with it); null until the first probe. */
+  private val sideRows = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[DataFrame, Array[org.apache.spark.sql.Row]]())
+  private def memoizeSide(side: DataFrame): Unit = sideRows.put(side, null)
+
+  /** `side`'s rows in `cells`: from the memoized copy as a local
+    * relation, else as a literal-isin cut of the table. */
+  private def probedSide(side: DataFrame, cellCol: String,
+                         cells: Array[Long]): DataFrame =
+    if (!sideRows.containsKey(side)) side.filter(col(cellCol).isin(cells: _*))
+    else {
+      val all = sideRows.synchronized {
+        Option(sideRows.get(side)).getOrElse {
+          val rows = side.collect()
+          sideRows.put(side, rows)
+          rows
+        }
+      }
+      val keep = cells.toSet
+      val i = side.schema.fieldIndex(cellCol)
+      side.sparkSession.createDataFrame(java.util.Arrays.asList(
+        all.filter(r => keep(r.getAs[Number](i).longValue)): _*),
+        side.schema)
+    }
+
   /** Quantized IVF search: [[quantizedCandidates]] keeps the
     * top-(k·refine) rows of the probed code scan, then the exact
     * re-rank under the ORIGINAL metric over the ORIGINAL query.
     * `refine <= 0` = the family default (5; 1-bit
-    * [[defaultBitqRefine]]). Returns (idCol, dist). */
+    * [[defaultBitqRefine]]). Returns (`fields`, dist), `fields` by
+    * default the id alone: any column of the index rows rides the
+    * re-rank's own top-k projection, so a caller that wants the row's
+    * payload needs no join back. */
   def searchQuantized(index: QuantIndex, idCol: String, vecCol: String,
                       queryVec: Column, metric: Metric, probes: Int,
                       k: Int, refine: Int = -1,
-                      roundTo: Int = 6): DataFrame =
+                      roundTo: Int = 6,
+                      fields: Seq[String] = Nil): DataFrame =
     quantizedCandidates(index, idCol, queryVec, metric, probes,
         k * refineOf(index, refine, metric), roundTo)
       .withColumn("dist", round(metric.dist(
         col(vecCol).cast("array<double>"), queryVec), roundTo))
       .orderBy(col("dist").asc, col(idCol).asc)
       .limit(k)
-      .select(col(idCol), col("dist"))
+      .select(((if (fields.isEmpty) Seq(idCol) else fields) :+ "dist")
+        .map(col): _*)
 
   /** Batch quantized IVF kNN join — the query-log replay of
     * [[searchQuantized]] in one job. The query set is collected on the

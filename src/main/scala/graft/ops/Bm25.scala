@@ -11,11 +11,11 @@ import org.apache.spark.sql.functions._
   * pair of pre-aggregated side tables (the classic IR decomposition):
   *
   *   postings: (id, term, tf)         — one shuffle at build
-  *   stats:    (term, df) + (N, avgdl) — tiny, broadcast at query time
+  *   stats:    (term, df) + (N, avgdl) — df counted per query term
   *
-  * Scoring a query is then a broadcast semi-join of the postings with the
-  * query's terms + a groupBy(id) sum — map-side combinable, no full-corpus
-  * scan of text. At 100 TB the postings table is partitioned by term
+  * Scoring a query is then a literal term filter over the postings + a
+  * groupBy(id) sum under the query terms' df, bound as literals — no
+  * full-corpus scan of text. At 100 TB the postings table is partitioned by term
   * (skew-safe: tf rows are (doc,term) grains, heavy terms spread over many
   * docs/partitions) and the per-query work touches only the query's terms.
   *
@@ -174,40 +174,57 @@ object Bm25 {
       .eval(null).asInstanceOf[Int]
   }
 
-  /** Query-term-pruned postings — the only postings subset any query
-    * plan touches (`termsDf`: one `term` column, query-bounded,
-    * broadcast). With a bucketed at-rest index the scan is FIRST
-    * pruned to the query terms' own bucket partitions — literal
-    * partition filters, so the file source skips every other bucket
-    * directory on disk (the keyword twin of centroid-cell pruning). */
-  private def prunedPostings(index: Bm25Index, termsDf: DataFrame,
-                             terms: Seq[String] = Nil): DataFrame = {
-    val base =
-      if (index.bucketCount > 0 && terms.nonEmpty &&
-          index.postings.columns.contains("bucket"))
-        index.postings.filter(col("bucket").isin(
-          terms.map(bucketOf(_, index.bucketCount)).distinct: _*))
-      else index.postings
-    base.join(broadcast(termsDf), "term")
-  }
+  /** Postings pruned to the query terms' own buckets — with a bucketed
+    * at-rest index, literal partition filters, so the file source skips
+    * every other bucket directory on disk (the keyword twin of
+    * centroid-cell pruning); the whole postings otherwise. */
+  private def bucketPruned(index: Bm25Index, terms: Seq[String]): DataFrame =
+    if (index.bucketCount > 0 && terms.nonEmpty &&
+        index.postings.columns.contains("bucket"))
+      index.postings.filter(col("bucket").isin(
+        terms.map(bucketOf(_, index.bucketCount)).distinct: _*))
+    else index.postings
 
-  /** Per-term df from pruned postings. ONE definition shared by the
-    * operator searches and [[scoreColumn]]: the declarative rewrite's
-    * exactness contract (candidate phase == re-rank scores) rests on
-    * both phases computing df identically. */
+  /** Postings of the query's own terms — the only postings subset a
+    * single-query plan touches: a literal term `isin` after the bucket
+    * pruning, map-side, no join. */
+  private def termPostings(index: Bm25Index, terms: Seq[String]): DataFrame =
+    bucketPruned(index, terms).filter(col("term").isin(terms: _*))
+
+  /** Per-term df from pruned postings — the batch search's and the
+    * stored index's statistics frame. */
   private def termDf(qPost: DataFrame): DataFrame =
     qPost.groupBy("term").agg(count(lit(1)).as("df"))
+
+  /** Per-term df of a query's own terms, counted in ONE job: each
+    * partition of the term postings counts its ≤|terms| terms and the
+    * driver adds the per-partition counts (a `groupBy(term)` would add
+    * an exchange, and under AQE a job for its map stage). ONE
+    * definition shared by the single-query searches and
+    * [[scoreColumn]]: the declarative rewrite's exactness contract
+    * (candidate phase == re-rank scores) rests on both phases computing
+    * df identically. Only counts reach the driver, never postings. */
+  private def termDfs(index: Bm25Index, terms: Seq[String]): Map[String, Long] = {
+    val spark = index.postings.sparkSession
+    import spark.implicits._
+    termPostings(index, terms).select(col("term")).as[String]
+      .mapPartitions(_.foldLeft(Map.empty[String, Long])((m, t) =>
+        m.updated(t, m.getOrElse(t, 0L) + 1L)).iterator)
+      .collect()
+      .groupMapReduce(_._1)(_._2)(_ + _)
+  }
 
   /** Score all docs containing at least one query term; returns
     * (id, score) sorted desc, top k. Query terms are distinct.
     *
-    * Scale shape: the ONLY broadcast relations are derived from the
-    * query's own terms. Postings are pruned map-side by the tiny
-    * query-term list first, and the per-term df stats are re-aggregated
-    * from that pruned frame (≤|query terms| rows) rather than joining
-    * the full vocabulary table — a web-scale corpus has 10⁸-10⁹
-    * distinct terms, and broadcasting that stats table would OOM every
-    * executor. The reference's query side ships only query terms too
+    * Scale shape: two jobs, no shuffle and no broadcast. Job 1 counts
+    * df for the query's own terms ([[termDfs]]; the full-vocabulary
+    * `termStats` never enters a query plan — a web-scale corpus has
+    * 10⁸-10⁹ distinct terms). Job 2 binds those counts as literals and
+    * scores the term-pruned postings: a [[build]]-memoized index is
+    * hash-partitioned by id (its `dl` window), so the `groupBy(id)`
+    * sum needs no exchange and the job ends in one top-k. The
+    * reference's query side ships only query terms too
     * (`to_bm25query`, /root/reference/vechord/client.py:356-380). */
   def search(index: Bm25Index, query: String, k: Int,
              roundTo: Int = 6): DataFrame = {
@@ -219,24 +236,8 @@ object Bm25 {
     * declarative rewrite uses (the query terms are already literals in
     * the recognized [[org.apache.spark.sql.graft.Bm25Score]] node). */
   def searchTerms(index: Bm25Index, terms: Seq[String], k: Int,
-                  roundTo: Int = 6): DataFrame = {
-    val spark = index.postings.sparkSession
-    import spark.implicits._
-    // map-side prune: postings ⋉ query terms (broadcast of ≤|query| rows)
-    val qPost = prunedPostings(index, terms.toDF("term"), terms)
-    // df for just the query's terms, from the pruned postings (the
-    // full-vocabulary index.termStats never enters a query plan)
-    val qStats = termDf(qPost)
-    val perTerm = qPost
-      .join(broadcast(qStats), "term")
-      .withColumn("w",
-        idf(col("df"), index.n) * (col("tf") * (K1 + 1)) /
-          (col("tf") + lit(K1) * (lit(1 - B) + lit(B) * col("dl") / index.avgdl)))
-    perTerm.groupBy("id")
-      .agg(round(sum(col("w")), roundTo).as("score"))
-      .orderBy(col("score").desc, col("id").asc)
-      .limit(k)
-  }
+                  roundTo: Int = 6): DataFrame =
+    scoreTerms(index, terms, k, roundTo, None)
 
   /** [[search]] under a metadata predicate — the WHERE clause of a
     * full-text query (filtered keyword search, the keyword twin of the
@@ -261,20 +262,25 @@ object Bm25 {
   /** [[searchFiltered]] over pre-tokenized distinct terms. */
   def searchTermsFiltered(index: Bm25Index, terms: Seq[String], k: Int,
                           allowed: DataFrame, allowedIdCol: String,
-                          roundTo: Int = 6): DataFrame = {
-    val spark = index.postings.sparkSession
-    import spark.implicits._
-    val qPost = prunedPostings(index, terms.toDF("term"), terms)
-    // df BEFORE the predicate: whole-corpus weights by contract
-    val qStats = termDf(qPost)
-    val perTerm = qPost
-      .join(allowed.select(col(allowedIdCol).as("id")), Seq("id"),
-        "left_semi")
-      .join(broadcast(qStats), "term")
+                          roundTo: Int = 6): DataFrame =
+    scoreTerms(index, terms, k, roundTo,
+      Some(allowed.select(col(allowedIdCol).as("id"))))
+
+  /** The single-query scorer behind [[searchTerms]] and
+    * [[searchTermsFiltered]]: df collected first (whole-corpus, BEFORE
+    * any predicate — the weights never depend on `allowed`), then the
+    * term postings, thinned by `allowed`, summed per doc under the
+    * literal df. */
+  private def scoreTerms(index: Bm25Index, terms: Seq[String], k: Int,
+                         roundTo: Int,
+                         allowed: Option[DataFrame]): DataFrame = {
+    val df = element_at(typedlit(termDfs(index, terms)), col("term"))
+    val qPost = termPostings(index, terms)
+    allowed.fold(qPost)(a => qPost.join(a, Seq("id"), "left_semi"))
       .withColumn("w",
-        idf(col("df"), index.n) * (col("tf") * (K1 + 1)) /
+        idf(df, index.n) * (col("tf") * (K1 + 1)) /
           (col("tf") + lit(K1) * (lit(1 - B) + lit(B) * col("dl") / index.avgdl)))
-    perTerm.groupBy("id")
+      .groupBy("id")
       .agg(round(sum(col("w")), roundTo).as("score"))
       .orderBy(col("score").desc, col("id").asc)
       .limit(k)
@@ -519,12 +525,9 @@ object Bm25 {
   def scoreColumn(index: Bm25Index, query: String,
                   text: org.apache.spark.sql.Column,
                   roundTo: Int = 6): org.apache.spark.sql.Column = {
-    val spark = index.postings.sparkSession
-    import spark.implicits._
     val tok = graft.functions.Tokenizers.byName(index.tokenizer)
     val terms = tok.scala(query).distinct
-    val dfMap = termDf(prunedPostings(index, terms.toDF("term"), terms))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val dfMap = termDfs(index, terms)
     org.apache.spark.sql.graft.VecExprs.bm25Score(text, terms,
       terms.map(dfMap.getOrElse(_, 0L)), index.n, index.avgdl,
       tok, roundTo)
@@ -586,9 +589,10 @@ object Bm25 {
       .collect().map(_.getString(0)).toSeq
     // df per DISTINCT query term, from the pruned postings (a term
     // shared by many queries is counted once)
-    val tStats = termDf(prunedPostings(index, termList.toDF("term"),
-      termList))
-    val perTermAll = prunedPostings(index, qTerms, termList)
+    val tStats = termDf(bucketPruned(index, termList)
+      .join(broadcast(termList.toDF("term")), "term"))
+    val perTermAll = bucketPruned(index, termList)
+      .join(broadcast(qTerms), "term")
       .join(broadcast(tStats), "term")
       .withColumn("w",
         idf(col("df"), index.n) * (col("tf") * (K1 + 1)) /

@@ -419,12 +419,16 @@ object Dynamic {
       if (!g.isEmpty)
         lists = lists :+ Fusion.ranked(g, "uid", "g_rank", asc = true)
     }
-    val fused = Fusion.dedupUnion(lists, c.topk)
-    val joined = table.select(col("uid").as("id"), col("doc_id"), col("text"))
-      .join(fused, "id")
+    // the ≤topk fused ids fetch their chunks by literal uid, ordered
+    // by (src, rank) as a top-n
+    val joined = reg.fetchHits(chunks,
+        Fusion.dedupUnion(lists, c.topk).select("id", "rank", "src"),
+        col("src").asc, col("rank").asc)
+      .select(col("uid").as("id"), col("doc_id"), col("text"), col("rank"),
+        col("src"))
     c.rerank match {
       case Some(r) => graft.rank.Rerank.apply(joined, "id", "text", query, r)
-      case None => joined.orderBy(col("src").asc, col("rank").asc)
+      case None => joined
     }
   }
 }

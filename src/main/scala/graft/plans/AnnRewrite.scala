@@ -99,9 +99,8 @@ object Binding {
     * Catalyst keeps table statistics. Budget accordingly: ~1k cells ×
     * 768 dims ≈ 6 MB is nothing; at ~10⁵ cells collect cost grows to
     * ~hundreds of MB of driver heap — prefer [[ProbeDist]] or the
-    * executor-side probe path ([[graft.ops.Ann.searchIvf]] /
-    * [[graft.ops.Ann.knnJoinIvf]], broadcast-variable centroids)
-    * beyond that.
+    * executor-side probe path ([[graft.ops.Ann.knnJoinIvf]],
+    * broadcast-variable centroids) beyond that.
     *
     * `layout` (with `idCol`) is the assigned layout — rows with their
     * `cellCol` — for a table that does not carry the cell column

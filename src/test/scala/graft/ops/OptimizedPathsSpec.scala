@@ -104,6 +104,18 @@ class OptimizedPathsSpec extends SparkSpecBase {
       "a frame already at/above the floor must pass through untouched")
   }
 
+  test("parallelismFloor floors an explicit repartition(n) below the " +
+      "session's cores: a shuffle root states its partition count") {
+    val target = spark.sparkContext.defaultParallelism
+    assert(target == 4, "the spec session runs local[4]")
+    val two = vecs(50, 3, 5).toDF("id", "v").repartition(2)
+    val floored = Ann.parallelismFloor(two)
+    assert(!(floored eq two), "a 2-partition shuffle must be floored")
+    assert(floored.rdd.getNumPartitions == target)
+    assert(floored.select("id").as[Long].collect().sorted.toSeq ==
+      two.select("id").as[Long].collect().sorted.toSeq)
+  }
+
   test("literalVec unwraps widening casts only: a narrowing " +
       "array<double> -> array<float> cast falls back to the job form") {
     val dbl = Seq(0.1, 0.2, 0.3)
