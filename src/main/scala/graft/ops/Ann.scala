@@ -4214,15 +4214,8 @@ object Ann {
       * code reconstruction and its cell centroid, reading the code
       * columns only ([[indexHealthQuantized]]'s per-row input). */
     private[ops] def healthDist(atRest: DataFrame, roundTo: Int): DataFrame
-    /** A persisted copy for a per-process memo, and its release. The
-      * copy's per-cell side table is collected on its first probe and
-      * kept driver-side for the copy's lifetime ([[quantizedCandidates]]). */
-    private[graft] def persisted(): QuantIndex = {
-      val p = persistedCopy()
-      p.cellSide.foreach(memoizeSide)
-      p
-    }
-    protected def persistedCopy(): QuantIndex = withRows(rows.persist())
+    /** A persisted copy for a per-process memo, and its release. */
+    private[graft] def persisted(): QuantIndex = withRows(rows.persist())
     private[graft] def unpersist(): Unit = rows.unpersist(false)
   }
 
@@ -4265,7 +4258,7 @@ object Ann {
         .join(broadcast(model.centroids), model.idCol)
         .select(col(model.idCol), round(sqDistCols(col(model.vecCol),
           col("codes"), col("__mins"), col("__maxs")), roundTo).as("__d"))
-    override protected def persistedCopy(): QuantIndex =
+    override private[graft] def persisted(): QuantIndex =
       IvfSqIndex(quantized.persist(), bounds.persist(), model)
     override private[graft] def unpersist(): Unit = {
       quantized.unpersist(false)
@@ -4796,11 +4789,8 @@ object Ann {
     * spherical ([[phase1Query]]). The probe cells are chosen on the
     * driver from the model's memoized centroids ([[probeCellIds]]) and
     * reach the scan as a LITERAL isin on the cell column. The per-cell
-    * side table (SQ bounds, 1-bit centroids) of a memoized index
-    * ([[QuantIndex.persisted]]) is collected once, ≤ one row per cell,
-    * and its probed rows join as a local relation — one broadcast, no
-    * scan; any other index broadcasts its side table cut to the probed
-    * cells. */
+    * side table (SQ bounds, 1-bit centroids) arrives as a broadcast of
+    * its ≤`probes` probed rows, cut by the same literal isin. */
   def quantizedCandidates(index: QuantIndex, idCol: String,
                           queryVec: Column, metric: Metric, probes: Int,
                           n: Int, roundTo: Int = 6): DataFrame = {
@@ -4811,39 +4801,11 @@ object Ann {
     val probed = index.rows.filter(col(cellCol).isin(cells: _*))
     index.cellSide
       .fold(probed)(side => probed.join(
-        broadcast(probedSide(side, cellCol, cells)), Seq(cellCol)))
+        broadcast(side.filter(col(cellCol).isin(cells: _*))), Seq(cellCol)))
       .withColumn("qdist", round(index.estimate(qv), roundTo))
       .orderBy(col("qdist").asc, col(idCol).asc)
       .limit(n)
   }
-
-  /** Driver-side copies of memoized indexes' side tables, keyed by the
-    * side-table INSTANCE (the [[IvfModel.collectedCentroids]] scope:
-    * every `withRows` copy of a memoized index shares its side table,
-    * and the entry dies with it); null until the first probe. */
-  private val sideRows = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[DataFrame, Array[org.apache.spark.sql.Row]]())
-  private def memoizeSide(side: DataFrame): Unit = sideRows.put(side, null)
-
-  /** `side`'s rows in `cells`: from the memoized copy as a local
-    * relation, else as a literal-isin cut of the table. */
-  private def probedSide(side: DataFrame, cellCol: String,
-                         cells: Array[Long]): DataFrame =
-    if (!sideRows.containsKey(side)) side.filter(col(cellCol).isin(cells: _*))
-    else {
-      val all = sideRows.synchronized {
-        Option(sideRows.get(side)).getOrElse {
-          val rows = side.collect()
-          sideRows.put(side, rows)
-          rows
-        }
-      }
-      val keep = cells.toSet
-      val i = side.schema.fieldIndex(cellCol)
-      side.sparkSession.createDataFrame(java.util.Arrays.asList(
-        all.filter(r => keep(r.getAs[Number](i).longValue)): _*),
-        side.schema)
-    }
 
   /** Quantized IVF search: [[quantizedCandidates]] keeps the
     * top-(k·refine) rows of the probed code scan, then the exact

@@ -234,7 +234,11 @@ object Bm25 {
 
   /** [[search]] over pre-tokenized distinct terms — the entry the
     * declarative rewrite uses (the query terms are already literals in
-    * the recognized [[org.apache.spark.sql.graft.Bm25Score]] node). */
+    * the recognized [[org.apache.spark.sql.graft.Bm25Score]] node).
+    * The df job runs WHEN THIS IS CALLED, not when the returned frame
+    * runs: the frame binds the counts as literals. A caller inside the
+    * optimizer ([[graft.plans.Binding.Bm25]]) therefore runs that job
+    * while it plans. */
   def searchTerms(index: Bm25Index, terms: Seq[String], k: Int,
                   roundTo: Int = 6): DataFrame =
     scoreTerms(index, terms, k, roundTo, None)

@@ -386,6 +386,13 @@ object Binding {
     * ranks them — the reference's contract); `refine` buffers
     * tie-break divergence at the k boundary.
     *
+    * Planning cost: [[candidateIds]] runs inside the optimizer, and
+    * `searchTerms` collects the query terms' df as it is called, so
+    * optimizing a plan this binding rewrites launches ONE Spark job
+    * (the df count) before any action — `explain()`,
+    * `queryExecution.optimizedPlan` and every Dataset derived from the
+    * plan each run it once. `Bm25RewriteSpec` pins the count.
+    *
     * Keyword columns are commonly all named "text", so unlike the
     * vector bindings (scope contract: distinct column names per
     * logical index) BM25 is scoped per (textCol, idCol) and the rule

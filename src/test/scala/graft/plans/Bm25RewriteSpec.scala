@@ -1,7 +1,8 @@
 package graft.plans
 
-import graft.SparkSpecBase
+import graft.{JobLog, SparkSpecBase}
 import graft.ops.Bm25
+import org.apache.spark.sql.execution.SimpleMode
 import org.apache.spark.sql.functions._
 
 /** The declarative BM25 rewrite — keyword search as a plain
@@ -65,6 +66,33 @@ class Bm25RewriteSpec extends SparkSpecBase {
       val twice = AnnTopKRule()(once)
       assert(once.fastEquals(twice),
         s"bm25 rewrite not idempotent:\nonce: $once\ntwice: $twice")
+    } finally {
+      AnnIndex.unregister("text")
+      idx.postings.unpersist(false)
+    }
+  }
+
+  test("planning a rewritten BM25 plan runs one job, the df count: " +
+      "optimizedPlan and explain each run it, collect adds the scan") {
+    val docs = corpus.localCheckpoint(true)
+    val idx = Bm25.build(docs, "doc_id", "text")
+    val scoreCol = Bm25.scoreColumn(idx, "shuffle sort merge", col("text"))
+    def plan = docs
+      .withColumn("score", scoreCol)
+      .orderBy(col("score").desc, col("doc_id").asc)
+      .limit(3)
+      .select("doc_id", "score")
+    AnnIndex.install(spark)
+    AnnIndex.register(Binding.Bm25("text", "doc_id", () => idx, refine = 2))
+    try {
+      plan.collect() // the postings memo and codegen
+      val (_, optimized) = JobLog.of(spark)(plan.queryExecution.optimizedPlan)
+      assert(optimized.length == 1, JobLog.render(optimized))
+      val (_, explained) = JobLog.of(spark)(
+        plan.queryExecution.explainString(SimpleMode))
+      assert(explained.length == 1, JobLog.render(explained))
+      val (_, collected) = JobLog.of(spark)(plan.collect())
+      assert(collected.length == 3, JobLog.render(collected))
     } finally {
       AnnIndex.unregister("text")
       idx.postings.unpersist(false)
