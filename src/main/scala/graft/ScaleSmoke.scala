@@ -929,7 +929,7 @@ object ScaleSmoke {
     // centroids, combinable aggs, tiny radii join. The audit of a
     // 100 TB layout costs one column scan.
     time("index_health") {
-      val health = ops.Ann.indexHealth(spark.read.parquet(rangeDir),
+      val health = ops.Ann.rangeHealth(spark.read.parquet(rangeDir),
         "embedding", rangeModel, rangeRadii, roundTo = 6)
       val phys = health.queryExecution.executedPlan.toString
       require(phys.contains("ReadSchema") && !phys.contains("vec_id"),
@@ -1031,12 +1031,15 @@ object ScaleSmoke {
       def hits() = ops.Ann.rangeSearchStoredSelf(spark, dir, "vec_id",
         "embedding", typedlit(q), eps = 1.26).count()
       val before = hits()
-      val maxBefore = ops.Ann.indexHealth(spark, dir, "embedding")
+      val maxBefore = ops.Ann.indexHealth(
+        ops.Ann.cellRoot(spark, dir, Some("embedding")))
         .agg(max(col("n_rows"))).head().getLong(0)
-      val splits = ops.Ann.splitOverfullCells(spark, dir, "embedding",
+      val splits = ops.Ann.splitOverfull(
+        ops.Ann.cellRoot(spark, dir, Some("embedding")),
         maxRows = nVecs * xf / 8)
       require(splits.nonEmpty, "16x split never fired on a 4-cell root")
-      val health = ops.Ann.indexHealth(spark, dir, "embedding")
+      val health = ops.Ann.indexHealth(
+        ops.Ann.cellRoot(spark, dir, Some("embedding")))
         .agg(max(col("n_rows")).as("mx"), sum(col("n_rows")).as("n"))
         .head()
       require(health.getLong(0) < maxBefore,
@@ -1071,7 +1074,7 @@ object ScaleSmoke {
         ops.Ann.assign(vecs, "embedding", coarse, ops.Ann.L2),
         "embedding", coarse, ops.Ann.L2, dir)
       time("many_flagged_split") {
-        val splits = ops.Ann.splitOverfullCellsDense(spark, dir,
+        val splits = ops.Ann.splitOverfull(ops.Ann.cellRoot(spark, dir, None),
           maxRows = nVecs * xf / 128)
         require(splits.size >= 16,
           s"many-flagged split fired on only ${splits.size} cells — " +
@@ -1118,14 +1121,15 @@ object ScaleSmoke {
       val before = hits()
       val minRows = nVecs * xf / 16
       time("cell_merge") {
-        val merged = ops.Ann.mergeUnderfullCells(spark, cmDir,
-          "embedding", minRows)
+        val merged = ops.Ann.mergeUnderfull(
+          ops.Ann.cellRoot(spark, cmDir, Some("embedding")), minRows)
         require(merged.contains(drainCell),
           s"16x merge missed the drained cell $drainCell: $merged")
         merged.size.toLong
       }
       locally { // untimed: conservation + invariance + shrinkage
-        val health = ops.Ann.indexHealth(spark, cmDir, "embedding")
+        val health = ops.Ann.indexHealth(
+          ops.Ann.cellRoot(spark, cmDir, Some("embedding")))
           .agg(count(lit(1)).as("cells"), sum(col("n_rows")).as("n"))
           .head()
         require(health.getLong(0) < 8L,
@@ -1151,7 +1155,7 @@ object ScaleSmoke {
       ops.Ann.writeMatryoshkaIvf(vecs, "vec_id", "embedding", 8,
         msModel, msDir)
       time("mrl_ivf_split") {
-        val s = ops.Ann.splitOverfullCellsMrlIvf(spark, msDir,
+        val s = ops.Ann.splitOverfull(ops.Ann.cellRoot(spark, msDir, None),
           maxRows = nVecs * xf / 8)
         require(s.nonEmpty, "16x composed split never fired")
         s.size.toLong
@@ -1197,8 +1201,9 @@ object ScaleSmoke {
         s"$qmDir/quantized", "vec_id", doomed)
       require(deleted > 0, "16x quantized drain removed nothing")
       time("quantized_merge") {
-        val merged = ops.Ann.mergeUnderfullCellsQuantized(spark,
-          qmDir, "embedding", minRows = nVecs * xf / 16)
+        val merged = ops.Ann.mergeUnderfull(
+          ops.Ann.cellRoot(spark, qmDir, Some("embedding")),
+          minRows = nVecs * xf / 16)
         require(merged.contains(drainCell),
           s"16x quantized merge missed cell $drainCell: $merged")
         merged.size.toLong

@@ -754,49 +754,30 @@ final class Engine(reg: Registry) {
     * stored searches ([[Ann.searchQuantizedStored]] etc.) and
     * declarative rewrites over the loaded layout never surface removed
     * rows — the maintenance PostgreSQL's DELETE performs implicitly on
-    * the reference's indexes (client.py:268-283). `dir` is a
-    * [[Ann.writeQuantized]] root (family from
-    * [[Ann.quantizedRootFamily]] — deletes rewrite the cells of its
-    * data subdir and of `fresh/`, side tables stay trained), a
-    * [[Ann.writePartitioned]] path, a [[Bm25.writePostings]]
-    * keyword layout (detected by its `_graft_buckets` marker — deletes
-    * rewrite the affected term buckets), a [[Ann.writeMatryoshka]]
-    * root (detected via [[Ann.isMatryoshkaRoot]] — deletes swap
-    * `rows/` whole-directory through [[Ann.deleteMatryoshkaIds]]), or
-    * a [[Ann.writeDenseRoot]] cell root (family marker — deletes
-    * rewrite only the `rows/` cells holding doomed rows; pair with
-    * [[mergeUnderfullIfNeeded]] on a cadence so drained cells
-    * eventually dissolve). */
+    * the reference's indexes (client.py:268-283). `dir` is:
+    *  - a maintainable cell root ([[Ann.cellRoot]]: range, dense,
+    *    maxsim, composed matryoshka-IVF or quantized) — deletes rewrite
+    *    only the cells of its data subdir that hold doomed rows, never
+    *    the side tables beside it (centroids, radii, bounds, codebooks:
+    *    a delete can only shrink a cell, so they stay sound); a
+    *    quantized root's `fresh/` rows are purged too. Pair with
+    *    [[mergeUnderfullIfNeeded]] on a cadence so drained cells
+    *    eventually dissolve;
+    *  - a [[Bm25.writePostings]] keyword or sparse layout (bucket
+    *    markers — deletes rewrite the affected term buckets);
+    *  - a flat [[Ann.writeMatryoshka]] root (deletes swap `rows/`
+    *    whole-directory through [[Ann.deleteMatryoshkaIds]]);
+    *  - a flat [[Ann.writePartitioned]] path. */
   def attachStoredIndex(td: TableDef[_], dir: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    // keyword / sparse layouts are self-describing (their
-    // bucket-modulus markers)
+    // every layout kind is detected ONCE at attach — it is immutable,
+    // and the hook runs per committed delete
     val keyword = Bm25.readBucketsMarker(reg.spark, dir).isDefined
     val sparse = graft.functions.Sparse.isStoredLayout(reg.spark, dir)
     val mrl = Ann.isMatryoshkaRoot(reg.spark, dir)
-    val mrlIvf = Ann.isMatryoshkaIvfRoot(reg.spark, dir)
-    // detected ONCE at attach like the flags above — the layout kind
-    // is immutable, and the hook runs per committed delete
-    val quantized = Ann.quantizedRootFamily(reg.spark, dir)
-    val path =
-      if (mrlIvf)
-        // cell-composed truncation root: rows/ is an ordinary
-        // cell-partitioned layout, so deletes rewrite ONLY the cells
-        // holding doomed rows (deleteStoredIds), never the whole dir
-        new org.apache.hadoop.fs.Path(root, "rows").toString
-      else if (mrl)
-        // flat truncation root: rows/ swaps whole-directory on delete
-        new org.apache.hadoop.fs.Path(root, "rows").toString
-      else if (quantized.nonEmpty)
-        // quantized roots keep cell-partitioned data under their
-        // family's subdir (beside the trained side tables, which
-        // deletes never touch — codes outlive rows)
-        new org.apache.hadoop.fs.Path(root, quantized.get.dataSub).toString
-      else if (Ann.isDenseRoot(reg.spark, dir))
-        // self-contained dense cell root: data under rows/ (beside
-        // the root-owned centroids, which deletes never touch)
-        new org.apache.hadoop.fs.Path(root, "rows").toString
-      else dir
+    val cells = Ann.detectCellRoot(reg.spark, dir, None)
+    val quantized = cells.exists(_.isInstanceOf[Ann.CellRoot.Quantized])
+    val path = cells.map(_.dataSub).orElse(Option.when(mrl)("rows"))
+      .fold(dir)(sub => new org.apache.hadoop.fs.Path(dir, sub).toString)
     // fail at ATTACH, not first delete: a streaming-grown dir
     // (_spark_metadata commit log) cannot take batch cell rewrites —
     // compact it first (Stream.compactStored)
@@ -822,7 +803,7 @@ final class Engine(reg: Registry) {
               // a quantized root may hold not-yet-compacted appends in
               // its fresh side table — purge those too, or the
               // fresh-aware searches resurrect the deleted rows
-              if (quantized.nonEmpty)
+              if (quantized)
                 Ann.deleteQuantizedFreshIds(reg.spark, dir, td.pk,
                   deleted.select(td.pk))
             }
@@ -845,116 +826,58 @@ final class Engine(reg: Registry) {
                            maxFreshRatio: Double): Option[Long] = {
     val ix = td.vectorIndex.getOrElse(throw new IllegalStateException(
       s"${td.name} has no vector index"))
-    require(Ann.quantizedRootFamily(reg.spark, dir).nonEmpty,
-      s"$dir is not a quantized root — fresh-table compaction only " +
-        "applies to SQ/PQ/1-bit layouts")
+    Ann.cellRoot(reg.spark, dir, Some(ix.column))
+      .as[Ann.CellRoot.Quantized]("compactFreshIfNeeded")
     Ann.compactQuantizedFreshIfNeeded(reg.spark, dir, td.pk, ix.column,
       maxFreshRatio)
   }
 
-  /** Threshold-triggered underfull-cell MERGE for a range, composed
-    * matryoshka-IVF, or quantized (SQ/PQ/1-bit) root serving `td` —
-    * [[compactFreshIfNeeded]]'s
-    * sibling seat for the cell-count side of the r66 health signal
-    * (the split's complement): [[attachStoredIndex]]'s delete
-    * maintenance drains cells, and nothing dissolved them, so probe
-    * arithmetic and small-file overhead grew with every delete cycle.
-    * Dispatches on the root's own marker (the engine's maintenance
-    * cadence must reach the north-star layout it manages — round 15
-    * left composed roots mergeable only by a direct
-    * [[graft.ops.Ann.mergeUnderfullCellsMrlIvf]] call): a
-    * `_graft_matryoshka_ivf` root merges under its pinned geometry, a
-    * quantized geometry marker routes to the re-encoding merge
-    * ([[graft.ops.Ann.mergeUnderfullCellsQuantized]] — refuses while
-    * `fresh/` exists; run [[compactFreshIfNeeded]] first), anything
-    * else takes the range path. Call after a delete wave or
-    * on a maintenance cadence: every cell below `minRows` dissolves,
-    * its rows re-homing to their true argmin survivors (crash-healed
-    * by re-run; readers refuse mid-merge). Returns dissolved cell id
-    * → rows it held (empty when nothing was underfull). */
+  /** Threshold-triggered underfull-cell MERGE for the root at `dir`
+    * serving `td` ([[Ann.mergeUnderfull]]).
+    *
+    * The maintenance triad — [[compactFreshIfNeeded]], this merge,
+    * [[splitOverfullIfNeeded]] and the [[indexHealthFor]] signal that
+    * justifies pulling them — serves every maintainable cell root
+    * ([[Ann.cellRoot]]: range, dense, maxsim, composed
+    * matryoshka-IVF, or quantized SQ/PQ/1-bit) on one cadence, so an
+    * operator need not know which family a dir is. Each seat resolves
+    * the root once from its own marker or layout and makes one call;
+    * a dir of no maintainable family refuses with the resolver's
+    * typed message. The table's declared vector column reaches the
+    * families that need it (range radii, quantized re-encode); dense
+    * and composed roots carry their own, which lets a MAXSIM table
+    * (multivec index, no vector index) ride the same cadence.
+    *
+    * [[attachStoredIndex]]'s delete maintenance drains cells; every
+    * cell below `minRows` dissolves, its rows re-homing to their true
+    * argmin survivors (crash-healed by re-run; readers refuse
+    * mid-merge; a quantized root refuses while `fresh/` exists — run
+    * [[compactFreshIfNeeded]] first). Returns dissolved cell id →
+    * rows it held (empty when nothing was underfull). */
   def mergeUnderfullIfNeeded(td: TableDef[_], dir: String,
                              minRows: Long): Map[Long, Long] =
-    if (Ann.isMatryoshkaIvfRoot(reg.spark, dir))
-      Ann.mergeUnderfullCellsMrlIvf(reg.spark, dir, minRows)
-    else if (Ann.quantizedRootFamily(reg.spark, dir).nonEmpty)
-      Ann.mergeUnderfullCellsQuantized(reg.spark, dir,
-        vectorColumn(td), minRows)
-    else if (Ann.isDenseRoot(reg.spark, dir))
-      // the root's own marker carries metric + vector column — no
-      // index declaration needed, which is what lets a MAXSIM table
-      // (multivec index, no vectorIndex) ride the same cadence
-      Ann.mergeUnderfullCellsDense(reg.spark, dir, minRows)
-    else if (Ann.isRangeRoot(reg.spark, dir))
-      Ann.mergeUnderfullCells(reg.spark, dir, vectorColumn(td), minRows)
-    else throw new IllegalStateException(unknownFamily(dir))
+    Ann.mergeUnderfull(
+      Ann.cellRoot(reg.spark, dir, td.vectorIndex.map(_.column)), minRows)
 
-  /** Threshold-triggered overfull-cell SPLIT for a range, composed
-    * matryoshka-IVF, or quantized (SQ/PQ/1-bit) root serving `td` —
-    * [[mergeUnderfullIfNeeded]]'s
-    * complement, completing the engine's maintenance triad (fresh
-    * compaction / merge / split) so an operator can run all three on
-    * one cadence without remembering which layout needs which direct
-    * call: appends grow hot cells the way deletes drain cold ones,
-    * and a never-split root's probes over-read at 100 TB. Dispatches
-    * on the root's own marker like the merge seat; every cell past
-    * `maxRows` locally retrains into sub-cells (only its directories
-    * rewritten, marker re-pinned — range results invariant, composed
-    * results the reduced-geometry replay). Returns oldCell → new cell
-    * ids (empty when nothing was overfull). */
+  /** Threshold-triggered overfull-cell SPLIT for the root at `dir`
+    * serving `td` ([[Ann.splitOverfull]]): appends grow hot cells the
+    * way deletes drain cold ones, and every cell past `maxRows`
+    * locally retrains into sub-cells (only its directories rewritten,
+    * marker re-pinned — range results invariant, the other families
+    * the post-split replay). Returns oldCell → new cell ids (empty
+    * when nothing was overfull). */
   def splitOverfullIfNeeded(td: TableDef[_], dir: String,
                             maxRows: Long): Map[Long, Seq[Long]] =
-    if (Ann.isMatryoshkaIvfRoot(reg.spark, dir))
-      Ann.splitOverfullCellsMrlIvf(reg.spark, dir, maxRows)
-    else if (Ann.quantizedRootFamily(reg.spark, dir).nonEmpty)
-      Ann.splitOverfullCellsQuantized(reg.spark, dir,
-        vectorColumn(td), maxRows)
-    else if (Ann.isDenseRoot(reg.spark, dir))
-      Ann.splitOverfullCellsDense(reg.spark, dir, maxRows)
-    else if (Ann.isRangeRoot(reg.spark, dir))
-      Ann.splitOverfullCells(reg.spark, dir, vectorColumn(td), maxRows)
-    else throw new IllegalStateException(unknownFamily(dir))
+    Ann.splitOverfull(
+      Ann.cellRoot(reg.spark, dir, td.vectorIndex.map(_.column)), maxRows)
 
-  /** The per-cell HEALTH SIGNAL for any maintainable root serving
-    * `td` — the READ side of the maintenance triad, completing the
-    * operator loop: [[mergeUnderfullIfNeeded]] /
-    * [[splitOverfullIfNeeded]] exist precisely so an operator need
-    * not know which family a dir is, but the SIGNALS that justify
-    * pulling them ([[graft.ops.Ann.indexHealth]] range,
-    * [[graft.ops.Ann.indexHealthDense]], [[graft.ops.Ann
-    * .indexHealthMrlIvf]], [[graft.ops.Ann.indexHealthQuantized]])
-    * still had to be matched to the root by hand. Dispatches on the
-    * root's own marker like the actuators, with the same typed
-    * refusal for unknowns. Every arm returns (centroid_id, n_rows,
-    * mean_dist); the range arm adds its stored `radius`. */
+  /** The per-cell HEALTH SIGNAL for the root at `dir` serving `td`
+    * ([[Ann.indexHealth]]) — the read side of the triad: every family
+    * returns (centroid_id, n_rows, mean_dist); a range root adds its
+    * stored `radius`. */
   def indexHealthFor(td: TableDef[_], dir: String): DataFrame =
-    if (Ann.isMatryoshkaIvfRoot(reg.spark, dir))
-      Ann.indexHealthMrlIvf(reg.spark, dir)
-    else if (Ann.quantizedRootFamily(reg.spark, dir).nonEmpty)
-      Ann.indexHealthQuantized(reg.spark, dir)
-    else if (Ann.isDenseRoot(reg.spark, dir))
-      Ann.indexHealthDense(reg.spark, dir)
-    else if (Ann.isRangeRoot(reg.spark, dir))
-      Ann.indexHealth(reg.spark, dir, vectorColumn(td))
-    else throw new IllegalStateException(unknownFamily(dir))
-
-  /** The families whose roots need the table's declared vector
-    * column (quantized re-encodes moved rows; range radii grow over
-    * it) — dense and composed roots carry their own. */
-  private def vectorColumn(td: TableDef[_]): String =
-    td.vectorIndex.getOrElse(throw new IllegalStateException(
-      s"${td.name} has no vector index")).column
-
-  /** The maintenance triad's typed refusal (round 17 — previously
-    * anything unrecognized took the range path and died inside
-    * `loadRangeIndex` with a bare missing-path error): name every
-    * family the triad CAN dispatch, so a mis-pointed dir refuses by
-    * contract, not by accident. */
-  private def unknownFamily(dir: String): String =
-    s"$dir is none of the maintainable cell-partitioned families — " +
-      "no composed matryoshka-IVF marker, no quantized geometry " +
-      "marker, no dense cell-root marker, no range radii table. " +
-      "Flat writePartitioned layouts have no disk-owned geometry to " +
-      "maintain: graduate one with Ann.graduateDenseRoot first."
+    Ann.indexHealth(
+      Ann.cellRoot(reg.spark, dir, td.vectorIndex.map(_.column)))
 
   /** Undo [[attachStoredIndex]]: the layout stops tracking the table's
     * deletes (no-op if never attached). */

@@ -349,7 +349,7 @@ object Ann {
   }
 
   /** Is `dir` a matryoshka root? The detection twin of
-    * [[quantizedRootFamily]] / Sparse.isStoredLayout — callers (layout
+    * [[cellRoot]] / Sparse.isStoredLayout — callers (layout
     * auto-detect) go through this, never the marker name. */
   def isMatryoshkaRoot(spark: org.apache.spark.sql.SparkSession,
                        dir: String): Boolean =
@@ -379,7 +379,7 @@ object Ann {
       who: String,
       markerName: String = "_graft_matryoshka"): (Int, Metric) = {
     // every matryoshka-root reader funnels through this parser — the
-    // ONE seat for the torn-merge refusal ([[mergeUnderfullCellsMrlIvf]]:
+    // ONE seat for the torn-merge refusal ([[mergeUnderfull]]:
     // rows may be mid-move between cell dirs; loud, never wrong)
     requireNoPendingMerge(spark, dir)
     readMatryoshkaMetaUnguarded(spark, dir, who, markerName)
@@ -394,6 +394,12 @@ object Ann {
       .getOrElse(throw new IllegalStateException(
         s"$who: $dir has no $markerName marker — not a " +
           "matryoshka root (or a truncated write)"))
+    matryoshkaMetaOf(marker, dir, who)
+  }
+
+  /** Parse a matryoshka marker's content: (dims, metric). */
+  private def matryoshkaMetaOf(marker: String, dir: String,
+                               who: String): (Int, Metric) = {
     def bad() = throw new IllegalStateException(
       s"$who: unreadable marker '$marker' in $dir")
     def dimsOf(part: String): Int = part.split("=") match {
@@ -731,7 +737,7 @@ object Ann {
     * contract. Returns rows actually appended.
     *
     * SPLITS INVALIDATE THE TOUCHED-CELLS PROBE: a later
-    * [[splitOverfullCellsMrlIvf]] can steal a neighboring cell's
+    * [[splitOverfull]] can steal a neighboring cell's
     * boundary row's argmin (the new sub-centroid lands nearer than
     * that row's own centroid), stranding its stored copy off today's
     * argmin — the default probe would miss it and a replayed batch
@@ -776,11 +782,6 @@ object Ann {
     if (n > 0L) appendMatryoshkaIvf(spark, dir, fresh, idCol, vecCol)
     n
   }
-
-  /** Is `dir` a [[writeMatryoshkaIvf]] root? */
-  def isMatryoshkaIvfRoot(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): Boolean =
-    graft.io.Markers.exists(spark, dir, "_graft_matryoshka_ivf")
 
   /** Two-phase top-k over a [[writeMatryoshkaIvf]] root: probe the
     * `probes` nearest cells (centroids read from the root — a reader
@@ -1574,7 +1575,7 @@ object Ann {
     * layout (readers and maintenance need nothing driver-resident),
     * the model fingerprint pinned, and `metric|vecCol` recorded in
     * the family marker — written LAST, the commit point: a crash
-    * mid-write leaves a directory [[isDenseRoot]] rejects. `assigned`
+    * mid-write leaves a directory [[cellRoot]] rejects. `assigned`
     * must already carry the model's `centroid_id` column (the
     * [[assign]] output under the SAME metric — a cosine root's rows
     * assigned under L2 would be silently unsearchable). */
@@ -1590,11 +1591,6 @@ object Ann {
       s"${metricToken(metric)}|$vecCol")
   }
 
-  /** Is `dir` a [[writeDenseRoot]] root? */
-  def isDenseRoot(spark: org.apache.spark.sql.SparkSession,
-                  dir: String): Boolean =
-    graft.io.Markers.exists(spark, dir, DenseCellsMarker)
-
   /** The dense root's pinned (metric, vecCol) WITHOUT the
     * pending-merge refusal — the maintenance actuators' entry read
     * (actuators heal a torn merge; readers refuse through
@@ -1607,6 +1603,12 @@ object Ann {
         s"$who: $dir has no dense cell-root marker — not a " +
           "writeDenseRoot layout (graduateDenseRoot a flat " +
           "writePartitioned dir first)"))
+    denseMetaOf(raw, dir, who)
+  }
+
+  /** Parse a dense cell-root marker's content: (metric, vecCol). */
+  private def denseMetaOf(raw: String, dir: String,
+                          who: String): (Metric, String) =
     raw.split("\\|", 2) match {
       case Array(tok, vecCol) if vecCol.nonEmpty =>
         (tokenMetric(tok), vecCol)
@@ -1614,15 +1616,6 @@ object Ann {
         s"$who: $dir carries a malformed dense cell-root marker " +
           s"'$raw' (want 'metric|vecCol')")
     }
-  }
-
-  /** The dense root's pinned (metric, vecCol) without loading the
-    * centroids — the cheap start-time validation read (stream seats
-    * and the engine triad dispatch on it). Does NOT refuse mid-merge:
-    * the marker is metadata, not row state. */
-  def denseRootMeta(spark: org.apache.spark.sql.SparkSession,
-                    dir: String, who: String): (Metric, String) =
-    readDenseMetaUnguarded(spark, dir, who)
 
   /** Load a [[writeDenseRoot]] layout: (model, metric, vecCol).
     * READER seat: refuses mid-merge ([[requireNoPendingMerge]] — the
@@ -1656,7 +1649,7 @@ object Ann {
                         dir: String, model: IvfModel, metric: Metric,
                         vecCol: String): Unit = {
     requireDenseMetric(metric, "graduateDenseRoot")
-    if (isDenseRoot(spark, dir)) {
+    if (graft.io.Markers.exists(spark, dir, DenseCellsMarker)) {
       val (m, vc) = readDenseMetaUnguarded(spark, dir,
         "graduateDenseRoot")
       require(m == metric && vc == vecCol,
@@ -1770,124 +1763,6 @@ object Ann {
       newDocs.withColumn(meanCol, tokenMeanCol(col(mvCol), dim)),
       idCol, probeAllCells)
 
-  /** Split overfull cells of a DENSE root — the fourth member of the
-    * unified [[splitViaDissolve]] construction (range/composed/
-    * quantized were the first three), closing the asymmetry where the
-    * PLAIN cell layout `ingestIvfAppend` grows was the one whose hot
-    * cells nothing bounded: no radii, no side artifacts; cosine roots
-    * flag/train on the unit sphere and store unit sub-centroids (the
-    * spherical-centroids convention — cosine argmin and probes are
-    * scale-invariant in the centroid, so disk-verbatim readers agree),
-    * and the dissolve re-homes every parent row to its TRUE GLOBAL
-    * argmin under the root's own metric. Results at equal probes are
-    * geometry-dependent like every IVF family; at all-probe they are
-    * exactly the pre-split top-k (the r98 oracle pin). Returns
-    * (oldCell → new cell ids). */
-  def splitOverfullCellsDense(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, maxRows: Long,
-                              iters: Int = 2): Map[Long, Seq[Long]] = {
-    val (metric, vecCol) = readDenseMetaUnguarded(spark, dir,
-      "splitOverfullCellsDense")
-    val (prep, spaceCol): (DataFrame => DataFrame, String) =
-      metric match {
-        case Cosine =>
-          ((df: DataFrame) => withNormalized(df, vecCol, "__nv"),
-            "__nv")
-        case _ => (identity[DataFrame] _, vecCol)
-      }
-    splitViaDissolve(spark, dir, maxRows, iters, dataSub = "rows",
-      growRadii = false, prep = prep, spaceCol = spaceCol,
-      centroidForm =
-        if (metric == Cosine) l2Normalize else identity,
-      preDissolve = _ => (),
-      dissolve = parents => {
-        mergeUnderfullImpl(spark, dir, minRows = 1L,
-          growRadii = false, radiiVecCol = "",
-          reassign = (d, r) => assign(d, vecCol, r, metric),
-          doomed = Some(parents))
-        ()
-      })
-  }
-
-  /** Merge underfull cells of a DENSE root — [[mergeUnderfullCells]]
-    * for the dense family (no radii to maintain): doomed centroids
-    * dissolve and their rows RE-ASSIGN to their true argmin survivors
-    * under the root's own pinned metric; the resumable-commit
-    * protocol, reader refusals and crash healing are the shared
-    * machinery verbatim. At all-probe results are invariant (exact
-    * top-k — the r99 oracle pin). Returns dissolved cell id → rows
-    * it held. */
-  def mergeUnderfullCellsDense(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      minRows: Long): Map[Long, Long] = {
-    val (metric, vecCol) = readDenseMetaUnguarded(spark, dir,
-      "mergeUnderfullCellsDense")
-    mergeUnderfullImpl(spark, dir, minRows, growRadii = false,
-      radiiVecCol = "",
-      reassign = (d, r) => assign(d, vecCol, r, metric))
-  }
-
-  /** [[indexHealth]] for a DENSE root — the r66 health signal for the
-    * fourth cell-partitioned family, the numbers an operator feeds
-    * [[splitOverfullCellsDense]] / [[mergeUnderfullCellsDense]]: per
-    * cell, the row count and mean distance to the centroid under the
-    * root's OWN pinned metric (no radii — the dense layout has none
-    * to certify; a cell whose count or mean dwarfs the others means
-    * stale centroids). Same scale shape as the range audit: ONE pass
-    * over the rows scan — broadcast centroid join, combinable
-    * count/avg — reading ONLY the vector + partition columns (payload
-    * pruned; the r100 gate pins it). */
-  def indexHealthDense(spark: org.apache.spark.sql.SparkSession,
-                       dir: String, roundTo: Int = 6): DataFrame = {
-    val (model, metric, vecCol) = loadDenseRoot(spark, dir)
-    spark.read.parquet(s"$dir/rows")
-      .select(col(model.idCol), col(vecCol))
-      .join(broadcast(model.centroids), model.idCol)
-      .withColumn("__d",
-        round(metric.dist(col(vecCol).cast("array<double>"),
-          col(model.vecCol)), roundTo))
-      .groupBy(col(model.idCol))
-      .agg(count(lit(1)).as("n_rows"),
-        round(avg(col("__d")), roundTo).as("mean_dist"))
-      .select(col(model.idCol), col("n_rows"), col("mean_dist"))
-  }
-
-  /** [[indexHealthDense]] for a COMPOSED matryoshka-IVF root — the
-    * r66 health signal for the north-star layout (its split/merge
-    * actuators landed in rounds 15-16, but the operator-visible
-    * per-cell numbers that justify pulling them did not): per cell,
-    * row count and mean distance IN THE ROOT'S ASSIGNMENT SPACE —
-    * cosine roots audit the normalized `emb_full` against the
-    * normalized centroids under L2 ([[matryoshkaIvfRows]]' exact
-    * argmin convention, so the audit measures the geometry the
-    * layout actually partitions by), L2 roots audit raw. Same
-    * one-pass scale shape as the other audits; refuses mid-merge
-    * (reader seat). */
-  def indexHealthMrlIvf(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, roundTo: Int = 6): DataFrame = {
-    val (_, metric) = readMatryoshkaMeta(spark, dir,
-      "indexHealthMrlIvf", "_graft_matryoshka_ivf")
-    val model = ivfModelAt(spark, dir)
-    ensureIvfModelMarker(spark, dir, model)
-    val rows = spark.read.parquet(s"$dir/rows")
-      .select(col(model.idCol), col("emb_full"))
-    val (audited, cents, vc) = metric match {
-      case Cosine =>
-        (withNormalized(rows, "emb_full", "__nv"),
-          normalizeModel(model), "__nv")
-      case _ => (rows, model, "emb_full")
-    }
-    audited
-      .join(broadcast(cents.centroids), model.idCol)
-      .withColumn("__d",
-        round(L2.dist(col(vc).cast("array<double>"),
-          col(model.vecCol)), roundTo))
-      .groupBy(col(model.idCol))
-      .agg(count(lit(1)).as("n_rows"),
-        round(avg(col("__d")), roundTo).as("mean_dist"))
-      .select(col(model.idCol), col("n_rows"), col("mean_dist"))
-  }
-
   /** The composed matryoshka-IVF root's coarse quantizer, loaded with
     * the family's reader guards (torn-merge refusal + marker
     * validation) — the resolve seat the declarative registration's
@@ -1906,72 +1781,6 @@ object Ann {
     // identity IS the disk state being read, never a caller's model)
     ensureIvfModelMarker(spark, dir, model)
     model
-  }
-
-  /** [[indexHealth]] for a QUANTIZED root (SQ / PQ / 1-bit) — the r66
-    * health signal for the last signal-less family (its split/merge
-    * actuators existed since rounds 15-16, but an operator had to
-    * pull them blind): per cell, row count and mean DEQUANTIZED
-    * distance to the centroid in the marker's geometry — the main
-    * layouts store codes, not raw vectors, so the audit measures what
-    * the index itself can know: how far the codes' reconstructions
-    * sit from their cell center (spherical roots audit on the unit
-    * sphere, where their codes and stored centroids both live).
-    * Per family: SQ dequantizes through the per-cell bounds
-    * ([[sqDistCols]] with the CENTROID as the "query" — the same
-    * asymmetric expression the search scan runs); PQ reconstructs
-    * each row from the literal codebooks ([[pqReconstructCol]]) and
-    * measures L2 to the centroid; 1-bit needs no reconstruction at
-    * all — the dequantized vector is centroid + r̂ with ‖r̂‖ = the
-    * stored `rnorm`, so the distance IS `rnorm` (already rounded at
-    * encode time).
-    *
-    * Scale shape (the r100/r102 discipline): ONE pass over the
-    * codes scan — broadcast bounds/centroid joins, combinable
-    * count/avg — and the scan reads ONLY the code (or rnorm) +
-    * partition columns; the full-precision vector and id payload are
-    * column-pruned out (the r104 gate pins it). Refuses mid-merge
-    * and while `fresh/` exists (uncompacted fresh rows are invisible
-    * to a codes-only audit — its counts would under-report exactly
-    * the cells an operator is about to act on; compact first, the
-    * actuators' own precondition). */
-  def indexHealthQuantized(spark: org.apache.spark.sql.SparkSession,
-                           dir: String, roundTo: Int = 6): DataFrame = {
-    val (family, _) = quantizedFamily(spark, dir)
-    require(!freshExists(spark, dir),
-      s"indexHealthQuantized: $dir carries a fresh/ side table — " +
-        "compact it first (compactQuantizedFresh); a codes-only " +
-        "audit cannot see uncompacted fresh rows and would " +
-        "under-report the cells the signal exists to flag")
-    val model = ivfModelAt(spark, dir)
-    // validates against an existing pin; on a never-pinned root
-    // (writeQuantized does not pin _graft_ivf_model) this ADOPTS
-    // the fingerprint of the root's own on-disk centroids — a
-    // one-time metadata write on first read, pinning exactly the
-    // state being audited
-    ensureIvfModelMarker(spark, dir, model)
-    val withD = family.artifacts(spark, dir, model).healthDist(
-      spark.read.parquet(s"$dir/${family.dataSub}"), roundTo)
-    withD.groupBy(col(model.idCol))
-      .agg(count(lit(1)).as("n_rows"),
-        round(avg(col("__d")), roundTo).as("mean_dist"))
-      .select(col(model.idCol), col("n_rows"), col("mean_dist"))
-  }
-
-  /** Is `dir` a [[writeRangeIndex]] root? Detection is the radii side
-    * table's presence (any swap state — a torn swap's `__old`/`_next`
-    * still names the family; the actuator heals it at entry): the
-    * range family predates the marker convention, so its layouts
-    * self-describe by shape. Used by the engine's maintenance triad
-    * to dispatch BY FAMILY instead of defaulting unknowns onto the
-    * range path (where a foreign root died inside [[loadRangeIndex]]
-    * with a path error instead of a typed refusal). */
-  def isRangeRoot(spark: org.apache.spark.sql.SparkSession,
-                  dir: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq("radii", "radii__old", "radii_next").exists(n =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$n")))
   }
 
   /** Scalar-quantization (SQ) model: per-dimension [min, max] over the
@@ -2877,128 +2686,310 @@ object Ann {
     n
   }
 
-  /** Split overfull cells of a [[writeRangeIndex]] root — the
-    * actuator for [[indexHealth]]'s retrain signal: every cell holding
-    * more than `maxRows` rows locally retrains into two sub-cells
-    * (the r42-oracled deterministic KMeans restricted to that cell's
-    * rows, k=2) and dissolves into them, leaving every other cell's
-    * bytes untouched — the 100 TB answer to "one hot cell ruins probe
-    * selectivity" that never rewrites the corpus.
-    *
-    * Construction (ONE shape across the range, composed and quantized
-    * families — [[splitViaDissolve]]): the sub-centroids land EMPTY
-    * first (with zero-radius radii rows — an empty cell wastes a
-    * probe, it cannot be wrong), the marker re-pins, and the parent
-    * DISSOLVES through the merge protocol: every parent row re-homes
-    * to its TRUE GLOBAL argmin among the surviving cells (not merely
-    * the nearer of the two subs — a local-argmin placement leaves
-    * rows whose global argmin is a THIRD cell stranded off-argmin,
-    * the drift [[appendRangeIndexIdempotent]]'s covering-radii probe
-    * exists to absorb), receiving radii grow before rows move, and
-    * crash-safety is the merge's resumable-commit protocol: a torn
-    * dissolve refuses readers LOUDLY and ANY maintenance entry point
-    * (or [[healRoot]]) completes it — including this one, which
-    * self-heals pending merges at entry instead of refusing.
-    *
-    * Correctness is an invariance: the row set is merely
-    * re-partitioned under covering radii, so every range/kNN result
-    * over the root is IDENTICAL before and after (the r69 gate pins
-    * this against the index-free oracle). Cells whose rows are all
-    * identical at hash precision are skipped (splitting cannot
-    * separate them).
-    *
-    * Scale shape: the audit is one combinable count; each flagged
-    * cell's retrain reads ONE directory; the dissolve is bounded by
-    * the flagged cells' rows; metadata tables stay cell-count-sized.
-    * Returns (oldCell → new cell ids), empty when nothing was
-    * overfull. */
-  def splitOverfullCells(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, vecCol: String, maxRows: Long,
-                         iters: Int = 2): Map[Long, Seq[Long]] =
-    splitViaDissolve(spark, dir, maxRows, iters, dataSub = "rows",
-      growRadii = true, prep = identity, spaceCol = vecCol,
-      centroidForm = identity, preDissolve = _ => (),
-      dissolve = parents => {
-        mergeUnderfullImpl(spark, dir, minRows = 1L, growRadii = true,
-          radiiVecCol = vecCol,
-          reassign = (d, r) => assign(d, vecCol, r, L2),
-          doomed = Some(parents))
-        ()
-      })
+  /** A maintainable cell-partitioned root, resolved ONCE from its own
+    * family marker or layout ([[cellRoot]]). Each case names what its
+    * family does differently under maintenance — the data subdir, the
+    * space a flagged cell retrains in, the stored form of a new
+    * sub-centroid, radii growth, the re-assignment (or re-encode) of
+    * moved rows, the side rows a split inherits, the `fresh/` refusal
+    * and the per-row health distance — and [[splitOverfull]],
+    * [[mergeUnderfull]] and [[indexHealth]] are written once over it.
+    * A case holds the root's IMMUTABLE identity (family, metric,
+    * vector column); centroids, radii and markers are re-read by every
+    * actuator call. */
+  sealed trait CellRoot extends Product with Serializable {
+    def spark: org.apache.spark.sql.SparkSession
+    def dir: String
+    /** The root subdir holding the cell-partitioned rows — the path a
+      * delete rewrites. */
+    def dataSub: String = "rows"
+    /** The family's name in refusals. */
+    private[ops] def kind: String
+    /** The space a flagged cell's rows retrain in: the lift applied to
+      * the rows and the column it yields. */
+    private[ops] def trainSpace: (DataFrame => DataFrame, String)
+    /** The stored form of a freshly trained sub-centroid. */
+    private[ops] def centroidForm: Column => Column = identity
+    /** The vector column whose covering radii grow as rows move in
+      * (range roots only). */
+    private[ops] def radiiVecCol: Option[String] = None
+    /** Re-homes the rows of dissolved cells under the reduced model. */
+    private[ops] def reassigner: (DataFrame, IvfModel) => DataFrame
+    /** A split's side-table step before its parents dissolve:
+      * `newIds` are (parent cell, new sub-cell) pairs. */
+    private[ops] def inheritSide(newIds: Seq[(Long, Long)]): Unit = ()
+    /** Refusals a maintenance step needs beyond the torn-merge one. */
+    private[ops] def requireMaintainable(who: String): Unit = ()
+    /** (cell, `__d`) per stored row: its distance to its cell centroid
+      * in the family's geometry, rounded to `roundTo`. */
+    private[ops] def healthDist(rows: DataFrame, model: IvfModel,
+                                roundTo: Int): DataFrame
 
-  /** [[splitOverfullCells]] for a COMPOSED matryoshka-IVF root
-    * ([[writeMatryoshkaIvf]]) — the north-star layout's hot cells grow
-    * unbounded under streamed append exactly like the range family's
-    * (the reference's vchordrq shape holds IVF and truncation
-    * together, /root/reference/vechord/spec.py:437-444; its `lists`
-    * maintenance is this actuator's analog). Same
-    * [[splitViaDissolve]] construction, radii steps absent (the
-    * composed layout has none): the flagged cell retrains UNDER THE
-    * ROOT'S OWN PINNED GEOMETRY — cosine roots train in the
-    * normalized space and store raw k-means means (the layout's
-    * normalize-on-read convention; the dissolve's re-assignment runs
-    * under [[normalizeModel]], [[matryoshkaIvfRows]]' exact argmin) —
-    * and dissolves through the merge protocol, so its rows land at
-    * their TRUE GLOBAL argmin (`emb_pre` is row-intrinsic and moves
-    * verbatim). Readers refuse mid-dissolve through the ONE
-    * [[readMatryoshkaMeta]] seat; this entry (like every maintenance
-    * actuator) COMPLETES a pending merge instead of refusing.
-    * Returns (oldCell → new cell ids). */
-  def splitOverfullCellsMrlIvf(spark: org.apache.spark.sql.SparkSession,
-                               dir: String, maxRows: Long,
-                               iters: Int = 2): Map[Long, Seq[Long]] = {
-    val (_, metric) = readMatryoshkaMetaUnguarded(spark, dir,
-      "splitOverfullCellsMrlIvf", "_graft_matryoshka_ivf")
-    val (prep, spaceCol): (DataFrame => DataFrame, String) =
-      metric match {
-        case Cosine =>
-          ((df: DataFrame) => withNormalized(df, "emb_full", "__nv"),
-            "__nv")
-        case _ => (identity[DataFrame] _, "emb_full")
-      }
-    splitViaDissolve(spark, dir, maxRows, iters, dataSub = "rows",
-      growRadii = false, prep = prep, spaceCol = spaceCol,
-      centroidForm = identity, preDissolve = _ => (),
-      dissolve = parents => {
-        mergeUnderfullImpl(spark, dir, minRows = 1L,
-          growRadii = false, radiiVecCol = "",
-          reassign = mrlIvfReassign(metric), doomed = Some(parents))
-        ()
-      })
+    /** This root as family `R`, or the typed refusal naming both. */
+    def as[R <: CellRoot](who: String)(
+        implicit tag: scala.reflect.ClassTag[R]): R = this match {
+      case r: R => r
+      case _ => throw new IllegalStateException(
+        s"$who: $dir is a $kind root, not a " +
+          s"${tag.runtimeClass.getSimpleName} root — this seat serves " +
+          "one family")
+    }
   }
 
-  /** The ONE construction behind every cell split (range, composed,
-    * quantized): flag + train ([[flagAndTrainSubs]]), land the
-    * sub-centroids EMPTY (plus family side rows: zero radii for range
-    * roots here, inherited SQ bounds via `preDissolve` — all
-    * filter-out-then-union, so a crashed run's re-execution with the
-    * same fresh ids cannot duplicate side rows), re-pin the marker,
-    * then `dissolve` the parents through the family's merge protocol
-    * so every parent row re-homes to its TRUE GLOBAL argmin among
-    * survivors. Crash windows: before the centroid commit the old
-    * root is fully live; between commit and dissolve the root is live
-    * with empty (inert) sub-cells — a re-run re-flags the parent and
-    * trains fresh ids, leaving the old empties as orphans the next
-    * merge cadence dissolves; inside the dissolve the merge's
-    * resumable protocol applies (readers refuse, any entry heals).
-    * Self-heals at entry: crashed side-table swaps restore and a
-    * pending merge COMPLETES (actuators heal; readers refuse). */
-  private def splitViaDissolve(
+  object CellRoot {
+    /** A [[writeRangeIndex]] root: L2 cells plus a radii side table
+      * covering `vecCol`. The layout predates the family markers and
+      * does not record its vector column, so the caller names it;
+      * split, merge and health refuse without it. */
+    final case class Range(spark: org.apache.spark.sql.SparkSession,
+                           dir: String, vecCol: Option[String])
+        extends CellRoot {
+      private[ops] def kind: String = "range"
+      private def vec: String = vecCol.getOrElse(
+        throw new IllegalStateException(s"$dir is a range root: its " +
+          "radii cover the table's vector column, and none was named"))
+      private[ops] def trainSpace: (DataFrame => DataFrame, String) =
+        (identity[DataFrame] _, vec)
+      override private[ops] def radiiVecCol: Option[String] = Some(vec)
+      private[ops] def reassigner: (DataFrame, IvfModel) => DataFrame = {
+        val v = vec
+        (rows, reduced) => assign(rows, v, reduced, L2)
+      }
+      private[ops] def healthDist(rows: DataFrame, model: IvfModel,
+                                  roundTo: Int): DataFrame =
+        centroidDist(rows.select(col(model.idCol), col(vec)), vec, model,
+          L2, roundTo)
+    }
+
+    /** A [[writeDenseRoot]] root, plain or maxsim (the persisted token
+      * mean); metric and vector column come from its marker. Cosine
+      * roots retrain on the unit sphere and store UNIT sub-centroids
+      * (cosine argmin and probes are scale-invariant in the centroid,
+      * so disk-verbatim readers agree); moved rows re-assign to their
+      * argmin under the root's own metric. */
+    final case class Dense(spark: org.apache.spark.sql.SparkSession,
+                           dir: String, metric: Metric, vecCol: String)
+        extends CellRoot {
+      private[ops] def kind: String = "dense"
+      private[ops] def trainSpace: (DataFrame => DataFrame, String) =
+        if (metric == Cosine)
+          ((df: DataFrame) => withNormalized(df, vecCol, "__nv"), "__nv")
+        else (identity[DataFrame] _, vecCol)
+      override private[ops] def centroidForm: Column => Column =
+        if (metric == Cosine) l2Normalize else identity
+      private[ops] def reassigner: (DataFrame, IvfModel) => DataFrame =
+        (rows, reduced) => assign(rows, vecCol, reduced, metric)
+      private[ops] def healthDist(rows: DataFrame, model: IvfModel,
+                                  roundTo: Int): DataFrame =
+        centroidDist(rows.select(col(model.idCol), col(vecCol)), vecCol,
+          model, metric, roundTo)
+    }
+
+    /** A [[writeMatryoshkaIvf]] root; its metric comes from the marker.
+      * Cosine roots retrain, re-assign and audit the normalized
+      * `emb_full` against normalized centroids under L2
+      * ([[matryoshkaIvfRows]]' exact argmin) but store raw k-means
+      * means (the layout's normalize-on-read convention); `emb_pre` is
+      * row-intrinsic and moves verbatim. */
+    final case class MrlIvf(spark: org.apache.spark.sql.SparkSession,
+                            dir: String, metric: Metric)
+        extends CellRoot {
+      private[ops] def kind: String = "composed matryoshka-IVF"
+      private[ops] def trainSpace: (DataFrame => DataFrame, String) =
+        if (metric == Cosine)
+          ((df: DataFrame) => withNormalized(df, "emb_full", "__nv"),
+            "__nv")
+        else (identity[DataFrame] _, "emb_full")
+      private[ops] def reassigner: (DataFrame, IvfModel) => DataFrame =
+        (rows, reduced) =>
+          if (metric == Cosine)
+            assign(withNormalized(rows, "emb_full", "__nv"), "__nv",
+              normalizeModel(reduced), L2).drop("__nv")
+          else assign(rows, "emb_full", reduced, L2)
+      private[ops] def healthDist(rows: DataFrame, model: IvfModel,
+                                  roundTo: Int): DataFrame = {
+        val full = rows.select(col(model.idCol), col("emb_full"))
+        if (metric == Cosine)
+          centroidDist(withNormalized(full, "emb_full", "__nv"), "__nv",
+            normalizeModel(model), L2, roundTo)
+        else centroidDist(full, "emb_full", model, L2, roundTo)
+      }
+    }
+
+    /** A [[writeQuantized]] root (SQ / PQ / 1-bit). `spherical` is the
+      * flag its geometry marker pins — None on a root written without
+      * ensure*Root, which resolves (deletes serve it) but refuses
+      * maintenance: an unpinned geometry must never become a
+      * maintenance target. `vecCol` is the raw vector column moved
+      * rows re-encode from. Spherical roots retrain on the unit sphere
+      * and store UNIT sub-centroids (quantized readers and assigners
+      * use disk centroids verbatim); moved rows strip their stale
+      * codes and re-encode under the receiving cell's frozen
+      * artifacts (the [[compactQuantizedFresh]] transforms); SQ
+      * sub-cells inherit their parent's bounds. Every step refuses
+      * while `fresh/` exists. */
+    final case class Quantized(spark: org.apache.spark.sql.SparkSession,
+                               dir: String, family: QuantFamily,
+                               spherical: Option[Boolean],
+                               vecCol: Option[String])
+        extends CellRoot {
+      override def dataSub: String = family.dataSub
+      private[ops] def kind: String = s"quantized $family"
+      private def pinned: Boolean =
+        spherical.getOrElse(throw unpinnedQuantized(dir))
+      private def vec: String = vecCol.getOrElse(
+        throw new IllegalStateException(s"$dir is a quantized root: " +
+          "moved rows re-encode from the table's vector column, and " +
+          "none was named"))
+      override private[ops] def requireMaintainable(who: String): Unit = {
+        pinned
+        require(!freshExists(spark, dir),
+          s"$who: $dir carries a fresh/ side table — compact it first " +
+            "(compactQuantizedFresh): a split or merge would strand " +
+            "fresh rows under dissolved cells, and a codes-only audit " +
+            "cannot see them")
+      }
+      private[ops] def trainSpace: (DataFrame => DataFrame, String) =
+        if (pinned)
+          ((df: DataFrame) => withNormalized(df, vec, "__nv"), "__nv")
+        else (identity[DataFrame] _, vec)
+      override private[ops] def centroidForm: Column => Column =
+        if (pinned) l2Normalize else identity
+      override private[ops] def inheritSide(
+          newIds: Seq[(Long, Long)]): Unit =
+        family.inheritSide(spark, dir, newIds)
+      private[ops] def reassigner: (DataFrame, IvfModel) => DataFrame = {
+        val (v, metric) = (vec, if (pinned) Cosine else L2)
+        (rows, reduced) => {
+          val stored = spark.read.parquet(s"$dir/$dataSub")
+          val raw = family.codeCols.foldLeft(rows)(_ drop _)
+          val encoded = family.artifacts(spark, dir, reduced)
+            .encode(raw, v, metric)
+          // guard + order-normalize against the stored footer: a
+          // drifted encode transform must fail HERE, not as a
+          // nondeterministic mixed-schema read at query time
+          requireAppendSchema(stored.schema, encoded.schema,
+            Set("centroid_id"), "mergeUnderfull")
+          encoded.select(stored.columns.map(col): _*)
+        }
+      }
+      private[ops] def healthDist(rows: DataFrame, model: IvfModel,
+                                  roundTo: Int): DataFrame =
+        family.artifacts(spark, dir, model).healthDist(rows, roundTo)
+    }
+  }
+
+  /** Resolve the maintainable cell root at `dir`, reading each family
+    * marker or layout probe once, in a fixed order: the composed
+    * matryoshka-IVF marker, a quantized geometry marker or layout
+    * ([[detectQuantized]]), the dense cell-root marker, then the range
+    * radii table (any swap state — a torn swap's `__old`/`_next` still
+    * names the family; the actuators heal it at entry). A pending
+    * merge does not refuse here: the actuators complete it and the
+    * readers refuse it. `vecCol` is the table's vector column, which
+    * split and merge need on range roots (radii) and quantized roots
+    * (re-encode); the other families record their own. Anything else
+    * — a flat writePartitioned dir, a keyword layout, a flat
+    * matryoshka root, an empty dir — gets one typed refusal. */
+  def cellRoot(spark: org.apache.spark.sql.SparkSession, dir: String,
+               vecCol: Option[String]): CellRoot =
+    detectCellRoot(spark, dir, vecCol).getOrElse(
+      throw new IllegalStateException(
+        s"$dir is none of the maintainable cell-partitioned families — " +
+          "no composed matryoshka-IVF marker, no quantized geometry " +
+          "marker, no dense cell-root marker, no range radii table. " +
+          "Flat writePartitioned layouts have no disk-owned geometry " +
+          "to maintain: graduate one with Ann.graduateDenseRoot first."))
+
+  /** [[cellRoot]] without the refusal — None for any other layout
+    * (the delete attach also serves flat and keyword layouts). */
+  private[graft] def detectCellRoot(
       spark: org.apache.spark.sql.SparkSession, dir: String,
-      maxRows: Long, iters: Int, dataSub: String, growRadii: Boolean,
-      prep: DataFrame => DataFrame, spaceCol: String,
-      centroidForm: Column => Column,
-      preDissolve: Seq[(Long, Long)] => Unit,
-      dissolve: Seq[Long] => Unit): Map[Long, Seq[Long]] = {
+      vecCol: Option[String]): Option[CellRoot] = {
+    def hasRadii = {
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      Seq("radii", "radii__old", "radii_next").exists(n =>
+        fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$n")))
+    }
+    graft.io.Markers.read(spark, dir, "_graft_matryoshka_ivf")
+      .map(raw => CellRoot.MrlIvf(spark, dir,
+        matryoshkaMetaOf(raw, dir, "cellRoot")._2): CellRoot)
+      .orElse(detectQuantized(spark, dir).map { case (f, s) =>
+        CellRoot.Quantized(spark, dir, f, s, vecCol) })
+      .orElse(graft.io.Markers.read(spark, dir, DenseCellsMarker)
+        .map { raw =>
+          val (metric, vc) = denseMetaOf(raw, dir, "cellRoot")
+          CellRoot.Dense(spark, dir, metric, vc)
+        })
+      .orElse(if (hasRadii) Some(CellRoot.Range(spark, dir, vecCol))
+        else None)
+  }
+
+  /** (cell, `__d`) per row of `rows`: `metric` distance from column
+    * `vc` to its cell's centroid in `cents`, rounded to `roundTo` —
+    * one broadcast centroid join. */
+  private def centroidDist(rows: DataFrame, vc: String, cents: IvfModel,
+                           metric: Metric, roundTo: Int): DataFrame =
+    rows.join(broadcast(cents.centroids), cents.idCol)
+      .withColumn("__d", round(metric.dist(col(vc).cast("array<double>"),
+        col(cents.vecCol)), roundTo))
+
+  /** SPLIT overfull cells of a [[CellRoot]] — the actuator for
+    * [[indexHealth]]'s retrain signal: every cell holding more than
+    * `maxRows` rows locally retrains into two sub-cells (the
+    * r42-oracled deterministic KMeans restricted to that cell's rows,
+    * k=2, in the root's training space) and dissolves into them,
+    * leaving every other cell's bytes untouched — the 100 TB answer to
+    * "one hot cell ruins probe selectivity" that never rewrites the
+    * corpus.
+    *
+    * Construction: flag + train ([[flagAndTrainSubs]]), land the
+    * sub-centroids EMPTY (plus family side rows: zero radii on range
+    * roots, inherited bounds on SQ roots — all filter-out-then-union,
+    * so a crashed run's re-execution with the same fresh ids cannot
+    * duplicate side rows; an empty cell wastes a probe, it cannot be
+    * wrong), re-pin the marker, then DISSOLVE the parents through the
+    * merge protocol: every parent row re-homes to its TRUE GLOBAL
+    * argmin among the surviving cells (not merely the nearer of the
+    * two subs — a local-argmin placement leaves rows whose global
+    * argmin is a THIRD cell stranded off-argmin), receiving radii grow
+    * before rows move.
+    *
+    * Crash windows: before the centroid commit the old root is fully
+    * live; between commit and dissolve the root is live with empty
+    * (inert) sub-cells — a re-run re-flags the parent and trains fresh
+    * ids, leaving the old empties as orphans the next merge cadence
+    * dissolves; inside the dissolve the merge's resumable protocol
+    * applies (readers refuse, any entry heals). Self-heals at entry:
+    * crashed side-table swaps restore and a pending merge COMPLETES
+    * (actuators heal; readers refuse).
+    *
+    * Results: a range root's rows are merely re-partitioned under
+    * covering radii, so every range/kNN result is IDENTICAL before and
+    * after (r69); the other families are geometry-dependent at equal
+    * probes like every IVF layout and exact at all-probe. Cells whose
+    * training-space rows are identical at hash precision are skipped
+    * (splitting cannot separate them). Quantized roots refuse while
+    * `fresh/` exists. Scale shape: the audit is one combinable count;
+    * each flagged cell's retrain reads ONE directory; the dissolve is
+    * bounded by the flagged cells' rows. Returns (oldCell → new cell
+    * ids), empty when nothing was overfull. */
+  def splitOverfull(root: CellRoot, maxRows: Long,
+                    iters: Int = 2): Map[Long, Seq[Long]] = {
+    root.requireMaintainable("splitOverfull")
+    val (prep, spaceCol) = root.trainSpace
+    val spark = root.spark
+    val dir = root.dir
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     healSideTableSwap(fs, dir, "bounds") // no-op where absent
     completePendingMerge(spark, dir) // heals centroids/radii + marker
     val model = ivfModelAt(spark, dir)
     ensureIvfModelMarker(spark, dir, model) // refuse foreign roots
-    val rows = spark.read.parquet(s"$dir/$dataSub")
+    val rows = spark.read.parquet(s"$dir/${root.dataSub}")
     val trained = flagAndTrainSubs(rows, model, maxRows, iters, prep,
-      spaceCol, centroidForm)
+      spaceCol, root.centroidForm)
     if (trained.isEmpty) return Map.empty
     // each per-cell frame is a LOCAL relation (flagAndTrainSubs
     // collected the trained 2 rows inside the pool): the union and
@@ -3021,8 +3012,8 @@ object Ann {
     // (a) family side rows FIRST (inert until the commit lists the
     //     sub-cells — the radii soundness order); idempotent via
     //     filter-out-then-union
-    preDissolve(newIds)
-    if (growRadii) {
+    root.inheritSide(newIds)
+    if (root.radiiVecCol.isDefined) {
       val sp2 = spark
       import sp2.implicits._
       val seed = subIds.map((_, 0.0))
@@ -3062,24 +3053,9 @@ object Ann {
         (model.collectedCentroids.filterNot(c => subIdSet(c._1)) ++
           newIdVecs.map(_._2)).sortBy(_._1)))
     // (d) dissolve the parents: rows re-home to their GLOBAL argmin
-    dissolve(trained.map(_._1))
+    mergeCells(root, minRows = 1L, doomed = Some(trained.map(_._1)))
     newIds.groupBy(_._1).view.mapValues(_.map(_._2).toSeq.sorted).toMap
   }
-
-  /** The composed root's metric-aware re-assignment — shared by
-    * [[mergeUnderfullCellsMrlIvf]] and [[splitOverfullCellsMrlIvf]]'s
-    * dissolve, so the two cannot drift: cosine roots re-assign the
-    * normalized `emb_full` against the normalized reduced centroids
-    * ([[matryoshkaIvfRows]]' exact convention); `emb_pre` is
-    * row-intrinsic and moves verbatim. */
-  private def mrlIvfReassign(metric: Metric)
-      : (DataFrame, IvfModel) => DataFrame =
-    (dropped, reduced) => metric match {
-      case Cosine =>
-        assign(withNormalized(dropped, "emb_full", "__nv"), "__nv",
-          normalizeModel(reduced), L2).drop("__nv")
-      case _ => assign(dropped, "emb_full", reduced, L2)
-    }
 
   /** Shared flag-and-train front half of EVERY cell split (range,
     * composed, quantized — one copy, so the occupancy audit, the
@@ -3175,7 +3151,7 @@ object Ann {
   private val SplitHistoryMarker = "_graft_split_history"
 
   /** Has `dir` EVER been through a cell split? Written by
-    * [[splitViaDissolve]] BEFORE the sub-centroids commit (a crash
+    * [[splitOverfull]] BEFORE the sub-centroids commit (a crash
     * between the two leaves a marked-but-unsplit root — conservative:
     * the sound probe runs where the fast one would have been safe,
     * never the reverse) and never removed: once a split has run, a
@@ -3294,7 +3270,7 @@ object Ann {
     * marker's write and the merge's last step, rows are in flight
     * between live cell directories — a read could see a row twice or
     * not at all, so the contract is LOUD, never wrong: readers throw
-    * until [[mergeUnderfullCells]] re-runs to completion (every step
+    * until [[mergeUnderfull]] re-runs to completion (every step
     * after the marker is idempotent). */
   private def requireNoPendingMerge(
       spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
@@ -3302,74 +3278,54 @@ object Ann {
       throw new IllegalStateException(
         s"$dir has a torn cell merge in flight " +
           s"($MergePendingMarker present) — rows may be mid-move " +
-          "between cell directories; re-run mergeUnderfullCells on " +
-          "this root to complete it before reading")
+          "between cell directories; re-run Ann.mergeUnderfull (or " +
+          "any maintenance actuator) on this root to complete it " +
+          "before reading")
 
-  /** MERGE underfull cells into their surviving neighbors — the
-    * complement actuator to [[splitOverfullCells]] for the r66 health
+  /** MERGE underfull cells of a [[CellRoot]] into their surviving
+    * neighbors — [[splitOverfull]]'s complement for the r66 health
     * signal's other tail: deletes drain cells, and at 100 TB a layout
     * riddled with near-empty cells pays probe arithmetic and
     * small-file overhead for directories that no longer earn their
     * keep. Every cell holding FEWER than `minRows` rows (empty cells
     * included) is dissolved: its centroid leaves the model and its
-    * rows RE-ASSIGN under the reduced model (each row to its true
-    * nearest surviving centroid — not blanket-absorbed into one
-    * neighbor, so the IVF invariant `row lives in its argmin cell`
-    * holds exactly), receiving cells' radii grow FIRST (inert,
-    * sound), and results are INVARIANT (r90's oracle pin).
+    * rows re-home under the reduced model (each row to its true
+    * nearest surviving centroid in the root's own geometry — not
+    * blanket-absorbed into one neighbor, so the IVF invariant `row
+    * lives in its argmin cell` holds exactly; quantized rows
+    * re-encode under their receiver's frozen artifacts), and a range
+    * root's receiving radii grow FIRST (inert, sound). Range results
+    * are INVARIANT (r90); the other families read as the replay under
+    * the reduced centroid set, exact at all-probe.
     *
     * Crash-safety is the resumable-commit protocol: radii grow and
     * rows stage UNREFERENCED before the pending marker lands; every
     * step after the marker (centroid swap, staged-file moves, doomed
     * dir deletes, radii cleanup, marker removal) is idempotent, and
-    * ALL range-root readers refuse while the marker exists
-    * ([[requireNoPendingMerge]] in [[loadRangeIndex]]) — a torn merge
-    * is loud, never silently duplicated or dropped rows; re-running
-    * this op completes it. Refuses when EVERY cell is underfull
-    * (nothing to merge into — retrain instead). Returns
-    * dissolved cell id → rows it held. */
-  def mergeUnderfullCells(spark: org.apache.spark.sql.SparkSession,
-                          dir: String, vecCol: String,
-                          minRows: Long): Map[Long, Long] =
-    mergeUnderfullImpl(spark, dir, minRows, growRadii = true,
-      radiiVecCol = vecCol,
-      reassign = (dropped, reduced) =>
-        assign(dropped, vecCol, reduced, L2))
-
-  /** [[mergeUnderfullCells]] for a COMPOSED matryoshka-IVF root
-    * ([[writeMatryoshkaIvf]]) — the north-star layout drains under
-    * delete maintenance exactly like the range family, and its
-    * underfull cells cost probe slots and small files the same way.
-    * Same resumable protocol (no radii — the composed layout has
-    * none to grow): doomed centroids dissolve and their rows
-    * RE-ASSIGN under the root's own pinned geometry (cosine roots
-    * re-assign the normalized `emb_full` against the normalized
-    * reduced centroids — [[matryoshkaIvfRows]]' exact convention;
-    * `emb_pre` is row-intrinsic and moves verbatim). The post-merge
-    * search IS the composed replay under the reduced centroid set
-    * (r91's oracle — results are probe-dependent, so the truth is
-    * the reduced-model replay, not invariance). All composed-root
-    * readers refuse mid-merge ([[readMatryoshkaMeta]]'s guard). */
-  def mergeUnderfullCellsMrlIvf(spark: org.apache.spark.sql.SparkSession,
-                                dir: String,
-                                minRows: Long): Map[Long, Long] = {
-    val (_, metric) = readMatryoshkaMetaUnguarded(spark, dir,
-      "mergeUnderfullCellsMrlIvf", "_graft_matryoshka_ivf")
-    mergeUnderfullImpl(spark, dir, minRows, growRadii = false,
-      radiiVecCol = "", reassign = mrlIvfReassign(metric))
+    * ALL readers of the root refuse while the marker exists
+    * ([[requireNoPendingMerge]]) — a torn merge is loud, never
+    * silently duplicated or dropped rows; re-running this op (or any
+    * other actuator) completes it. Refuses when EVERY cell is
+    * underfull (nothing to merge into — retrain instead), and on a
+    * quantized root while `fresh/` exists. Returns dissolved cell id
+    * → rows it held. */
+  def mergeUnderfull(root: CellRoot, minRows: Long): Map[Long, Long] = {
+    root.requireMaintainable("mergeUnderfull")
+    mergeCells(root, minRows, doomed = None)
   }
 
-  private def mergeUnderfullImpl(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      minRows: Long, growRadii: Boolean, radiiVecCol: String,
-      reassign: (DataFrame, IvfModel) => DataFrame,
-      dataSub: String = "rows",
-      doomed: Option[Seq[Long]] = None): Map[Long, Long] = {
+  /** [[mergeUnderfull]]'s body; `doomed` names cells to dissolve
+    * explicitly (a split's dissolve-the-parent step). */
+  private def mergeCells(root: CellRoot, minRows: Long,
+                         doomed: Option[Seq[Long]]): Map[Long, Long] = {
     require(minRows > 0,
-      s"mergeUnderfullCells: minRows must be positive, got $minRows")
+      s"mergeUnderfull: minRows must be positive, got $minRows")
+    val reassign = root.reassigner
+    val spark = root.spark
+    val dir = root.dir
+    val dataSub = root.dataSub
     completePendingMerge(spark, dir) // finish a torn run first
     val model = ivfModelAt(spark, dir)
-    if (growRadii) loadRangeIndex(spark, dir) // refuse non-range roots
     ensureIvfModelMarker(spark, dir, model) // refuse foreign roots
     val rows = spark.read.parquet(s"$dir/$dataSub")
     // centroid ids from the memoized array (id-sorted) — the same ids
@@ -3385,7 +3341,7 @@ object Ann {
     doomed.foreach { ds =>
       val known = centroidIds.toSet
       ds.foreach(c => require(known.contains(c),
-        s"mergeUnderfullCells: doomed cell $c is not in $dir's model"))
+        s"mergeUnderfull: doomed cell $c is not in $dir's model"))
     }
     val occ = doomed.fold(rows)(ds =>
         rows.filter(col(model.idCol).isin(ds: _*)))
@@ -3406,7 +3362,7 @@ object Ann {
       return Map.empty
     }
     require(flagged.size < centroidIds.length,
-      s"mergeUnderfullCells: every cell of $dir is below " +
+      s"mergeUnderfull: every cell of $dir is below " +
         s"minRows=$minRows — nothing to merge into; retrain the " +
         "index instead")
     val remaining = model.centroids
@@ -3425,7 +3381,7 @@ object Ann {
       // 1) receiving radii grow FIRST (inert while doomed centroids
       //    still exist — the r67 soundness order); the composed
       //    layout has no radii to grow
-      if (growRadii) {
+      root.radiiVecCol.foreach { radiiVecCol =>
         val radii = spark.read.parquet(s"$dir/radii")
         val incoming = cellRadii(moving, radiiVecCol, reduced, L2)
           .withColumnRenamed("radius", "__inc")
@@ -3454,7 +3410,7 @@ object Ann {
     flagged.map(c => c -> counts(c)).toMap
   }
 
-  /** The idempotent back half of [[mergeUnderfullCells]] — every step
+  /** The idempotent back half of [[mergeUnderfull]] — every step
     * re-runs safely, so a crash anywhere after the pending marker is
     * healed by calling the merge again: (a) centroids := current
     * minus the marker's doomed cells and the model fingerprint
@@ -3543,42 +3499,73 @@ object Ann {
     graft.io.Markers.remove(spark, dir, MergePendingMarker)
   }
 
-  /** Index-health audit of a [[writeRangeIndex]] root: per cell, the
-    * row count, stored pruning radius, and mean distance to the
-    * centroid — the rebalance signal an operator watches at 100 TB
-    * (a cell whose count or radius dwarfs the others means stale
-    * centroids: probes over-read and radii over-admit; time to
-    * retrain). Distances round per-row to `roundTo` (monotone, so
-    * max-of-rounded = rounded-stored-radius) and the mean re-rounds.
+  /** The per-cell HEALTH SIGNAL of a [[CellRoot]] — the numbers an
+    * operator feeds [[splitOverfull]] / [[mergeUnderfull]]: per cell,
+    * the row count and mean distance to the centroid in the root's own
+    * geometry (a cell whose count or mean dwarfs the others means
+    * stale centroids: probes over-read; time to split or retrain).
+    * Distances round per-row to `roundTo` and the mean re-rounds.
+    * Per family: range and dense roots measure the stored vector under
+    * the root's metric (range: L2); composed roots measure in their
+    * assignment space (cosine: the normalized `emb_full` against
+    * normalized centroids under L2); quantized roots measure what the
+    * codes can know — the distance from each row's code reconstruction
+    * to its cell center ([[QuantIndex]]`.healthDist`). A range root
+    * adds its stored pruning `radius` (read, not recomputed, so the
+    * audit also certifies what the radii actually admit).
     *
     * Scale shape: ONE pass over the rows scan — broadcast centroid
-    * join, combinable count/max/avg — and the scan reads ONLY the
-    * vector + partition columns (payload pruned; asserted by the r66
-    * gate). The radii table is read, not recomputed, so the audit
-    * also certifies what the stored radii actually admit. */
-  def indexHealth(spark: org.apache.spark.sql.SparkSession, dir: String,
-                  vecCol: String, roundTo: Int = 6): DataFrame = {
-    val (model, radii) = loadRangeIndex(spark, dir)
-    indexHealth(spark.read.parquet(s"$dir/rows"), vecCol, model, radii,
-      roundTo)
+    * join, combinable count/avg — reading ONLY the vector (or code) +
+    * partition columns; the payload is column-pruned out (the r66,
+    * r100 and r104 gates pin it). A reader seat: refuses mid-merge,
+    * and on a quantized root while `fresh/` exists (uncompacted fresh
+    * rows are invisible to a codes-only audit). */
+  def indexHealth(root: CellRoot, roundTo: Int = 6): DataFrame = {
+    val spark = root.spark
+    val dir = root.dir
+    requireNoPendingMerge(spark, dir)
+    root.requireMaintainable("indexHealth")
+    val model = ivfModelAt(spark, dir)
+    val radii = root match {
+      case _: CellRoot.Range => Some(spark.read.parquet(s"$dir/radii"))
+      case _ =>
+        // validates against an existing pin; on a never-pinned root
+        // this ADOPTS the fingerprint of the root's own on-disk
+        // centroids — a one-time metadata write on first read,
+        // pinning exactly the state being audited
+        ensureIvfModelMarker(spark, dir, model)
+        None
+    }
+    val perCell = cellMeans(root.healthDist(
+      spark.read.parquet(s"$dir/${root.dataSub}"), model, roundTo),
+      model.idCol, roundTo)
+    radii.fold(perCell)(withRadii(perCell, _, model.idCol, roundTo))
   }
 
-  /** [[indexHealth]] over an already-loaded cell-partitioned rows scan
+  /** A range audit over an already-loaded cell-partitioned rows scan
     * + model + radii (the ScaleSmoke shape: audit a layout some other
-    * stage already has open, without re-reading markers). */
-  def indexHealth(rows: DataFrame, vecCol: String, model: IvfModel,
-                  radii: DataFrame, roundTo: Int): DataFrame =
-    rows.select(col(model.idCol), col(vecCol))
-      .join(broadcast(model.centroids), model.idCol)
-      .withColumn("__d", round(L2.dist(col(vecCol).cast("array<double>"),
-        col(model.vecCol)), roundTo))
-      .groupBy(col(model.idCol))
+    * stage already has open, without re-reading markers): per cell
+    * (centroid_id, n_rows, radius, mean_dist). */
+  private[graft] def rangeHealth(rows: DataFrame, vecCol: String,
+                                 model: IvfModel, radii: DataFrame,
+                                 roundTo: Int): DataFrame =
+    withRadii(cellMeans(centroidDist(rows.select(col(model.idCol),
+        col(vecCol)), vecCol, model, L2, roundTo), model.idCol, roundTo),
+      radii, model.idCol, roundTo)
+
+  /** Per-cell means plus the stored radius, rounded like the means. */
+  private def withRadii(perCell: DataFrame, radii: DataFrame,
+                        idCol: String, roundTo: Int): DataFrame =
+    perCell.join(radii.select(col(idCol),
+        round(col("radius"), roundTo).as("radius")), idCol)
+      .select(col(idCol), col("n_rows"), col("radius"), col("mean_dist"))
+
+  /** (cell, n_rows, mean_dist) from per-row `__d` distances. */
+  private def cellMeans(withD: DataFrame, idCol: String,
+                        roundTo: Int): DataFrame =
+    withD.groupBy(col(idCol))
       .agg(count(lit(1)).as("n_rows"),
         round(avg(col("__d")), roundTo).as("mean_dist"))
-      .join(radii.select(col(model.idCol),
-        round(col("radius"), roundTo).as("radius")), model.idCol)
-      .select(col(model.idCol), col("n_rows"), col("radius"),
-        col("mean_dist"))
 
   /** Load a [[writeRangeIndex]] layout: (model, radii). */
   def loadRangeIndex(spark: org.apache.spark.sql.SparkSession,
@@ -4212,7 +4199,7 @@ object Ann {
     private[ops] def writeSide(dir: String): Unit
     /** (cell, `__d`) per at-rest row: the distance between the row's
       * code reconstruction and its cell centroid, reading the code
-      * columns only ([[indexHealthQuantized]]'s per-row input). */
+      * columns only ([[indexHealth]]'s per-row input). */
     private[ops] def healthDist(atRest: DataFrame, roundTo: Int): DataFrame
     /** A persisted copy for a per-process memo, and its release. */
     private[graft] def persisted(): QuantIndex = withRows(rows.persist())
@@ -4907,9 +4894,9 @@ object Ann {
     index.writeSide(dir)
   }
 
-  /** Load a [[writeQuantized]] root (family from [[quantizedRootFamily]];
+  /** Load a [[writeQuantized]] root (family from [[detectQuantized]];
     * codes unpack at scan time). Refuses mid-merge
-    * ([[mergeUnderfullCellsQuantized]]'s torn window) and a dir that is
+    * ([[mergeUnderfull]]'s torn window) and a dir that is
     * no quantized root. */
   def loadQuantized(spark: org.apache.spark.sql.SparkSession,
                     dir: String): QuantIndex = loadPinned(spark, dir)._1
@@ -4991,7 +4978,7 @@ object Ann {
     * its geometry marker pins. `ensure*Root` (PQ: also
     * [[writeQuantized]]) writes the marker; a root written by
     * [[writeQuantized]] alone self-describes by layout instead, as
-    * [[isRangeRoot]]'s do — SQ keeps its `bounds/` side table, 1-bit
+    * range roots do — SQ keeps its `bounds/` side table, 1-bit
     * only `quantized/` codes — and pins no flag. None for any other
     * dir. */
   private def detectQuantized(spark: org.apache.spark.sql.SparkSession,
@@ -5011,14 +4998,6 @@ object Ann {
         else None
       }
 
-  /** The quantized family of the root at `dir` (marker or layout —
-    * [[detectQuantized]]), None when it is none of the three: the
-    * self-description the engine's attach and maintenance seats and
-    * the streaming start-time refusal dispatch on. */
-  def quantizedRootFamily(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): Option[QuantFamily] =
-    detectQuantized(spark, dir).map(_._1)
-
   /** Family + pinned spherical flag of a MARKED quantized root —
     * refuses an unmarked dir (an unpinned root must never silently
     * become a fresh-rows root or a maintenance target: adopt-on-append
@@ -5026,24 +5005,18 @@ object Ann {
     * mid-merge. */
   private[graft] def quantizedFamily(spark: org.apache.spark.sql.SparkSession,
                                      dir: String): (QuantFamily, Boolean) = {
-    // every fresh-family entry point (append/compact/delete/health)
-    // funnels through this detect — the ONE guard seat for the
-    // quantized torn-merge refusal (loadQuantized covers searches)
+    // every fresh-family entry point (append/compact/delete) funnels
+    // through this detect — the ONE guard seat for the quantized
+    // torn-merge refusal (loadQuantized covers searches)
     requireNoPendingMerge(spark, dir)
-    quantizedFamilyUnguarded(spark, dir)
+    detectQuantized(spark, dir).collect { case (f, Some(s)) => (f, s) }
+      .getOrElse(throw unpinnedQuantized(dir))
   }
 
-  /** [[quantizedFamily]] without the torn-merge refusal — for
-    * [[mergeUnderfullCellsQuantized]], which runs precisely when the
-    * guarded readers refuse. */
-  private def quantizedFamilyUnguarded(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String): (QuantFamily, Boolean) =
-    detectQuantized(spark, dir).collect { case (f, Some(s)) => (f, s) }
-      .getOrElse(throw new IllegalStateException(
-        s"$dir carries no SQ/PQ/1-bit geometry marker — not a pinned " +
-          "quantized root; pin the layout at build time " +
-          "(writeQuantized + ensure*Root)"))
+  private def unpinnedQuantized(dir: String) = new IllegalStateException(
+    s"$dir carries no SQ/PQ/1-bit geometry marker — not a pinned " +
+      "quantized root; pin the layout at build time " +
+      "(writeQuantized + ensure*Root)")
 
   private def freshPath(dir: String) = s"$dir/fresh"
 
@@ -5079,7 +5052,7 @@ object Ann {
     *
     * SPLITS INVALIDATE THE TOUCHED-CELLS PROBE (the
     * [[appendMatryoshkaIvfIdempotent]] hazard, quantized form): a
-    * [[splitOverfullCellsQuantized]] between a batch's original
+    * [[splitOverfull]] between a batch's original
     * append and its redelivery can strand a neighboring cell's
     * boundary row off today's argmin, and the default probe would
     * miss that copy. `probeAllCells = true` switches BOTH probes
@@ -5384,127 +5357,6 @@ object Ann {
     if (freshN > maxFreshRatio * mainN)
       Some(compactQuantizedFresh(spark, dir, idCol, vecCol))
     else None
-  }
-
-  /** MERGE underfull cells of a QUANTIZED root (SQ / PQ / 1-bit) —
-    * [[mergeUnderfullCells]]' member for the compressed families,
-    * closing the r66 health signal's last coverage gap: S6 delete
-    * maintenance drains their cells exactly like the range family's
-    * (the r84 story), and nothing dissolved them, so probe arithmetic
-    * and small-file overhead grew with every delete cycle. Same
-    * resumable-commit protocol (shared impl — the marker carries the
-    * family's data subdir so any entry point can complete a torn
-    * run); the family-specific step is the RE-ENCODE: a doomed cell's
-    * rows strip their stale codes and re-encode under the reduced
-    * model's FROZEN artifacts — SQ against the receiving cell's
-    * stored bounds, PQ against the global codebooks, 1-bit against
-    * the receiving centroid — via the exact
-    * [[compactQuantizedFresh]] transforms, so moved codes are
-    * bit-identical to what a fresh-append-then-compact of the same
-    * rows would produce (spherical roots re-assign normalized, raw
-    * vecCol stays for the exact re-rank; bounds/codebooks stay frozen
-    * — the ensure*Root digest pins survive). ALL quantized readers,
-    * appends and compactions refuse mid-merge ([[loadQuantized]] +
-    * [[quantizedFamily]] seats;
-    * cell-dir deletes refuse through [[deleteStoredImpl]]'s parent
-    * guard). Refuses while a `fresh/` side table exists (compact
-    * first — a merge would orphan fresh rows homed in doomed cells).
-    * Precision note: a moved row's vector can fall outside its
-    * receiving cell's frozen SQ bounds (codes clamp), degrading its
-    * PHASE-1 estimate only — the exact re-rank is on raw vectors, so
-    * recall at the family's usual refine margins is what the r93 gate
-    * pins against the index-free oracle. Returns dissolved cell id →
-    * rows it held. */
-  /** SPLIT overfull cells of a QUANTIZED root (SQ / PQ / 1-bit) —
-    * [[splitOverfullCells]]' member for the compressed families,
-    * completing the actuator matrix (every cell-partitioned layout
-    * now has both a split and a merge): compaction folds streamed
-    * appends into hot cells the same way appends grow range roots,
-    * and round 15's split doc declared these layouts rebuild-only.
-    *
-    * Construction: ADD the sub-centroids first, then DISSOLVE the
-    * parent through the quantized merge protocol. A flagged cell's
-    * rows locally retrain (k=2, in the normalized space for
-    * spherical roots — sub-centroids store UNIT vectors, because
-    * quantized readers and assigners use disk centroids verbatim,
-    * unlike the normalize-on-read range/composed families), the
-    * sub-centroids and (for SQ) the parent's bounds rows —
-    * DUPLICATED per sub-cell, keeping every inherited code
-    * decodable — land while the sub-cells are still empty (an empty
-    * cell wastes a probe; it cannot be wrong), the marker re-pins,
-    * and [[mergeQuantizedImpl]] dissolves the parents: every row
-    * re-homes to its TRUE GLOBAL argmin among the surviving cells
-    * and re-encodes under its receiver's frozen artifacts. This is
-    * the invariant that makes a local-argmin split UNSOUND here: the
-    * quantized appends' geometry probe ([[verifyQuantizedGeometry]])
-    * and every probed search assume `row lives in its global argmin
-    * cell`, and a row assigned only between the two sub-centroids
-    * can be globally closer to a third cell. Rows that stay in the
-    * sub-cells re-encode under the INHERITED bounds, so SQ codes
-    * remain bit-identical (spec-pinned); crash-safety, torn-state
-    * refusals and re-run healing are the merge protocol's. A crash
-    * between the centroid add and the dissolve leaves live parents
-    * plus empty sub-cells — sound; the empty orphans dissolve on the
-    * next merge cadence. Refuses while `fresh/` exists (fresh rows
-    * partitioned under a dissolved cell would silently go dark) and
-    * mid-merge. Returns (oldCell → new sub-cell ids). */
-  def splitOverfullCellsQuantized(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      vecCol: String, maxRows: Long,
-      iters: Int = 2): Map[Long, Seq[Long]] = {
-    val (family, spherical) = quantizedFamilyUnguarded(spark, dir)
-    require(!freshExists(spark, dir),
-      s"splitOverfullCellsQuantized: $dir carries a fresh/ side " +
-        "table — compact it first (compactQuantizedFresh); fresh " +
-        "rows partitioned under a dissolved cell would silently go " +
-        "dark to every fresh-aware search")
-    val (prep, spaceCol) =
-      if (spherical)
-        ((df: DataFrame) => withNormalized(df, vecCol, "__nv"), "__nv")
-      else (identity[DataFrame] _, vecCol)
-    splitViaDissolve(spark, dir, maxRows, iters,
-      dataSub = family.dataSub, growRadii = false, prep = prep,
-      spaceCol = spaceCol,
-      // spherical sub-centroids store UNIT (disk-verbatim readers)
-      centroidForm = if (spherical) l2Normalize else identity,
-      preDissolve = family.inheritSide(spark, dir, _),
-      dissolve = parents => {
-        mergeQuantizedImpl(spark, dir, vecCol, minRows = 1L,
-          doomed = Some(parents), who = "splitOverfullCellsQuantized")
-        ()
-      })
-  }
-
-  def mergeUnderfullCellsQuantized(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      vecCol: String, minRows: Long): Map[Long, Long] =
-    mergeQuantizedImpl(spark, dir, vecCol, minRows, doomed = None,
-      "mergeUnderfullCellsQuantized")
-
-  private def mergeQuantizedImpl(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      vecCol: String, minRows: Long, doomed: Option[Seq[Long]],
-      who: String): Map[Long, Long] = {
-    val (family, spherical) = quantizedFamilyUnguarded(spark, dir)
-    require(!freshExists(spark, dir),
-      s"$who: $dir carries a fresh/ side " +
-        "table — compact it first (compactQuantizedFresh); a merge " +
-        "would orphan fresh rows homed in doomed cells")
-    val metric = if (spherical) Cosine else (L2: Metric)
-    val stored = spark.read.parquet(s"$dir/${family.dataSub}")
-    mergeUnderfullImpl(spark, dir, minRows, growRadii = false,
-      radiiVecCol = "", dataSub = family.dataSub, doomed = doomed,
-      reassign = (dropped, reduced) => {
-        val raw = family.codeCols.foldLeft(dropped)(_ drop _)
-        val encoded = family.artifacts(spark, dir, reduced)
-          .encode(raw, vecCol, metric)
-        // guard + order-normalize against the stored footer: a
-        // drifted encode transform must fail HERE, not as a
-        // nondeterministic mixed-schema read at query time
-        requireAppendSchema(stored.schema, encoded.schema,
-          Set("centroid_id"), who)
-        encoded.select(stored.columns.map(col): _*)
-      })
   }
 
   /** Delete ids from a quantized root's FRESH side table (no-op when

@@ -508,7 +508,7 @@ object Binding {
     * rewrite's entire justification is "never changes results" (the
     * injected cell filter removes provably-empty directories only),
     * but a frozen [[Range]] snapshot taken before an out-of-band
-    * [[Ann.splitOverfullCells]] keeps admitting the DISSOLVED
+    * [[Ann.splitOverfull]] keeps admitting the DISSOLVED
     * parent's cell id — whose directory no longer exists — while the
     * new sub-cells holding its rows are absent from the frozen list,
     * so the "provably-empty" filter prunes live rows: silent row
@@ -532,7 +532,8 @@ object Binding {
                 owner: String = ""): Range = {
     // typed refusal before the loader's raw path error — the triad's
     // discipline: a mis-pointed dir refuses by contract, not accident
-    require(Ann.isRangeRoot(spark, dir),
+    require(Ann.detectCellRoot(spark, dir, Some(vecCol))
+        .exists(_.isInstanceOf[Ann.CellRoot.Range]),
       s"registerRangeRoot: $dir has no radii side table — not a " +
         "writeRangeIndex root (register a dense root via " +
         "registerDenseRoot, a quantized root via registerQuantizedRoot)")
@@ -562,7 +563,8 @@ object Binding {
   def rangeRootDistributed(spark: SparkSession, dir: String,
                            vecCol: String,
                            owner: String = ""): RangeDist = {
-    require(Ann.isRangeRoot(spark, dir),
+    require(Ann.detectCellRoot(spark, dir, Some(vecCol))
+        .exists(_.isInstanceOf[Ann.CellRoot.Range]),
       s"registerRangeRootDistributed: $dir has no radii side table — " +
         "not a writeRangeIndex root")
     Ann.loadRangeIndex(spark, dir) // refuse torn dirs at install

@@ -1206,7 +1206,7 @@ object Events {
 
   /** s29: threshold-triggered OVERFULL-CELL SPLIT on the streamed
     * range-root maintenance path — the s28 lifecycle closure for the
-    * cell-growth families: [[graft.ops.Ann.splitOverfullCells]] (r69)
+    * cell-growth families: [[graft.ops.Ann.splitOverfull]] (r69)
     * was the actuator for the r66 health signal, but nothing
     * triggered it, so a streamed root's hot cells grew until probes
     * over-read. s19's chain runs with

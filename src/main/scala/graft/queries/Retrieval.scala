@@ -1784,7 +1784,7 @@ object Retrieval {
   }
 
   /** r98: SPLIT of an overfull cell on a COSINE dense root
-    * ([[Ann.splitOverfullCellsDense]]) — the round-17 closure of the
+    * ([[Ann.splitOverfull]]) — the round-17 closure of the
     * actuator matrix: the plain cell-partitioned layout
     * `ingestIvfAppend` grows was the last family whose hot cells
     * nothing bounded (VERDICT r16 #1). The full corpus lands as a
@@ -1810,7 +1810,7 @@ object Retrieval {
     val maxOcc = assigned.groupBy(col("centroid_id")).count()
       .agg(max(col("count"))).head().getLong(0)
     val maxRows = math.max(1L, maxOcc - 1)
-    val split = Ann.splitOverfullCellsDense(s, dir, maxRows)
+    val split = Ann.splitOverfull(Ann.cellRoot(s, dir, None), maxRows)
     require(split.nonEmpty, "r98 vacuous: no cell split")
     val cellsNow = s.read.parquet(s"$dir/centroids").count()
     require(cellsNow > lists,
@@ -1823,7 +1823,7 @@ object Retrieval {
   }
 
   /** r99: MERGE of underfull cells on a dense root
-    * ([[Ann.mergeUnderfullCellsDense]]) — r90's drain-and-dissolve
+    * ([[Ann.mergeUnderfull]]) — r90's drain-and-dissolve
     * recipe on the fourth family: an S6 delete drains assigned cell
     * 4 to a third of its size, the half-average threshold flags it,
     * its centroid leaves the root's OWN on-disk model (the flat
@@ -1848,7 +1848,7 @@ object Retrieval {
     require(removed > 0, "r99 vacuous: the S6 delete removed nothing")
     val minRows = math.max(3L,
       s.read.parquet(s"$dir/rows").count() / lists / 2)
-    val merged = Ann.mergeUnderfullCellsDense(s, dir, minRows)
+    val merged = Ann.mergeUnderfull(Ann.cellRoot(s, dir, None), minRows)
     require(merged.contains(4L),
       s"r99: the drained cell 4 did not merge, got ${merged.keySet}")
     require(!new java.io.File(s"$dir/rows/centroid_id=4").exists(),
@@ -1867,7 +1867,7 @@ object Retrieval {
   }
 
   /** r100: the r66 INDEX-HEALTH signal on a COSINE dense root
-    * ([[Ann.indexHealthDense]]) — the audit an operator feeds the
+    * ([[Ann.indexHealth]]) — the audit an operator feeds the
     * dense split/merge actuators (r98/r99), on the family's spherical
     * arm: per cell, row count and mean COSINE distance to the
     * root-owned centroid (no radii — the dense layout has none to
@@ -1883,7 +1883,7 @@ object Retrieval {
       .createTempDirectory("graft_dense_health").toString
     Ann.writeDenseRoot(Ann.assign(e, "embedding", model, Ann.Cosine),
       "embedding", model, Ann.Cosine, dir)
-    val df = Ann.indexHealthDense(s, dir).orderBy("centroid_id")
+    val df = Ann.indexHealth(Ann.cellRoot(s, dir, None)).orderBy("centroid_id")
     val phys = df.queryExecution.executedPlan.toString
     require(phys.contains("ReadSchema") && !phys.contains("vec_id") &&
         !phys.contains("label"),
@@ -1936,7 +1936,7 @@ object Retrieval {
         .orderBy(col("vec_id")).head()
       graft.plans.AnnIndex.register(graft.plans.Binding.denseRoot(s, dir,
         probes = 4096, owner = "r101"))
-      val splits = Ann.splitOverfullCellsDense(s, dir,
+      val splits = Ann.splitOverfull(Ann.cellRoot(s, dir, None),
         math.max(1L, maxOcc - 1))
       require(splits.contains(hotCell),
         s"r101 vacuous: hottest cell $hotCell did not split " +
@@ -1967,7 +1967,7 @@ object Retrieval {
   }
 
   /** r102: the r66 INDEX-HEALTH signal on the COMPOSED matryoshka-IVF
-    * root ([[Ann.indexHealthMrlIvf]]) — the north-star layout gained
+    * root ([[Ann.indexHealth]]) — the north-star layout gained
     * split/merge actuators in rounds 15-16 but exposed no
     * operator-visible per-cell numbers to justify pulling them; this
     * audit reports count + mean distance in the root's ASSIGNMENT
@@ -1983,7 +1983,7 @@ object Retrieval {
       .createTempDirectory("graft_mrl_health").toString
     Ann.writeMatryoshkaIvf(e, "vec_id", "embedding", dims = 8, model,
       dir)
-    val df = Ann.indexHealthMrlIvf(s, dir).orderBy("centroid_id")
+    val df = Ann.indexHealth(Ann.cellRoot(s, dir, None)).orderBy("centroid_id")
     val phys = df.queryExecution.executedPlan.toString
     require(phys.contains("ReadSchema") && !phys.contains("emb_pre") &&
         !phys.contains("vec_id"),
@@ -1998,7 +1998,7 @@ object Retrieval {
     * (the injected cell filter removes provably-empty directories
     * only), but a frozen r62-style [[graft.plans.Binding.Range]]
     * snapshot taken before an out-of-band
-    * [[Ann.splitOverfullCells]] keeps admitting the dissolved
+    * [[Ann.splitOverfull]] keeps admitting the dissolved
     * parent's cell id — whose directory is GONE — while the live
     * sub-cells holding its rows are absent from the frozen list:
     * silent row LOSS, not merely recall loss. The root-backed
@@ -2072,7 +2072,7 @@ object Retrieval {
           col("label").isin(1, 3, 5))
         .select(col("vec_id"), col("embedding").cast("array<double>"))
         .orderBy(col("vec_id")).head()
-      val splits = Ann.splitOverfullCells(s, dir, "embedding",
+      val splits = Ann.splitOverfull(Ann.cellRoot(s, dir, Some("embedding")),
         math.max(1L, hotTotal - 1))
       require(splits.contains(hotCell),
         s"r103 vacuous: hottest label-filtered cell $hotCell did not " +
@@ -2098,7 +2098,7 @@ object Retrieval {
   }
 
   /** r104: the r66 INDEX-HEALTH signal on a QUANTIZED root
-    * ([[Ann.indexHealthQuantized]]) — the last signal-less family
+    * ([[Ann.indexHealth]]) — the last signal-less family
     * (range r66, dense r100, composed r102): per cell, row count and
     * mean DEQUANTIZED distance to the centroid — the main layout
     * stores codes, not vectors, so the audit measures what the index
@@ -2118,7 +2118,7 @@ object Retrieval {
       .createTempDirectory("graft_sq_health").toString
     Ann.writeQuantized(index, dir)
     Ann.ensureIvfSqRoot(s, dir, index, spherical = false)
-    val df = Ann.indexHealthQuantized(s, dir).orderBy("centroid_id")
+    val df = Ann.indexHealth(Ann.cellRoot(s, dir, None)).orderBy("centroid_id")
     val phys = df.queryExecution.executedPlan.toString
     require(phys.contains("ReadSchema") && !phys.contains("vec_id") &&
         !phys.contains("embedding") && !phys.contains("label"),
@@ -2142,7 +2142,7 @@ object Retrieval {
       .createTempDirectory("graft_sq_health_cos").toString
     Ann.writeQuantized(index, dir)
     Ann.ensureIvfSqRoot(s, dir, index, spherical = true)
-    val df = Ann.indexHealthQuantized(s, dir).orderBy("centroid_id")
+    val df = Ann.indexHealth(Ann.cellRoot(s, dir, None)).orderBy("centroid_id")
     val phys = df.queryExecution.executedPlan.toString
     require(phys.contains("ReadSchema") && !phys.contains("vec_id") &&
         !phys.contains("embedding") && !phys.contains("label"),
@@ -2203,7 +2203,7 @@ object Retrieval {
         .filter(col("centroid_id") === hotCell)
         .select(col("vec_id"), col("embedding").cast("array<double>"))
         .orderBy(col("vec_id")).head()
-      val splits = Ann.splitOverfullCellsDense(s, dir,
+      val splits = Ann.splitOverfull(Ann.cellRoot(s, dir, None),
         math.max(1L, maxOcc - 1))
       require(splits.contains(hotCell),
         s"r112 vacuous: hottest cell $hotCell did not split " +
@@ -2301,7 +2301,7 @@ object Retrieval {
           col("label").isin(1, 3, 5))
         .select(col("vec_id"), col("embedding").cast("array<double>"))
         .orderBy(col("vec_id")).head()
-      val splits = Ann.splitOverfullCells(s, dir, "embedding",
+      val splits = Ann.splitOverfull(Ann.cellRoot(s, dir, Some("embedding")),
         math.max(1L, hotTotal - 1))
       require(splits.contains(hotCell),
         s"r113 vacuous: cell $hotCell did not split (${splits.keySet})")
@@ -2332,7 +2332,7 @@ object Retrieval {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_pq_health_g").toString
     Ann.writeQuantized(index, dir)
-    val df = Ann.indexHealthQuantized(s, dir).orderBy("centroid_id")
+    val df = Ann.indexHealth(Ann.cellRoot(s, dir, None)).orderBy("centroid_id")
     val phys = df.queryExecution.executedPlan.toString
     require(phys.contains("ReadSchema") && !phys.contains("vec_id") &&
         !phys.contains("embedding") && !phys.contains("label"),
@@ -2357,7 +2357,7 @@ object Retrieval {
       .createTempDirectory("graft_bitq_health_g").toString
     Ann.writeQuantized(index, dir)
     Ann.ensureIvfBitqRoot(s, dir, model, spherical = false)
-    val df = Ann.indexHealthQuantized(s, dir).orderBy("centroid_id")
+    val df = Ann.indexHealth(Ann.cellRoot(s, dir, None)).orderBy("centroid_id")
     val phys = df.queryExecution.executedPlan.toString
     require(phys.contains("ReadSchema") && !phys.contains("vec_id") &&
         !phys.contains("embedding") && !phys.contains("label") &&
@@ -2371,7 +2371,7 @@ object Retrieval {
     * recipe for the SQ/PQ/1-bit family: the frozen r16-style
     * `() => index` [[graft.plans.Binding.Quantized]] form holds
     * the INSTALL-TIME FILE LISTING, so after an out-of-band
-    * [[Ann.splitOverfullCellsQuantized]] the dissolved parent's
+    * [[Ann.splitOverfull]] the dissolved parent's
     * files are gone (the probed scan dies on FileNotFound at best,
     * serves stale bytes at worst); the root-backed registration
     * re-loads the index artifacts keyed by the model-fingerprint
@@ -2420,7 +2420,7 @@ object Retrieval {
         .filter(col("centroid_id") === hotCell)
         .select(col("vec_id"), col("embedding").cast("array<double>"))
         .orderBy(col("vec_id")).head()
-      val splits = Ann.splitOverfullCellsQuantized(s, dir, "embedding",
+      val splits = Ann.splitOverfull(Ann.cellRoot(s, dir, Some("embedding")),
         math.max(1L, maxOcc - 1))
       require(splits.contains(hotCell),
         s"r105 vacuous: hottest cell $hotCell did not split " +
@@ -2483,7 +2483,7 @@ object Retrieval {
     * now resolves centroids through a fingerprint-keyed cache
     * (collected once per maintenance re-pin, not once per rewrite —
     * and refusing torn roots through [[Ann.loadMrlIvfModel]]), so an
-    * out-of-band [[Ann.splitOverfullCellsMrlIvf]] reaches
+    * out-of-band [[Ann.splitOverfull]] reaches
     * declarative probe selection with no re-install. In-gate pins:
     * LeftSemi fires, and a probes=1 declarative query at a
     * dissolved-parent row's own vector returns that row (a frozen
@@ -2528,7 +2528,7 @@ object Retrieval {
         .filter(col("centroid_id").cast("long") === hotCell)
         .select(col("vec_id"), col("emb_full").cast("array<double>"))
         .orderBy(col("vec_id")).head()
-      val splits = Ann.splitOverfullCellsMrlIvf(s, dir,
+      val splits = Ann.splitOverfull(Ann.cellRoot(s, dir, None),
         math.max(1L, maxOcc - 1))
       require(splits.contains(hotCell),
         s"r106 vacuous: hottest cell $hotCell did not split " +
@@ -2945,7 +2945,7 @@ object Retrieval {
   }
 
   /** r91: MERGE of underfull cells on the COMPOSED matryoshka-IVF
-    * root ([[Ann.mergeUnderfullCellsMrlIvf]]) — r90's actuator
+    * root ([[Ann.mergeUnderfull]]) — r90's actuator
     * reaches the north-star layout: delete maintenance drains its
     * cells exactly like the range family's. An S6 delete drains
     * ASSIGNED cell 4 to its `vec_id % 3` survivors, the threshold is
@@ -2975,7 +2975,7 @@ object Retrieval {
     require(removed > 0, "r91 vacuous: the S6 delete removed nothing")
     val drained = s.read.parquet(s"$dir/rows")
       .filter(col("centroid_id") === 4).count()
-    val merged = Ann.mergeUnderfullCellsMrlIvf(s, dir, drained + 1)
+    val merged = Ann.mergeUnderfull(Ann.cellRoot(s, dir, None), drained + 1)
     require(merged.contains(4L),
       s"r91: the drained cell 4 did not merge, got ${merged.keySet}")
     require(!new java.io.File(s"$dir/rows/centroid_id=4").exists(),
@@ -3259,7 +3259,7 @@ object Retrieval {
   }
 
   /** r69: cell split — the ACTUATOR for r66's retrain signal
-    * ([[Ann.splitOverfullCells]]): a deliberately coarse 2-cell model
+    * ([[Ann.splitOverfull]]): a deliberately coarse 2-cell model
     * (label parity) leaves both cells ~10× overfull; the operator
     * locally retrains each into sub-cells, replacing ONLY their
     * directories (sibling-staged, radii-before-centroids commit,
@@ -3277,13 +3277,13 @@ object Retrieval {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_range_split").toString
     Ann.writeRangeIndex(assigned, "embedding", model, dir)
-    val beforeMax = Ann.indexHealth(s, dir, "embedding")
+    val beforeMax = Ann.indexHealth(Ann.cellRoot(s, dir, Some("embedding")))
       .agg(max(col("n_rows"))).head().getLong(0)
-    val splits = Ann.splitOverfullCells(s, dir, "embedding",
+    val splits = Ann.splitOverfull(Ann.cellRoot(s, dir, Some("embedding")),
       maxRows = 150L)
     require(splits.nonEmpty,
       "r69 is vacuous: no cell was overfull — the split never fired")
-    val afterMax = Ann.indexHealth(s, dir, "embedding")
+    val afterMax = Ann.indexHealth(Ann.cellRoot(s, dir, Some("embedding")))
       .agg(max(col("n_rows"))).head().getLong(0)
     require(afterMax < beforeMax,
       s"r69: split did not reduce max occupancy ($beforeMax -> " +
@@ -3299,7 +3299,7 @@ object Retrieval {
     df
   }
 
-  /** r90: MERGE of underfull cells ([[Ann.mergeUnderfullCells]]) —
+  /** r90: MERGE of underfull cells ([[Ann.mergeUnderfull]]) —
     * the complement actuator to r69's split for the r66 health
     * signal's other tail: an S6 delete drains ASSIGNED cell 4 to a
     * third of its size (cell membership, not labels — the synthetic
@@ -3333,10 +3333,12 @@ object Retrieval {
     // with it at small SFs, which only strengthens the oracle pin
     val minRows = math.max(3L,
       s.read.parquet(s"$dir/rows").count() / lists / 2)
-    val merged = Ann.mergeUnderfullCells(s, dir, "embedding", minRows)
+    val merged = Ann.mergeUnderfull(
+      Ann.cellRoot(s, dir, Some("embedding")), minRows)
     require(merged.contains(4L),
       s"r90: the drained cell 4 did not merge, got ${merged.keySet}")
-    val cellsNow = Ann.indexHealth(s, dir, "embedding").count()
+    val cellsNow = Ann.indexHealth(
+      Ann.cellRoot(s, dir, Some("embedding"))).count()
     require(cellsNow == lists - merged.size,
       s"r90: merge left $cellsNow cells, wanted ${lists - merged.size}")
     require(!new java.io.File(s"$dir/rows/centroid_id=4").exists(),
@@ -3351,7 +3353,7 @@ object Retrieval {
   }
 
   /** r93: MERGE of underfull cells on a QUANTIZED root
-    * ([[Ann.mergeUnderfullCellsQuantized]]) — the r66 health
+    * ([[Ann.mergeUnderfull]]) — the r66 health
     * actuators reach the compressed families: S6 deletes drain SQ/PQ/
     * 1-bit cells exactly like the range family's (r84's own story),
     * and round 15 left them with neither split nor merge. The r12 SQ
@@ -3387,8 +3389,8 @@ object Retrieval {
     require(removed > 0, "r93 vacuous: the S6 delete removed nothing")
     val minRows = math.max(3L,
       s.read.parquet(s"$dir/quantized").count() / lists / 2)
-    val merged = Ann.mergeUnderfullCellsQuantized(s, dir,
-      "embedding", minRows)
+    val merged = Ann.mergeUnderfull(
+      Ann.cellRoot(s, dir, Some("embedding")), minRows)
     require(merged.contains(4L),
       s"r93: the drained cell 4 did not merge, got ${merged.keySet}")
     require(!new java.io.File(s"$dir/quantized/centroid_id=4").exists(),
@@ -3413,7 +3415,7 @@ object Retrieval {
   }
 
   /** r95: SPLIT of an overfull cell on a QUANTIZED root
-    * ([[Ann.splitOverfullCellsQuantized]]) — r93's complement,
+    * ([[Ann.splitOverfull]]) — r93's complement,
     * completing the actuator matrix: every cell-partitioned layout
     * now has both directions. On the SQ family the split is
     * code-preserving BY CONSTRUCTION (sub-cells inherit the parent's
@@ -3437,8 +3439,9 @@ object Retrieval {
     val maxOcc = s.read.parquet(s"$dir/quantized")
       .groupBy(col("centroid_id")).count()
       .agg(max(col("count"))).head().getLong(0)
-    val split = Ann.splitOverfullCellsQuantized(s, dir,
-      "embedding", maxRows = math.max(1L, maxOcc - 1))
+    val split = Ann.splitOverfull(
+      Ann.cellRoot(s, dir, Some("embedding")),
+      maxRows = math.max(1L, maxOcc - 1))
     require(split.nonEmpty, "r95: split never fired on the hot cell")
     val cellsNow = s.read.parquet(s"$dir/centroids").count()
     require(cellsNow > lists,
@@ -3504,7 +3507,7 @@ object Retrieval {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_health").toString
     Ann.writeRangeIndex(assigned, "embedding", model, dir)
-    val df = Ann.indexHealth(s, dir, "embedding")
+    val df = Ann.indexHealth(Ann.cellRoot(s, dir, Some("embedding")))
       .orderBy("centroid_id")
     val phys = df.queryExecution.executedPlan.toString
     require(phys.contains("ReadSchema") && !phys.contains("vec_id") &&

@@ -418,7 +418,7 @@ object Stream {
     // EVERY refusal runs before ANY mutation: a refused start must
     // leave the directory byte-identical — writing markers or
     // rewriting centroids/ first would pollute an unrelated batch dir
-    // (isMatryoshkaIvfRoot would then misroute it) or, worse, tear
+    // (Ann.cellRoot would then misroute it) or, worse, tear
     // down a healthy graduated root's centroids before refusing
     requireStreamableLayout(spark, s"$dir/rows")
     // the ONE marker composer (Ann.matryoshkaMarker) — this path and
@@ -528,34 +528,9 @@ object Stream {
   def ingestDenseRootAppend(vectors: DataFrame, idCol: String,
                             root: String, checkpoint: String,
                             splitMaxRows: Option[Long] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = vectors.sparkSession
-    splitMaxRows.foreach(m => require(m > 0,
-      s"ingestDenseRootAppend: splitMaxRows must be positive, got " +
-        s"$m — a non-positive threshold would flag every cell every " +
-        "batch"))
-    if (!graft.ops.Ann.isDenseRoot(spark, root))
-      throw new IllegalStateException(
-        s"ingestDenseRootAppend: $root has no dense cell-root " +
-          "marker — not a writeDenseRoot layout (graduateDenseRoot " +
-          "a flat writePartitioned dir first)")
-    // this stream owns a split policy whose swaps and markers can
-    // crash mid-batch — restart over the debris, don't wedge
-    graft.ops.Ann.healRoot(spark, root)
-    spark.read.parquet(s"$root/centroids") // loud when centroids miss
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // split policy wired ⇒ sound whole-layout id probe (the
-        // split-history marker also forces it once any split has run)
-        graft.ops.Ann.appendDenseRootIdempotent(spark, root, batch,
-          idCol, probeAllCells = splitMaxRows.isDefined)
-        splitMaxRows.foreach(m =>
-          graft.ops.Ann.splitOverfullCellsDense(spark, root, m))
-        ()
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    denseRootAppend(vectors, idCol, root, checkpoint, splitMaxRows,
+      "ingestDenseRootAppend")(_ => ())
 
   /** [[ingestDenseRootAppend]] for a MAXSIM dense root — the
     * graduated multivec layout IS a dense root over the persisted
@@ -572,20 +547,50 @@ object Stream {
                              checkpoint: String,
                              splitMaxRows: Option[Long] = None,
                              meanCol: String = "mv_mean")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = docs.sparkSession
-    if (graft.ops.Ann.isDenseRoot(spark, root)) {
-      val (metric, vc) = graft.ops.Ann.denseRootMeta(spark, root,
-        "ingestMaxsimRootAppend")
-      require(vc == meanCol && metric == graft.ops.Ann.Cosine,
-        s"ingestMaxsimRootAppend: $root is pinned to ($metric, " +
-          s"'$vc') but the maxsim family appends (Cosine, " +
-          s"'$meanCol') — one root, one geometry")
-    }
-    ingestDenseRootAppend(
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    denseRootAppend(
       docs.withColumn(meanCol,
         graft.ops.Ann.tokenMeanCol(col(mvCol), dim)),
-      idCol, root, checkpoint, splitMaxRows)
+      idCol, root, checkpoint, splitMaxRows, "ingestMaxsimRootAppend") {
+      dense =>
+        require(dense.vecCol == meanCol &&
+            dense.metric == graft.ops.Ann.Cosine,
+          s"ingestMaxsimRootAppend: $root is pinned to (${dense.metric}, " +
+            s"'${dense.vecCol}') but the maxsim family appends (Cosine, " +
+            s"'$meanCol') — one root, one geometry")
+    }
+
+  /** The dense-root seat behind [[ingestDenseRootAppend]] and
+    * [[ingestMaxsimRootAppend]]: resolve the root once, run the
+    * caller's `check` on it, heal, and stream. Every refusal comes
+    * before `writeStream`. */
+  private def denseRootAppend(vectors: DataFrame, idCol: String,
+                              root: String, checkpoint: String,
+                              splitMaxRows: Option[Long], who: String)(
+      check: graft.ops.Ann.CellRoot.Dense => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val spark = vectors.sparkSession
+    splitMaxRows.foreach(m => require(m > 0,
+      s"$who: splitMaxRows must be positive, got $m — a non-positive " +
+        "threshold would flag every cell every batch"))
+    val cells = graft.ops.Ann.cellRoot(spark, root, None)
+      .as[graft.ops.Ann.CellRoot.Dense](who)
+    check(cells)
+    // this stream owns a split policy whose swaps and markers can
+    // crash mid-batch — restart over the debris, don't wedge
+    graft.ops.Ann.healRoot(spark, root)
+    spark.read.parquet(s"$root/centroids") // loud when centroids miss
+    vectors.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        // split policy wired ⇒ sound whole-layout id probe (the
+        // split-history marker also forces it once any split has run)
+        graft.ops.Ann.appendDenseRootIdempotent(spark, root, batch,
+          idCol, probeAllCells = splitMaxRows.isDefined)
+        splitMaxRows.foreach(m => graft.ops.Ann.splitOverfull(cells, m))
+        ()
+      }
+      .start()
   }
 
   /** Continuous APPEND into a GRADUATED BM25 postings layout — the
@@ -651,7 +656,7 @@ object Stream {
     * where the north-star layout was the one whose hot cells nothing
     * bounded: after each batch's append, any cell past the threshold
     * locally retrains into sub-cells under the root's own pinned
-    * geometry ([[graft.ops.Ann.splitOverfullCellsMrlIvf]] — only its
+    * geometry ([[graft.ops.Ann.splitOverfull]] — only its
     * directories rewritten, marker re-pinned); a sub-cell still
     * overfull after one k=2 split catches the next batch's pass.
     * Malformed thresholds refuse at stream START, before any
@@ -666,10 +671,8 @@ object Stream {
       s"ingestMatryoshkaIvfAppend: splitMaxRows must be positive, " +
         s"got $m — a non-positive threshold would flag every cell " +
         "every batch"))
-    if (!graft.ops.Ann.isMatryoshkaIvfRoot(spark, root))
-      throw new IllegalStateException(
-        s"ingestMatryoshkaIvfAppend: $root has no composed matryoshka" +
-          "-IVF marker — not a graduated writeMatryoshkaIvf root")
+    val cells = graft.ops.Ann.cellRoot(spark, root, None)
+      .as[graft.ops.Ann.CellRoot.MrlIvf]("ingestMatryoshkaIvfAppend")
     // this stream owns split/merge policies whose swaps and markers
     // can crash mid-batch — restart over the debris, don't wedge
     graft.ops.Ann.healRoot(spark, root)
@@ -682,8 +685,7 @@ object Stream {
         // WHOLE layout's ids (sound), not just the touched cells
         graft.ops.Ann.appendMatryoshkaIvfIdempotent(spark, root, batch,
           idCol, vecCol, probeAllCells = splitMaxRows.isDefined)
-        splitMaxRows.foreach(m =>
-          graft.ops.Ann.splitOverfullCellsMrlIvf(spark, root, m))
+        splitMaxRows.foreach(m => graft.ops.Ann.splitOverfull(cells, m))
         ()
       }
       .start()
@@ -705,7 +707,7 @@ object Stream {
     *
     * `splitMaxRows` wires the OVERFULL-CELL SPLIT POLICY into the
     * maintenance cadence (the s28 lesson for the cell-growth
-    * families: [[graft.ops.Ann.splitOverfullCells]] existed as the
+    * families: [[graft.ops.Ann.splitOverfull]] existed as the
     * actuator for the r66 health signal, but nothing TRIGGERED it —
     * at 100 TB a streamed root's hot cells grow until probes
     * over-read and radii over-admit). After each batch's append, any
@@ -723,6 +725,8 @@ object Stream {
     splitMaxRows.foreach(m => require(m > 0,
       s"ingestRangeAppend: splitMaxRows must be positive, got $m — " +
         "a non-positive threshold would flag every cell every batch"))
+    val cells = graft.ops.Ann.cellRoot(spark, root, Some(vecCol))
+      .as[graft.ops.Ann.CellRoot.Range]("ingestRangeAppend")
     // recover EVERY torn state (crashed side-table swaps, a pending
     // cell merge) BEFORE the start-time load: this stream owns the
     // split policy, so it must be able to restart over its own crash
@@ -739,8 +743,7 @@ object Stream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         graft.ops.Ann.appendRangeIndexIdempotent(spark, root, batch,
           idCol, vecCol)
-        splitMaxRows.foreach(m =>
-          graft.ops.Ann.splitOverfullCells(spark, root, vecCol, m))
+        splitMaxRows.foreach(m => graft.ops.Ann.splitOverfull(cells, m))
         ()
       }
       .start()
@@ -763,7 +766,7 @@ object Stream {
     * + s29 lessons on the quantized lifecycle): fresh/ graduates when
     * it outgrows ratio·|main|, and immediately after a fold the
     * overfull-cell split re-partitions any cell past `splitMaxRows`
-    * ([[graft.ops.Ann.splitOverfullCellsQuantized]] — it refuses on a
+    * ([[graft.ops.Ann.splitOverfull]] — it refuses on a
     * live fresh/, so riding the compaction trigger is the only sound
     * wiring; `splitMaxRows` without `compactRatio` refuses at
     * START). */
@@ -792,10 +795,8 @@ object Stream {
     val spark = vectors.sparkSession
     // loud on a non-root BEFORE any mutation: the append itself also
     // family-detects, but a stream must refuse at start
-    if (graft.ops.Ann.quantizedRootFamily(spark, root).isEmpty)
-      throw new IllegalStateException(
-        s"ingestQuantizedFreshAppend: $root has no SQ/PQ/1-bit " +
-          "geometry marker or layout — not a quantized root")
+    val cells = graft.ops.Ann.cellRoot(spark, root, Some(vecCol))
+      .as[graft.ops.Ann.CellRoot.Quantized]("ingestQuantizedFreshAppend")
     if (graft.ops.Ann.readIvfModelMarker(spark, root).isEmpty)
       throw new IllegalStateException(
         s"ingestQuantizedFreshAppend: $root has no pinned IVF model " +
@@ -828,9 +829,7 @@ object Stream {
           // the marker re-pins, and the next batch's append assigns
           // under the post-split disk centroids.
           if (compacted.isDefined)
-            splitMaxRows.foreach(m => graft.ops.Ann
-              .splitOverfullCellsQuantized(spark, root, vecCol,
-                m))
+            splitMaxRows.foreach(m => graft.ops.Ann.splitOverfull(cells, m))
         }
         ()
       }

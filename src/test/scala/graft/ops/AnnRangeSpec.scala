@@ -406,7 +406,7 @@ class AnnRangeSpec extends SparkSpecBase {
       .select("vec_id", "dist").as[(Long, Double)].collect().toSeq
     val before = search()
     assert(before.nonEmpty)
-    val splits = Ann.splitOverfullCells(sp, dir, "embedding",
+    val splits = Ann.splitOverfull(Ann.cellRoot(sp, dir, Some("embedding")),
       maxRows = 50L)
     // exactly the fat cell split, into two fresh ids past the old max
     assert(splits.keySet.size === 1)
@@ -415,7 +415,7 @@ class AnnRangeSpec extends SparkSpecBase {
     // the search contract is INVARIANT under the re-partitioning
     assert(search() === before)
     // occupancy bounded now; the audit sees the new geometry
-    val health = Ann.indexHealth(sp, dir, "embedding")
+    val health = Ann.indexHealth(Ann.cellRoot(sp, dir, Some("embedding")))
       .select(col("centroid_id").cast("long"), col("n_rows"))
       .as[(Long, Long)].collect().toMap
     assert(health.values.max <= 50L)
@@ -430,7 +430,8 @@ class AnnRangeSpec extends SparkSpecBase {
     assert(after.filterNot(_._1 == 1000L) === before)
     // a balanced root is a no-op; an all-identical overfull cell is
     // skipped (splitting cannot separate identical vectors)
-    assert(Ann.splitOverfullCells(sp, dir, "embedding", 200L).isEmpty)
+    assert(Ann.splitOverfull(Ann.cellRoot(sp, dir, Some("embedding")),
+      200L).isEmpty)
     val same = (0L until 30L).map(i => (i, Seq(5.0, 5.0), 0))
       .toDF("vec_id", "embedding", "cluster")
     val m2 = Ann.buildIvf(same, "cluster", "embedding")
@@ -438,7 +439,8 @@ class AnnRangeSpec extends SparkSpecBase {
       .createTempDirectory("graft-range-split-same").toString
     Ann.writeRangeIndex(Ann.assign(same, "embedding", m2, Ann.L2),
       "embedding", m2, dir2)
-    assert(Ann.splitOverfullCells(sp, dir2, "embedding", 10L).isEmpty)
+    assert(Ann.splitOverfull(Ann.cellRoot(sp, dir2, Some("embedding")),
+      10L).isEmpty)
   }
 
   test("mergeUnderfullCells: drained cells dissolve, their rows " +
@@ -458,7 +460,7 @@ class AnnRangeSpec extends SparkSpecBase {
     val wantAll = Ann.rangeSearch(docs, "vec_id", "embedding",
         typedlit(Seq(0.0, 10.0)), Ann.L2, eps = 99.0)
       .select("vec_id", "dist").as[(Long, Double)].collect().toSeq
-    val merged = Ann.mergeUnderfullCells(sp, dir, "embedding",
+    val merged = Ann.mergeUnderfull(Ann.cellRoot(sp, dir, Some("embedding")),
       minRows = 5)
     assert(merged.keySet === Set(2L) && merged(2L) === 2L,
       s"expected cell 2 (2 rows) to dissolve, got $merged")
@@ -483,14 +485,15 @@ class AnnRangeSpec extends SparkSpecBase {
       .as[(Long, Long)].collect().toMap
     assert(rehomed === expect, "moved rows not in their argmin cells")
     // nothing left to merge: second run is a no-op
-    assert(Ann.mergeUnderfullCells(sp, dir, "embedding", 5).isEmpty)
+    assert(Ann.mergeUnderfull(Ann.cellRoot(sp, dir, Some("embedding")),
+      5).isEmpty)
     // post-merge append works under the root's (reduced) own model
     assert(Ann.appendRangeIndexIdempotent(sp, dir,
       Seq((500L, Seq(0.3, 0.1), 0)).toDF("vec_id", "embedding",
         "cluster"), "vec_id", "embedding") === 1L)
     // an all-underfull threshold refuses (nothing to merge into)
     intercept[IllegalArgumentException] {
-      Ann.mergeUnderfullCells(sp, dir, "embedding", 1000000L)
+      Ann.mergeUnderfull(Ann.cellRoot(sp, dir, Some("embedding")), 1000000L)
     }
 
     // --- a GENUINELY torn merge on a second root: crash right after
@@ -527,7 +530,7 @@ class AnnRangeSpec extends SparkSpecBase {
     // doomed dir gone, radii pruned, marker lifted, results exact
     // (eps 99 admits every cell, so the sim's un-grown radii — the
     // real op grows them pre-marker — don't mask the row moves)
-    Ann.mergeUnderfullCells(sp, dir2, "embedding", 5)
+    Ann.mergeUnderfull(Ann.cellRoot(sp, dir2, Some("embedding")), 5)
     val (m3, radii3) = Ann.loadRangeIndex(sp, dir2)
     assert(m3.centroids.count() === 2L && radii3.count() === 2L)
     assert(!new java.io.File(s"$dir2/rows/centroid_id=2").exists())
@@ -543,7 +546,7 @@ class AnnRangeSpec extends SparkSpecBase {
     // order bricked the root here)
     assert(new java.io.File(s"$dir2/radii")
       .renameTo(new java.io.File(s"$dir2/radii__old")))
-    Ann.mergeUnderfullCells(sp, dir2, "embedding", 5)
+    Ann.mergeUnderfull(Ann.cellRoot(sp, dir2, Some("embedding")), 5)
     assert(new java.io.File(s"$dir2/radii").exists())
     assert(!new java.io.File(s"$dir2/radii__old").exists())
     assert(Ann.rangeSearchStoredSelf(sp, dir2, "vec_id", "embedding",
@@ -753,7 +756,7 @@ class AnnRangeSpec extends SparkSpecBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-health-spec").toString
     Ann.writeRangeIndex(assigned, "embedding", model, dir)
-    val health = Ann.indexHealth(sp, dir, "embedding")
+    val health = Ann.indexHealth(Ann.cellRoot(sp, dir, Some("embedding")))
     val rows = health.collect()
       .map(r => r.getAs[Long]("centroid_id") ->
         ((r.getAs[Long]("n_rows"), r.getAs[Double]("radius"),

@@ -16,6 +16,11 @@ import org.apache.spark.sql.functions._
   * triad's typed refusal for unrecognized directories. */
 class DenseRootSpec extends SparkSpecBase {
 
+  private def isDenseRoot(sp: org.apache.spark.sql.SparkSession,
+                          dir: String): Boolean =
+    Ann.detectCellRoot(sp, dir, None)
+      .exists(_.isInstanceOf[Ann.CellRoot.Dense])
+
   // one fat two-lobed cluster + two small ones: a 3-cell model has
   // exactly one overfull cell that local retraining separates
   private def corpus(sp: org.apache.spark.sql.SparkSession) = {
@@ -45,7 +50,7 @@ class DenseRootSpec extends SparkSpecBase {
     val dir = tmp("build")
     Ann.writeDenseRoot(Ann.assign(docs, "embedding", model, Ann.L2),
       "embedding", model, Ann.L2, dir)
-    assert(Ann.isDenseRoot(sp, dir))
+    assert(isDenseRoot(sp, dir))
     val (m, metric, vecCol) = Ann.loadDenseRoot(sp, dir)
     assert(metric === Ann.L2 && vecCol === "embedding")
     assert(m.centroids.count() === model.centroids.count())
@@ -85,7 +90,7 @@ class DenseRootSpec extends SparkSpecBase {
     assert(Ann.appendDenseRootIdempotent(sp, dir, tail, "vec_id") === 0L)
     // split re-pins the fingerprint; the root's appends keep working
     // (a caller-supplied stale model would refuse here)
-    val splits = Ann.splitOverfullCellsDense(sp, dir, maxRows = 50L)
+    val splits = Ann.splitOverfull(Ann.cellRoot(sp, dir, None), maxRows = 50L)
     assert(splits.nonEmpty)
     assert(Ann.hasSplitHistory(sp, dir))
     assert(Ann.appendDenseRootIdempotent(sp, dir,
@@ -123,7 +128,7 @@ class DenseRootSpec extends SparkSpecBase {
     // default append now sees the copy and appends nothing
     val redelivered = Seq((7L, Seq(0.05, 0.1), 0))
       .toDF("vec_id", "embedding", "cluster")
-    Ann.splitOverfullCellsDense(sp, dir, maxRows = 50L) // real split
+    Ann.splitOverfull(Ann.cellRoot(sp, dir, None), maxRows = 50L) // real split
     assert(Ann.hasSplitHistory(sp, dir))
     assert(Ann.appendDenseRootIdempotent(sp, dir, redelivered,
       "vec_id") === 0L)
@@ -146,7 +151,7 @@ class DenseRootSpec extends SparkSpecBase {
         .as[(Long, Double)].collect().toSeq
     }
     val before = searchAll()
-    val splits = Ann.splitOverfullCellsDense(sp, dir, maxRows = 50L)
+    val splits = Ann.splitOverfull(Ann.cellRoot(sp, dir, None), maxRows = 50L)
     assert(splits.keySet.size === 1)
     assert(splits.values.head.size === 2)
     assert(searchAll() === before)
@@ -163,7 +168,8 @@ class DenseRootSpec extends SparkSpecBase {
         "embedding", m2, Ann.L2)
       .filter(col("__stored") =!= col("centroid_id")).count()
     assert(offArgmin === 0L)
-    assert(Ann.splitOverfullCellsDense(sp, dir, maxRows = 200L).isEmpty)
+    assert(Ann.splitOverfull(Ann.cellRoot(sp, dir, None),
+      maxRows = 200L).isEmpty)
   }
 
   test("splitOverfullCellsDense (Cosine): trains on the unit sphere, " +
@@ -201,7 +207,7 @@ class DenseRootSpec extends SparkSpecBase {
     val want = Ann.topK(docs, "vec_id", "embedding", q, Ann.Cosine, 10)
       .select("vec_id", "dist").as[(Long, Double)].collect().toSeq
     assert(before === want)
-    val splits = Ann.splitOverfullCellsDense(sp, dir, maxRows = 40L)
+    val splits = Ann.splitOverfull(Ann.cellRoot(sp, dir, None), maxRows = 40L)
     assert(splits.nonEmpty)
     assert(searchAll() === before)
     // rows at their true COSINE argmin; sub-centroids unit-norm
@@ -241,7 +247,7 @@ class DenseRootSpec extends SparkSpecBase {
         .as[(Long, Double)].collect().toSeq
     }
     val before = searchAll()
-    val merged = Ann.mergeUnderfullCellsDense(sp, dir, minRows = 5L)
+    val merged = Ann.mergeUnderfull(Ann.cellRoot(sp, dir, None), minRows = 5L)
     assert(merged.keySet.nonEmpty)
     assert(searchAll() === before)
     val (m2, _, _) = Ann.loadDenseRoot(sp, dir)
@@ -271,7 +277,7 @@ class DenseRootSpec extends SparkSpecBase {
         model, q, Ann.L2, probes = 3, k = 10)
       .select("vec_id", "dist").as[(Long, Double)].collect().toSeq
     Ann.graduateDenseRoot(sp, flat, model, Ann.L2, "embedding")
-    assert(Ann.isDenseRoot(sp, flat))
+    assert(isDenseRoot(sp, flat))
     val after = Ann.searchDenseStoredSelf(sp, flat, "vec_id", q,
         probes = 3, k = 10)
       .select("vec_id", "dist").as[(Long, Double)].collect().toSeq
@@ -312,9 +318,9 @@ class DenseRootSpec extends SparkSpecBase {
       .head.getPath
     assert(fs.rename(firstCell, new org.apache.hadoop.fs.Path(
       s"$flat/rows/${firstCell.getName}")))
-    assert(!Ann.isDenseRoot(sp, flat)) // half-moved is NOT a root yet
+    assert(!isDenseRoot(sp, flat)) // half-moved is NOT a root yet
     Ann.graduateDenseRoot(sp, flat, model, Ann.L2, "embedding")
-    assert(Ann.isDenseRoot(sp, flat))
+    assert(isDenseRoot(sp, flat))
     assert(sp.read.parquet(s"$flat/rows").count() === 100L)
     val q = typedlit(Seq(1.0, 0.0))
     val got = Ann.searchDenseStoredSelf(sp, flat, "vec_id", q,

@@ -3,8 +3,9 @@ package graft.ops
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
 
-/** The quantized per-cell health signal ([[Ann.indexHealthQuantized]])
-  * and its engine dispatch seat ([[graft.core.Engine.indexHealthFor]]).
+/** The quantized per-cell health signal ([[Ann.indexHealth]] on a
+  * quantized root) and its engine dispatch seat
+  * ([[graft.core.Engine.indexHealthFor]]).
   * The SQ arm is oracle-gated (r104); these arms cover the PQ and
   * 1-bit families from first principles, the fresh-rows refusal, and
   * the seat's typed refusal — the pieces DuckDB cannot replay cheaply
@@ -38,7 +39,7 @@ class IndexHealthQuantizedSpec extends SparkSpecBase {
     val index = Ann.buildIvfPq(df, "embedding", model, m = 4, Ann.L2)
     val dir = tmp("graft_pq_health")
     Ann.writeQuantized(index, dir)
-    val got = Ann.indexHealthQuantized(sp, dir)
+    val got = Ann.indexHealth(Ann.cellRoot(sp, dir, None))
       .collect().map(r => (r.getAs[Number]("centroid_id").longValue(),
         (r.getAs[Long]("n_rows"), r.getAs[Double]("mean_dist")))).toMap
     // first principles: reconstruct each row from the codebooks,
@@ -80,7 +81,7 @@ class IndexHealthQuantizedSpec extends SparkSpecBase {
     val dir = tmp("graft_bitq_health")
     Ann.writeQuantized(index, dir)
     Ann.ensureIvfBitqRoot(sp, dir, model, spherical = false)
-    val got = Ann.indexHealthQuantized(sp, dir)
+    val got = Ann.indexHealth(Ann.cellRoot(sp, dir, None))
       .collect().map(r => (r.getAs[Number]("centroid_id").longValue(),
         (r.getAs[Long]("n_rows"), r.getAs[Double]("mean_dist")))).toMap
     val want = index.quantized
@@ -105,7 +106,7 @@ class IndexHealthQuantizedSpec extends SparkSpecBase {
     assert(Ann.appendQuantizedFreshIdempotent(sp, dir, fresh,
       "vec_id", "embedding") == 1L)
     val err = intercept[IllegalArgumentException] {
-      Ann.indexHealthQuantized(sp, dir)
+      Ann.indexHealth(Ann.cellRoot(sp, dir, None))
     }
     assert(err.getMessage.contains("fresh"))
   }
@@ -129,7 +130,7 @@ class IndexHealthQuantizedSpec extends SparkSpecBase {
     Ann.ensureIvfSqRoot(sp, dir, index, spherical = false)
     val viaSeat = eng.indexHealthFor(td, dir).orderBy("centroid_id")
       .collect().toSeq
-    val direct = Ann.indexHealthQuantized(sp, dir)
+    val direct = Ann.indexHealth(Ann.cellRoot(sp, dir, None))
       .orderBy("centroid_id").collect().toSeq
     assert(viaSeat == direct)
     val bogus = tmp("graft_seat_unknown")
@@ -145,20 +146,21 @@ class IndexHealthQuantizedSpec extends SparkSpecBase {
     Ann.writeRangeIndex(assigned, "embedding", model, rDir)
     assert(eng.indexHealthFor(td, rDir).orderBy("centroid_id")
         .collect().toSeq ==
-      Ann.indexHealth(sp, rDir, "embedding").orderBy("centroid_id")
+      Ann.indexHealth(
+        Ann.cellRoot(sp, rDir, Some("embedding"))).orderBy("centroid_id")
         .collect().toSeq)
     val dDir = tmp("graft_seat_dense")
     Ann.writeDenseRoot(assigned, "embedding", model, Ann.L2, dDir)
     assert(eng.indexHealthFor(td, dDir).orderBy("centroid_id")
         .collect().toSeq ==
-      Ann.indexHealthDense(sp, dDir).orderBy("centroid_id")
+      Ann.indexHealth(Ann.cellRoot(sp, dDir, None)).orderBy("centroid_id")
         .collect().toSeq)
     val mDir = tmp("graft_seat_mrl")
     Ann.writeMatryoshkaIvf(df, "vec_id", "embedding", dims = 4, model,
       mDir)
     assert(eng.indexHealthFor(td, mDir).orderBy("centroid_id")
         .collect().toSeq ==
-      Ann.indexHealthMrlIvf(sp, mDir).orderBy("centroid_id")
+      Ann.indexHealth(Ann.cellRoot(sp, mDir, None)).orderBy("centroid_id")
         .collect().toSeq)
   }
 

@@ -117,7 +117,7 @@ class MrlBatchSpec extends SparkSpecBase {
       .createTempDirectory("graft-mrl-health-cos").toString
     Ann.writeMatryoshkaIvf(docs, "id", "vec", dims = 2, model, dir,
       metric = Ann.Cosine)
-    val health = Ann.indexHealthMrlIvf(sp, dir)
+    val health = Ann.indexHealth(Ann.cellRoot(sp, dir, None))
       .collect().map(r => (r.getAs[Any]("centroid_id").toString.toLong,
         r.getAs[Long]("n_rows"), r.getAs[Double]("mean_dist"))).toList
     // counts match the layout's actual occupancy per cell

@@ -97,9 +97,10 @@ class QuantFamilySpec extends SparkSpecBase {
         "by layout and searched") {
       val index = build(fam, metric)
       val dir = tmp(s"graft_qf_bare_$fam")
-      assert(Ann.quantizedRootFamily(spark, dir).isEmpty)
+      assert(Ann.detectCellRoot(spark, dir, None).isEmpty)
       Ann.writeQuantized(index, dir)
-      assert(Ann.quantizedRootFamily(spark, dir) === Some(fam))
+      assert(Ann.detectCellRoot(spark, dir, None).collect {
+        case q: Ann.CellRoot.Quantized => q.family } === Some(fam))
       assert(stored(dir, metric, qids.head) ===
         single(index, metric, qids.head))
       // only a marker pins the spherical flag: PQ's write carries one,

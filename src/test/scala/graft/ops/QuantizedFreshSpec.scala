@@ -338,8 +338,8 @@ class QuantizedFreshSpec extends SparkSpecBase {
     Ann.writeQuantized(fullSq, dir)
     Ann.ensureIvfSqRoot(sp, dir, fullSq, spherical = false)
     drain("quantized", dir)
-    val merged = Ann.mergeUnderfullCellsQuantized(sp, dir,
-      "embedding", minRows = 5)
+    val merged = Ann.mergeUnderfull(Ann.cellRoot(sp, dir, Some("embedding")),
+      minRows = 5)
     assert(merged.keySet.nonEmpty && merged.values.sum === 2L,
       s"expected the drained cell (2 rows) to dissolve, got $merged")
     assert(sp.read.parquet(s"$dir/centroids").count() === 2L)
@@ -368,8 +368,8 @@ class QuantizedFreshSpec extends SparkSpecBase {
     intercept[IllegalStateException] {
       Ann.compactQuantizedFresh(sp, dir, "vec_id", "embedding")
     }
-    assert(Ann.mergeUnderfullCellsQuantized(sp, dir,
-      "embedding", minRows = 5).isEmpty) // heals, nothing left to merge
+    assert(Ann.mergeUnderfull(Ann.cellRoot(sp, dir, Some("embedding")),
+      minRows = 5).isEmpty) // heals, nothing left to merge
     assert(ids(Ann.searchQuantizedStored(sp, dir, "vec_id", "embedding",
       typedlit(q), Ann.L2, probes = 2, k = 8, refine = 6)) == got)
     // a live fresh/ refuses the merge (compact first)
@@ -377,7 +377,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
       Seq((901L, Seq.fill(dim)(0.2), 1)).toDF(
         "vec_id", "embedding", "label"), "vec_id", "embedding") === 1L)
     val exFresh = intercept[IllegalArgumentException] {
-      Ann.mergeUnderfullCellsQuantized(sp, dir, "embedding",
+      Ann.mergeUnderfull(Ann.cellRoot(sp, dir, Some("embedding")),
         minRows = 5)
     }
     assert(exFresh.getMessage.contains("fresh"))
@@ -388,8 +388,8 @@ class QuantizedFreshSpec extends SparkSpecBase {
       .createTempDirectory("graft-pqmerge").toString
     Ann.writeQuantized(fullPq, dirPq)
     drain("encoded", dirPq)
-    assert(Ann.mergeUnderfullCellsQuantized(sp, dirPq,
-      "embedding", minRows = 5).values.sum === 2L)
+    assert(Ann.mergeUnderfull(Ann.cellRoot(sp, dirPq, Some("embedding")),
+      minRows = 5).values.sum === 2L)
     assert(Ann.searchQuantizedStored(sp, dirPq, "vec_id", "embedding",
       typedlit(q), Ann.Cosine, probes = 2, k = 42, refine = 1).count() === 42L)
     val fullBq = Ann.buildIvfBitq(df, "embedding", model, Ann.L2)
@@ -398,8 +398,8 @@ class QuantizedFreshSpec extends SparkSpecBase {
     Ann.writeQuantized(fullBq, dirBq)
     Ann.ensureIvfBitqRoot(sp, dirBq, fullBq.model, spherical = false)
     drain("quantized", dirBq)
-    assert(Ann.mergeUnderfullCellsQuantized(sp, dirBq,
-      "embedding", minRows = 5).values.sum === 2L)
+    assert(Ann.mergeUnderfull(Ann.cellRoot(sp, dirBq, Some("embedding")),
+      minRows = 5).values.sum === 2L)
     assert(Ann.searchQuantizedStored(sp, dirBq, "vec_id", "embedding",
       typedlit(q), Ann.L2, probes = 2, k = 42, refine = 1).count()
       === 42L)
@@ -427,8 +427,8 @@ class QuantizedFreshSpec extends SparkSpecBase {
         .map(r => r.getLong(0) ->
           r.getAs[Array[Byte]](1).toSeq).toMap
     val before = codeBytes()
-    val split = Ann.splitOverfullCellsQuantized(sp, dir,
-      "embedding", maxRows = 30)
+    val split = Ann.splitOverfull(Ann.cellRoot(sp, dir, Some("embedding")),
+      maxRows = 30)
     assert(split.keySet.size === 1 && split.values.head.size === 2,
       s"expected the one hot cell to split in two, got $split")
     assert(sp.read.parquet(s"$dir/centroids").count() === 2L)
@@ -458,8 +458,8 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val dirPq = java.nio.file.Files
       .createTempDirectory("graft-pqsplit").toString
     Ann.writeQuantized(fullPq, dirPq)
-    assert(Ann.splitOverfullCellsQuantized(sp, dirPq,
-      "embedding", maxRows = 30).values.head.size === 2)
+    assert(Ann.splitOverfull(Ann.cellRoot(sp, dirPq, Some("embedding")),
+      maxRows = 30).values.head.size === 2)
     val pqCents = sp.read.parquet(s"$dirPq/centroids")
       .select(col("centroid")).collect()
       .map(_.getSeq[Double](0).map(x => x * x).sum)
@@ -473,8 +473,8 @@ class QuantizedFreshSpec extends SparkSpecBase {
       .createTempDirectory("graft-bqsplit").toString
     Ann.writeQuantized(fullBq, dirBq)
     Ann.ensureIvfBitqRoot(sp, dirBq, fullBq.model, spherical = false)
-    assert(Ann.splitOverfullCellsQuantized(sp, dirBq,
-      "embedding", maxRows = 30).values.head.size === 2)
+    assert(Ann.splitOverfull(Ann.cellRoot(sp, dirBq, Some("embedding")),
+      maxRows = 30).values.head.size === 2)
     assert(ids(Ann.searchQuantizedStored(sp, dirBq, "vec_id",
       "embedding", typedlit(q), Ann.L2, probes = 2, k = 8,
       refine = 8)) == exactWant(8),
@@ -484,7 +484,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
       Seq((902L, Seq.fill(dim)(0.3), 2)).toDF(
         "vec_id", "embedding", "label"), "vec_id", "embedding") === 1L)
     val ex = intercept[IllegalArgumentException] {
-      Ann.splitOverfullCellsQuantized(sp, dir, "embedding",
+      Ann.splitOverfull(Ann.cellRoot(sp, dir, Some("embedding")),
         maxRows = 5)
     }
     assert(ex.getMessage.contains("fresh"))

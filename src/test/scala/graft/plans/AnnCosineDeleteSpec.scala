@@ -471,7 +471,7 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     assert(Ann.deleteStoredIds(sp, s"$root/rows", "vec_id",
       doomed) > 0)
     val survivorsN = sp.read.parquet(s"$root/rows").count()
-    val merged = Ann.mergeUnderfullCellsMrlIvf(sp, root, minRows = 5)
+    val merged = Ann.mergeUnderfull(Ann.cellRoot(sp, root, None), minRows = 5)
     assert(merged.keySet === Set(cell2), s"got $merged")
     val cents = sp.read.parquet(s"$root/centroids")
     assert(cents.count() === 2L)
@@ -505,7 +505,7 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
         Seq((900L, Seq(1.0, 0.1, 0.0))).toDF("vec_id", "embedding"),
         "vec_id", "embedding")
     }
-    Ann.mergeUnderfullCellsMrlIvf(sp, root, minRows = 5)
+    Ann.mergeUnderfull(Ann.cellRoot(sp, root, None), minRows = 5)
     assert(Ann.matryoshkaTopKIvf(sp, root, "vec_id", q, probes = 2,
       candidates = 20, k = 8, metric = Ann.Cosine).count() === 8L)
   }
@@ -530,7 +530,7 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     val root = Files.createTempDirectory("graft-mrl-split").toString
     Ann.writeMatryoshkaIvf(docs, "vec_id", "embedding", dims = 2,
       model, root, metric = Ann.Cosine)
-    val split = Ann.splitOverfullCellsMrlIvf(sp, root, maxRows = 30)
+    val split = Ann.splitOverfull(Ann.cellRoot(sp, root, None), maxRows = 30)
     assert(split.keySet === Set(0L) && split(0L).size === 2,
       s"expected cell 0 to split in two, got $split")
     val cents = sp.read.parquet(s"$root/centroids")
@@ -584,12 +584,13 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     Ann.writeMatryoshkaIvf(sameDir, "vec_id", "embedding", dims = 2,
       Ann.buildIvf(sameDir, "one", "embedding"), root2,
       metric = Ann.Cosine)
-    assert(Ann.splitOverfullCellsMrlIvf(sp, root2, maxRows = 5).isEmpty)
+    assert(Ann.splitOverfull(Ann.cellRoot(sp, root2, None),
+      maxRows = 5).isEmpty)
     // a torn MERGE no longer blocks the actuator: the split — like
     // every maintenance entry point — COMPLETES the pending merge at
     // entry (readers refuse; actuators heal), then proceeds
     graft.io.Markers.write(sp, root, "_graft_merge_pending", "")
-    assert(Ann.splitOverfullCellsMrlIvf(sp, root, maxRows = 1000)
+    assert(Ann.splitOverfull(Ann.cellRoot(sp, root, None), maxRows = 1000)
       .isEmpty) // nothing overfull at this threshold — entry healed
     assert(!graft.io.Markers.exists(sp, root, "_graft_merge_pending"),
       "the split entry must complete (and lift) a pending merge")
@@ -906,6 +907,47 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
         Seq(0.0, 0.0), probes = 2, candidates = 30, k = 30)
       .collect().map(_.getLong(0))
     assert(!got.contains(doomed) && got.length === 29)
+  }
+
+  test("attachStoredIndex range root: deletes rewrite rows/ (not the " +
+      "root dir); the stored range search drops the row; radii/ is " +
+      "untouched") {
+    val sp = spark
+    import sp.implicits._
+    import Spec._
+    val td = Spec.TableDef[VecRow]("rangerow", primaryKey = Some("rid"),
+      vectorDims = Map("v" -> 2))
+    val reg = new Registry(spark,
+      Files.createTempDirectory("graft-range-reg").toString)
+      .register(td)
+    reg.insert(td, (0 until 30).map { i =>
+      val c = if (i % 2 == 0) 0.0f else 100.0f
+      VecRow(i.toLong, Seq(c + i * 0.1f, i.toFloat))
+    })
+    val base = reg.table(td)
+      .withColumn("__c", (col("rid") % 2).cast("int"))
+    val model = Ann.buildIvf(base, "__c", "v")
+    val dir = Files.createTempDirectory("graft-range-attach").toString
+    Ann.writeRangeIndex(Ann.assign(reg.table(td), "v", model, Ann.L2),
+      "v", model, dir)
+    new Engine(reg).attachStoredIndex(td, dir)
+    def radii(): Set[(String, Long, Long)] =
+      new java.io.File(s"$dir/radii").listFiles()
+        .map(f => (f.getName, f.length, f.lastModified)).toSet
+    val radiiBefore = radii()
+    val doomed = 4L
+    val q = reg.table(td).filter(col("rid") === doomed)
+      .select(col("v").cast("array<double>")).head().getSeq[Double](0)
+    def hits(): Set[Long] = Ann.rangeSearchStoredSelf(sp, dir, "rid",
+        "v", typedlit(q), eps = 0.5)
+      .select("rid").as[Long].collect().toSet
+    assert(hits().contains(doomed))
+    reg.removeBy(td, Map("rid" -> doomed))
+    assert(sp.read.parquet(s"$dir/rows")
+      .filter(col("rid") === doomed).count() === 0L)
+    assert(sp.read.parquet(s"$dir/rows").count() === 29L)
+    assert(!hits().contains(doomed))
+    assert(radii() === radiiBefore)
   }
 }
 

@@ -999,6 +999,63 @@ class StreamSpec extends SparkSpecBase {
       "embedding") === 0L)
   }
 
+  test("every graduated-root seat refuses a root of another family at " +
+      "START with the resolver's typed refusal; no stream starts") {
+    val sp = spark
+    import sp.implicits._
+    implicit val sc = sp.sqlContext
+    import graft.ops.Ann
+    val base = (0L until 20L).map { i =>
+      val c = if (i % 2 == 0) 0.0 else 10.0
+      (i, Seq(c + (i % 5) * 0.02, c), (i % 2).toInt)
+    }.toDF("vec_id", "embedding", "label")
+    val model = Ann.buildIvf(base, "label", "embedding")
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val assigned = Ann.assign(base, "embedding", model, Ann.L2)
+    val range = tmp("graft-fam-range")
+    Ann.writeRangeIndex(assigned, "embedding", model, range)
+    val dense = tmp("graft-fam-dense")
+    Ann.writeDenseRoot(assigned, "embedding", model, Ann.L2, dense)
+    val mrlIvf = tmp("graft-fam-mrl")
+    Ann.writeMatryoshkaIvf(base, "vec_id", "embedding", dims = 1, model,
+      mrlIvf)
+    val quant = tmp("graft-fam-sq")
+    val sq = Ann.buildIvfSq(base, "embedding", model, Ann.L2)
+    Ann.writeQuantized(sq, quant)
+    Ann.ensureIvfSqRoot(sp, quant, sq, spherical = false)
+    val vecs = MemoryStream[(Long, Seq[Double], Int)].toDF()
+      .toDF("vec_id", "embedding", "label")
+    val docs = MemoryStream[(Long, Seq[Seq[Double]])].toDF()
+      .toDF("vec_id", "vecs")
+    val seats: Seq[(String, String => Any)] = Seq(
+      ("ingestDenseRootAppend", root => Stream.ingestDenseRootAppend(
+        vecs, "vec_id", root, tmp("graft-fam-c"))),
+      ("ingestMaxsimRootAppend", root => Stream.ingestMaxsimRootAppend(
+        docs, "vec_id", "vecs", 2, root, tmp("graft-fam-c"))),
+      ("ingestMatryoshkaIvfAppend", root =>
+        Stream.ingestMatryoshkaIvfAppend(vecs, "vec_id", "embedding",
+          root, tmp("graft-fam-c"))),
+      ("ingestRangeAppend", root => Stream.ingestRangeAppend(vecs,
+        "vec_id", "embedding", root, tmp("graft-fam-c"))),
+      ("ingestQuantizedFreshAppend", root =>
+        Stream.ingestQuantizedFreshAppend(vecs, "vec_id", "embedding",
+          root, tmp("graft-fam-c"))))
+    val others = Map(
+      "ingestDenseRootAppend" -> Seq(range, mrlIvf, quant),
+      "ingestMaxsimRootAppend" -> Seq(range, mrlIvf, quant),
+      "ingestMatryoshkaIvfAppend" -> Seq(range, dense, quant),
+      "ingestRangeAppend" -> Seq(dense, mrlIvf, quant),
+      "ingestQuantizedFreshAppend" -> Seq(range, dense, mrlIvf))
+    seats.foreach { case (who, start) =>
+      others(who).foreach { root =>
+        val e = intercept[IllegalStateException](start(root))
+        assert(e.getMessage.startsWith(s"$who: $root is a "),
+          s"$who over $root: ${e.getMessage}")
+        assert(sp.streams.active.isEmpty, s"$who started a stream")
+      }
+    }
+  }
+
   test("graduation deletes uncommitted orphan files BEFORE the commit " +
       "log, so no crash point resurrects them or strands the layout") {
     val sp = spark
