@@ -1564,8 +1564,9 @@ object ScaleSmoke {
         .localCheckpoint(true)
       val sqBatchN = sqBatch.count()
       time("append_quantized_fresh") {
-        val n = ops.Ann.appendQuantizedFreshIdempotent(spark, sqDir,
-          sqBatch, "vec_id", "embedding")
+        val n = ops.Ann.appendIdempotent(
+          ops.Ann.cellRoot(spark, sqDir, Some("embedding")),
+          sqBatch, "vec_id")
         require(n == sqBatchN, s"appended $n of $sqBatchN batch rows")
         n
       }
@@ -1583,8 +1584,9 @@ object ScaleSmoke {
           s"fresh-append probe not cell-bounded: $probedRows of " +
             s"$totalRows rows under ${touched.length} of $cellCount " +
             "touched cells")
-        require(ops.Ann.appendQuantizedFreshIdempotent(spark, sqDir,
-            sqBatch, "vec_id", "embedding") == 0L,
+        require(ops.Ann.appendIdempotent(
+          ops.Ann.cellRoot(spark, sqDir, Some("embedding")),
+          sqBatch, "vec_id") == 0L,
           "redelivered batch appended rows at 16x")
         val q = emb0.limit(1)
           .select(col("embedding").cast("array<double>"))
@@ -1619,8 +1621,9 @@ object ScaleSmoke {
         .createTempDirectory("graft_smoke_sqfresh").toString
       ops.Ann.writeQuantized(sfIdx, sfDir)
       ops.Ann.ensureIvfSqRoot(spark, sfDir, sfIdx, spherical = false)
-      val grown = ops.Ann.appendQuantizedFreshIdempotent(spark, sfDir,
-        freshPart, "vec_id", "embedding")
+      val grown = ops.Ann.appendIdempotent(
+        ops.Ann.cellRoot(spark, sfDir, Some("embedding")),
+        freshPart, "vec_id")
       val freshN = freshPart.count()
       require(grown == freshN, s"grew $grown of $freshN fresh rows")
       // below threshold (1/4 over 3/4 = 1/3 < 0.5): must NOT trigger

@@ -623,7 +623,7 @@ object Ann {
   }
 
   /** The ONE builder of a [[writeMatryoshkaIvf]] row frame — initial
-    * write and [[appendMatryoshkaIvf]] share it, so the two paths
+    * write, the stream and [[appendIdempotent]] share it, so they
     * cannot slice or assign differently: cosine assigns and slices on
     * the unit sphere (normalized model + normalized vectors, emb_full
     * raw), L2 on the raw vectors. */
@@ -649,44 +649,6 @@ object Ann {
     }
   }
 
-  /** Batch APPEND into a [[writeMatryoshkaIvf]] root — the growth
-    * path of the composed layout (its delete path is the ordinary
-    * cell rewrite, [[deleteStored]]/[[deleteStoredIds]] over
-    * `dir/rows`): new rows are assigned and prefix-sliced under the
-    * ROOT's own pinned geometry (marker-read dims + metric, loaded
-    * centroids — a mismatch is impossible by construction, the
-    * [[appendRangeIndex]] rule), the batch schema must match the
-    * stored rows (mode("append") happily writes mixed-schema files
-    * whose later reads resolve from an arbitrary footer), and the
-    * append lands cell-partitioned so future searches prune it like
-    * day-one rows. Streaming-grown dirs refuse (compact first). */
-  def appendMatryoshkaIvf(spark: org.apache.spark.sql.SparkSession,
-                          dir: String, newRows: DataFrame,
-                          idCol: String, vecCol: String): Unit = {
-    val (dims, metric) = readMatryoshkaMeta(spark, dir,
-      "appendMatryoshkaIvf", "_graft_matryoshka_ivf")
-    requireBatchLayout(spark, s"$dir/rows")
-    val model = ivfModelAt(spark, dir)
-    val storedCols = spark.read.parquet(s"$dir/rows").columns.toSet
-    val standard = Set(idCol, "emb_pre", "emb_full", model.idCol)
-    val keep = (storedCols -- standard).toSeq.sorted
-    keep.foreach(c => require(newRows.columns.contains(c),
-      s"appendMatryoshkaIvf: stored layout carries kept column '$c' " +
-        "but the batch lacks it — a mixed-schema rows/ dir reads " +
-        "back nondeterministically"))
-    val rows = matryoshkaIvfRows(newRows, idCol, vecCol, dims, model,
-      metric, keep)
-    // compare (name -> type), not names: a type-divergent kept or id
-    // column would pass a name-set check and write exactly the
-    // mixed-schema dir this guard exists to prevent. The partition
-    // column is exempt — directory-name encoding erases its physical
-    // type on read-back.
-    requireAppendSchema(spark.read.parquet(s"$dir/rows").schema,
-      rows.schema, Set(model.idCol), "appendMatryoshkaIvf")
-    rows.write.mode("append").partitionBy(model.idCol)
-      .parquet(s"$dir/rows")
-  }
-
   /** A type with every nullability flag forced true — the schema-guard
     * normal form (parquet read-back reports containsNull=true for
     * arrays regardless of what was written, so flag differences are
@@ -705,13 +667,12 @@ object Ann {
   }
 
   /** The ONE mixed-schema guard for every graduated-root append
-    * (dense cells, composed matryoshka, BM25 and sparse postings):
-    * batch and stored schemas must agree as nullability-normalized
-    * (name → type) maps — mode("append") happily writes files whose
-    * later reads resolve from an arbitrary footer. `exempt` names the
-    * partition column(s): directory-name encoding erases their
-    * physical type on read-back. Factored so a one-sided edit cannot
-    * de-sync the four appenders. */
+    * (every [[CellRoot]] family, flat dense cells, BM25 and sparse
+    * postings): batch and stored schemas must agree as
+    * nullability-normalized (name → type) maps — mode("append")
+    * happily writes files whose later reads resolve from an arbitrary
+    * footer. `exempt` names the partition column(s): directory-name
+    * encoding erases their physical type on read-back. */
   private[graft] def requireAppendSchema(
       stored: org.apache.spark.sql.types.StructType,
       batch: org.apache.spark.sql.types.StructType,
@@ -724,63 +685,6 @@ object Ann {
     require(b0 == s0,
       s"$who: batch schema $b0 != stored $s0 — a mixed-schema layout " +
         "reads back nondeterministically")
-  }
-
-  /** [[appendMatryoshkaIvf]] made REPLAY-SAFE by id — the composed
-    * root's twin of [[appendRangeIndexIdempotent]], and for the same
-    * reason: a foreachBatch sink can redeliver a batch after a crash,
-    * and a blind re-append would duplicate every row. Rows whose
-    * `idCol` already exists in the cells this batch touches are
-    * dropped first (the existence probe reads ONLY touched cell
-    * directories — batch-cells-bounded, never corpus-bounded), so a
-    * redelivered batch appends NOTHING under the immutable-row
-    * contract. Returns rows actually appended.
-    *
-    * SPLITS INVALIDATE THE TOUCHED-CELLS PROBE: a later
-    * [[splitOverfull]] can steal a neighboring cell's
-    * boundary row's argmin (the new sub-centroid lands nearer than
-    * that row's own centroid), stranding its stored copy off today's
-    * argmin — the default probe would miss it and a replayed batch
-    * would duplicate it. `probeAllCells = true` switches to the
-    * SOUND whole-layout id probe (an id-pushdown scan: no partition
-    * pruning, but only the id column's pages whose row groups can
-    * match) — the streamed seat wires it whenever its split policy
-    * is enabled, and a root that has EVER been split
-    * ([[hasSplitHistory]] — any actuator, including an out-of-band
-    * engine-cadence split between a batch and its crash redelivery)
-    * rides the sound probe UNCONDITIONALLY: once split, a stranded
-    * copy can exist forever, so the fast probe is only ever the
-    * default on never-split roots where it is actually sound. */
-  def appendMatryoshkaIvfIdempotent(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      newRows: DataFrame, idCol: String, vecCol: String,
-      probeAllCells: Boolean = false): Long = {
-    val (dims, metric) = readMatryoshkaMeta(spark, dir,
-      "appendMatryoshkaIvfIdempotent", "_graft_matryoshka_ivf")
-    // layout refusal BEFORE the probe: a fully-duplicate batch
-    // against a streaming-grown root must refuse loudly, not return
-    // 0 and mask the misuse until fresh rows arrive
-    requireBatchLayout(spark, s"$dir/rows")
-    val model = ivfModelAt(spark, dir)
-    val touched = distinctLongKeys(
-      matryoshkaIvfRows(newRows, idCol, vecCol, dims, model, metric,
-        Nil), col(model.idCol))
-    if (touched.isEmpty) return 0L
-    val probeAll = probeAllCells || hasSplitHistory(spark, dir)
-    val existing =
-      if (probeAll) spark.read.parquet(s"$dir/rows")
-        .select(col(idCol))
-      else spark.read.parquet(s"$dir/rows")
-        .filter(col(model.idCol).isin(touched: _*))
-        .select(col(idCol))
-    // micro-batch-sized; materialized once — the append reads its
-    // input several times (schema probe, row build, write)
-    val fresh = newRows.join(broadcastExistingIfBounded(existing),
-        Seq(idCol), "left_anti")
-      .localCheckpoint(true)
-    val n = fresh.count()
-    if (n > 0L) appendMatryoshkaIvf(spark, dir, fresh, idCol, vecCol)
-    n
   }
 
   /** Two-phase top-k over a [[writeMatryoshkaIvf]] root: probe the
@@ -1309,18 +1213,19 @@ object Ann {
     assigned.write.mode("overwrite").partitionBy("centroid_id")
       .parquet(path)
 
-  /** Batch APPEND into a [[writePartitioned]] dense-cell layout made
-    * REPLAY-SAFE by id — the plain-IVF member of the graduated-root
-    * maintenance family (range/composed-matryoshka/BM25/sparse have
-    * their twins; the QUANTIZED layouts deliberately do not: SQ/PQ/
-    * 1-bit codes are bound to their training-time bounds/codebooks,
-    * so those layouts rebuild rather than grow — the cell-split
-    * scaladoc's contract). New rows are assigned under the model the
-    * layout's fingerprint pins (a retrained model refuses via
-    * [[ensureIvfModelMarker]]), rows whose id already exists in the
-    * touched cells are dropped (crash-redelivery appends nothing),
-    * and the batch schema must match the stored rows
-    * nullability-normalized. Returns rows appended. */
+  /** Batch APPEND into a flat [[writePartitioned]] dense-cell layout
+    * made REPLAY-SAFE by id — the caller-held-model member of the
+    * graduated-root maintenance family (the self-contained roots,
+    * quantized ones included, grow through [[appendIdempotent]]; a
+    * quantized root's raw rows land in its `fresh/` side table, since
+    * its codes are bound to training-time bounds/codebooks). New rows
+    * are assigned under the model the layout's fingerprint pins (a
+    * retrained model refuses via [[ensureIvfModelMarker]]), rows whose
+    * id already exists in the touched cells are dropped
+    * (crash-redelivery appends nothing), and the batch schema must
+    * match the stored rows nullability-normalized. A flat layout
+    * never splits, so the touched-cells probe is always sound.
+    * Returns rows appended. */
   def appendIvfIdempotent(spark: org.apache.spark.sql.SparkSession,
                           path: String, model: IvfModel,
                           newRows: DataFrame, idCol: String,
@@ -1340,19 +1245,38 @@ object Ann {
     val assigned = assign(newRows, vecCol, model, metric)
     val touched = distinctLongKeys(assigned, col(model.idCol))
     if (touched.isEmpty) return 0L
-    val existing = stored
-      .filter(col(model.idCol).isin(touched: _*))
-      .select(col(idCol))
-    val fresh = assigned
+    appendAbsent(assigned,
+      stored.filter(col(model.idCol).isin(touched: _*)).select(col(idCol)),
+      idCol, model.idCol, stored.schema, path, "appendIvfIdempotent")
+  }
+
+  /** The ONE write step of every replay-safe append (and of the
+    * quantized compaction): drop the rows whose `idCol` is already in
+    * `existing`, materialize the survivors once (micro-batch-sized;
+    * the count, the schema guard, `beforeWrite` and the write all read
+    * them), refuse a batch whose schema is not `expected`
+    * ([[requireAppendSchema]]), run `beforeWrite` on the survivors (a
+    * range root grows its radii there, before the rows become
+    * visible), and append them to `target` partitioned by `cellCol`,
+    * columns in the stored order. Returns rows appended. */
+  private def appendAbsent(rows: DataFrame, existing: DataFrame,
+                           idCol: String, cellCol: String,
+                           expected: org.apache.spark.sql.types.StructType,
+                           target: String, who: String,
+                           beforeWrite: DataFrame => Unit = _ => ())
+      : Long = {
+    val fresh = rows
       .join(broadcastExistingIfBounded(
           existing.withColumnRenamed(idCol, "__eid")),
-        assigned(idCol) === col("__eid"), "left_anti")
+        rows(idCol) === col("__eid"), "left_anti")
       .localCheckpoint(true)
     val n = fresh.count()
     if (n > 0L) {
-      requireAppendSchema(stored.schema, fresh.schema,
-        Set(model.idCol), "appendIvfIdempotent")
-      fresh.write.mode("append").partitionBy(model.idCol).parquet(path)
+      requireAppendSchema(expected, fresh.schema, Set(cellCol), who)
+      beforeWrite(fresh)
+      fresh.select((expected.fieldNames.filterNot(_ == cellCol) :+ cellCol)
+          .map(col): _*)
+        .write.mode("append").partitionBy(cellCol).parquet(target)
     }
     n
   }
@@ -1701,54 +1625,7 @@ object Ann {
       queryVec, metric, probes, k, roundTo, pred)
   }
 
-  /** [[appendIvfIdempotent]] for a SELF-CONTAINED dense root — the
-    * maintained layout's append: the model comes from the root's own
-    * `centroids/` (so appends keep working across splits/merges that
-    * re-pin the fingerprint — exactly what the flat form's
-    * caller-supplied model cannot do), heals crash debris at entry
-    * (maintenance-owning seat), and drops already-present ids before
-    * the append (crash-redelivery appends nothing).
-    *
-    * The existence probe reads only the batch's touched cells UNLESS
-    * the root has EVER been split ([[hasSplitHistory]]) or the
-    * caller forces `probeAllCells`: a split can strand a NEIGHBORING
-    * cell's boundary row off today's argmin (the new sub-centroid
-    * steals its argmin while its stored copy stays put), and the
-    * touched-cells probe would miss that copy — so on ever-split
-    * roots the probe switches to the sound whole-layout id form
-    * automatically, not opt-in. Returns rows appended. */
-  def appendDenseRootIdempotent(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      newRows: DataFrame, idCol: String,
-      probeAllCells: Boolean = false): Long = {
-    healRoot(spark, dir)
-    val (model, metric, vecCol) = loadDenseRoot(spark, dir)
-    requireBatchLayout(spark, s"$dir/rows")
-    val stored = spark.read.parquet(s"$dir/rows")
-    val assigned = assign(newRows, vecCol, model, metric)
-    val touched = distinctLongKeys(assigned, col(model.idCol))
-    if (touched.isEmpty) return 0L
-    val probeAll = probeAllCells || hasSplitHistory(spark, dir)
-    val existing =
-      if (probeAll) stored.select(col(idCol))
-      else stored.filter(col(model.idCol).isin(touched: _*))
-        .select(col(idCol))
-    val fresh = assigned
-      .join(broadcastExistingIfBounded(
-          existing.withColumnRenamed(idCol, "__eid")),
-        assigned(idCol) === col("__eid"), "left_anti")
-      .localCheckpoint(true)
-    val n = fresh.count()
-    if (n > 0L) {
-      requireAppendSchema(stored.schema, fresh.schema,
-        Set(model.idCol), "appendDenseRootIdempotent")
-      fresh.write.mode("append").partitionBy(model.idCol)
-        .parquet(s"$dir/rows")
-    }
-    n
-  }
-
-  /** [[appendDenseRootIdempotent]] for a MAXSIM dense root (a
+  /** [[appendIdempotent]] for a MAXSIM dense root (a
     * [[writeDenseRoot]] layout over the persisted token-mean, metric
     * Cosine — [[appendMaxsimIdempotent]]'s self-contained twin): the
     * summarized mean is computed by the ONE transform both build and
@@ -1757,11 +1634,9 @@ object Ann {
   def appendMaxsimRootIdempotent(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       newDocs: DataFrame, idCol: String, mvCol: String, dim: Int,
-      meanCol: String = "mv_mean",
-      probeAllCells: Boolean = false): Long =
-    appendDenseRootIdempotent(spark, dir,
-      newDocs.withColumn(meanCol, tokenMeanCol(col(mvCol), dim)),
-      idCol, probeAllCells)
+      meanCol: String = "mv_mean"): Long =
+    appendIdempotent(cellRoot(spark, dir, None),
+      newDocs.withColumn(meanCol, tokenMeanCol(col(mvCol), dim)), idCol)
 
   /** The composed matryoshka-IVF root's coarse quantizer, loaded with
     * the family's reader guards (torn-merge refusal + marker
@@ -2463,13 +2338,29 @@ object Ann {
     * fails on real triples, so radii pruning could drop TRUE matches.
     * Refuse loudly. Cosine range queries have an exact reduction
     * instead: on L2-normalized vectors ‖a−b‖² = 2·cosDist(a,b), so
-    * range-search the normalized column under L2 with
-    * eps_l2 = sqrt(2·eps_cos) and the result set is identical. */
+    * the cell cut runs under L2 on the unit sphere with
+    * eps_l2 = sqrt(2·eps_cos) ([[cellEps]]) — the range searches and
+    * joins take `metric = Cosine` and apply it themselves
+    * ([[requireRangeMetric]]). */
   private def requireTriangleMetric(metric: Metric, what: String): Unit =
     require(metric == L2,
       s"$what needs a true metric (triangle inequality); cosine/IP " +
         "range queries must go through the normalized-L2 reduction: " +
         "l2Normalize the vectors and use eps_l2 = sqrt(2*eps_cos)")
+
+  /** A range search or join's metric: L2, or Cosine through the
+    * unit-sphere reduction; IP has neither and refuses. */
+  private def requireRangeMetric(metric: Metric, what: String): Unit =
+    if (metric != Cosine) requireTriangleMetric(metric, what)
+
+  /** The L2 radius the cell cut uses for a range query's `eps`: under
+    * cosine, round-cosDist(q,v) ≤ eps ⇒ 2·cosDist ≤ 2·eps + slack ⇒
+    * l2(q̂,v̂) ≤ sqrt(2·eps + slack) on the normalized vectors, so the
+    * cut keeps every cell a true match can live in. The layout must be
+    * the SPHERICAL one: rows assigned under the normalized model, the
+    * radii [[cellRadii]] over the normalized column. */
+  private def cellEps(metric: Metric, eps: Double, slack: Double): Double =
+    if (metric == Cosine) math.sqrt(2.0 * eps + slack) else eps
 
   /** Cells a radius-`eps` ball around the query can intersect:
     * dist(q, centroid) ≤ radius + eps (+ one output-rounding step of
@@ -2548,14 +2439,25 @@ object Ann {
     * (`PushedFilters`), and no true match can live in a pruned cell.
     * Tight clusters + small eps ⇒ most of the corpus is never read;
     * the worst case (eps spanning every cell) degrades to the exact
-    * scan [[rangeSearch]] already is. */
+    * scan [[rangeSearch]] already is. Under `Cosine` the layout is the
+    * spherical one and the cut runs on the normalized query with
+    * [[cellEps]]' reduced radius, while the OUTPUT filter is true
+    * cosine on the raw vectors. */
   def rangeSearchIvfStored(spark: org.apache.spark.sql.SparkSession,
                            path: String, idCol: String, vecCol: String,
                            model: IvfModel, radii: DataFrame,
                            queryVec: Column, metric: Metric, eps: Double,
                            roundTo: Int = 6,
                            pred: Column = lit(true)): DataFrame = {
-    val cells = rangeCells(model, radii, queryVec, metric, eps, roundTo)
+    requireRangeMetric(metric, "rangeSearchIvfStored")
+    // l2NormalizeQuery folds a LITERAL query's normalization on the
+    // driver (bit-identical by its contract), which keeps the cell cut
+    // inside rangeCells' driver fast path
+    val cells =
+      if (metric == Cosine)
+        rangeCells(model, radii, l2NormalizeQuery(queryVec), L2,
+          cellEps(Cosine, eps, math.pow(10.0, -roundTo)), roundTo)
+      else rangeCells(model, radii, queryVec, metric, eps, roundTo)
     val pruned = spark.read.parquet(path)
       .filter(col(model.idCol).isin(cells: _*))
       .filter(pred)
@@ -2576,8 +2478,8 @@ object Ann {
     * be invisible to range queries whose ball misses the stale
     * radius. Appending rows requires re-running [[cellRadii]] over
     * the union (or maintaining the running per-cell max in the same
-    * job) BEFORE the new rows become visible —
-    * [[appendRangeIndex]] is exactly that operation. */
+    * job) BEFORE the new rows become visible — [[appendIdempotent]]
+    * on a [[CellRoot.Range]] is exactly that operation. */
   def writeRangeIndex(assigned: DataFrame, vecCol: String,
                       model: IvfModel, dir: String): Unit = {
     writePartitioned(assigned, s"$dir/rows")
@@ -2587,114 +2489,16 @@ object Ann {
     ensureIvfModelMarker(assigned.sparkSession, dir, model)
   }
 
-  /** Sound APPEND into a [[writeRangeIndex]] root — the closing of the
-    * append asymmetry that layout documents: a row landing outside its
-    * cell's stored radius is silently invisible to range queries whose
-    * ball misses the stale radius. New rows are assigned under the
-    * ROOT's own model (loaded, so a geometry mismatch is impossible by
-    * construction), and the radii grow BEFORE the rows become visible:
-    * radii/ is overwritten with max(stored, batch) per cell first, the
-    * row append lands second. A crash between the two leaves radii
-    * that only OVER-admit cells (conservative, never unsound — the
-    * same stale-radii argument the delete path proves). The radii swap
-    * rides [[swapSideTable]]'s rename-aside order (ONE protocol with
-    * the split/merge actuators, so the crash-recovery story cannot
-    * drift): the staged copy lands fully in `radii_next` BEFORE the
-    * live copy moves aside, no window destroys the only copy, and
-    * [[healSideTableSwap]] — run here at entry like every other
-    * range-root entry point — restores a stranded swap before the
-    * first read. */
-  def appendRangeIndex(spark: org.apache.spark.sql.SparkSession,
-                       dir: String, newRows: DataFrame,
-                       vecCol: String): Unit = {
-    healRoot(spark, dir)
-    val (model, oldRadii) = loadRangeIndex(spark, dir)
-    ensureIvfModelMarker(spark, dir, model)
-    val assigned = assign(newRows, vecCol, model, L2)
-    // batch schema must match the stored rows: mode("append") happily
-    // writes mixed-schema files whose later reads resolve from an
-    // arbitrary footer
-    val storedCols = spark.read.parquet(s"$dir/rows").columns.toSet
-    val newCols = assigned.columns.toSet
-    require(newCols == storedCols,
-      s"appendRangeIndex: batch columns $newCols != stored " +
-        s"$storedCols — a mixed-schema rows/ dir reads back " +
-        "nondeterministically")
-    val merged = oldRadii.select(col(model.idCol), col("radius"))
-      .unionByName(cellRadii(assigned, vecCol, model, L2))
-      .groupBy(col(model.idCol)).agg(max(col("radius")).as("radius"))
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    swapSideTable(fs, dir, "radii", merged)
-    assigned.write.mode("append").partitionBy("centroid_id")
-      .parquet(s"$dir/rows")
-  }
-
-  /** [[appendRangeIndex]] made REPLAY-SAFE by id — the streaming
-    * maintenance form ([[graft.streaming.Stream.ingestRangeAppend]]
-    * drives one call per micro-batch): a foreachBatch sink can
-    * redeliver a batch after a crash, and a blind re-append would
-    * duplicate every row. Rows whose `idCol` already exists in the
-    * cells this batch can REACH are dropped before the append, so a
-    * redelivered batch appends NOTHING (idempotent under the
-    * immutable-row contract: one id, one vector — the same contract
-    * the file-sink commit log gives the other ingest twins).
-    *
-    * The existence probe admits cells by the COVERING RADII, not by
-    * argmin: a stored copy always lies within its own cell's radius
-    * (radii grow before rows become visible; deletes leave them
-    * conservative; split/merge maintain them), so the radii cut
-    * `dist(row, centroid) ≤ radius + slack` reaches EVERY cell a copy
-    * could live in — including a copy stranded off today's argmin by
-    * a later SPLIT (a new sub-centroid can steal a neighboring cell's
-    * boundary row's argmin; an argmin-only probe would miss that copy
-    * and a redelivered batch would silently duplicate it). Still
-    * partition-pruned and batch-bounded: only the admitting cells'
-    * id columns are read, never the corpus. Returns rows actually
-    * appended (0 for a full replay). */
-  def appendRangeIndexIdempotent(spark: org.apache.spark.sql.SparkSession,
-                                 dir: String, newRows: DataFrame,
-                                 idCol: String, vecCol: String): Long = {
-    healRoot(spark, dir)
-    val (model, radii) = loadRangeIndex(spark, dir)
-    val rad = collectRadiiMap(model, radii)
-    val bc = spark.sparkContext.broadcast(
-      collectCentroids(model).map { case (id, c) =>
-        (id, c, rad.getOrElse(id, 0.0)) })
-    val slack = 1e-6
-    val admitUdf = udf { (v: Seq[Double]) =>
-      val varr = v.toArray
-      bc.value.iterator
-        .filter { case (_, c, r) => L2.distScala(varr, c) <= r + slack }
-        .map(_._1).toSeq
-    }
-    val touched = distinctLongKeys(
-      newRows.select(explode(admitUdf(col(vecCol).cast("array<double>")))
-        .as(model.idCol)), col(model.idCol))
-    val existing =
-      if (touched.isEmpty) newRows.select(col(idCol)).limit(0)
-      else spark.read.parquet(s"$dir/rows")
-        .filter(col(model.idCol).isin(touched: _*))
-        .select(col(idCol))
-    // micro-batch-sized; materialized once — appendRangeIndex reads
-    // its input three times (schema probe, radii growth, row append)
-    val fresh = newRows.join(broadcastExistingIfBounded(existing),
-        Seq(idCol), "left_anti")
-      .localCheckpoint(true)
-    val n = fresh.count()
-    if (n > 0L) appendRangeIndex(spark, dir, fresh, vecCol)
-    n
-  }
-
   /** A maintainable cell-partitioned root, resolved ONCE from its own
     * family marker or layout ([[cellRoot]]). Each case names what its
     * family does differently under maintenance — the data subdir, the
     * space a flagged cell retrains in, the stored form of a new
     * sub-centroid, radii growth, the re-assignment (or re-encode) of
-    * moved rows, the side rows a split inherits, the `fresh/` refusal
-    * and the per-row health distance — and [[splitOverfull]],
-    * [[mergeUnderfull]] and [[indexHealth]] are written once over it.
-    * A case holds the root's IMMUTABLE identity (family, metric,
+    * moved rows, the side rows a split inherits, the `fresh/` refusal,
+    * the per-row health distance and the steps of a replay-safe
+    * append — and [[splitOverfull]], [[mergeUnderfull]],
+    * [[indexHealth]] and [[appendIdempotent]] are written once over
+    * it. A case holds the root's IMMUTABLE identity (family, metric,
     * vector column); centroids, radii and markers are re-read by every
     * actuator call. */
   sealed trait CellRoot extends Product with Serializable {
@@ -2725,6 +2529,44 @@ object Ann {
     private[ops] def healthDist(rows: DataFrame, model: IvfModel,
                                 roundTo: Int): DataFrame
 
+    /** An append's entry: heal a torn root (this default) or refuse
+      * it, run the family's preconditions, and return the model the
+      * batch assigns under. */
+    private[ops] def appendEntry(idCol: String): IvfModel = {
+      healRoot(spark, dir)
+      pinnedModel
+    }
+    /** The root's own centroids, checked against the pinned
+      * fingerprint (a hand-swapped `centroids/` dir refuses). */
+    protected def pinnedModel: IvfModel = {
+      val model = ivfModelAt(spark, dir)
+      ensureIvfModelMarker(spark, dir, model)
+      model
+    }
+    /** A batch in the stored row form, carrying the cell column. */
+    private[ops] def appendRows(batch: DataFrame, model: IvfModel,
+                                idCol: String): DataFrame =
+      reassigner(batch, model)
+    /** The cells a stored copy of a batch row can sit in, or None when
+      * only the whole layout is: once a split has run
+      * ([[hasSplitHistory]]), a sub-centroid can have stolen a
+      * neighboring cell's boundary row, whose copy then sits off
+      * today's argmin for good. */
+    private[ops] def replayCells(rows: DataFrame,
+                                 model: IvfModel): Option[Array[Long]] =
+      if (hasSplitHistory(spark, dir)) None
+      else Some(distinctLongKeys(rows, col(model.idCol)))
+    /** The subdirs whose ids count as already present. */
+    private[ops] def presentSubs: Seq[String] = Seq(dataSub)
+    /** The subdir an append writes. */
+    private[ops] def appendSub: String = dataSub
+    /** The schema an appended row must have, given the stored one. */
+    private[ops] def appendSchema(
+        stored: org.apache.spark.sql.types.StructType)
+        : org.apache.spark.sql.types.StructType = stored
+    /** Runs on the rows to append before they become visible. */
+    private[ops] def beforeAppend(rows: DataFrame, model: IvfModel): Unit = ()
+
     /** This root as family `R`, or the typed refusal naming both. */
     def as[R <: CellRoot](who: String)(
         implicit tag: scala.reflect.ClassTag[R]): R = this match {
@@ -2740,7 +2582,19 @@ object Ann {
     /** A [[writeRangeIndex]] root: L2 cells plus a radii side table
       * covering `vecCol`. The layout predates the family markers and
       * does not record its vector column, so the caller names it;
-      * split, merge and health refuse without it. */
+      * split, merge, health and append refuse without it.
+      *
+      * An append grows the radii to max(stored, batch) per cell
+      * through [[swapSideTable]] BEFORE its rows land: a row outside
+      * its cell's stored radius would otherwise be invisible to range
+      * queries whose ball misses the stale radius, and a crash between
+      * the two steps leaves radii that only over-admit cells. Its
+      * replay probe admits cells by the covering radii, not by argmin:
+      * every stored copy lies within its own cell's radius (radii grow
+      * before rows land; deletes leave them conservative; split and
+      * merge maintain them), so the cut reaches a copy a split
+      * stranded off argmin too, and stays sound without the
+      * whole-layout fallback. */
     final case class Range(spark: org.apache.spark.sql.SparkSession,
                            dir: String, vecCol: Option[String])
         extends CellRoot {
@@ -2759,6 +2613,32 @@ object Ann {
                                   roundTo: Int): DataFrame =
         centroidDist(rows.select(col(model.idCol), col(vec)), vec, model,
           L2, roundTo)
+      override private[ops] def replayCells(
+          rows: DataFrame, model: IvfModel): Option[Array[Long]] = {
+        val rad = collectRadiiMap(model, spark.read.parquet(s"$dir/radii"))
+        val bc = spark.sparkContext.broadcast(
+          collectCentroids(model).map { case (id, c) =>
+            (id, c, rad.getOrElse(id, 0.0)) })
+        val admit = udf { (v: Seq[Double]) =>
+          val varr = v.toArray
+          bc.value.iterator
+            .filter { case (_, c, r) => L2.distScala(varr, c) <= r + 1e-6 }
+            .map(_._1).toSeq
+        }
+        Some(distinctLongKeys(
+          rows.select(explode(admit(col(vec).cast("array<double>")))
+            .as(model.idCol)), col(model.idCol)))
+      }
+      override private[ops] def beforeAppend(rows: DataFrame,
+                                             model: IvfModel): Unit = {
+        val grown = spark.read.parquet(s"$dir/radii")
+          .select(col(model.idCol), col("radius"))
+          .unionByName(cellRadii(rows, vec, model, L2))
+          .groupBy(col(model.idCol)).agg(max(col("radius")).as("radius"))
+        swapSideTable(new org.apache.hadoop.fs.Path(dir)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration),
+          dir, "radii", grown)
+      }
     }
 
     /** A [[writeDenseRoot]] root, plain or maxsim (the persisted token
@@ -2785,16 +2665,39 @@ object Ann {
           model, metric, roundTo)
     }
 
-    /** A [[writeMatryoshkaIvf]] root; its metric comes from the marker.
+    /** A [[writeMatryoshkaIvf]] root; its metric and prefix `dims`
+      * come from the marker, and `vecCol` names the raw vector column
+      * of the batches an append slices (appends refuse without it).
       * Cosine roots retrain, re-assign and audit the normalized
       * `emb_full` against normalized centroids under L2
       * ([[matryoshkaIvfRows]]' exact argmin) but store raw k-means
       * means (the layout's normalize-on-read convention); `emb_pre` is
-      * row-intrinsic and moves verbatim. */
+      * row-intrinsic and moves verbatim. An append refuses a torn
+      * merge, and a batch must carry every column the stored rows
+      * keep beside the id, the prefix, the full vector and the cell. */
     final case class MrlIvf(spark: org.apache.spark.sql.SparkSession,
-                            dir: String, metric: Metric)
+                            dir: String, metric: Metric, dims: Int,
+                            vecCol: Option[String])
         extends CellRoot {
       private[ops] def kind: String = "composed matryoshka-IVF"
+      override private[ops] def appendEntry(idCol: String): IvfModel = {
+        requireNoPendingMerge(spark, dir)
+        pinnedModel
+      }
+      override private[ops] def appendRows(batch: DataFrame,
+                                           model: IvfModel,
+                                           idCol: String): DataFrame = {
+        val vec = vecCol.getOrElse(throw new IllegalStateException(
+          s"$dir is a composed matryoshka-IVF root: an append slices " +
+            "the batch's vector column, and none was named"))
+        val keep = (spark.read.parquet(s"$dir/rows").columns.toSet --
+          Set(idCol, "emb_pre", "emb_full", model.idCol)).toSeq.sorted
+        keep.foreach(c => require(batch.columns.contains(c),
+          s"appendIdempotent: stored layout carries kept column '$c' " +
+            "but the batch lacks it — a mixed-schema rows/ dir reads " +
+            "back nondeterministically"))
+        matryoshkaIvfRows(batch, idCol, vec, dims, model, metric, keep)
+      }
       private[ops] def trainSpace: (DataFrame => DataFrame, String) =
         if (metric == Cosine)
           ((df: DataFrame) => withNormalized(df, "emb_full", "__nv"),
@@ -2827,7 +2730,23 @@ object Ann {
       * codes and re-encode under the receiving cell's frozen
       * artifacts (the [[compactQuantizedFresh]] transforms); SQ
       * sub-cells inherit their parent's bounds. Every step refuses
-      * while `fresh/` exists. */
+      * while `fresh/` exists.
+      *
+      * An append lands RAW rows in the `fresh/` side table,
+      * partitioned like the main layout: no codes are computed at
+      * append time — [[searchQuantizedStored]] encodes them on read and
+      * [[compactQuantizedFresh]] folds them in. The rows assign on the
+      * unit sphere on spherical roots, the geometry their stored
+      * centroids live in. Ids already in `fresh/` OR in the main layout
+      * count as present (a batch redelivered after a compaction must
+      * append nothing), and a raw row must carry the main layout's
+      * columns minus the code columns. The entry refuses a torn merge,
+      * an unpinned root, a root without an IVF model marker, and a
+      * root whose stored rows sit decisively outside their cells under
+      * the pinned geometry ([[verifyQuantizedGeometry]]). Ids are
+      * immutable: a known id re-ingested with a changed vector must be
+      * deleted first ([[deleteQuantizedFreshIds]] /
+      * [[deleteStoredIds]]), or it lives in two cells. */
     final case class Quantized(spark: org.apache.spark.sql.SparkSession,
                                dir: String, family: QuantFamily,
                                spherical: Option[Boolean],
@@ -2876,6 +2795,33 @@ object Ann {
       private[ops] def healthDist(rows: DataFrame, model: IvfModel,
                                   roundTo: Int): DataFrame =
         family.artifacts(spark, dir, model).healthDist(rows, roundTo)
+      override private[ops] def appendEntry(idCol: String): IvfModel = {
+        requireNoPendingMerge(spark, dir)
+        val sph = pinned
+        if (readIvfModelMarker(spark, dir).isEmpty)
+          throw new IllegalStateException(
+            s"appendIdempotent: $dir has no IVF model marker — pin the " +
+              "build model first (ensure*Root at write time)")
+        val model = pinnedModel
+        verifyQuantizedGeometry(spark, dir, dataSub,
+          spark.read.parquet(s"$dir/$dataSub"), model, sph, idCol, vec)
+        model
+      }
+      override private[ops] def appendRows(batch: DataFrame,
+                                           model: IvfModel,
+                                           idCol: String): DataFrame =
+        if (pinned)
+          assign(withNormalized(batch, vec, "__nvec"), "__nvec", model, L2)
+            .drop("__nvec")
+        else assign(batch, vec, model, L2)
+      override private[ops] def presentSubs: Seq[String] =
+        dataSub +: (if (freshExists(spark, dir)) Seq("fresh") else Nil)
+      override private[ops] def appendSub: String = "fresh"
+      override private[ops] def appendSchema(
+          stored: org.apache.spark.sql.types.StructType)
+          : org.apache.spark.sql.types.StructType =
+        org.apache.spark.sql.types.StructType(
+          stored.filterNot(f => family.codeCols.contains(f.name)))
     }
   }
 
@@ -2913,8 +2859,10 @@ object Ann {
         fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$n")))
     }
     graft.io.Markers.read(spark, dir, "_graft_matryoshka_ivf")
-      .map(raw => CellRoot.MrlIvf(spark, dir,
-        matryoshkaMetaOf(raw, dir, "cellRoot")._2): CellRoot)
+      .map { raw =>
+        val (dims, metric) = matryoshkaMetaOf(raw, dir, "cellRoot")
+        CellRoot.MrlIvf(spark, dir, metric, dims, vecCol): CellRoot
+      }
       .orElse(detectQuantized(spark, dir).map { case (f, s) =>
         CellRoot.Quantized(spark, dir, f, s, vecCol) })
       .orElse(graft.io.Markers.read(spark, dir, DenseCellsMarker)
@@ -2924,6 +2872,47 @@ object Ann {
         })
       .orElse(if (hasRadii) Some(CellRoot.Range(spark, dir, vecCol))
         else None)
+  }
+
+  /** Batch APPEND into a [[CellRoot]], REPLAY-SAFE by id — the one
+    * growth path of every self-contained cell family (dense and
+    * maxsim, composed matryoshka-IVF, range, quantized). A
+    * foreachBatch sink can redeliver a batch after a crash, and a
+    * blind re-append would duplicate every row, so under the
+    * immutable-row contract (one id, one vector) rows whose `idCol`
+    * is already present are dropped first and a redelivered batch
+    * appends NOTHING.
+    *
+    * The recipe, with the family's steps from its case: heal or refuse
+    * a torn root and load the pinned model (a retrained or hand-swapped
+    * `centroids/` refuses); refuse a streaming-grown target (compact
+    * first); build the batch's rows under the root's own geometry (a
+    * mismatch is impossible by construction); read the ids already
+    * present in the cells a stored copy can sit in — the batch's
+    * touched cells, so the probe is batch-bounded, or the whole layout
+    * once the root has split ([[CellRoot.replayCells]]); drop them,
+    * check the schema, run the family's pre-write step and append
+    * cell-partitioned ([[appendAbsent]]), so future searches prune the
+    * new rows like day-one rows. Returns rows actually appended. */
+  def appendIdempotent(root: CellRoot, newRows: DataFrame,
+                       idCol: String): Long = {
+    val (spark, dir) = (root.spark, root.dir)
+    val model = root.appendEntry(idCol)
+    val target = s"$dir/${root.appendSub}"
+    // layout refusal BEFORE the probe: a fully-duplicate batch
+    // against a streaming-grown root must refuse loudly, not return
+    // 0 and mask the misuse until fresh rows arrive
+    requireBatchLayout(spark, target)
+    val rows = root.appendRows(newRows, model, idCol)
+    val cells = root.replayCells(rows, model)
+    val existing = root.presentSubs.map { sub =>
+      val present = spark.read.parquet(s"$dir/$sub")
+      cells.fold(present)(c => present.filter(col(model.idCol).isin(c: _*)))
+        .select(col(idCol))
+    }.reduce(_ unionByName _)
+    appendAbsent(rows, existing, idCol, model.idCol,
+      root.appendSchema(spark.read.parquet(s"$dir/${root.dataSub}").schema),
+      target, "appendIdempotent", root.beforeAppend(_, model))
   }
 
   /** (cell, `__d`) per row of `rows`: `metric` distance from column
@@ -3157,12 +3146,11 @@ object Ann {
     * never the reverse) and never removed: once a split has run, a
     * stored copy can sit off today's argmin FOREVER (the sub-centroid
     * that stole its argmin stays), so the touched-cells replay probe
-    * is permanently unsound on such a root. The idempotent appends
-    * consult this to default to the sound whole-layout probe — the
-    * round-16 wiring made it opt-in via the stream's own split
-    * policy, which missed out-of-band splits (the engine's
-    * `splitOverfullIfNeeded` between a batch and its crash
-    * redelivery). */
+    * is permanently unsound on such a root. [[appendIdempotent]]
+    * consults this ([[CellRoot.replayCells]]) and probes the whole
+    * layout instead, whichever actuator split the root — a stream's
+    * own policy or an out-of-band engine split between a batch and
+    * its crash redelivery. */
   def hasSplitHistory(spark: org.apache.spark.sql.SparkSession,
                       dir: String): Boolean =
     graft.io.Markers.exists(spark, dir, SplitHistoryMarker)
@@ -3197,7 +3185,7 @@ object Ann {
     * crash fell before the final cleanup — the swap completed, drop
     * the leftover. Live missing + NO `__old` + a COMPLETE `_next`
     * (parquet commit marker present) ⇒ the legacy delete-then-rename
-    * window ([[appendRangeIndex]]'s old radii swap): the staged copy
+    * window (the range append's old radii swap): the staged copy
     * is the only complete table — promote it, never delete it
     * (deleting would strand the root until a manual rebuild,
     * contradicting the recovery-by-re-run contract). Completeness is
@@ -3602,59 +3590,27 @@ object Ann {
     * the pruned frame unchanged. EXACT per query like the in-memory
     * form (same radii argument); refusals inherited (bad radii
     * refuse on the collected values, before any IO). Returns
-    * (qId, dId, dist) ordered per query. */
+    * (qId, dId, dist) ordered per query.
+    *
+    * Under `metric = Cosine` the root must be the SPHERICAL layout
+    * ([[cellEps]]' contract; `dVec` may stay raw, cosine ignores
+    * norms): each query's admitted cells come from its normalized
+    * vector and its OWN reduced radius, exactly the cut the
+    * distributed join applies. Pruning changes IO, never results.
+    *
+    * The query frame is collected ONCE: the union, the eps validation
+    * and the join all read the same rows — a second evaluation of a
+    * limit/sample source could admit cells outside the pruned union
+    * and silently lose pairs. `pred` pushes into the SAME pruned scan
+    * (PushedFilters next to the isin). */
   def rangeJoinIvfStored(spark: org.apache.spark.sql.SparkSession,
                          dir: String, queries: DataFrame, qId: String,
                          qVec: String, epsCol: String, dId: String,
                          dVec: String, roundTo: Int = 6,
-                         pred: Column = lit(true)): DataFrame =
-    rangeJoinIvfStoredImpl(spark, dir, queries, qId, qVec, epsCol,
-      dId, dVec, roundTo, pred, cosine = false)
-
-  /** [[rangeJoinIvfStored]] under COSINE — the at-rest form of
-    * [[rangeJoinIvfPerEpsCos]], closing the round-16 asymmetry where
-    * the calibrated-cosine workload (per-document duplicate radii
-    * over text embeddings — THE common text-embedding case) could
-    * not get partition pruning: the root must be the SPHERICAL
-    * layout ([[rangeSearchCosStored]]'s contract — rows assigned
-    * under the normalized model, `radii` = [[cellRadii]] over the
-    * normalized column; `dVec` may stay raw, cosine ignores norms),
-    * each query's admitted cells come from the stored radii under
-    * its OWN reduced radius (`l2(q̂, centroid) ≤ radius + eps_l2 +
-    * slack`, eps_l2 = sqrt(2·eps_q + slack) — exactly the cut the
-    * distributed UDF applies, so the literal union is everything the
-    * join can touch), the union lands as PartitionFilters on the
-    * cell-partitioned `rows/` scan (asserted per call), and the
-    * per-eps cosine join runs over the pruned frame unchanged.
-    * Pruning changes IO, never results (the r96 oracle shares r94's
-    * index-free scan verbatim). */
-  def rangeJoinIvfStoredCos(spark: org.apache.spark.sql.SparkSession,
-                            dir: String, queries: DataFrame,
-                            qId: String, qVec: String, epsCol: String,
-                            dId: String, dVec: String,
-                            roundTo: Int = 6,
-                            pred: Column = lit(true)): DataFrame =
-    rangeJoinIvfStoredImpl(spark, dir, queries, qId, qVec, epsCol,
-      dId, dVec, roundTo, pred, cosine = true)
-
-  /** The ONE stored per-eps range-join recipe (L2 + cosine arms):
-    * collect the query frame ONCE (union, eps validation and join
-    * all read the same rows — a second evaluation of a limit/sample
-    * source could admit cells outside the pruned union and silently
-    * lose pairs), compute each query's admitted cells driver-side
-    * from the stored radii (the cosine arm reduces per query onto
-    * the unit sphere first), prune the rows scan by the literal
-    * union (asserted as PartitionFilters), push `pred` into the SAME
-    * pruned scan (PushedFilters next to the isin — the r82
-    * placement, at-rest form), and delegate to the family's one
-    * distributed join impl. */
-  private def rangeJoinIvfStoredImpl(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      queries: DataFrame, qId: String, qVec: String, epsCol: String,
-      dId: String, dVec: String, roundTo: Int, pred: Column,
-      cosine: Boolean): DataFrame = {
-    val label =
-      if (cosine) "rangeJoinIvfStoredCos" else "rangeJoinIvfStored"
+                         pred: Column = lit(true),
+                         metric: Metric = L2): DataFrame = {
+    val label = "rangeJoinIvfStored"
+    requireRangeMetric(metric, label)
     val (model, radii) = loadRangeIndex(spark, dir)
     val rad = collectRadiiMap(model, radii)
     val cents = collectCentroids(model)
@@ -3678,12 +3634,11 @@ object Ann {
         "infinity scans every cell")
     val qLocal = spark.createDataFrame(
       java.util.Arrays.asList(collected: _*), qProjected.schema)
-    // per-query admitted cells — the cosine arm runs the SAME cut the
-    // distributed UDF will apply: normalized query, reduced radius
+    // per-query admitted cells — the SAME cut the distributed UDF
+    // will apply (cosine: normalized query, reduced radius)
     val union = qRows.flatMap { case (v, eps) =>
-      val (qv, effEps) =
-        if (cosine) (normalizeDriver(v), math.sqrt(2.0 * eps + slack))
-        else (v, eps)
+      val qv = if (metric == Cosine) normalizeDriver(v) else v
+      val effEps = cellEps(metric, eps, slack)
       cents.iterator.filter { case (cid, c) =>
         L2.distScala(qv, c) <= rad.getOrElse(cid, 0.0) + effEps + slack
       }.map(_._1)
@@ -3702,44 +3657,9 @@ object Ann {
         union.isEmpty,
       s"$label: admitted-cell union did not become " +
         s"PartitionFilters on the rows scan:\n$phys")
-    if (cosine)
-      rangeJoinIvfPerEpsCosImpl(qLocal, qId, qVec, epsCol, pruned,
-        dId, dVec, model, radii, roundTo, validateEps = false,
-        label = label, pred = lit(true))
-    else
-      rangeJoinIvfPerEpsImpl(qLocal, qId, qVec, epsCol, pruned, dId,
-        dVec, model, radii, L2, roundTo, validateEps = false,
-        label = label, pred = lit(true))
-  }
-
-  /** COSINE range search over a stored spherical layout — the exact
-    * normalized-L2 reduction [[requireTriangleMetric]] names, made
-    * real: on unit vectors ‖a−b‖² = 2·cosDist(a,b), so the radii cut
-    * runs as L2 on the normalized column (a true metric — the
-    * triangle argument holds) with eps_l2 = sqrt(2·eps + slack),
-    * while the OUTPUT filter is true cosine on the raw vectors. The
-    * layout must be assigned under the spherical model (normalized
-    * vectors, L2 argmin) with `radii` = [[cellRadii]] over the
-    * normalized column; exactness carries through the reduction:
-    * round-cosDist(q,v) ≤ eps ⇒ l2(q̂,v̂) ≤ sqrt(2·eps + 10^-roundTo)
-    * ⇒ v's cell survives the cut. */
-  def rangeSearchCosStored(spark: org.apache.spark.sql.SparkSession,
-                           path: String, idCol: String, vecCol: String,
-                           model: IvfModel, radii: DataFrame,
-                           queryVec: Column, eps: Double,
-                           roundTo: Int = 6,
-                           pred: Column = lit(true)): DataFrame = {
-    val epsL2 = math.sqrt(2.0 * eps + math.pow(10.0, -roundTo))
-    // l2NormalizeQuery folds a LITERAL query's normalization on the
-    // driver (bit-identical by its contract), which keeps the cell cut
-    // inside rangeCells' driver fast path — the plain l2Normalize form
-    // is a computed column the fast path must decline
-    val cells = rangeCells(model, radii, l2NormalizeQuery(queryVec), L2,
-      epsL2, roundTo)
-    val pruned = spark.read.parquet(path)
-      .filter(col(model.idCol).isin(cells: _*))
-      .filter(pred)
-    rangeSearch(pruned, idCol, vecCol, queryVec, Cosine, eps, roundTo)
+    rangeJoinIvfPerEpsImpl(qLocal, qId, qVec, epsCol, pruned, dId,
+      dVec, model, radii, metric, roundTo, validateEps = false,
+      label = label, pred = lit(true))
   }
 
   /** Batch ε-similarity join — every (query, doc) pair within `eps`,
@@ -3788,7 +3708,15 @@ object Ann {
     * reach the distance cut — a filtered duplicate-radius sweep
     * (dedup within one language/source) pays candidate generation
     * only for rows the predicate admits, and surviving pairs are
-    * byte-identical to post-filtering the unfiltered join. Returns
+    * byte-identical to post-filtering the unfiltered join.
+    *
+    * `metric = Cosine` folds in the reduction [[requireTriangleMetric]]
+    * names, per row: the cell cut runs as L2 on the unit sphere
+    * against the SPHERICAL layout (`model` holds the normalized
+    * centroids the rows were assigned under, `radii` = [[cellRadii]]
+    * over the normalized column; `dVec` may stay raw), each query's
+    * own eps reduced by [[cellEps]], and the OUTPUT filter is true
+    * cosine on the raw vectors against each pair's own eps. Returns
     * (qId, dId, dist) ordered per query. */
   def rangeJoinIvfPerEps(queries: DataFrame, qId: String, qVec: String,
                          epsCol: String, assigned: DataFrame,
@@ -3799,35 +3727,6 @@ object Ann {
     rangeJoinIvfPerEpsImpl(queries, qId, qVec, epsCol, assigned, dId,
       dVec, model, radii, metric, roundTo, validateEps = true,
       label = "rangeJoinIvfPerEps", pred = pred)
-
-  /** [[rangeJoinIvfPerEps]] under COSINE — the reduction
-    * [[requireTriangleMetric]]'s refusal names, folded in per row
-    * (round 15 made the common text-embedding case hand-rolled:
-    * per-document duplicate radii over cosine embeddings needed
-    * manual prep). Cosine distance has no triangle inequality, so the
-    * cell cut runs as L2 ON THE UNIT SPHERE (‖â−b̂‖² = 2·cosDist —
-    * [[rangeSearchCosStored]]'s exact argument, row-wise): each query
-    * row's own eps reduces to `eps_l2 = sqrt(2·eps + slack)` inside
-    * the probe, the cut is `l2(q̂, centroid) ≤ radius + eps_l2 +
-    * slack` against the SPHERICAL layout ([[rangeSearchCosStored]]'s
-    * contract: `model` holds the normalized centroids the rows were
-    * assigned under, `radii` = [[cellRadii]] over the normalized
-    * column; `dVec` may stay raw — cosine ignores norms), and the
-    * OUTPUT filter is true cosine on the raw vectors against each
-    * pair's own eps. EXACT per query: round-cos(q,v) ≤ eps_q ⇒
-    * 2·cos ≤ 2·eps_q + slack ⇒ l2(q̂,v̂) ≤ eps_l2 ⇒ v's cell
-    * survives q's cut. Same refusals and collect-once discipline as
-    * the L2 form. Returns (qId, dId, dist) ordered per query. */
-  def rangeJoinIvfPerEpsCos(queries: DataFrame, qId: String,
-                            qVec: String, epsCol: String,
-                            assigned: DataFrame, dId: String,
-                            dVec: String, model: IvfModel,
-                            radii: DataFrame,
-                            roundTo: Int = 6,
-                            pred: Column = lit(true)): DataFrame =
-    rangeJoinIvfPerEpsCosImpl(queries, qId, qVec, epsCol, assigned,
-      dId, dVec, model, radii, roundTo, validateEps = true,
-      label = "rangeJoinIvfPerEpsCos", pred = pred)
 
   /** The range joins' probe side under a SIZE-GATED broadcast pin.
     * The exploded probe side (|Q|·intersecting-cells rows with full
@@ -3859,74 +3758,13 @@ object Ann {
     if (worstCase <= maxBytes) broadcast(probed) else probed
   }
 
-  private def rangeJoinIvfPerEpsCosImpl(
-      queries0: DataFrame, qId: String, qVec: String, epsCol: String,
-      assigned: DataFrame, dId: String, dVec: String, model: IvfModel,
-      radii: DataFrame, roundTo: Int, validateEps: Boolean,
-      label: String, pred: Column): DataFrame = {
-    val spark = queries0.sparkSession
-    val eCol = col(epsCol).cast("double")
-    // ONE materialization feeds validation AND the join (the L2
-    // form's discipline — a non-deterministic source could pass the
-    // eps scan yet carry a bad eps into the join); the stored form
-    // arrives pre-collected and pre-validated
-    val q1 =
-      if (validateEps) queries0.localCheckpoint(true) else queries0
-    if (validateEps) {
-      val badEps = q1
-        .filter(eCol.isNull || isnan(eCol) || eCol < 0 ||
-          eCol === Double.PositiveInfinity)
-        .limit(1).count()
-      require(badEps == 0L,
-        s"$label: $epsCol carries a null/negative/NaN/" +
-          "infinite radius — a NaN silently drops its query, an " +
-          "infinity scans every cell")
-    }
-    val rad = radii
-      .select(col(model.idCol).cast("long"), col("radius").cast("double"))
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-    val bc = spark.sparkContext.broadcast(
-      collectCentroids(model).map { case (id, c) =>
-        (id, c, rad.getOrElse(id, 0.0)) })
-    val slack = math.pow(10.0, -roundTo)
-    val cellsUdf = udf { (v: Seq[Double], eps: Double) =>
-      val nv = normalizeDriver(v.toArray)
-      val epsL2 = math.sqrt(2.0 * eps + slack)
-      bc.value.iterator
-        .filter { case (_, c, r) =>
-          L2.distScala(nv, c) <= r + epsL2 + slack }
-        .map(_._1).toSeq
-    }
-    val probed = q1
-      .withColumn(model.idCol,
-        explode(cellsUdf(col(qVec).cast("array<double>"), eCol)))
-    // `pred` thins the assigned frame BEFORE the cell join (the r82
-    // placement): disallowed rows never reach the distance cut.
-    // Probed side under the SIZE-GATED broadcast pin — the L2 impl's
-    // rationale (guide §3.1: queries are the bounded small side; the
-    // corpus must not be shuffled by ~k cell ids), with
-    // [[broadcastProbedIfBounded]]'s scale fallback. The corpus side
-    // rides [[parallelismFloor]]: the join-condition distance math
-    // runs in ITS tasks, and a single-file corpus scan would run it
-    // one-core.
-    broadcastProbedIfBounded(probed, queries0, bc.value.length)
-      .join(parallelismFloor(assigned.filter(pred)
-        .select(col(dId), col(dVec), col(model.idCol))), Seq(model.idCol))
-      .withColumn("dist",
-        round(Cosine.dist(col(qVec).cast("array<double>"),
-          col(dVec).cast("array<double>")), roundTo))
-      .filter(col("dist") <= eCol)
-      .select(col(qId), col(dId), col("dist"))
-      .orderBy(col(qId).asc, col("dist").asc, col(dId).asc)
-  }
-
   private def rangeJoinIvfPerEpsImpl(
       queries0: DataFrame, qId: String, qVec: String, epsCol: String,
       assigned: DataFrame, dId: String, dVec: String, model: IvfModel,
       radii: DataFrame, metric: Metric, roundTo: Int,
       validateEps: Boolean, label: String,
       pred: Column = lit(true)): DataFrame = {
-    requireTriangleMetric(metric, label)
+    requireRangeMetric(metric, label)
     val spark = queries0.sparkSession
     val eCol = col(epsCol).cast("double")
     // ONE materialization feeds validation AND the join: a second
@@ -3953,11 +3791,13 @@ object Ann {
       collectCentroids(model).map { case (id, c) =>
         (id, c, rad.getOrElse(id, 0.0)) })
     val slack = math.pow(10.0, -roundTo)
+    val cosine = metric == Cosine
+    // the cell cut is always L2; cosine runs it on the unit sphere
     val cellsUdf = udf { (v: Seq[Double], eps: Double) =>
-      val varr = v.toArray
+      val q = if (cosine) normalizeDriver(v.toArray) else v.toArray
+      val e = cellEps(metric, eps, slack)
       bc.value.iterator
-        .filter { case (_, c, r) =>
-          metric.distScala(varr, c) <= r + eps + slack }
+        .filter { case (_, c, r) => L2.distScala(q, c) <= r + e + slack }
         .map(_._1).toSeq
     }
     val probed = queries
@@ -4918,7 +4758,7 @@ object Ann {
     * LITERAL isin on the partition column (PartitionFilters — whole
     * unprobed cell directories are never read), then the usual
     * phase-1 scan + exact re-rank. With a `fresh/` side table
-    * ([[appendQuantizedFreshIdempotent]]) the probed fresh rows are
+    * ([[appendIdempotent]]) the probed fresh rows are
     * encoded on read under the root's frozen artifacts (the streaming
     * transforms, bit-identical to the batch build's codes) and unioned
     * in, so the result equals a one-shot rebuild that had always held
@@ -5005,9 +4845,9 @@ object Ann {
     * mid-merge. */
   private[graft] def quantizedFamily(spark: org.apache.spark.sql.SparkSession,
                                      dir: String): (QuantFamily, Boolean) = {
-    // every fresh-family entry point (append/compact/delete) funnels
-    // through this detect — the ONE guard seat for the quantized
-    // torn-merge refusal (loadQuantized covers searches)
+    // compaction and the declarative binding funnel through this detect —
+    // with the Quantized case's append entry, the guard seats for the
+    // quantized torn-merge refusal (loadQuantized covers searches)
     requireNoPendingMerge(spark, dir)
     detectQuantized(spark, dir).collect { case (f, Some(s)) => (f, s) }
       .getOrElse(throw unpinnedQuantized(dir))
@@ -5026,102 +4866,8 @@ object Ann {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Batch APPEND of raw rows into a quantized root's fresh side
-    * table, REPLAY-SAFE by id — the quantized member of the
-    * graduated-root maintenance family ([[appendIvfIdempotent]]'s
-    * discipline). Rows are assigned to the root's pinned cells (the
-    * marker must EXIST and match `dir/centroids`; spherical roots
-    * assign normalized-query-side, the geometry their stored
-    * centroids live in) and land RAW under `fresh/` partitioned by
-    * centroid_id — no codes are computed at append time: encoding is
-    * deferred to query ([[searchQuantizedStored]]) and to
-    * [[compactQuantizedFresh]]. The existence probe reads ONLY the
-    * touched cells' partitions of `fresh/` AND of the main layout (a
-    * batch redelivered AFTER compaction must also append nothing), so
-    * append cost scales with the batch and its touched cells, never
-    * the corpus.
-    *
-    * IDS ARE IMMUTABLE — [[appendIvfIdempotent]]'s documented
-    * discipline: the existence probe is pruned to the BATCH's touched
-    * cells, so a row re-ingested under a known id but a CHANGED vector
-    * that assigns to a different cell is not detected, and the id
-    * would end up live in two cells (main + fresh), both visible to
-    * the fresh-aware searches. Updated-vector re-ingest must be
-    * delete-then-append ([[deleteQuantizedFreshIds]] /
-    * [[deleteStoredIds]] first). Returns rows appended.
-    *
-    * SPLITS INVALIDATE THE TOUCHED-CELLS PROBE (the
-    * [[appendMatryoshkaIvfIdempotent]] hazard, quantized form): a
-    * [[splitOverfull]] between a batch's original
-    * append and its redelivery can strand a neighboring cell's
-    * boundary row off today's argmin, and the default probe would
-    * miss that copy. `probeAllCells = true` switches BOTH probes
-    * (main + fresh) to the sound whole-layout id form; the streamed
-    * seat wires it whenever its split policy is enabled, and a root
-    * with ANY split history ([[hasSplitHistory]]) rides the sound
-    * probe unconditionally — an out-of-band engine-cadence split
-    * between a batch and its crash redelivery must not depend on the
-    * stream's own policy flag. */
-  def appendQuantizedFreshIdempotent(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      newRows: DataFrame, idCol: String, vecCol: String,
-      probeAllCells: Boolean = false): Long = {
-    val (family, spherical) = quantizedFamily(spark, dir)
-    val dataSub = family.dataSub
-    if (readIvfModelMarker(spark, dir).isEmpty)
-      throw new IllegalStateException(
-        s"appendQuantizedFreshIdempotent: $dir has no IVF model " +
-          "marker — pin the build model first (ensure*Root at write " +
-          "time)")
-    val model = ivfModelAt(spark, dir)
-    // validates the centroids actually on disk against the pinned
-    // fingerprint (a hand-swapped centroids/ dir refuses here)
-    ensureIvfModelMarker(spark, dir, model)
-    val main = spark.read.parquet(s"$dir/$dataSub")
-    verifyQuantizedGeometry(spark, dir, dataSub, main, model, spherical,
-      idCol, vecCol)
-    val assigned =
-      if (spherical)
-        assign(withNormalized(newRows, vecCol, "__nvec"), "__nvec",
-          model, L2).drop("__nvec")
-      else assign(newRows, vecCol, model, L2)
-    val touched = distinctLongKeys(assigned, col(model.idCol))
-    if (touched.isEmpty) return 0L
-    val hasFresh = freshExists(spark, dir)
-    val probeAll = probeAllCells || hasSplitHistory(spark, dir)
-    def thin(df: DataFrame): DataFrame =
-      if (probeAll) df.select(col(idCol))
-      else df.filter(col(model.idCol).isin(touched: _*))
-        .select(col(idCol))
-    val inMain = thin(main)
-    val inFresh =
-      if (hasFresh) thin(spark.read.parquet(freshPath(dir)))
-      else inMain.limit(0)
-    val fresh = assigned
-      .join(broadcastExistingIfBounded(
-          inFresh.unionByName(inMain).withColumnRenamed(idCol, "__eid")),
-        assigned(idCol) === col("__eid"), "left_anti")
-      .localCheckpoint(true)
-    val n = fresh.count()
-    if (n > 0L) {
-      // EVERY batch (the first included) validates against the main
-      // layout's doc columns — the layout schema minus the family's
-      // code columns is exactly what a raw fresh row must carry; a
-      // first-batch check against nothing would let a narrow batch
-      // poison fresh/ and surface as an unresolved column at query
-      // time, far from the bad write (appendIvfIdempotent's rule)
-      val expected = org.apache.spark.sql.types.StructType(
-        main.schema.filterNot(f => family.codeCols.contains(f.name)))
-      requireAppendSchema(expected, fresh.schema, Set(model.idCol),
-        "appendQuantizedFreshIdempotent")
-      fresh.write.mode("append").partitionBy(model.idCol)
-        .parquet(freshPath(dir))
-    }
-    n
-  }
-
-  /** The assignment-geometry consistency probe behind
-    * [[appendQuantizedFreshIdempotent]]: the marker expresses only
+  /** The assignment-geometry consistency probe behind a quantized
+    * root's [[appendIdempotent]]: the marker expresses only
     * spherical-vs-not, but the quantized BUILDS accept any Metric —
     * an e.g. IP-built root would get fresh rows assigned under L2
     * into cells its own rows don't use, and probed searches would
@@ -5200,7 +4946,7 @@ object Ann {
       val tolerated =
         if (hasSplitHistory(spark, dir)) bad * 4 <= total else bad == 0L
       require(total == 0L || tolerated,
-        s"appendQuantizedFreshIdempotent: $bad of $total sampled " +
+        s"appendIdempotent: $bad of $total sampled " +
           s"rows in $dir/$dataSub sit decisively outside their " +
           "stored cells under the marker's geometry — the root was " +
           "built under a different assignment metric; fresh appends " +
@@ -5304,23 +5050,9 @@ object Ann {
     val mainPath = s"$dir/${family.dataSub}"
     val stored = spark.read.parquet(mainPath)
     val touched = distinctLongKeys(encoded, col("centroid_id"))
-    val existing = stored.filter(col("centroid_id").isin(touched: _*))
-      .select(col(idCol))
-    val toAppend = encoded
-      .join(broadcastExistingIfBounded(
-          existing.withColumnRenamed(idCol, "__eid")),
-        encoded(idCol) === col("__eid"), "left_anti")
-      .localCheckpoint(true)
-    val n = toAppend.count()
-    if (n > 0L) {
-      requireAppendSchema(stored.schema, toAppend.schema,
-        Set("centroid_id"), "compactQuantizedFresh")
-      // column ORDER normalized to the stored footer's (mixed orders
-      // across files read fine by name, but keep the layout uniform)
-      toAppend.select(stored.columns.map(col): _*)
-        .write.mode("append").partitionBy("centroid_id")
-        .parquet(mainPath)
-    }
+    val n = appendAbsent(encoded,
+      stored.filter(col("centroid_id").isin(touched: _*)).select(col(idCol)),
+      idCol, "centroid_id", stored.schema, mainPath, "compactQuantizedFresh")
     val p = new org.apache.hadoop.fs.Path(freshPath(dir))
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(p, true)

@@ -392,7 +392,7 @@ object Bm25 {
 
   /** Batch APPEND into a [[writePostings]] layout made REPLAY-SAFE by
     * doc id — the keyword member of the graduated-root maintenance
-    * family ([[graft.ops.Ann.appendRangeIndexIdempotent]]'s pattern):
+    * family ([[graft.ops.Ann.appendIdempotent]]'s pattern):
     * docs whose id already carries postings in the buckets this batch
     * touches are dropped before the append, so a crash-redelivered
     * foreachBatch batch appends NOTHING (id-keyed replay safety under

@@ -516,7 +516,7 @@ object Binding {
     * re-reads the root's model-fingerprint marker per rewrite and
     * re-collects centroids + radii exactly when maintenance
     * re-pinned them (split / merge). The RADII are re-collected at
-    * EVERY resolve, never cached: [[Ann.appendRangeIndex]] and the
+    * EVERY resolve, never cached: [[Ann.appendIdempotent]] and the
     * delete path grow/shrink a cell's stored radius WITHOUT a model
     * re-pin (the model didn't change), and a radius served stale is
     * the exact failure the rewrite must never have — a row appended

@@ -644,8 +644,9 @@ object Events {
     // pin 1: a crash-redelivered batch appends NOTHING
     val replay = rows.take(rows.length / 3)
       .toDF("vec_id", "embedding", "label")
-    val dup = graft.ops.Ann.appendRangeIndexIdempotent(s, root,
-      replay, "vec_id", "embedding")
+    val dup = graft.ops.Ann.appendIdempotent(
+      graft.ops.Ann.cellRoot(s, root, Some("embedding")),
+      replay, "vec_id")
     require(dup == 0L,
       s"s19: replayed batch appended $dup rows — append not replay-safe")
     // pin 2: radii stayed SOUND through every batch (each grew them
@@ -760,9 +761,9 @@ object Events {
       }
     } finally q.stop()
     // pin: a crash-redelivered batch appends NOTHING
-    val dup = graft.ops.Ann.appendMatryoshkaIvfIdempotent(s, root,
-      rows.take(rows.length / 3).toDF("vec_id", "embedding"),
-      "vec_id", "embedding")
+    val dup = graft.ops.Ann.appendIdempotent(
+      graft.ops.Ann.cellRoot(s, root, Some("embedding")),
+      rows.take(rows.length / 3).toDF("vec_id", "embedding"), "vec_id")
     require(dup == 0L,
       s"s21: replayed batch appended $dup rows — append not replay-safe")
     graft.ops.Ann.matryoshkaTopKIvf(s, root, "vec_id",
@@ -937,7 +938,7 @@ object Events {
     * layouts previously "rebuilt by design"). Codes are bound to
     * training-time codebooks, so the root never re-encodes per batch:
     * appended rows land RAW in the root's fresh side table
-    * ([[graft.ops.Ann.appendQuantizedFreshIdempotent]] — id-keyed
+    * ([[graft.ops.Ann.appendIdempotent]] — id-keyed
     * replay-safe, existence probe pruned to touched cells of fresh
     * AND main, so a batch redelivered even AFTER compaction appends
     * nothing), and the fresh-aware search PQ-encodes them ON READ
@@ -990,9 +991,10 @@ object Events {
       }
     } finally q.stop()
     // pin: a crash-redelivered batch appends NOTHING
-    val dup = graft.ops.Ann.appendQuantizedFreshIdempotent(s, dir,
+    val dup = graft.ops.Ann.appendIdempotent(
+      graft.ops.Ann.cellRoot(s, dir, Some("embedding")),
       rows.take(rows.length / 3).toDF("vec_id", "embedding", "label"),
-      "vec_id", "embedding")
+      "vec_id")
     require(dup == 0L,
       s"s25: replayed batch appended $dup rows — append not replay-safe")
     // r38's exact search over the grown root; cell dirs of BOTH the
@@ -1068,9 +1070,10 @@ object Events {
         "the stream")
     // a redelivered batch still appends nothing POST-graduation (the
     // probe reads main where the rows now live)
-    val dup = graft.ops.Ann.appendQuantizedFreshIdempotent(s, dir,
+    val dup = graft.ops.Ann.appendIdempotent(
+      graft.ops.Ann.cellRoot(s, dir, Some("embedding")),
       rows.take(rows.length / 3).toDF("vec_id", "embedding", "label"),
-      "vec_id", "embedding")
+      "vec_id")
     require(dup == 0L,
       s"s28: replayed batch appended $dup rows after graduation")
     val qv = e.filter(col("vec_id") === 11)
@@ -1192,9 +1195,10 @@ object Events {
         q.processAllAvailable()
       }
     } finally q.stop()
-    val dup = graft.ops.Ann.appendQuantizedFreshIdempotent(s, dir,
+    val dup = graft.ops.Ann.appendIdempotent(
+      graft.ops.Ann.cellRoot(s, dir, Some("embedding")),
       rows.take(rows.length / 3).toDF("vec_id", "embedding", "label"),
-      "vec_id", "embedding")
+      "vec_id")
     require(dup == 0L,
       s"s27: replayed batch appended $dup rows — append not replay-safe")
     val qv = e.filter(col("vec_id") === 13)
@@ -1276,9 +1280,10 @@ object Events {
       s"s29: split policy never fired — $cellsNow cells, trained $lists")
     // pin 2: redelivery appends ZERO against the re-partitioned
     // layout (the id probe finds the copies inside the sub-cells)
-    val dup = graft.ops.Ann.appendRangeIndexIdempotent(s, root,
+    val dup = graft.ops.Ann.appendIdempotent(
+      graft.ops.Ann.cellRoot(s, root, Some("embedding")),
       rows.take(rows.length / 3).toDF("vec_id", "embedding", "label"),
-      "vec_id", "embedding")
+      "vec_id")
     require(dup == 0L,
       s"s29: replayed batch appended $dup rows post-split")
     // pin 3: radii stayed sound through appends AND splits
@@ -1361,12 +1366,12 @@ object Events {
     require(cellsNow > lists,
       s"s31: split policy never fired — $cellsNow cells, trained $lists")
     // pin 2: redelivery appends ZERO against the re-partitioned root
-    // — via the SOUND whole-layout id probe the split-policy stream
-    // itself uses (a split can strand a replayed neighbor row
-    // off-argmin; the touched-cells probe would miss its copy)
-    val dup = graft.ops.Ann.appendMatryoshkaIvfIdempotent(s, root,
-      rows.take(rows.length / 2).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", probeAllCells = true)
+    // — via the SOUND whole-layout id probe the root's split history
+    // selects (a split can strand a replayed neighbor row off-argmin;
+    // the touched-cells probe would miss its copy)
+    val dup = graft.ops.Ann.appendIdempotent(
+      graft.ops.Ann.cellRoot(s, root, Some("embedding")),
+      rows.take(rows.length / 2).toDF("vec_id", "embedding"), "vec_id")
     require(dup == 0L,
       s"s31: replayed batch appended $dup rows post-split")
     // all-probe: the composed two-phase equals the flat prefix cut —
@@ -1438,11 +1443,12 @@ object Events {
       s"s32: split policy never fired — $cellsNow cells, trained $lists")
     require(!new java.io.File(dir, "fresh").exists(),
       "s32: the ratio-0 cadence must leave no fresh/ behind")
-    // the replay rides the SOUND whole-layout probe, as the
-    // split-policy stream itself does
-    val dup = graft.ops.Ann.appendQuantizedFreshIdempotent(s, dir,
+    // the replay rides the SOUND whole-layout probe the root's split
+    // history selects
+    val dup = graft.ops.Ann.appendIdempotent(
+      graft.ops.Ann.cellRoot(s, dir, Some("embedding")),
       rows.take(rows.length / 2).toDF("vec_id", "embedding", "label"),
-      "vec_id", "embedding", probeAllCells = true)
+      "vec_id")
     require(dup == 0L,
       s"s32: replayed batch appended $dup rows post-split+fold")
     val total = s.read.parquet(s"$dir/quantized").count()
@@ -1588,11 +1594,11 @@ object Events {
     val cellsNow = s.read.parquet(s"$root/centroids").count()
     require(cellsNow > lists,
       s"s33: split policy never fired — $cellsNow cells, trained $lists")
-    // pin 2: redelivery appends ZERO through the DEFAULT probe — the
-    // split-history marker must force the sound whole-layout form
-    // without the caller opting in (an out-of-band split between a
-    // batch and its redelivery gets no opt-in)
-    val dup = graft.ops.Ann.appendDenseRootIdempotent(s, root,
+    // pin 2: redelivery appends ZERO — the split-history marker alone
+    // selects the sound whole-layout form, so an out-of-band split
+    // between a batch and its redelivery is covered too
+    val dup = graft.ops.Ann.appendIdempotent(
+      graft.ops.Ann.cellRoot(s, root, None),
       rows.take(rows.length / 2).toDF("vec_id", "embedding", "label"),
       "vec_id")
     require(dup == 0L,

@@ -858,7 +858,7 @@ object Retrieval {
     * side table — the full incremental lifecycle under one oracle:
     * the r12 index trains on the FULL corpus, the root is written
     * from the even half, the odd half appends RAW into `fresh/`
-    * ([[Ann.appendQuantizedFreshIdempotent]]), then every vec_id
+    * ([[Ann.appendIdempotent]]), then every vec_id
     * divisible by 7 deletes from BOTH the main layout
     * ([[Ann.deleteStoredIds]]) and the side table
     * ([[Ann.deleteQuantizedFreshIds]] — without which a doomed
@@ -874,10 +874,11 @@ object Retrieval {
     Ann.writeQuantized(index.copy(quantized =
       index.quantized.filter(col("vec_id") % 2 === 0)), dir)
     Ann.ensureIvfSqRoot(s, dir, index, spherical = false)
-    val appended = Ann.appendQuantizedFreshIdempotent(s, dir,
+    val appended = Ann.appendIdempotent(
+      Ann.cellRoot(s, dir, Some("embedding")),
       e.filter(col("vec_id") % 2 === 1)
         .select(col("vec_id"), col("embedding"), col("label")),
-      "vec_id", "embedding")
+      "vec_id")
     require(appended > 0, "r84: no fresh rows appended — gate is vacuous")
     val doomed = e.filter(col("vec_id") % 7 === 0).select(col("vec_id"))
     val removedMain = Ann.deleteStoredIds(s, s"$dir/quantized",
@@ -914,10 +915,11 @@ object Retrieval {
     Ann.writeQuantized(index.copy(quantized =
       index.quantized.filter(col("vec_id") % 2 === 0)), dir)
     Ann.ensureIvfSqRoot(s, dir, index, spherical = false)
-    val appended = Ann.appendQuantizedFreshIdempotent(s, dir,
+    val appended = Ann.appendIdempotent(
+      Ann.cellRoot(s, dir, Some("embedding")),
       e.filter(col("vec_id") % 2 === 1)
         .select(col("vec_id"), col("embedding"), col("label")),
-      "vec_id", "embedding")
+      "vec_id")
     require(appended > 0, "r87: no fresh rows appended — gate is vacuous")
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
@@ -954,10 +956,11 @@ object Retrieval {
     Ann.writeQuantized(index.copy(quantized =
       index.quantized.filter(col("vec_id") % 2 === 0)), dir)
     Ann.ensureIvfSqRoot(s, dir, index, spherical = false)
-    val appended = Ann.appendQuantizedFreshIdempotent(s, dir,
+    val appended = Ann.appendIdempotent(
+      Ann.cellRoot(s, dir, Some("embedding")),
       e.filter(col("vec_id") % 2 === 1)
         .select(col("vec_id"), col("embedding"), col("label")),
-      "vec_id", "embedding")
+      "vec_id")
     require(appended > 0, "r92: no fresh rows appended — gate is vacuous")
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
@@ -1655,7 +1658,7 @@ object Retrieval {
   }
 
   /** r94: the PER-QUERY-radius range join under COSINE
-    * ([[Ann.rangeJoinIvfPerEpsCos]]) — r88 replayed on the metric
+    * ([[Ann.rangeJoinIvfPerEps]] under Cosine) — r88 replayed on the metric
     * real text embeddings ship, closing round 15's "manual
     * reduction" gap: the operator folds the normalized-L2 reduction
     * in per row (cell cut as L2 on the unit sphere with each query's
@@ -1677,8 +1680,8 @@ object Retrieval {
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"),
         (lit(0.65) + (col("vec_id") % 3).cast("double") * lit(0.05))
           .as("eps"))
-    Ann.rangeJoinIvfPerEpsCos(queries, "q_id", "qv", "eps", docs,
-        "d_id", "dv", model, radii)
+    Ann.rangeJoinIvfPerEps(queries, "q_id", "qv", "eps", docs, "d_id", "dv",
+        model, radii, Ann.Cosine)
       .filter(col("q_id") < col("d_id"))
       .select(col("q_id").as("qid"), col("d_id").as("did"),
         (col("dist") + lit(0.0)).as("dist"))
@@ -1712,8 +1715,8 @@ object Retrieval {
   }
 
   /** r96: the PER-QUERY-radius COSINE range join over a STORED
-    * spherical root ([[Ann.rangeJoinIvfStoredCos]]) — r94's workload
-    * with the at-rest pruning r89 gave the L2 form, closing round
+    * spherical root ([[Ann.rangeJoinIvfStored]] under Cosine) — r94's
+    * workload with the at-rest pruning r89 gave the L2 form, closing round
     * 16's asymmetry (the calibrated-cosine dedup case — per-document
     * duplicate radii over text embeddings — read whole unadmitted
     * cell directories): each query's admitted cells come from the
@@ -1735,8 +1738,8 @@ object Retrieval {
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"),
         (lit(0.65) + (col("vec_id") % 3).cast("double") * lit(0.05))
           .as("eps"))
-    Ann.rangeJoinIvfStoredCos(s, dir, queries, "q_id", "qv", "eps",
-        "vec_id", "embedding")
+    Ann.rangeJoinIvfStored(s, dir, queries, "q_id", "qv", "eps", "vec_id",
+        "embedding", metric = Ann.Cosine)
       .filter(col("q_id") < col("vec_id"))
       .select(col("q_id").as("qid"), col("vec_id").as("did"),
         (col("dist") + lit(0.0)).as("dist"))
@@ -2034,7 +2037,7 @@ object Retrieval {
         .select("vec_id", "dist")
     try {
       // freshness pin 1: APPEND-grown radii without a model re-pin —
-      // appendRangeIndex grows the receiving cell's stored radius but
+      // the range append grows the receiving cell's stored radius but
       // the quantizer didn't change, so a fingerprint-cached radius
       // would keep pruning the ONLY cell that can hold the new row
       // (silent row loss via append, the split hazard's quiet twin).
@@ -2046,7 +2049,8 @@ object Retrieval {
             .cast(e.schema("embedding").dataType).as("embedding"),
           lit(1).cast(e.schema("label").dataType).as("label"))
         .localCheckpoint(true)
-      Ann.appendRangeIndex(s, dir, far, "embedding")
+      Ann.appendIdempotent(Ann.cellRoot(s, dir, Some("embedding")), far,
+        "vec_id")
       val farVec = far.select(col("embedding").cast("array<double>"))
         .head().getSeq[Double](0).toSeq
       val pin1 = declarative(typedlit(farVec), 1e-4)
@@ -2279,7 +2283,8 @@ object Retrieval {
             .cast(e.schema("embedding").dataType).as("embedding"),
           lit(1).cast(e.schema("label").dataType).as("label"))
         .localCheckpoint(true)
-      Ann.appendRangeIndex(s, dir, far, "embedding")
+      Ann.appendIdempotent(Ann.cellRoot(s, dir, Some("embedding")), far,
+        "vec_id")
       val farVec = far.select(col("embedding").cast("array<double>"))
         .head().getSeq[Double](0).toSeq
       val pin1 = declarative(typedlit(farVec), 1e-4)
@@ -2446,8 +2451,9 @@ object Retrieval {
         .select((col("vec_id") + lit(10000000L)).as("vec_id"),
           col("embedding"), col("label"))
         .localCheckpoint(true)
-      require(Ann.appendQuantizedFreshIdempotent(s, dir, dup,
-        "vec_id", "embedding") == 1L, "r105: fresh append lost the row")
+      require(Ann.appendIdempotent(
+        Ann.cellRoot(s, dir, Some("embedding")),
+        dup, "vec_id") == 1L, "r105: fresh append lost the row")
       require(Ann.compactQuantizedFresh(s, dir, "vec_id",
         "embedding") == 1L, "r105: compaction lost the row")
       reg(1)
@@ -2614,9 +2620,9 @@ object Retrieval {
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"),
         (lit(0.65) + (col("vec_id") % 3).cast("double") * lit(0.05))
           .as("eps"))
-    val df = Ann.rangeJoinIvfStoredCos(s, dir, queries, "q_id", "qv",
-        "eps", "vec_id", "embedding",
-        pred = col("label") % 2 === 1)
+    val df = Ann.rangeJoinIvfStored(s, dir, queries, "q_id", "qv", "eps",
+        "vec_id", "embedding", pred = col("label") % 2 === 1,
+        metric = Ann.Cosine)
       .filter(col("q_id") < col("vec_id"))
       .select(col("q_id").as("qid"), col("vec_id").as("did"),
         (col("dist") + lit(0.0)).as("dist"))
@@ -2763,8 +2769,8 @@ object Retrieval {
   }
 
   /** r63: COSINE range search at rest — the normalized-L2 reduction
-    * ([[Ann.rangeSearchCosStored]]): cosine distance is not a metric
-    * (no triangle inequality), so the radii cut runs as L2 on the
+    * ([[Ann.rangeSearchIvfStored]] under Cosine): cosine distance is
+    * not a metric (no triangle inequality), so the radii cut runs as L2 on the
     * unit sphere (‖â−b̂‖² = 2·cosDist) with eps_l2 = sqrt(2·eps +
     * slack), while the output filter is TRUE cosine on the raw
     * vectors. Exact like r56, so the oracle is the plain cosine
@@ -2778,8 +2784,8 @@ object Retrieval {
       .createTempDirectory("graft_range_cos").toString
     Ann.writePartitioned(assigned.drop("__nvec"), dir)
     val radii = Ann.cellRadii(assigned, "__nvec", model, Ann.L2)
-    val df = Ann.rangeSearchCosStored(s, dir, "vec_id", "embedding",
-        model, radii, qvec(s, d, 7), eps = 0.78)
+    val df = Ann.rangeSearchIvfStored(s, dir, "vec_id", "embedding", model,
+        radii, qvec(s, d, 7), Ann.Cosine, eps = 0.78)
       .select(col("vec_id"), (col("dist") + lit(0.0)).as("dist"))
     val phys = df.queryExecution.executedPlan.toString
     assertPartitionPruned(phys, "centroid_id", "stored cosine range")
@@ -3038,10 +3044,10 @@ object Retrieval {
   }
 
   /** r81: batch APPEND into the composed root
-    * ([[Ann.appendMatryoshkaIvf]]): half the corpus is written at
+    * ([[Ann.appendIdempotent]]): half the corpus is written at
     * build time, the other half appended under the root's OWN pinned
-    * geometry (marker dims+metric, loaded centroids — the
-    * appendRangeIndex rule) through the same row builder, landing
+    * geometry (marker dims+metric, loaded centroids — the rule every
+    * cell root's append keeps) through the same row builder, landing
     * cell-partitioned so searches prune it like day-one rows. The
     * model is the full-corpus label-means, so the grown root is
     * indistinguishable from a one-shot build and r78's replay lands
@@ -3053,8 +3059,9 @@ object Retrieval {
       .createTempDirectory("graft_mrl_ivf_app").toString
     Ann.writeMatryoshkaIvf(e.filter(col("vec_id") % 2 === 0),
       "vec_id", "embedding", dims = 8, model, dir)
-    Ann.appendMatryoshkaIvf(s, dir,
-      e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding")
+    Ann.appendIdempotent(
+      Ann.cellRoot(s, dir, Some("embedding")),
+      e.filter(col("vec_id") % 2 === 1), "vec_id")
     val grown = s.read.parquet(s"$dir/rows").count()
     require(grown == e.count(),
       s"r81: grown root holds $grown rows, corpus has ${e.count()}")
@@ -3516,7 +3523,7 @@ object Retrieval {
     df
   }
 
-  /** r67: sound range-root APPEND ([[Ann.appendRangeIndex]]) — the
+  /** r67: sound range-root APPEND ([[Ann.appendIdempotent]]) — the
     * root is built from the vec_id<400 prefix only, the tail appends
     * through the radii-first grow path, and the stored search must
     * equal the plain FULL-corpus range scan: exactly the rows a
@@ -3531,8 +3538,8 @@ object Retrieval {
       .createTempDirectory("graft_range_append").toString
     Ann.writeRangeIndex(Ann.assign(head, "embedding", model, Ann.L2),
       "embedding", model, dir)
-    Ann.appendRangeIndex(s, dir, e.filter(col("vec_id") >= 400),
-      "embedding")
+    Ann.appendIdempotent(Ann.cellRoot(s, dir, Some("embedding")),
+      e.filter(col("vec_id") >= 400), "vec_id")
     Ann.rangeSearchStoredSelf(s, dir, "vec_id", "embedding",
         qvec(s, d, 7), eps = 1.25)
       .select("vec_id", "dist")

@@ -404,8 +404,8 @@ object Stream {
     * with different dims/metric or a retrained model refuses). After
     * [[compactStored]](`dir/rows`) graduation the root IS a
     * writeMatryoshkaIvf layout: [[graft.ops.Ann.matryoshkaTopKIvf]],
-    * [[graft.ops.Ann.appendMatryoshkaIvf]] and the cell-confined
-    * delete all work unchanged. */
+    * [[graft.ops.Ann.appendIdempotent]] and the cell-confined delete
+    * all work unchanged. */
   def ingestMatryoshkaIvf(vectors: DataFrame, idCol: String,
                           vecCol: String, dims: Int,
                           model: graft.ops.Ann.IvfModel,
@@ -512,25 +512,23 @@ object Stream {
     * policy can ever ride it — a split re-pins the model and every
     * caller-supplied copy goes stale. The dense ROOT owns its
     * centroids, so each micro-batch assigns under the DISK model
-    * ([[graft.ops.Ann.appendDenseRootIdempotent]] — id-keyed
-    * replay-safe, heals crash debris at entry) and keeps working
-    * across every split/merge the policy triggers.
+    * ([[graft.ops.Ann.appendIdempotent]] — id-keyed replay-safe,
+    * heals crash debris at entry) and keeps working across every
+    * split/merge the policy triggers.
     *
     * `splitMaxRows` wires the OVERFULL-CELL SPLIT POLICY into the
-    * cadence ([[ingestRangeAppend]]'s seat verbatim): after each
-    * batch's append, any cell past the threshold locally retrains
-    * into sub-cells under the root's own pinned metric (cosine roots
-    * on the unit sphere), the marker re-pins, and the replay probe
-    * rides the sound whole-layout form (auto-wired here AND by the
-    * split-history marker, so even a policy-less restart of this
-    * stream over a previously split root stays replay-safe).
-    * Malformed thresholds refuse at stream START. */
+    * cadence ([[rootAppend]]'s default policy): after each batch's
+    * append, any cell past the threshold locally retrains into
+    * sub-cells under the root's own pinned metric (cosine roots on
+    * the unit sphere), the marker re-pins, and from then on the
+    * split-history marker makes the replay probe read the whole
+    * layout. Malformed thresholds refuse at stream START. */
   def ingestDenseRootAppend(vectors: DataFrame, idCol: String,
                             root: String, checkpoint: String,
                             splitMaxRows: Option[Long] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    denseRootAppend(vectors, idCol, root, checkpoint, splitMaxRows,
-      "ingestDenseRootAppend")(_ => ())
+    rootAppend[graft.ops.Ann.CellRoot.Dense](vectors, idCol, None, root,
+      checkpoint, splitMaxRows, "ingestDenseRootAppend")
 
   /** [[ingestDenseRootAppend]] for a MAXSIM dense root — the
     * graduated multivec layout IS a dense root over the persisted
@@ -548,47 +546,56 @@ object Stream {
                              splitMaxRows: Option[Long] = None,
                              meanCol: String = "mv_mean")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    denseRootAppend(
+    rootAppend[graft.ops.Ann.CellRoot.Dense](
       docs.withColumn(meanCol,
         graft.ops.Ann.tokenMeanCol(col(mvCol), dim)),
-      idCol, root, checkpoint, splitMaxRows, "ingestMaxsimRootAppend") {
-      dense =>
+      idCol, None, root, checkpoint, splitMaxRows,
+      "ingestMaxsimRootAppend",
+      check = dense =>
         require(dense.vecCol == meanCol &&
             dense.metric == graft.ops.Ann.Cosine,
           s"ingestMaxsimRootAppend: $root is pinned to (${dense.metric}, " +
             s"'${dense.vecCol}') but the maxsim family appends (Cosine, " +
-            s"'$meanCol') — one root, one geometry")
-    }
+            s"'$meanCol') — one root, one geometry"))
 
-  /** The dense-root seat behind [[ingestDenseRootAppend]] and
-    * [[ingestMaxsimRootAppend]]: resolve the root once, run the
-    * caller's `check` on it, heal, and stream. Every refusal comes
-    * before `writeStream`. */
-  private def denseRootAppend(vectors: DataFrame, idCol: String,
-                              root: String, checkpoint: String,
-                              splitMaxRows: Option[Long], who: String)(
-      check: graft.ops.Ann.CellRoot.Dense => Unit)
+  /** The start-and-loop body of every graduated cell-root append
+    * stream. At START, before `writeStream` and before any mutation
+    * but the heal: refuse a non-positive `splitMaxRows`, resolve the
+    * root once as family `R` (`vecCol` names the batch's vector
+    * column where the family does not record it), run the seat's
+    * `check`, refuse a root without a pinned IVF model marker, heal
+    * crash debris (the stream owns policies whose swaps and markers
+    * can crash mid-batch — it must restart over its own debris, not
+    * wedge), and read `centroids/` (loud when missing). Per
+    * micro-batch: [[graft.ops.Ann.appendIdempotent]], then
+    * `afterAppend` — by default the overfull-cell split at
+    * `splitMaxRows`. */
+  private def rootAppend[R <: graft.ops.Ann.CellRoot](
+      vectors: DataFrame, idCol: String, vecCol: Option[String],
+      root: String, checkpoint: String, splitMaxRows: Option[Long],
+      who: String, check: R => Unit = (_: R) => (),
+      afterAppend: Option[R => Unit] = None)(
+      implicit tag: scala.reflect.ClassTag[R])
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = vectors.sparkSession
     splitMaxRows.foreach(m => require(m > 0,
       s"$who: splitMaxRows must be positive, got $m — a non-positive " +
         "threshold would flag every cell every batch"))
-    val cells = graft.ops.Ann.cellRoot(spark, root, None)
-      .as[graft.ops.Ann.CellRoot.Dense](who)
+    val cells = graft.ops.Ann.cellRoot(spark, root, vecCol).as[R](who)
     check(cells)
-    // this stream owns a split policy whose swaps and markers can
-    // crash mid-batch — restart over the debris, don't wedge
+    if (graft.ops.Ann.readIvfModelMarker(spark, root).isEmpty)
+      throw new IllegalStateException(
+        s"$who: $root has no pinned IVF model marker — not a graduated " +
+          "root")
     graft.ops.Ann.healRoot(spark, root)
     spark.read.parquet(s"$root/centroids") // loud when centroids miss
+    val after = afterAppend.getOrElse((r: R) =>
+      splitMaxRows.foreach(m => graft.ops.Ann.splitOverfull(r, m)))
     vectors.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // split policy wired ⇒ sound whole-layout id probe (the
-        // split-history marker also forces it once any split has run)
-        graft.ops.Ann.appendDenseRootIdempotent(spark, root, batch,
-          idCol, probeAllCells = splitMaxRows.isDefined)
-        splitMaxRows.foreach(m => graft.ops.Ann.splitOverfull(cells, m))
-        ()
+        graft.ops.Ann.appendIdempotent(cells, batch, idCol)
+        after(cells)
       }
       .start()
   }
@@ -647,49 +654,27 @@ object Stream {
     * gap: [[ingestMatryoshkaIvf]] grows a FRESH commit-log dir, but a
     * graduated root is a batch layout, so its continued growth runs
     * as foreachBatch over the id-keyed replay-safe
-    * [[graft.ops.Ann.appendMatryoshkaIvfIdempotent]]. Fails at START,
-    * not first batch, on a non-root.
+    * [[graft.ops.Ann.appendIdempotent]]. Fails at START, not first
+    * batch, on a non-root.
     *
     * `splitMaxRows` wires the OVERFULL-CELL SPLIT POLICY into the
-    * composed root's maintenance cadence —
-    * [[ingestRangeAppend]]'s seat verbatim, closing the asymmetry
-    * where the north-star layout was the one whose hot cells nothing
-    * bounded: after each batch's append, any cell past the threshold
-    * locally retrains into sub-cells under the root's own pinned
-    * geometry ([[graft.ops.Ann.splitOverfull]] — only its
-    * directories rewritten, marker re-pinned); a sub-cell still
-    * overfull after one k=2 split catches the next batch's pass.
-    * Malformed thresholds refuse at stream START, before any
-    * mutation. */
+    * composed root's maintenance cadence ([[rootAppend]]'s default
+    * policy), closing the asymmetry where the north-star layout was
+    * the one whose hot cells nothing bounded: after each batch's
+    * append, any cell past the threshold locally retrains into
+    * sub-cells under the root's own pinned geometry
+    * ([[graft.ops.Ann.splitOverfull]] — only its directories
+    * rewritten, marker re-pinned); a sub-cell still overfull after
+    * one k=2 split catches the next batch's pass. Malformed
+    * thresholds refuse at stream START, before any mutation. */
   def ingestMatryoshkaIvfAppend(vectors: DataFrame, idCol: String,
                                 vecCol: String, root: String,
                                 checkpoint: String,
                                 splitMaxRows: Option[Long] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = vectors.sparkSession
-    splitMaxRows.foreach(m => require(m > 0,
-      s"ingestMatryoshkaIvfAppend: splitMaxRows must be positive, " +
-        s"got $m — a non-positive threshold would flag every cell " +
-        "every batch"))
-    val cells = graft.ops.Ann.cellRoot(spark, root, None)
-      .as[graft.ops.Ann.CellRoot.MrlIvf]("ingestMatryoshkaIvfAppend")
-    // this stream owns split/merge policies whose swaps and markers
-    // can crash mid-batch — restart over the debris, don't wedge
-    graft.ops.Ann.healRoot(spark, root)
-    spark.read.parquet(s"$root/centroids") // loud when centroids miss
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // with a split policy wired, a redelivered batch can race a
-        // split that stranded a neighbor's row off-argmin — probe the
-        // WHOLE layout's ids (sound), not just the touched cells
-        graft.ops.Ann.appendMatryoshkaIvfIdempotent(spark, root, batch,
-          idCol, vecCol, probeAllCells = splitMaxRows.isDefined)
-        splitMaxRows.foreach(m => graft.ops.Ann.splitOverfull(cells, m))
-        ()
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    rootAppend[graft.ops.Ann.CellRoot.MrlIvf](vectors, idCol,
+      Some(vecCol), root, checkpoint, splitMaxRows,
+      "ingestMatryoshkaIvfAppend")
 
   /** Continuous APPEND into an already-graduated
     * [[graft.ops.Ann.writeRangeIndex]] root — the MAINTENANCE stream
@@ -698,12 +683,12 @@ object Stream {
     * a batch layout (a restarted file sink's fresh commit log would
     * hide it — [[requireStreamableLayout]]'s refusal), so its
     * continued growth runs as foreachBatch over
-    * [[graft.ops.Ann.appendRangeIndexIdempotent]]: each micro-batch
-    * grows the covering radii BEFORE its rows become visible (the
-    * r67 soundness order, per batch), and a crash-redelivered batch
-    * appends nothing (id-keyed replay safety standing in for the
-    * commit log the batch layout no longer has). Fails at START, not
-    * first batch, when `root` is not a graduated range index.
+    * [[graft.ops.Ann.appendIdempotent]]: each micro-batch grows the
+    * covering radii BEFORE its rows become visible (the r67 soundness
+    * order, per batch), and a crash-redelivered batch appends nothing
+    * (id-keyed replay safety standing in for the commit log the batch
+    * layout no longer has). Fails at START, not first batch, when
+    * `root` is not a graduated range index.
     *
     * `splitMaxRows` wires the OVERFULL-CELL SPLIT POLICY into the
     * maintenance cadence (the s28 lesson for the cell-growth
@@ -720,47 +705,21 @@ object Stream {
                         vecCol: String, root: String,
                         checkpoint: String,
                         splitMaxRows: Option[Long] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = vectors.sparkSession
-    splitMaxRows.foreach(m => require(m > 0,
-      s"ingestRangeAppend: splitMaxRows must be positive, got $m — " +
-        "a non-positive threshold would flag every cell every batch"))
-    val cells = graft.ops.Ann.cellRoot(spark, root, Some(vecCol))
-      .as[graft.ops.Ann.CellRoot.Range]("ingestRangeAppend")
-    // recover EVERY torn state (crashed side-table swaps, a pending
-    // cell merge) BEFORE the start-time load: this stream owns the
-    // split policy, so it must be able to restart over its own crash
-    // debris instead of wedging on the missing live path (or the
-    // pending-merge refusal) until an operator intervenes by hand
-    graft.ops.Ann.healRoot(spark, root)
-    graft.ops.Ann.loadRangeIndex(spark, root)
-    if (graft.ops.Ann.readIvfModelMarker(spark, root).isEmpty)
-      throw new IllegalStateException(
-        s"ingestRangeAppend: $root has no pinned IVF model marker — " +
-          "not a graduated range root")
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Ann.appendRangeIndexIdempotent(spark, root, batch,
-          idCol, vecCol)
-        splitMaxRows.foreach(m => graft.ops.Ann.splitOverfull(cells, m))
-        ()
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    rootAppend[graft.ops.Ann.CellRoot.Range](vectors, idCol,
+      Some(vecCol), root, checkpoint, splitMaxRows, "ingestRangeAppend")
 
   /** Continuous APPEND into a GRADUATED quantized root (SQ / PQ /
     * 1-bit) — the quantized member of the graduated-root maintenance
     * family, closing its last gap: codes are bound to training-time
     * bounds/codebooks, so instead of re-encoding per batch the rows
     * land RAW in the root's fresh side table
-    * ([[graft.ops.Ann.appendQuantizedFreshIdempotent]] — id-keyed
-    * replay-safe, existence probe pruned to touched cells of fresh
-    * AND main), are encoded ON READ by the `*StoredFresh` searches,
-    * and fold into the main layout at
-    * [[graft.ops.Ann.compactQuantizedFresh]]. Fails at START, not
-    * first batch, when `root` carries no quantized geometry marker or
-    * no pinned IVF model.
+    * ([[graft.ops.Ann.appendIdempotent]] — id-keyed replay-safe,
+    * existence probe pruned to touched cells of fresh AND main), are
+    * encoded ON READ by the `*StoredFresh` searches, and fold into
+    * the main layout at [[graft.ops.Ann.compactQuantizedFresh]].
+    * Fails at START, not first batch, when `root` carries no
+    * quantized geometry marker or no pinned IVF model.
     *
     * `compactRatio` + `splitMaxRows` form ONE policy cadence (the s28
     * + s29 lessons on the quantized lifecycle): fresh/ graduates when
@@ -781,10 +740,6 @@ object Stream {
       require(r >= 0.0 && !r.isNaN && !r.isInfinity,
         s"ingestQuantizedFreshAppend: compactRatio must be a finite " +
           s"ratio >= 0, got $r"))
-    splitMaxRows.foreach(m => require(m > 0,
-      s"ingestQuantizedFreshAppend: splitMaxRows must be positive, " +
-        s"got $m — a non-positive threshold would flag every cell " +
-        "every batch"))
     // the quantized split refuses while fresh/ exists, so the split
     // policy can only ride the compaction trigger — a split threshold
     // without a compaction ratio would silently never fire
@@ -792,34 +747,19 @@ object Stream {
       "ingestQuantizedFreshAppend: splitMaxRows needs compactRatio — " +
         "the overfull split runs on the compacted (fresh-less) root, " +
         "so the two thresholds form ONE policy cadence")
-    val spark = vectors.sparkSession
-    // loud on a non-root BEFORE any mutation: the append itself also
-    // family-detects, but a stream must refuse at start
-    val cells = graft.ops.Ann.cellRoot(spark, root, Some(vecCol))
-      .as[graft.ops.Ann.CellRoot.Quantized]("ingestQuantizedFreshAppend")
-    if (graft.ops.Ann.readIvfModelMarker(spark, root).isEmpty)
-      throw new IllegalStateException(
-        s"ingestQuantizedFreshAppend: $root has no pinned IVF model " +
-          "marker — not a graduated quantized root")
-    // this stream owns compact/split policies whose swaps and markers
-    // can crash mid-batch — restart over the debris, don't wedge
-    graft.ops.Ann.healRoot(spark, root)
-    spark.read.parquet(s"$root/centroids") // loud when centroids miss
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // split policy wired ⇒ sound whole-layout id probe (a replay
-        // can race a split that stranded a neighbor row off-argmin)
-        graft.ops.Ann.appendQuantizedFreshIdempotent(spark, root, batch,
-          idCol, vecCol, probeAllCells = splitMaxRows.isDefined)
+    rootAppend[graft.ops.Ann.CellRoot.Quantized](vectors, idCol,
+      Some(vecCol), root, checkpoint, splitMaxRows,
+      "ingestQuantizedFreshAppend",
+      afterAppend = Some(cells =>
         // the post-append POLICY seat (r14 verdict #4): with a ratio
-        // wired, fresh/ graduates as soon as it outgrows
-        // ratio·|main| — results identical across the trigger
+        // wired, fresh/ graduates as soon as it outgrows ratio·|main|
+        // — results identical across the trigger
         // (compactQuantizedFresh's contract), so a stream can run
         // forever without fresh/ growing unboundedly
         compactRatio.foreach { r =>
           val compacted = graft.ops.Ann
-            .compactQuantizedFreshIfNeeded(spark, root, idCol, vecCol, r)
+            .compactQuantizedFreshIfNeeded(vectors.sparkSession, root,
+              idCol, vecCol, r)
           // the SPLIT half of the lifecycle (round 16): compaction is
           // exactly what grows hot cells, so the overfull policy runs
           // right after a fold emptied fresh/ — the only moment the
@@ -830,10 +770,7 @@ object Stream {
           // under the post-split disk centroids.
           if (compacted.isDefined)
             splitMaxRows.foreach(m => graft.ops.Ann.splitOverfull(cells, m))
-        }
-        ()
-      }
-      .start()
+        }))
   }
 
   /** Continuous matryoshka ingest — the FLAT member of the at-rest
@@ -879,7 +816,7 @@ object Stream {
     * a log names deleted files (the compactStored graduation-order
     * lesson); a crash between the two renames leaves the path
     * MISSING — a loudly-failing read, never a silently-partial
-    * layout (the appendRangeIndex radii-swap discipline). Returns
+    * layout (the range radii-swap discipline). Returns
     * the number of data files in the graduated directory. */
   def compactFlat(spark: org.apache.spark.sql.SparkSession, dir: String,
                   numFiles: Int = 1): Long = {

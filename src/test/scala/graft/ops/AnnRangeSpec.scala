@@ -226,8 +226,8 @@ class AnnRangeSpec extends SparkSpecBase {
     val queries = docs.filter(col("vec_id") < 20)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"),
         when(col("vec_id") % 2 === 0, 0.02).otherwise(0.6).as("eps"))
-    val got = Ann.rangeJoinIvfPerEpsCos(queries, "q_id", "qv", "eps",
-        docSide, "d_id", "dv", model, radii)
+    val got = Ann.rangeJoinIvfPerEps(queries, "q_id", "qv", "eps", docSide,
+        "d_id", "dv", model, radii, Ann.Cosine)
       .select("q_id", "d_id", "dist")
       .as[(Long, Long, Double)].collect().toSet
     // brute force: per-pair rounded cosine against the query's own eps
@@ -249,9 +249,8 @@ class AnnRangeSpec extends SparkSpecBase {
     for (bad <- Seq(lit(Double.NaN), lit(-0.1),
         lit(Double.PositiveInfinity), lit(null).cast("double"))) {
       intercept[IllegalArgumentException] {
-        Ann.rangeJoinIvfPerEpsCos(
-          queries.withColumn("eps", bad), "q_id", "qv", "eps",
-          docSide, "d_id", "dv", model, radii).collect()
+        Ann.rangeJoinIvfPerEps(queries.withColumn("eps", bad), "q_id", "qv",
+            "eps", docSide, "d_id", "dv", model, radii, Ann.Cosine).collect()
       }
     }
   }
@@ -422,9 +421,11 @@ class AnnRangeSpec extends SparkSpecBase {
     assert(health.keySet.intersect(newIds.toSet) === newIds.toSet)
     assert(!health.keySet.contains(splits.keySet.head))
     // appends still work: the marker was re-pinned to the NEW model
-    Ann.appendRangeIndex(sp, dir,
+    Ann.appendIdempotent(
+      Ann.cellRoot(sp, dir, Some("embedding")),
       Seq((1000L, Seq(1.0, 0.5), 0)).toDF("vec_id", "embedding",
-        "cluster"), "embedding")
+        "cluster"),
+      "vec_id")
     val after = search()
     assert(after.map(_._1).contains(1000L))
     assert(after.filterNot(_._1 == 1000L) === before)
@@ -488,9 +489,11 @@ class AnnRangeSpec extends SparkSpecBase {
     assert(Ann.mergeUnderfull(Ann.cellRoot(sp, dir, Some("embedding")),
       5).isEmpty)
     // post-merge append works under the root's (reduced) own model
-    assert(Ann.appendRangeIndexIdempotent(sp, dir,
+    assert(Ann.appendIdempotent(
+      Ann.cellRoot(sp, dir, Some("embedding")),
       Seq((500L, Seq(0.3, 0.1), 0)).toDF("vec_id", "embedding",
-        "cluster"), "vec_id", "embedding") === 1L)
+        "cluster"),
+      "vec_id") === 1L)
     // an all-underfull threshold refuses (nothing to merge into)
     intercept[IllegalArgumentException] {
       Ann.mergeUnderfull(Ann.cellRoot(sp, dir, Some("embedding")), 1000000L)
@@ -581,8 +584,8 @@ class AnnRangeSpec extends SparkSpecBase {
       .createTempDirectory("graft-range-cos-spec").toString
     Ann.writePartitioned(assigned.drop("__nvec"), dir)
     val q = typedlit(Seq(5.0, 0.05)) // direction ~cluster 0, big norm
-    val got = Ann.rangeSearchCosStored(sp, dir, "vec_id", "embedding",
-        model, radii, q, eps = 0.1)
+    val got = Ann.rangeSearchIvfStored(sp, dir, "vec_id", "embedding", model,
+        radii, q, Ann.Cosine, eps = 0.1)
       .select("vec_id", "dist").as[(Long, Double)].collect()
     val want = Ann.rangeSearch(docs, "vec_id", "embedding", q,
         Ann.Cosine, eps = 0.1)
@@ -613,6 +616,32 @@ class AnnRangeSpec extends SparkSpecBase {
     assert(Ann.rangeCells(model, radii, q, Ann.L2, eps = 1.0).isEmpty)
   }
 
+  test("range append checks column TYPES, not names: a batch whose " +
+      "cluster column is a string over the stored int refuses, and " +
+      "rows/ and radii/ stay unchanged") {
+    val sp = spark
+    import sp.implicits._
+    val docs = clustered(sp)
+    val model = Ann.buildIvf(docs, "cluster", "embedding")
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-range-schema-spec").toString
+    Ann.writeRangeIndex(Ann.assign(docs, "embedding", model, Ann.L2),
+      "embedding", model, dir)
+    def snapshot = (
+      sp.read.parquet(s"$dir/rows").orderBy("vec_id").collect().toSeq,
+      sp.read.parquet(s"$dir/radii").orderBy("centroid_id").collect().toSeq)
+    val before = snapshot
+    // same names, one type off: outside cluster 0's radius, so a
+    // written batch would also have grown radii/
+    val bad = Seq((100L, Seq(0.9, 0.9), "zero"))
+      .toDF("vec_id", "embedding", "cluster")
+    intercept[IllegalArgumentException] {
+      Ann.appendIdempotent(Ann.cellRoot(sp, dir, Some("embedding")), bad,
+        "vec_id")
+    }
+    assert(snapshot === before)
+  }
+
   test("appendRangeIndex: radii grow before rows land — a late outlier " +
       "is visible; a raw rows-only append would hide it") {
     val sp = spark
@@ -640,7 +669,9 @@ class AnnRangeSpec extends SparkSpecBase {
     // now the SOUND append of a second outlier at the same spot
     val late2 = Seq((101L, Seq(0.9, 0.92), 0)).toDF(
       "vec_id", "embedding", "cluster")
-    Ann.appendRangeIndex(sp, dir, late2, "embedding")
+    Ann.appendIdempotent(
+      Ann.cellRoot(sp, dir, Some("embedding")),
+      late2, "vec_id")
     val seen = Ann.rangeSearchStoredSelf(sp, dir, "vec_id", "embedding",
       q, eps = 0.2).select("vec_id").as[Long].collect().toSet
     // the grown radius admits the cell: BOTH outliers are now visible
@@ -693,8 +724,9 @@ class AnnRangeSpec extends SparkSpecBase {
     covered.write.parquet(s"$dir/radii")
     // the replay: row 0's argmin cell does NOT hold its copy, but the
     // radii-admitting probe reaches the stranded one — appends ZERO
-    assert(Ann.appendRangeIndexIdempotent(sp, dir,
-      docs.filter(col("vec_id") === 0), "vec_id", "embedding") === 0L)
+    assert(Ann.appendIdempotent(
+      Ann.cellRoot(sp, dir, Some("embedding")),
+      docs.filter(col("vec_id") === 0), "vec_id") === 0L)
     assert(sp.read.parquet(s"$dir/rows")
       .filter(col("vec_id") === 0).count() === 1L,
       "the stranded copy must not be duplicated by the replay")
@@ -722,16 +754,20 @@ class AnnRangeSpec extends SparkSpecBase {
     // leaving the root radii-less until a hand rebuild.
     sp.read.parquet(s"$dir/radii").write.parquet(s"$dir/radii_next")
     fs.delete(p("radii"), true)
-    Ann.appendRangeIndex(sp, dir,
+    Ann.appendIdempotent(
+      Ann.cellRoot(sp, dir, Some("embedding")),
       Seq((200L, Seq(0.3, 0.3), 0)).toDF("vec_id", "embedding",
-        "cluster"), "embedding")
+        "cluster"),
+      "vec_id")
     assert(fs.exists(p("radii")) && !fs.exists(p("radii_next")))
     // window 2 — a crash between swapSideTable's two renames: live
     // missing, the authoritative copy aside as __old
     require(fs.rename(p("radii"), p("radii__old")))
-    Ann.appendRangeIndex(sp, dir,
+    Ann.appendIdempotent(
+      Ann.cellRoot(sp, dir, Some("embedding")),
       Seq((201L, Seq(0.3, 0.35), 0)).toDF("vec_id", "embedding",
-        "cluster"), "embedding")
+        "cluster"),
+      "vec_id")
     assert(fs.exists(p("radii")) && !fs.exists(p("radii__old")))
     // the healed root still answers: both late rows are covered
     val seen = Ann.rangeSearchStoredSelf(sp, dir, "vec_id",
@@ -740,9 +776,11 @@ class AnnRangeSpec extends SparkSpecBase {
     assert(seen === Set(200L, 201L))
     // an INCOMPLETE staged copy (no _SUCCESS) is debris, not promoted
     fs.mkdirs(p("radii_next"))
-    Ann.appendRangeIndex(sp, dir,
+    Ann.appendIdempotent(
+      Ann.cellRoot(sp, dir, Some("embedding")),
       Seq((202L, Seq(0.3, 0.4), 0)).toDF("vec_id", "embedding",
-        "cluster"), "embedding")
+        "cluster"),
+      "vec_id")
     assert(!fs.exists(p("radii_next")))
   }
 
@@ -819,14 +857,14 @@ class AnnRangeSpec extends SparkSpecBase {
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"),
         (lit(0.02) + (col("vec_id") % 3).cast("double") * lit(0.01))
           .as("eps"))
-    val inMem = Ann.rangeJoinIvfPerEpsCos(queries, "q_id", "qv",
-        "eps", assigned.select(col("vec_id").as("d_id"),
+    val inMem = Ann.rangeJoinIvfPerEps(queries, "q_id", "qv", "eps",
+        assigned.select(col("vec_id").as("d_id"),
           col("embedding").as("dv"), col("centroid_id")),
-        "d_id", "dv", model, radii)
+        "d_id", "dv", model, radii, Ann.Cosine)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .toSeq
-    val stored = Ann.rangeJoinIvfStoredCos(sp, dir, queries, "q_id",
-        "qv", "eps", "vec_id", "embedding")
+    val stored = Ann.rangeJoinIvfStored(sp, dir, queries, "q_id", "qv", "eps",
+        "vec_id", "embedding", metric = Ann.Cosine)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .toSeq
     assert(stored === inMem)
@@ -911,23 +949,23 @@ class AnnRangeSpec extends SparkSpecBase {
         lit(0.05).as("eps"))
     val aAllowed = adocs.filter(col("cluster") === 0)
       .select(col("vec_id")).as[Long].collect().toSet
-    val f4 = rows(Ann.rangeJoinIvfPerEpsCos(aq, "q_id", "qv", "eps",
-      a2.select(col("vec_id").as("d_id"), col("embedding").as("dv"),
+    val f4 = rows(Ann.rangeJoinIvfPerEps(aq, "q_id", "qv", "eps",
+        a2.select(col("vec_id").as("d_id"), col("embedding").as("dv"),
         col("cluster"), col("centroid_id")),
-      "d_id", "dv", m2, r2, pred = col("cluster") === 0))
-    val u4 = rows(Ann.rangeJoinIvfPerEpsCos(aq, "q_id", "qv", "eps",
-      a2.select(col("vec_id").as("d_id"), col("embedding").as("dv"),
+        "d_id", "dv", m2, r2, Ann.Cosine, pred = col("cluster") === 0))
+    val u4 = rows(Ann.rangeJoinIvfPerEps(aq, "q_id", "qv", "eps",
+        a2.select(col("vec_id").as("d_id"), col("embedding").as("dv"),
         col("cluster"), col("centroid_id")),
-      "d_id", "dv", m2, r2)).filter(t => aAllowed.contains(t._2))
+        "d_id", "dv", m2, r2, Ann.Cosine)).filter(t => aAllowed.contains(t._2))
     assert(f4 === u4)
     val dir2 = java.nio.file.Files
       .createTempDirectory("graft-rjoin-predcos").toString
     Ann.writeRangeIndex(a2, "__nvec", m2, dir2)
-    val f5 = rows(Ann.rangeJoinIvfStoredCos(sp, dir2, aq, "q_id",
-      "qv", "eps", "vec_id", "embedding",
-      pred = col("cluster") === 0))
-    val u5 = rows(Ann.rangeJoinIvfStoredCos(sp, dir2, aq, "q_id",
-      "qv", "eps", "vec_id", "embedding"))
+    val f5 = rows(Ann.rangeJoinIvfStored(sp, dir2, aq, "q_id", "qv", "eps",
+        "vec_id", "embedding", pred = col("cluster") === 0,
+        metric = Ann.Cosine))
+    val u5 = rows(Ann.rangeJoinIvfStored(sp, dir2, aq, "q_id", "qv", "eps",
+        "vec_id", "embedding", metric = Ann.Cosine))
       .filter(t => aAllowed.contains(t._2))
     assert(f5 === u5)
     assert(f5 === f4)

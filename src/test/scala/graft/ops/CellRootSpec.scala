@@ -76,10 +76,10 @@ class CellRootSpec extends SparkSpecBase {
       { case Dense(_, _, Ann.Cosine, "mv_mean") => }, "rows"),
     ("MRL-IVF L2", (d: String) => Ann.writeMatryoshkaIvf(docs, "vec_id",
         "embedding", dims = 2, model, d),
-      { case MrlIvf(_, _, Ann.L2) => }, "rows"),
+      { case MrlIvf(_, _, Ann.L2, 2, Some("embedding")) => }, "rows"),
     ("MRL-IVF cosine", (d: String) => Ann.writeMatryoshkaIvf(docs,
         "vec_id", "embedding", dims = 2, model, d, metric = Ann.Cosine),
-      { case MrlIvf(_, _, Ann.Cosine) => }, "rows"),
+      { case MrlIvf(_, _, Ann.Cosine, 2, Some("embedding")) => }, "rows"),
     ("SQ marker-pinned", sq(pin = true),
       { case Quantized(_, _, Ann.Sq, Some(false), _) => }, "quantized"),
     ("SQ writeQuantized-only", sq(pin = false),

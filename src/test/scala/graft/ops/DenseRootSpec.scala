@@ -86,19 +86,25 @@ class DenseRootSpec extends SparkSpecBase {
         Ann.L2),
       "embedding", model, Ann.L2, dir)
     val tail = docs.filter(col("vec_id") >= 90)
-    assert(Ann.appendDenseRootIdempotent(sp, dir, tail, "vec_id") === 10L)
-    assert(Ann.appendDenseRootIdempotent(sp, dir, tail, "vec_id") === 0L)
+    assert(Ann.appendIdempotent(Ann.cellRoot(sp, dir, None), tail,
+      "vec_id") === 10L)
+    assert(Ann.appendIdempotent(Ann.cellRoot(sp, dir, None), tail,
+      "vec_id") === 0L)
     // split re-pins the fingerprint; the root's appends keep working
     // (a caller-supplied stale model would refuse here)
     val splits = Ann.splitOverfull(Ann.cellRoot(sp, dir, None), maxRows = 50L)
     assert(splits.nonEmpty)
     assert(Ann.hasSplitHistory(sp, dir))
-    assert(Ann.appendDenseRootIdempotent(sp, dir,
+    assert(Ann.appendIdempotent(
+      Ann.cellRoot(sp, dir, None),
       Seq((1000L, Seq(1.0, 0.5), 0)).toDF("vec_id", "embedding",
-        "cluster"), "vec_id") === 1L)
-    assert(Ann.appendDenseRootIdempotent(sp, dir,
+        "cluster"),
+      "vec_id") === 1L)
+    assert(Ann.appendIdempotent(
+      Ann.cellRoot(sp, dir, None),
       Seq((1000L, Seq(1.0, 0.5), 0)).toDF("vec_id", "embedding",
-        "cluster"), "vec_id") === 0L)
+        "cluster"),
+      "vec_id") === 0L)
   }
 
   test("split-history marker forces the SOUND replay probe: a copy " +
@@ -130,8 +136,9 @@ class DenseRootSpec extends SparkSpecBase {
       .toDF("vec_id", "embedding", "cluster")
     Ann.splitOverfull(Ann.cellRoot(sp, dir, None), maxRows = 50L) // real split
     assert(Ann.hasSplitHistory(sp, dir))
-    assert(Ann.appendDenseRootIdempotent(sp, dir, redelivered,
-      "vec_id") === 0L)
+    assert(Ann.appendIdempotent(
+      Ann.cellRoot(sp, dir, None),
+      redelivered, "vec_id") === 0L)
   }
 
   test("splitOverfullCellsDense (L2): occupancy bounded, rows " +

@@ -103,8 +103,9 @@ class IndexHealthQuantizedSpec extends SparkSpecBase {
     import sp2.implicits._
     val fresh = Seq((1000L, corpus.head._2, 0))
       .toDF("vec_id", "embedding", "label")
-    assert(Ann.appendQuantizedFreshIdempotent(sp, dir, fresh,
-      "vec_id", "embedding") == 1L)
+    assert(Ann.appendIdempotent(
+      Ann.cellRoot(sp, dir, Some("embedding")),
+      fresh, "vec_id") == 1L)
     val err = intercept[IllegalArgumentException] {
       Ann.indexHealth(Ann.cellRoot(sp, dir, None))
     }

@@ -1824,8 +1824,9 @@ class OpsSpec extends SparkSpecBase {
     graft.ops.Ann.writeMatryoshkaIvf(
       all.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", 3,
       model, twoDir)
-    graft.ops.Ann.appendMatryoshkaIvf(sp, twoDir,
-      all.filter(col("vec_id") % 2 === 1), "vec_id", "embedding")
+    graft.ops.Ann.appendIdempotent(
+      graft.ops.Ann.cellRoot(sp, twoDir, Some("embedding")),
+      all.filter(col("vec_id") % 2 === 1), "vec_id")
     def search(dir: String) =
       graft.ops.Ann.matryoshkaTopKIvf(sp, dir, "vec_id", q,
           probes = 4, candidates = 12, k = 5)
@@ -1839,20 +1840,23 @@ class OpsSpec extends SparkSpecBase {
       all.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", 3,
       model, keepDir, keepCols = Seq("label"))
     intercept[IllegalArgumentException] {
-      graft.ops.Ann.appendMatryoshkaIvf(sp, keepDir,
-        all.filter(col("vec_id") % 2 === 1).drop("label"), "vec_id",
-        "embedding")
+      graft.ops.Ann.appendIdempotent(
+        graft.ops.Ann.cellRoot(sp, keepDir, Some("embedding")),
+        all.filter(col("vec_id") % 2 === 1).drop("label"), "vec_id")
     }
     // with the kept column present the append lands, label intact
-    graft.ops.Ann.appendMatryoshkaIvf(sp, keepDir,
-      all.filter(col("vec_id") % 2 === 1), "vec_id", "embedding")
+    graft.ops.Ann.appendIdempotent(
+      graft.ops.Ann.cellRoot(sp, keepDir, Some("embedding")),
+      all.filter(col("vec_id") % 2 === 1), "vec_id")
     assert(sp.read.parquet(s"$keepDir/rows")
       .filter(col("label").isNull).count() === 0L)
     // a directory without the composed marker refuses loudly
     intercept[IllegalStateException] {
-      graft.ops.Ann.appendMatryoshkaIvf(sp,
-        java.nio.file.Files.createTempDirectory("graft_mrlivf_bare")
-          .toString, all, "vec_id", "embedding")
+      graft.ops.Ann.appendIdempotent(
+        graft.ops.Ann.cellRoot(sp, java.nio.file.Files
+          .createTempDirectory("graft_mrlivf_bare").toString,
+          Some("embedding")),
+        all, "vec_id")
     }
   }
 
@@ -1871,15 +1875,18 @@ class OpsSpec extends SparkSpecBase {
       all.filter(col("vec_id") < 10), "vec_id", "embedding", 2, model,
       dir)
     val batch = all.filter(col("vec_id") >= 10 && col("vec_id") < 15)
-    assert(graft.ops.Ann.appendMatryoshkaIvfIdempotent(sp, dir, batch,
-      "vec_id", "embedding") === 5L)
+    assert(graft.ops.Ann.appendIdempotent(
+      graft.ops.Ann.cellRoot(sp, dir, Some("embedding")),
+      batch, "vec_id") === 5L)
     // redelivery: zero appended, row count unchanged
-    assert(graft.ops.Ann.appendMatryoshkaIvfIdempotent(sp, dir, batch,
-      "vec_id", "embedding") === 0L)
+    assert(graft.ops.Ann.appendIdempotent(
+      graft.ops.Ann.cellRoot(sp, dir, Some("embedding")),
+      batch, "vec_id") === 0L)
     assert(sp.read.parquet(s"$dir/rows").count() === 15L)
     // a PARTIAL redelivery (3 old + 5 new) appends only the new rows
-    assert(graft.ops.Ann.appendMatryoshkaIvfIdempotent(sp, dir,
-      all.filter(col("vec_id") >= 12), "vec_id", "embedding") === 5L)
+    assert(graft.ops.Ann.appendIdempotent(
+      graft.ops.Ann.cellRoot(sp, dir, Some("embedding")),
+      all.filter(col("vec_id") >= 12), "vec_id") === 5L)
     assert(sp.read.parquet(s"$dir/rows").count() === 20L)
     // cosine root: the idempotent path assigns in the root's space
     val cdir = java.nio.file.Files
@@ -1887,15 +1894,18 @@ class OpsSpec extends SparkSpecBase {
     graft.ops.Ann.writeMatryoshkaIvf(
       all.filter(col("vec_id") < 10), "vec_id", "embedding", 2, model,
       cdir, metric = Ann.Cosine)
-    assert(graft.ops.Ann.appendMatryoshkaIvfIdempotent(sp, cdir,
-      batch, "vec_id", "embedding") === 5L)
-    assert(graft.ops.Ann.appendMatryoshkaIvfIdempotent(sp, cdir,
-      batch, "vec_id", "embedding") === 0L)
+    assert(graft.ops.Ann.appendIdempotent(
+      graft.ops.Ann.cellRoot(sp, cdir, Some("embedding")),
+      batch, "vec_id") === 5L)
+    assert(graft.ops.Ann.appendIdempotent(
+      graft.ops.Ann.cellRoot(sp, cdir, Some("embedding")),
+      batch, "vec_id") === 0L)
     // non-root refuses loudly
     intercept[IllegalStateException] {
-      graft.ops.Ann.appendMatryoshkaIvfIdempotent(sp,
-        java.nio.file.Files.createTempDirectory("graft_idem_bare")
-          .toString, batch, "vec_id", "embedding")
+      graft.ops.Ann.appendIdempotent(
+        graft.ops.Ann.cellRoot(sp, java.nio.file.Files
+          .createTempDirectory("graft_idem_bare").toString, Some("embedding")),
+        batch, "vec_id")
     }
   }
 

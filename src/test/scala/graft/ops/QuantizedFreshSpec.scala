@@ -4,7 +4,7 @@ import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
 
 /** The quantized-root fresh-rows maintenance contract
-  * ([[Ann.appendQuantizedFreshIdempotent]] /
+  * ([[Ann.appendIdempotent]] /
   * [[Ann.searchIvf*StoredFresh]] / [[Ann.compactQuantizedFresh]]):
   * a root holding half the corpus plus exact fresh appends of the
   * other half must answer every search EXACTLY like a one-shot build
@@ -52,14 +52,17 @@ class QuantizedFreshSpec extends SparkSpecBase {
     Ann.writeQuantized(idx, dir)
     Ann.ensureIvfSqRoot(sp, dir, idx, spherical = false)
     // append the odd half in two batches
-    val n1 = Ann.appendQuantizedFreshIdempotent(sp, dir,
-      odd.filter(col("vec_id") < 30), "vec_id", "embedding")
-    val n2 = Ann.appendQuantizedFreshIdempotent(sp, dir,
-      odd.filter(col("vec_id") >= 30), "vec_id", "embedding")
+    val n1 = Ann.appendIdempotent(
+      Ann.cellRoot(sp, dir, Some("embedding")),
+      odd.filter(col("vec_id") < 30), "vec_id")
+    val n2 = Ann.appendIdempotent(
+      Ann.cellRoot(sp, dir, Some("embedding")),
+      odd.filter(col("vec_id") >= 30), "vec_id")
     assert(n1 + n2 == 30L, s"appended $n1 + $n2, wanted 30")
     // crash-redelivery: the same batch appends NOTHING
-    assert(Ann.appendQuantizedFreshIdempotent(sp, dir,
-      odd.filter(col("vec_id") < 30), "vec_id", "embedding") == 0L)
+    assert(Ann.appendIdempotent(
+      Ann.cellRoot(sp, dir, Some("embedding")),
+      odd.filter(col("vec_id") < 30), "vec_id") == 0L)
     val before = ids(Ann.searchQuantizedStored(sp, dir, "vec_id",
       "embedding", typedlit(q), Ann.L2, probes = 2, k = 8, refine = 5))
     assert(before == want,
@@ -80,8 +83,9 @@ class QuantizedFreshSpec extends SparkSpecBase {
     assert(plain == want, "folded layout diverged under the plain search")
     // redelivery AFTER compaction still appends zero (the main-layout
     // existence probe)
-    assert(Ann.appendQuantizedFreshIdempotent(sp, dir,
-      odd.filter(col("vec_id") < 30), "vec_id", "embedding") == 0L)
+    assert(Ann.appendIdempotent(
+      Ann.cellRoot(sp, dir, Some("embedding")),
+      odd.filter(col("vec_id") < 30), "vec_id") == 0L)
     // idempotent compaction: nothing left to fold
     assert(Ann.compactQuantizedFresh(sp, dir, "vec_id", "embedding") == 0L)
   }
@@ -105,10 +109,12 @@ class QuantizedFreshSpec extends SparkSpecBase {
     // spherical roots — idx.model is already normalized, and unit
     // vectors re-normalize to different bits)
     Ann.ensureIvfPqRoot(sp, dir, idx.pq, model, spherical = true)
-    assert(Ann.appendQuantizedFreshIdempotent(sp, dir, odd,
-      "vec_id", "embedding") == 30L)
-    assert(Ann.appendQuantizedFreshIdempotent(sp, dir, odd,
-      "vec_id", "embedding") == 0L, "redelivered batch must append zero")
+    assert(Ann.appendIdempotent(
+      Ann.cellRoot(sp, dir, Some("embedding")),
+      odd, "vec_id") == 30L)
+    assert(Ann.appendIdempotent(
+      Ann.cellRoot(sp, dir, Some("embedding")),
+      odd, "vec_id") == 0L, "redelivered batch must append zero")
     assert(search(dir) == want,
       "spherical fresh-aware PQ search diverged from the one-shot build")
     assert(Ann.compactQuantizedFresh(sp, dir, "vec_id",
@@ -128,8 +134,9 @@ class QuantizedFreshSpec extends SparkSpecBase {
       .createTempDirectory("graft-bitqfresh").toString
     Ann.writeQuantized(idx, dir)
     Ann.ensureIvfBitqRoot(sp, dir, idx.model, spherical = false)
-    assert(Ann.appendQuantizedFreshIdempotent(sp, dir, odd,
-      "vec_id", "embedding") == 30L)
+    assert(Ann.appendIdempotent(
+      Ann.cellRoot(sp, dir, Some("embedding")),
+      odd, "vec_id") == 30L)
     val got = ids(Ann.searchQuantizedStored(sp, dir, "vec_id",
       "embedding", typedlit(q), Ann.L2, probes = 2, k = 8, refine = 8))
     assert(got == want,
@@ -168,8 +175,9 @@ class QuantizedFreshSpec extends SparkSpecBase {
     Ann.writeQuantized(fullSq.copy(quantized =
       fullSq.quantized.filter(col("vec_id") % 2 === 0)), dir)
     Ann.ensureIvfSqRoot(sp, dir, fullSq, spherical = false)
-    assert(Ann.appendQuantizedFreshIdempotent(sp, dir, odd,
-      "vec_id", "embedding") == 30L)
+    assert(Ann.appendIdempotent(
+      Ann.cellRoot(sp, dir, Some("embedding")),
+      odd, "vec_id") == 30L)
     def sqFresh() = ids(Ann.searchQuantizedStored(sp, dir, "vec_id",
       "embedding", typedlit(q), Ann.L2, probes = 2, k = 8, refine = 5,
       pred = pred))
@@ -212,8 +220,9 @@ class QuantizedFreshSpec extends SparkSpecBase {
     Ann.writeQuantized(fullPq.copy(encoded =
       fullPq.encoded.filter(col("vec_id") % 2 === 0)), dirPq)
     Ann.ensureIvfPqRoot(sp, dirPq, fullPq.pq, model, spherical = true)
-    assert(Ann.appendQuantizedFreshIdempotent(sp, dirPq, odd,
-      "vec_id", "embedding") == 30L)
+    assert(Ann.appendIdempotent(
+      Ann.cellRoot(sp, dirPq, Some("embedding")),
+      odd, "vec_id") == 30L)
     val gotPq = ids(Ann.searchQuantizedStored(sp, dirPq, "vec_id",
       "embedding", typedlit(q), Ann.Cosine, probes = 2, k = 8, refine = 5,
       pred = pred))
@@ -230,8 +239,9 @@ class QuantizedFreshSpec extends SparkSpecBase {
     Ann.writeQuantized(fullBq.copy(quantized =
       fullBq.quantized.filter(col("vec_id") % 2 === 0)), dirBq)
     Ann.ensureIvfBitqRoot(sp, dirBq, fullBq.model, spherical = false)
-    assert(Ann.appendQuantizedFreshIdempotent(sp, dirBq, odd,
-      "vec_id", "embedding") == 30L)
+    assert(Ann.appendIdempotent(
+      Ann.cellRoot(sp, dirBq, Some("embedding")),
+      odd, "vec_id") == 30L)
     val gotBq = ids(Ann.searchQuantizedStored(sp, dirBq, "vec_id",
       "embedding", typedlit(q), Ann.L2, probes = 2, k = 8, refine = 8,
       pred = pred))
@@ -254,8 +264,9 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val narrow = odd.drop("label")
       .withColumn("vec_id", col("vec_id") + 1000L)
     intercept[IllegalArgumentException] {
-      Ann.appendQuantizedFreshIdempotent(sp, dir, narrow, "vec_id",
-        "embedding")
+      Ann.appendIdempotent(
+        Ann.cellRoot(sp, dir, Some("embedding")),
+        narrow, "vec_id")
     }
     assert(!new java.io.File(dir, "fresh").exists(),
       "a refused first batch must leave no fresh/ behind")
@@ -282,8 +293,9 @@ class QuantizedFreshSpec extends SparkSpecBase {
     Ann.writeQuantized(idx.copy(quantized =
       idx.quantized.filter(col("vec_id") % 2 === 0)), dir)
     Ann.ensureIvfSqRoot(sp, dir, idx, spherical = false)
-    assert(Ann.appendQuantizedFreshIdempotent(sp, dir, odd, "vec_id",
-      "embedding") == 30L)
+    assert(Ann.appendIdempotent(
+      Ann.cellRoot(sp, dir, Some("embedding")),
+      odd, "vec_id") == 30L)
     new graft.core.Engine(reg).attachStoredIndex(td, dir)
     // doom one fresh-resident (odd) and one main-resident (even) row
     reg.removeBy(td, Map("vec_id" -> 7L))
@@ -361,9 +373,11 @@ class QuantizedFreshSpec extends SparkSpecBase {
     graft.io.Markers.write(sp, dir, "_graft_merge_pending", "quantized|")
     intercept[IllegalStateException] { Ann.loadQuantized(sp, dir) }
     intercept[IllegalStateException] {
-      Ann.appendQuantizedFreshIdempotent(sp, dir,
+      Ann.appendIdempotent(
+        Ann.cellRoot(sp, dir, Some("embedding")),
         Seq((900L, Seq.fill(dim)(0.1), 0)).toDF(
-          "vec_id", "embedding", "label"), "vec_id", "embedding")
+          "vec_id", "embedding", "label"),
+        "vec_id")
     }
     intercept[IllegalStateException] {
       Ann.compactQuantizedFresh(sp, dir, "vec_id", "embedding")
@@ -373,9 +387,11 @@ class QuantizedFreshSpec extends SparkSpecBase {
     assert(ids(Ann.searchQuantizedStored(sp, dir, "vec_id", "embedding",
       typedlit(q), Ann.L2, probes = 2, k = 8, refine = 6)) == got)
     // a live fresh/ refuses the merge (compact first)
-    assert(Ann.appendQuantizedFreshIdempotent(sp, dir,
+    assert(Ann.appendIdempotent(
+      Ann.cellRoot(sp, dir, Some("embedding")),
       Seq((901L, Seq.fill(dim)(0.2), 1)).toDF(
-        "vec_id", "embedding", "label"), "vec_id", "embedding") === 1L)
+        "vec_id", "embedding", "label"),
+      "vec_id") === 1L)
     val exFresh = intercept[IllegalArgumentException] {
       Ann.mergeUnderfull(Ann.cellRoot(sp, dir, Some("embedding")),
         minRows = 5)
@@ -480,9 +496,11 @@ class QuantizedFreshSpec extends SparkSpecBase {
       refine = 8)) == exactWant(8),
       "post-split 1-bit search diverged — residual re-encode broken")
     // --- a live fresh/ refuses the split ---
-    assert(Ann.appendQuantizedFreshIdempotent(sp, dir,
+    assert(Ann.appendIdempotent(
+      Ann.cellRoot(sp, dir, Some("embedding")),
       Seq((902L, Seq.fill(dim)(0.3), 2)).toDF(
-        "vec_id", "embedding", "label"), "vec_id", "embedding") === 1L)
+        "vec_id", "embedding", "label"),
+      "vec_id") === 1L)
     val ex = intercept[IllegalArgumentException] {
       Ann.splitOverfull(Ann.cellRoot(sp, dir, Some("embedding")),
         maxRows = 5)
@@ -490,41 +508,39 @@ class QuantizedFreshSpec extends SparkSpecBase {
     assert(ex.getMessage.contains("fresh"))
   }
 
-  test("probeAllCells: a copy stranded off-argmin (the post-split " +
-      "drift shape) is deduped by the sound whole-layout id probe; " +
-      "the default touched-cells probe documents the fast-path " +
-      "limitation by missing it") {
+  test("split SQ root: a replayed row stranded off argmin appends 0") {
     val sp = spark
     import sp.implicits._
-    val model = Ann.buildIvf(df, "label", "embedding")
+    // two cells: cell 0 holds labels 0 and 1 (fat, splits), cell 1
+    // holds label 2
+    val model = Ann.buildIvf(
+      df.withColumn("cell", when(col("label") === 2, 1).otherwise(0)),
+      "cell", "embedding")
     val fullSq = Ann.buildIvfSq(df, "embedding", model, Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft-sqdrift").toString
     Ann.writeQuantized(fullSq, dir)
     Ann.ensureIvfSqRoot(sp, dir, fullSq, spherical = false)
-    // strand row 1's copy in a non-argmin cell (raw cell-dir move)
-    val argminCell = Ann.assign(df.filter(col("vec_id") === 1),
-      "embedding", model, Ann.L2).select(col("centroid_id"))
-      .head().getLong(0)
-    val otherCell = (0L until 3L).filter(_ != argminCell).head
+    def cellOf(id: Long) = sp.read.parquet(s"$dir/quantized")
+      .filter(col("vec_id") === id)
+      .select(col("centroid_id").cast("long")).head().getLong(0)
+    assert(cellOf(1L) === 0L && cellOf(2L) === 1L)
+    // strand row 1's copy in cell 1, off its argmin
     val strand = sp.read.parquet(s"$dir/quantized")
       .filter(col("vec_id") === 1)
-      .withColumn("centroid_id", lit(otherCell))
+      .withColumn("centroid_id", lit(1L))
       .localCheckpoint(true)
     assert(Ann.deleteStoredIds(sp, s"$dir/quantized", "vec_id",
       Seq(1L).toDF("vec_id")) === 1L)
     strand.write.mode("append").partitionBy("centroid_id")
       .parquet(s"$dir/quantized")
-    // sound probe: the replay finds the stranded copy — appends zero
-    assert(Ann.appendQuantizedFreshIdempotent(sp, dir,
-      df.filter(col("vec_id") === 1), "vec_id", "embedding",
-      probeAllCells = true) === 0L)
-    // the DEFAULT probe misses it (the documented fast-path trade):
-    // the duplicate lands in fresh/ — pinning why split-policy
-    // streams must ride probeAllCells
-    assert(Ann.appendQuantizedFreshIdempotent(sp, dir,
-      df.filter(col("vec_id") === 1), "vec_id",
-      "embedding") === 1L)
+    // a real split of cell 0 leaves the copy where it is; the split
+    // history alone makes the replay probe main and fresh whole
+    assert(Ann.splitOverfull(Ann.cellRoot(sp, dir, Some("embedding")),
+      maxRows = 30).keySet === Set(0L))
+    assert(Ann.appendIdempotent(Ann.cellRoot(sp, dir, Some("embedding")),
+      df.filter(col("vec_id") === 1), "vec_id") === 0L)
+    assert(!new java.io.File(dir, "fresh").exists())
   }
 
   test("refusals: unmarked dirs and retrained models cannot grow a " +
@@ -534,8 +550,9 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val bare = java.nio.file.Files
       .createTempDirectory("graft-fresh-bare").toString
     intercept[IllegalStateException] {
-      Ann.appendQuantizedFreshIdempotent(sp, bare, odd, "vec_id",
-        "embedding")
+      Ann.appendIdempotent(
+        Ann.cellRoot(sp, bare, Some("embedding")),
+        odd, "vec_id")
     }
     // a retrained coarse quantizer refuses via the model fingerprint:
     // swap centroids/ under a pinned root
@@ -551,8 +568,9 @@ class QuantizedFreshSpec extends SparkSpecBase {
     retrained.centroids.write.mode("overwrite")
       .parquet(s"$dir/centroids")
     intercept[IllegalStateException] {
-      Ann.appendQuantizedFreshIdempotent(sp, dir, odd, "vec_id",
-        "embedding")
+      Ann.appendIdempotent(
+        Ann.cellRoot(sp, dir, Some("embedding")),
+        odd, "vec_id")
     }
     // metric/spherical mismatch refuses at query time
     val dir2 = java.nio.file.Files
@@ -585,17 +603,18 @@ class QuantizedFreshSpec extends SparkSpecBase {
       "embedding", 0.25).isEmpty)
     // append 10 fresh rows: |fresh|/|main| = 10/40 = 0.25 — NOT
     // strictly above a 0.25 ratio, so the policy must NOT trigger
-    assert(Ann.appendQuantizedFreshIdempotent(sp, dir,
-      df.filter(col("vec_id") >= 40 && col("vec_id") < 50),
-      "vec_id", "embedding") == 10L)
+    assert(Ann.appendIdempotent(
+      Ann.cellRoot(sp, dir, Some("embedding")),
+      df.filter(col("vec_id") >= 40 && col("vec_id") < 50), "vec_id") == 10L)
     val before = search()
     assert(Ann.compactQuantizedFreshIfNeeded(sp, dir, "vec_id",
       "embedding", 0.25).isEmpty, "triggered AT the ratio boundary")
     assert(sp.read.parquet(s"$dir/fresh").count() == 10L,
       "a below-threshold decision must leave fresh/ untouched")
     // one more batch: 20/40 = 0.5 > 0.25 — must trigger and fold all
-    assert(Ann.appendQuantizedFreshIdempotent(sp, dir,
-      df.filter(col("vec_id") >= 50), "vec_id", "embedding") == 10L)
+    assert(Ann.appendIdempotent(
+      Ann.cellRoot(sp, dir, Some("embedding")),
+      df.filter(col("vec_id") >= 50), "vec_id") == 10L)
     val beforeTrigger = search()
     assert(Ann.compactQuantizedFreshIfNeeded(sp, dir, "vec_id",
       "embedding", 0.25).contains(20L))
@@ -624,8 +643,9 @@ class QuantizedFreshSpec extends SparkSpecBase {
       df.filter(col("vec_id") === 59).select("vec_id")) == 0L)
     Ann.deleteStoredIds(sp, s"$dir/quantized", "vec_id",
       df.filter(col("vec_id") === 59).select("vec_id"))
-    assert(Ann.appendQuantizedFreshIdempotent(sp, dir,
-      df.filter(col("vec_id") === 59), "vec_id", "embedding") == 1L)
+    assert(Ann.appendIdempotent(
+      Ann.cellRoot(sp, dir, Some("embedding")),
+      df.filter(col("vec_id") === 59), "vec_id") == 1L)
     assert(Ann.compactQuantizedFreshIfNeeded(sp, dir, "vec_id",
       "embedding", 0.0).contains(1L))
   }
@@ -656,8 +676,9 @@ class QuantizedFreshSpec extends SparkSpecBase {
       Ann.writeQuantized(full.copy(quantized =
         full.quantized.filter(col("vec_id") % 2 === 0)), dir)
       Ann.ensureIvfSqRoot(sp, dir, full, spherical = false)
-      assert(Ann.appendQuantizedFreshIdempotent(sp, dir, odd,
-        "vec_id", "embedding") == 30L)
+      assert(Ann.appendIdempotent(
+        Ann.cellRoot(sp, dir, Some("embedding")),
+        odd, "vec_id") == 30L)
       def batch() = perQid(Ann.knnJoinQuantizedFresh(sp, dir, queries,
         "q_id", "qv", "vec_id", "embedding", Ann.L2, probes = 2,
         k = 8, refine = 5))
@@ -693,8 +714,9 @@ class QuantizedFreshSpec extends SparkSpecBase {
       Ann.writeQuantized(full.copy(encoded =
         full.encoded.filter(col("vec_id") % 2 === 0)), dir)
       Ann.ensureIvfPqRoot(sp, dir, full.pq, model, spherical = true)
-      assert(Ann.appendQuantizedFreshIdempotent(sp, dir, odd,
-        "vec_id", "embedding") == 30L)
+      assert(Ann.appendIdempotent(
+        Ann.cellRoot(sp, dir, Some("embedding")),
+        odd, "vec_id") == 30L)
       val got = perQid(Ann.knnJoinQuantizedFresh(sp, dir, queries,
         "q_id", "qv", "vec_id", "embedding", Ann.Cosine, probes = 2,
         k = 8, refine = 5))
@@ -715,8 +737,9 @@ class QuantizedFreshSpec extends SparkSpecBase {
       Ann.writeQuantized(full.copy(quantized =
         full.quantized.filter(col("vec_id") % 2 === 0)), dir)
       Ann.ensureIvfBitqRoot(sp, dir, full.model, spherical = false)
-      assert(Ann.appendQuantizedFreshIdempotent(sp, dir, odd,
-        "vec_id", "embedding") == 30L)
+      assert(Ann.appendIdempotent(
+        Ann.cellRoot(sp, dir, Some("embedding")),
+        odd, "vec_id") == 30L)
       val got = perQid(Ann.knnJoinQuantizedFresh(sp, dir, queries,
         "q_id", "qv", "vec_id", "embedding", Ann.L2, probes = 2,
         k = 8, refine = 8))

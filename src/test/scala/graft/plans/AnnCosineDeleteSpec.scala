@@ -369,34 +369,35 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     assert(eng.mergeUnderfullIfNeeded(td, root, minRows = 5).isEmpty)
   }
 
-  test("appendMatryoshkaIvfIdempotent probeAllCells: a copy stranded " +
-      "off-argmin on a composed root is deduped by the whole-layout " +
-      "id probe (the split-policy stream's sound mode)") {
+  test("split composed root: a replayed row stranded off argmin appends 0") {
     val sp = spark
     import sp.implicits._
-    val docs = (0L until 30L).map(i =>
-      (i, Seq((i % 3).toDouble * 10 + (i % 5) * 0.01,
-        (i % 3).toDouble * 10))).toDF("vec_id", "embedding")
-    val model = Ann.buildIvfKMeans(docs, "embedding", 3)
+    // cell 0 is fat (a second lobe at x = 2) and splits; 1 and 2 don't
+    val docs = ((0L until 30L).map(i =>
+        (i, Seq((i % 3).toDouble * 10 + (i % 5) * 0.01,
+          (i % 3).toDouble * 10), (i % 3).toInt)) ++
+      (30L until 50L).map(i => (i, Seq(2.0 + (i % 5) * 0.01, 0.0), 0)))
+      .toDF("vec_id", "embedding", "label")
+    val model = Ann.buildIvf(docs, "label", "embedding")
     val root = Files.createTempDirectory("graft-mrl-drift").toString
     Ann.writeMatryoshkaIvf(docs, "vec_id", "embedding", dims = 1,
       model, root)
-    // strand row 2's copy in a non-argmin cell
+    // strand row 0's copy in cell 1, off its argmin
     val strand = sp.read.parquet(s"$root/rows")
-      .filter(col("vec_id") === 2).localCheckpoint(true)
-    val home = strand.select(col("centroid_id").cast("long"))
-      .head().getLong(0)
-    val other = (0L until 3L).filter(_ != home).head
+      .filter(col("vec_id") === 0).localCheckpoint(true)
     assert(Ann.deleteStoredIds(sp, s"$root/rows", "vec_id",
-      Seq(2L).toDF("vec_id")) === 1L)
-    strand.withColumn("centroid_id", lit(other))
+      Seq(0L).toDF("vec_id")) === 1L)
+    strand.withColumn("centroid_id", lit(1L))
       .write.mode("append").partitionBy("centroid_id")
       .parquet(s"$root/rows")
-    assert(Ann.appendMatryoshkaIvfIdempotent(sp, root,
-      docs.filter(col("vec_id") === 2), "vec_id", "embedding",
-      probeAllCells = true) === 0L)
+    // a real split of cell 0 leaves the copy where it is; the split
+    // history alone makes the replay probe the whole layout
+    assert(Ann.splitOverfull(Ann.cellRoot(sp, root, None), maxRows = 20)
+      .keySet === Set(0L))
+    assert(Ann.appendIdempotent(Ann.cellRoot(sp, root, Some("embedding")),
+      docs.filter(col("vec_id") === 0), "vec_id") === 0L)
     assert(sp.read.parquet(s"$root/rows")
-      .filter(col("vec_id") === 2).count() === 1L)
+      .filter(col("vec_id") === 0).count() === 1L)
   }
 
   test("engine maintenance seats dispatch QUANTIZED roots by marker: " +
@@ -501,9 +502,9 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
         candidates = 8, k = 4, metric = Ann.Cosine)
     }
     intercept[IllegalStateException] {
-      Ann.appendMatryoshkaIvf(sp, root,
-        Seq((900L, Seq(1.0, 0.1, 0.0))).toDF("vec_id", "embedding"),
-        "vec_id", "embedding")
+      Ann.appendIdempotent(
+        Ann.cellRoot(sp, root, Some("embedding")),
+        Seq((900L, Seq(1.0, 0.1, 0.0))).toDF("vec_id", "embedding"), "vec_id")
     }
     Ann.mergeUnderfull(Ann.cellRoot(sp, root, None), minRows = 5)
     assert(Ann.matryoshkaTopKIvf(sp, root, "vec_id", q, probes = 2,
@@ -572,9 +573,10 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     assert(got === flat,
       s"all-probe composed != flat cut after split:\n$got\n$flat")
     // appends land against the re-pinned post-split root
-    assert(Ann.appendMatryoshkaIvfIdempotent(sp, root,
+    assert(Ann.appendIdempotent(
+      Ann.cellRoot(sp, root, Some("embedding")),
       Seq((900L, Seq(1.0, 0.05, 0.0))).toDF("vec_id", "embedding"),
-      "vec_id", "embedding") === 1L)
+      "vec_id") === 1L)
     // an unsplittable hot cell (one direction at hash precision —
     // scales differ but the SPHERICAL space collapses them) skips
     val sameDir = (0L until 20L).map { i =>

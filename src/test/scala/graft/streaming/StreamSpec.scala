@@ -879,15 +879,17 @@ class StreamSpec extends SparkSpecBase {
       .select("vec_id").as[Long].collect()
     assert(got.toSeq === Seq(101L), s"expected the outlier, got $got")
     // redelivery of an already-applied batch appends NOTHING
-    val dup = Ann.appendRangeIndexIdempotent(sp, root,
-      appended.toDF("vec_id", "embedding", "label"), "vec_id",
-      "embedding")
+    val dup = Ann.appendIdempotent(
+      Ann.cellRoot(sp, root, Some("embedding")),
+      appended.toDF("vec_id", "embedding", "label"), "vec_id")
     assert(dup === 0L)
     assert(sp.read.parquet(s"$root/rows").count() === 22L)
     // a genuinely new row still appends through the same path
-    val fresh = Ann.appendRangeIndexIdempotent(sp, root,
+    val fresh = Ann.appendIdempotent(
+      Ann.cellRoot(sp, root, Some("embedding")),
       Seq((102L, Seq(0.4, 0.2), 0)).toDF("vec_id", "embedding",
-        "label"), "vec_id", "embedding")
+        "label"),
+      "vec_id")
     assert(fresh === 1L)
     // a non-range root refuses at START, not first batch
     intercept[Exception] {
@@ -994,9 +996,9 @@ class StreamSpec extends SparkSpecBase {
     assert(want.nonEmpty && got === want,
       s"split changed range results: got $got, want $want")
     // redelivery still appends nothing against the re-partitioned cells
-    assert(Ann.appendRangeIndexIdempotent(sp, root,
-      appended.toDF("vec_id", "embedding", "label"), "vec_id",
-      "embedding") === 0L)
+    assert(Ann.appendIdempotent(
+      Ann.cellRoot(sp, root, Some("embedding")),
+      appended.toDF("vec_id", "embedding", "label"), "vec_id") === 0L)
   }
 
   test("every graduated-root seat refuses a root of another family at " +

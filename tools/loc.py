@@ -5,8 +5,9 @@ Prints, per .scala file under the given roots, the number of code lines
 (blank lines and comment-only lines excluded: `//` lines and lines wholly
 inside `/* ... */` blocks), a total per root, and the number of public
 `def`s declared directly in `object Ann` (`src/main/scala/graft/ops/
-Ann.scala`: a line that starts with two spaces then `def `; members of
-nested types and `private` defs are not counted).
+Ann.scala`) and in `object Stream` (`src/main/scala/graft/streaming/
+Stream.scala`): a line that starts with two spaces then `def `;
+members of nested types and `private` defs are not counted.
 
 Run it from the root of a checkout; roots are relative to it.
 
@@ -17,7 +18,9 @@ import re
 import sys
 from pathlib import Path
 
-ANN = Path("src/main/scala/graft/ops/Ann.scala")
+# (object, the file it is the only top-level object of)
+OBJECTS = [("Ann", Path("src/main/scala/graft/ops/Ann.scala")),
+           ("Stream", Path("src/main/scala/graft/streaming/Stream.scala"))]
 PUBLIC_DEF = re.compile(r"^  def ")
 
 
@@ -58,8 +61,8 @@ def code_lines(text):
     return n
 
 
-def public_ann_defs():
-    return sum(1 for line in ANN.read_text().splitlines()
+def public_defs(path):
+    return sum(1 for line in path.read_text().splitlines()
                if PUBLIC_DEF.match(line))
 
 
@@ -76,7 +79,8 @@ def main(argv):
                 print(f"{n:7d}  {f}")
         print(f"{total:7d}  total code lines under {root} "
               f"({len(files)} files)")
-    print(f"{public_ann_defs():7d}  public defs in object Ann")
+    for name, path in OBJECTS:
+        print(f"{public_defs(path):7d}  public defs in object {name}")
 
 
 if __name__ == "__main__":
