@@ -220,7 +220,8 @@ object ScaleSmoke {
       val dir = java.nio.file.Files
         .createTempDirectory("graft_smoke_knnpq").toString
       ops.Ann.writeQuantized(idx, dir)
-      val stored = ops.Ann.loadQuantized(spark, dir)
+      val stored = ops.Ann.cellRoot(spark, dir, None)
+        .as[ops.Ann.CellRoot.Quantized]("scale smoke").readIndex
       val queries = vecs.limit(1000)
         .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
       time("pq_knn_join_batch") {
@@ -447,9 +448,9 @@ object ScaleSmoke {
       ops.Ann.writeQuantized(index, dir)
       val removed = ops.Ann.deleteStored(spark, s"$dir/quantized",
         col("vec_id") >= 10000000L && col("vec_id") < 20000000L)
-      val q = typedlit((0 until 64).map(i => 0.01 * i))
-      ops.Ann.searchQuantizedStored(spark, dir, "vec_id", "embedding", q,
-        ops.Ann.L2, probes = 8, k = 10).count()
+      val q = (0 until 64).map(i => 0.01 * i)
+      ops.Ann.searchStored(ops.Ann.cellRoot(spark, dir,
+        Some("embedding")), "vec_id", q, 8, 10).count()
       removed
     }
 
@@ -1169,8 +1170,9 @@ object ScaleSmoke {
         val q = emb0.limit(1)
           .select(col("embedding").cast("array<double>"))
           .head().getSeq[Double](0).toSeq
-        val topn = ops.Ann.matryoshkaTopKIvf(spark, msDir, "vec_id",
-          q, probes = 2, candidates = 100, k = 10).count()
+        val topn = ops.Ann.searchStored(
+          ops.Ann.cellRoot(spark, msDir, None), "vec_id", q, 2, 10,
+          refine = 10).count()
         require(topn == 10L, s"post-split composed top-10 got $topn")
       }
     }
@@ -1215,9 +1217,9 @@ object ScaleSmoke {
         val q = emb0.limit(1)
           .select(col("embedding").cast("array<double>"))
           .head().getSeq[Double](0).toSeq
-        val topn = ops.Ann.searchQuantizedStored(spark, qmDir, "vec_id",
-          "embedding", typedlit(q), ops.Ann.L2, probes = 2, k = 10,
-          refine = 5).count()
+        val topn = ops.Ann.searchStored(
+          ops.Ann.cellRoot(spark, qmDir, Some("embedding")), "vec_id", q,
+          2, 10, refine = 5).count()
         require(topn == 10L, s"post-merge SQ top-10 got $topn")
       }
     }
@@ -1412,8 +1414,9 @@ object ScaleSmoke {
       // assertion below scans the full corpus and would otherwise
       // dominate the metric, masking a shape regression in the very
       // query this row exists to catch
-      val df = ops.Ann.matryoshkaTopKIvf(spark, mrlIvfDir, "vec_id",
-        mrlIvfQ, probes = 2, candidates = 100, k = 10)
+      val df = ops.Ann.searchStored(
+        ops.Ann.cellRoot(spark, mrlIvfDir, None), "vec_id", mrlIvfQ, 2,
+        10, refine = 10)
       val n = df.count()
       require(n == 10, s"matryoshka-IVF top-10 returned $n rows")
       n
@@ -1591,9 +1594,9 @@ object ScaleSmoke {
         val q = emb0.limit(1)
           .select(col("embedding").cast("array<double>"))
           .head().getSeq[Double](0).toSeq
-        val hits = ops.Ann.searchQuantizedStored(spark, sqDir,
-          "vec_id", "embedding", typedlit(q), ops.Ann.L2, probes = 2,
-          k = 10).count()
+        val hits = ops.Ann.searchStored(
+          ops.Ann.cellRoot(spark, sqDir, Some("embedding")), "vec_id", q,
+          2, 10).count()
         require(hits == 10L, s"fresh-aware 16x search returned $hits")
       }
     }
@@ -1621,22 +1624,21 @@ object ScaleSmoke {
         .createTempDirectory("graft_smoke_sqfresh").toString
       ops.Ann.writeQuantized(sfIdx, sfDir)
       ops.Ann.ensureIvfSqRoot(spark, sfDir, sfIdx, spherical = false)
-      val grown = ops.Ann.appendIdempotent(
-        ops.Ann.cellRoot(spark, sfDir, Some("embedding")),
-        freshPart, "vec_id")
+      val sfRoot = ops.Ann.cellRoot(spark, sfDir, Some("embedding"))
+        .as[ops.Ann.CellRoot.Quantized]("scale smoke")
+      val grown = ops.Ann.appendIdempotent(sfRoot, freshPart, "vec_id")
       val freshN = freshPart.count()
       require(grown == freshN, s"grew $grown of $freshN fresh rows")
       // below threshold (1/4 over 3/4 = 1/3 < 0.5): must NOT trigger
-      require(ops.Ann.compactQuantizedFreshIfNeeded(spark, sfDir,
-          "vec_id", "embedding", 0.5).isEmpty,
+      require(ops.Ann.compactQuantizedFreshIfNeeded(sfRoot, "vec_id", 0.5)
+          .isEmpty,
         "policy triggered below its ratio threshold at 16x")
       val qv = emb0.limit(1)
         .select(col("embedding").cast("array<double>"))
         .head().getSeq[Double](0).toSeq
       time("search_quantized_fresh") {
-        val hits = ops.Ann.searchQuantizedStored(spark, sfDir,
-          "vec_id", "embedding", typedlit(qv), ops.Ann.L2, probes = 2,
-          k = 10).count()
+        val hits = ops.Ann.searchStored(sfRoot, "vec_id", qv, 2, 10)
+          .count()
         require(hits == 10L,
           s"fresh-fraction 16x search returned $hits")
         hits
@@ -1703,17 +1705,13 @@ object ScaleSmoke {
           s"fresh encode input not probed-fraction-bounded: " +
             s"$probedFresh of $freshN under ${cells.length} of " +
             s"$cellCount probed cells")
-        val beforeFold = ops.Ann.searchQuantizedStored(spark, sfDir,
-            "vec_id", "embedding", typedlit(qv), ops.Ann.L2,
-            probes = 2, k = 10)
+        val beforeFold = ops.Ann.searchStored(sfRoot, "vec_id", qv, 2, 10)
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
         // above threshold (1/3 > 0.25): the policy folds everything
-        require(ops.Ann.compactQuantizedFreshIfNeeded(spark, sfDir,
-            "vec_id", "embedding", 0.25).contains(freshN),
+        require(ops.Ann.compactQuantizedFreshIfNeeded(sfRoot, "vec_id",
+            0.25).contains(freshN),
           "policy did not fold the whole fresh side at 16x")
-        val afterFold = ops.Ann.searchQuantizedStored(spark, sfDir,
-            "vec_id", "embedding", typedlit(qv), ops.Ann.L2,
-            probes = 2, k = 10)
+        val afterFold = ops.Ann.searchStored(sfRoot, "vec_id", qv, 2, 10)
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
         require(beforeFold == afterFold,
           "results changed across the 16x compaction trigger")

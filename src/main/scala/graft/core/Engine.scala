@@ -67,7 +67,7 @@ final class Engine(reg: Registry) {
           // probe like the plain IVF branch, cut like the matryoshka
           // one; `refine` stays the candidate multiplier.
           // Cosine probes NORMALIZED centroids with L2 — the ONE probe
-          // convention Ann.matryoshkaTopKIvf uses (spherical IVF:
+          // convention a composed Ann.searchStored uses (spherical IVF:
           // monotone-equivalent to raw-cosine but not bit-identical on
           // floating-point near-ties; the two paths must pick the SAME
           // cells)
@@ -751,7 +751,7 @@ final class Engine(reg: Registry) {
     * after this, every committed `Registry.removeBy` on the table
     * (including rows deleted INTO it by FK cascade) rewrites the
     * layout's affected cell directories ([[Ann.deleteStoredIds]]), so
-    * stored searches ([[Ann.searchQuantizedStored]] etc.) and
+    * stored searches ([[Ann.searchStored]] etc.) and
     * declarative rewrites over the loaded layout never surface removed
     * rows — the maintenance PostgreSQL's DELETE performs implicitly on
     * the reference's indexes (client.py:268-283). `dir` is:
@@ -826,10 +826,10 @@ final class Engine(reg: Registry) {
                            maxFreshRatio: Double): Option[Long] = {
     val ix = td.vectorIndex.getOrElse(throw new IllegalStateException(
       s"${td.name} has no vector index"))
-    Ann.cellRoot(reg.spark, dir, Some(ix.column))
-      .as[Ann.CellRoot.Quantized]("compactFreshIfNeeded")
-    Ann.compactQuantizedFreshIfNeeded(reg.spark, dir, td.pk, ix.column,
-      maxFreshRatio)
+    Ann.compactQuantizedFreshIfNeeded(
+      Ann.cellRoot(reg.spark, dir, Some(ix.column))
+        .as[Ann.CellRoot.Quantized]("compactFreshIfNeeded"),
+      td.pk, maxFreshRatio)
   }
 
   /** Threshold-triggered underfull-cell MERGE for the root at `dir`

@@ -355,17 +355,7 @@ object Ann {
                        dir: String): Boolean =
     graft.io.Markers.exists(spark, dir, "_graft_matryoshka")
 
-  /** Read a matryoshka root's pinned prefix width — the ONE parser of
-    * the `_graft_matryoshka` marker (query path and declarative
-    * registration both call it, so the two cannot drift): a missing
-    * marker or ANY malformed content — including a non-integer dims
-    * from a partial write — lands on the same loud
-    * IllegalStateException, never a leaked NumberFormatException. */
-  private[graft] def readMatryoshkaDims(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      who: String): Int = readMatryoshkaMeta(spark, dir, who)._1
-
-  /** [[readMatryoshkaDims]] with the root's pinned METRIC — the ONE
+  /** A matryoshka root's pinned prefix width and METRIC — the ONE
     * parser of the `_graft_matryoshka` marker (query path, delete
     * maintenance and declarative registration all call it, so the
     * three cannot drift): `dims=N` reads as an L2 root (the original
@@ -376,23 +366,13 @@ object Ann {
     * NumberFormatException. */
   private[graft] def readMatryoshkaMeta(
       spark: org.apache.spark.sql.SparkSession, dir: String,
-      who: String,
-      markerName: String = "_graft_matryoshka"): (Int, Metric) = {
-    // every matryoshka-root reader funnels through this parser — the
-    // ONE seat for the torn-merge refusal ([[mergeUnderfull]]:
+      who: String): (Int, Metric) = {
+    // every reader refuses a torn merge ([[requireNoPendingMerge]]:
     // rows may be mid-move between cell dirs; loud, never wrong)
     requireNoPendingMerge(spark, dir)
-    readMatryoshkaMetaUnguarded(spark, dir, who, markerName)
-  }
-
-  /** [[readMatryoshkaMeta]] without the torn-merge refusal — for the
-    * merge op itself, which runs precisely when readers refuse. */
-  private def readMatryoshkaMetaUnguarded(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      who: String, markerName: String): (Int, Metric) = {
-    val marker = graft.io.Markers.read(spark, dir, markerName)
+    val marker = graft.io.Markers.read(spark, dir, "_graft_matryoshka")
       .getOrElse(throw new IllegalStateException(
-        s"$who: $dir has no $markerName marker — not a " +
+        s"$who: $dir has no _graft_matryoshka marker — not a " +
           "matryoshka root (or a truncated write)"))
     matryoshkaMetaOf(marker, dir, who)
   }
@@ -467,7 +447,7 @@ object Ann {
       spark: org.apache.spark.sql.SparkSession, dir: String,
       doomFn: DataFrame => DataFrame,
       keepFn: DataFrame => DataFrame): Long = {
-    readMatryoshkaDims(spark, dir, "deleteMatryoshka")
+    readMatryoshkaMeta(spark, dir, "deleteMatryoshka")
     val rowsDir = s"$dir/rows"
     requireBatchLayout(spark, rowsDir)
     val root = new org.apache.hadoop.fs.Path(rowsDir)
@@ -685,83 +665,6 @@ object Ann {
     require(b0 == s0,
       s"$who: batch schema $b0 != stored $s0 — a mixed-schema layout " +
         "reads back nondeterministically")
-  }
-
-  /** Two-phase top-k over a [[writeMatryoshkaIvf]] root: probe the
-    * `probes` nearest cells (centroids read from the root — a reader
-    * needs nothing driver-resident), run the prefix cut over probed
-    * cells only, re-score the candidates at full precision. BOTH
-    * scale pins are asserted inside the operator on every call —
-    * phase 1 must show centroid_id PartitionFilters (unprobed cell
-    * directories never read) AND an emb_pre-only read (the full
-    * vector never read in phase 1); the phase-2 fetch keeps the cell
-    * filter too, so both phases' IO is probed-cells-bounded.
-    *
-    * Semantics: exactly [[matryoshkaTopKStored]] restricted to the
-    * probed cells — the candidate cut and re-rank see only rows whose
-    * cell was probed (the IVF recall contract, same as
-    * [[searchIvfStored]]); `pred` thins phase 1 before the cut (the
-    * filtered-search family's no-starvation contract). */
-  def matryoshkaTopKIvf(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, idCol: String, q: Seq[Double],
-                        probes: Int, candidates: Int, k: Int,
-                        roundTo: Int = 6,
-                        pred: Column = lit(true),
-                        metric: Metric = L2): DataFrame = {
-    require(probes >= 1, s"matryoshkaTopKIvf: probes >= 1, got $probes")
-    require(candidates >= k,
-      s"matryoshkaTopKIvf: candidates ($candidates) must be >= k ($k)")
-    requireMatryoshkaMetric(metric, "matryoshkaTopKIvf")
-    val (dims, rootMetric) = readMatryoshkaMeta(spark, dir,
-      "matryoshkaTopKIvf", "_graft_matryoshka_ivf")
-    require(metric == rootMetric,
-      s"matryoshkaTopKIvf: $dir is pinned to metric=$rootMetric but " +
-        s"the query asks $metric — emb_pre and the cell geometry live " +
-        "in the root's reduction space")
-    require(dims <= q.length,
-      s"matryoshkaTopKIvf: stored dims=$dims exceeds query " +
-        s"dimension ${q.length} — wrong embedding space for this root")
-    val model = ivfModelAt(spark, dir)
-    // probes and the phase-1 query live in the root's reduction
-    // space: raw under L2, the unit sphere under cosine
-    val (probeModel, qProbe, qPre) = metric match {
-      case Cosine =>
-        val qn = normalizeSeq(q)
-        (normalizeModel(model), typedlit(qn), typedlit(qn.take(dims)))
-      case _ => (model, typedlit(q), typedlit(q.take(dims)))
-    }
-    val cells = probeCellIds(probeModel, qProbe, L2, probes)
-    val rows = spark.read.parquet(s"$dir/rows")
-    rows.filter(col("emb_full").isNotNull)
-      .select(size(col("emb_full")).as("__d")).limit(1).collect()
-      .headOption.foreach { r =>
-        require(r.getInt(0) == q.length,
-          s"matryoshkaTopKIvf: stored vectors have ${r.getInt(0)} " +
-            s"dims but the query has ${q.length} — wrong embedding " +
-            "space for this root")
-      }
-    val pruned = rows.filter(col("centroid_id").isin(cells: _*))
-    val phase1 = pruned.filter(pred).select(col(idCol),
-        round(org.apache.spark.sql.graft.VecExprs.l2Dist(col("emb_pre"),
-          qPre), roundTo).as("pre_dist"))
-      .orderBy(col("pre_dist").asc, col(idCol).asc).limit(candidates)
-    val p1Phys = phase1.queryExecution.executedPlan.toString
-    require(p1Phys.contains("emb_pre") && !p1Phys.contains("emb_full"),
-      s"matryoshkaTopKIvf phase-1 scan did not prune the full " +
-        s"vector:\n$p1Phys")
-    require("""PartitionFilters: \[[^\]]*centroid_id""".r
-        .findFirstIn(p1Phys).isDefined,
-      s"matryoshkaTopKIvf phase 1 did not prune cell partitions:\n" +
-        p1Phys)
-    val ids = phase1.select(col(idCol)).collect().map(_.get(0))
-    pruned.filter(col(idCol).isin(ids: _*))
-      .select(col(idCol),
-        round(org.apache.spark.sql.graft.VecExprs.l2Dist(col("emb_pre"),
-          qPre), roundTo).as("pre_dist"),
-        round(metric.dist(col("emb_full"), typedlit(q)), roundTo)
-          .as("dist"))
-      .orderBy(col("dist").asc, col(idCol).asc)
-      .limit(k)
   }
 
   /** Batch kNN join: for every query row, the top-k nearest docs.
@@ -1330,20 +1233,25 @@ object Ann {
     * refusing to change it once declared — the centroid-space twin of
     * [[Bm25.ensureBucketsMarker]]'s modulus rule. */
   def ensureIvfModelMarker(spark: org.apache.spark.sql.SparkSession,
-                           dir: String, model: IvfModel): Unit = {
-    val fp = modelFingerprint(model)
+                           dir: String, model: IvfModel): Unit =
     readIvfModelMarker(spark, dir) match {
-      case Some(existing) if existing != fp =>
-        throw new IllegalStateException(
-          s"$dir was grown under a different IVF model (fingerprint " +
-            s"$existing, offered $fp). Appending rows assigned under a " +
-            "new model would mix two cell geometries in one layout and " +
-            "silently exclude rows from probed searches. Rebuild the " +
-            "layout (writePartitioned) to change models.")
-      case Some(_) => ()
-      case None =>
-        graft.io.Markers.write(spark, dir, IvfModelMarker, fp)
+      case Some(pin) => requirePinned(dir, pin, model)
+      case None => graft.io.Markers.write(spark, dir, IvfModelMarker,
+        modelFingerprint(model))
     }
+
+  /** Refuse a model whose fingerprint disagrees with the layout's
+    * `pin`. */
+  private def requirePinned(dir: String, pin: String,
+                            model: IvfModel): Unit = {
+    val fp = modelFingerprint(model)
+    if (pin != fp)
+      throw new IllegalStateException(
+        s"$dir was grown under a different IVF model (fingerprint " +
+          s"$pin, offered $fp). Appending rows assigned under a " +
+          "new model would mix two cell geometries in one layout and " +
+          "silently exclude rows from probed searches. Rebuild the " +
+          "layout (writePartitioned) to change models.")
   }
 
   def readIvfModelMarker(spark: org.apache.spark.sql.SparkSession,
@@ -1515,21 +1423,6 @@ object Ann {
       s"${metricToken(metric)}|$vecCol")
   }
 
-  /** The dense root's pinned (metric, vecCol) WITHOUT the
-    * pending-merge refusal — the maintenance actuators' entry read
-    * (actuators heal a torn merge; readers refuse through
-    * [[loadDenseRoot]]). */
-  private def readDenseMetaUnguarded(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      who: String): (Metric, String) = {
-    val raw = graft.io.Markers.read(spark, dir, DenseCellsMarker)
-      .getOrElse(throw new IllegalStateException(
-        s"$who: $dir has no dense cell-root marker — not a " +
-          "writeDenseRoot layout (graduateDenseRoot a flat " +
-          "writePartitioned dir first)"))
-    denseMetaOf(raw, dir, who)
-  }
-
   /** Parse a dense cell-root marker's content: (metric, vecCol). */
   private def denseMetaOf(raw: String, dir: String,
                           who: String): (Metric, String) =
@@ -1540,21 +1433,6 @@ object Ann {
         s"$who: $dir carries a malformed dense cell-root marker " +
           s"'$raw' (want 'metric|vecCol')")
     }
-
-  /** Load a [[writeDenseRoot]] layout: (model, metric, vecCol).
-    * READER seat: refuses mid-merge ([[requireNoPendingMerge]] — the
-    * one loud-never-wrong contract every cell family shares) and
-    * refuses centroids that drifted from the pinned fingerprint (a
-    * hand-swapped `centroids/` dir). */
-  def loadDenseRoot(spark: org.apache.spark.sql.SparkSession,
-                    dir: String): (IvfModel, Metric, String) = {
-    requireNoPendingMerge(spark, dir)
-    val (metric, vecCol) =
-      readDenseMetaUnguarded(spark, dir, "loadDenseRoot")
-    val model = ivfModelAt(spark, dir)
-    ensureIvfModelMarker(spark, dir, model)
-    (model, metric, vecCol)
-  }
 
   /** GRADUATE a flat [[writePartitioned]] layout into a
     * self-contained dense root IN PLACE — the migration seat for
@@ -1573,9 +1451,9 @@ object Ann {
                         dir: String, model: IvfModel, metric: Metric,
                         vecCol: String): Unit = {
     requireDenseMetric(metric, "graduateDenseRoot")
-    if (graft.io.Markers.exists(spark, dir, DenseCellsMarker)) {
-      val (m, vc) = readDenseMetaUnguarded(spark, dir,
-        "graduateDenseRoot")
+    val pinned = graft.io.Markers.read(spark, dir, DenseCellsMarker)
+    if (pinned.isDefined) {
+      val (m, vc) = denseMetaOf(pinned.get, dir, "graduateDenseRoot")
       require(m == metric && vc == vecCol,
         s"graduateDenseRoot: $dir is already a dense root pinned to " +
           s"($m, '$vc') — offered ($metric, '$vecCol')")
@@ -1609,22 +1487,6 @@ object Ann {
       s"${metricToken(metric)}|$vecCol")
   }
 
-  /** [[searchIvfStored]] over a self-contained dense root — model,
-    * metric and vector column come from the layout itself, so a
-    * reader needs nothing driver-resident and maintenance (split/
-    * merge) is invisible: at equal probes the cut runs over whatever
-    * cells the root currently has, and at all-probe the result is
-    * the exact top-k regardless of any split/merge history. */
-  def searchDenseStoredSelf(spark: org.apache.spark.sql.SparkSession,
-                            dir: String, idCol: String,
-                            queryVec: Column, probes: Int, k: Int,
-                            roundTo: Int = 6,
-                            pred: Column = lit(true)): DataFrame = {
-    val (model, metric, vecCol) = loadDenseRoot(spark, dir)
-    searchIvfStored(spark, s"$dir/rows", idCol, vecCol, model,
-      queryVec, metric, probes, k, roundTo, pred)
-  }
-
   /** [[appendIdempotent]] for a MAXSIM dense root (a
     * [[writeDenseRoot]] layout over the persisted token-mean, metric
     * Cosine — [[appendMaxsimIdempotent]]'s self-contained twin): the
@@ -1637,26 +1499,6 @@ object Ann {
       meanCol: String = "mv_mean"): Long =
     appendIdempotent(cellRoot(spark, dir, None),
       newDocs.withColumn(meanCol, tokenMeanCol(col(mvCol), dim)), idCol)
-
-  /** The composed matryoshka-IVF root's coarse quantizer, loaded with
-    * the family's reader guards (torn-merge refusal + marker
-    * validation) — the resolve seat the declarative registration's
-    * fingerprint-keyed cache re-collects through
-    * ([[graft.plans.Binding.matryoshkaIvf]]), so a
-    * maintenance re-pin reaches declarative probe selection while a
-    * mid-merge root refuses loudly instead of serving half-moved
-    * cells. */
-  def loadMrlIvfModel(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): IvfModel = {
-    requireNoPendingMerge(spark, dir)
-    val model = ivfModelAt(spark, dir)
-    // validates against an existing pin; on a never-pinned root this
-    // ADOPTS the fingerprint of the root's own on-disk centroids (a
-    // one-time metadata write on first read — safe because the pinned
-    // identity IS the disk state being read, never a caller's model)
-    ensureIvfModelMarker(spark, dir, model)
-    model
-  }
 
   /** Scalar-quantization (SQ) model: per-dimension [min, max] over the
     * corpus. The reference's index quantizes vectors internally (RaBitQ
@@ -2089,7 +1931,7 @@ object Ann {
       candidates, k, roundTo, metric)
       .select(col(qId), col(dId), col("dist"), col("rank"))
 
-  /** BATCH composed matryoshka-IVF — [[matryoshkaTopKIvf]]'s
+  /** BATCH composed matryoshka-IVF — [[searchStored]]'s composed
     * query-log replay form over an IN-MEMORY [[assign]]ed frame (the
     * engine's composed branch, batch twin): each query row explodes to
     * its `probes` nearest cells ([[perQueryProbeUdf]] — probed in the
@@ -2161,8 +2003,8 @@ object Ann {
 
   /** BATCH composed matryoshka-IVF over an AT-REST
     * [[writeMatryoshkaIvf]] root — [[knnJoinMrlIvf]]'s stored twin
-    * with [[matryoshkaTopKIvf]]'s two pruning pins asserted ON EVERY
-    * CALL: phase 1 reads the UNION of the batch's probed cell
+    * with the composed [[searchStored]]'s two pruning pins asserted
+    * ON EVERY CALL: phase 1 reads the UNION of the batch's probed cell
     * DIRECTORIES only (`centroid_id` PartitionFilters) and within
     * them `emb_pre` only (never `emb_full` — at 100 TB phase 1 reads
     * dims/D of the probed cells' vector bytes), restricted per query
@@ -2170,12 +2012,13 @@ object Ann {
     * phase 2 re-reads only the candidate ids (pushed as an In filter,
     * still cell-pruned) at full precision and re-ranks per query.
     * Geometry comes from the root's marker (dims + metric pinned at
-    * write — wrong-metric reads refuse, like the single-query form).
+    * write — a wrong-metric read refuses), the model from
+    * [[CellRoot.readModel]].
     * `pred` is the family's metadata filter (r82's contract, batch
     * form): it thins the cell-pruned phase-1 scan BEFORE each query's
     * cut, pushing into parquet next to emb_pre. Returns
     * (qId, idCol, pre_dist, dist, rank), rank 1-based per query;
-    * per-query rows identical to [[matryoshkaTopKIvf]] (specced). */
+    * per-query rows identical to a composed [[searchStored]] (specced). */
   def matryoshkaTopKIvfBatch(spark: org.apache.spark.sql.SparkSession,
                              dir: String, idCol: String,
                              queries: DataFrame, qId: String,
@@ -2189,13 +2032,14 @@ object Ann {
       s"matryoshkaTopKIvfBatch: candidates ($candidates) must be >= " +
         s"k ($k)")
     requireMatryoshkaMetric(metric, "matryoshkaTopKIvfBatch")
-    val (dims, rootMetric) = readMatryoshkaMeta(spark, dir,
-      "matryoshkaTopKIvfBatch", "_graft_matryoshka_ivf")
-    require(metric == rootMetric,
-      s"matryoshkaTopKIvfBatch: $dir is pinned to metric=$rootMetric " +
+    val root = cellRoot(spark, dir, None)
+      .as[CellRoot.MrlIvf]("matryoshkaTopKIvfBatch")
+    val dims = root.dims
+    require(metric == root.metric,
+      s"matryoshkaTopKIvfBatch: $dir is pinned to metric=${root.metric} " +
         s"but the query asks $metric — emb_pre and the cell geometry " +
         "live in the root's reduction space")
-    val model = ivfModelAt(spark, dir)
+    val model = root.readModel
     val qv = col(qVec).cast("array<double>")
     val rows = spark.read.parquet(s"$dir/rows")
     requireMrlBatchSpace(rows, "emb_full", queries, qVec, dims,
@@ -2395,7 +2239,7 @@ object Ann {
     * [[ivfModelAt]]'s memo: every stored range search/append/join
     * collects the same few-KB radii side table driver-side, one
     * collect JOB per call. When the frame is a plain single-root
-    * parquet scan (the [[loadRangeIndex]] shape), the collect is
+    * parquet scan (the [[CellRoot.Range.radii]] shape), the collect is
     * LRU-memoized per (session, root path, LISTING SIGNATURE);
     * staleness discipline is ivfModelAt's verbatim — every radii
     * mutation is a swapSideTable rename or an overwrite with fresh
@@ -2498,9 +2342,11 @@ object Ann {
     * the per-row health distance and the steps of a replay-safe
     * append — and [[splitOverfull]], [[mergeUnderfull]],
     * [[indexHealth]] and [[appendIdempotent]] are written once over
-    * it. A case holds the root's IMMUTABLE identity (family, metric,
-    * vector column); centroids, radii and markers are re-read by every
-    * actuator call. */
+    * it; every stored reader opens it through [[CellRoot.readModel]],
+    * and [[searchStored]] takes each family's probe space and ranking
+    * step from it. A case holds the root's IMMUTABLE identity (family,
+    * metric, vector column); centroids, radii and markers are re-read
+    * by every actuator and reader call. */
   sealed trait CellRoot extends Product with Serializable {
     def spark: org.apache.spark.sql.SparkSession
     def dir: String
@@ -2567,6 +2413,31 @@ object Ann {
     /** Runs on the rows to append before they become visible. */
     private[ops] def beforeAppend(rows: DataFrame, model: IvfModel): Unit = ()
 
+    /** The READER seat every stored search, batch join and declarative
+      * binding opens the root through: refuses a torn merge
+      * ([[requireNoPendingMerge]]), loads the pinned model
+      * ([[ivfModelAt]] — the same instance while the centroids listing
+      * is unchanged, so its collected centroids stay memoized) and
+      * refuses centroids whose fingerprint disagrees with a present IVF
+      * model marker (a hand-swapped `centroids/`). A read never writes
+      * a marker. */
+    def readModel: IvfModel = {
+      requireNoPendingMerge(spark, dir)
+      val model = ivfModelAt(spark, dir)
+      readIvfModelMarker(spark, dir).foreach(requirePinned(dir, _, model))
+      model
+    }
+    /** [[searchStored]]'s probe space: the model, query and metric its
+      * probe cells are picked under. */
+    private[ops] def probeSpace(model: IvfModel,
+                                q: Seq[Double]): (IvfModel, Seq[Double], Metric)
+    /** [[searchStored]]'s ranking step over the root's rows in the
+      * probed `cells`, thinned by `pred` before any cut. */
+    private[ops] def rankProbed(model: IvfModel, cells: Array[Long],
+                                idCol: String, q: Seq[Double], k: Int,
+                                refine: Int, roundTo: Int,
+                                pred: Column): DataFrame
+
     /** This root as family `R`, or the typed refusal naming both. */
     def as[R <: CellRoot](who: String)(
         implicit tag: scala.reflect.ClassTag[R]): R = this match {
@@ -2613,9 +2484,24 @@ object Ann {
                                   roundTo: Int): DataFrame =
         centroidDist(rows.select(col(model.idCol), col(vec)), vec, model,
           L2, roundTo)
+      /** The radii side table — a plain parquet scan, so
+        * [[collectRadiiMap]] memoizes its collect per listing. */
+      def radii: DataFrame = spark.read.parquet(s"$dir/radii")
+      /** The covering radius per cell of `model`. */
+      def readRadii(model: IvfModel): Map[Long, Double] =
+        collectRadiiMap(model, radii)
+      private def notTopK = new IllegalStateException(
+        s"searchStored: $dir is a range root — it answers eps queries, " +
+          "not top-k; use Ann.rangeSearchStoredSelf")
+      private[ops] def probeSpace(model: IvfModel, q: Seq[Double])
+          : (IvfModel, Seq[Double], Metric) = throw notTopK
+      private[ops] def rankProbed(model: IvfModel, cells: Array[Long],
+                                  idCol: String, q: Seq[Double], k: Int,
+                                  refine: Int, roundTo: Int,
+                                  pred: Column): DataFrame = throw notTopK
       override private[ops] def replayCells(
           rows: DataFrame, model: IvfModel): Option[Array[Long]] = {
-        val rad = collectRadiiMap(model, spark.read.parquet(s"$dir/radii"))
+        val rad = readRadii(model)
         val bc = spark.sparkContext.broadcast(
           collectCentroids(model).map { case (id, c) =>
             (id, c, rad.getOrElse(id, 0.0)) })
@@ -2631,7 +2517,7 @@ object Ann {
       }
       override private[ops] def beforeAppend(rows: DataFrame,
                                              model: IvfModel): Unit = {
-        val grown = spark.read.parquet(s"$dir/radii")
+        val grown = radii
           .select(col(model.idCol), col("radius"))
           .unionByName(cellRadii(rows, vec, model, L2))
           .groupBy(col(model.idCol)).agg(max(col("radius")).as("radius"))
@@ -2663,6 +2549,17 @@ object Ann {
                                   roundTo: Int): DataFrame =
         centroidDist(rows.select(col(model.idCol), col(vecCol)), vecCol,
           model, metric, roundTo)
+      private[ops] def probeSpace(model: IvfModel, q: Seq[Double])
+          : (IvfModel, Seq[Double], Metric) = (model, q, metric)
+      /** The exact top-k under the root's metric over the probed rows;
+        * `refine` is unused. */
+      private[ops] def rankProbed(model: IvfModel, cells: Array[Long],
+                                  idCol: String, q: Seq[Double], k: Int,
+                                  refine: Int, roundTo: Int,
+                                  pred: Column): DataFrame =
+        topK(spark.read.parquet(s"$dir/rows")
+            .filter(col(model.idCol).isin(cells: _*)).filter(pred),
+          idCol, vecCol, typedlit(q), metric, k, roundTo)
     }
 
     /** A [[writeMatryoshkaIvf]] root; its metric and prefix `dims`
@@ -2717,6 +2614,62 @@ object Ann {
             normalizeModel(model), L2, roundTo)
         else centroidDist(full, "emb_full", model, L2, roundTo)
       }
+      /** A query in the root's reduction space: the unit sphere under
+        * cosine (where `emb_pre` and the cells live), raw under L2. */
+      private def reduce(q: Seq[Double]): Seq[Double] =
+        if (metric == Cosine) normalizeSeq(q) else q
+      private[ops] def probeSpace(model: IvfModel, q: Seq[Double])
+          : (IvfModel, Seq[Double], Metric) =
+        (if (metric == Cosine) normalizeModel(model) else model, reduce(q),
+          L2)
+      /** The two-phase prefix cut: phase 1 keeps the top k·refine
+        * (default 5) probed rows by prefix distance, phase 2 re-scores
+        * them at full precision under the root's TRUE metric (genuine
+        * cosine on the raw vectors under cosine). Both scale pins are
+        * asserted on every call — phase 1 must show `centroid_id`
+        * PartitionFilters (unprobed cell directories never read) AND an
+        * `emb_pre`-only read (the full vector never read in phase 1);
+        * the phase-2 fetch keeps the cell filter too. Returns
+        * (id, pre_dist, dist). */
+      private[ops] def rankProbed(model: IvfModel, cells: Array[Long],
+                                  idCol: String, q: Seq[Double], k: Int,
+                                  refine: Int, roundTo: Int,
+                                  pred: Column): DataFrame = {
+        require(dims <= q.length,
+          s"searchStored: stored dims=$dims exceeds query dimension " +
+            s"${q.length} — wrong embedding space for this root")
+        val qPre = typedlit(reduce(q).take(dims))
+        val rows = spark.read.parquet(s"$dir/rows")
+        rows.filter(col("emb_full").isNotNull)
+          .select(size(col("emb_full")).as("__d")).limit(1).collect()
+          .headOption.foreach { r =>
+            require(r.getInt(0) == q.length,
+              s"searchStored: stored vectors have ${r.getInt(0)} dims " +
+                s"but the query has ${q.length} — wrong embedding space " +
+                "for this root")
+          }
+        val pruned = rows.filter(col(model.idCol).isin(cells: _*))
+        def preDist = round(org.apache.spark.sql.graft.VecExprs.l2Dist(
+          col("emb_pre"), qPre), roundTo).as("pre_dist")
+        val phase1 = pruned.filter(pred).select(col(idCol), preDist)
+          .orderBy(col("pre_dist").asc, col(idCol).asc)
+          .limit(k * (if (refine > 0) refine else 5))
+        val p1Phys = phase1.queryExecution.executedPlan.toString
+        require(p1Phys.contains("emb_pre") && !p1Phys.contains("emb_full"),
+          s"searchStored phase-1 scan did not prune the full " +
+            s"vector:\n$p1Phys")
+        require("""PartitionFilters: \[[^\]]*centroid_id""".r
+            .findFirstIn(p1Phys).isDefined,
+          s"searchStored phase 1 did not prune cell partitions:\n" +
+            p1Phys)
+        val ids = phase1.select(col(idCol)).collect().map(_.get(0))
+        pruned.filter(col(idCol).isin(ids: _*))
+          .select(col(idCol), preDist,
+            round(metric.dist(col("emb_full"), typedlit(q)), roundTo)
+              .as("dist"))
+          .orderBy(col("dist").asc, col(idCol).asc)
+          .limit(k)
+      }
     }
 
     /** A [[writeQuantized]] root (SQ / PQ / 1-bit). `spherical` is the
@@ -2734,7 +2687,7 @@ object Ann {
       *
       * An append lands RAW rows in the `fresh/` side table,
       * partitioned like the main layout: no codes are computed at
-      * append time — [[searchQuantizedStored]] encodes them on read and
+      * append time — [[searchStored]] encodes them on read and
       * [[compactQuantizedFresh]] folds them in. The rows assign on the
       * unit sphere on spherical roots, the geometry their stored
       * centroids live in. Ids already in `fresh/` OR in the main layout
@@ -2754,9 +2707,38 @@ object Ann {
         extends CellRoot {
       override def dataSub: String = family.dataSub
       private[ops] def kind: String = s"quantized $family"
-      private def pinned: Boolean =
+      /** The pinned spherical flag; refuses an unpinned root. */
+      private[graft] def pinned: Boolean =
         spherical.getOrElse(throw unpinnedQuantized(dir))
-      private def vec: String = vecCol.getOrElse(
+      /** Cosine on a pinned spherical root, L2 otherwise. */
+      def metric: Metric = if (spherical.contains(true)) Cosine else L2
+      /** The root's index — artifacts plus unpacked rows — opened
+        * through [[readModel]]. */
+      def readIndex: QuantIndex = indexOf(readModel)
+      private def indexOf(model: IvfModel): QuantIndex = {
+        val art = family.artifacts(spark, dir, model)
+        art.withRows(art.unpack(spark.read.parquet(s"$dir/$dataSub")))
+      }
+      private[ops] def probeSpace(model: IvfModel, q: Seq[Double])
+          : (IvfModel, Seq[Double], Metric) =
+        (model, if (metric == Cosine) normalizeSeq(q) else q, L2)
+      /** The probed main rows plus the probed `fresh/` rows encoded on
+        * read under the root's frozen artifacts (so the result equals a
+        * one-shot rebuild that had always held them), then
+        * [[searchQuantized]], whose own probe picks the same cells.
+        * `refine <= 0` = the family default. */
+      private[ops] def rankProbed(model: IvfModel, cells: Array[Long],
+                                  idCol: String, q: Seq[Double], k: Int,
+                                  refine: Int, roundTo: Int,
+                                  pred: Column): DataFrame = {
+        val index = indexOf(model)
+        val all = withFresh(spark, dir, index,
+          index.rows.filter(col(model.idCol).isin(cells: _*)), cells, vec,
+          metric)
+        searchQuantized(index.withRows(all.filter(pred)), idCol, vec,
+          typedlit(q), metric, cells.length, k, refine, roundTo)
+      }
+      private[ops] def vec: String = vecCol.getOrElse(
         throw new IllegalStateException(s"$dir is a quantized root: " +
           "moved rows re-encode from the table's vector column, and " +
           "none was named"))
@@ -2872,6 +2854,40 @@ object Ann {
         })
       .orElse(if (hasRadii) Some(CellRoot.Range(spark, dir, vecCol))
         else None)
+  }
+
+  /** The ONE stored single-query top-k over a [[CellRoot]]: check the
+    * arguments, open the root through [[CellRoot.readModel]], pick the
+    * `probes` nearest cells in the root's probe space on the driver
+    * ([[probeCellIds]] — the cells reach the scan as a literal isin,
+    * so unprobed cell directories are never read), and rank the probed
+    * rows with the family's step, `pred` thinning them before any cut
+    * (the filtered-search family's no-starvation contract). Metric,
+    * vector column and probe space come from the root:
+    *  - dense: the exact top-k under the marker's metric, probed on the
+    *    raw centroids under that metric; returns the stored rows plus
+    *    `dist`;
+    *  - composed matryoshka-IVF: the two-phase prefix cut over
+    *    k·`refine` candidates (default 5), probed on the unit sphere
+    *    under cosine; returns (id, pre_dist, dist);
+    *  - quantized: [[searchQuantized]] over the probed main and
+    *    `fresh/` rows, cosine on a pinned spherical root (probed with
+    *    the normalized query), L2 otherwise; `refine <= 0` = the family
+    *    default; returns (id, dist);
+    *  - range: refuses — a range root answers eps queries
+    *    ([[rangeSearchStoredSelf]]).
+    * At all probes the result is the exact answer over the root's
+    * current cells, whatever its split / merge history. */
+  def searchStored(root: CellRoot, idCol: String, q: Seq[Double],
+                   probes: Int, k: Int, refine: Int = -1,
+                   roundTo: Int = 6,
+                   pred: Column = lit(true)): DataFrame = {
+    require(probes >= 1, s"searchStored: probes >= 1, got $probes")
+    require(k >= 1, s"searchStored: k >= 1, got $k")
+    val model = root.readModel
+    val (probeModel, qProbe, metric) = root.probeSpace(model, q)
+    val cells = probeCellIds(probeModel, typedlit(qProbe), metric, probes)
+    root.rankProbed(model, cells, idCol, q, k, refine, roundTo, pred)
   }
 
   /** Batch APPEND into a [[CellRoot]], REPLAY-SAFE by id — the one
@@ -3406,7 +3422,7 @@ object Ann {
     * them), (b) staged files move into the receiving cell
     * directories, (c) doomed dirs delete, (d) doomed radii rows
     * drop, (e) the marker lifts. Reads parquet directly — this runs
-    * precisely when [[loadRangeIndex]] refuses. */
+    * precisely when [[CellRoot.readModel]] refuses. */
   private def completePendingMerge(
       spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -3515,7 +3531,7 @@ object Ann {
     root.requireMaintainable("indexHealth")
     val model = ivfModelAt(spark, dir)
     val radii = root match {
-      case _: CellRoot.Range => Some(spark.read.parquet(s"$dir/radii"))
+      case r: CellRoot.Range => Some(r.radii)
       case _ =>
         // validates against an existing pin; on a never-pinned root
         // this ADOPTS the fingerprint of the root's own on-disk
@@ -3555,14 +3571,6 @@ object Ann {
       .agg(count(lit(1)).as("n_rows"),
         round(avg(col("__d")), roundTo).as("mean_dist"))
 
-  /** Load a [[writeRangeIndex]] layout: (model, radii). */
-  def loadRangeIndex(spark: org.apache.spark.sql.SparkSession,
-                     dir: String): (IvfModel, DataFrame) = {
-    requireNoPendingMerge(spark, dir)
-    (ivfModelAt(spark, dir),
-      spark.read.parquet(s"$dir/radii"))
-  }
-
   /** [[rangeSearchIvfStored]] over a self-contained
     * [[writeRangeIndex]] root — model and radii come from the layout
     * itself. */
@@ -3571,9 +3579,10 @@ object Ann {
                             queryVec: Column, eps: Double,
                             roundTo: Int = 6,
                             pred: Column = lit(true)): DataFrame = {
-    val (model, radii) = loadRangeIndex(spark, dir)
-    rangeSearchIvfStored(spark, s"$dir/rows", idCol, vecCol, model,
-      radii, queryVec, L2, eps, roundTo, pred)
+    val root = cellRoot(spark, dir, Some(vecCol))
+      .as[CellRoot.Range]("rangeSearchStoredSelf")
+    rangeSearchIvfStored(spark, s"$dir/rows", idCol, vecCol,
+      root.readModel, root.radii, queryVec, L2, eps, roundTo, pred)
   }
 
   /** [[rangeJoinIvfPerEps]] over a STORED range root
@@ -3611,7 +3620,11 @@ object Ann {
                          metric: Metric = L2): DataFrame = {
     val label = "rangeJoinIvfStored"
     requireRangeMetric(metric, label)
-    val (model, radii) = loadRangeIndex(spark, dir)
+    val root = cellRoot(spark, dir, Some(dVec)).as[CellRoot.Range](label)
+    val model = root.readModel
+    // one radii frame for the cut and the join: each parquet read
+    // infers its schema in a job of its own
+    val radii = root.radii
     val rad = collectRadiiMap(model, radii)
     val cents = collectCentroids(model)
     val slack = math.pow(10.0, -roundTo)
@@ -3784,9 +3797,7 @@ object Ann {
           "infinite radius — a NaN silently drops its query, an " +
           "infinity scans every cell")
     }
-    val rad = radii
-      .select(col(model.idCol).cast("long"), col("radius").cast("double"))
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
+    val rad = collectRadiiMap(model, radii)
     val bc = spark.sparkContext.broadcast(
       collectCentroids(model).map { case (id, c) =>
         (id, c, rad.getOrElse(id, 0.0)) })
@@ -4004,9 +4015,9 @@ object Ann {
     * table the scan joins, the phase-1 estimate, the at-rest
     * encode/pack/unpack and side tables, and the health distance.
     * [[quantizedCandidates]], [[searchQuantized]], [[knnJoinQuantized]],
-    * [[writeQuantized]], [[loadQuantized]] and [[searchQuantizedStored]]
-    * are the one implementation over all three; the declarative
-    * quantized rewrite serves all three. */
+    * [[writeQuantized]], [[CellRoot.Quantized.readIndex]] and
+    * [[searchStored]] are the one implementation over all three; the
+    * declarative quantized rewrite serves all three. */
   sealed trait QuantIndex {
     def model: IvfModel
     def family: QuantFamily
@@ -4360,7 +4371,7 @@ object Ann {
                       dir: String, pq: PqModel, model: IvfModel,
                       spherical: Boolean): Unit = {
     // spherical roots operate on NORMALIZED centroids throughout —
-    // what loadQuantized probes against, what writeQuantized persists, and
+    // what a stored reader probes against, what writeQuantized persists, and
     // what the assignment fingerprint must pin
     val stored = if (spherical) normalizeModel(model) else model
     graft.io.Markers.read(spark, dir, PqMetaMarker) match {
@@ -4734,65 +4745,23 @@ object Ann {
     index.writeSide(dir)
   }
 
-  /** Load a [[writeQuantized]] root (family from [[detectQuantized]];
-    * codes unpack at scan time). Refuses mid-merge
-    * ([[mergeUnderfull]]'s torn window) and a dir that is
-    * no quantized root. */
-  def loadQuantized(spark: org.apache.spark.sql.SparkSession,
-                    dir: String): QuantIndex = loadPinned(spark, dir)._1
-
-  /** [[loadQuantized]] plus the spherical flag the root's marker pins
-    * (None on an unmarked root). */
-  private def loadPinned(spark: org.apache.spark.sql.SparkSession,
-                         dir: String): (QuantIndex, Option[Boolean]) = {
-    val (family, pin) = detectQuantized(spark, dir).getOrElse(
-      throw new IllegalStateException(s"$dir carries no SQ/PQ/1-bit " +
-        "geometry marker and no quantized layout — not a quantized root"))
-    requireNoPendingMerge(spark, dir)
-    val art = family.artifacts(spark, dir, ivfModelAt(spark, dir))
-    (art.withRows(art.unpack(
-      spark.read.parquet(s"$dir/${family.dataSub}"))), pin)
-  }
-
-  /** [[searchQuantized]] over a stored root: probe cells become a
-    * LITERAL isin on the partition column (PartitionFilters — whole
-    * unprobed cell directories are never read), then the usual
-    * phase-1 scan + exact re-rank. With a `fresh/` side table
-    * ([[appendIdempotent]]) the probed fresh rows are
-    * encoded on read under the root's frozen artifacts (the streaming
-    * transforms, bit-identical to the batch build's codes) and unioned
-    * in, so the result equals a one-shot rebuild that had always held
-    * them. `pred` is the metadata filter: it thins the stored rows AND
-    * the fresh slice BEFORE the phase-1 cut, so disallowed rows never
-    * consume refine slots. A metric outside the space the root's
-    * marker pins refuses. */
-  def searchQuantizedStored(spark: org.apache.spark.sql.SparkSession,
-                            dir: String, idCol: String, vecCol: String,
-                            queryVec: Column, metric: Metric,
-                            probes: Int, k: Int, refine: Int = -1,
-                            roundTo: Int = 6,
-                            pred: Column = lit(true)): DataFrame = {
-    val (index, pin) = loadPinned(spark, dir)
-    requireSpace(dir, pin, metric)
-    val (qv, m) = phase1Query(queryVec, metric)
-    val cells = probeCellIds(index.model, qv, m, probes)
-    val all = withFresh(spark, dir, index,
-      index.rows.filter(col(index.model.idCol).isin(cells: _*)), cells,
-      vecCol, metric)
-    searchQuantized(index.withRows(all.filter(pred)), idCol, vecCol,
-      queryVec, metric, probes, k, refine, roundTo)
-  }
-
-  /** `rows` plus the root's fresh rows in `cells`, encoded on read
-    * under `index`'s artifacts ([[freshEncodedForQuery]]). */
+  /** `rows` plus the probed slice of the root's fresh side table
+    * (none when no fresh rows exist), encoded on read under `index`'s
+    * frozen artifacts. The read prunes to the probed `cells`' partition
+    * dirs BEFORE encoding (rows re-assign to the same cells
+    * deterministically — same centroids, same argmin), so query cost
+    * over fresh scales with the probed fraction exactly like the main
+    * layout's scan. */
   private def withFresh(spark: org.apache.spark.sql.SparkSession,
                         dir: String, index: QuantIndex, rows: DataFrame,
                         cells: Array[Long], vecCol: String,
                         metric: Metric): DataFrame =
-    freshEncodedForQuery(spark, dir, cells,
-        fr => index.unpack(index.encode(fr, vecCol, metric)))
-      .map(f => rows.unionByName(f.select(rows.columns.map(col): _*)))
-      .getOrElse(rows)
+    if (!freshExists(spark, dir)) rows
+    else rows.unionByName(index.unpack(index.encode(
+        spark.read.parquet(freshPath(dir))
+          .filter(col("centroid_id").isin(cells: _*))
+          .drop("centroid_id"), vecCol, metric))
+      .select(rows.columns.map(col): _*))
 
   // --- Quantized-root fresh-rows maintenance --------------------------
   //
@@ -4837,21 +4806,6 @@ object Ann {
         else if (has(Bitq.dataSub)) Some((Bitq, None))
         else None
       }
-
-  /** Family + pinned spherical flag of a MARKED quantized root —
-    * refuses an unmarked dir (an unpinned root must never silently
-    * become a fresh-rows root or a maintenance target: adopt-on-append
-    * would mix geometries) and, like every quantized reader, a root
-    * mid-merge. */
-  private[graft] def quantizedFamily(spark: org.apache.spark.sql.SparkSession,
-                                     dir: String): (QuantFamily, Boolean) = {
-    // compaction and the declarative binding funnel through this detect —
-    // with the Quantized case's append entry, the guard seats for the
-    // quantized torn-merge refusal (loadQuantized covers searches)
-    requireNoPendingMerge(spark, dir)
-    detectQuantized(spark, dir).collect { case (f, Some(s)) => (f, s) }
-      .getOrElse(throw unpinnedQuantized(dir))
-  }
 
   private def unpinnedQuantized(dir: String) = new IllegalStateException(
     s"$dir carries no SQ/PQ/1-bit geometry marker — not a pinned " +
@@ -4957,23 +4911,8 @@ object Ann {
     ()
   }
 
-  /** The probed slice of a root's fresh side table, encoded under the
-    * root's frozen artifacts by `encode` — None when no fresh rows
-    * exist. The read prunes to the probed cells' partition dirs BEFORE
-    * encoding (rows re-assign to the same cells deterministically —
-    * same centroids, same argmin), so query cost over fresh scales
-    * with the probed fraction exactly like the main layout's scan. */
-  private def freshEncodedForQuery(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      cells: Array[Long],
-      encode: DataFrame => DataFrame): Option[DataFrame] =
-    if (!freshExists(spark, dir)) None
-    else Some(encode(spark.read.parquet(freshPath(dir))
-      .filter(col("centroid_id").isin(cells: _*))
-      .drop("centroid_id")))
-
   /** Fresh-aware BATCH kNN join over a quantized root — the query-log
-    * replay twin of [[searchQuantizedStored]]: a streaming-maintained
+    * replay twin of [[searchStored]]: a streaming-maintained
     * root is exactly the layout an eval loop replays a query log
     * against, and per-query stored searches would cost Q driver
     * round-trips. The BATCH's probed-cell UNION — each query's
@@ -4981,12 +4920,12 @@ object Ann {
     * own driver-side arithmetic (spherical roots rank normalized
     * queries, L2 on the unit sphere) — prunes `fresh/` to the
     * partitions ANY query in the batch can see BEFORE encode-on-read
-    * ([[freshEncodedForQuery]]'s contract, batch form: fresh IO is
+    * ([[withFresh]]'s contract, batch form: fresh IO is
     * bounded by the union's fraction, never |fresh|), the encoded
     * slice unions into the main layout's rows, and the whole job
     * delegates to [[knnJoinQuantized]] — whose per-query cell joins
     * restrict each query to ITS probed cells, so per-query results
-    * equal the single-query [[searchQuantizedStored]] and a one-shot
+    * equal the single-query [[searchStored]] and a one-shot
     * rebuild that had always held the fresh rows. No fresh side table
     * ⇒ pure delegation over the main layout. `pred` thins main AND
     * fresh before every per-query cut. `refine <= 0` = the family
@@ -4998,8 +4937,10 @@ object Ann {
                             probes: Int, k: Int, refine: Int = -1,
                             roundTo: Int = 6,
                             pred: Column = lit(true)): DataFrame = {
-    val (index, pin) = loadPinned(spark, dir)
-    requireSpace(dir, pin, metric)
+    val root = cellRoot(spark, dir, Some(vecCol))
+      .as[CellRoot.Quantized]("knnJoinQuantizedFresh")
+    val index = root.readIndex
+    requireSpace(dir, root.spherical, metric)
     // ONE evaluation of the query frame: the fresh-pruning union and
     // the delegate's own probes must see the SAME rows — a second
     // evaluation of a non-deterministic input (limit/sample) could
@@ -5036,18 +4977,19 @@ object Ann {
     * like the appends: rows whose id already reached the main layout
     * (a crash between append and delete) are dropped by the same
     * touched-cells existence probe, so a re-run folds the remainder
-    * and deletes. Returns rows graduated. */
-  def compactQuantizedFresh(spark: org.apache.spark.sql.SparkSession,
-                            dir: String, idCol: String,
-                            vecCol: String): Long = {
-    val (family, spherical) = quantizedFamily(spark, dir)
+    * and deletes. Refuses a torn merge and an unpinned root. Returns
+    * rows graduated. */
+  def compactQuantizedFresh(root: CellRoot.Quantized,
+                            idCol: String): Long = {
+    val (spark, dir) = (root.spark, root.dir)
+    requireNoPendingMerge(spark, dir)
+    root.pinned
     if (!freshExists(spark, dir)) return 0L
-    val metric = if (spherical) Cosine else (L2: Metric)
     val fresh = spark.read.parquet(freshPath(dir)).drop("centroid_id")
     // the at-rest form ingestIvf* appends verbatim (codes packed)
-    val encoded = family.artifacts(spark, dir, ivfModelAt(spark, dir))
-      .encode(fresh, vecCol, metric)
-    val mainPath = s"$dir/${family.dataSub}"
+    val encoded = root.family.artifacts(spark, dir, ivfModelAt(spark, dir))
+      .encode(fresh, root.vec, root.metric)
+    val mainPath = s"$dir/${root.dataSub}"
     val stored = spark.read.parquet(mainPath)
     val touched = distinctLongKeys(encoded, col("centroid_id"))
     val n = appendAbsent(encoded,
@@ -5074,20 +5016,21 @@ object Ann {
     * ([[graft.streaming.Stream.ingestQuantizedFreshAppend]]'s
     * `compactRatio`) or at attach
     * ([[graft.core.Engine]]`.compactFreshIfNeeded`). */
-  def compactQuantizedFreshIfNeeded(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      idCol: String, vecCol: String,
-      maxFreshRatio: Double): Option[Long] = {
+  def compactQuantizedFreshIfNeeded(root: CellRoot.Quantized,
+                                    idCol: String,
+                                    maxFreshRatio: Double): Option[Long] = {
+    val (spark, dir) = (root.spark, root.dir)
     require(maxFreshRatio >= 0.0 && !maxFreshRatio.isNaN &&
         !maxFreshRatio.isInfinity,
       s"compactQuantizedFreshIfNeeded: maxFreshRatio must be a " +
         s"finite ratio >= 0, got $maxFreshRatio")
-    val (family, _) = quantizedFamily(spark, dir)
+    requireNoPendingMerge(spark, dir)
+    root.pinned
     if (!freshExists(spark, dir)) return None
     val freshN = spark.read.parquet(freshPath(dir)).count()
-    val mainN = spark.read.parquet(s"$dir/${family.dataSub}").count()
+    val mainN = spark.read.parquet(s"$dir/${root.dataSub}").count()
     if (freshN > maxFreshRatio * mainN)
-      Some(compactQuantizedFresh(spark, dir, idCol, vecCol))
+      Some(compactQuantizedFresh(root, idCol))
     else None
   }
 
@@ -5344,11 +5287,11 @@ object Ann {
                                path: String, cellCol: String,
                                doomed: DataFrame => DataFrame,
                                survivors: DataFrame => DataFrame): Long = {
-    // a range root mid-merge has rows staged OUTSIDE this path
-    // (rows_merge) — a delete here could not see those copies and a
-    // later merge completion would resurrect the deleted rows; the
-    // marker lives in the layout's parent (no-op for non-range
-    // layouts, which never carry it)
+    // a cell root mid-merge (any family) has rows staged OUTSIDE this
+    // path — a delete here could not see those copies and a later
+    // merge completion would resurrect the deleted rows; the marker
+    // lives in the root, the data subdir's parent (a flat layout has
+    // no merge and never carries it)
     Option(new org.apache.hadoop.fs.Path(path).getParent)
       .foreach(p => requireNoPendingMerge(spark, p.toString))
     requireBatchLayout(spark, path)

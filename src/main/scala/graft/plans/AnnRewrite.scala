@@ -1,7 +1,5 @@
 package graft.plans
 
-import java.util.concurrent.atomic.AtomicReference
-
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -25,14 +23,15 @@ import graft.ops.Ann
   * a root's CURRENT geometry across out-of-band maintenance (split /
   * merge / append / fresh-compaction), and which are frozen snapshots
   * by design:
-  *  - root-backed, maintenance-aware: [[Binding.denseRoot]] (centroids
-  *    fingerprint-cached; appends move nothing else),
-  *    [[Binding.rangeRoot]] (centroids fingerprint-cached, radii
-  *    re-collected per resolve — appends grow them without a re-pin),
-  *    [[Binding.quantizedRoot]] (full re-load per resolve — compaction
-  *    changes the data listing without a re-pin),
-  *    [[Binding.matryoshkaIvf]] (centroids fingerprint-cached, rows
-  *    re-read per candidate plan), and the EXECUTOR-SIDE twins
+  *  - root-backed, maintenance-aware — each opens its root through
+  *    [[Ann.CellRoot.readModel]] per resolve, whose model (and its
+  *    collected centroids) is re-read only when the centroids listing
+  *    changes: [[Binding.denseRoot]] (appends move nothing else),
+  *    [[Binding.rangeRoot]] (radii memoized per radii listing —
+  *    appends grow them without a re-pin), [[Binding.quantizedRoot]]
+  *    (full re-open per resolve — compaction changes the data listing
+  *    without a re-pin), [[Binding.matryoshkaIvf]] (rows re-read per
+  *    candidate plan), and the EXECUTOR-SIDE twins
   *    [[Binding.denseRootDistributed]] / [[Binding.rangeRootDistributed]]
   *    (probe/admission subplans over the root's own side tables,
   *    re-read per resolve — no driver collect at any cell count).
@@ -63,28 +62,6 @@ object Binding {
                            probes: Int): Seq[Long] =
     cents.map { case (id, c) => (metric.distScala(c, q), id) }
       .sorted.take(probes).map(_._2)
-
-  /** Fingerprint-keyed centroid memo for a self-contained root: each
-    * call re-reads the root's model-fingerprint marker and re-collects
-    * the centroids exactly when maintenance re-pinned them (split /
-    * merge / graduation) — collection cost is paid once per re-pin,
-    * never per rewrite. `load` runs only on a re-pin, so a loader that
-    * refuses a torn root (pending merge) refuses at resolve time. */
-  private final class PinnedCentroids(dir: String) {
-    private val cache =
-      new AtomicReference[(String, Seq[(Long, Array[Double])])](null)
-    def apply(spark: SparkSession)(load: => Ann.IvfModel)
-        : Seq[(Long, Array[Double])] = {
-      val fp = Ann.readIvfModelMarker(spark, dir).getOrElse("unpinned")
-      val c = cache.get()
-      if (c != null && c._1 == fp) c._2
-      else {
-        val cents = load.collectedCentroids.toSeq
-        cache.set((fp, cents))
-        cents
-      }
-    }
-  }
 
   /** Plain IVF probe selection for `vecCol`: the rule injects
     * `Filter(cellCol IN nearest-probe cells)` above the scan. `cents`
@@ -263,18 +240,16 @@ object Binding {
     * column-prunes to `emb_pre`, the two prunings the composed layout
     * exists for). The plan's own Sort+Limit re-ranks at full precision.
     * L2 only (the family's metric). Build through [[matryoshka]] /
-    * [[matryoshkaIvf]], which read `dims` from the root's marker. */
+    * [[matryoshkaIvf]], which read `dims` from the root's marker;
+    * `cents` yields the composed root's centroids at every rewrite
+    * (unused at `probes == 0`). */
   final case class Matryoshka(vecCol: String, idCol: String, dir: String,
                               dims: Int, probes: Int, refine: Int,
-                              owner: String = "") extends Binding {
+                              owner: String = "",
+                              cents: () => Seq[(Long, Array[Double])] =
+                                () => Nil) extends Binding {
     def column: String = vecCol
     def metric: Ann.Metric = Ann.L2
-    // MAINTENANCE-AWARE probe selection, the [[denseRoot]] recipe:
-    // centroids are collected once per model-fingerprint re-pin, not
-    // once per rewrite (the pre-round-18 shape ran a collect JOB on
-    // every candidate plan) and never frozen at register time; a torn
-    // root refuses at resolve time through [[Ann.loadMrlIvfModel]].
-    private val pinned = new PinnedCentroids(dir)
     def candidateIds(q: Array[Double], k: Int): DataFrame = {
       // a query SHORTER than the stored prefix would silently
       // truncate (q.take(dims)) and cut candidates in the wrong space
@@ -285,8 +260,7 @@ object Binding {
       val spark = SparkSession.active
       val rows = spark.read.parquet(s"$dir/rows")
       val probed = if (probes == 0) rows else rows.filter(
-        col("centroid_id").isin(nearestCells(
-          pinned(spark)(Ann.loadMrlIvfModel(spark, dir)), q, Ann.L2,
+        col("centroid_id").isin(nearestCells(cents(), q, Ann.L2,
           probes): _*))
       probed
         .select(col(idCol), round(VecExprs.l2Dist(
@@ -459,26 +433,28 @@ object Binding {
 
   /** A SELF-CONTAINED dense cell root ([[Ann.writeDenseRoot]]) as a
     * [[Probe]], MAINTENANCE-AWARE: vector column and metric come from
-    * the root's own marker, and the resolver re-reads the pinned model
-    * FINGERPRINT per rewrite, re-collecting the disk centroids
-    * exactly when maintenance re-pinned them (split / merge /
-    * graduation) — so a declarative plan over `dir/rows` keeps
-    * probing the root's CURRENT geometry with no re-install, where a
-    * frozen [[Probe]] snapshot would keep injecting DISSOLVED cell
-    * ids after a split (empty pruned scans — silent recall loss, the
-    * exact failure the stale-caller-model refusals exist to prevent
-    * on the imperative path). Collection cost is paid once per re-pin
-    * (fingerprint-keyed), never per rewrite; a torn root (pending
-    * merge) REFUSES at resolve time through [[Ann.loadDenseRoot]] —
-    * declarative readers honor the family's loud-never-wrong
-    * contract like every other reader. */
+    * the root's own marker, resolved once at registration
+    * ([[Ann.cellRoot]]), and every rewrite opens the root through its
+    * reader seat ([[Ann.CellRoot.readModel]]), so a declarative plan
+    * over `dir/rows` keeps probing the root's CURRENT geometry with no
+    * re-install, where a frozen [[Probe]] snapshot would keep
+    * injecting DISSOLVED cell ids after a split (empty pruned scans —
+    * silent recall loss, the exact failure the stale-caller-model
+    * refusals exist to prevent on the imperative path). The seat's
+    * model stays the same instance while the centroids listing is
+    * unchanged, so centroids are collected once per split / merge /
+    * graduation, never per rewrite; a torn root (pending merge)
+    * REFUSES at registration and at every resolve — declarative
+    * readers honor the family's loud-never-wrong contract like every
+    * other reader. */
   def denseRoot(spark: SparkSession, dir: String, probes: Int,
                 owner: String = ""): Probe = {
-    val (_, metric, vecCol) = Ann.loadDenseRoot(spark, dir)
-    val pinned = new PinnedCentroids(dir)
-    Probe(vecCol, "centroid_id",
-      () => pinned(spark)(Ann.loadDenseRoot(spark, dir)._1), metric,
-      probes, owner)
+    val root = Ann.cellRoot(spark, dir, None)
+      .as[Ann.CellRoot.Dense]("registerDenseRoot")
+    root.readModel
+    Probe(root.vecCol, "centroid_id",
+      () => root.readModel.collectedCentroids.toSeq, root.metric, probes,
+      owner)
   }
 
   /** [[denseRoot]]'s EXECUTOR-SIDE twin — the binding that stays viable
@@ -489,17 +465,17 @@ object Binding {
     * machinery — centroids never leave the cluster,
     * DynamicPruningSubquery prunes the cell directories at runtime),
     * while metric and vector column still come from the root's marker
-    * and the centroid table is re-read per resolve through
-    * [[Ann.loadDenseRoot]] — a CURRENT file listing every rewrite
+    * and the centroid table is opened per resolve through
+    * [[Ann.CellRoot.readModel]] — a CURRENT file listing every rewrite
     * (splits/merges re-write `centroids/`) and the torn-merge refusal
-    * live, with no per-rewrite collect and no driver cache to go
-    * stale. */
+    * live, with no per-rewrite collect. */
   def denseRootDistributed(spark: SparkSession, dir: String, probes: Int,
                            owner: String = ""): ProbeDist = {
-    val (_, metric, vecCol) = Ann.loadDenseRoot(spark, dir)
-    ProbeDist(vecCol, "centroid_id",
-      () => Ann.loadDenseRoot(spark, dir)._1.centroids,
-      "centroid_id", "centroid", metric, probes, owner)
+    val root = Ann.cellRoot(spark, dir, None)
+      .as[Ann.CellRoot.Dense]("registerDenseRootDistributed")
+    root.readModel
+    ProbeDist(root.vecCol, "centroid_id", () => root.readModel.centroids,
+      "centroid_id", "centroid", root.metric, probes, owner)
   }
 
   /** A SELF-CONTAINED range root ([[Ann.writeRangeIndex]]) as a
@@ -512,64 +488,46 @@ object Binding {
     * parent's cell id — whose directory no longer exists — while the
     * new sub-cells holding its rows are absent from the frozen list,
     * so the "provably-empty" filter prunes live rows: silent row
-    * loss in the one rewrite documented as exact. The resolver
-    * re-reads the root's model-fingerprint marker per rewrite and
-    * re-collects centroids + radii exactly when maintenance
-    * re-pinned them (split / merge). The RADII are re-collected at
-    * EVERY resolve, never cached: [[Ann.appendIdempotent]] and the
-    * delete path grow/shrink a cell's stored radius WITHOUT a model
-    * re-pin (the model didn't change), and a radius served stale is
-    * the exact failure the rewrite must never have — a row appended
-    * beyond its cell's cached radius would sit within eps of a query
-    * whose admitted-cells cut prunes its directory (silent row
-    * loss). Radii are k rows; the per-rewrite collect is the same
-    * bounded cost the generic resolver contract documents. A torn
-    * root (pending merge) refuses at resolve time through
-    * [[Ann.loadRangeIndex]]. L2 pinned like every [[Range]]
-    * (spherical roots store normalized columns and L2 radii — the
-    * cosine reduction happens before the plan reaches this rule). */
+    * loss in the one rewrite documented as exact. Every rewrite opens
+    * the root through its reader seat and reads the radii through
+    * [[Ann.CellRoot.Range.readRadii]], memoized per radii LISTING:
+    * [[Ann.appendIdempotent]] and the delete path grow/shrink a cell's
+    * stored radius WITHOUT a model re-pin, but every radii write swaps
+    * in fresh files, so the memo key changes and a radius is never
+    * served stale — a row appended beyond its cell's old radius stays
+    * reachable. A torn root (pending merge) refuses at registration
+    * and at every resolve. L2 pinned like every [[Range]] (spherical
+    * roots store normalized columns and L2 radii — the cosine
+    * reduction happens before the plan reaches this rule). */
   def rangeRoot(spark: SparkSession, dir: String, vecCol: String,
                 owner: String = ""): Range = {
-    // typed refusal before the loader's raw path error — the triad's
-    // discipline: a mis-pointed dir refuses by contract, not accident
-    require(Ann.detectCellRoot(spark, dir, Some(vecCol))
-        .exists(_.isInstanceOf[Ann.CellRoot.Range]),
-      s"registerRangeRoot: $dir has no radii side table — not a " +
-        "writeRangeIndex root (register a dense root via " +
-        "registerDenseRoot, a quantized root via registerQuantizedRoot)")
-    Ann.loadRangeIndex(spark, dir) // refuse torn dirs at install
-    val pinned = new PinnedCentroids(dir)
+    val root = Ann.cellRoot(spark, dir, Some(vecCol))
+      .as[Ann.CellRoot.Range]("registerRangeRoot")
+    root.readModel
     Range(vecCol, "centroid_id", Ann.L2, () => {
-      // loadRangeIndex per resolve: torn-merge refusal stays live and
-      // the radii frame reads the CURRENT file listing
-      val (model, radii) = Ann.loadRangeIndex(spark, dir)
-      val cents = pinned(spark)(model)
-      val rad = radii
-        .select(col(model.idCol).cast("long"),
-          col("radius").cast("double"))
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-      cents.map { case (id, v) => (id, v, rad.getOrElse(id, 0.0)) }
+      val model = root.readModel
+      val rad = root.readRadii(model)
+      model.collectedCentroids.toSeq.map { case (id, v) =>
+        (id, v, rad.getOrElse(id, 0.0)) }
     }, owner)
   }
 
   /** [[rangeRoot]]'s executor-side form ([[RangeDist]]) over a
     * self-contained [[Ann.writeRangeIndex]] root: the admitted-cells
     * subplan joins the root's OWN centroids and radii side tables,
-    * re-read through the guarded loader at every resolve — current
-    * file listings per rewrite (appends grow radii without a re-pin;
+    * opened through the reader seat at every resolve — current file
+    * listings per rewrite (appends grow radii without a re-pin;
     * splits rewrite both tables), torn-merge refusal live, and NO
     * driver-side collect at any point, which is what keeps the exact
     * rewrite viable at 100 TB cell counts. */
   def rangeRootDistributed(spark: SparkSession, dir: String,
                            vecCol: String,
                            owner: String = ""): RangeDist = {
-    require(Ann.detectCellRoot(spark, dir, Some(vecCol))
-        .exists(_.isInstanceOf[Ann.CellRoot.Range]),
-      s"registerRangeRootDistributed: $dir has no radii side table — " +
-        "not a writeRangeIndex root")
-    Ann.loadRangeIndex(spark, dir) // refuse torn dirs at install
+    val root = Ann.cellRoot(spark, dir, Some(vecCol))
+      .as[Ann.CellRoot.Range]("registerRangeRootDistributed")
+    root.readModel
     RangeDist(vecCol, "centroid_id", () => {
-      val (model, radii) = Ann.loadRangeIndex(spark, dir)
+      val model = root.readModel
       // LEFT join + coalesce(radius, 0.0): a cell missing its radii
       // row must be admitted with radius 0 exactly like the driver-
       // literal twin (rangeRoot uses rad.getOrElse(id, 0.0)) — an
@@ -577,7 +535,7 @@ object Binding {
       // damaged/partial radii side table, making the two 'exact'
       // engines diverge
       model.centroids.join(
-        radii.select(col(model.idCol), col("radius")),
+        root.radii.select(col(model.idCol), col("radius")),
         Seq(model.idCol), "left")
         .withColumn("radius", coalesce(col("radius"), lit(0.0)))
     }, owner)
@@ -587,30 +545,34 @@ object Binding {
     * the family member of [[denseRoot]]'s recipe for SQ / PQ / 1-bit
     * layouts: the metric comes from the root's own geometry marker
     * (spherical roots serve cosine plans, the build's own contract;
-    * an unmarked root refuses), and the resolver
-    * RE-LOADS the root at every resolve, so every maintenance wave
-    * reaches declarative probe selection with no re-install — where a
-    * frozen `() => index` keeps scanning the install-time FILE
-    * LISTING: after a split, the dissolved parent's files are gone
-    * (the probed scan dies on FileNotFound at best) and the sub-cells
-    * holding its rows are invisible at worst. Loading per resolve
-    * rather than caching by fingerprint is deliberate: a fresh-rows
-    * COMPACTION ([[Ann.compactQuantizedFresh]]) appends encoded rows
-    * to the main layout WITHOUT a model re-pin (the quantizer didn't
-    * change), so a fingerprint-keyed listing would silently exclude
-    * every compacted row from phase-1 candidates — and per-resolve
-    * loading keeps the torn-merge refusal live mid-maintenance
-    * instead of serving a pre-merge listing of half-moved files. The
-    * per-rewrite cost is the loaders' bounded metadata work (file
-    * listings; PQ re-collects its m·codes codebook rows — the
-    * generic resolver contract's documented budget). `refine <= 0` =
-    * the family default (5; 1-bit [[Ann.defaultBitqRefine]]). */
+    * an unmarked root refuses), and the resolver RE-OPENS the index
+    * at every resolve ([[Ann.CellRoot.Quantized.readIndex]]), so every
+    * maintenance wave reaches declarative probe selection with no
+    * re-install — where a frozen `() => index` keeps scanning the
+    * install-time FILE LISTING: after a split, the dissolved parent's
+    * files are gone (the probed scan dies on FileNotFound at best) and
+    * the sub-cells holding its rows are invisible at worst. Opening
+    * per resolve rather than caching by fingerprint is deliberate: a
+    * fresh-rows COMPACTION ([[Ann.compactQuantizedFresh]]) appends
+    * encoded rows to the main layout WITHOUT a model re-pin (the
+    * quantizer didn't change), so a fingerprint-keyed listing would
+    * silently exclude every compacted row from phase-1 candidates —
+    * and per-resolve opening keeps the torn-merge refusal live
+    * mid-maintenance instead of serving a pre-merge listing of
+    * half-moved files. The per-rewrite cost is the reader's bounded
+    * metadata work (file listings; PQ re-collects its m·codes codebook
+    * rows — the generic resolver contract's documented budget).
+    * `refine <= 0` = the family default (5; 1-bit
+    * [[Ann.defaultBitqRefine]]). */
   def quantizedRoot(spark: SparkSession, dir: String, vecCol: String,
                     idCol: String, probes: Int, refine: Int = -1,
                     owner: String = ""): Quantized = {
-    val (_, spherical) = Ann.quantizedFamily(spark, dir)
-    Quantized(vecCol, idCol, () => Ann.loadQuantized(spark, dir),
-      if (spherical) Ann.Cosine else Ann.L2, probes, refine, owner)
+    val root = Ann.cellRoot(spark, dir, Some(vecCol))
+      .as[Ann.CellRoot.Quantized]("registerQuantizedRoot")
+    root.pinned
+    root.readModel
+    Quantized(vecCol, idCol, () => root.readIndex, root.metric, probes,
+      refine, owner)
   }
 
   /** A [[Ann.writeMatryoshka]] root as a [[Matryoshka]] for
@@ -639,22 +601,26 @@ object Binding {
 
   /** A [[Ann.writeMatryoshkaIvf]] root as a [[Matryoshka]] —
     * [[matryoshka]]'s composed twin: same l2_dist plan shape, but the
-    * candidate cut probes cells first. The root's marker is read HERE
-    * (missing/cosine roots refuse the registration, not the first
-    * query — the rewrite serves l2_dist plans only). */
+    * candidate cut probes cells first. The root resolves HERE
+    * ([[Ann.cellRoot]] — missing/torn/cosine roots refuse the
+    * registration, not the first query; the rewrite serves l2_dist
+    * plans only), and every rewrite's probe opens it through its
+    * reader seat ([[Ann.CellRoot.readModel]]: the torn-merge refusal
+    * stays live, and centroids are collected once per re-pin). */
   def matryoshkaIvf(vecCol: String, idCol: String, dir: String,
                     probes: Int = 3, refine: Int = 5,
                     owner: String = ""): Matryoshka = {
     require(refine >= 1, s"registerMatryoshkaIvf: refine >= 1, got $refine")
     require(probes >= 1, s"registerMatryoshkaIvf: probes >= 1, got $probes")
-    val spark = SparkSession.active
-    val (dims, rootMetric) = Ann.readMatryoshkaMeta(spark, dir,
-      "registerMatryoshkaIvf", "_graft_matryoshka_ivf")
-    require(rootMetric == Ann.L2,
-      s"registerMatryoshkaIvf: $dir is a metric=$rootMetric root — " +
+    val root = Ann.cellRoot(SparkSession.active, dir, None)
+      .as[Ann.CellRoot.MrlIvf]("registerMatryoshkaIvf")
+    require(root.metric == Ann.L2,
+      s"registerMatryoshkaIvf: $dir is a metric=${root.metric} root — " +
         "the declarative rewrite serves l2_dist plans only; query " +
-        "cosine roots via Ann.matryoshkaTopKIvf(metric = Cosine)")
-    Matryoshka(vecCol, idCol, dir, dims, probes, refine, owner)
+        "cosine roots via Ann.searchStored")
+    root.readModel
+    Matryoshka(vecCol, idCol, dir, root.dims, probes, refine, owner,
+      () => root.readModel.collectedCentroids.toSeq)
   }
 }
 

@@ -369,7 +369,7 @@ object Events {
     * exactly-once into `encoded/`'s cell dirs; geometry AND codebook
     * digest pinned by markers so a retrained quantizer is refused),
     * the grown layout GRADUATES via compactStored, and
-    * [[graft.ops.Ann.searchQuantizedStored]] answers r38's exact query
+    * [[graft.ops.Ann.searchStored]] answers r38's exact query
     * over the root — shared oracle, so the streamed path must be
     * byte-identical to the batch index. */
   def streamPqTwin(s: SparkSession, d: String): DataFrame = {
@@ -406,8 +406,9 @@ object Events {
       "commit log must be gone after graduation")
     val qv = rows.find(_._1 == 5L)
       .getOrElse(throw new IllegalStateException("no vec_id 5"))._2
-    graft.ops.Ann.searchQuantizedStored(s, dir, "vec_id", "embedding",
-      typedlit(qv), graft.ops.Ann.L2, probes = 3, k = 10, refine = 5)
+    graft.ops.Ann.searchStored(
+      graft.ops.Ann.cellRoot(s, dir, Some("embedding")), "vec_id", qv, 3, 10,
+      refine = 5)
   }
 
   /** s13: the SQ streaming lifecycle under the oracle — the 8-bit twin
@@ -417,7 +418,7 @@ object Events {
     * [[graft.streaming.Stream.ingestIvfSq]] (map-only assign +
     * quantize + pack, bit-identical to [[graft.ops.Ann.buildIvfSq]]),
     * compactStored graduation, then
-    * [[graft.ops.Ann.searchQuantizedStored]] with r12's exact
+    * [[graft.ops.Ann.searchStored]] with r12's exact
     * parameters — so the streamed-then-compacted layout must
     * reproduce the batch index bit-for-bit (shared oracle). */
   def streamSqTwin(s: SparkSession, d: String): DataFrame = {
@@ -455,8 +456,9 @@ object Events {
       "commit log must be gone after graduation")
     val qv = rows.find(_._1 == 11L)
       .getOrElse(throw new IllegalStateException("no vec_id 11"))._2
-    graft.ops.Ann.searchQuantizedStored(s, dir, "vec_id", "embedding",
-      typedlit(qv), graft.ops.Ann.L2, probes = 3, k = 10, refine = 5)
+    graft.ops.Ann.searchStored(
+      graft.ops.Ann.cellRoot(s, dir, Some("embedding")), "vec_id", qv, 3, 10,
+      refine = 5)
   }
 
   /** s14: the 1-BIT streaming lifecycle under the oracle — the last
@@ -464,7 +466,7 @@ object Events {
     * batch-side and pinned at the root, sign-bit residual codes + rnorm
     * streamed in three micro-batches through
     * [[graft.streaming.Stream.ingestIvfBitq]], compactStored
-    * graduation, then [[graft.ops.Ann.searchQuantizedStored]] with r14's
+    * graduation, then [[graft.ops.Ann.searchStored]] with r14's
     * exact parameters (shared oracle — the streamed layout must
     * reproduce the batch index bit-for-bit). */
   def streamBitqTwin(s: SparkSession, d: String): DataFrame = {
@@ -500,8 +502,9 @@ object Events {
       "commit log must be gone after graduation")
     val qv = rows.find(_._1 == 13L)
       .getOrElse(throw new IllegalStateException("no vec_id 13"))._2
-    graft.ops.Ann.searchQuantizedStored(s, dir, "vec_id", "embedding",
-      typedlit(qv), graft.ops.Ann.L2, probes = 3, k = 10, refine = 5)
+    graft.ops.Ann.searchStored(
+      graft.ops.Ann.cellRoot(s, dir, Some("embedding")), "vec_id", qv, 3, 10,
+      refine = 5)
   }
 
   /** s15: the RANGE-INDEX streaming lifecycle — rows streamed through
@@ -651,7 +654,9 @@ object Events {
       s"s19: replayed batch appended $dup rows — append not replay-safe")
     // pin 2: radii stayed SOUND through every batch (each grew them
     // before its rows) — the stored radius covers every stored row
-    val (m2, storedRadii) = graft.ops.Ann.loadRangeIndex(s, root)
+    val range = graft.ops.Ann.cellRoot(s, root, None)
+      .as[graft.ops.Ann.CellRoot.Range]("s19")
+    val (m2, storedRadii) = (range.readModel, range.radii)
     val uncovered = graft.ops.Ann.cellRadii(
         s.read.parquet(s"$root/rows"), "embedding", m2,
         graft.ops.Ann.L2)
@@ -675,7 +680,7 @@ object Events {
     * before any row, three micro-batches of assigned prefix-sliced
     * rows append cell-partitioned exactly-once,
     * [[graft.streaming.Stream.compactStored]] graduates the cells,
-    * and the graduated root serves [[graft.ops.Ann.matryoshkaTopKIvf]]
+    * and the graduated root serves [[graft.ops.Ann.searchStored]]
     * with r78's exact parameters — the streamed layout is lossless,
     * so r78's composed replay must land verbatim (one oracle, two
     * build paths). A restart with different dims refuses (pinned
@@ -714,8 +719,8 @@ object Events {
       "s20: a restart with different dims did not refuse")
     graft.streaming.Stream.compactStored(s, s"$dir/rows",
       "centroid_id", maxFilesPerCell = 1)
-    graft.ops.Ann.matryoshkaTopKIvf(s, dir, "vec_id",
-      qvecSeqOf(s, d, 5), probes = 3, candidates = 50, k = 10)
+    graft.ops.Ann.searchStored(graft.ops.Ann.cellRoot(s, dir, None), "vec_id",
+        qvecSeqOf(s, d, 5), 3, 10)
   }
 
   private def qvecSeqOf(s: SparkSession, d: String,
@@ -766,8 +771,8 @@ object Events {
       rows.take(rows.length / 3).toDF("vec_id", "embedding"), "vec_id")
     require(dup == 0L,
       s"s21: replayed batch appended $dup rows — append not replay-safe")
-    graft.ops.Ann.matryoshkaTopKIvf(s, root, "vec_id",
-      qvecSeqOf(s, d, 5), probes = 3, candidates = 50, k = 10)
+    graft.ops.Ann.searchStored(graft.ops.Ann.cellRoot(s, root, None),
+        "vec_id", qvecSeqOf(s, d, 5), 3, 10)
   }
 
   /** s22: streamed MAINTENANCE of a graduated BM25 postings layout
@@ -943,7 +948,7 @@ object Events {
     * AND main, so a batch redelivered even AFTER compaction appends
     * nothing), and the fresh-aware search PQ-encodes them ON READ
     * under the frozen codebooks
-    * ([[graft.ops.Ann.searchQuantizedStored]]) — bit-identical codes
+    * ([[graft.ops.Ann.searchStored]]) — bit-identical codes
     * to the batch build, so the result is EXACTLY a one-shot
     * full-corpus build's. Codebooks and centroids train on the full
     * corpus (the label-mean / offline-model seat s19 and c10 use),
@@ -1001,8 +1006,8 @@ object Events {
     // encoded layout and the fresh side table partition-prune
     val qv = e.filter(col("vec_id") === 5)
       .select(col("embedding")).head().getSeq[Double](0).toSeq
-    val df = graft.ops.Ann.searchQuantizedStored(s, dir, "vec_id",
-      "embedding", typedlit(qv), graft.ops.Ann.L2, probes = 3, k = 10,
+    val df = graft.ops.Ann.searchStored(
+      graft.ops.Ann.cellRoot(s, dir, Some("embedding")), "vec_id", qv, 3, 10,
       refine = 5)
     Retrieval.assertPartitionPruned(
       df.queryExecution.executedPlan.toString, "centroid_id",
@@ -1080,14 +1085,15 @@ object Events {
       .select(col("embedding")).head().getSeq[Double](0).toSeq
     // the fresh-AWARE search on a fully-graduated root degenerates to
     // the stored search — r12's oracle lands verbatim
-    graft.ops.Ann.searchQuantizedStored(s, dir, "vec_id", "embedding",
-      typedlit(qv), graft.ops.Ann.L2, probes = 3, k = 10, refine = 5)
+    graft.ops.Ann.searchStored(
+      graft.ops.Ann.cellRoot(s, dir, Some("embedding")), "vec_id", qv, 3, 10,
+      refine = 5)
   }
 
   /** s26: s25's SQ twin — streamed maintenance of a graduated
     * [[graft.ops.Ann.writeQuantized]] root through the same fresh-rows
     * side table, searched via
-    * [[graft.ops.Ann.searchQuantizedStored]] (fresh rows SQ-encoded
+    * [[graft.ops.Ann.searchStored]] (fresh rows SQ-encoded
     * on read under the stored per-cell bounds — codes bit-identical
     * to the batch build), then COMPACTED
     * ([[graft.ops.Ann.compactQuantizedFresh]]) and searched again:
@@ -1130,15 +1136,15 @@ object Events {
     } finally q.stop()
     val qv = e.filter(col("vec_id") === 11)
       .select(col("embedding")).head().getSeq[Double](0).toSeq
-    def search() = graft.ops.Ann.searchQuantizedStored(s, dir,
-      "vec_id", "embedding", typedlit(qv), graft.ops.Ann.L2,
-      probes = 3, k = 10, refine = 5)
+    val root = graft.ops.Ann.cellRoot(s, dir, Some("embedding"))
+      .as[graft.ops.Ann.CellRoot.Quantized]("s26")
+    def search() =
+      graft.ops.Ann.searchStored(root, "vec_id", qv, 3, 10, refine = 5)
     // pin: compaction is OBSERVABLY a no-op — encode-on-read before,
     // folded codes after, same rows either way
     val before = search().collect().map(r =>
       (r.getLong(0), r.getDouble(1))).toSeq
-    val folded = graft.ops.Ann.compactQuantizedFresh(s, dir, "vec_id",
-      "embedding")
+    val folded = graft.ops.Ann.compactQuantizedFresh(root, "vec_id")
     require(folded == rows.length.toLong,
       s"s26: compaction folded $folded rows, wanted ${rows.length}")
     require(!new java.io.File(dir, "fresh").exists(),
@@ -1156,7 +1162,7 @@ object Events {
     * [[graft.ops.Ann.writeQuantized]] root: half the corpus at rest
     * under full-corpus-trained centroids, the other half streamed RAW
     * into `fresh/`, searched via
-    * [[graft.ops.Ann.searchQuantizedStored]] (fresh rows
+    * [[graft.ops.Ann.searchStored]] (fresh rows
     * sign-bit-encoded on read — residuals against the same frozen
     * centroids, so codes are bit-identical to the batch build's) with
     * r14's exact parameters, landing on r14's oracle verbatim.
@@ -1203,8 +1209,8 @@ object Events {
       s"s27: replayed batch appended $dup rows — append not replay-safe")
     val qv = e.filter(col("vec_id") === 13)
       .select(col("embedding")).head().getSeq[Double](0).toSeq
-    graft.ops.Ann.searchQuantizedStored(s, dir, "vec_id",
-      "embedding", typedlit(qv), graft.ops.Ann.L2, probes = 3, k = 10,
+    graft.ops.Ann.searchStored(
+      graft.ops.Ann.cellRoot(s, dir, Some("embedding")), "vec_id", qv, 3, 10,
       refine = 5)
   }
 
@@ -1272,7 +1278,9 @@ object Events {
         q.processAllAvailable()
       }
     } finally q.stop()
-    val (m2, storedRadii) = graft.ops.Ann.loadRangeIndex(s, root)
+    val range = graft.ops.Ann.cellRoot(s, root, None)
+      .as[graft.ops.Ann.CellRoot.Range]("s29")
+    val (m2, storedRadii) = (range.readModel, range.radii)
     // pin 1: the policy FIRED — the root holds more cells than the
     // trained model (a never-firing policy leaves exactly `lists`)
     val cellsNow = m2.centroids.count()
@@ -1376,9 +1384,8 @@ object Events {
       s"s31: replayed batch appended $dup rows post-split")
     // all-probe: the composed two-phase equals the flat prefix cut —
     // r70's oracle verbatim, independent of which cells split
-    graft.ops.Ann.matryoshkaTopKIvf(s, root, "vec_id",
-      qvecSeqOf(s, d, 3), probes = cellsNow.toInt, candidates = 50,
-      k = 10)
+    graft.ops.Ann.searchStored(graft.ops.Ann.cellRoot(s, root, None),
+        "vec_id", qvecSeqOf(s, d, 3), cellsNow.toInt, 10)
   }
 
   /** s32: the QUANTIZED lifecycle closed — compaction and the
@@ -1452,10 +1459,9 @@ object Events {
     require(dup == 0L,
       s"s32: replayed batch appended $dup rows post-split+fold")
     val total = s.read.parquet(s"$dir/quantized").count()
-    graft.ops.Ann.searchQuantizedStored(s, dir, "vec_id", "embedding",
-      typedlit(qvecSeqOf(s, d, 7)), graft.ops.Ann.L2,
-      probes = cellsNow.toInt, k = 10,
-      refine = (total / 10 + 1).toInt)
+    graft.ops.Ann.searchStored(
+      graft.ops.Ann.cellRoot(s, dir, Some("embedding")), "vec_id",
+      qvecSeqOf(s, d, 7), cellsNow.toInt, 10, refine = (total / 10 + 1).toInt)
   }
 
   /** s30: streamed MAINTENANCE of a GRADUATED maxsim layout — the
@@ -1613,8 +1619,8 @@ object Events {
     require(total == e.count(),
       s"s33: split lost or duplicated rows — $total of ${e.count()}")
     // all-probe: splits are invisible — r01's exact oracle verbatim
-    graft.ops.Ann.searchDenseStoredSelf(s, root, "vec_id",
-        typedlit(qvecSeqOf(s, d, 0)), probes = cellsNow.toInt, k = 10)
+    graft.ops.Ann.searchStored(graft.ops.Ann.cellRoot(s, root, None),
+        "vec_id", qvecSeqOf(s, d, 0), cellsNow.toInt, 10)
       .select("vec_id", "dist")
   }
 
@@ -1693,7 +1699,7 @@ object Events {
     // and the exact sum-of-max re-rank IS the oracle's scan
     val cand = graft.ops.Ann.maxsimCandidatesIvf(stored, "vec_id",
       "mv_mean",
-      graft.ops.Ann.loadDenseRoot(s, root)._1, qts,
+      graft.ops.Ann.cellRoot(s, root, None).readModel, qts,
       n = total.toInt, probes = cellsNow.toInt)
     stored.join(cand, Seq("vec_id"), "left_semi")
       .withColumn("score", round(org.apache.spark.sql.graft.VecExprs

@@ -32,6 +32,11 @@ object Retrieval {
   private def qvec(s: SparkSession, d: String, id: Long): Column =
     typedlit(qvecSeq(s, d, id))
 
+  /** The quantized index of the stored root at `dir`. */
+  private def storedIndex(s: SparkSession, dir: String): Ann.QuantIndex =
+    Ann.cellRoot(s, dir, None).as[Ann.CellRoot.Quantized]("storedIndex")
+      .readIndex
+
   /** Dense exact top-k, L2 — reference `<->` (client.py:294-321). */
   def annTopkL2(s: SparkSession, d: String): DataFrame =
     Ann.topK(embeddings(s, d), "vec_id", "embedding", qvec(s, d, 0),
@@ -153,7 +158,7 @@ object Retrieval {
   }
 
   /** r40: r38 with the index AT REST ([[Ann.writeQuantized]] →
-    * [[Ann.searchQuantizedStored]]) — probe cells become literal partition
+    * [[Ann.searchStored]]) — probe cells become literal partition
     * filters on the cell-partitioned layout, so BOTH the codes-only
     * ADC scan and the survivor vector fetch read only probed cell
     * directories (pinned in-query); geometry pinned by marker; results
@@ -165,8 +170,8 @@ object Retrieval {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_ivfpq_store").toString
     Ann.writeQuantized(idx, dir)
-    val df = Ann.searchQuantizedStored(s, dir, "vec_id", "embedding",
-      typedlit(qvecSeq(s, d, 5)), Ann.L2, probes = 3, k = 10, refine = 5)
+    val df = Ann.searchStored(Ann.cellRoot(s, dir, Some("embedding")),
+        "vec_id", qvecSeq(s, d, 5), 3, 10, refine = 5)
     val phys = df.queryExecution.executedPlan.toString
     assertPartitionPruned(phys, "centroid_id",
       "stored ivf-pq search")
@@ -220,7 +225,7 @@ object Retrieval {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_knnpq_store").toString
     Ann.writeQuantized(idx, dir)
-    val stored = Ann.loadQuantized(s, dir)
+    val stored = storedIndex(s, dir)
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
     val df = Ann.knnJoinQuantized(queries, "q_id", "qv", stored, "vec_id",
@@ -281,7 +286,8 @@ object Retrieval {
   }
 
   /** r50: r48 with the SQ index AT REST ([[Ann.writeQuantized]] →
-    * [[Ann.loadQuantized]] → [[Ann.knnJoinQuantized]]) — the at-rest batch
+    * [[Ann.CellRoot.Quantized.readIndex]] → [[Ann.knnJoinQuantized]]) —
+    * the at-rest batch
     * story for the quantized family: the batch's probed-cell union
     * plants literal PartitionFilters on the cell-partitioned layout
     * AND phase-1 reads (id, packed codes) ONLY — the full-precision
@@ -295,7 +301,7 @@ object Retrieval {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_knnsq_store").toString
     Ann.writeQuantized(index, dir)
-    val stored = Ann.loadQuantized(s, dir)
+    val stored = storedIndex(s, dir)
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
     val df = Ann.knnJoinQuantized(queries, "q_id", "qv", stored, "vec_id",
@@ -351,12 +357,12 @@ object Retrieval {
     val removed = Ann.deleteStored(s, s"$dir/encoded",
       col("vec_id") % 7 === 0)
     require(removed > 0, "stored delete removed nothing — gate is vacuous")
-    Ann.searchQuantizedStored(s, dir, "vec_id", "embedding",
-      typedlit(qvecSeq(s, d, 5)), Ann.L2, probes = 3, k = 10, refine = 5)
+    Ann.searchStored(Ann.cellRoot(s, dir, Some("embedding")), "vec_id",
+        qvecSeq(s, d, 5), 3, 10, refine = 5)
   }
 
   /** r46: r43 with the spherical index AT REST ([[Ann.writeQuantized]] →
-    * [[Ann.searchQuantizedStored]] — r40's cosine twin): geometry
+    * [[Ann.searchStored]] — r40's cosine twin): geometry
     * including the spherical flag pinned by marker, probe cells as
     * literal partition filters on BOTH phases, results byte-identical
     * to r43 (shared oracle). */
@@ -367,8 +373,8 @@ object Retrieval {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_ivfpqc_store").toString
     Ann.writeQuantized(idx, dir)
-    val df = Ann.searchQuantizedStored(s, dir, "vec_id", "embedding",
-      typedlit(qvecSeq(s, d, 17)), Ann.Cosine, probes = 3, k = 10, refine = 5)
+    val df = Ann.searchStored(Ann.cellRoot(s, dir, Some("embedding")),
+        "vec_id", qvecSeq(s, d, 17), 3, 10, refine = 5)
     val phys = df.queryExecution.executedPlan.toString
     assertPartitionPruned(phys, "centroid_id",
       "stored spherical ivf-pq search")
@@ -418,7 +424,7 @@ object Retrieval {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_knnpqc_store").toString
     Ann.writeQuantized(idx, dir)
-    val stored = Ann.loadQuantized(s, dir)
+    val stored = storedIndex(s, dir)
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
     val df = Ann.knnJoinQuantized(queries, "q_id", "qv", stored,
@@ -850,8 +856,8 @@ object Retrieval {
     val removed = Ann.deleteStored(s, s"$dir/quantized",
       col("vec_id") % 7 === 0)
     require(removed > 0, "stored delete removed nothing — gate is vacuous")
-    Ann.searchQuantizedStored(s, dir, "vec_id", "embedding", qvec(s, d, 11),
-      Ann.L2, probes = 3, k = 10, refine = 5)
+    Ann.searchStored(Ann.cellRoot(s, dir, Some("embedding")), "vec_id",
+        qvecSeq(s, d, 11), 3, 10, refine = 5)
   }
 
   /** r84: r19's delete-maintenance gate over a root WITH a fresh
@@ -887,8 +893,8 @@ object Retrieval {
       doomed)
     require(removedMain > 0 && removedFresh > 0,
       s"r84 vacuous: removed $removedMain main / $removedFresh fresh")
-    Ann.searchQuantizedStored(s, dir, "vec_id", "embedding",
-      qvec(s, d, 11), Ann.L2, probes = 3, k = 10, refine = 5)
+    Ann.searchStored(Ann.cellRoot(s, dir, Some("embedding")), "vec_id",
+        qvecSeq(s, d, 11), 3, 10, refine = 5)
   }
 
   /** r87: fresh-aware BATCH kNN join over a quantized root
@@ -1820,8 +1826,8 @@ object Retrieval {
       s"r98: split left $cellsNow cells, trained $lists")
     require(s.read.parquet(s"$dir/rows").count() == total,
       "r98: split lost or duplicated rows")
-    Ann.searchDenseStoredSelf(s, dir, "vec_id", qvec(s, d, 7),
-        probes = cellsNow.toInt, k = 10)
+    Ann.searchStored(Ann.cellRoot(s, dir, None), "vec_id", qvecSeq(s, d, 7),
+        cellsNow.toInt, 10)
       .select(col("vec_id"), (col("dist") + lit(0.0)).as("dist"))
   }
 
@@ -1861,11 +1867,11 @@ object Retrieval {
       s"r99: merge left $cellsNow cells, wanted ${lists - merged.size}")
     // row conservation: every survivor reachable at all-probe
     val remaining = s.read.parquet(s"$dir/rows").count()
-    require(Ann.searchDenseStoredSelf(s, dir, "vec_id", qvec(s, d, 9),
-        probes = cellsNow.toInt, k = remaining.toInt).count()
+    require(Ann.searchStored(Ann.cellRoot(s, dir, None), "vec_id",
+        qvecSeq(s, d, 9), cellsNow.toInt, remaining.toInt).count()
       == remaining, "r99: a surviving row went dark after the merge")
-    Ann.searchDenseStoredSelf(s, dir, "vec_id", qvec(s, d, 9),
-        probes = cellsNow.toInt, k = 10)
+    Ann.searchStored(Ann.cellRoot(s, dir, None), "vec_id", qvecSeq(s, d, 9),
+        cellsNow.toInt, 10)
       .select("vec_id", "dist")
   }
 
@@ -2451,11 +2457,12 @@ object Retrieval {
         .select((col("vec_id") + lit(10000000L)).as("vec_id"),
           col("embedding"), col("label"))
         .localCheckpoint(true)
-      require(Ann.appendIdempotent(
-        Ann.cellRoot(s, dir, Some("embedding")),
-        dup, "vec_id") == 1L, "r105: fresh append lost the row")
-      require(Ann.compactQuantizedFresh(s, dir, "vec_id",
-        "embedding") == 1L, "r105: compaction lost the row")
+      val root = Ann.cellRoot(s, dir, Some("embedding"))
+        .as[Ann.CellRoot.Quantized]("r105")
+      require(Ann.appendIdempotent(root, dup, "vec_id") == 1L,
+        "r105: fresh append lost the row")
+      require(Ann.compactQuantizedFresh(root, "vec_id") == 1L,
+        "r105: compaction lost the row")
       reg(1)
       val pin2 = {
         val scanRoot = s.read.parquet(s"$dir/quantized")
@@ -2486,9 +2493,9 @@ object Retrieval {
     * matryoshka-IVF root — the round's recipe completing the
     * declarative-registration matrix (dense r101, range r103,
     * quantized r105): [[graft.plans.Binding.matryoshkaIvf]]
-    * now resolves centroids through a fingerprint-keyed cache
-    * (collected once per maintenance re-pin, not once per rewrite —
-    * and refusing torn roots through [[Ann.loadMrlIvfModel]]), so an
+    * now opens the root through its reader seat per rewrite
+    * ([[Ann.CellRoot.readModel]]: centroids collected once per
+    * maintenance re-pin, not once per rewrite, torn roots refused), so an
     * out-of-band [[Ann.splitOverfull]] reaches
     * declarative probe selection with no re-install. In-gate pins:
     * LeftSemi fires, and a probes=1 declarative query at a
@@ -2920,7 +2927,7 @@ object Retrieval {
   }
 
   /** r78: matryoshka COMPOSED with IVF cell pruning
-    * ([[Ann.writeMatryoshkaIvf]] + [[Ann.matryoshkaTopKIvf]]) — the
+    * ([[Ann.writeMatryoshkaIvf]] + [[Ann.searchStored]]) — the
     * 100 TB closure of the truncation family: the flat r71 root's
     * phase 1 is a full-corpus prefix scan; here the prefix column
     * lives INSIDE the cell layout, so phase 1 reads probed cell
@@ -2940,8 +2947,8 @@ object Retrieval {
       .createTempDirectory("graft_mrl_ivf").toString
     Ann.writeMatryoshkaIvf(e, "vec_id", "embedding", dims = 8, model,
       dir)
-    val df = Ann.matryoshkaTopKIvf(s, dir, "vec_id", qvecSeq(s, d, 5),
-      probes = 3, candidates = 50, k = 10)
+    val df = Ann.searchStored(Ann.cellRoot(s, dir, None), "vec_id",
+        qvecSeq(s, d, 5), 3, 10)
     val phys = df.queryExecution.executedPlan.toString
     assertPartitionPruned(phys, "centroid_id", "matryoshka-IVF phase 2")
     require("""PushedFilters: \[[^\]]*In\(vec_id""".r
@@ -2986,8 +2993,8 @@ object Retrieval {
       s"r91: the drained cell 4 did not merge, got ${merged.keySet}")
     require(!new java.io.File(s"$dir/rows/centroid_id=4").exists(),
       "r91: the dissolved cell's directory survived")
-    Ann.matryoshkaTopKIvf(s, dir, "vec_id", qvecSeq(s, d, 5),
-      probes = lists, candidates = 50, k = 10)
+    Ann.searchStored(Ann.cellRoot(s, dir, None), "vec_id", qvecSeq(s, d, 5),
+        lists, 10)
   }
 
   /** r79: the composed matryoshka-IVF layout under COSINE — r77's
@@ -2995,8 +3002,8 @@ object Retrieval {
     * shape for the metric real truncatable embeddings ship:
     * assignment, probes and the prefix cut all live on the unit
     * sphere (spherical cells, normalized emb_pre), the re-rank is
-    * true cosine on the raw vectors. Wrong-metric reads refuse
-    * (pinned in-query); phase-1 partition + column pruning asserted
+    * true cosine on the raw vectors; the metric comes from the root's
+    * marker. Phase-1 partition + column pruning asserted
     * in-operator; phase-2 cell pruning + In pushdown pinned here.
     * Oracle: the spherical replay (DuckDB normalizes exactly like
     * the r17/r43 spherical oracles) + prefix cut + cosine re-rank. */
@@ -3007,12 +3014,8 @@ object Retrieval {
       .createTempDirectory("graft_mrl_ivf_cos").toString
     Ann.writeMatryoshkaIvf(e, "vec_id", "embedding", dims = 8, model,
       dir, metric = Ann.Cosine)
-    require(scala.util.Try(Ann.matryoshkaTopKIvf(s, dir, "vec_id",
-        qvecSeq(s, d, 7), probes = 3, candidates = 50,
-        k = 10)).isFailure,
-      "r79: querying the cosine composed root as L2 did not refuse")
-    val df = Ann.matryoshkaTopKIvf(s, dir, "vec_id", qvecSeq(s, d, 7),
-      probes = 3, candidates = 50, k = 10, metric = Ann.Cosine)
+    val df = Ann.searchStored(Ann.cellRoot(s, dir, None), "vec_id",
+        qvecSeq(s, d, 7), 3, 10)
     val phys = df.queryExecution.executedPlan.toString
     assertPartitionPruned(phys, "centroid_id",
       "cosine matryoshka-IVF phase 2")
@@ -3039,8 +3042,8 @@ object Retrieval {
     val removed = Ann.deleteStored(s, s"$dir/rows",
       col("vec_id") % 7 === 0)
     require(removed > 0, "r80 is vacuous: the delete removed nothing")
-    Ann.matryoshkaTopKIvf(s, dir, "vec_id", qvecSeq(s, d, 5),
-      probes = 3, candidates = 50, k = 10)
+    Ann.searchStored(Ann.cellRoot(s, dir, None), "vec_id", qvecSeq(s, d, 5),
+        3, 10)
   }
 
   /** r81: batch APPEND into the composed root
@@ -3065,8 +3068,8 @@ object Retrieval {
     val grown = s.read.parquet(s"$dir/rows").count()
     require(grown == e.count(),
       s"r81: grown root holds $grown rows, corpus has ${e.count()}")
-    Ann.matryoshkaTopKIvf(s, dir, "vec_id", qvecSeq(s, d, 5),
-      probes = 3, candidates = 50, k = 10)
+    Ann.searchStored(Ann.cellRoot(s, dir, None), "vec_id", qvecSeq(s, d, 5),
+        3, 10)
   }
 
   /** r82: FILTERED composed search — the matryoshka-IVF layout joins
@@ -3087,9 +3090,8 @@ object Retrieval {
       .createTempDirectory("graft_mrl_ivf_filt").toString
     Ann.writeMatryoshkaIvf(e, "vec_id", "embedding", dims = 8, model,
       dir, keepCols = Seq("label"))
-    val df = Ann.matryoshkaTopKIvf(s, dir, "vec_id", qvecSeq(s, d, 5),
-      probes = 3, candidates = 50, k = 10,
-      pred = col("label").isin(1, 3, 5))
+    val df = Ann.searchStored(Ann.cellRoot(s, dir, None), "vec_id",
+        qvecSeq(s, d, 5), 3, 10, pred = col("label").isin(1, 3, 5))
     val phys = df.queryExecution.executedPlan.toString
     assertPartitionPruned(phys, "centroid_id",
       "filtered matryoshka-IVF phase 2")
@@ -3406,9 +3408,8 @@ object Retrieval {
     val cellsNow = (lists - merged.size).toInt
     // reachability: every surviving row (moved included) surfaces
     // under all-probe — row conservation through the re-encode
-    val all = Ann.searchQuantizedStored(s, dir, "vec_id", "embedding",
-      qvec(s, d, 5), Ann.L2, probes = cellsNow, k = remaining.toInt,
-      refine = 1)
+    val all = Ann.searchStored(Ann.cellRoot(s, dir, Some("embedding")),
+        "vec_id", qvecSeq(s, d, 5), cellsNow, remaining.toInt, refine = 1)
     require(all.count() == remaining,
       "r93: merged root lost or duplicated rows under all-probe")
     require(all.join(cell4.filter(col("vec_id") % 3 === 0),
@@ -3416,9 +3417,8 @@ object Retrieval {
       "r93 vacuous: no moved (cell-4 survivor) row reachable")
     // the oracle cut: all-probe + corpus-covering refine makes the
     // exact re-rank the index-free post-delete top-10
-    Ann.searchQuantizedStored(s, dir, "vec_id", "embedding", qvec(s, d, 5),
-      Ann.L2, probes = cellsNow, k = 10,
-      refine = (remaining / 10 + 1).toInt)
+    Ann.searchStored(Ann.cellRoot(s, dir, Some("embedding")), "vec_id",
+        qvecSeq(s, d, 5), cellsNow, 10, refine = (remaining / 10 + 1).toInt)
   }
 
   /** r95: SPLIT of an overfull cell on a QUANTIZED root
@@ -3462,9 +3462,8 @@ object Retrieval {
       .select(col("centroid_id").cast("long")).distinct().count()
     require(bounded == newIds.size,
       s"r95: $bounded of ${newIds.size} sub-cells carry bounds")
-    Ann.searchQuantizedStored(s, dir, "vec_id", "embedding", qvec(s, d, 7),
-      Ann.L2, probes = cellsNow.toInt, k = 10,
-      refine = (total / 10 + 1).toInt)
+    Ann.searchStored(Ann.cellRoot(s, dir, Some("embedding")), "vec_id",
+        qvecSeq(s, d, 7), cellsNow.toInt, 10, refine = (total / 10 + 1).toInt)
   }
 
   /** r65: the eps-join AT REST — r57's batch shape over a
@@ -3484,14 +3483,15 @@ object Retrieval {
     val root = java.nio.file.Files
       .createTempDirectory("graft_range_join_store").toString
     Ann.writeRangeIndex(assigned, "embedding", model, root)
-    val (loadedModel, radii) = Ann.loadRangeIndex(s, root)
+    val range = Ann.cellRoot(s, root, None)
+      .as[Ann.CellRoot.Range]("rangeJoinStored")
     val stored = s.read.parquet(s"$root/rows")
       .select(col("vec_id").as("d_id"), col("embedding").as("dv"),
         col("centroid_id"))
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
     val df = Ann.rangeJoinIvf(queries, "q_id", "qv", stored, "d_id",
-        "dv", loadedModel, radii, Ann.L2, eps = 1.2)
+        "dv", range.readModel, range.radii, Ann.L2, eps = 1.2)
       .select(col("q_id").as("qid"), col("d_id").as("did"), col("dist"))
     val phys = df.queryExecution.executedPlan.toString
     require(phys.toLowerCase.contains("dynamicpruning"),

@@ -252,7 +252,7 @@ object Stream {
     * code spaces can never mix in one layout. After
     * [[compactStored]](`dir/encoded`, "centroid_id") graduation the
     * root IS a [[graft.ops.Ann.writeQuantized]] layout:
-    * `loadQuantized`/`searchQuantizedStored`/`attachStoredIndex` work
+    * [[graft.ops.Ann.searchStored]] and `attachStoredIndex` work
     * unchanged. `metric` is [[graft.ops.Ann.buildIvfPq]]'s metric
     * argument verbatim (cosine ⇒ spherical: normalization happens
     * inside the transform over the RAW un-normalized `model`, exactly
@@ -292,7 +292,7 @@ object Stream {
     * with retrained bounds or a different model is refused. After
     * [[compactStored]](`dir/quantized`, "centroid_id") graduation the
     * root IS a [[graft.ops.Ann.writeQuantized]] layout:
-    * `loadQuantized`/`searchQuantizedStored` work unchanged. */
+    * [[graft.ops.Ann.searchStored]] works unchanged. */
   def ingestIvfSq(vectors: DataFrame, vecCol: String,
                   index: graft.ops.Ann.IvfSqIndex,
                   metric: graft.ops.Ann.Metric,
@@ -325,7 +325,7 @@ object Stream {
     * ([[graft.ops.Ann.ensureIvfBitqRoot]]); a retrained model is
     * refused. After [[compactStored]](`dir/quantized`, "centroid_id")
     * graduation the root IS a [[graft.ops.Ann.writeQuantized]] layout:
-    * `loadQuantized`/`searchQuantizedStored` work unchanged. */
+    * [[graft.ops.Ann.searchStored]] works unchanged. */
   def ingestIvfBitq(vectors: DataFrame, vecCol: String,
                     model: graft.ops.Ann.IvfModel,
                     metric: graft.ops.Ann.Metric,
@@ -403,7 +403,7 @@ object Stream {
     * mid-stream leaves a readable self-contained geometry; a restart
     * with different dims/metric or a retrained model refuses). After
     * [[compactStored]](`dir/rows`) graduation the root IS a
-    * writeMatryoshkaIvf layout: [[graft.ops.Ann.matryoshkaTopKIvf]],
+    * writeMatryoshkaIvf layout: [[graft.ops.Ann.searchStored]],
     * [[graft.ops.Ann.appendIdempotent]] and the cell-confined delete
     * all work unchanged. */
   def ingestMatryoshkaIvf(vectors: DataFrame, idCol: String,
@@ -758,8 +758,7 @@ object Stream {
         // forever without fresh/ growing unboundedly
         compactRatio.foreach { r =>
           val compacted = graft.ops.Ann
-            .compactQuantizedFreshIfNeeded(vectors.sparkSession, root,
-              idCol, vecCol, r)
+            .compactQuantizedFreshIfNeeded(cells, idCol, r)
           // the SPLIT half of the lifecycle (round 16): compaction is
           // exactly what grows hot cells, so the overfull policy runs
           // right after a fold emptied fresh/ — the only moment the

@@ -465,7 +465,8 @@ class AnnRangeSpec extends SparkSpecBase {
       minRows = 5)
     assert(merged.keySet === Set(2L) && merged(2L) === 2L,
       s"expected cell 2 (2 rows) to dissolve, got $merged")
-    val (m2, radii2) = Ann.loadRangeIndex(sp, dir)
+    val m2 = Ann.cellRoot(sp, dir, None).readModel
+    val radii2 = sp.read.parquet(s"$dir/radii")
     assert(m2.centroids.count() === 2L)
     assert(radii2.count() === 2L, "doomed radii row survived")
     assert(!new java.io.File(s"$dir/rows/centroid_id=2").exists())
@@ -517,7 +518,7 @@ class AnnRangeSpec extends SparkSpecBase {
       .parquet(s"$dir2/rows_merge")
     graft.io.Markers.write(sp, dir2, "_graft_merge_pending", "2")
     intercept[IllegalStateException] {
-      Ann.loadRangeIndex(sp, dir2)
+      Ann.cellRoot(sp, dir2, None).readModel
     }
     intercept[IllegalStateException] {
       Ann.rangeSearchStoredSelf(sp, dir2, "vec_id", "embedding",
@@ -534,7 +535,8 @@ class AnnRangeSpec extends SparkSpecBase {
     // (eps 99 admits every cell, so the sim's un-grown radii — the
     // real op grows them pre-marker — don't mask the row moves)
     Ann.mergeUnderfull(Ann.cellRoot(sp, dir2, Some("embedding")), 5)
-    val (m3, radii3) = Ann.loadRangeIndex(sp, dir2)
+    val m3 = Ann.cellRoot(sp, dir2, None).readModel
+    val radii3 = sp.read.parquet(s"$dir2/radii")
     assert(m3.centroids.count() === 2L && radii3.count() === 2L)
     assert(!new java.io.File(s"$dir2/rows/centroid_id=2").exists())
     assert(!new java.io.File(s"$dir2/rows_merge").exists())
@@ -677,7 +679,8 @@ class AnnRangeSpec extends SparkSpecBase {
     // the grown radius admits the cell: BOTH outliers are now visible
     assert(seen.contains(101L) && seen.contains(100L))
     // stored radii actually grew and still cover every row
-    val (m2, radii2) = Ann.loadRangeIndex(sp, dir)
+    val m2 = Ann.cellRoot(sp, dir, None).readModel
+    val radii2 = sp.read.parquet(s"$dir/radii")
     val rows2 = sp.read.parquet(s"$dir/rows")
     val recomputed = Ann.cellRadii(rows2, "embedding", m2, Ann.L2)
       .collect().map(r => r.getAs[Long]("centroid_id") ->

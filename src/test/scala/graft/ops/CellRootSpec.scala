@@ -153,7 +153,7 @@ class CellRootSpec extends SparkSpecBase {
     graft.io.Markers.write(spark, dir, "_graft_merge_pending", "2")
     val root = Ann.cellRoot(spark, dir, Some("embedding"))
     assert(root.isInstanceOf[Range])
-    val e = intercept[IllegalStateException](Ann.loadRangeIndex(spark, dir))
+    val e = intercept[IllegalStateException](root.readModel)
     assert(e.getMessage.contains("Ann.mergeUnderfull"))
     intercept[IllegalStateException](Ann.indexHealth(root))
     assert(Ann.mergeUnderfull(root, minRows = 1L).isEmpty)

@@ -51,12 +51,15 @@ class DenseRootSpec extends SparkSpecBase {
     Ann.writeDenseRoot(Ann.assign(docs, "embedding", model, Ann.L2),
       "embedding", model, Ann.L2, dir)
     assert(isDenseRoot(sp, dir))
-    val (m, metric, vecCol) = Ann.loadDenseRoot(sp, dir)
+    val root = Ann.cellRoot(sp, dir, None)
+      .as[Ann.CellRoot.Dense]("DenseRootSpec")
+    val (m, metric, vecCol) = (root.readModel, root.metric, root.vecCol)
     assert(metric === Ann.L2 && vecCol === "embedding")
     assert(m.centroids.count() === model.centroids.count())
-    val q = typedlit(Seq(1.0, 0.0))
-    val got = Ann.searchDenseStoredSelf(sp, dir, "vec_id", q,
-        probes = 3, k = 10)
+    val qs = Seq(1.0, 0.0)
+    val q = typedlit(qs)
+    val got = Ann.searchStored(Ann.cellRoot(sp, dir, None), "vec_id",
+        qs, 3, 10)
       .select("vec_id", "dist").as[(Long, Double)].collect().toSeq
     val want = Ann.topK(docs, "vec_id", "embedding", q, Ann.L2, 10)
       .select("vec_id", "dist").as[(Long, Double)].collect().toSeq
@@ -68,7 +71,7 @@ class DenseRootSpec extends SparkSpecBase {
     }
     // a non-root refuses by family name
     val e = intercept[IllegalStateException] {
-      Ann.loadDenseRoot(sp, tmp("empty"))
+      Ann.cellRoot(sp, tmp("empty"), None)
     }
     assert(e.getMessage.contains("dense cell-root marker"))
   }
@@ -119,7 +122,7 @@ class DenseRootSpec extends SparkSpecBase {
       "embedding", model, Ann.L2, dir)
     // strand a copy: a row whose stored cell is NOT its argmin under
     // the current model (hand-moved, the worst case a split can make)
-    val (m, _, _) = Ann.loadDenseRoot(sp, dir)
+    val m = Ann.cellRoot(sp, dir, None).readModel
     val cells = m.centroids.select(col("centroid_id").cast("long"))
       .collect().map(_.getLong(0)).sorted
     val strandedCell = cells.last
@@ -150,11 +153,11 @@ class DenseRootSpec extends SparkSpecBase {
     val dir = tmp("split")
     Ann.writeDenseRoot(Ann.assign(docs, "embedding", model, Ann.L2),
       "embedding", model, Ann.L2, dir)
-    val q = typedlit(Seq(1.0, 0.0))
+    val q = Seq(1.0, 0.0)
     def searchAll() = {
       val cells = sp.read.parquet(s"$dir/centroids").count().toInt
-      Ann.searchDenseStoredSelf(sp, dir, "vec_id", q, probes = cells,
-        k = 10).select("vec_id", "dist")
+      Ann.searchStored(Ann.cellRoot(sp, dir, None), "vec_id", q,
+          cells, 10).select("vec_id", "dist")
         .as[(Long, Double)].collect().toSeq
     }
     val before = searchAll()
@@ -168,7 +171,7 @@ class DenseRootSpec extends SparkSpecBase {
       .agg(max("count")).head().getLong(0)
     assert(occ <= 50L)
     // every row sits at its TRUE argmin (the dissolve's invariant)
-    val (m2, _, _) = Ann.loadDenseRoot(sp, dir)
+    val m2 = Ann.cellRoot(sp, dir, None).readModel
     val offArgmin = Ann.assign(
         sp.read.parquet(s"$dir/rows")
           .withColumnRenamed("centroid_id", "__stored"),
@@ -203,11 +206,12 @@ class DenseRootSpec extends SparkSpecBase {
     Ann.writeDenseRoot(
       Ann.assign(docs, "embedding", model, Ann.Cosine),
       "embedding", model, Ann.Cosine, dir)
-    val q = typedlit(Seq(0.8, 0.6))
+    val qs = Seq(0.8, 0.6)
+    val q = typedlit(qs)
     def searchAll() = {
       val cells = sp.read.parquet(s"$dir/centroids").count().toInt
-      Ann.searchDenseStoredSelf(sp, dir, "vec_id", q, probes = cells,
-        k = 10).select("vec_id", "dist")
+      Ann.searchStored(Ann.cellRoot(sp, dir, None), "vec_id", qs,
+          cells, 10).select("vec_id", "dist")
         .as[(Long, Double)].collect().toSeq
     }
     val before = searchAll()
@@ -218,7 +222,7 @@ class DenseRootSpec extends SparkSpecBase {
     assert(splits.nonEmpty)
     assert(searchAll() === before)
     // rows at their true COSINE argmin; sub-centroids unit-norm
-    val (m2, _, _) = Ann.loadDenseRoot(sp, dir)
+    val m2 = Ann.cellRoot(sp, dir, None).readModel
     val offArgmin = Ann.assign(
         sp.read.parquet(s"$dir/rows")
           .withColumnRenamed("centroid_id", "__stored"),
@@ -246,18 +250,18 @@ class DenseRootSpec extends SparkSpecBase {
     // drain cell 2 (the -10,10 cluster) below the threshold
     Ann.deleteStoredIds(sp, s"$dir/rows", "vec_id",
       docs.filter(col("vec_id") >= 92).select("vec_id"))
-    val q = typedlit(Seq(1.0, 0.0))
+    val q = Seq(1.0, 0.0)
     def searchAll() = {
       val cells = sp.read.parquet(s"$dir/centroids").count().toInt
-      Ann.searchDenseStoredSelf(sp, dir, "vec_id", q, probes = cells,
-        k = 10).select("vec_id", "dist")
+      Ann.searchStored(Ann.cellRoot(sp, dir, None), "vec_id", q,
+          cells, 10).select("vec_id", "dist")
         .as[(Long, Double)].collect().toSeq
     }
     val before = searchAll()
     val merged = Ann.mergeUnderfull(Ann.cellRoot(sp, dir, None), minRows = 5L)
     assert(merged.keySet.nonEmpty)
     assert(searchAll() === before)
-    val (m2, _, _) = Ann.loadDenseRoot(sp, dir)
+    val m2 = Ann.cellRoot(sp, dir, None).readModel
     assert(m2.centroids.count() ===
       model.centroids.count() - merged.keySet.size)
     val offArgmin = Ann.assign(
@@ -279,14 +283,15 @@ class DenseRootSpec extends SparkSpecBase {
     Ann.writePartitioned(Ann.assign(docs, "embedding", model, Ann.L2),
       flat)
     Ann.ensureIvfModelMarker(sp, flat, model)
-    val q = typedlit(Seq(1.0, 0.0))
+    val qs = Seq(1.0, 0.0)
+    val q = typedlit(qs)
     val before = Ann.searchIvfStored(sp, flat, "vec_id", "embedding",
         model, q, Ann.L2, probes = 3, k = 10)
       .select("vec_id", "dist").as[(Long, Double)].collect().toSeq
     Ann.graduateDenseRoot(sp, flat, model, Ann.L2, "embedding")
     assert(isDenseRoot(sp, flat))
-    val after = Ann.searchDenseStoredSelf(sp, flat, "vec_id", q,
-        probes = 3, k = 10)
+    val after = Ann.searchStored(Ann.cellRoot(sp, flat, None), "vec_id",
+        qs, 3, 10)
       .select("vec_id", "dist").as[(Long, Double)].collect().toSeq
     assert(after === before)
     // idempotent re-run; a mismatched pin refuses
@@ -329,9 +334,10 @@ class DenseRootSpec extends SparkSpecBase {
     Ann.graduateDenseRoot(sp, flat, model, Ann.L2, "embedding")
     assert(isDenseRoot(sp, flat))
     assert(sp.read.parquet(s"$flat/rows").count() === 100L)
-    val q = typedlit(Seq(1.0, 0.0))
-    val got = Ann.searchDenseStoredSelf(sp, flat, "vec_id", q,
-        probes = 3, k = 10)
+    val qs = Seq(1.0, 0.0)
+    val q = typedlit(qs)
+    val got = Ann.searchStored(Ann.cellRoot(sp, flat, None), "vec_id",
+        qs, 3, 10)
       .select("vec_id", "dist").as[(Long, Double)].collect().toSeq
     val want = Ann.topK(docs, "vec_id", "embedding", q, Ann.L2, 10)
       .select("vec_id", "dist").as[(Long, Double)].collect().toSeq

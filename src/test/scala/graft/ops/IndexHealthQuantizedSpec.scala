@@ -168,16 +168,16 @@ class IndexHealthQuantizedSpec extends SparkSpecBase {
   test("registerRangeRoot refuses non-range dirs with a typed message") {
     val sp = spark
     val bogus = tmp("graft_rr_bogus")
-    val err = intercept[IllegalArgumentException] {
+    val err = intercept[IllegalStateException] {
       graft.plans.AnnIndex.register(graft.plans.Binding.rangeRoot(sp, bogus,
         "embedding"))
     }
-    assert(err.getMessage.contains("no radii side table"))
-    val err2 = intercept[IllegalArgumentException] {
+    assert(err.getMessage.contains("no range radii table"))
+    val err2 = intercept[IllegalStateException] {
       graft.plans.AnnIndex.register(graft.plans.Binding.rangeRootDistributed(sp,
         bogus, "embedding"))
     }
-    assert(err2.getMessage.contains("no radii side table"))
+    assert(err2.getMessage.contains("no range radii table"))
   }
 
   test("registerQuantizedRoot dispatches PQ and 1-bit by marker and " +
@@ -205,8 +205,8 @@ class IndexHealthQuantizedSpec extends SparkSpecBase {
         .limit(5).select("vec_id", "dist")
       assert(decl.queryExecution.optimizedPlan.toString
         .contains("LeftSemi"), "PQ root rewrite did not engage")
-      val want = Ann.searchQuantizedStored(sp, pqDir, "vec_id", "embedding",
-        typedlit(q), Ann.L2, probes = 2, k = 5, refine = 5).collect().toSeq
+      val want = Ann.searchStored(Ann.cellRoot(sp, pqDir, Some("embedding")),
+          "vec_id", q, 2, 5, refine = 5).collect().toSeq
       assert(decl.collect().toSeq == want)
     } finally graft.plans.AnnIndex.unregister("embedding")
 
@@ -224,8 +224,8 @@ class IndexHealthQuantizedSpec extends SparkSpecBase {
         .limit(5).select("vec_id", "dist")
       assert(decl.queryExecution.optimizedPlan.toString
         .contains("LeftSemi"), "1-bit root rewrite did not engage")
-      val want = Ann.searchQuantizedStored(sp, bqDir, "vec_id",
-        "embedding", typedlit(q), Ann.L2, probes = 2, k = 5)
+      val want = Ann.searchStored(Ann.cellRoot(sp, bqDir, Some("embedding")),
+          "vec_id", q, 2, 5)
         .collect().toSeq
       assert(decl.collect().toSeq == want)
     } finally graft.plans.AnnIndex.unregister("embedding")

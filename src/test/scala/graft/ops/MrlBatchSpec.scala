@@ -50,13 +50,13 @@ class MrlBatchSpec extends SparkSpecBase {
         metric = metric)
       val got = groupByQ(
         Ann.matryoshkaTopKIvfBatch(spark, dir, "id", queriesDf,
-            "q_id", "qv", probes = 2, candidates = 12, k = 5,
+            "q_id", "qv", probes = 2, candidates = 10, k = 5,
             metric = metric)
           .collect().map(r => (r.getLong(0), r.getLong(1),
             r.getDouble(2), r.getDouble(3))))
       qSeqs.foreach { case (qid, qv) =>
-        val want = Ann.matryoshkaTopKIvf(spark, dir, "id", qv,
-            probes = 2, candidates = 12, k = 5, metric = metric)
+        val want = Ann.searchStored(Ann.cellRoot(spark, dir, None), "id", qv,
+            2, 5, refine = 2)
           .collect()
           .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
           .sortBy(x => (x._3, x._1)).toSeq
@@ -66,7 +66,7 @@ class MrlBatchSpec extends SparkSpecBase {
       val wrong = if (metric == Ann.L2) Ann.Cosine else Ann.L2
       intercept[IllegalArgumentException] {
         Ann.matryoshkaTopKIvfBatch(spark, dir, "id", queriesDf,
-          "q_id", "qv", probes = 2, candidates = 12, k = 5,
+          "q_id", "qv", probes = 2, candidates = 10, k = 5,
           metric = wrong)
       }
     }
@@ -82,15 +82,15 @@ class MrlBatchSpec extends SparkSpecBase {
     val pred = col("label").isin(1, 2)
     val got = groupByQ(
       Ann.matryoshkaTopKIvfBatch(spark, dir, "id", queriesDf,
-          "q_id", "qv", probes = 2, candidates = 12, k = 5,
+          "q_id", "qv", probes = 2, candidates = 10, k = 5,
           pred = pred)
         .collect().map(r => (r.getLong(0), r.getLong(1),
           r.getDouble(2), r.getDouble(3))))
     val allowed = d.filter(pred).select("id").collect()
       .map(_.getLong(0)).toSet
     qSeqs.foreach { case (qid, qv) =>
-      val want = Ann.matryoshkaTopKIvf(spark, dir, "id", qv,
-          probes = 2, candidates = 12, k = 5, pred = pred)
+      val want = Ann.searchStored(Ann.cellRoot(spark, dir, None), "id", qv, 2,
+          5, refine = 2, pred = pred)
         .collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
         .sortBy(x => (x._3, x._1)).toSeq

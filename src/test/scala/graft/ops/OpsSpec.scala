@@ -724,8 +724,8 @@ class OpsSpec extends SparkSpecBase {
       "and stored search prunes cell directories") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val model = Ann.buildIvf(e, "label", "embedding")
-    val q = org.apache.spark.sql.functions.typedlit(
-      (0 until 64).map(i => 0.01 * i))
+    val qs = (0 until 64).map(i => 0.01 * i)
+    val q = org.apache.spark.sql.functions.typedlit(qs)
     // SQ layout
     val sq = Ann.buildIvfSq(e, "embedding", model, Ann.L2)
     val sqDir = java.nio.file.Files
@@ -733,8 +733,8 @@ class OpsSpec extends SparkSpecBase {
     Ann.writeQuantized(sq, sqDir)
     val sqMem = Ann.searchQuantized(sq, "vec_id", "embedding", q, Ann.L2,
       probes = 3, k = 5).collect().map(_.toSeq).toSeq
-    val sqStoredDf = Ann.searchQuantizedStored(spark, sqDir, "vec_id",
-      "embedding", q, Ann.L2, probes = 3, k = 5)
+    val sqStoredDf = Ann.searchStored(
+      Ann.cellRoot(spark, sqDir, Some("embedding")), "vec_id", qs, 3, 5)
     assert(sqStoredDf.collect().map(_.toSeq).toSeq === sqMem)
     // probes reach the scan as PartitionFilters (directory pruning)
     assert(sqStoredDf.queryExecution.executedPlan.toString
@@ -746,8 +746,8 @@ class OpsSpec extends SparkSpecBase {
     Ann.writeQuantized(bitq, bDir)
     val bMem = Ann.searchQuantized(bitq, "vec_id", "embedding", q, Ann.L2,
       probes = 3, k = 5).collect().map(_.toSeq).toSeq
-    val bStoredDf = Ann.searchQuantizedStored(spark, bDir, "vec_id",
-      "embedding", q, Ann.L2, probes = 3, k = 5)
+    val bStoredDf = Ann.searchStored(
+      Ann.cellRoot(spark, bDir, Some("embedding")), "vec_id", qs, 3, 5)
     assert(bStoredDf.collect().map(_.toSeq).toSeq === bMem)
     assert(bStoredDf.queryExecution.executedPlan.toString
       .contains("PartitionFilters: [centroid_id"))
@@ -1752,23 +1752,25 @@ class OpsSpec extends SparkSpecBase {
     graft.ops.Ann.writeMatryoshkaIvf(vecs, "vec_id", "embedding", 3,
       model, dir)
     // probing EVERY cell = no pruning = the flat layout's answer
-    val all = graft.ops.Ann.matryoshkaTopKIvf(sp, dir, "vec_id", q,
-        probes = 4, candidates = 12, k = 5)
+    val all = graft.ops.Ann.searchStored(
+        graft.ops.Ann.cellRoot(sp, dir, None), "vec_id", q, 4, 5,
+        refine = 2)
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
     val flatDir = java.nio.file.Files
       .createTempDirectory("graft_mrl_flat_spec").toString
     graft.ops.Ann.writeMatryoshka(vecs, "vec_id", "embedding", 3,
       flatDir)
     val flat = graft.ops.Ann.matryoshkaTopKStored(sp, flatDir,
-        "vec_id", q, candidates = 12, k = 5)
+        "vec_id", q, candidates = 10, k = 5)
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
     assert(all.toSeq === flat.toSeq)
     // fewer probes: every returned id must live in a probed cell
     val probed = graft.ops.Ann.probeCells(model,
         org.apache.spark.sql.functions.typedlit(q), graft.ops.Ann.L2, 2)
       .collect().map(_.getLong(0)).toSet
-    val cut = graft.ops.Ann.matryoshkaTopKIvf(sp, dir, "vec_id", q,
-        probes = 2, candidates = 12, k = 5)
+    val cut = graft.ops.Ann.searchStored(
+        graft.ops.Ann.cellRoot(sp, dir, None), "vec_id", q, 2, 5,
+        refine = 2)
       .collect().map(_.getLong(0))
     val cellOf = graft.ops.Ann.assign(vecs, "embedding", model,
         graft.ops.Ann.L2)
@@ -1789,18 +1791,22 @@ class OpsSpec extends SparkSpecBase {
       .createTempDirectory("graft_mrl_ivf_cos_spec").toString
     graft.ops.Ann.writeMatryoshkaIvf(cvecs, "vec_id", "embedding", 2,
       cmodel, cdir, metric = Ann.Cosine)
-    val chead = graft.ops.Ann.matryoshkaTopKIvf(sp, cdir, "vec_id",
-        cq, probes = 2, candidates = 5, k = 3, metric = Ann.Cosine)
+    val chead = graft.ops.Ann.searchStored(
+        graft.ops.Ann.cellRoot(sp, cdir, None), "vec_id", cq, 2, 3,
+        refine = 2)
       .collect().head
     assert(chead.getLong(0) === 1L && chead.getDouble(2) < 0.01)
-    // metric mismatch refuses (wrong reduction space)
+    // the single-query search takes its metric from the root; a batch
+    // join naming the other metric refuses (wrong reduction space)
+    val batchQ = Seq((0L, cq)).toDF("q_id", "qv")
     intercept[IllegalArgumentException] {
-      graft.ops.Ann.matryoshkaTopKIvf(sp, cdir, "vec_id", cq,
-        probes = 2, candidates = 5, k = 3)
+      graft.ops.Ann.matryoshkaTopKIvfBatch(sp, cdir, "vec_id", batchQ,
+        "q_id", "qv", probes = 2, candidates = 6, k = 3)
     }
     intercept[IllegalArgumentException] {
-      graft.ops.Ann.matryoshkaTopKIvf(sp, dir, "vec_id", q,
-        probes = 2, candidates = 12, k = 5, metric = Ann.Cosine)
+      graft.ops.Ann.matryoshkaTopKIvfBatch(sp, dir, "vec_id", batchQ,
+        "q_id", "qv", probes = 2, candidates = 10, k = 5,
+        metric = Ann.Cosine)
     }
   }
 
@@ -1828,8 +1834,8 @@ class OpsSpec extends SparkSpecBase {
       graft.ops.Ann.cellRoot(sp, twoDir, Some("embedding")),
       all.filter(col("vec_id") % 2 === 1), "vec_id")
     def search(dir: String) =
-      graft.ops.Ann.matryoshkaTopKIvf(sp, dir, "vec_id", q,
-          probes = 4, candidates = 12, k = 5)
+      graft.ops.Ann.searchStored(graft.ops.Ann.cellRoot(sp, dir, None),
+          "vec_id", q, 4, 5, refine = 2)
         .collect().map(r => (r.getLong(0), r.getDouble(1),
           r.getDouble(2))).toSeq
     assert(search(twoDir) === search(oneDir))

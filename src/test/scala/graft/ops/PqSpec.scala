@@ -147,7 +147,9 @@ class PqSpec extends SparkSpecBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_pq_rt").toString
     Ann.writeQuantized(idx, dir)
-    val loaded = Ann.loadQuantized(spark, dir).asInstanceOf[Ann.IvfPqIndex]
+    val root = Ann.cellRoot(spark, dir, Some("embedding"))
+      .as[Ann.CellRoot.Quantized]("PqSpec")
+    val loaded = root.readIndex.asInstanceOf[Ann.IvfPqIndex]
     assert(loaded.pq.m == idx.pq.m &&
       loaded.pq.subDim == idx.pq.subDim &&
       loaded.spherical == idx.spherical)
@@ -161,13 +163,13 @@ class PqSpec extends SparkSpecBase {
     val mem = Ann.searchQuantized(idx, "vec_id", "embedding", typedlit(q),
       Ann.Cosine, probes = 2, k = 5, refine = 4).collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
-    val stored = Ann.searchQuantizedStored(spark, dir, "vec_id", "embedding",
-      typedlit(q), Ann.Cosine, probes = 2, k = 5, refine = 4).collect()
+    val stored = Ann.searchStored(root, "vec_id", q, 2, 5, refine = 4)
+      .collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
     assert(stored.sameElements(mem))
     val bare = java.nio.file.Files
       .createTempDirectory("graft_pq_bare").toString
-    val e = intercept[IllegalStateException](Ann.loadQuantized(spark, bare))
+    val e = intercept[IllegalStateException](Ann.cellRoot(spark, bare, None))
     assert(e.getMessage.contains("marker"))
   }
 

@@ -49,11 +49,25 @@ class QuantFamilySpec extends SparkSpecBase {
         typedlit(corpus(qid.toInt)._2), metric, probes, k)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
-  private def stored(dir: String, metric: Ann.Metric,
-                     qid: Long): Seq[(Long, Double)] =
-    Ann.searchQuantizedStored(spark, dir, "vec_id", "embedding",
-        typedlit(corpus(qid.toInt)._2), metric, probes, k)
+  private def root(dir: String): Ann.CellRoot.Quantized =
+    Ann.cellRoot(spark, dir, Some("embedding"))
+      .as[Ann.CellRoot.Quantized]("QuantFamilySpec")
+
+  /** The stored search; its metric comes from the root. */
+  private def stored(dir: String, qid: Long): Seq[(Long, Double)] =
+    Ann.searchStored(root(dir), "vec_id", corpus(qid.toInt)._2, probes, k)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+
+  /** Pin a written root's spherical flag (PQ's write pins it already). */
+  private def pin(index: Ann.QuantIndex, metric: Ann.Metric,
+                  dir: String): Unit = index match {
+    case sq: Ann.IvfSqIndex =>
+      Ann.ensureIvfSqRoot(spark, dir, sq, metric == Ann.Cosine)
+    case _: Ann.IvfBitIndex =>
+      Ann.ensureIvfBitqRoot(spark, dir,
+        Ann.buildIvf(df, "label", "embedding"), metric == Ann.Cosine)
+    case _: Ann.IvfPqIndex => ()
+  }
 
   private def tmp(p: String) =
     java.nio.file.Files.createTempDirectory(p).toString
@@ -84,12 +98,13 @@ class QuantFamilySpec extends SparkSpecBase {
       val index = build(fam, metric)
       val dir = tmp(s"graft_qf_$fam")
       Ann.writeQuantized(index, dir)
-      val loaded = Ann.loadQuantized(spark, dir)
+      pin(index, metric, dir)
+      val loaded = root(dir).readIndex
       assert(loaded.family == fam)
       qids.foreach { qid =>
         val want = single(index, metric, qid)
         assert(single(loaded, metric, qid) === want, s"loaded, query $qid")
-        assert(stored(dir, metric, qid) === want, s"stored, query $qid")
+        assert(stored(dir, qid) === want, s"stored, query $qid")
       }
     }
 
@@ -101,20 +116,12 @@ class QuantFamilySpec extends SparkSpecBase {
       Ann.writeQuantized(index, dir)
       assert(Ann.detectCellRoot(spark, dir, None).collect {
         case q: Ann.CellRoot.Quantized => q.family } === Some(fam))
-      assert(stored(dir, metric, qids.head) ===
-        single(index, metric, qids.head))
       // only a marker pins the spherical flag: PQ's write carries one,
-      // so the other metric refuses; an unmarked SQ / 1-bit root cannot
-      // tell, and serves it
-      val other = if (metric == Ann.Cosine) Ann.L2 else Ann.Cosine
-      fam match {
-        case Ann.Pq =>
-          val e = intercept[IllegalArgumentException](
-            stored(dir, other, qids.head))
-          assert(e.getMessage.contains("pins spherical"))
-        case Ann.Sq | Ann.Bitq =>
-          assert(stored(dir, other, qids.head).length === k)
-      }
+      // so the root serves its build metric; an unmarked SQ / 1-bit
+      // root cannot tell, and serves L2
+      val served = if (fam == Ann.Pq) metric else Ann.L2
+      assert(root(dir).metric === served)
+      assert(stored(dir, qids.head) === single(index, served, qids.head))
     }
   }
 }

@@ -34,6 +34,10 @@ class QuantizedFreshSpec extends SparkSpecBase {
   private def odd = df.filter(col("vec_id") % 2 === 1)
   private def q: Seq[Double] = corpus(7)._2
 
+  private def root(dir: String): Ann.CellRoot.Quantized =
+    Ann.cellRoot(spark, dir, Some("embedding"))
+      .as[Ann.CellRoot.Quantized]("QuantizedFreshSpec")
+
   private def ids(r: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
     r.collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq
 
@@ -63,23 +67,20 @@ class QuantizedFreshSpec extends SparkSpecBase {
     assert(Ann.appendIdempotent(
       Ann.cellRoot(sp, dir, Some("embedding")),
       odd.filter(col("vec_id") < 30), "vec_id") == 0L)
-    val before = ids(Ann.searchQuantizedStored(sp, dir, "vec_id",
-      "embedding", typedlit(q), Ann.L2, probes = 2, k = 8, refine = 5))
+    val before = ids(Ann.searchStored(root(dir), "vec_id", q, 2, 8, refine = 5))
     assert(before == want,
       s"fresh-aware search diverged from the one-shot build:\n" +
         s"got  $before\nwant $want")
     // compaction folds, deletes fresh/, and changes NOTHING observable
-    val folded = Ann.compactQuantizedFresh(sp, dir, "vec_id", "embedding")
+    val folded = Ann.compactQuantizedFresh(root(dir), "vec_id")
     assert(folded == 30L, s"compaction folded $folded, wanted 30")
     assert(!new java.io.File(dir, "fresh").exists(),
       "fresh/ must be gone after compaction")
-    val after = ids(Ann.searchQuantizedStored(sp, dir, "vec_id",
-      "embedding", typedlit(q), Ann.L2, probes = 2, k = 8, refine = 5))
+    val after = ids(Ann.searchStored(root(dir), "vec_id", q, 2, 8, refine = 5))
     assert(after == want, "post-compaction search diverged")
     // the plain stored search agrees too: the folded layout IS a
     // one-shot writeQuantized layout
-    val plain = ids(Ann.searchQuantizedStored(sp, dir, "vec_id",
-      "embedding", typedlit(q), Ann.L2, probes = 2, k = 8, refine = 5))
+    val plain = ids(Ann.searchStored(root(dir), "vec_id", q, 2, 8, refine = 5))
     assert(plain == want, "folded layout diverged under the plain search")
     // redelivery AFTER compaction still appends zero (the main-layout
     // existence probe)
@@ -87,7 +88,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
       Ann.cellRoot(sp, dir, Some("embedding")),
       odd.filter(col("vec_id") < 30), "vec_id") == 0L)
     // idempotent compaction: nothing left to fold
-    assert(Ann.compactQuantizedFresh(sp, dir, "vec_id", "embedding") == 0L)
+    assert(Ann.compactQuantizedFresh(root(dir), "vec_id") == 0L)
   }
 
   test("PQ root (spherical): fresh appends under the cosine geometry " +
@@ -95,9 +96,8 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val sp = spark
     val model = Ann.buildIvf(df, "label", "embedding")
     val full = Ann.buildIvfPq(df, "embedding", model, m = 4, Ann.Cosine)
-    def search(d: String) = ids(Ann.searchQuantizedStored(sp, d,
-      "vec_id", "embedding", typedlit(q), Ann.Cosine, probes = 2, k = 8,
-      refine = 5))
+    def search(d: String) = ids(Ann.searchStored(root(d), "vec_id", q, 2, 8,
+        refine = 5))
     val want = ids(Ann.searchQuantized(full, "vec_id", "embedding",
       typedlit(q), Ann.Cosine, probes = 2, k = 8, refine = 5))
     val idx = full.copy(encoded =
@@ -117,8 +117,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
       odd, "vec_id") == 0L, "redelivered batch must append zero")
     assert(search(dir) == want,
       "spherical fresh-aware PQ search diverged from the one-shot build")
-    assert(Ann.compactQuantizedFresh(sp, dir, "vec_id",
-      "embedding") == 30L)
+    assert(Ann.compactQuantizedFresh(root(dir), "vec_id") == 30L)
     assert(search(dir) == want, "post-compaction PQ search diverged")
   }
 
@@ -137,21 +136,17 @@ class QuantizedFreshSpec extends SparkSpecBase {
     assert(Ann.appendIdempotent(
       Ann.cellRoot(sp, dir, Some("embedding")),
       odd, "vec_id") == 30L)
-    val got = ids(Ann.searchQuantizedStored(sp, dir, "vec_id",
-      "embedding", typedlit(q), Ann.L2, probes = 2, k = 8, refine = 8))
+    val got = ids(Ann.searchStored(root(dir), "vec_id", q, 2, 8, refine = 8))
     assert(got == want,
       s"1-bit fresh-aware search diverged:\ngot  $got\nwant $want")
     // compaction folds the 1-bit family too (assignQuantizeBitq packs
     // internally — a double-pack here once crashed this path) and the
     // folded layout answers identically under BOTH searches
-    assert(Ann.compactQuantizedFresh(sp, dir, "vec_id",
-      "embedding") == 30L)
+    assert(Ann.compactQuantizedFresh(root(dir), "vec_id") == 30L)
     assert(!new java.io.File(dir, "fresh").exists())
-    val after = ids(Ann.searchQuantizedStored(sp, dir, "vec_id",
-      "embedding", typedlit(q), Ann.L2, probes = 2, k = 8, refine = 8))
+    val after = ids(Ann.searchStored(root(dir), "vec_id", q, 2, 8, refine = 8))
     assert(after == want, "post-compaction 1-bit search diverged")
-    val plain = ids(Ann.searchQuantizedStored(sp, dir, "vec_id",
-      "embedding", typedlit(q), Ann.L2, probes = 2, k = 8, refine = 8))
+    val plain = ids(Ann.searchStored(root(dir), "vec_id", q, 2, 8, refine = 8))
     assert(plain == want, "folded 1-bit layout diverged (plain search)")
   }
 
@@ -178,9 +173,8 @@ class QuantizedFreshSpec extends SparkSpecBase {
     assert(Ann.appendIdempotent(
       Ann.cellRoot(sp, dir, Some("embedding")),
       odd, "vec_id") == 30L)
-    def sqFresh() = ids(Ann.searchQuantizedStored(sp, dir, "vec_id",
-      "embedding", typedlit(q), Ann.L2, probes = 2, k = 8, refine = 5,
-      pred = pred))
+    def sqFresh() = ids(Ann.searchStored(root(dir), "vec_id", q, 2, 8,
+        refine = 5, pred = pred))
     val before = sqFresh()
     assert(before == wantSq,
       s"filtered fresh SQ diverged:\ngot  $before\nwant $wantSq")
@@ -205,8 +199,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     assert(gotBatch.forall(r => !disallowed(r._2)))
     // after compaction the SAME call answers identically (the
     // filtered non-fresh parity: fresh/ is gone, pred thins main)
-    assert(Ann.compactQuantizedFresh(sp, dir, "vec_id",
-      "embedding") == 30L)
+    assert(Ann.compactQuantizedFresh(root(dir), "vec_id") == 30L)
     assert(sqFresh() == wantSq, "post-compaction filtered SQ diverged")
     // --- PQ (spherical) + 1-bit: before-compaction parity ---
     val fullPq = Ann.buildIvfPq(df, "embedding", model, m = 4,
@@ -223,9 +216,8 @@ class QuantizedFreshSpec extends SparkSpecBase {
     assert(Ann.appendIdempotent(
       Ann.cellRoot(sp, dirPq, Some("embedding")),
       odd, "vec_id") == 30L)
-    val gotPq = ids(Ann.searchQuantizedStored(sp, dirPq, "vec_id",
-      "embedding", typedlit(q), Ann.Cosine, probes = 2, k = 8, refine = 5,
-      pred = pred))
+    val gotPq = ids(Ann.searchStored(root(dirPq), "vec_id", q, 2, 8,
+        refine = 5, pred = pred))
     assert(gotPq == wantPq,
       s"filtered fresh PQ diverged:\ngot  $gotPq\nwant $wantPq")
     assert(gotPq.forall(r => !disallowed(r._1)))
@@ -242,9 +234,8 @@ class QuantizedFreshSpec extends SparkSpecBase {
     assert(Ann.appendIdempotent(
       Ann.cellRoot(sp, dirBq, Some("embedding")),
       odd, "vec_id") == 30L)
-    val gotBq = ids(Ann.searchQuantizedStored(sp, dirBq, "vec_id",
-      "embedding", typedlit(q), Ann.L2, probes = 2, k = 8, refine = 8,
-      pred = pred))
+    val gotBq = ids(Ann.searchStored(root(dirBq), "vec_id", q, 2, 8,
+        refine = 8, pred = pred))
     assert(gotBq == wantBq,
       s"filtered fresh 1-bit diverged:\ngot  $gotBq\nwant $wantBq")
     assert(gotBq.forall(r => !disallowed(r._1)))
@@ -305,8 +296,8 @@ class QuantizedFreshSpec extends SparkSpecBase {
       "the fresh side table still holds the deleted row")
     assert(sp.read.parquet(s"$dir/quantized")
       .filter(col("vec_id") === 8L).count() == 0L)
-    val got = Ann.searchQuantizedStored(sp, dir, "vec_id", "embedding",
-        typedlit(corpus(7)._2), Ann.L2, probes = 10, k = 60, refine = 60)
+    val got = Ann.searchStored(root(dir), "vec_id", corpus(7)._2, 10, 60,
+        refine = 60)
       .collect().map(_.getLong(0)).toSet
     assert(!got.contains(7L) && !got.contains(8L),
       "deleted rows resurfaced through the fresh-aware search")
@@ -319,9 +310,8 @@ class QuantizedFreshSpec extends SparkSpecBase {
     Ann.deleteQuantizedFreshIds(sp, dir, "vec_id", restOdd)
     assert(!new java.io.File(dir, "fresh").exists(),
       "an emptied fresh/ must disappear, not linger unreadable")
-    val after = Ann.searchQuantizedStored(sp, dir, "vec_id",
-        "embedding", typedlit(corpus(7)._2), Ann.L2, probes = 10,
-        k = 60, refine = 60).count()
+    val after = Ann.searchStored(root(dir), "vec_id", corpus(7)._2, 10, 60,
+        refine = 60).count()
     assert(after == 29L, s"expected 29 even survivors, saw $after")
   }
 
@@ -357,8 +347,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     assert(sp.read.parquet(s"$dir/centroids").count() === 2L)
     // moved rows re-encoded under the receiving cells' frozen bounds:
     // all-probe + covering refine == the exact scan over survivors
-    val got = ids(Ann.searchQuantizedStored(sp, dir, "vec_id", "embedding",
-      typedlit(q), Ann.L2, probes = 2, k = 8, refine = 6))
+    val got = ids(Ann.searchStored(root(dir), "vec_id", q, 2, 8, refine = 6))
     assert(got == exactWant(8),
       s"merged SQ root diverged from exact:\n$got\n${exactWant(8)}")
     // codes column well-formed in the receiving cells (no null codes)
@@ -371,7 +360,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
       spherical = false)
     // torn merge: every quantized entry point refuses; a re-run heals
     graft.io.Markers.write(sp, dir, "_graft_merge_pending", "quantized|")
-    intercept[IllegalStateException] { Ann.loadQuantized(sp, dir) }
+    intercept[IllegalStateException] { root(dir).readIndex }
     intercept[IllegalStateException] {
       Ann.appendIdempotent(
         Ann.cellRoot(sp, dir, Some("embedding")),
@@ -380,12 +369,12 @@ class QuantizedFreshSpec extends SparkSpecBase {
         "vec_id")
     }
     intercept[IllegalStateException] {
-      Ann.compactQuantizedFresh(sp, dir, "vec_id", "embedding")
+      Ann.compactQuantizedFresh(root(dir), "vec_id")
     }
     assert(Ann.mergeUnderfull(Ann.cellRoot(sp, dir, Some("embedding")),
       minRows = 5).isEmpty) // heals, nothing left to merge
-    assert(ids(Ann.searchQuantizedStored(sp, dir, "vec_id", "embedding",
-      typedlit(q), Ann.L2, probes = 2, k = 8, refine = 6)) == got)
+    assert(ids(Ann.searchStored(root(dir), "vec_id", q, 2, 8,
+        refine = 6)) == got)
     // a live fresh/ refuses the merge (compact first)
     assert(Ann.appendIdempotent(
       Ann.cellRoot(sp, dir, Some("embedding")),
@@ -406,8 +395,8 @@ class QuantizedFreshSpec extends SparkSpecBase {
     drain("encoded", dirPq)
     assert(Ann.mergeUnderfull(Ann.cellRoot(sp, dirPq, Some("embedding")),
       minRows = 5).values.sum === 2L)
-    assert(Ann.searchQuantizedStored(sp, dirPq, "vec_id", "embedding",
-      typedlit(q), Ann.Cosine, probes = 2, k = 42, refine = 1).count() === 42L)
+    assert(Ann.searchStored(root(dirPq), "vec_id", q, 2, 42,
+        refine = 1).count() === 42L)
     val fullBq = Ann.buildIvfBitq(df, "embedding", model, Ann.L2)
     val dirBq = java.nio.file.Files
       .createTempDirectory("graft-bqmerge").toString
@@ -416,8 +405,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     drain("quantized", dirBq)
     assert(Ann.mergeUnderfull(Ann.cellRoot(sp, dirBq, Some("embedding")),
       minRows = 5).values.sum === 2L)
-    assert(Ann.searchQuantizedStored(sp, dirBq, "vec_id", "embedding",
-      typedlit(q), Ann.L2, probes = 2, k = 42, refine = 1).count()
+    assert(Ann.searchStored(root(dirBq), "vec_id", q, 2, 42, refine = 1).count()
       === 42L)
   }
 
@@ -465,8 +453,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
         s"sub-cell $nid did not inherit the parent's bounds")
     }
     // all-probe + covering refine == exact over the whole corpus
-    assert(ids(Ann.searchQuantizedStored(sp, dir, "vec_id", "embedding",
-      typedlit(q), Ann.L2, probes = 2, k = 8, refine = 8))
+    assert(ids(Ann.searchStored(root(dir), "vec_id", q, 2, 8, refine = 8))
       == exactWant(8), "post-split SQ search diverged from exact")
     // --- PQ spherical: rows verbatim, sub-centroids unit-norm ---
     val fullPq = Ann.buildIvfPq(df, "embedding", model1, m = 4,
@@ -481,8 +468,8 @@ class QuantizedFreshSpec extends SparkSpecBase {
       .map(_.getSeq[Double](0).map(x => x * x).sum)
     pqCents.foreach(n => assert(math.abs(n - 1.0) < 1e-9,
       s"spherical sub-centroid not unit-norm: $n"))
-    assert(Ann.searchQuantizedStored(sp, dirPq, "vec_id", "embedding",
-      typedlit(q), Ann.Cosine, probes = 2, k = 60, refine = 1).count() === 60L)
+    assert(Ann.searchStored(root(dirPq), "vec_id", q, 2, 60,
+        refine = 1).count() === 60L)
     // --- 1-bit: residuals re-encode under the new sub-centroids ---
     val fullBq = Ann.buildIvfBitq(df, "embedding", model1, Ann.L2)
     val dirBq = java.nio.file.Files
@@ -491,9 +478,8 @@ class QuantizedFreshSpec extends SparkSpecBase {
     Ann.ensureIvfBitqRoot(sp, dirBq, fullBq.model, spherical = false)
     assert(Ann.splitOverfull(Ann.cellRoot(sp, dirBq, Some("embedding")),
       maxRows = 30).values.head.size === 2)
-    assert(ids(Ann.searchQuantizedStored(sp, dirBq, "vec_id",
-      "embedding", typedlit(q), Ann.L2, probes = 2, k = 8,
-      refine = 8)) == exactWant(8),
+    assert(ids(Ann.searchStored(root(dirBq), "vec_id", q, 2, 8,
+        refine = 8)) == exactWant(8),
       "post-split 1-bit search diverged — residual re-encode broken")
     // --- a live fresh/ refuses the split ---
     assert(Ann.appendIdempotent(
@@ -572,14 +558,19 @@ class QuantizedFreshSpec extends SparkSpecBase {
         Ann.cellRoot(sp, dir, Some("embedding")),
         odd, "vec_id")
     }
-    // metric/spherical mismatch refuses at query time
+    // metric/spherical mismatch refuses at query time: the batch join
+    // names a metric (the single-query search takes the root's)
     val dir2 = java.nio.file.Files
       .createTempDirectory("graft-fresh-metric").toString
     Ann.writeQuantized(idx, dir2)
     Ann.ensureIvfSqRoot(sp, dir2, idx, spherical = false)
+    val queries = {
+      import sp.implicits._
+      Seq((7L, q)).toDF("q_id", "qv")
+    }
     intercept[IllegalArgumentException] {
-      Ann.searchQuantizedStored(sp, dir2, "vec_id", "embedding",
-        typedlit(q), Ann.Cosine, probes = 2, k = 8)
+      Ann.knnJoinQuantizedFresh(sp, dir2, queries, "q_id", "qv", "vec_id",
+        "embedding", Ann.Cosine, probes = 2, k = 8)
     }
   }
 
@@ -596,19 +587,18 @@ class QuantizedFreshSpec extends SparkSpecBase {
       .createTempDirectory("graft-fresh-policy").toString
     Ann.writeQuantized(idx, dir)
     Ann.ensureIvfSqRoot(sp, dir, idx, spherical = false)
-    def search() = ids(Ann.searchQuantizedStored(sp, dir, "vec_id",
-      "embedding", typedlit(q), Ann.L2, probes = 2, k = 8, refine = 5))
+    def search() = ids(Ann.searchStored(root(dir), "vec_id", q, 2, 8,
+        refine = 5))
     // no fresh side at all → None (nothing to decide)
-    assert(Ann.compactQuantizedFreshIfNeeded(sp, dir, "vec_id",
-      "embedding", 0.25).isEmpty)
+    assert(Ann.compactQuantizedFreshIfNeeded(root(dir), "vec_id", 0.25).isEmpty)
     // append 10 fresh rows: |fresh|/|main| = 10/40 = 0.25 — NOT
     // strictly above a 0.25 ratio, so the policy must NOT trigger
     assert(Ann.appendIdempotent(
       Ann.cellRoot(sp, dir, Some("embedding")),
       df.filter(col("vec_id") >= 40 && col("vec_id") < 50), "vec_id") == 10L)
     val before = search()
-    assert(Ann.compactQuantizedFreshIfNeeded(sp, dir, "vec_id",
-      "embedding", 0.25).isEmpty, "triggered AT the ratio boundary")
+    assert(Ann.compactQuantizedFreshIfNeeded(root(dir), "vec_id",
+        0.25).isEmpty, "triggered AT the ratio boundary")
     assert(sp.read.parquet(s"$dir/fresh").count() == 10L,
       "a below-threshold decision must leave fresh/ untouched")
     // one more batch: 20/40 = 0.5 > 0.25 — must trigger and fold all
@@ -616,8 +606,8 @@ class QuantizedFreshSpec extends SparkSpecBase {
       Ann.cellRoot(sp, dir, Some("embedding")),
       df.filter(col("vec_id") >= 50), "vec_id") == 10L)
     val beforeTrigger = search()
-    assert(Ann.compactQuantizedFreshIfNeeded(sp, dir, "vec_id",
-      "embedding", 0.25).contains(20L))
+    assert(Ann.compactQuantizedFreshIfNeeded(root(dir), "vec_id",
+        0.25).contains(20L))
     // fresh/ gone, results identical across the trigger (the s26 pin)
     assert(!new java.io.File(s"$dir/fresh").exists(),
       "compaction must delete the folded fresh side")
@@ -626,16 +616,14 @@ class QuantizedFreshSpec extends SparkSpecBase {
     // the below-threshold search was already fresh-complete too
     assert(before.nonEmpty && beforeTrigger.nonEmpty)
     // post-compaction: None again (no fresh side)
-    assert(Ann.compactQuantizedFreshIfNeeded(sp, dir, "vec_id",
-      "embedding", 0.25).isEmpty)
+    assert(Ann.compactQuantizedFreshIfNeeded(root(dir), "vec_id", 0.25).isEmpty)
     // malformed ratios refuse loudly
     intercept[IllegalArgumentException] {
-      Ann.compactQuantizedFreshIfNeeded(sp, dir, "vec_id", "embedding",
-        -0.1)
+      Ann.compactQuantizedFreshIfNeeded(root(dir), "vec_id", -0.1)
     }
     intercept[IllegalArgumentException] {
-      Ann.compactQuantizedFreshIfNeeded(sp, dir, "vec_id", "embedding",
-        Double.PositiveInfinity)
+      Ann.compactQuantizedFreshIfNeeded(root(dir), "vec_id",
+          Double.PositiveInfinity)
     }
     // ratio 0 = compact-on-any-fresh: a single re-appended row (via a
     // delete first — ids are immutable) triggers immediately
@@ -646,8 +634,8 @@ class QuantizedFreshSpec extends SparkSpecBase {
     assert(Ann.appendIdempotent(
       Ann.cellRoot(sp, dir, Some("embedding")),
       df.filter(col("vec_id") === 59), "vec_id") == 1L)
-    assert(Ann.compactQuantizedFreshIfNeeded(sp, dir, "vec_id",
-      "embedding", 0.0).contains(1L))
+    assert(Ann.compactQuantizedFreshIfNeeded(root(dir), "vec_id",
+        0.0).contains(1L))
   }
 
   test("knnJoinQuantizedFresh: the batch join equals the single-query " +
@@ -684,9 +672,8 @@ class QuantizedFreshSpec extends SparkSpecBase {
         k = 8, refine = 5))
       val got = batch()
       qids.foreach { qid =>
-        val single = ids(Ann.searchQuantizedStored(sp, dir, "vec_id",
-          "embedding", typedlit(corpus(qid.toInt)._2), Ann.L2,
-          probes = 2, k = 8, refine = 5))
+        val single = ids(Ann.searchStored(root(dir), "vec_id",
+            corpus(qid.toInt)._2, 2, 8, refine = 5))
         assert(got(qid) == single,
           s"SQ qid=$qid: batch ${got(qid)} != single $single")
       }
@@ -699,8 +686,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
       // compaction is observably a no-op on the BATCH surface too
       // (the s26 pin, batch form) — and the post-compaction call
       // exercises the fresh-less pure-delegation path
-      assert(Ann.compactQuantizedFresh(sp, dir, "vec_id",
-        "embedding") == 30L)
+      assert(Ann.compactQuantizedFresh(root(dir), "vec_id") == 30L)
       assert(batch() == got,
         "compaction changed the batch join's results")
     }
@@ -721,9 +707,8 @@ class QuantizedFreshSpec extends SparkSpecBase {
         "q_id", "qv", "vec_id", "embedding", Ann.Cosine, probes = 2,
         k = 8, refine = 5))
       qids.foreach { qid =>
-        val single = ids(Ann.searchQuantizedStored(sp, dir, "vec_id",
-          "embedding", typedlit(corpus(qid.toInt)._2), Ann.Cosine, probes = 2,
-          k = 8, refine = 5))
+        val single = ids(Ann.searchStored(root(dir), "vec_id",
+            corpus(qid.toInt)._2, 2, 8, refine = 5))
         assert(got(qid) == single,
           s"PQ qid=$qid: batch ${got(qid)} != single $single")
       }
@@ -744,9 +729,8 @@ class QuantizedFreshSpec extends SparkSpecBase {
         "q_id", "qv", "vec_id", "embedding", Ann.L2, probes = 2,
         k = 8, refine = 8))
       qids.foreach { qid =>
-        val single = ids(Ann.searchQuantizedStored(sp, dir,
-          "vec_id", "embedding", typedlit(corpus(qid.toInt)._2),
-          Ann.L2, probes = 2, k = 8, refine = 8))
+        val single = ids(Ann.searchStored(root(dir), "vec_id",
+            corpus(qid.toInt)._2, 2, 8, refine = 8))
         assert(got(qid) == single,
           s"bitq qid=$qid: batch ${got(qid)} != single $single")
       }

@@ -213,12 +213,12 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     val index = Ann.buildIvfBitq(e, "embedding", model, Ann.L2)
     val dir = Files.createTempDirectory("graft-del-bitq").toString
     Ann.writeQuantized(index, dir)
-    val doomed = Ann.searchQuantizedStored(spark, dir, "vec_id", "embedding",
-      typedlit(q64), Ann.L2, probes = 3, k = 3)
+    val doomed = Ann.searchStored(Ann.cellRoot(spark, dir, Some("embedding")),
+        "vec_id", q64, 3, 3)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     Ann.deleteStored(spark, s"$dir/quantized", col("vec_id").isin(doomed: _*))
-    val after = Ann.searchQuantizedStored(spark, dir, "vec_id", "embedding",
-      typedlit(q64), Ann.L2, probes = 3, k = 10)
+    val after = Ann.searchStored(Ann.cellRoot(spark, dir, Some("embedding")),
+        "vec_id", q64, 3, 10)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(doomed.forall(d => !after.contains(d)))
     assert(after.nonEmpty)
@@ -284,7 +284,7 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     val merged = eng.mergeUnderfullIfNeeded(td, root, minRows = 5)
     assert(merged.size === 1 && merged.values.sum === 1L,
       s"expected the one drained cell (1 row) to dissolve, got $merged")
-    val (m2, _) = Ann.loadRangeIndex(sp, root)
+    val m2 = Ann.cellRoot(sp, root, None).readModel
     assert(m2.centroids.count() === 2L)
     // every survivor reachable through the merged layout
     assert(Ann.rangeSearchStoredSelf(sp, root, "rid", "v",
@@ -330,8 +330,8 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     val msplit = eng.splitOverfullIfNeeded(td, mroot, maxRows = 20)
     assert(msplit.keySet.size === 1)
     assert(sp.read.parquet(s"$mroot/centroids").count() === 2L)
-    assert(Ann.matryoshkaTopKIvf(sp, mroot, "rid", Seq(0.0, 0.0),
-      probes = 2, candidates = 30, k = 30).count() === 30L)
+    assert(Ann.searchStored(Ann.cellRoot(sp, mroot, None), "rid",
+        Seq(0.0, 0.0), 2, 30, refine = 1).count() === 30L)
   }
 
   test("mergeUnderfullIfNeeded dispatches on the root's marker: a " +
@@ -362,8 +362,8 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
       s"expected the one drained cell (1 row) to dissolve, got $merged")
     assert(sp.read.parquet(s"$root/centroids").count() === 2L)
     // every survivor reachable at all-probe through the merged root
-    assert(Ann.matryoshkaTopKIvf(sp, root, "rid",
-      Seq(0.0, 0.0), probes = 2, candidates = 21, k = 21).count()
+    assert(Ann.searchStored(Ann.cellRoot(sp, root, None), "rid",
+        Seq(0.0, 0.0), 2, 21, refine = 1).count()
       === 21L)
     // below-threshold layouts are left alone
     assert(eng.mergeUnderfullIfNeeded(td, root, minRows = 5).isEmpty)
@@ -437,9 +437,8 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     assert(split.nonEmpty, "engine-seat quantized split never fired")
     assert(sp.read.parquet(s"$root/centroids").count() === 3L)
     // every survivor reachable through the re-partitioned root
-    assert(Ann.searchQuantizedStored(sp, root, "rid", "v",
-      typedlit(Seq(0.0, 0.0)), Ann.L2, probes = 3, k = 21,
-      refine = 1).count() === 21L)
+    assert(Ann.searchStored(Ann.cellRoot(sp, root, Some("v")), "rid",
+        Seq(0.0, 0.0), 3, 21, refine = 1).count() === 21L)
   }
 
   test("mergeUnderfullCellsMrlIvf (cosine): drained cells dissolve " +
@@ -484,13 +483,13 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     // partition/column pins assert on the call)
     val q = docs.filter(col("vec_id") === 2)
       .select(col("embedding")).head().getSeq[Double](0).toSeq
-    val got = Ann.matryoshkaTopKIvf(sp, root, "vec_id", q,
-        probes = 2, candidates = 20, k = 8, metric = Ann.Cosine)
+    val got = Ann.searchStored(Ann.cellRoot(sp, root, None), "vec_id", q, 2,
+        8, refine = 3)
       .select("vec_id", "dist").as[(Long, Double)].collect().toSeq
     val doomedIds = doomed.as[Long].collect().toSet
     val flat = Ann.matryoshkaTopK(
         docs.filter(!col("vec_id").isin(doomedIds.toSeq: _*)),
-        "vec_id", "embedding", q, dims = 2, candidates = 20, k = 8,
+        "vec_id", "embedding", q, dims = 2, candidates = 24, k = 8,
         metric = Ann.Cosine)
       .select("vec_id", "dist").as[(Long, Double)].collect().toSeq
     assert(got === flat,
@@ -498,8 +497,8 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     // torn merge: readers and appends refuse; one re-run heals
     graft.io.Markers.write(sp, root, "_graft_merge_pending", "")
     intercept[IllegalStateException] {
-      Ann.matryoshkaTopKIvf(sp, root, "vec_id", q, probes = 1,
-        candidates = 8, k = 4, metric = Ann.Cosine)
+      Ann.searchStored(Ann.cellRoot(sp, root, None), "vec_id", q, 1, 4,
+          refine = 2)
     }
     intercept[IllegalStateException] {
       Ann.appendIdempotent(
@@ -507,8 +506,8 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
         Seq((900L, Seq(1.0, 0.1, 0.0))).toDF("vec_id", "embedding"), "vec_id")
     }
     Ann.mergeUnderfull(Ann.cellRoot(sp, root, None), minRows = 5)
-    assert(Ann.matryoshkaTopKIvf(sp, root, "vec_id", q, probes = 2,
-      candidates = 20, k = 8, metric = Ann.Cosine).count() === 8L)
+    assert(Ann.searchStored(Ann.cellRoot(sp, root, None), "vec_id", q, 2, 8,
+        refine = 3).count() === 8L)
   }
 
   test("splitOverfullCellsMrlIvf (cosine): a hot cell dissolves into " +
@@ -564,11 +563,11 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     // emb_pre or mis-homed row would surface here
     val q = docs.filter(col("vec_id") === 2)
       .select(col("embedding")).head().getSeq[Double](0).toSeq
-    val got = Ann.matryoshkaTopKIvf(sp, root, "vec_id", q,
-        probes = 2, candidates = 20, k = 8, metric = Ann.Cosine)
+    val got = Ann.searchStored(Ann.cellRoot(sp, root, None), "vec_id", q, 2,
+        8, refine = 3)
       .select("vec_id", "dist").as[(Long, Double)].collect().toSeq
     val flat = Ann.matryoshkaTopK(docs, "vec_id", "embedding", q,
-        dims = 2, candidates = 20, k = 8, metric = Ann.Cosine)
+        dims = 2, candidates = 24, k = 8, metric = Ann.Cosine)
       .select("vec_id", "dist").as[(Long, Double)].collect().toSeq
     assert(got === flat,
       s"all-probe composed != flat cut after split:\n$got\n$flat")
@@ -624,8 +623,8 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     // trained artifacts untouched by the delete
     assert(spark.read.parquet(s"$dir/codebooks").count() === booksBefore)
     // stored search over the maintained layout never surfaces rid 5
-    val got = Ann.searchQuantizedStored(spark, dir, "rid", "v",
-      typedlit(Seq(0.0, 0.0)), Ann.L2, probes = 2, k = 30, refine = 5)
+    val got = Ann.searchStored(Ann.cellRoot(spark, dir, Some("v")), "rid",
+        Seq(0.0, 0.0), 2, 30, refine = 5)
       .collect().map(_.getLong(0))
     assert(!got.contains(5L) && got.nonEmpty)
   }
@@ -905,8 +904,8 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     assert(cellFiles(otherCell.toString) === beforeOther,
       "a delete in one cell rewrote another cell's files")
     // the composed search behaves as if the row never existed
-    val got = Ann.matryoshkaTopKIvf(sp, dir, "rid",
-        Seq(0.0, 0.0), probes = 2, candidates = 30, k = 30)
+    val got = Ann.searchStored(Ann.cellRoot(sp, dir, None), "rid",
+        Seq(0.0, 0.0), 2, 30, refine = 1)
       .collect().map(_.getLong(0))
     assert(!got.contains(doomed) && got.length === 29)
   }

@@ -713,8 +713,8 @@ class AnnRewriteSpec extends SparkSpecBase {
         .select("vec_id", "dist")
       assert(df.queryExecution.optimizedPlan.toString.contains("LeftSemi"))
       val got = df.collect().map(r => (r.getLong(0), r.getDouble(1)))
-      val want = Ann.matryoshkaTopKIvf(sp, dir, "vec_id", q,
-          probes = 2, candidates = 20, k = 5)
+      val want = Ann.searchStored(Ann.cellRoot(sp, dir, None), "vec_id", q, 2,
+          5, refine = 4)
         .collect().map(r => (r.getLong(0), r.getDouble(2)))
       assert(got.toSeq === want.toSeq)
     } finally AnnIndex.unregister("embedding")

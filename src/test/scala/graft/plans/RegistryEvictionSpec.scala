@@ -18,11 +18,15 @@ class RegistryEvictionSpec extends SparkSpecBase {
   test("AnnIndex registrations across all families unregister to empty") {
     val before = AnnIndex.hasAny
     val never = () => sys.error("never resolved")
-    // matryoshka needs real marker roots (read by the factories)
+    // matryoshka needs real marker roots (read by the factories); the
+    // composed factory also opens the root's centroids
     def mrlRoot(marker: String) = {
       val dir = java.nio.file.Files
         .createTempDirectory("graft_ev_mrl").toString
       graft.io.Markers.write(spark, dir, marker, "dims=2")
+      spark.range(1).select(col("id").as("centroid_id"),
+          array(lit(0.0), lit(0.0)).as("centroid"))
+        .write.parquet(s"$dir/centroids")
       dir
     }
     // one binding per Binding case — plus the 1-bit, PQ, IVF-composed

@@ -354,9 +354,8 @@ class PlanSpec extends SparkSpecBase {
     val removed = Ann.deleteStored(spark, s"$dir/quantized",
       col("vec_id") % 3 === 0)
     assert(removed > 0)
-    val q = typedlit((0 until 64).map(_ => 0.0))
-    val hits = Ann.searchQuantizedStored(spark, dir, "vec_id", "embedding",
-      q, Ann.L2, probes = 2, k = 5)
+    val hits = Ann.searchStored(Ann.cellRoot(spark, dir, Some("embedding")),
+        "vec_id", Seq.fill(64)(0.0), 2, 5)
     val p = plan(hits)
     assert(p.contains("PartitionFilters:") && p.contains("centroid_id#"),
       s"expected partition pruning on the rewritten layout:\n$p")

@@ -680,7 +680,8 @@ class StreamSpec extends SparkSpecBase {
       maxFilesPerCell = 1)
     // the graduated layout loads as a writeQuantized SQ layout and its codes
     // equal the batch index's (packed) codes row for row
-    val loaded = Ann.loadQuantized(sp, dir)
+    val loaded = Ann.cellRoot(sp, dir, None)
+      .as[Ann.CellRoot.Quantized]("StreamSpec").readIndex
     val got = loaded.rows.select("vec_id", "codes")
       .as[(Long, Seq[Int])].collect().toMap
     val want = idx.quantized.select(col("vec_id"), col("codes"))
@@ -688,8 +689,8 @@ class StreamSpec extends SparkSpecBase {
     assert(got === want)
     // a search over the streamed layout equals the in-memory index path
     val qv = typedlit(Seq.fill(4)(0.5))
-    val a = Ann.searchQuantizedStored(sp, dir, "vec_id", "embedding", qv,
-      Ann.L2, probes = 2, k = 5).collect().map(_.toSeq).toSeq
+    val a = Ann.searchStored(Ann.cellRoot(sp, dir, Some("embedding")),
+        "vec_id", Seq.fill(4)(0.5), 2, 5).collect().map(_.toSeq).toSeq
     val b = {
       val cells = Ann.probeCells(model, qv, Ann.L2, 2)
         .collect().map(_.getLong(0))
@@ -756,8 +757,8 @@ class StreamSpec extends SparkSpecBase {
     assert(got === want)
     // stored search over the streamed layout == in-memory index path
     val qv = typedlit(Seq.fill(4)(0.5))
-    val a = Ann.searchQuantizedStored(sp, dir, "vec_id", "embedding", qv,
-      Ann.L2, probes = 2, k = 5).collect().map(_.toSeq).toSeq
+    val a = Ann.searchStored(Ann.cellRoot(sp, dir, Some("embedding")),
+        "vec_id", Seq.fill(4)(0.5), 2, 5).collect().map(_.toSeq).toSeq
     val b = {
       val cells = Ann.probeCells(model, qv, Ann.L2, 2)
         .collect().map(_.getLong(0))
@@ -819,7 +820,9 @@ class StreamSpec extends SparkSpecBase {
     } finally q.stop()
     Stream.graduateRangeIndex(sp, root, model, "embedding",
       maxFilesPerCell = 1)
-    val (loadedModel, radii) = Ann.loadRangeIndex(sp, root)
+    val range = Ann.cellRoot(sp, root, None)
+      .as[Ann.CellRoot.Range]("StreamSpec")
+    val (loadedModel, radii) = (range.readModel, range.radii)
     val qv = typedlit(Seq(4.0, 0.0))
     // graduation-time radii cover the outlier's cell
     val cells = Ann.rangeCells(loadedModel, radii, qv, Ann.L2, eps = 1.2)
@@ -926,7 +929,7 @@ class StreamSpec extends SparkSpecBase {
       new org.apache.hadoop.fs.Path(s"$root/centroids__old")))
     val input = MemoryStream[(Long, Seq[Double], Int)]
     // the restart must NOT die on the missing live path — the heal
-    // runs before the start-time loadRangeIndex
+    // runs before the start-time centroids read
     val q = Stream.ingestRangeAppend(
       input.toDF().toDF("vec_id", "embedding", "label"), "vec_id",
       "embedding", root,
@@ -981,7 +984,7 @@ class StreamSpec extends SparkSpecBase {
       input.addData(appended: _*)
       q.processAllAvailable()
     } finally q.stop()
-    val (m2, _) = Ann.loadRangeIndex(sp, root)
+    val m2 = Ann.cellRoot(sp, root, None).readModel
     assert(m2.centroids.count() === 3L,
       "exactly the overfull cell must split (2 cells -> 3)")
     // results invariant: the eps-ball around cluster 0's origin still

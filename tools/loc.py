@@ -5,9 +5,12 @@ Prints, per .scala file under the given roots, the number of code lines
 (blank lines and comment-only lines excluded: `//` lines and lines wholly
 inside `/* ... */` blocks), a total per root, and the number of public
 `def`s declared directly in `object Ann` (`src/main/scala/graft/ops/
-Ann.scala`) and in `object Stream` (`src/main/scala/graft/streaming/
-Stream.scala`): a line that starts with two spaces then `def `;
-members of nested types and `private` defs are not counted.
+Ann.scala`), `object Stream` (`src/main/scala/graft/streaming/
+Stream.scala`) and `object Binding` (`src/main/scala/graft/plans/
+AnnRewrite.scala`): a line inside the object's block (from its
+`object <Name> {` line to the next line that is a lone `}`) that starts
+with two spaces then `def `; members of nested types and `private` defs
+are not counted.
 
 Run it from the root of a checkout; roots are relative to it.
 
@@ -18,9 +21,10 @@ import re
 import sys
 from pathlib import Path
 
-# (object, the file it is the only top-level object of)
+# (object, the file that declares it)
 OBJECTS = [("Ann", Path("src/main/scala/graft/ops/Ann.scala")),
-           ("Stream", Path("src/main/scala/graft/streaming/Stream.scala"))]
+           ("Stream", Path("src/main/scala/graft/streaming/Stream.scala")),
+           ("Binding", Path("src/main/scala/graft/plans/AnnRewrite.scala"))]
 PUBLIC_DEF = re.compile(r"^  def ")
 
 
@@ -61,9 +65,19 @@ def code_lines(text):
     return n
 
 
-def public_defs(path):
-    return sum(1 for line in path.read_text().splitlines()
-               if PUBLIC_DEF.match(line))
+def public_defs(name, path):
+    """Public defs in the block of top-level `object <name>` — a file
+    may declare several top-level objects."""
+    n = 0
+    inside = False
+    for line in path.read_text().splitlines():
+        if not inside:
+            inside = line.startswith(f"object {name} ")
+        elif line.rstrip() == "}":
+            break
+        elif PUBLIC_DEF.match(line):
+            n += 1
+    return n
 
 
 def main(argv):
@@ -80,7 +94,7 @@ def main(argv):
         print(f"{total:7d}  total code lines under {root} "
               f"({len(files)} files)")
     for name, path in OBJECTS:
-        print(f"{public_defs(path):7d}  public defs in object {name}")
+        print(f"{public_defs(name, path):7d}  public defs in object {name}")
 
 
 if __name__ == "__main__":
