@@ -2248,19 +2248,25 @@ object Ann {
   private val dirRadiiCache =
     new graft.core.LruCache[String, Map[Long, Double]](64)
   private[graft] def collectRadiiMap(model: IvfModel,
-                                   radii: DataFrame): Map[Long, Double] = {
-    def doCollect(): Map[Long, Double] = radii
-      .select(col(model.idCol).cast("long"), col("radius").cast("double"))
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
+                                   radii: DataFrame): Map[Long, Double] =
     parquetRootOf(radii) match {
-      case Some(path) =>
-        val spark = radii.sparkSession
-        dirRadiiCache.getOrElseUpdate(
-          s"${System.identityHashCode(spark)}|${model.idCol}|$path|" +
-            listingSig(spark, path))(doCollect())
-      case None => doCollect()
+      case Some(path) => radiiAt(radii.sparkSession, path, model.idCol)(radii)
+      case None => collectRadii(radii, model.idCol)
     }
-  }
+
+  /** The memoized radii collect of the table at `path`, looked up by
+    * its listing BEFORE `radii` is built: a warm read builds no parquet
+    * frame, so it pays no schema-inference job. */
+  private def radiiAt(spark: org.apache.spark.sql.SparkSession,
+                      path: String, idCol: String)(
+      radii: => DataFrame): Map[Long, Double] =
+    dirRadiiCache.getOrElseUpdate(s"${System.identityHashCode(spark)}|" +
+      s"$idCol|$path|${listingSig(spark, path)}")(collectRadii(radii, idCol))
+
+  private def collectRadii(radii: DataFrame,
+                           idCol: String): Map[Long, Double] =
+    radii.select(col(idCol).cast("long"), col("radius").cast("double"))
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
 
   /** The single root path behind a PLAIN parquet scan (no projections,
     * no filters, one root) — None for anything else. */
@@ -2484,12 +2490,12 @@ object Ann {
                                   roundTo: Int): DataFrame =
         centroidDist(rows.select(col(model.idCol), col(vec)), vec, model,
           L2, roundTo)
-      /** The radii side table — a plain parquet scan, so
-        * [[collectRadiiMap]] memoizes its collect per listing. */
+      /** The radii side table — a plain parquet scan. */
       def radii: DataFrame = spark.read.parquet(s"$dir/radii")
-      /** The covering radius per cell of `model`. */
+      /** The covering radius per cell of `model`, memoized per radii
+        * listing; a warm read runs no Spark job. */
       def readRadii(model: IvfModel): Map[Long, Double] =
-        collectRadiiMap(model, radii)
+        radiiAt(spark, s"$dir/radii", model.idCol)(radii)
       private def notTopK = new IllegalStateException(
         s"searchStored: $dir is a range root — it answers eps queries, " +
           "not top-k; use Ann.rangeSearchStoredSelf")
@@ -2674,8 +2680,8 @@ object Ann {
 
     /** A [[writeQuantized]] root (SQ / PQ / 1-bit). `spherical` is the
       * flag its geometry marker pins — None on a root written without
-      * ensure*Root, which resolves (deletes serve it) but refuses
-      * maintenance: an unpinned geometry must never become a
+      * [[ensureQuantizedRoot]], which resolves (deletes serve it) but
+      * refuses maintenance: an unpinned geometry must never become a
       * maintenance target. `vecCol` is the raw vector column moved
       * rows re-encode from. Spherical roots retrain on the unit sphere
       * and store UNIT sub-centroids (quantized readers and assigners
@@ -2783,7 +2789,7 @@ object Ann {
         if (readIvfModelMarker(spark, dir).isEmpty)
           throw new IllegalStateException(
             s"appendIdempotent: $dir has no IVF model marker — pin the " +
-              "build model first (ensure*Root at write time)")
+              "build model first (ensureQuantizedRoot at write time)")
         val model = pinnedModel
         verifyQuantizedGeometry(spark, dir, dataSub,
           spark.read.parquet(s"$dir/$dataSub"), model, sph, idCol, vec)
@@ -3622,10 +3628,7 @@ object Ann {
     requireRangeMetric(metric, label)
     val root = cellRoot(spark, dir, Some(dVec)).as[CellRoot.Range](label)
     val model = root.readModel
-    // one radii frame for the cut and the join: each parquet read
-    // infers its schema in a job of its own
-    val radii = root.radii
-    val rad = collectRadiiMap(model, radii)
+    val rad = root.readRadii(model)
     val cents = collectCentroids(model)
     val slack = math.pow(10.0, -roundTo)
     // ONE evaluation of the query frame: the union, the eps
@@ -3671,7 +3674,7 @@ object Ann {
       s"$label: admitted-cell union did not become " +
         s"PartitionFilters on the rows scan:\n$phys")
     rangeJoinIvfPerEpsImpl(qLocal, qId, qVec, epsCol, pruned, dId,
-      dVec, model, radii, metric, roundTo, validateEps = false,
+      dVec, model, rad, metric, roundTo, validateEps = false,
       label = label, pred = lit(true))
   }
 
@@ -3698,8 +3701,8 @@ object Ann {
     // scalar already validated — skip the per-row probe job
     rangeJoinIvfPerEpsImpl(
       queries.withColumn("__eps", lit(eps)), qId, qVec, "__eps",
-      assigned, dId, dVec, model, radii, metric, roundTo,
-      validateEps = false, label = "rangeJoinIvf", pred = pred)
+      assigned, dId, dVec, model, collectRadiiMap(model, radii), metric,
+      roundTo, validateEps = false, label = "rangeJoinIvf", pred = pred)
   }
 
   /** [[rangeJoinIvf]] with a PER-QUERY radius — the calibrated form a
@@ -3738,8 +3741,8 @@ object Ann {
                          roundTo: Int = 6,
                          pred: Column = lit(true)): DataFrame =
     rangeJoinIvfPerEpsImpl(queries, qId, qVec, epsCol, assigned, dId,
-      dVec, model, radii, metric, roundTo, validateEps = true,
-      label = "rangeJoinIvfPerEps", pred = pred)
+      dVec, model, collectRadiiMap(model, radii), metric, roundTo,
+      validateEps = true, label = "rangeJoinIvfPerEps", pred = pred)
 
   /** The range joins' probe side under a SIZE-GATED broadcast pin.
     * The exploded probe side (|Q|·intersecting-cells rows with full
@@ -3774,7 +3777,7 @@ object Ann {
   private def rangeJoinIvfPerEpsImpl(
       queries0: DataFrame, qId: String, qVec: String, epsCol: String,
       assigned: DataFrame, dId: String, dVec: String, model: IvfModel,
-      radii: DataFrame, metric: Metric, roundTo: Int,
+      rad: Map[Long, Double], metric: Metric, roundTo: Int,
       validateEps: Boolean, label: String,
       pred: Column = lit(true)): DataFrame = {
     requireRangeMetric(metric, label)
@@ -3797,7 +3800,6 @@ object Ann {
           "infinite radius — a NaN silently drops its query, an " +
           "infinity scans every cell")
     }
-    val rad = collectRadiiMap(model, radii)
     val bc = spark.sparkContext.broadcast(
       collectCentroids(model).map { case (id, c) =>
         (id, c, rad.getOrElse(id, 0.0)) })
@@ -3940,6 +3942,14 @@ object Ann {
     private[ops] def marker: String
     /** The spherical flag a marker value pins. */
     private[ops] def pinnedSpherical(meta: String): Boolean = meta.toBoolean
+    /** What a geometry refusal calls the marker value, and what two
+      * values of it would mix. */
+    private[ops] def pinName: String = "spherical="
+    private[ops] def mixes: String
+    /** The marker pinning a digest of the trained side tables, and
+      * what a mismatch refuses — None where the model marker already
+      * pins the quantizer. */
+    private[ops] def digestPin: Option[(String, String)] = None
     /** The exact-re-rank budget (candidate multiplier) for
       * `refine <= 0`. */
     def defaultRefine(metric: Metric): Int = 5
@@ -3957,6 +3967,10 @@ object Ann {
   case object Sq extends QuantFamily {
     private[ops] val codeCols = Set("codes")
     private[ops] def marker = SqMetaMarker
+    private[ops] def mixes = "metric spaces"
+    override private[ops] def digestPin = Some((SqBoundsDigestMarker,
+      "different SQ bounds (digest mismatch) — retrained bounds cannot " +
+        "extend this layout"))
     private[ops] def artifacts(spark: org.apache.spark.sql.SparkSession,
                                dir: String, model: IvfModel): QuantIndex =
       IvfSqIndex(spark.emptyDataFrame, spark.read.parquet(s"$dir/bounds"),
@@ -3992,16 +4006,23 @@ object Ann {
     private[ops] def marker = PqMetaMarker
     override private[ops] def pinnedSpherical(meta: String): Boolean =
       meta.split(",")(2).toBoolean
+    override private[ops] def pinName = "PQ geometry "
+    private[ops] def mixes = "code spaces"
+    override private[ops] def digestPin = Some((PqBooksDigestMarker,
+      "different codebooks (digest mismatch) — a retrained quantizer " +
+        "cannot extend this layout"))
     private[ops] def artifacts(spark: org.apache.spark.sql.SparkSession,
                                dir: String, model: IvfModel): QuantIndex =
       loadPqArtifacts(spark, dir, model)
   }
 
   /** 1-bit residual sign codes plus the residual norm
-    * ([[IvfBitIndex]]). */
+    * ([[IvfBitIndex]]); its centroids are its quantizer, so it pins no
+    * digest. */
   case object Bitq extends QuantFamily {
     private[ops] val codeCols = Set("bits", "rnorm")
     private[ops] def marker = BitqMetaMarker
+    private[ops] def mixes = "residual spaces"
     override def defaultRefine(metric: Metric): Int =
       defaultBitqRefine(metric)
     private[ops] def artifacts(spark: org.apache.spark.sql.SparkSession,
@@ -4039,15 +4060,25 @@ object Ann {
         queries: Array[(Long, Array[Double])]): Column =
       estimate(col("__qv"))
     /** Assign + encode raw rows under this index's artifacts, codes at
-      * rest — the streaming-ingest transform, bit-identical to the
-      * batch build's codes. */
-    private[ops] def encode(raw: DataFrame, vecCol: String,
-                            metric: Metric): DataFrame
+      * rest, bit-identical to the batch build's codes: the one
+      * transform for rows that arrive after the build (streamed,
+      * fresh on read, compacted, re-encoded by a split or merge).
+      * `model` is the index's geometry as is: under `Cosine` the rows
+      * normalize and assign L2 on the unit sphere against the
+      * already-unit centroids; any other metric assigns with itself.
+      * The stored vecCol stays RAW for the exact re-rank. */
+    private[graft] def encode(raw: DataFrame, vecCol: String,
+                              metric: Metric): DataFrame
     /** Scan-form codes to their at-rest form, and back. */
     private[ops] def pack(df: DataFrame): DataFrame = df
     private[ops] def unpack(df: DataFrame): DataFrame = df
     /** Write the trained side tables beside the code rows. */
     private[ops] def writeSide(dir: String): Unit
+    /** The family marker's value for a root pinned `spherical`. */
+    private[ops] def geometryPin(spherical: Boolean): String =
+      spherical.toString
+    /** The digest [[QuantFamily.digestPin]]'s marker holds. */
+    private[ops] def artifactDigest: Option[String] = None
     /** (cell, `__d`) per at-rest row: the distance between the row's
       * code reconstruction and its cell centroid, reading the code
       * columns only ([[indexHealth]]'s per-row input). */
@@ -4077,9 +4108,17 @@ object Ann {
     private[ops] def cellSide: Option[DataFrame] = Some(bounds)
     private[ops] def estimate(qv: Column): Column =
       sqDistCols(qv, col("codes"), col("__mins"), col("__maxs"))
-    private[ops] def encode(raw: DataFrame, vecCol: String,
-                            metric: Metric): DataFrame =
-      assignQuantizeSq(raw, vecCol, this, metric)
+    /** Assignment plus a broadcast join against the ≤k-row bounds
+      * table: map-only apart from that join. */
+    private[graft] def encode(raw: DataFrame, vecCol: String,
+                              metric: Metric): DataFrame = {
+      val (assigned, v) = assignPhase1(raw, vecCol, model, metric)
+      assigned
+        .join(broadcast(bounds), model.idCol)
+        .withColumn("codes", packCodes(quantizeSqCols(
+          col(v).cast("array<double>"), col("__mins"), col("__maxs"))))
+        .drop("__mins", "__maxs", "__nvec")
+    }
     override private[ops] def pack(df: DataFrame): DataFrame =
       df.withColumn("codes", packCodes(col("codes")))
     override private[ops] def unpack(df: DataFrame): DataFrame =
@@ -4088,6 +4127,8 @@ object Ann {
       bounds.write.mode("overwrite").parquet(s"$dir/bounds")
       model.centroids.write.mode("overwrite").parquet(s"$dir/centroids")
     }
+    override private[ops] def artifactDigest: Option[String] =
+      Some(sqBoundsDigest(bounds, model.idCol))
     private[ops] def healthDist(atRest: DataFrame,
                                 roundTo: Int): DataFrame =
       unpack(atRest.select(col(model.idCol), col("codes")))
@@ -4165,64 +4206,6 @@ object Ann {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  /** Idempotently establish a [[writeQuantized]] SQ ROOT for streaming
-    * ingest ([[graft.streaming.Stream.ingestIvfSq]]): first call writes
-    * the trained side tables (bounds, centroids) plus markers pinning
-    * the spherical flag, the bounds digest and the coarse-quantizer
-    * fingerprint; a restart verifies all three — neither retrained
-    * bounds nor a retrained IVF model can mix quantization spaces in
-    * one layout. The streamed `quantized/` dir is the only growing
-    * part. */
-  def ensureIvfSqRoot(spark: org.apache.spark.sql.SparkSession,
-                      dir: String, index: IvfSqIndex,
-                      spherical: Boolean): Unit = {
-    val digest = sqBoundsDigest(index.bounds, index.model.idCol)
-    graft.io.Markers.read(spark, dir, SqMetaMarker) match {
-      case Some(meta) =>
-        require(meta == spherical.toString,
-          s"$dir pins spherical=$meta; this ingest carries $spherical — " +
-            "streaming into it would mix two metric spaces")
-        val have = graft.io.Markers.read(spark, dir, SqBoundsDigestMarker)
-        require(have.contains(digest),
-          s"$dir was built with different SQ bounds (digest mismatch) " +
-            "— retrained bounds cannot extend this layout")
-      case None =>
-        index.bounds.write.mode("overwrite").parquet(s"$dir/bounds")
-        index.model.centroids.write.mode("overwrite")
-          .parquet(s"$dir/centroids")
-        graft.io.Markers.write(spark, dir, SqMetaMarker,
-          spherical.toString)
-        graft.io.Markers.write(spark, dir, SqBoundsDigestMarker, digest)
-    }
-    ensureIvfModelMarker(spark, dir, index.model)
-  }
-
-  /** Assign + SQ-quantize + pack in one micro-batch transform — what
-    * [[buildIvfSq]] does at build time under the same metric, shaped
-    * for streaming: broadcast-argmin assignment (map-only) plus a
-    * broadcast stream-static join against the ≤k-row bounds table, so
-    * codes are BIT-IDENTICAL to the batch build's and
-    * [[graft.streaming.Stream.ingestIvfSq]] appends are
-    * indistinguishable at rest from [[writeQuantized]] output. Cosine
-    * assigns and quantizes on normalized vectors (the spherical
-    * contract) while the stored vecCol stays RAW for the exact
-    * re-rank. */
-  def assignQuantizeSq(docs: DataFrame, vecCol: String,
-                       index: IvfSqIndex, metric: Metric): DataFrame = {
-    val (assigned, qvec) =
-      if (metric == Cosine)
-        (assign(withNormalized(docs, vecCol, "__nvec"), "__nvec",
-          index.model, L2), col("__nvec"))
-      else
-        (assign(docs, vecCol, index.model, metric),
-          col(vecCol).cast("array<double>"))
-    assigned
-      .join(broadcast(index.bounds), index.model.idCol)
-      .withColumn("codes",
-        packCodes(quantizeSqCols(qvec, col("__mins"), col("__maxs"))))
-      .drop("__mins", "__maxs", "__nvec")
-  }
-
   /** IVF + product quantization composed — the third quantization
     * family inside IVF cells (SQ [[buildIvfSq]], 1-bit
     * [[buildIvfBitq]]): positional PQ codes whose codebooks are the
@@ -4290,11 +4273,34 @@ object Ann {
       }
       adc(col("__qid"), col("pq_codes"))
     }
-    private[ops] def encode(raw: DataFrame, vecCol: String,
-                            metric: Metric): DataFrame =
-      assignEncodePq(raw, vecCol, pq, model, metric)
-    private[ops] def writeSide(dir: String): Unit =
-      writePqSideTables(encoded.sparkSession, dir, pq, model, spherical)
+    /** Map-only: broadcast centroids, broadcast codebooks. */
+    private[graft] def encode(raw: DataFrame, vecCol: String,
+                              metric: Metric): DataFrame = {
+      val (assigned, v) = assignPhase1(raw, vecCol, model, metric)
+      encodePq(assigned, v, pq).drop("__nvec")
+    }
+    /** Codebooks and centroids, plus the geometry marker and a
+      * sha-256 digest of the codebook values: a reader cannot
+      * mis-assemble the lookup tables, and the restart pin
+      * ([[ensureQuantizedRoot]]) tells two trainings of one geometry
+      * apart. */
+    private[ops] def writeSide(dir: String): Unit = {
+      val spark = encoded.sparkSession
+      import spark.implicits._
+      pq.codebooks.indices.flatMap(s => pq.codebooks(s).zipWithIndex
+          .map { case ((cid, cent), code) => (s, code, cid, cent.toSeq) })
+        .toDF("s", "code", "cid", "cent")
+        .write.mode("overwrite").parquet(s"$dir/codebooks")
+      model.centroids.write.mode("overwrite").parquet(s"$dir/centroids")
+      graft.io.Markers.write(spark, dir, PqMetaMarker, geometryPin(spherical))
+      graft.io.Markers.write(spark, dir, PqBooksDigestMarker, pqDigest(pq))
+    }
+    /** The (m, subDim, spherical) geometry ([[ensureQuantizedRoot]]
+      * refuses a flag that disagrees with the index's own). */
+    override private[ops] def geometryPin(sph: Boolean): String =
+      s"${pq.m},${pq.subDim},$sph"
+    override private[ops] def artifactDigest: Option[String] =
+      Some(pqDigest(pq))
     private[ops] def healthDist(atRest: DataFrame,
                                 roundTo: Int): DataFrame =
       atRest.select(col(model.idCol), col("pq_codes"))
@@ -4321,30 +4327,6 @@ object Ann {
     }
 
   private val PqMetaMarker = "_graft_pq_meta"
-
-  /** The trained artifacts beside `encoded/`: codebooks, centroids,
-    * the (m, subDim, spherical) geometry marker, and a sha-256 digest
-    * of the codebook values (the restart pin [[ensureIvfPqRoot]]
-    * verifies — geometry alone cannot tell two trainings apart). */
-  private def writePqSideTables(spark: org.apache.spark.sql.SparkSession,
-                                dir: String, pq: PqModel,
-                                model: IvfModel,
-                                spherical: Boolean): Unit = {
-    val rows = for {
-      s <- pq.codebooks.indices
-      (code, (cid, cent)) <- pq.codebooks(s).zipWithIndex
-        .map { case (e, i) => (i, e) }
-    } yield (s, code, cid, cent.toSeq)
-    import spark.implicits._
-    rows.toDF("s", "code", "cid", "cent")
-      .write.mode("overwrite").parquet(s"$dir/codebooks")
-    model.centroids.write.mode("overwrite")
-      .parquet(s"$dir/centroids")
-    graft.io.Markers.write(spark, dir, PqMetaMarker,
-      s"${pq.m},${pq.subDim},$spherical")
-    graft.io.Markers.write(spark, dir, PqBooksDigestMarker, pqDigest(pq))
-  }
-
   private val PqBooksDigestMarker = "_graft_pq_books_digest"
 
   private def pqDigest(pq: PqModel): String = {
@@ -4356,58 +4338,6 @@ object Ann {
     md.digest(sb.toString.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
   }
-
-  /** Idempotently establish a [[writeQuantized]] PQ ROOT for streaming ingest
-    * ([[graft.streaming.Stream.ingestIvfPq]]): first call writes the
-    * trained artifacts; a restart verifies the geometry marker, the
-    * codebook digest AND the coarse-quantizer fingerprint
-    * ([[ensureIvfModelMarker]] — the PQ codebooks can be trained
-    * independently of the IVF model, so geometry+digest alone would
-    * accept a retrained coarse quantizer and assign new rows under
-    * centroids the stored `centroids/` table does not hold). No pin
-    * passes ⇒ two code spaces / cell geometries can never silently mix
-    * in one layout. */
-  def ensureIvfPqRoot(spark: org.apache.spark.sql.SparkSession,
-                      dir: String, pq: PqModel, model: IvfModel,
-                      spherical: Boolean): Unit = {
-    // spherical roots operate on NORMALIZED centroids throughout —
-    // what a stored reader probes against, what writeQuantized persists, and
-    // what the assignment fingerprint must pin
-    val stored = if (spherical) normalizeModel(model) else model
-    graft.io.Markers.read(spark, dir, PqMetaMarker) match {
-      case Some(meta) =>
-        val want = s"${pq.m},${pq.subDim},$spherical"
-        require(meta == want,
-          s"$dir pins PQ geometry $meta; this ingest carries $want — " +
-            "streaming into it would mix two code spaces")
-        val digest = graft.io.Markers.read(spark, dir,
-          PqBooksDigestMarker)
-        require(digest.contains(pqDigest(pq)),
-          s"$dir was built with different codebooks (digest mismatch) " +
-            "— a retrained quantizer cannot extend this layout")
-      case None =>
-        writePqSideTables(spark, dir, pq, stored, spherical)
-    }
-    ensureIvfModelMarker(spark, dir, stored)
-  }
-
-  /** Assign + PQ-encode in one MAP-ONLY projection (broadcast
-    * centroids, broadcast codebooks — nothing in the plan, no shuffle):
-    * the transform [[graft.streaming.Stream.ingestIvfPq]] runs per
-    * micro-batch, and exactly what [[buildIvfPq]] does at build time
-    * UNDER THE SAME METRIC — cosine assigns and encodes on normalized
-    * vectors while the stored vecCol stays RAW; any other metric
-    * assigns with itself, exactly as `buildIvfPq(…, metric)` would
-    * (a hardcoded L2 here silently landed streamed rows in different
-    * cells than the batch index for non-L2 metrics). */
-  def assignEncodePq(docs: DataFrame, vecCol: String, pq: PqModel,
-                     model: IvfModel, metric: Metric): DataFrame =
-    if (metric == Cosine) {
-      val modelN = normalizeModel(model)
-      encodePq(assign(withNormalized(docs, vecCol, "__nvec"), "__nvec",
-        modelN, L2), "__nvec", pq).drop("__nvec")
-    } else
-      encodePq(assign(docs, vecCol, model, metric), vecCol, pq)
 
   /** The trained PQ artifacts under `model`, with no rows — codebooks
     * (collected driver-side in (s, code) order: m·codes·subDim doubles,
@@ -4466,9 +4396,21 @@ object Ann {
         lit(2.0) * col("rnorm") / sqrt(size(col("bits")).cast("double")) *
           dot
     }
-    private[ops] def encode(raw: DataFrame, vecCol: String,
-                            metric: Metric): DataFrame =
-      assignQuantizeBitq(raw, vecCol, model, metric)
+    /** Assignment plus one broadcast join against the k-row centroid
+      * table for the residual; sign bits packed 1 bit/dim, rnorm
+      * rounded as the build rounds it. */
+    private[graft] def encode(raw: DataFrame, vecCol: String,
+                              metric: Metric): DataFrame = {
+      val (assigned, v) = assignPhase1(raw, vecCol, model, metric)
+      val r = zip_with(col(v).cast("array<double>"), col(model.vecCol),
+        (a, b) => a - b)
+      assigned.join(broadcast(model.centroids), model.idCol)
+        .withColumn("bits",
+          packBits(transform(r, x => when(x > 0, 1).otherwise(0))))
+        .withColumn("rnorm", round(sqrt(aggregate(transform(r, x => x * x),
+          lit(0.0), (a, x) => a + x)), 6))
+        .drop(model.vecCol, "__nvec")
+    }
     override private[ops] def pack(df: DataFrame): DataFrame =
       df.withColumn("bits", packBits(col("bits")))
     // dims from the memoized centroid array — no per-load job
@@ -4539,63 +4481,6 @@ object Ann {
 
   private val BitqMetaMarker = "_graft_bitq_meta"
 
-  /** Idempotently establish a [[writeQuantized]] 1-bit ROOT for
-    * streaming ingest ([[graft.streaming.Stream.ingestIvfBitq]]):
-    * first call writes the centroid side table and pins the spherical
-    * flag + model fingerprint; a restart with a different metric class
-    * or a retrained model is refused — sign codes are residuals
-    * AGAINST the centroids, so a new quantizer cannot extend the
-    * layout. (No bounds digest here: the centroids ARE the 1-bit
-    * quantizer, and [[ensureIvfModelMarker]] already pins them.) */
-  def ensureIvfBitqRoot(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, model: IvfModel,
-                        spherical: Boolean): Unit = {
-    val stored = if (spherical) normalizeModel(model) else model
-    graft.io.Markers.read(spark, dir, BitqMetaMarker) match {
-      case Some(meta) =>
-        require(meta == spherical.toString,
-          s"$dir pins spherical=$meta; this ingest carries $spherical — " +
-            "streaming into it would mix two residual spaces")
-      case None =>
-        stored.centroids.write.mode("overwrite")
-          .parquet(s"$dir/centroids")
-        graft.io.Markers.write(spark, dir, BitqMetaMarker,
-          spherical.toString)
-    }
-    ensureIvfModelMarker(spark, dir, stored)
-  }
-
-  /** Assign + 1-bit-encode + pack in one micro-batch transform — what
-    * [[buildIvfBitq]] does at build time under the same metric, shaped
-    * for streaming: map-only broadcast-argmin assignment plus one
-    * broadcast stream-static join against the k-row centroid table for
-    * the residual, sign bits packed 1 bit/dim. Codes and rnorm are
-    * bit-identical to the batch build's, so
-    * [[graft.streaming.Stream.ingestIvfBitq]] appends are
-    * indistinguishable at rest from [[writeQuantized]] output. */
-  def assignQuantizeBitq(docs: DataFrame, vecCol: String,
-                         model: IvfModel, metric: Metric,
-                         roundTo: Int = 6): DataFrame = {
-    val (joined, vcol) =
-      if (metric == Cosine) {
-        val modelN = normalizeModel(model)
-        (assign(withNormalized(docs, vecCol, "__nvec"), "__nvec",
-          modelN, L2).join(broadcast(modelN.centroids), modelN.idCol),
-          col("__nvec"))
-      } else
-        (assign(docs, vecCol, model, metric)
-          .join(broadcast(model.centroids), model.idCol),
-          col(vecCol).cast("array<double>"))
-    val r = zip_with(vcol, col(model.vecCol), (a, b) => a - b)
-    joined
-      .withColumn("bits",
-        packBits(transform(r, x => when(x > 0, 1).otherwise(0))))
-      .withColumn("rnorm", round(
-        sqrt(aggregate(transform(r, x => x * x), lit(0.0),
-          (a, x) => a + x)), roundTo))
-      .drop(model.vecCol, "__nvec")
-  }
-
   /** The candidate multiplier: `refine`, else the family default. */
   private def refineOf(index: QuantIndex, refine: Int,
                        metric: Metric): Int =
@@ -4618,6 +4503,18 @@ object Ann {
                           metric: Metric): (Column, Metric) =
     if (metric == Cosine) (l2NormalizeQuery(queryVec), L2)
     else (queryVec, metric)
+
+  /** [[QuantIndex.encode]]'s assignment step: cosine normalizes the
+    * rows into `__nvec` and assigns L2 on the unit sphere against
+    * `model` as is (a spherical index's model is already unit); any
+    * other metric assigns the raw column with itself. Returns the
+    * assigned rows and the column the codes encode. */
+  private def assignPhase1(raw: DataFrame, vecCol: String, model: IvfModel,
+                           metric: Metric): (DataFrame, String) =
+    if (metric == Cosine)
+      (assign(withNormalized(raw, vecCol, "__nvec"), "__nvec", model, L2),
+        "__nvec")
+    else (assign(raw, vecCol, model, metric), vecCol)
 
   /** Phase 1 of [[searchQuantized]] alone: probe `probes` cells, scan
     * the probed cells' codes, keep the top-`n` rows by (estimate, id)
@@ -4745,6 +4642,57 @@ object Ann {
     index.writeSide(dir)
   }
 
+  /** Idempotently pin the quantized root at `dir` to `index` — the
+    * build step that makes a [[writeQuantized]] root maintainable and
+    * the start step of [[graft.streaming.Stream.ingestQuantized]].
+    * First call writes the trained side tables plus the family's
+    * geometry marker (SQ and 1-bit: the spherical flag; PQ: its
+    * (m, subDim, spherical) geometry) and artifact digest (SQ bounds,
+    * PQ codebooks); a restart verifies both. Either way the
+    * coarse-quantizer fingerprint of `index.model` is pinned
+    * ([[ensureIvfModelMarker]]): neither retrained artifacts nor a
+    * retrained model can mix two code spaces in one layout. The
+    * index's model is the root's geometry as is — a spherical index
+    * holds unit centroids already, and nothing here normalizes. A
+    * PQ index carries its own flag, and a disagreeing `spherical`
+    * refuses before any write; a first spherical pin of an index
+    * whose centroids are not unit refuses too. */
+  def ensureQuantizedRoot(spark: org.apache.spark.sql.SparkSession,
+                          dir: String, index: QuantIndex,
+                          spherical: Boolean): Unit = {
+    val family = index.family
+    index.sphericalPin.foreach(s => require(s == spherical,
+      s"$dir: this ingest carries spherical=$spherical but its $family " +
+        s"index was built with spherical=$s — an index fixes its geometry"))
+    val want = index.geometryPin(spherical)
+    val digest = family.digestPin.zip(index.artifactDigest)
+    graft.io.Markers.read(spark, dir, family.marker) match {
+      case Some(meta) =>
+        require(meta == want,
+          s"$dir pins ${family.pinName}$meta; this ingest carries $want " +
+            s"— streaming into it would mix two ${family.mixes}")
+        digest.foreach { case ((marker, refusal), d) =>
+          require(graft.io.Markers.read(spark, dir, marker).contains(d),
+            s"$dir was built with $refusal")
+        }
+      case None =>
+        // SQ and 1-bit indexes carry no flag: a spherical pin of one
+        // built under another metric would encode unit rows against raw
+        // centroids, silently
+        require(!spherical || collectCentroids(index.model).forall {
+            case (_, c) => math.abs(math.sqrt(c.map(x => x * x).sum) - 1) < 1e-9
+          },
+          s"$dir: a spherical pin needs an index built under Cosine, whose " +
+            s"centroids are unit; this $family index's are not")
+        index.writeSide(dir)
+        graft.io.Markers.write(spark, dir, family.marker, want)
+        digest.foreach { case ((marker, _), d) =>
+          graft.io.Markers.write(spark, dir, marker, d)
+        }
+    }
+    ensureIvfModelMarker(spark, dir, index.model)
+  }
+
   /** `rows` plus the probed slice of the root's fresh side table
     * (none when no fresh rows exist), encoded on read under `index`'s
     * frozen artifacts. The read prunes to the probed `cells`' partition
@@ -4777,14 +4725,13 @@ object Ann {
   // appends), folded into the main layout at the next compaction.
   // Queries stay EXACTLY rebuild-equivalent: the fresh rows are
   // encoded ON READ under the root's frozen artifacts via the same
-  // transforms streaming ingest uses ([[assignQuantizeSq]] /
-  // [[assignEncodePq]] / [[assignQuantizeBitq]] — documented
+  // transform streaming ingest uses ([[QuantIndex.encode]] —
   // bit-identical to the batch build), so phase-1 candidate ordering
   // and phase-2 re-ranks are indistinguishable from a layout that had
   // always contained the rows.
 
   /** The family of the quantized root at `dir` and the spherical flag
-    * its geometry marker pins. `ensure*Root` (PQ: also
+    * its geometry marker pins. [[ensureQuantizedRoot]] (PQ: also
     * [[writeQuantized]]) writes the marker; a root written by
     * [[writeQuantized]] alone self-describes by layout instead, as
     * range roots do — SQ keeps its `bounds/` side table, 1-bit
@@ -4810,7 +4757,7 @@ object Ann {
   private def unpinnedQuantized(dir: String) = new IllegalStateException(
     s"$dir carries no SQ/PQ/1-bit geometry marker — not a pinned " +
       "quantized root; pin the layout at build time " +
-      "(writeQuantized + ensure*Root)")
+      "(writeQuantized + ensureQuantizedRoot)")
 
   private def freshPath(dir: String) = s"$dir/fresh"
 
@@ -4986,7 +4933,7 @@ object Ann {
     root.pinned
     if (!freshExists(spark, dir)) return 0L
     val fresh = spark.read.parquet(freshPath(dir)).drop("centroid_id")
-    // the at-rest form ingestIvf* appends verbatim (codes packed)
+    // the at-rest form ingestQuantized appends verbatim (codes packed)
     val encoded = root.family.artifacts(spark, dir, ivfModelAt(spark, dir))
       .encode(fresh, root.vec, root.metric)
     val mainPath = s"$dir/${root.dataSub}"

@@ -364,7 +364,7 @@ object Events {
     * layout. r38's deterministic artifacts (label-mean IVF model,
     * cell-mean codebooks) are trained BATCH-side — an ingest quantizer
     * always predates the stream — then embeddings stream through
-    * [[graft.streaming.Stream.ingestIvfPq]] (map-only assign+encode
+    * [[graft.streaming.Stream.ingestQuantized]] (map-only assign+encode
     * per micro-batch, bit-identical to the batch encode, appended
     * exactly-once into `encoded/`'s cell dirs; geometry AND codebook
     * digest pinned by markers so a retrained quantizer is refused),
@@ -388,9 +388,9 @@ object Events {
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_s12_ckpt").toString
     val input = MemoryStream[(Long, Seq[Double])]
-    val q = graft.streaming.Stream.ingestIvfPq(
-      input.toDF().toDF("vec_id", "embedding"), "embedding", idx.pq,
-      model, graft.ops.Ann.L2, dir, ckpt)
+    val q = graft.streaming.Stream.ingestQuantized(
+      input.toDF().toDF("vec_id", "embedding"), "embedding", idx,
+      graft.ops.Ann.L2, dir, ckpt)
     try {
       val batches = 3
       (0 until batches).foreach { b =>
@@ -415,7 +415,7 @@ object Events {
     * of s12 (the reference's DEFAULT index quantization is residual
     * 8-bit, spec.py:437-444): bounds/centroids trained batch-side,
     * codes streamed in three micro-batches through
-    * [[graft.streaming.Stream.ingestIvfSq]] (map-only assign +
+    * [[graft.streaming.Stream.ingestQuantized]] (map-only assign +
     * quantize + pack, bit-identical to [[graft.ops.Ann.buildIvfSq]]),
     * compactStored graduation, then
     * [[graft.ops.Ann.searchStored]] with r12's exact
@@ -437,7 +437,7 @@ object Events {
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_s13_ckpt").toString
     val input = MemoryStream[(Long, Seq[Double])]
-    val q = graft.streaming.Stream.ingestIvfSq(
+    val q = graft.streaming.Stream.ingestQuantized(
       input.toDF().toDF("vec_id", "embedding"), "embedding", idx,
       graft.ops.Ann.L2, dir, ckpt)
     try {
@@ -465,7 +465,7 @@ object Events {
     * quantized member (s12 PQ, s13 SQ): the IVF model trained
     * batch-side and pinned at the root, sign-bit residual codes + rnorm
     * streamed in three micro-batches through
-    * [[graft.streaming.Stream.ingestIvfBitq]], compactStored
+    * [[graft.streaming.Stream.ingestQuantized]], compactStored
     * graduation, then [[graft.ops.Ann.searchStored]] with r14's
     * exact parameters (shared oracle — the streamed layout must
     * reproduce the batch index bit-for-bit). */
@@ -475,6 +475,9 @@ object Events {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val e = Tables.embeddings(s, d)
     val model = graft.ops.Ann.buildIvf(e, "label", "embedding")
+    // lazy: the stream reads only the index's model
+    val idx = graft.ops.Ann.buildIvfBitq(e, "embedding", model,
+      graft.ops.Ann.L2)
     val rows = e.select(col("vec_id"),
         col("embedding").cast("array<double>"))
       .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
@@ -483,8 +486,8 @@ object Events {
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_s14_ckpt").toString
     val input = MemoryStream[(Long, Seq[Double])]
-    val q = graft.streaming.Stream.ingestIvfBitq(
-      input.toDF().toDF("vec_id", "embedding"), "embedding", model,
+    val q = graft.streaming.Stream.ingestQuantized(
+      input.toDF().toDF("vec_id", "embedding"), "embedding", idx,
       graft.ops.Ann.L2, dir, ckpt)
     try {
       val batches = 3
@@ -976,9 +979,8 @@ object Events {
       full.copy(encoded = full.encoded.filter(col("vec_id") % 2 === 0)),
       dir)
     // pin the coarse model at build time (writeQuantized pins geometry +
-    // codebook digest; the IVF fingerprint comes from ensureIvfPqRoot)
-    graft.ops.Ann.ensureIvfPqRoot(s, dir, full.pq, model,
-      spherical = false)
+    // codebook digest; the IVF fingerprint comes from ensureQuantizedRoot)
+    graft.ops.Ann.ensureQuantizedRoot(s, dir, full, spherical = false)
     val rows = e.filter(col("vec_id") % 2 === 1)
       .as[(Long, Seq[Double], Int)].collect().toSeq.sortBy(_._1)
     val ckpt = java.nio.file.Files
@@ -1051,7 +1053,7 @@ object Events {
     graft.ops.Ann.writeQuantized(
       full.copy(quantized =
         full.quantized.filter(col("vec_id") % 2 === 0)), dir)
-    graft.ops.Ann.ensureIvfSqRoot(s, dir, full, spherical = false)
+    graft.ops.Ann.ensureQuantizedRoot(s, dir, full, spherical = false)
     val rows = e.filter(col("vec_id") % 2 === 1)
       .as[(Long, Seq[Double], Int)].collect().toSeq.sortBy(_._1)
     val ckpt = java.nio.file.Files
@@ -1117,7 +1119,7 @@ object Events {
     graft.ops.Ann.writeQuantized(
       full.copy(quantized =
         full.quantized.filter(col("vec_id") % 2 === 0)), dir)
-    graft.ops.Ann.ensureIvfSqRoot(s, dir, full, spherical = false)
+    graft.ops.Ann.ensureQuantizedRoot(s, dir, full, spherical = false)
     val rows = e.filter(col("vec_id") % 2 === 1)
       .as[(Long, Seq[Double], Int)].collect().toSeq.sortBy(_._1)
     val ckpt = java.nio.file.Files
@@ -1183,8 +1185,7 @@ object Events {
     graft.ops.Ann.writeQuantized(
       full.copy(quantized =
         full.quantized.filter(col("vec_id") % 2 === 0)), dir)
-    graft.ops.Ann.ensureIvfBitqRoot(s, dir, full.model,
-      spherical = false)
+    graft.ops.Ann.ensureQuantizedRoot(s, dir, full, spherical = false)
     val rows = e.filter(col("vec_id") % 2 === 1)
       .as[(Long, Seq[Double], Int)].collect().toSeq.sortBy(_._1)
     val ckpt = java.nio.file.Files
@@ -1420,7 +1421,7 @@ object Events {
     graft.ops.Ann.writeQuantized(
       full.copy(quantized =
         full.quantized.filter(col("vec_id") % 2 === 0)), dir)
-    graft.ops.Ann.ensureIvfSqRoot(s, dir, full, spherical = false)
+    graft.ops.Ann.ensureQuantizedRoot(s, dir, full, spherical = false)
     val rows = e.filter(col("vec_id") % 2 === 1)
       .as[(Long, Seq[Double], Int)].collect().toSeq.sortBy(_._1)
     // SF-relative threshold from the observed full-corpus occupancy

@@ -103,15 +103,31 @@ object Stream {
                 model: graft.ops.Ann.IvfModel,
                 metric: graft.ops.Ann.Metric, dir: String,
                 checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    requireStreamableLayout(vectors.sparkSession, dir)
+      : org.apache.spark.sql.streaming.StreamingQuery =
     // pin the assignment model: a restart with a retrained model would
     // silently mix two cell geometries in one layout (the IVF twin of
     // the BM25 bucket-modulus marker)
-    graft.ops.Ann.ensureIvfModelMarker(vectors.sparkSession, dir, model)
-    graft.ops.Ann.assign(vectors, vecCol, model, metric)
-      .writeStream
-      .partitionBy(model.idCol)
+    startFileSink(vectors.sparkSession, dir, checkpoint,
+        Some(model.idCol))(
+      graft.ops.Ann.ensureIvfModelMarker(vectors.sparkSession, dir, model))(
+      graft.ops.Ann.assign(vectors, vecCol, model, metric))
+
+  /** The start order of every file-sink ingest, written once: refuse a
+    * `dir` that already holds batch data ([[requireStreamableLayout]]),
+    * then `pin` the layout's markers and side tables, then start
+    * `rows` appending exactly-once into `dir` through the file-sink
+    * commit log, partitioned by `partitionCol` when given. Refusing
+    * first is what keeps a refused start from writing anything: a pin
+    * run first would already have overwritten a batch root's side
+    * tables and markers. */
+  private def startFileSink(spark: org.apache.spark.sql.SparkSession,
+                            dir: String, checkpoint: String,
+                            partitionCol: Option[String])(pin: => Unit)(
+      rows: => DataFrame): org.apache.spark.sql.streaming.StreamingQuery = {
+    requireStreamableLayout(spark, dir)
+    pin
+    val w = rows.writeStream
+    partitionCol.fold(w)(w.partitionBy(_))
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .format("parquet")
@@ -163,23 +179,16 @@ object Stream {
                  tok: graft.functions.Tokenizers.Tokenizer =
                    graft.functions.Tokenizers.Simple,
                  buckets: Int = 64)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : org.apache.spark.sql.streaming.StreamingQuery =
     // the layout is self-describing: record the bucket modulus AND
     // tokenizer up front so loads never guess either — and REFUSE to
     // restart ingest with a different modulus or tokenizer over an
     // existing layout (mixed moduli silently drop terms; mixed
     // tokenizers silently mismatch queries)
-    requireStreamableLayout(docs.sparkSession, dir)
-    graft.ops.Bm25.ensureBucketsMarker(docs.sparkSession, dir, buckets,
-      tok.name)
-    graft.ops.Bm25.postingsOf(docs, idCol, textCol, tok, buckets)
-      .writeStream
-      .partitionBy("bucket")
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .format("parquet")
-      .start(dir)
-  }
+    startFileSink(docs.sparkSession, dir, checkpoint, Some("bucket"))(
+      graft.ops.Bm25.ensureBucketsMarker(docs.sparkSession, dir, buckets,
+        tok.name))(
+      graft.ops.Bm25.postingsOf(docs, idCol, textCol, tok, buckets))
 
   /** Continuous sparse-index ingest — the third of the at-rest ingest
     * trio ([[ingestIvf]] dense cells, [[ingestBm25]] keyword buckets):
@@ -194,22 +203,15 @@ object Stream {
   def ingestSparse(docs: DataFrame, idCol: String, idxCol: String,
                    valCol: String, dir: String, checkpoint: String,
                    buckets: Int = 64)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    requireStreamableLayout(docs.sparkSession, dir)
+      : org.apache.spark.sql.streaming.StreamingQuery =
     // pin the modulus: a restart with a different one would mix two
     // partition geometries in one layout (the sparse twin of the BM25
     // modulus rule)
-    graft.functions.Sparse.ensureBucketsMarker(docs.sparkSession, dir,
-      buckets)
-    graft.functions.Sparse.invertedPostings(docs, idCol, idxCol, valCol)
-      .withColumn("__b", pmod(col("bucket"), lit(buckets)))
-      .writeStream
-      .partitionBy("__b")
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .format("parquet")
-      .start(dir)
-  }
+    startFileSink(docs.sparkSession, dir, checkpoint, Some("__b"))(
+      graft.functions.Sparse.ensureBucketsMarker(docs.sparkSession, dir,
+        buckets))(
+      graft.functions.Sparse.invertedPostings(docs, idCol, idxCol, valCol)
+        .withColumn("__b", pmod(col("bucket"), lit(buckets))))
 
   /** Continuous MULTIVEC-index ingest — the fourth of the at-rest
     * ingest family ([[ingestIvf]] dense cells, [[ingestBm25]] keyword
@@ -237,112 +239,37 @@ object Stream {
         graft.ops.Ann.tokenMeanCol(col(mvCol), dim)),
       meanCol, model, graft.ops.Ann.Cosine, dir, checkpoint)
 
-  /** Continuous PQ-encoded ingest — the QUANTIZED member of the
-    * at-rest ingest family (dense cells / BM25 buckets / sparse
-    * buckets / maxsim cells were the other four): each vector assigns
-    * to its cell and encodes to positional codes in one map-only
-    * projection (broadcast centroids + broadcast codebooks —
-    * [[graft.ops.Ann.assignEncodePq]], bit-identical to a batch encode
-    * under the same artifacts), then appends exactly-once into
-    * `dir/encoded`'s cell-partitioned layout via the file-sink commit
-    * log. The TRAINED artifacts (codebooks, centroids, geometry
-    * marker, codebook digest) are established at the root before the
-    * stream starts ([[graft.ops.Ann.ensureIvfPqRoot]]); a restart
-    * with different geometry OR retrained codebooks is refused — two
-    * code spaces can never mix in one layout. After
-    * [[compactStored]](`dir/encoded`, "centroid_id") graduation the
-    * root IS a [[graft.ops.Ann.writeQuantized]] layout:
+  /** Continuous quantized ingest (SQ / PQ / 1-bit) — the QUANTIZED
+    * member of the at-rest ingest family (the reference's vchordrq
+    * keeps quantized codes inside IVF cells, spec.py:437-444): each
+    * vector assigns to its cell and encodes under `index`'s trained
+    * artifacts ([[graft.ops.Ann.QuantIndex.encode]] — map-only apart
+    * from a broadcast join against the ≤k-row side table,
+    * bit-identical to the batch build's codes), then appends
+    * exactly-once into the family's cell-partitioned data subdir
+    * (`encoded/` for PQ, `quantized/` otherwise). The trained
+    * artifacts, geometry marker, artifact digest and model
+    * fingerprint are pinned at the root before the stream starts
+    * ([[graft.ops.Ann.ensureQuantizedRoot]]); a restart with another
+    * geometry, retrained artifacts or a retrained model is refused,
+    * and so is a start into a data subdir that holds batch rows —
+    * before anything is written. `metric` is the metric `index` was
+    * built under (cosine ⇒ spherical, the flag the root pins). After
+    * [[compactStored]](`dir/<data subdir>`, "centroid_id") graduation
+    * the root IS a [[graft.ops.Ann.writeQuantized]] layout:
     * [[graft.ops.Ann.searchStored]] and `attachStoredIndex` work
-    * unchanged. `metric` is [[graft.ops.Ann.buildIvfPq]]'s metric
-    * argument verbatim (cosine ⇒ spherical: normalization happens
-    * inside the transform over the RAW un-normalized `model`, exactly
-    * as the batch build does). */
-  def ingestIvfPq(vectors: DataFrame, vecCol: String,
-                  pq: graft.ops.Ann.PqModel,
-                  model: graft.ops.Ann.IvfModel,
-                  metric: graft.ops.Ann.Metric,
-                  dir: String, checkpoint: String)
+    * unchanged. */
+  def ingestQuantized(vectors: DataFrame, vecCol: String,
+                      index: graft.ops.Ann.QuantIndex,
+                      metric: graft.ops.Ann.Metric,
+                      dir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = vectors.sparkSession
-    graft.ops.Ann.ensureIvfPqRoot(spark, dir, pq, model,
-      spherical = metric == graft.ops.Ann.Cosine)
-    val encDir = s"$dir/encoded"
-    requireStreamableLayout(spark, encDir)
-    graft.ops.Ann.assignEncodePq(vectors, vecCol, pq, model, metric)
-      .writeStream
-      .partitionBy(model.idCol)
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .format("parquet")
-      .start(encDir)
-  }
-
-  /** Continuous SQ-quantized ingest — the 8-bit member of the quantized
-    * at-rest ingest family ([[ingestIvfPq]] is the PQ member; the
-    * reference's DEFAULT index quantization is residual 8-bit,
-    * spec.py:437-444): each vector assigns to its cell, quantizes
-    * against the cell's trained bounds and packs to 1 byte/dim
-    * ([[graft.ops.Ann.assignQuantizeSq]] — a map-only projection plus
-    * one broadcast stream-static join against the ≤k-row bounds
-    * table, bit-identical to the batch build), then appends
-    * exactly-once into `dir/quantized`'s cell-partitioned layout. The
-    * trained artifacts (bounds, centroids, spherical flag, bounds
-    * digest, model fingerprint) are established at the root before
-    * the stream starts ([[graft.ops.Ann.ensureIvfSqRoot]]); a restart
-    * with retrained bounds or a different model is refused. After
-    * [[compactStored]](`dir/quantized`, "centroid_id") graduation the
-    * root IS a [[graft.ops.Ann.writeQuantized]] layout:
-    * [[graft.ops.Ann.searchStored]] works unchanged. */
-  def ingestIvfSq(vectors: DataFrame, vecCol: String,
-                  index: graft.ops.Ann.IvfSqIndex,
-                  metric: graft.ops.Ann.Metric,
-                  dir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = vectors.sparkSession
-    graft.ops.Ann.ensureIvfSqRoot(spark, dir, index,
-      spherical = metric == graft.ops.Ann.Cosine)
-    val qDir = s"$dir/quantized"
-    requireStreamableLayout(spark, qDir)
-    graft.ops.Ann.assignQuantizeSq(vectors, vecCol, index, metric)
-      .writeStream
-      .partitionBy(index.model.idCol)
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .format("parquet")
-      .start(qDir)
-  }
-
-  /** Continuous 1-bit ingest — the third and last quantized member of
-    * the at-rest ingest family ([[ingestIvfPq]] PQ, [[ingestIvfSq]]
-    * SQ; the reference's vchordrq couples RaBitQ-style 1-bit residual
-    * codes to its IVF cells, spec.py:437-444): each vector assigns to
-    * its cell, takes the residual against the cell centroid via one
-    * broadcast stream-static join, and lands sign bits packed
-    * 1 bit/dim plus the rounded residual norm
-    * ([[graft.ops.Ann.assignQuantizeBitq]] — bit-identical to the
-    * batch build), appended exactly-once into `dir/quantized`. The
-    * root pins the spherical flag and the model fingerprint
-    * ([[graft.ops.Ann.ensureIvfBitqRoot]]); a retrained model is
-    * refused. After [[compactStored]](`dir/quantized`, "centroid_id")
-    * graduation the root IS a [[graft.ops.Ann.writeQuantized]] layout:
-    * [[graft.ops.Ann.searchStored]] works unchanged. */
-  def ingestIvfBitq(vectors: DataFrame, vecCol: String,
-                    model: graft.ops.Ann.IvfModel,
-                    metric: graft.ops.Ann.Metric,
-                    dir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = vectors.sparkSession
-    graft.ops.Ann.ensureIvfBitqRoot(spark, dir, model,
-      spherical = metric == graft.ops.Ann.Cosine)
-    val qDir = s"$dir/quantized"
-    requireStreamableLayout(spark, qDir)
-    graft.ops.Ann.assignQuantizeBitq(vectors, vecCol, model, metric)
-      .writeStream
-      .partitionBy(model.idCol)
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .format("parquet")
-      .start(qDir)
+    startFileSink(spark, s"$dir/${index.family.dataSub}", checkpoint,
+        Some(index.model.idCol))(
+      graft.ops.Ann.ensureQuantizedRoot(spark, dir, index,
+        spherical = metric == graft.ops.Ann.Cosine))(
+      index.encode(vectors, vecCol, metric))
   }
 
   /** Graduate a streamed-ingest range root: `root/rows` was grown by
@@ -372,26 +299,6 @@ object Stream {
     n
   }
 
-  /** Compact a cell/bucket-partitioned at-rest layout whose continuous
-    * micro-batch appends ([[ingestIvf]] / [[ingestBm25]]) have
-    * accumulated many small files — rewrite over-threshold cell
-    * directories to one file per cell with the stage-and-swap pattern
-    * of the stored delete (write survivors to a `_`-prefixed staging
-    * subdir invisible to readers, atomic per-cell rename into place).
-    *
-    * On a STREAMING-grown dir (`_spark_metadata` commit log present)
-    * this is the GRADUATION to a batch layout: stop the ingest query
-    * first; every cell is rewritten from the commit log's authoritative
-    * file view (uncommitted stragglers are dropped), and the log is
-    * removed — after which the layout takes batch appends, stored
-    * deletes ([[graft.ops.Ann.deleteStored]]), and
-    * `attachStoredIndex`. Restarting a file-sink stream INTO a
-    * compacted dir is not supported (its fresh commit log would hide
-    * the compacted files): continue growth with batch appends or a new
-    * layout dir. On a batch dir only cells above `maxFilesPerCell` are
-    * touched, so periodic compaction costs only the hot cells' bytes.
-    *
-    * Returns the number of rewritten cell directories. */
   /** Continuous ingest into a COMPOSED matryoshka-IVF root
     * ([[graft.ops.Ann.writeMatryoshkaIvf]]'s streamed twin — the
     * sixth lifecycle form of the composed layout, next to the flat
@@ -420,27 +327,21 @@ object Stream {
     // rewriting centroids/ first would pollute an unrelated batch dir
     // (Ann.cellRoot would then misroute it) or, worse, tear
     // down a healthy graduated root's centroids before refusing
-    requireStreamableLayout(spark, s"$dir/rows")
-    // the ONE marker composer (Ann.matryoshkaMarker) — this path and
-    // the batch write cannot drift
-    val want = graft.ops.Ann.matryoshkaMarker(dims, metric)
-    graft.io.Markers.read(spark, dir, "_graft_matryoshka_ivf") match {
-      case None => ()
-      case Some(m) => require(m == want,
-        s"ingestMatryoshkaIvf: $dir is pinned to '$m' but this ingest " +
-          s"slices '$want' — one layout, one prefix geometry")
-    }
-    graft.ops.Ann.ensureIvfModelMarker(spark, dir, model)
-    graft.io.Markers.write(spark, dir, "_graft_matryoshka_ivf", want)
-    model.centroids.write.mode("overwrite").parquet(s"$dir/centroids")
-    graft.ops.Ann.matryoshkaIvfRows(vectors, idCol, vecCol, dims,
-        model, metric, Nil)
-      .writeStream
-      .partitionBy(model.idCol)
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .format("parquet")
-      .start(s"$dir/rows")
+    startFileSink(spark, s"$dir/rows", checkpoint, Some(model.idCol)) {
+      // the ONE marker composer (Ann.matryoshkaMarker) — this path and
+      // the batch write cannot drift
+      val want = graft.ops.Ann.matryoshkaMarker(dims, metric)
+      graft.io.Markers.read(spark, dir, "_graft_matryoshka_ivf") match {
+        case None => ()
+        case Some(m) => require(m == want,
+          s"ingestMatryoshkaIvf: $dir is pinned to '$m' but this ingest " +
+            s"slices '$want' — one layout, one prefix geometry")
+      }
+      graft.ops.Ann.ensureIvfModelMarker(spark, dir, model)
+      graft.io.Markers.write(spark, dir, "_graft_matryoshka_ivf", want)
+      model.centroids.write.mode("overwrite").parquet(s"$dir/centroids")
+    }(graft.ops.Ann.matryoshkaIvfRows(vectors, idCol, vecCol, dims,
+      model, metric, Nil))
   }
 
   /** Continuous APPEND into a GRADUATED dense-cell layout
@@ -716,7 +617,8 @@ object Stream {
     * land RAW in the root's fresh side table
     * ([[graft.ops.Ann.appendIdempotent]] — id-keyed replay-safe,
     * existence probe pruned to touched cells of fresh AND main), are
-    * encoded ON READ by the `*StoredFresh` searches, and fold into
+    * encoded ON READ by [[graft.ops.Ann.searchStored]] and
+    * [[graft.ops.Ann.knnJoinQuantizedFresh]], and fold into
     * the main layout at [[graft.ops.Ann.compactQuantizedFresh]].
     * Fails at START, not first batch, when `root` carries no
     * quantized geometry marker or no pinned IVF model.
@@ -790,19 +692,13 @@ object Stream {
                        dir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = vectors.sparkSession
-    graft.ops.Ann.ensureMatryoshkaRoot(spark, dir, dims)
-    val rowsDir = s"$dir/rows"
-    requireStreamableLayout(spark, rowsDir)
     val v = col(vecCol).cast("array<double>")
-    vectors.select(col(idCol),
+    startFileSink(spark, s"$dir/rows", checkpoint, None)(
+      graft.ops.Ann.ensureMatryoshkaRoot(spark, dir, dims))(
+      vectors.select(col(idCol),
         org.apache.spark.sql.functions.slice(v, lit(1), lit(dims))
           .as("emb_pre"),
-        v.as("emb_full"))
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .format("parquet")
-      .start(rowsDir)
+        v.as("emb_full")))
   }
 
   /** Graduate a FLAT (unpartitioned) streamed layout — the
@@ -840,6 +736,26 @@ object Stream {
       !f.getPath.getName.startsWith("."))
   }
 
+  /** Compact a cell/bucket-partitioned at-rest layout whose continuous
+    * micro-batch appends ([[ingestIvf]] / [[ingestBm25]]) have
+    * accumulated many small files — rewrite over-threshold cell
+    * directories to one file per cell with the stage-and-swap pattern
+    * of the stored delete (write survivors to a `_`-prefixed staging
+    * subdir invisible to readers, atomic per-cell rename into place).
+    *
+    * On a STREAMING-grown dir (`_spark_metadata` commit log present)
+    * this is the GRADUATION to a batch layout: stop the ingest query
+    * first; every cell is rewritten from the commit log's authoritative
+    * file view (uncommitted stragglers are dropped), and the log is
+    * removed — after which the layout takes batch appends, stored
+    * deletes ([[graft.ops.Ann.deleteStored]]), and
+    * `attachStoredIndex`. Restarting a file-sink stream INTO a
+    * compacted dir is not supported (its fresh commit log would hide
+    * the compacted files): continue growth with batch appends or a new
+    * layout dir. On a batch dir only cells above `maxFilesPerCell` are
+    * touched, so periodic compaction costs only the hot cells' bytes.
+    *
+    * Returns the number of rewritten cell directories. */
   def compactStored(spark: org.apache.spark.sql.SparkSession, dir: String,
                     cellCol: String, maxFilesPerCell: Int = 4): Long = {
     val root = new org.apache.hadoop.fs.Path(dir)

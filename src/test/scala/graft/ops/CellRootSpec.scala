@@ -42,20 +42,19 @@ class CellRootSpec extends SparkSpecBase {
   private def sq(pin: Boolean)(dir: String): Unit = {
     val index = Ann.buildIvfSq(docs, "embedding", model, Ann.L2)
     Ann.writeQuantized(index, dir)
-    if (pin) Ann.ensureIvfSqRoot(spark, dir, index, spherical = false)
+    if (pin) Ann.ensureQuantizedRoot(spark, dir, index, spherical = false)
   }
 
   private def pq(pin: Boolean)(dir: String): Unit = {
     val index = Ann.buildIvfPq(docs, "embedding", model, m = 2, Ann.L2)
     Ann.writeQuantized(index, dir)
-    if (pin) Ann.ensureIvfPqRoot(spark, dir, index.pq, index.model,
-      spherical = false)
+    if (pin) Ann.ensureQuantizedRoot(spark, dir, index, spherical = false)
   }
 
   private def bitq(pin: Boolean)(dir: String): Unit = {
     val index = Ann.buildIvfBitq(docs, "embedding", model, Ann.L2)
     Ann.writeQuantized(index, dir)
-    if (pin) Ann.ensureIvfBitqRoot(spark, dir, model, spherical = false)
+    if (pin) Ann.ensureQuantizedRoot(spark, dir, index, spherical = false)
   }
 
   import Ann.CellRoot._

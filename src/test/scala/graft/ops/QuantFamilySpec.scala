@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 /** The one quantized surface over every [[Ann.QuantFamily]], SQ / PQ /
   * 1-bit × L2 / cosine: the batch join's per-query rows equal the
   * single-query search, a stored search over a written root equals the
-  * in-memory search, and a root written without its `ensure*Root`
-  * marker is still detected (by layout) and searched. */
+  * in-memory search, and a root written without its
+  * `ensureQuantizedRoot` marker is still detected (by layout) and
+  * searched. */
 class QuantFamilySpec extends SparkSpecBase {
 
   private val rng = new scala.util.Random(23)
@@ -61,11 +62,8 @@ class QuantFamilySpec extends SparkSpecBase {
   /** Pin a written root's spherical flag (PQ's write pins it already). */
   private def pin(index: Ann.QuantIndex, metric: Ann.Metric,
                   dir: String): Unit = index match {
-    case sq: Ann.IvfSqIndex =>
-      Ann.ensureIvfSqRoot(spark, dir, sq, metric == Ann.Cosine)
-    case _: Ann.IvfBitIndex =>
-      Ann.ensureIvfBitqRoot(spark, dir,
-        Ann.buildIvf(df, "label", "embedding"), metric == Ann.Cosine)
+    case _: Ann.IvfSqIndex | _: Ann.IvfBitIndex =>
+      Ann.ensureQuantizedRoot(spark, dir, index, metric == Ann.Cosine)
     case _: Ann.IvfPqIndex => ()
   }
 

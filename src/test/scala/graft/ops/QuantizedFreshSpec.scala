@@ -54,7 +54,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-sqfresh").toString
     Ann.writeQuantized(idx, dir)
-    Ann.ensureIvfSqRoot(sp, dir, idx, spherical = false)
+    Ann.ensureQuantizedRoot(sp, dir, idx, spherical = false)
     // append the odd half in two batches
     val n1 = Ann.appendIdempotent(
       Ann.cellRoot(sp, dir, Some("embedding")),
@@ -105,10 +105,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-pqfresh").toString
     Ann.writeQuantized(idx, dir)
-    // ensure* takes the RAW model (it normalizes internally for
-    // spherical roots — idx.model is already normalized, and unit
-    // vectors re-normalize to different bits)
-    Ann.ensureIvfPqRoot(sp, dir, idx.pq, model, spherical = true)
+    Ann.ensureQuantizedRoot(sp, dir, idx, spherical = true)
     assert(Ann.appendIdempotent(
       Ann.cellRoot(sp, dir, Some("embedding")),
       odd, "vec_id") == 30L)
@@ -132,14 +129,14 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-bitqfresh").toString
     Ann.writeQuantized(idx, dir)
-    Ann.ensureIvfBitqRoot(sp, dir, idx.model, spherical = false)
+    Ann.ensureQuantizedRoot(sp, dir, idx, spherical = false)
     assert(Ann.appendIdempotent(
       Ann.cellRoot(sp, dir, Some("embedding")),
       odd, "vec_id") == 30L)
     val got = ids(Ann.searchStored(root(dir), "vec_id", q, 2, 8, refine = 8))
     assert(got == want,
       s"1-bit fresh-aware search diverged:\ngot  $got\nwant $want")
-    // compaction folds the 1-bit family too (assignQuantizeBitq packs
+    // compaction folds the 1-bit family too (its encode packs
     // internally — a double-pack here once crashed this path) and the
     // folded layout answers identically under BOTH searches
     assert(Ann.compactQuantizedFresh(root(dir), "vec_id") == 30L)
@@ -169,7 +166,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
       .createTempDirectory("graft-sqfresh-filt").toString
     Ann.writeQuantized(fullSq.copy(quantized =
       fullSq.quantized.filter(col("vec_id") % 2 === 0)), dir)
-    Ann.ensureIvfSqRoot(sp, dir, fullSq, spherical = false)
+    Ann.ensureQuantizedRoot(sp, dir, fullSq, spherical = false)
     assert(Ann.appendIdempotent(
       Ann.cellRoot(sp, dir, Some("embedding")),
       odd, "vec_id") == 30L)
@@ -212,7 +209,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
       .createTempDirectory("graft-pqfresh-filt").toString
     Ann.writeQuantized(fullPq.copy(encoded =
       fullPq.encoded.filter(col("vec_id") % 2 === 0)), dirPq)
-    Ann.ensureIvfPqRoot(sp, dirPq, fullPq.pq, model, spherical = true)
+    Ann.ensureQuantizedRoot(sp, dirPq, fullPq, spherical = true)
     assert(Ann.appendIdempotent(
       Ann.cellRoot(sp, dirPq, Some("embedding")),
       odd, "vec_id") == 30L)
@@ -230,7 +227,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
       .createTempDirectory("graft-bitqfresh-filt").toString
     Ann.writeQuantized(fullBq.copy(quantized =
       fullBq.quantized.filter(col("vec_id") % 2 === 0)), dirBq)
-    Ann.ensureIvfBitqRoot(sp, dirBq, fullBq.model, spherical = false)
+    Ann.ensureQuantizedRoot(sp, dirBq, fullBq, spherical = false)
     assert(Ann.appendIdempotent(
       Ann.cellRoot(sp, dirBq, Some("embedding")),
       odd, "vec_id") == 30L)
@@ -249,7 +246,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-fresh-narrow").toString
     Ann.writeQuantized(idx, dir)
-    Ann.ensureIvfSqRoot(sp, dir, idx, spherical = false)
+    Ann.ensureQuantizedRoot(sp, dir, idx, spherical = false)
     // fresh ids (the root holds the full corpus here, so same-id rows
     // would dedup away before the schema check) and a MISSING doc col
     val narrow = odd.drop("label")
@@ -283,7 +280,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
       .createTempDirectory("graft-freshdel").toString
     Ann.writeQuantized(idx.copy(quantized =
       idx.quantized.filter(col("vec_id") % 2 === 0)), dir)
-    Ann.ensureIvfSqRoot(sp, dir, idx, spherical = false)
+    Ann.ensureQuantizedRoot(sp, dir, idx, spherical = false)
     assert(Ann.appendIdempotent(
       Ann.cellRoot(sp, dir, Some("embedding")),
       odd, "vec_id") == 30L)
@@ -338,7 +335,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-sqmerge").toString
     Ann.writeQuantized(fullSq, dir)
-    Ann.ensureIvfSqRoot(sp, dir, fullSq, spherical = false)
+    Ann.ensureQuantizedRoot(sp, dir, fullSq, spherical = false)
     drain("quantized", dir)
     val merged = Ann.mergeUnderfull(Ann.cellRoot(sp, dir, Some("embedding")),
       minRows = 5)
@@ -354,7 +351,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     assert(sp.read.parquet(s"$dir/quantized")
       .filter(col("codes").isNull).count() === 0L)
     // bounds stayed FROZEN (digest pin survives a restart probe)
-    Ann.ensureIvfSqRoot(sp, dir,
+    Ann.ensureQuantizedRoot(sp, dir,
       fullSq.copy(model = Ann.IvfModel(
         sp.read.parquet(s"$dir/centroids"), "centroid_id", "centroid")),
       spherical = false)
@@ -401,7 +398,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val dirBq = java.nio.file.Files
       .createTempDirectory("graft-bqmerge").toString
     Ann.writeQuantized(fullBq, dirBq)
-    Ann.ensureIvfBitqRoot(sp, dirBq, fullBq.model, spherical = false)
+    Ann.ensureQuantizedRoot(sp, dirBq, fullBq, spherical = false)
     drain("quantized", dirBq)
     assert(Ann.mergeUnderfull(Ann.cellRoot(sp, dirBq, Some("embedding")),
       minRows = 5).values.sum === 2L)
@@ -424,7 +421,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-sqsplit").toString
     Ann.writeQuantized(fullSq, dir)
-    Ann.ensureIvfSqRoot(sp, dir, fullSq, spherical = false)
+    Ann.ensureQuantizedRoot(sp, dir, fullSq, spherical = false)
     def codeBytes(): Map[Long, Seq[Byte]] =
       sp.read.parquet(s"$dir/quantized")
         .select(col("vec_id"), col("codes")).collect()
@@ -475,7 +472,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val dirBq = java.nio.file.Files
       .createTempDirectory("graft-bqsplit").toString
     Ann.writeQuantized(fullBq, dirBq)
-    Ann.ensureIvfBitqRoot(sp, dirBq, fullBq.model, spherical = false)
+    Ann.ensureQuantizedRoot(sp, dirBq, fullBq, spherical = false)
     assert(Ann.splitOverfull(Ann.cellRoot(sp, dirBq, Some("embedding")),
       maxRows = 30).values.head.size === 2)
     assert(ids(Ann.searchStored(root(dirBq), "vec_id", q, 2, 8,
@@ -506,7 +503,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-sqdrift").toString
     Ann.writeQuantized(fullSq, dir)
-    Ann.ensureIvfSqRoot(sp, dir, fullSq, spherical = false)
+    Ann.ensureQuantizedRoot(sp, dir, fullSq, spherical = false)
     def cellOf(id: Long) = sp.read.parquet(s"$dir/quantized")
       .filter(col("vec_id") === id)
       .select(col("centroid_id").cast("long")).head().getLong(0)
@@ -547,7 +544,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-fresh-retrain").toString
     Ann.writeQuantized(idx, dir)
-    Ann.ensureIvfSqRoot(sp, dir, idx, spherical = false)
+    Ann.ensureQuantizedRoot(sp, dir, idx, spherical = false)
     val retrained = Ann.buildIvf(
       df.withColumn("label", (col("label") + 1) % 3), "label",
       "embedding")
@@ -563,7 +560,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val dir2 = java.nio.file.Files
       .createTempDirectory("graft-fresh-metric").toString
     Ann.writeQuantized(idx, dir2)
-    Ann.ensureIvfSqRoot(sp, dir2, idx, spherical = false)
+    Ann.ensureQuantizedRoot(sp, dir2, idx, spherical = false)
     val queries = {
       import sp.implicits._
       Seq((7L, q)).toDF("q_id", "qv")
@@ -586,7 +583,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-fresh-policy").toString
     Ann.writeQuantized(idx, dir)
-    Ann.ensureIvfSqRoot(sp, dir, idx, spherical = false)
+    Ann.ensureQuantizedRoot(sp, dir, idx, spherical = false)
     def search() = ids(Ann.searchStored(root(dir), "vec_id", q, 2, 8,
         refine = 5))
     // no fresh side at all → None (nothing to decide)
@@ -663,7 +660,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
         .createTempDirectory("graft-sqfreshb").toString
       Ann.writeQuantized(full.copy(quantized =
         full.quantized.filter(col("vec_id") % 2 === 0)), dir)
-      Ann.ensureIvfSqRoot(sp, dir, full, spherical = false)
+      Ann.ensureQuantizedRoot(sp, dir, full, spherical = false)
       assert(Ann.appendIdempotent(
         Ann.cellRoot(sp, dir, Some("embedding")),
         odd, "vec_id") == 30L)
@@ -699,7 +696,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
         .createTempDirectory("graft-pqfreshb").toString
       Ann.writeQuantized(full.copy(encoded =
         full.encoded.filter(col("vec_id") % 2 === 0)), dir)
-      Ann.ensureIvfPqRoot(sp, dir, full.pq, model, spherical = true)
+      Ann.ensureQuantizedRoot(sp, dir, full, spherical = true)
       assert(Ann.appendIdempotent(
         Ann.cellRoot(sp, dir, Some("embedding")),
         odd, "vec_id") == 30L)
@@ -721,7 +718,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
         .createTempDirectory("graft-bitqfreshb").toString
       Ann.writeQuantized(full.copy(quantized =
         full.quantized.filter(col("vec_id") % 2 === 0)), dir)
-      Ann.ensureIvfBitqRoot(sp, dir, full.model, spherical = false)
+      Ann.ensureQuantizedRoot(sp, dir, full, spherical = false)
       assert(Ann.appendIdempotent(
         Ann.cellRoot(sp, dir, Some("embedding")),
         odd, "vec_id") == 30L)

@@ -59,18 +59,18 @@ class StoredReadSpec extends SparkSpecBase {
       "vec_id", "embedding", dims = 2, model, d, metric = Ann.Cosine)),
     "SQ pinned" -> { (d: String) =>
       val index = Ann.buildIvfSq(docs, "embedding", model, Ann.L2)
-      quantized(index, Ann.ensureIvfSqRoot(spark, _, index,
+      quantized(index, Ann.ensureQuantizedRoot(spark, _, index,
         spherical = false))(d)
     },
     "PQ pinned cosine" -> { (d: String) =>
       val index = Ann.buildIvfPq(docs, "embedding", model, m = 2,
         Ann.Cosine)
-      quantized(index, Ann.ensureIvfPqRoot(spark, _, index.pq, model,
+      quantized(index, Ann.ensureQuantizedRoot(spark, _, index,
         spherical = true))(d)
     },
     "1-bit pinned" -> { (d: String) =>
       val index = Ann.buildIvfBitq(docs, "embedding", model, Ann.L2)
-      quantized(index, Ann.ensureIvfBitqRoot(spark, _, model,
+      quantized(index, Ann.ensureQuantizedRoot(spark, _, index,
         spherical = false))(d)
     },
     "SQ writeQuantized-only" -> ((d: String) => Ann.writeQuantized(
@@ -230,7 +230,12 @@ class StoredReadSpec extends SparkSpecBase {
     val composed = build("composed L2", roots.toMap.apply("composed L2"))
     val mrl = Binding.matryoshkaIvf("embedding", "vec_id", composed.dir,
       cells)
-    for (resolve <- Seq(() => probe.cents(), () => mrl.cents())) {
+    // and a range root: its radii come from the listing-keyed memo
+    // without a parquet frame, so no schema-inference job either
+    val range = Binding.rangeRoot(spark,
+      build("range", roots.toMap.apply("range")).dir, "embedding")
+    for (resolve <- Seq(() => probe.cents(), () => mrl.cents(),
+        () => range.cents())) {
       assert(resolve().length === cells) // cold: collects the centroids
       val (warm, jobs) = JobLog.of(spark)(resolve())
       assert(warm.length === cells)
@@ -252,9 +257,10 @@ class StoredReadSpec extends SparkSpecBase {
     val cold = join()
     val (warm, jobs) = JobLog.of(spark)(join())
     assert(warm.toSeq === cold.toSeq && cold.nonEmpty)
-    // the rows and radii reads' schema inference and the join's four
-    // jobs; a radii collect per call would make it 7
-    assert(jobs.length <= 6, JobLog.render(jobs))
+    // the rows read's schema inference and the join's four jobs; a
+    // radii frame per call would add its schema inference, a radii
+    // collect per call one more
+    assert(jobs.length <= 5, JobLog.render(jobs))
   }
 
   test("rangeRoot rewrite returns a row an append placed beyond its " +

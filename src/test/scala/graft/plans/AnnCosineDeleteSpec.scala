@@ -419,7 +419,7 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     val idx = Ann.buildIvfSq(reg.table(td), "v", model, Ann.L2)
     val root = Files.createTempDirectory("graft-qseat-root").toString
     Ann.writeQuantized(idx, root)
-    Ann.ensureIvfSqRoot(sp, root, idx, spherical = false)
+    Ann.ensureQuantizedRoot(sp, root, idx, spherical = false)
     // drain one cluster's cell to a single row, then the MERGE seat
     val doomed = (5 until 30 by 3).map(_.toLong).toDF("rid")
     assert(Ann.deleteStoredIds(sp, s"$root/quantized", "rid",

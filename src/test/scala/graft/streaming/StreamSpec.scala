@@ -118,8 +118,8 @@ class StreamSpec extends SparkSpecBase {
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft-stream-pq-ckpt").toString
     val input = MemoryStream[(Long, Seq[Double])]
-    val q = Stream.ingestIvfPq(input.toDF().toDF("vec_id", "embedding"),
-      "embedding", idx.pq, model, Ann.L2, dir, ckpt)
+    val q = Stream.ingestQuantized(input.toDF().toDF("vec_id", "embedding"),
+      "embedding", idx, Ann.L2, dir, ckpt)
     try {
       input.addData((10L, Seq(0.1, 0.2)), (11L, Seq(9.8, 10.1)))
       q.processAllAvailable()
@@ -136,19 +136,20 @@ class StreamSpec extends SparkSpecBase {
     assert(enc.filter(col("vec_id") === 10L)
       .select("pq_codes").head.getSeq[Int](0) === batchCodes)
     // same artifacts: restart allowed (idempotent root)
-    Ann.ensureIvfPqRoot(spark, dir, idx.pq, model, spherical = false)
+    Ann.ensureQuantizedRoot(spark, dir, idx, spherical = false)
     // retrained codebooks (same geometry): refused by digest
     val retrained = Ann.PqModel(idx.pq.m, idx.pq.subDim,
       idx.pq.codebooks.map(_.map { case (id, c) =>
         (id, c.map(_ + 1.0)) }))
     val e1 = intercept[IllegalArgumentException] {
-      Ann.ensureIvfPqRoot(spark, dir, retrained, model,
+      Ann.ensureQuantizedRoot(spark, dir, idx.copy(pq = retrained),
         spherical = false)
     }
     assert(e1.getMessage.contains("digest"))
     // different geometry: refused by the marker
     val e2 = intercept[IllegalArgumentException] {
-      Ann.ensureIvfPqRoot(spark, dir, idx.pq, model, spherical = true)
+      Ann.ensureQuantizedRoot(spark, dir, idx.copy(spherical = true),
+        spherical = true)
     }
     assert(e2.getMessage.contains("geometry"))
   }
@@ -666,7 +667,7 @@ class StreamSpec extends SparkSpecBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-sqstream").toString
     val input = MemoryStream[(Long, Seq[Double])]
-    val q = Stream.ingestIvfSq(input.toDF().toDF("vec_id", "embedding"),
+    val q = Stream.ingestQuantized(input.toDF().toDF("vec_id", "embedding"),
       "embedding", idx, Ann.L2, dir, java.nio.file.Files
         .createTempDirectory("graft-sqstream-c").toString)
     try {
@@ -676,6 +677,19 @@ class StreamSpec extends SparkSpecBase {
       input.addData(rows.drop(20).toSeq: _*)
       q.processAllAvailable()
     } finally q.stop()
+    // retrained bounds → digest mismatch → refused before any row lands
+    // (restarted before graduation: a graduated dir holds batch data,
+    // which refuses any stream start before the pin reads the digest)
+    val docs2 = docs.withColumn("embedding",
+      transform(col("embedding"), x => x * 2))
+    val idx2 = Ann.buildIvfSq(docs2, "embedding", model, Ann.L2)
+    val input3 = MemoryStream[(Long, Seq[Double])]
+    val ex = intercept[IllegalArgumentException] {
+      Stream.ingestQuantized(input3.toDF().toDF("vec_id", "embedding"),
+        "embedding", idx2, Ann.L2, dir, java.nio.file.Files
+          .createTempDirectory("graft-sqstream-c3").toString)
+    }
+    assert(ex.getMessage.contains("digest mismatch"))
     Stream.compactStored(sp, s"$dir/quantized", "centroid_id",
       maxFilesPerCell = 1)
     // the graduated layout loads as a writeQuantized SQ layout and its codes
@@ -700,17 +714,6 @@ class StreamSpec extends SparkSpecBase {
         .collect().map(_.toSeq).toSeq
     }
     assert(a === b)
-    // retrained bounds → digest mismatch → refused before any row lands
-    val docs2 = docs.withColumn("embedding",
-      transform(col("embedding"), x => x * 2))
-    val idx2 = Ann.buildIvfSq(docs2, "embedding", model, Ann.L2)
-    val input3 = MemoryStream[(Long, Seq[Double])]
-    val ex = intercept[IllegalArgumentException] {
-      Stream.ingestIvfSq(input3.toDF().toDF("vec_id", "embedding"),
-        "embedding", idx2, Ann.L2, dir, java.nio.file.Files
-          .createTempDirectory("graft-sqstream-c3").toString)
-    }
-    assert(ex.getMessage.contains("digest mismatch"))
   }
 
   test("ingestIvfBitq: streamed sign codes match the batch build's " +
@@ -726,12 +729,13 @@ class StreamSpec extends SparkSpecBase {
     val model = Ann.buildIvf(
       docs.withColumn("__cell", pmod(col("vec_id"), lit(4))),
       "__cell", "embedding")
+    val batch = Ann.buildIvfBitq(docs, "embedding", model, Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft-bitqstream").toString
     val input = MemoryStream[(Long, Seq[Double])]
-    val q = Stream.ingestIvfBitq(
+    val q = Stream.ingestQuantized(
       input.toDF().toDF("vec_id", "embedding"),
-      "embedding", model, Ann.L2, dir, java.nio.file.Files
+      "embedding", batch, Ann.L2, dir, java.nio.file.Files
         .createTempDirectory("graft-bitqstream-c").toString)
     try {
       val rows = docs.as[(Long, Seq[Double])].collect().sortBy(_._1)
@@ -744,7 +748,6 @@ class StreamSpec extends SparkSpecBase {
       maxFilesPerCell = 1)
     // the graduated layout IS a writeQuantized 1-bit layout: its packed bytes
     // equal the batch build's, row for row
-    val batch = Ann.buildIvfBitq(docs, "embedding", model, Ann.L2)
     val want = batch.quantized
       .withColumn("bits", Ann.packBits(col("bits")))
       .select("vec_id", "bits", "rnorm")
@@ -769,10 +772,10 @@ class StreamSpec extends SparkSpecBase {
     }
     assert(a === b)
     // same artifacts: restart allowed (idempotent root)
-    Ann.ensureIvfBitqRoot(sp, dir, model, spherical = false)
+    Ann.ensureQuantizedRoot(sp, dir, batch, spherical = false)
     // a cosine restart would mix two residual spaces: refused
     val e1 = intercept[IllegalArgumentException] {
-      Ann.ensureIvfBitqRoot(sp, dir, model, spherical = true)
+      Ann.ensureQuantizedRoot(sp, dir, batch, spherical = true)
     }
     assert(e1.getMessage.contains("spherical"))
     // a retrained model: refused by the fingerprint marker
@@ -782,7 +785,8 @@ class StreamSpec extends SparkSpecBase {
         .withColumn("__cell", pmod(col("vec_id"), lit(4))),
       "__cell", "embedding")
     val e2 = intercept[IllegalStateException] {
-      Ann.ensureIvfBitqRoot(sp, dir, model2, spherical = false)
+      Ann.ensureQuantizedRoot(sp, dir, batch.copy(model = model2),
+        spherical = false)
     }
     assert(e2.getMessage.contains("different IVF model"))
   }
@@ -1027,7 +1031,7 @@ class StreamSpec extends SparkSpecBase {
     val quant = tmp("graft-fam-sq")
     val sq = Ann.buildIvfSq(base, "embedding", model, Ann.L2)
     Ann.writeQuantized(sq, quant)
-    Ann.ensureIvfSqRoot(sp, quant, sq, spherical = false)
+    Ann.ensureQuantizedRoot(sp, quant, sq, spherical = false)
     val vecs = MemoryStream[(Long, Seq[Double], Int)].toDF()
       .toDF("vec_id", "embedding", "label")
     val docs = MemoryStream[(Long, Seq[Seq[Double]])].toDF()
@@ -1119,6 +1123,13 @@ class StreamSpec extends SparkSpecBase {
       input.addData(rows.take(15): _*); q.processAllAvailable()
       input.addData(rows.drop(15): _*); q.processAllAvailable()
     } finally q.stop()
+    // restart with a different prefix width must refuse (before graduation:
+    // a graduated rows/ holds batch data, which refuses any start)
+    intercept[IllegalArgumentException] {
+      Stream.ingestMatryoshka(
+        input.toDF().toDF("vec_id", "embedding"), "vec_id",
+        "embedding", dims = 3, dir, ckpt)
+    }
     assert(Stream.compactFlat(sp, s"$dir/rows") === 1L)
     assert(!new java.io.File(s"$dir/rows", "_spark_metadata").exists())
     // graduated root answers exactly like the batch write
@@ -1134,12 +1145,6 @@ class StreamSpec extends SparkSpecBase {
         "vec_id", qv, candidates = 8, k = 4)
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
     assert(stored.toSeq === batch.toSeq)
-    // restart with a different prefix width must refuse
-    intercept[IllegalArgumentException] {
-      Stream.ingestMatryoshka(
-        input.toDF().toDF("vec_id", "embedding"), "vec_id",
-        "embedding", dims = 3, dir, ckpt)
-    }
     // a stranded __old dir (crash between the two swap renames, or
     // mid-delete) must refuse the next compaction loudly
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -1148,5 +1153,31 @@ class StreamSpec extends SparkSpecBase {
     intercept[IllegalArgumentException] {
       Stream.compactFlat(sp, s"$dir/rows")
     }
+  }
+
+  test("ingestMatryoshka into a dense root refuses before it writes " +
+      "the matryoshka marker") {
+    val sp = spark
+    import sp.implicits._
+    implicit val sc = sp.sqlContext
+    import graft.ops.Ann
+    val base = (0L until 20L).map { i =>
+      val c = if (i % 2 == 0) 0.0 else 10.0
+      (i, Seq(c + (i % 5) * 0.02, c), (i % 2).toInt)
+    }.toDF("vec_id", "embedding", "label")
+    val model = Ann.buildIvf(base, "label", "embedding")
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_mrl_into_dense").toString
+    Ann.writeDenseRoot(Ann.assign(base, "embedding", model, Ann.L2),
+      "embedding", model, Ann.L2, dir)
+    val e = intercept[IllegalStateException] {
+      Stream.ingestMatryoshka(
+        MemoryStream[(Long, Seq[Double])].toDF().toDF("vec_id", "embedding"),
+        "vec_id", "embedding", dims = 1, dir, java.nio.file.Files
+          .createTempDirectory("graft_mrl_into_dense_ck").toString)
+    }
+    assert(e.getMessage.contains("holds batch data"), e.getMessage)
+    assert(!graft.io.Markers.exists(sp, dir, "_graft_matryoshka"))
+    assert(!Ann.isMatryoshkaRoot(sp, dir))
   }
 }

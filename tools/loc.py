@@ -10,12 +10,14 @@ Stream.scala`) and `object Binding` (`src/main/scala/graft/plans/
 AnnRewrite.scala`): a line inside the object's block (from its
 `object <Name> {` line to the next line that is a lone `}`) that starts
 with two spaces then `def `; members of nested types and `private` defs
-are not counted.
+are not counted. `--defs` also prints those defs' names, sorted, one
+line per object, so two checkouts can be compared by name.
 
 Run it from the root of a checkout; roots are relative to it.
 
 Usage: python3 tools/loc.py [root ...]        (default: src/main)
        python3 tools/loc.py --summary [root ...]  (totals only)
+       python3 tools/loc.py --defs [root ...]     (plus the def names)
 """
 import re
 import sys
@@ -25,7 +27,7 @@ from pathlib import Path
 OBJECTS = [("Ann", Path("src/main/scala/graft/ops/Ann.scala")),
            ("Stream", Path("src/main/scala/graft/streaming/Stream.scala")),
            ("Binding", Path("src/main/scala/graft/plans/AnnRewrite.scala"))]
-PUBLIC_DEF = re.compile(r"^  def ")
+PUBLIC_DEF = re.compile(r"^  def (\w+)")
 
 
 def code_lines(text):
@@ -66,23 +68,27 @@ def code_lines(text):
 
 
 def public_defs(name, path):
-    """Public defs in the block of top-level `object <name>` — a file
-    may declare several top-level objects."""
-    n = 0
+    """Names of the public defs in the block of top-level
+    `object <name>`, in declaration order (an overloaded name appears
+    once per def) — a file may declare several top-level objects."""
+    names = []
     inside = False
     for line in path.read_text().splitlines():
         if not inside:
             inside = line.startswith(f"object {name} ")
         elif line.rstrip() == "}":
             break
-        elif PUBLIC_DEF.match(line):
-            n += 1
-    return n
+        else:
+            m = PUBLIC_DEF.match(line)
+            if m:
+                names.append(m.group(1))
+    return names
 
 
 def main(argv):
+    flags = {"--summary", "--defs"}
     summary = "--summary" in argv
-    roots = [a for a in argv if a != "--summary"] or ["src/main"]
+    roots = [a for a in argv if a not in flags] or ["src/main"]
     for root in roots:
         files = sorted(Path(root).rglob("*.scala"))
         total = 0
@@ -94,7 +100,10 @@ def main(argv):
         print(f"{total:7d}  total code lines under {root} "
               f"({len(files)} files)")
     for name, path in OBJECTS:
-        print(f"{public_defs(name, path):7d}  public defs in object {name}")
+        defs = public_defs(name, path)
+        print(f"{len(defs):7d}  public defs in object {name}")
+        if "--defs" in argv:
+            print(f"         {name}: {' '.join(sorted(defs))}")
 
 
 if __name__ == "__main__":
