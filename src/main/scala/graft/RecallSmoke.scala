@@ -58,11 +58,10 @@ object RecallSmoke {
       val assigned = Ann.assign(e, "embedding", model, metric).persist()
       assigned.count()
       val sqBuilt = Ann.buildIvfSq(e, "embedding", model, metric)
-      val sq = Ann.IvfSqIndex(sqBuilt.quantized.persist(),
-        sqBuilt.bounds.persist(), sqBuilt.model)
+      val sq = sqBuilt.copy(quantized = sqBuilt.quantized.persist(),
+        bounds = sqBuilt.bounds.persist())
       val bitBuilt = Ann.buildIvfBitq(e, "embedding", model, metric)
-      val bitq = Ann.IvfBitIndex(bitBuilt.quantized.persist(),
-        bitBuilt.model)
+      val bitq = bitBuilt.copy(quantized = bitBuilt.quantized.persist())
 
       // exact truth: one batch kNN join under this metric
       val truth: Map[Long, Set[Long]] = Ann.knnJoin(queries, "q_id", "qv",

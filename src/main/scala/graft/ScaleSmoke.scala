@@ -1189,7 +1189,6 @@ object ScaleSmoke {
       val qmDir = java.nio.file.Files
         .createTempDirectory("graft_smoke_qmerge").toString
       ops.Ann.writeQuantized(qmIdx, qmDir)
-      ops.Ann.ensureQuantizedRoot(spark, qmDir, qmIdx, spherical = false)
       val qmRows = spark.read.parquet(s"$qmDir/quantized")
       val (drainCell, _) = qmRows
         .groupBy(col("centroid_id").cast("long")).count()
@@ -1304,7 +1303,6 @@ object ScaleSmoke {
       val sqDir = java.nio.file.Files
         .createTempDirectory("graft_smoke_sqstream").toString
       ops.Ann.writeQuantized(sqIdx, sqDir)
-      ops.Ann.ensureQuantizedRoot(spark, sqDir, sqIdx, spherical = false)
       val maxOcc = ops.Ann.assign(vecs, "embedding", sqModel, ops.Ann.L2)
         .groupBy(col("centroid_id")).count()
         .agg(max(col("count"))).head().getLong(0)
@@ -1556,7 +1554,6 @@ object ScaleSmoke {
       val sqDir = java.nio.file.Files
         .createTempDirectory("graft_smoke_apsq").toString
       ops.Ann.writeQuantized(sqIdx, sqDir)
-      ops.Ann.ensureQuantizedRoot(spark, sqDir, sqIdx, spherical = false)
       // cell-drawn like the dense row: the claim is about TOUCHED
       // cells, so the batch must demonstrably touch few
       val sqBatch = ops.Ann.assign(emb0, "embedding", sqModel,
@@ -1623,7 +1620,6 @@ object ScaleSmoke {
       val sfDir = java.nio.file.Files
         .createTempDirectory("graft_smoke_sqfresh").toString
       ops.Ann.writeQuantized(sfIdx, sfDir)
-      ops.Ann.ensureQuantizedRoot(spark, sfDir, sfIdx, spherical = false)
       val sfRoot = ops.Ann.cellRoot(spark, sfDir, Some("embedding"))
         .as[ops.Ann.CellRoot.Quantized]("scale smoke")
       val grown = ops.Ann.appendIdempotent(sfRoot, freshPart, "vec_id")

@@ -2678,16 +2678,15 @@ object Ann {
       }
     }
 
-    /** A [[writeQuantized]] root (SQ / PQ / 1-bit). `spherical` is the
-      * flag its geometry marker pins — None on a root written without
-      * [[ensureQuantizedRoot]], which resolves (deletes serve it) but
-      * refuses maintenance: an unpinned geometry must never become a
-      * maintenance target. `vecCol` is the raw vector column moved
-      * rows re-encode from. Spherical roots retrain on the unit sphere
-      * and store UNIT sub-centroids (quantized readers and assigners
-      * use disk centroids verbatim); moved rows strip their stale
-      * codes and re-encode under the receiving cell's frozen
-      * artifacts (the [[compactQuantizedFresh]] transforms); SQ
+    /** A [[writeQuantized]] or streamed root (SQ / PQ / 1-bit).
+      * `spherical` is the flag its geometry marker pins, which every
+      * read, search and maintenance step takes from here. `vecCol` is
+      * the raw vector column moved rows re-encode from. Spherical
+      * roots retrain on the unit sphere and store UNIT sub-centroids
+      * (quantized readers and assigners use disk centroids verbatim);
+      * moved rows strip their stale codes and re-encode under the
+      * receiving cell's frozen artifacts (the [[compactQuantizedFresh]]
+      * transforms); SQ
       * sub-cells inherit their parent's bounds. Every step refuses
       * while `fresh/` exists.
       *
@@ -2700,29 +2699,26 @@ object Ann {
       * count as present (a batch redelivered after a compaction must
       * append nothing), and a raw row must carry the main layout's
       * columns minus the code columns. The entry refuses a torn merge,
-      * an unpinned root, a root without an IVF model marker, and a
-      * root whose stored rows sit decisively outside their cells under
-      * the pinned geometry ([[verifyQuantizedGeometry]]). Ids are
+      * a root without an IVF model marker, and a root whose stored
+      * rows sit decisively outside their cells under the pinned
+      * geometry ([[verifyQuantizedGeometry]]). Ids are
       * immutable: a known id re-ingested with a changed vector must be
       * deleted first ([[deleteQuantizedFreshIds]] /
       * [[deleteStoredIds]]), or it lives in two cells. */
     final case class Quantized(spark: org.apache.spark.sql.SparkSession,
                                dir: String, family: QuantFamily,
-                               spherical: Option[Boolean],
+                               spherical: Boolean,
                                vecCol: Option[String])
         extends CellRoot {
       override def dataSub: String = family.dataSub
       private[ops] def kind: String = s"quantized $family"
-      /** The pinned spherical flag; refuses an unpinned root. */
-      private[graft] def pinned: Boolean =
-        spherical.getOrElse(throw unpinnedQuantized(dir))
-      /** Cosine on a pinned spherical root, L2 otherwise. */
-      def metric: Metric = if (spherical.contains(true)) Cosine else L2
+      /** Cosine on a spherical root, L2 otherwise. */
+      def metric: Metric = if (spherical) Cosine else L2
       /** The root's index — artifacts plus unpacked rows — opened
         * through [[readModel]]. */
       def readIndex: QuantIndex = indexOf(readModel)
       private def indexOf(model: IvfModel): QuantIndex = {
-        val art = family.artifacts(spark, dir, model)
+        val art = family.artifacts(spark, dir, model, spherical)
         art.withRows(art.unpack(spark.read.parquet(s"$dir/$dataSub")))
       }
       private[ops] def probeSpace(model: IvfModel, q: Seq[Double])
@@ -2748,29 +2744,27 @@ object Ann {
         throw new IllegalStateException(s"$dir is a quantized root: " +
           "moved rows re-encode from the table's vector column, and " +
           "none was named"))
-      override private[ops] def requireMaintainable(who: String): Unit = {
-        pinned
+      override private[ops] def requireMaintainable(who: String): Unit =
         require(!freshExists(spark, dir),
           s"$who: $dir carries a fresh/ side table — compact it first " +
             "(compactQuantizedFresh): a split or merge would strand " +
             "fresh rows under dissolved cells, and a codes-only audit " +
             "cannot see them")
-      }
       private[ops] def trainSpace: (DataFrame => DataFrame, String) =
-        if (pinned)
+        if (spherical)
           ((df: DataFrame) => withNormalized(df, vec, "__nv"), "__nv")
         else (identity[DataFrame] _, vec)
       override private[ops] def centroidForm: Column => Column =
-        if (pinned) l2Normalize else identity
+        if (spherical) l2Normalize else identity
       override private[ops] def inheritSide(
           newIds: Seq[(Long, Long)]): Unit =
         family.inheritSide(spark, dir, newIds)
       private[ops] def reassigner: (DataFrame, IvfModel) => DataFrame = {
-        val (v, metric) = (vec, if (pinned) Cosine else L2)
+        val v = vec
         (rows, reduced) => {
           val stored = spark.read.parquet(s"$dir/$dataSub")
           val raw = family.codeCols.foldLeft(rows)(_ drop _)
-          val encoded = family.artifacts(spark, dir, reduced)
+          val encoded = family.artifacts(spark, dir, reduced, spherical)
             .encode(raw, v, metric)
           // guard + order-normalize against the stored footer: a
           // drifted encode transform must fail HERE, not as a
@@ -2782,23 +2776,24 @@ object Ann {
       }
       private[ops] def healthDist(rows: DataFrame, model: IvfModel,
                                   roundTo: Int): DataFrame =
-        family.artifacts(spark, dir, model).healthDist(rows, roundTo)
+        family.artifacts(spark, dir, model, spherical)
+          .healthDist(rows, roundTo)
       override private[ops] def appendEntry(idCol: String): IvfModel = {
         requireNoPendingMerge(spark, dir)
-        val sph = pinned
         if (readIvfModelMarker(spark, dir).isEmpty)
           throw new IllegalStateException(
             s"appendIdempotent: $dir has no IVF model marker — pin the " +
               "build model first (ensureQuantizedRoot at write time)")
         val model = pinnedModel
         verifyQuantizedGeometry(spark, dir, dataSub,
-          spark.read.parquet(s"$dir/$dataSub"), model, sph, idCol, vec)
+          spark.read.parquet(s"$dir/$dataSub"), model, spherical, idCol,
+          vec)
         model
       }
       override private[ops] def appendRows(batch: DataFrame,
                                            model: IvfModel,
                                            idCol: String): DataFrame =
-        if (pinned)
+        if (spherical)
           assign(withNormalized(batch, vec, "__nvec"), "__nvec", model, L2)
             .drop("__nvec")
         else assign(batch, vec, model, L2)
@@ -2815,7 +2810,7 @@ object Ann {
 
   /** Resolve the maintainable cell root at `dir`, reading each family
     * marker or layout probe once, in a fixed order: the composed
-    * matryoshka-IVF marker, a quantized geometry marker or layout
+    * matryoshka-IVF marker, a quantized geometry marker
     * ([[detectQuantized]]), the dense cell-root marker, then the range
     * radii table (any swap state — a torn swap's `__old`/`_next` still
     * names the family; the actuators heal it at entry). A pending
@@ -3953,9 +3948,11 @@ object Ann {
     /** The exact-re-rank budget (candidate multiplier) for
       * `refine <= 0`. */
     def defaultRefine(metric: Metric): Int = 5
-    /** The root's trained artifacts under `model`, with no rows. */
+    /** The root's trained artifacts under `model` in the geometry its
+      * marker pins, with no rows. */
     private[ops] def artifacts(spark: org.apache.spark.sql.SparkSession,
-                               dir: String, model: IvfModel): QuantIndex
+                               dir: String, model: IvfModel,
+                               spherical: Boolean): QuantIndex
     /** A split's side-table step before its parents dissolve:
       * `newIds` are (parent cell, new sub-cell) pairs. */
     private[ops] def inheritSide(spark: org.apache.spark.sql.SparkSession,
@@ -3972,9 +3969,10 @@ object Ann {
       "different SQ bounds (digest mismatch) — retrained bounds cannot " +
         "extend this layout"))
     private[ops] def artifacts(spark: org.apache.spark.sql.SparkSession,
-                               dir: String, model: IvfModel): QuantIndex =
+                               dir: String, model: IvfModel,
+                               spherical: Boolean): QuantIndex =
       IvfSqIndex(spark.emptyDataFrame, spark.read.parquet(s"$dir/bounds"),
-        model)
+        model, spherical)
     /** Each sub-cell DUPLICATES its parent's frozen bounds row, keeping
       * every inherited code decodable; filter-out-then-union so a
       * crashed run's re-execution with the same fresh ids cannot
@@ -4011,8 +4009,10 @@ object Ann {
     override private[ops] def digestPin = Some((PqBooksDigestMarker,
       "different codebooks (digest mismatch) — a retrained quantizer " +
         "cannot extend this layout"))
+    /** Reads the flag from its own (m, subDim, spherical) marker. */
     private[ops] def artifacts(spark: org.apache.spark.sql.SparkSession,
-                               dir: String, model: IvfModel): QuantIndex =
+                               dir: String, model: IvfModel,
+                               spherical: Boolean): QuantIndex =
       loadPqArtifacts(spark, dir, model)
   }
 
@@ -4026,8 +4026,9 @@ object Ann {
     override def defaultRefine(metric: Metric): Int =
       defaultBitqRefine(metric)
     private[ops] def artifacts(spark: org.apache.spark.sql.SparkSession,
-                               dir: String, model: IvfModel): QuantIndex =
-      IvfBitIndex(spark.emptyDataFrame, model)
+                               dir: String, model: IvfModel,
+                               spherical: Boolean): QuantIndex =
+      IvfBitIndex(spark.emptyDataFrame, model, spherical)
   }
 
   /** An IVF index with a codes-only phase-1 scan — SQ
@@ -4042,13 +4043,16 @@ object Ann {
   sealed trait QuantIndex {
     def model: IvfModel
     def family: QuantFamily
+    /** True for an index built under `Cosine` (`spherical_centroids`,
+      * spec.py:437-444): unit centroids, codes over normalized rows,
+      * served by cosine queries only. Any other build is not
+      * spherical and is never served by cosine. */
+    def spherical: Boolean
     /** The doc rows plus cell id and codes, codes in scan form. */
     def rows: DataFrame
     /** This index over other rows (a filtered or fresh-augmented
       * frame of the same shape). */
     def withRows(rows: DataFrame): QuantIndex
-    /** The spherical flag the index itself pins, if it carries one. */
-    private[ops] def sphericalPin: Option[Boolean] = None
     /** The per-cell table phase 1 joins onto the probed rows. */
     private[ops] def cellSide: Option[DataFrame]
     /** Phase-1 distance estimate for the phase-1-space query `qv`. */
@@ -4074,9 +4078,8 @@ object Ann {
     private[ops] def unpack(df: DataFrame): DataFrame = df
     /** Write the trained side tables beside the code rows. */
     private[ops] def writeSide(dir: String): Unit
-    /** The family marker's value for a root pinned `spherical`. */
-    private[ops] def geometryPin(spherical: Boolean): String =
-      spherical.toString
+    /** The family marker's value: the spherical flag. */
+    private[ops] def geometryPin: String = spherical.toString
     /** The digest [[QuantFamily.digestPin]]'s marker holds. */
     private[ops] def artifactDigest: Option[String] = None
     /** (cell, `__d`) per at-rest row: the distance between the row's
@@ -4101,7 +4104,8 @@ object Ann {
     *    the probe scan happens). Exact min/max inputs, so any engine
     *    reproduces codes and distances bit-for-bit. */
   final case class IvfSqIndex(quantized: DataFrame, bounds: DataFrame,
-                              model: IvfModel) extends QuantIndex {
+                              model: IvfModel, spherical: Boolean)
+      extends QuantIndex {
     def family: QuantFamily = Sq
     def rows: DataFrame = quantized
     def withRows(rows: DataFrame): QuantIndex = copy(quantized = rows)
@@ -4138,7 +4142,7 @@ object Ann {
         .select(col(model.idCol), round(sqDistCols(col(model.vecCol),
           col("codes"), col("__mins"), col("__maxs")), roundTo).as("__d"))
     override private[graft] def persisted(): QuantIndex =
-      IvfSqIndex(quantized.persist(), bounds.persist(), model)
+      copy(quantized = quantized.persist(), bounds = bounds.persist())
     override private[graft] def unpersist(): Unit = {
       quantized.unpersist(false)
       bounds.unpersist(false)
@@ -4169,7 +4173,7 @@ object Ann {
         .withColumn("codes",
           quantizeSqCols(col("__nvec"), col("__mins"), col("__maxs")))
         .drop("__mins", "__maxs", "__nvec")
-      IvfSqIndex(quantized, bounds, modelN)
+      IvfSqIndex(quantized, bounds, modelN, spherical = true)
     } else {
       val assigned = assign(docs, vecCol, model, metric)
       val bounds = assigned.groupBy(col(model.idCol))
@@ -4182,7 +4186,7 @@ object Ann {
         .withColumn("codes",
           quantizeSqCols(col(vecCol), col("__mins"), col("__maxs")))
         .drop("__mins", "__maxs")
-      IvfSqIndex(quantized, bounds, model)
+      IvfSqIndex(quantized, bounds, model, spherical = false)
     }
 
   private val SqMetaMarker = "_graft_sq_meta"
@@ -4227,8 +4231,6 @@ object Ann {
     def family: QuantFamily = Pq
     def rows: DataFrame = encoded
     def withRows(rows: DataFrame): QuantIndex = copy(encoded = rows)
-    override private[ops] def sphericalPin: Option[Boolean] =
-      Some(spherical)
     private[ops] def cellSide: Option[DataFrame] = None
     /** ADC over the codes only: the lookup tables are built on the
       * driver, so the query must be a literal. */
@@ -4279,11 +4281,7 @@ object Ann {
       val (assigned, v) = assignPhase1(raw, vecCol, model, metric)
       encodePq(assigned, v, pq).drop("__nvec")
     }
-    /** Codebooks and centroids, plus the geometry marker and a
-      * sha-256 digest of the codebook values: a reader cannot
-      * mis-assemble the lookup tables, and the restart pin
-      * ([[ensureQuantizedRoot]]) tells two trainings of one geometry
-      * apart. */
+    /** Codebooks and centroids. */
     private[ops] def writeSide(dir: String): Unit = {
       val spark = encoded.sparkSession
       import spark.implicits._
@@ -4292,13 +4290,11 @@ object Ann {
         .toDF("s", "code", "cid", "cent")
         .write.mode("overwrite").parquet(s"$dir/codebooks")
       model.centroids.write.mode("overwrite").parquet(s"$dir/centroids")
-      graft.io.Markers.write(spark, dir, PqMetaMarker, geometryPin(spherical))
-      graft.io.Markers.write(spark, dir, PqBooksDigestMarker, pqDigest(pq))
     }
-    /** The (m, subDim, spherical) geometry ([[ensureQuantizedRoot]]
-      * refuses a flag that disagrees with the index's own). */
-    override private[ops] def geometryPin(sph: Boolean): String =
-      s"${pq.m},${pq.subDim},$sph"
+    /** The (m, subDim, spherical) geometry: a reader cannot
+      * mis-assemble the lookup tables. */
+    override private[ops] def geometryPin: String =
+      s"${pq.m},${pq.subDim},$spherical"
     override private[ops] def artifactDigest: Option[String] =
       Some(pqDigest(pq))
     private[ops] def healthDist(atRest: DataFrame,
@@ -4372,8 +4368,8 @@ object Ann {
     * /root/reference/vechord/spec.py:437-444, README.md:30-31).
     * `quantized` columns: doc cols + centroid_id + bits (array<int>
     * 0/1) + rnorm. */
-  final case class IvfBitIndex(quantized: DataFrame, model: IvfModel)
-      extends QuantIndex {
+  final case class IvfBitIndex(quantized: DataFrame, model: IvfModel,
+                               spherical: Boolean) extends QuantIndex {
     def family: QuantFamily = Bitq
     def rows: DataFrame = quantized
     def withRows(rows: DataFrame): QuantIndex = copy(quantized = rows)
@@ -4449,7 +4445,7 @@ object Ann {
           sqrt(aggregate(transform(r, x => x * x), lit(0.0),
             (a, x) => a + x)), roundTo))
         .drop(modelN.vecCol, "__nvec")
-      IvfBitIndex(quantized, modelN)
+      IvfBitIndex(quantized, modelN, spherical = true)
     } else {
       val joined = assign(docs, vecCol, model, metric)
         .join(model.centroids, model.idCol)
@@ -4461,7 +4457,7 @@ object Ann {
           sqrt(aggregate(transform(r, x => x * x), lit(0.0), (a, x) => a + x)),
           roundTo))
         .drop(model.vecCol)
-      IvfBitIndex(quantized, model)
+      IvfBitIndex(quantized, model, spherical = false)
     }
 
   /** Default exact-re-rank budget for 1-bit (sign-code) searches, per
@@ -4486,14 +4482,14 @@ object Ann {
                        metric: Metric): Int =
     if (refine > 0) refine else index.family.defaultRefine(metric)
 
-  /** Refuse a query metric outside the space `pin` fixes: a spherical
-    * index serves cosine only, a non-spherical one never cosine. */
-  private def requireSpace(where: String, pin: Option[Boolean],
-                           metric: Metric): Unit =
-    pin.foreach(s => require(s == (metric == Cosine),
-      s"$where pins spherical=$s but the query metric is $metric — " +
-        "query a spherical index with metric = Cosine, any other with " +
-        "its build metric (L2)"))
+  /** Refuse a metric outside the space a quantized index fixes: a
+    * spherical index serves cosine only, any other never cosine. */
+  private[graft] def requireSpace(where: String, spherical: Boolean,
+                                  metric: Metric): Unit =
+    require(spherical == (metric == Cosine),
+      s"$where pins spherical=$spherical but the query metric is " +
+        s"$metric — query a spherical index with metric = Cosine, any " +
+        "other with its build metric (L2)")
 
   /** The phase-1 query and probe metric: a cosine index is spherical
     * (built over normalized vectors — `spherical_centroids`,
@@ -4529,7 +4525,7 @@ object Ann {
   def quantizedCandidates(index: QuantIndex, idCol: String,
                           queryVec: Column, metric: Metric, probes: Int,
                           n: Int, roundTo: Int = 6): DataFrame = {
-    requireSpace("the index", index.sphericalPin, metric)
+    requireSpace("the index", index.spherical, metric)
     val (qv, m) = phase1Query(queryVec, metric)
     val cellCol = index.model.idCol
     val cells = probeCellIds(index.model, qv, m, probes)
@@ -4584,7 +4580,7 @@ object Ann {
                        index: QuantIndex, dId: String, vecCol: String,
                        metric: Metric, probes: Int, k: Int,
                        refine: Int = -1, roundTo: Int = 6): DataFrame = {
-    requireSpace("the index", index.sphericalPin, metric)
+    requireSpace("the index", index.spherical, metric)
     val spark = queries.sparkSession
     val qRows = queries
       .select(col(qId).cast("long"), col(qVec).cast("array<double>"))
@@ -4627,44 +4623,43 @@ object Ann {
       .select(col("__qid").as(qId), col(dId), col("dist"), col("rank"))
   }
 
-  /** Persist a [[QuantIndex]] at rest: `dir/<dataSub>` is the row table
-    * disk-partitioned by the cell column with codes in their packed
-    * form (SQ 1 byte/dim, 1-bit 1 bit/dim, PQ m ints that
+  /** Persist a [[QuantIndex]] at rest: pin `dir` to it first
+    * ([[ensureQuantizedRoot]] — a dir pinned to another geometry,
+    * other trained artifacts or another model refuses before any
+    * write; the same index again passes), then write `dir/<dataSub>`,
+    * the row table disk-partitioned by the cell column with codes in
+    * their packed form (SQ 1 byte/dim, 1-bit 1 bit/dim, PQ m ints that
     * dictionary-encode to ~1 byte/slot), so probed searches over the
-    * loaded layout prune whole cell directories; beside it the
-    * family's side tables (centroids; SQ bounds; PQ codebooks plus the
-    * (m, subDim, spherical) marker and codebook digest, so a reader
-    * cannot mis-assemble the lookup tables). */
+    * loaded layout prune whole cell directories. Every quantized root
+    * on disk is pinned; a crash between the pin and the rows leaves a
+    * root with no data subdir, whose readers fail loudly and which the
+    * same write completes. */
   def writeQuantized(index: QuantIndex, dir: String): Unit = {
+    ensureQuantizedRoot(index.rows.sparkSession, dir, index)
     index.pack(index.rows).write.mode("overwrite")
       .partitionBy(index.model.idCol)
       .parquet(s"$dir/${index.family.dataSub}")
-    index.writeSide(dir)
   }
 
   /** Idempotently pin the quantized root at `dir` to `index` — the
-    * build step that makes a [[writeQuantized]] root maintainable and
-    * the start step of [[graft.streaming.Stream.ingestQuantized]].
-    * First call writes the trained side tables plus the family's
-    * geometry marker (SQ and 1-bit: the spherical flag; PQ: its
-    * (m, subDim, spherical) geometry) and artifact digest (SQ bounds,
-    * PQ codebooks); a restart verifies both. Either way the
-    * coarse-quantizer fingerprint of `index.model` is pinned
-    * ([[ensureIvfModelMarker]]): neither retrained artifacts nor a
-    * retrained model can mix two code spaces in one layout. The
-    * index's model is the root's geometry as is — a spherical index
-    * holds unit centroids already, and nothing here normalizes. A
-    * PQ index carries its own flag, and a disagreeing `spherical`
-    * refuses before any write; a first spherical pin of an index
-    * whose centroids are not unit refuses too. */
-  def ensureQuantizedRoot(spark: org.apache.spark.sql.SparkSession,
-                          dir: String, index: QuantIndex,
-                          spherical: Boolean): Unit = {
+    * first step of [[writeQuantized]] and the start step of
+    * [[graft.streaming.Stream.ingestQuantized]]. First call writes the
+    * trained side tables (centroids; SQ bounds; PQ codebooks), the
+    * artifact digest (SQ bounds, PQ codebooks) and the family's
+    * geometry marker (SQ and 1-bit: the index's spherical flag; PQ:
+    * its (m, subDim, spherical) geometry), last, so a crash before it
+    * leaves a root the same call completes; a restart verifies both.
+    * Either way the coarse-quantizer fingerprint of `index.model` is
+    * pinned ([[ensureIvfModelMarker]]): neither another geometry, nor
+    * retrained artifacts, nor a retrained model can mix two code
+    * spaces in one layout. The index's model is the root's geometry
+    * as is — a spherical index holds unit centroids already, and
+    * nothing here normalizes. */
+  private[graft] def ensureQuantizedRoot(
+      spark: org.apache.spark.sql.SparkSession, dir: String,
+      index: QuantIndex): Unit = {
     val family = index.family
-    index.sphericalPin.foreach(s => require(s == spherical,
-      s"$dir: this ingest carries spherical=$spherical but its $family " +
-        s"index was built with spherical=$s — an index fixes its geometry"))
-    val want = index.geometryPin(spherical)
+    val want = index.geometryPin
     val digest = family.digestPin.zip(index.artifactDigest)
     graft.io.Markers.read(spark, dir, family.marker) match {
       case Some(meta) =>
@@ -4676,19 +4671,11 @@ object Ann {
             s"$dir was built with $refusal")
         }
       case None =>
-        // SQ and 1-bit indexes carry no flag: a spherical pin of one
-        // built under another metric would encode unit rows against raw
-        // centroids, silently
-        require(!spherical || collectCentroids(index.model).forall {
-            case (_, c) => math.abs(math.sqrt(c.map(x => x * x).sum) - 1) < 1e-9
-          },
-          s"$dir: a spherical pin needs an index built under Cosine, whose " +
-            s"centroids are unit; this $family index's are not")
         index.writeSide(dir)
-        graft.io.Markers.write(spark, dir, family.marker, want)
         digest.foreach { case ((marker, _), d) =>
           graft.io.Markers.write(spark, dir, marker, d)
         }
+        graft.io.Markers.write(spark, dir, family.marker, want)
     }
     ensureIvfModelMarker(spark, dir, index.model)
   }
@@ -4731,33 +4718,15 @@ object Ann {
   // always contained the rows.
 
   /** The family of the quantized root at `dir` and the spherical flag
-    * its geometry marker pins. [[ensureQuantizedRoot]] (PQ: also
-    * [[writeQuantized]]) writes the marker; a root written by
-    * [[writeQuantized]] alone self-describes by layout instead, as
-    * range roots do — SQ keeps its `bounds/` side table, 1-bit
-    * only `quantized/` codes — and pins no flag. None for any other
-    * dir. */
+    * its geometry marker pins ([[ensureQuantizedRoot]] writes it for
+    * every [[writeQuantized]] and streamed root). Markers only: None
+    * for any dir without one. */
   private def detectQuantized(spark: org.apache.spark.sql.SparkSession,
-                              dir: String)
-      : Option[(QuantFamily, Option[Boolean])] =
+                              dir: String): Option[(QuantFamily, Boolean)] =
     Iterator[QuantFamily](Pq, Sq, Bitq)
       .flatMap(f => graft.io.Markers.read(spark, dir, f.marker)
-        .map(meta => (f, Some(f.pinnedSpherical(meta)))))
+        .map(meta => (f, f.pinnedSpherical(meta))))
       .nextOption()
-      .orElse {
-        val root = new org.apache.hadoop.fs.Path(dir)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def has(sub: String) =
-          fs.exists(new org.apache.hadoop.fs.Path(root, sub))
-        if (has("bounds")) Some((Sq, None))
-        else if (has(Bitq.dataSub)) Some((Bitq, None))
-        else None
-      }
-
-  private def unpinnedQuantized(dir: String) = new IllegalStateException(
-    s"$dir carries no SQ/PQ/1-bit geometry marker — not a pinned " +
-      "quantized root; pin the layout at build time " +
-      "(writeQuantized + ensureQuantizedRoot)")
 
   private def freshPath(dir: String) = s"$dir/fresh"
 
@@ -4924,17 +4893,16 @@ object Ann {
     * like the appends: rows whose id already reached the main layout
     * (a crash between append and delete) are dropped by the same
     * touched-cells existence probe, so a re-run folds the remainder
-    * and deletes. Refuses a torn merge and an unpinned root. Returns
-    * rows graduated. */
+    * and deletes. Refuses a torn merge. Returns rows graduated. */
   def compactQuantizedFresh(root: CellRoot.Quantized,
                             idCol: String): Long = {
     val (spark, dir) = (root.spark, root.dir)
     requireNoPendingMerge(spark, dir)
-    root.pinned
     if (!freshExists(spark, dir)) return 0L
     val fresh = spark.read.parquet(freshPath(dir)).drop("centroid_id")
     // the at-rest form ingestQuantized appends verbatim (codes packed)
-    val encoded = root.family.artifacts(spark, dir, ivfModelAt(spark, dir))
+    val encoded = root.family.artifacts(spark, dir, ivfModelAt(spark, dir),
+        root.spherical)
       .encode(fresh, root.vec, root.metric)
     val mainPath = s"$dir/${root.dataSub}"
     val stored = spark.read.parquet(mainPath)
@@ -4972,7 +4940,6 @@ object Ann {
       s"compactQuantizedFreshIfNeeded: maxFreshRatio must be a " +
         s"finite ratio >= 0, got $maxFreshRatio")
     requireNoPendingMerge(spark, dir)
-    root.pinned
     if (!freshExists(spark, dir)) return None
     val freshN = spark.read.parquet(freshPath(dir)).count()
     val mainN = spark.read.parquet(s"$dir/${root.dataSub}").count()

@@ -544,9 +544,9 @@ object Binding {
   /** A STORED quantized root as a [[Quantized]], MAINTENANCE-AWARE —
     * the family member of [[denseRoot]]'s recipe for SQ / PQ / 1-bit
     * layouts: the metric comes from the root's own geometry marker
-    * (spherical roots serve cosine plans, the build's own contract;
-    * an unmarked root refuses), and the resolver RE-OPENS the index
-    * at every resolve ([[Ann.CellRoot.Quantized.readIndex]]), so every
+    * (spherical roots serve cosine plans, the build's own contract),
+    * and the resolver RE-OPENS the index at every resolve
+    * ([[Ann.CellRoot.Quantized.readIndex]]), so every
     * maintenance wave reaches declarative probe selection with no
     * re-install — where a frozen `() => index` keeps scanning the
     * install-time FILE LISTING: after a split, the dissolved parent's
@@ -569,7 +569,6 @@ object Binding {
                     owner: String = ""): Quantized = {
     val root = Ann.cellRoot(spark, dir, Some(vecCol))
       .as[Ann.CellRoot.Quantized]("registerQuantizedRoot")
-    root.pinned
     root.readModel
     Quantized(vecCol, idCol, () => root.readIndex, root.metric, probes,
       refine, owner)

@@ -975,12 +975,11 @@ object Events {
       graft.ops.Ann.L2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_s25_root").toString
+    // writeQuantized pins the root before it writes the even half:
+    // geometry, codebook digest and the coarse model's fingerprint
     graft.ops.Ann.writeQuantized(
       full.copy(encoded = full.encoded.filter(col("vec_id") % 2 === 0)),
       dir)
-    // pin the coarse model at build time (writeQuantized pins geometry +
-    // codebook digest; the IVF fingerprint comes from ensureQuantizedRoot)
-    graft.ops.Ann.ensureQuantizedRoot(s, dir, full, spherical = false)
     val rows = e.filter(col("vec_id") % 2 === 1)
       .as[(Long, Seq[Double], Int)].collect().toSeq.sortBy(_._1)
     val ckpt = java.nio.file.Files
@@ -1053,7 +1052,6 @@ object Events {
     graft.ops.Ann.writeQuantized(
       full.copy(quantized =
         full.quantized.filter(col("vec_id") % 2 === 0)), dir)
-    graft.ops.Ann.ensureQuantizedRoot(s, dir, full, spherical = false)
     val rows = e.filter(col("vec_id") % 2 === 1)
       .as[(Long, Seq[Double], Int)].collect().toSeq.sortBy(_._1)
     val ckpt = java.nio.file.Files
@@ -1119,7 +1117,6 @@ object Events {
     graft.ops.Ann.writeQuantized(
       full.copy(quantized =
         full.quantized.filter(col("vec_id") % 2 === 0)), dir)
-    graft.ops.Ann.ensureQuantizedRoot(s, dir, full, spherical = false)
     val rows = e.filter(col("vec_id") % 2 === 1)
       .as[(Long, Seq[Double], Int)].collect().toSeq.sortBy(_._1)
     val ckpt = java.nio.file.Files
@@ -1185,7 +1182,6 @@ object Events {
     graft.ops.Ann.writeQuantized(
       full.copy(quantized =
         full.quantized.filter(col("vec_id") % 2 === 0)), dir)
-    graft.ops.Ann.ensureQuantizedRoot(s, dir, full, spherical = false)
     val rows = e.filter(col("vec_id") % 2 === 1)
       .as[(Long, Seq[Double], Int)].collect().toSeq.sortBy(_._1)
     val ckpt = java.nio.file.Files
@@ -1421,7 +1417,6 @@ object Events {
     graft.ops.Ann.writeQuantized(
       full.copy(quantized =
         full.quantized.filter(col("vec_id") % 2 === 0)), dir)
-    graft.ops.Ann.ensureQuantizedRoot(s, dir, full, spherical = false)
     val rows = e.filter(col("vec_id") % 2 === 1)
       .as[(Long, Seq[Double], Int)].collect().toSeq.sortBy(_._1)
     // SF-relative threshold from the observed full-corpus occupancy

@@ -879,7 +879,6 @@ object Retrieval {
       .createTempDirectory("graft_sqfresh_del").toString
     Ann.writeQuantized(index.copy(quantized =
       index.quantized.filter(col("vec_id") % 2 === 0)), dir)
-    Ann.ensureQuantizedRoot(s, dir, index, spherical = false)
     val appended = Ann.appendIdempotent(
       Ann.cellRoot(s, dir, Some("embedding")),
       e.filter(col("vec_id") % 2 === 1)
@@ -920,7 +919,6 @@ object Retrieval {
       .createTempDirectory("graft_qfresh_batch").toString
     Ann.writeQuantized(index.copy(quantized =
       index.quantized.filter(col("vec_id") % 2 === 0)), dir)
-    Ann.ensureQuantizedRoot(s, dir, index, spherical = false)
     val appended = Ann.appendIdempotent(
       Ann.cellRoot(s, dir, Some("embedding")),
       e.filter(col("vec_id") % 2 === 1)
@@ -961,7 +959,6 @@ object Retrieval {
       .createTempDirectory("graft_qfresh_fbatch").toString
     Ann.writeQuantized(index.copy(quantized =
       index.quantized.filter(col("vec_id") % 2 === 0)), dir)
-    Ann.ensureQuantizedRoot(s, dir, index, spherical = false)
     val appended = Ann.appendIdempotent(
       Ann.cellRoot(s, dir, Some("embedding")),
       e.filter(col("vec_id") % 2 === 1)
@@ -2127,7 +2124,6 @@ object Retrieval {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_sq_health").toString
     Ann.writeQuantized(index, dir)
-    Ann.ensureQuantizedRoot(s, dir, index, spherical = false)
     val df = Ann.indexHealth(Ann.cellRoot(s, dir, None)).orderBy("centroid_id")
     val phys = df.queryExecution.executedPlan.toString
     require(phys.contains("ReadSchema") && !phys.contains("vec_id") &&
@@ -2151,7 +2147,6 @@ object Retrieval {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_sq_health_cos").toString
     Ann.writeQuantized(index, dir)
-    Ann.ensureQuantizedRoot(s, dir, index, spherical = true)
     val df = Ann.indexHealth(Ann.cellRoot(s, dir, None)).orderBy("centroid_id")
     val phys = df.queryExecution.executedPlan.toString
     require(phys.contains("ReadSchema") && !phys.contains("vec_id") &&
@@ -2367,7 +2362,6 @@ object Retrieval {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_bitq_health_g").toString
     Ann.writeQuantized(index, dir)
-    Ann.ensureQuantizedRoot(s, dir, index, spherical = false)
     val df = Ann.indexHealth(Ann.cellRoot(s, dir, None)).orderBy("centroid_id")
     val phys = df.queryExecution.executedPlan.toString
     require(phys.contains("ReadSchema") && !phys.contains("vec_id") &&
@@ -2401,7 +2395,6 @@ object Retrieval {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_sq_rw_maint").toString
     Ann.writeQuantized(index, dir)
-    Ann.ensureQuantizedRoot(s, dir, index, spherical = false)
     graft.plans.AnnIndex.install(s)
     def reg(probes: Int): Unit =
       graft.plans.AnnIndex.register(graft.plans.Binding.quantizedRoot(s,
@@ -3387,7 +3380,6 @@ object Retrieval {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_sq_merge").toString
     Ann.writeQuantized(index, dir)
-    Ann.ensureQuantizedRoot(s, dir, index, spherical = false)
     val lists = model.centroids.count()
     val cell4 = s.read.parquet(s"$dir/quantized")
       .filter(col("centroid_id") === 4).select(col("vec_id"))
@@ -3440,7 +3432,6 @@ object Retrieval {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_sq_split").toString
     Ann.writeQuantized(index, dir)
-    Ann.ensureQuantizedRoot(s, dir, index, spherical = false)
     val lists = model.centroids.count()
     val total = s.read.parquet(s"$dir/quantized").count()
     val maxOcc = s.read.parquet(s"$dir/quantized")

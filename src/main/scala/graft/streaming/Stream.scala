@@ -253,8 +253,10 @@ object Stream {
     * ([[graft.ops.Ann.ensureQuantizedRoot]]); a restart with another
     * geometry, retrained artifacts or a retrained model is refused,
     * and so is a start into a data subdir that holds batch rows —
-    * before anything is written. `metric` is the metric `index` was
-    * built under (cosine ⇒ spherical, the flag the root pins). After
+    * before anything is written. `metric` is checked, not trusted: it
+    * must lie in the space `index` fixes ([[graft.ops.Ann.requireSpace]]
+    * — `Cosine` for a spherical index, anything else otherwise), and
+    * the flag the root pins is the index's own. After
     * [[compactStored]](`dir/<data subdir>`, "centroid_id") graduation
     * the root IS a [[graft.ops.Ann.writeQuantized]] layout:
     * [[graft.ops.Ann.searchStored]] and `attachStoredIndex` work
@@ -265,10 +267,10 @@ object Stream {
                       dir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = vectors.sparkSession
+    graft.ops.Ann.requireSpace("the index", index.spherical, metric)
     startFileSink(spark, s"$dir/${index.family.dataSub}", checkpoint,
         Some(index.model.idCol))(
-      graft.ops.Ann.ensureQuantizedRoot(spark, dir, index,
-        spherical = metric == graft.ops.Ann.Cosine))(
+      graft.ops.Ann.ensureQuantizedRoot(spark, dir, index))(
       index.encode(vectors, vecCol, metric))
   }
 

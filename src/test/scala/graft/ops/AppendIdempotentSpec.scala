@@ -79,17 +79,14 @@ class AppendIdempotentSpec extends SparkSpecBase {
     quantized("SQ", (rows, dir) => {
       val idx = Ann.buildIvfSq(rows, "embedding", model, Ann.L2)
       Ann.writeQuantized(idx, dir)
-      Ann.ensureQuantizedRoot(spark, dir, idx, spherical = false)
     }),
     quantized("PQ", (rows, dir) => {
       val idx = Ann.buildIvfPq(rows, "embedding", model, m = 2, Ann.L2)
       Ann.writeQuantized(idx, dir)
-      Ann.ensureQuantizedRoot(spark, dir, idx, spherical = false)
     }),
     quantized("1-bit", (rows, dir) => {
       val idx = Ann.buildIvfBitq(rows, "embedding", model, Ann.L2)
       Ann.writeQuantized(idx, dir)
-      Ann.ensureQuantizedRoot(spark, dir, idx, spherical = false)
     }))
 
   private def root(dir: String): Ann.CellRoot =

@@ -39,23 +39,16 @@ class CellRootSpec extends SparkSpecBase {
       "mv_mean", model, Ann.Cosine, dir)
   }
 
-  private def sq(pin: Boolean)(dir: String): Unit = {
-    val index = Ann.buildIvfSq(docs, "embedding", model, Ann.L2)
-    Ann.writeQuantized(index, dir)
-    if (pin) Ann.ensureQuantizedRoot(spark, dir, index, spherical = false)
-  }
+  private def sq(metric: Ann.Metric)(dir: String): Unit =
+    Ann.writeQuantized(Ann.buildIvfSq(docs, "embedding", model, metric), dir)
 
-  private def pq(pin: Boolean)(dir: String): Unit = {
-    val index = Ann.buildIvfPq(docs, "embedding", model, m = 2, Ann.L2)
-    Ann.writeQuantized(index, dir)
-    if (pin) Ann.ensureQuantizedRoot(spark, dir, index, spherical = false)
-  }
+  private def pq(metric: Ann.Metric)(dir: String): Unit =
+    Ann.writeQuantized(
+      Ann.buildIvfPq(docs, "embedding", model, m = 2, metric), dir)
 
-  private def bitq(pin: Boolean)(dir: String): Unit = {
-    val index = Ann.buildIvfBitq(docs, "embedding", model, Ann.L2)
-    Ann.writeQuantized(index, dir)
-    if (pin) Ann.ensureQuantizedRoot(spark, dir, index, spherical = false)
-  }
+  private def bitq(metric: Ann.Metric)(dir: String): Unit =
+    Ann.writeQuantized(Ann.buildIvfBitq(docs, "embedding", model, metric),
+      dir)
 
   import Ann.CellRoot._
 
@@ -79,19 +72,22 @@ class CellRootSpec extends SparkSpecBase {
     ("MRL-IVF cosine", (d: String) => Ann.writeMatryoshkaIvf(docs,
         "vec_id", "embedding", dims = 2, model, d, metric = Ann.Cosine),
       { case MrlIvf(_, _, Ann.Cosine, 2, Some("embedding")) => }, "rows"),
-    ("SQ marker-pinned", sq(pin = true),
-      { case Quantized(_, _, Ann.Sq, Some(false), _) => }, "quantized"),
-    ("SQ writeQuantized-only", sq(pin = false),
-      { case Quantized(_, _, Ann.Sq, None, _) => }, "quantized"),
-    ("PQ marker-pinned", pq(pin = true),
-      { case Quantized(_, _, Ann.Pq, Some(false), _) => }, "encoded"),
-    // PQ's write itself carries the geometry marker
-    ("PQ writeQuantized-only", pq(pin = false),
-      { case Quantized(_, _, Ann.Pq, Some(false), _) => }, "encoded"),
-    ("1-bit marker-pinned", bitq(pin = true),
-      { case Quantized(_, _, Ann.Bitq, Some(false), _) => }, "quantized"),
-    ("1-bit writeQuantized-only", bitq(pin = false),
-      { case Quantized(_, _, Ann.Bitq, None, _) => }, "quantized"))
+    // writeQuantized pins every root it writes, so each family resolves
+    // from its marker alone; the "marker-pinned" cases build under
+    // Cosine and the "writeQuantized-only" ones under L2, so both flags
+    // resolve
+    ("SQ marker-pinned", sq(Ann.Cosine),
+      { case Quantized(_, _, Ann.Sq, true, _) => }, "quantized"),
+    ("SQ writeQuantized-only", sq(Ann.L2),
+      { case Quantized(_, _, Ann.Sq, false, _) => }, "quantized"),
+    ("PQ marker-pinned", pq(Ann.Cosine),
+      { case Quantized(_, _, Ann.Pq, true, _) => }, "encoded"),
+    ("PQ writeQuantized-only", pq(Ann.L2),
+      { case Quantized(_, _, Ann.Pq, false, _) => }, "encoded"),
+    ("1-bit marker-pinned", bitq(Ann.Cosine),
+      { case Quantized(_, _, Ann.Bitq, true, _) => }, "quantized"),
+    ("1-bit writeQuantized-only", bitq(Ann.L2),
+      { case Quantized(_, _, Ann.Bitq, false, _) => }, "quantized"))
 
   roots.foreach { case (name, build, expected, dataSub) =>
     test(s"cellRoot resolves a $name root to its case and data subdir") {
@@ -173,7 +169,7 @@ class CellRootSpec extends SparkSpecBase {
       assert(e.getMessage.contains("none was named"))
     }
     val qDir = tmp("graft_cellroot_novec_q")
-    sq(pin = true)(qDir)
+    sq(Ann.L2)(qDir)
     val q = Ann.cellRoot(spark, qDir, None)
     intercept[IllegalStateException](Ann.mergeUnderfull(q, 10L))
     // health reads codes only: no vector column needed

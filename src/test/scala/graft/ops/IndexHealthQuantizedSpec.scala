@@ -80,7 +80,6 @@ class IndexHealthQuantizedSpec extends SparkSpecBase {
     val index = Ann.buildIvfBitq(df, "embedding", model, Ann.L2)
     val dir = tmp("graft_bitq_health")
     Ann.writeQuantized(index, dir)
-    Ann.ensureQuantizedRoot(sp, dir, index, spherical = false)
     val got = Ann.indexHealth(Ann.cellRoot(sp, dir, None))
       .collect().map(r => (r.getAs[Number]("centroid_id").longValue(),
         (r.getAs[Long]("n_rows"), r.getAs[Double]("mean_dist")))).toMap
@@ -98,7 +97,6 @@ class IndexHealthQuantizedSpec extends SparkSpecBase {
     val index = Ann.buildIvfSq(df, "embedding", model, Ann.L2)
     val dir = tmp("graft_sq_health_fresh")
     Ann.writeQuantized(index, dir)
-    Ann.ensureQuantizedRoot(sp, dir, index, spherical = false)
     val sp2 = spark
     import sp2.implicits._
     val fresh = Seq((1000L, corpus.head._2, 0))
@@ -128,7 +126,6 @@ class IndexHealthQuantizedSpec extends SparkSpecBase {
     val index = Ann.buildIvfSq(df, "embedding", model, Ann.L2)
     val dir = tmp("graft_seat_sq")
     Ann.writeQuantized(index, dir)
-    Ann.ensureQuantizedRoot(sp, dir, index, spherical = false)
     val viaSeat = eng.indexHealthFor(td, dir).orderBy("centroid_id")
       .collect().toSeq
     val direct = Ann.indexHealth(Ann.cellRoot(sp, dir, None))
@@ -213,7 +210,6 @@ class IndexHealthQuantizedSpec extends SparkSpecBase {
     val bqDir = tmp("graft_root_bq")
     val bq = Ann.buildIvfBitq(df, "embedding", model, Ann.L2)
     Ann.writeQuantized(bq, bqDir)
-    Ann.ensureQuantizedRoot(sp, bqDir, bq, spherical = false)
     graft.plans.AnnIndex.register(graft.plans.Binding.quantizedRoot(sp, bqDir,
       "embedding", "vec_id", probes = 2, owner = "spec"))
     try {

@@ -6,9 +6,8 @@ import org.apache.spark.sql.functions._
 /** The one quantized surface over every [[Ann.QuantFamily]], SQ / PQ /
   * 1-bit × L2 / cosine: the batch join's per-query rows equal the
   * single-query search, a stored search over a written root equals the
-  * in-memory search, and a root written without its
-  * `ensureQuantizedRoot` marker is still detected (by layout) and
-  * searched. */
+  * in-memory search, and a root written by `writeQuantized` alone is
+  * pinned by it, detected by its marker and serves its build metric. */
 class QuantFamilySpec extends SparkSpecBase {
 
   private val rng = new scala.util.Random(23)
@@ -59,14 +58,6 @@ class QuantFamilySpec extends SparkSpecBase {
     Ann.searchStored(root(dir), "vec_id", corpus(qid.toInt)._2, probes, k)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
-  /** Pin a written root's spherical flag (PQ's write pins it already). */
-  private def pin(index: Ann.QuantIndex, metric: Ann.Metric,
-                  dir: String): Unit = index match {
-    case _: Ann.IvfSqIndex | _: Ann.IvfBitIndex =>
-      Ann.ensureQuantizedRoot(spark, dir, index, metric == Ann.Cosine)
-    case _: Ann.IvfPqIndex => ()
-  }
-
   private def tmp(p: String) =
     java.nio.file.Files.createTempDirectory(p).toString
 
@@ -96,7 +87,6 @@ class QuantFamilySpec extends SparkSpecBase {
       val index = build(fam, metric)
       val dir = tmp(s"graft_qf_$fam")
       Ann.writeQuantized(index, dir)
-      pin(index, metric, dir)
       val loaded = root(dir).readIndex
       assert(loaded.family == fam)
       qids.foreach { qid =>
@@ -114,12 +104,39 @@ class QuantFamilySpec extends SparkSpecBase {
       Ann.writeQuantized(index, dir)
       assert(Ann.detectCellRoot(spark, dir, None).collect {
         case q: Ann.CellRoot.Quantized => q.family } === Some(fam))
-      // only a marker pins the spherical flag: PQ's write carries one,
-      // so the root serves its build metric; an unmarked SQ / 1-bit
-      // root cannot tell, and serves L2
-      val served = if (fam == Ann.Pq) metric else Ann.L2
-      assert(root(dir).metric === served)
-      assert(stored(dir, qids.head) === single(index, served, qids.head))
+      // the write pins the index's own spherical flag, so every family's
+      // root serves its build metric
+      assert(root(dir).metric === metric)
+      assert(stored(dir, qids.head) === single(index, metric, qids.head))
+    }
+  }
+
+  /** (build metric, a query metric outside its space) pairs. */
+  private val outOfSpace = Seq[(Ann.Metric, Ann.Metric)](
+    (Ann.L2, Ann.Cosine), (Ann.Cosine, Ann.L2),
+    (Ann.Cosine, Ann.InnerProduct))
+
+  for (fam <- Seq[Ann.QuantFamily](Ann.Sq, Ann.Pq, Ann.Bitq);
+       (built, queried) <- outOfSpace) {
+    val ops = Seq[(String, Ann.QuantIndex => Any)](
+      "searchQuantized" -> (ix => Ann.searchQuantized(ix, "vec_id",
+        "embedding", typedlit(corpus(qids.head.toInt)._2), queried, probes,
+        k)),
+      "quantizedCandidates" -> (ix => Ann.quantizedCandidates(ix, "vec_id",
+        typedlit(corpus(qids.head.toInt)._2), queried, probes, k)),
+      "knnJoinQuantized" -> (ix => Ann.knnJoinQuantized(
+        df.filter(col("vec_id").isin(qids: _*))
+          .select(col("vec_id").as("q_id"), col("embedding").as("qv")),
+        "q_id", "qv", ix, "vec_id", "embedding", queried, probes, k)))
+    test(s"$fam: a $built index refuses a $queried query in every " +
+        "search operator") {
+      val index = build(fam, built)
+      ops.foreach { case (op, run) =>
+        val e = intercept[IllegalArgumentException](run(index))
+        assert(e.getMessage.contains(
+          s"pins spherical=${built == Ann.Cosine} but the query metric " +
+            s"is $queried"), s"$op: ${e.getMessage}")
+      }
     }
   }
 }

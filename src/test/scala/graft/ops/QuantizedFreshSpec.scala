@@ -54,7 +54,6 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-sqfresh").toString
     Ann.writeQuantized(idx, dir)
-    Ann.ensureQuantizedRoot(sp, dir, idx, spherical = false)
     // append the odd half in two batches
     val n1 = Ann.appendIdempotent(
       Ann.cellRoot(sp, dir, Some("embedding")),
@@ -105,7 +104,6 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-pqfresh").toString
     Ann.writeQuantized(idx, dir)
-    Ann.ensureQuantizedRoot(sp, dir, idx, spherical = true)
     assert(Ann.appendIdempotent(
       Ann.cellRoot(sp, dir, Some("embedding")),
       odd, "vec_id") == 30L)
@@ -129,7 +127,6 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-bitqfresh").toString
     Ann.writeQuantized(idx, dir)
-    Ann.ensureQuantizedRoot(sp, dir, idx, spherical = false)
     assert(Ann.appendIdempotent(
       Ann.cellRoot(sp, dir, Some("embedding")),
       odd, "vec_id") == 30L)
@@ -166,7 +163,6 @@ class QuantizedFreshSpec extends SparkSpecBase {
       .createTempDirectory("graft-sqfresh-filt").toString
     Ann.writeQuantized(fullSq.copy(quantized =
       fullSq.quantized.filter(col("vec_id") % 2 === 0)), dir)
-    Ann.ensureQuantizedRoot(sp, dir, fullSq, spherical = false)
     assert(Ann.appendIdempotent(
       Ann.cellRoot(sp, dir, Some("embedding")),
       odd, "vec_id") == 30L)
@@ -209,7 +205,6 @@ class QuantizedFreshSpec extends SparkSpecBase {
       .createTempDirectory("graft-pqfresh-filt").toString
     Ann.writeQuantized(fullPq.copy(encoded =
       fullPq.encoded.filter(col("vec_id") % 2 === 0)), dirPq)
-    Ann.ensureQuantizedRoot(sp, dirPq, fullPq, spherical = true)
     assert(Ann.appendIdempotent(
       Ann.cellRoot(sp, dirPq, Some("embedding")),
       odd, "vec_id") == 30L)
@@ -227,7 +222,6 @@ class QuantizedFreshSpec extends SparkSpecBase {
       .createTempDirectory("graft-bitqfresh-filt").toString
     Ann.writeQuantized(fullBq.copy(quantized =
       fullBq.quantized.filter(col("vec_id") % 2 === 0)), dirBq)
-    Ann.ensureQuantizedRoot(sp, dirBq, fullBq, spherical = false)
     assert(Ann.appendIdempotent(
       Ann.cellRoot(sp, dirBq, Some("embedding")),
       odd, "vec_id") == 30L)
@@ -246,7 +240,6 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-fresh-narrow").toString
     Ann.writeQuantized(idx, dir)
-    Ann.ensureQuantizedRoot(sp, dir, idx, spherical = false)
     // fresh ids (the root holds the full corpus here, so same-id rows
     // would dedup away before the schema check) and a MISSING doc col
     val narrow = odd.drop("label")
@@ -280,7 +273,6 @@ class QuantizedFreshSpec extends SparkSpecBase {
       .createTempDirectory("graft-freshdel").toString
     Ann.writeQuantized(idx.copy(quantized =
       idx.quantized.filter(col("vec_id") % 2 === 0)), dir)
-    Ann.ensureQuantizedRoot(sp, dir, idx, spherical = false)
     assert(Ann.appendIdempotent(
       Ann.cellRoot(sp, dir, Some("embedding")),
       odd, "vec_id") == 30L)
@@ -335,7 +327,6 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-sqmerge").toString
     Ann.writeQuantized(fullSq, dir)
-    Ann.ensureQuantizedRoot(sp, dir, fullSq, spherical = false)
     drain("quantized", dir)
     val merged = Ann.mergeUnderfull(Ann.cellRoot(sp, dir, Some("embedding")),
       minRows = 5)
@@ -353,8 +344,7 @@ class QuantizedFreshSpec extends SparkSpecBase {
     // bounds stayed FROZEN (digest pin survives a restart probe)
     Ann.ensureQuantizedRoot(sp, dir,
       fullSq.copy(model = Ann.IvfModel(
-        sp.read.parquet(s"$dir/centroids"), "centroid_id", "centroid")),
-      spherical = false)
+        sp.read.parquet(s"$dir/centroids"), "centroid_id", "centroid")))
     // torn merge: every quantized entry point refuses; a re-run heals
     graft.io.Markers.write(sp, dir, "_graft_merge_pending", "quantized|")
     intercept[IllegalStateException] { root(dir).readIndex }
@@ -398,7 +388,6 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val dirBq = java.nio.file.Files
       .createTempDirectory("graft-bqmerge").toString
     Ann.writeQuantized(fullBq, dirBq)
-    Ann.ensureQuantizedRoot(sp, dirBq, fullBq, spherical = false)
     drain("quantized", dirBq)
     assert(Ann.mergeUnderfull(Ann.cellRoot(sp, dirBq, Some("embedding")),
       minRows = 5).values.sum === 2L)
@@ -421,7 +410,6 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-sqsplit").toString
     Ann.writeQuantized(fullSq, dir)
-    Ann.ensureQuantizedRoot(sp, dir, fullSq, spherical = false)
     def codeBytes(): Map[Long, Seq[Byte]] =
       sp.read.parquet(s"$dir/quantized")
         .select(col("vec_id"), col("codes")).collect()
@@ -472,7 +460,6 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val dirBq = java.nio.file.Files
       .createTempDirectory("graft-bqsplit").toString
     Ann.writeQuantized(fullBq, dirBq)
-    Ann.ensureQuantizedRoot(sp, dirBq, fullBq, spherical = false)
     assert(Ann.splitOverfull(Ann.cellRoot(sp, dirBq, Some("embedding")),
       maxRows = 30).values.head.size === 2)
     assert(ids(Ann.searchStored(root(dirBq), "vec_id", q, 2, 8,
@@ -503,7 +490,6 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-sqdrift").toString
     Ann.writeQuantized(fullSq, dir)
-    Ann.ensureQuantizedRoot(sp, dir, fullSq, spherical = false)
     def cellOf(id: Long) = sp.read.parquet(s"$dir/quantized")
       .filter(col("vec_id") === id)
       .select(col("centroid_id").cast("long")).head().getLong(0)
@@ -544,7 +530,6 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-fresh-retrain").toString
     Ann.writeQuantized(idx, dir)
-    Ann.ensureQuantizedRoot(sp, dir, idx, spherical = false)
     val retrained = Ann.buildIvf(
       df.withColumn("label", (col("label") + 1) % 3), "label",
       "embedding")
@@ -560,7 +545,6 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val dir2 = java.nio.file.Files
       .createTempDirectory("graft-fresh-metric").toString
     Ann.writeQuantized(idx, dir2)
-    Ann.ensureQuantizedRoot(sp, dir2, idx, spherical = false)
     val queries = {
       import sp.implicits._
       Seq((7L, q)).toDF("q_id", "qv")
@@ -583,7 +567,6 @@ class QuantizedFreshSpec extends SparkSpecBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-fresh-policy").toString
     Ann.writeQuantized(idx, dir)
-    Ann.ensureQuantizedRoot(sp, dir, idx, spherical = false)
     def search() = ids(Ann.searchStored(root(dir), "vec_id", q, 2, 8,
         refine = 5))
     // no fresh side at all → None (nothing to decide)
@@ -660,7 +643,6 @@ class QuantizedFreshSpec extends SparkSpecBase {
         .createTempDirectory("graft-sqfreshb").toString
       Ann.writeQuantized(full.copy(quantized =
         full.quantized.filter(col("vec_id") % 2 === 0)), dir)
-      Ann.ensureQuantizedRoot(sp, dir, full, spherical = false)
       assert(Ann.appendIdempotent(
         Ann.cellRoot(sp, dir, Some("embedding")),
         odd, "vec_id") == 30L)
@@ -696,7 +678,6 @@ class QuantizedFreshSpec extends SparkSpecBase {
         .createTempDirectory("graft-pqfreshb").toString
       Ann.writeQuantized(full.copy(encoded =
         full.encoded.filter(col("vec_id") % 2 === 0)), dir)
-      Ann.ensureQuantizedRoot(sp, dir, full, spherical = true)
       assert(Ann.appendIdempotent(
         Ann.cellRoot(sp, dir, Some("embedding")),
         odd, "vec_id") == 30L)
@@ -718,7 +699,6 @@ class QuantizedFreshSpec extends SparkSpecBase {
         .createTempDirectory("graft-bitqfreshb").toString
       Ann.writeQuantized(full.copy(quantized =
         full.quantized.filter(col("vec_id") % 2 === 0)), dir)
-      Ann.ensureQuantizedRoot(sp, dir, full, spherical = false)
       assert(Ann.appendIdempotent(
         Ann.cellRoot(sp, dir, Some("embedding")),
         odd, "vec_id") == 30L)

@@ -9,11 +9,14 @@ import graft.streaming.Stream
 
 /** The quantized write side over every [[Ann.QuantFamily]], SQ / PQ /
   * 1-bit × L2 / cosine: [[Ann.ensureQuantizedRoot]] pins an empty root
-  * (geometry marker, artifact digest, model fingerprint) and refuses
-  * any other geometry on restart; rows streamed by
-  * [[Stream.ingestQuantized]] and fresh rows folded by
+  * (geometry marker from the index's own flag, artifact digest, model
+  * fingerprint) and refuses any other geometry on restart; rows
+  * streamed by [[Stream.ingestQuantized]] and fresh rows folded by
   * [[Ann.compactQuantizedFresh]] land exactly as the batch build
-  * writes them; and a refused stream start writes nothing. */
+  * writes them; [[Ann.writeQuantized]] pins before it writes, so a
+  * rewrite with other artifacts refuses and the same index rewrites;
+  * and a refused stream start — a root holding batch data, or a
+  * metric outside the index's space — writes nothing. */
 class QuantizedIngestSpec extends SparkSpecBase {
 
   private val rng = new scala.util.Random(41)
@@ -95,17 +98,11 @@ class QuantizedIngestSpec extends SparkSpecBase {
         "refuses a flipped flag, retrained artifacts or a retrained model") {
       val sp = spark
       val index = build(fam, df, metric)
+      assert(index.spherical === spherical)
       val dir = tmp(s"graft_qi_pin_$fam")
-      if (!spherical && fam != Ann.Pq) {
-        // no flag of its own: an L2 index pinned spherical would encode
-        // unit rows against raw centroids; the first pin refuses first
-        val e = intercept[IllegalArgumentException] {
-          Ann.ensureQuantizedRoot(sp, dir, index, spherical = true)
-        }
-        assert(e.getMessage.contains("centroids are unit"), e.getMessage)
-        assert(listing(dir).isEmpty)
-      }
-      Ann.ensureQuantizedRoot(sp, dir, index, spherical)
+      Ann.ensureQuantizedRoot(sp, dir, index)
+      // the flag comes from the index alone: true for a cosine build,
+      // false for an L2 one
       val (geometry, want, digest) = markers(fam, spherical)
       assert(graft.io.Markers.read(sp, dir, geometry) === Some(want))
       digest.foreach(d =>
@@ -116,38 +113,26 @@ class QuantizedIngestSpec extends SparkSpecBase {
       assert(Ann.readIvfModelMarker(sp, dir) ===
         Some(Ann.modelFingerprint(index.model)))
       // a restart with the same index passes
-      Ann.ensureQuantizedRoot(sp, dir, index, spherical)
-      // a flipped spherical flag: SQ and 1-bit carry none of their own;
-      // a PQ index carries one, so the flip is an index of the other
-      // metric — and a flag that disagrees with it refuses too
+      Ann.ensureQuantizedRoot(sp, dir, index)
+      // a flipped spherical flag: the index built under the other metric
       val flipped = intercept[IllegalArgumentException] {
-        if (fam == Ann.Pq)
-          Ann.ensureQuantizedRoot(sp, dir,
-            build(fam, df, if (spherical) Ann.L2 else Ann.Cosine),
-            !spherical)
-        else Ann.ensureQuantizedRoot(sp, dir, index, !spherical)
+        Ann.ensureQuantizedRoot(sp, dir,
+          build(fam, df, if (spherical) Ann.L2 else Ann.Cosine))
       }
       assert(flipped.getMessage.contains("streaming into it would mix"),
         flipped.getMessage)
-      if (fam == Ann.Pq) {
-        val e = intercept[IllegalArgumentException] {
-          Ann.ensureQuantizedRoot(sp, dir, index, !spherical)
-        }
-        assert(e.getMessage.contains("spherical"), e.getMessage)
-      }
       // retrained bounds / codebooks (1-bit has none: its centroids
       // are its quantizer)
       if (digest.isDefined) {
         val retrained = build(fam, moved, metric)
         val e = intercept[IllegalArgumentException] {
-          Ann.ensureQuantizedRoot(sp, dir, withModel(retrained, index.model),
-            spherical)
+          Ann.ensureQuantizedRoot(sp, dir, withModel(retrained, index.model))
         }
         assert(e.getMessage.contains("digest mismatch"), e.getMessage)
       }
       // a retrained model under the same artifacts
       val e = intercept[IllegalStateException] {
-        Ann.ensureQuantizedRoot(sp, dir, withModel(index, model2), spherical)
+        Ann.ensureQuantizedRoot(sp, dir, withModel(index, model2))
       }
       assert(e.getMessage.contains("different IVF model"), e.getMessage)
     }
@@ -178,7 +163,6 @@ class QuantizedIngestSpec extends SparkSpecBase {
       val freshDir = tmp(s"graft_qi_fresh_$fam")
       Ann.writeQuantized(index.withRows(index.rows
         .filter(col("vec_id") % 2 === 0)), freshDir)
-      Ann.ensureQuantizedRoot(sp, freshDir, index, spherical)
       val root = Ann.cellRoot(sp, freshDir, Some("embedding"))
         .as[Ann.CellRoot.Quantized]("QuantizedIngestSpec")
       assert(Ann.appendIdempotent(root, df.filter(col("vec_id") % 2 === 1),
@@ -225,5 +209,65 @@ class QuantizedIngestSpec extends SparkSpecBase {
       assert(e.getMessage.contains("holds batch data"), e.getMessage)
       assert(listing(dir) === before)
       assert(search() === rows)
+    }
+
+  test("writeQuantized over a root pinned to other SQ bounds refuses and " +
+      "leaves every file as it was") {
+    val sp = spark
+    val dir = tmp("graft_qi_rewrite")
+    val a = build(Ann.Sq, df, Ann.L2)
+    Ann.writeQuantized(a, dir)
+    // other rows under the same model: other bounds, same geometry
+    val b = build(Ann.Sq, df.filter(col("vec_id") % 2 === 0), Ann.L2)
+    val before = listing(dir)
+    val e = intercept[IllegalArgumentException](Ann.writeQuantized(b, dir))
+    assert(e.getMessage.contains("different SQ bounds"), e.getMessage)
+    assert(listing(dir) === before)
+    // the pin still names the bounds on disk
+    Ann.ensureQuantizedRoot(sp, dir, a)
+  }
+
+  for (fam <- Seq[Ann.QuantFamily](Ann.Sq, Ann.Pq, Ann.Bitq))
+    test(s"$fam: writing the same index twice passes and rewrites the " +
+        "rows; a pin without rows fails readers until the write completes") {
+      val sp = spark
+      val index = build(fam, df, Ann.L2)
+      val want = {
+        val d = tmp(s"graft_qi_once_$fam")
+        Ann.writeQuantized(index, d)
+        rowsOf(s"$d/${fam.dataSub}")
+      }
+      // a crash between the pin and the rows: readers fail loudly
+      val dir = tmp(s"graft_qi_twice_$fam")
+      Ann.ensureQuantizedRoot(sp, dir, index)
+      intercept[org.apache.spark.sql.AnalysisException](
+        Ann.cellRoot(sp, dir, Some("embedding"))
+          .as[Ann.CellRoot.Quantized]("QuantizedIngestSpec").readIndex)
+      Ann.writeQuantized(index, dir)
+      Ann.writeQuantized(index, dir)
+      assert(rowsOf(s"$dir/${fam.dataSub}") === want)
+    }
+
+  for (fam <- Seq[Ann.QuantFamily](Ann.Sq, Ann.Pq, Ann.Bitq);
+       (built, streamed) <- Seq[(Ann.Metric, Ann.Metric)](
+         (Ann.Cosine, Ann.L2), (Ann.L2, Ann.Cosine)))
+    test(s"$fam: ingestQuantized of a $built index under $streamed " +
+        "refuses before any write") {
+      val sp = spark
+      import sp.implicits._
+      implicit val sc = sp.sqlContext
+      val dir = tmp(s"graft_qi_space_$fam")
+      val e = intercept[IllegalArgumentException] {
+        Stream.ingestQuantized(
+          MemoryStream[(Long, Seq[Double], Int)].toDF()
+            .toDF("vec_id", "embedding", "label"),
+          "embedding", build(fam, df, built), streamed, dir,
+          tmp(s"graft_qi_space_ckpt_$fam"))
+      }
+      assert(e.getMessage.contains(
+        s"pins spherical=${built == Ann.Cosine} but the query metric is " +
+          s"$streamed"), e.getMessage)
+      assert(listing(dir).isEmpty)
+      assert(sp.streams.active.isEmpty)
     }
 }

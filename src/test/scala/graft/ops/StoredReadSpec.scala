@@ -35,12 +35,10 @@ class StoredReadSpec extends SparkSpecBase {
   private val queries = Seq(Seq(5.2, 1.3, 0.2, 1.0), Seq(0.3, 0.1, 0.4, 1.1))
 
   /** Quantized roots hold the even half and take the odd half as fresh
-    * rows when pinned (an unpinned root refuses appends). */
-  private def quantized(index: Ann.QuantIndex, pin: String => Unit)(
-      dir: String): Unit = {
+    * rows. */
+  private def quantized(index: Ann.QuantIndex)(dir: String): Unit = {
     Ann.writeQuantized(index.withRows(index.rows
       .filter(col("vec_id") % 2 === 0)), dir)
-    pin(dir)
     Ann.appendIdempotent(Ann.cellRoot(spark, dir, Some("embedding")), odd,
       "vec_id")
   }
@@ -57,22 +55,12 @@ class StoredReadSpec extends SparkSpecBase {
       "embedding", dims = 2, model, d)),
     "composed cosine" -> ((d: String) => Ann.writeMatryoshkaIvf(docs,
       "vec_id", "embedding", dims = 2, model, d, metric = Ann.Cosine)),
-    "SQ pinned" -> { (d: String) =>
-      val index = Ann.buildIvfSq(docs, "embedding", model, Ann.L2)
-      quantized(index, Ann.ensureQuantizedRoot(spark, _, index,
-        spherical = false))(d)
-    },
-    "PQ pinned cosine" -> { (d: String) =>
-      val index = Ann.buildIvfPq(docs, "embedding", model, m = 2,
-        Ann.Cosine)
-      quantized(index, Ann.ensureQuantizedRoot(spark, _, index,
-        spherical = true))(d)
-    },
-    "1-bit pinned" -> { (d: String) =>
-      val index = Ann.buildIvfBitq(docs, "embedding", model, Ann.L2)
-      quantized(index, Ann.ensureQuantizedRoot(spark, _, index,
-        spherical = false))(d)
-    },
+    "SQ pinned" -> quantized(
+      Ann.buildIvfSq(docs, "embedding", model, Ann.L2)),
+    "PQ pinned cosine" -> quantized(
+      Ann.buildIvfPq(docs, "embedding", model, m = 2, Ann.Cosine)),
+    "1-bit pinned" -> quantized(
+      Ann.buildIvfBitq(docs, "embedding", model, Ann.L2)),
     "SQ writeQuantized-only" -> ((d: String) => Ann.writeQuantized(
       Ann.buildIvfSq(docs, "embedding", model, Ann.L2), d)),
     "range" -> ((d: String) => Ann.writeRangeIndex(
@@ -113,7 +101,7 @@ class StoredReadSpec extends SparkSpecBase {
           q, dims = r.dims, candidates = k * 5, k = k, metric = r.metric)
           .select("vec_id", "pre_dist", "dist"), 3)
       case r: Ann.CellRoot.Quantized =>
-        val art = r.family.artifacts(spark, r.dir, model)
+        val art = r.family.artifacts(spark, r.dir, model, r.spherical)
         val main = art.unpack(spark.read.parquet(s"${r.dir}/${r.dataSub}"))
         val fresh = new java.io.File(s"${r.dir}/fresh")
         val all = if (!fresh.exists()) main else main.unionByName(
@@ -160,11 +148,9 @@ class StoredReadSpec extends SparkSpecBase {
       case r: Ann.CellRoot.Quantized => Seq(single,
         "knnJoinQuantizedFresh" -> (() => Ann.knnJoinQuantizedFresh(sp,
           dir, qs, "q_id", "qv", "vec_id", "embedding", r.metric, cells,
-          k).collect())) ++
-        // the binding refuses an unpinned root outright
-        (if (r.spherical.isDefined) Seq("quantizedRoot" -> (() =>
+          k).collect()),
+        "quantizedRoot" -> (() =>
           Binding.quantizedRoot(sp, dir, "embedding", "vec_id", cells)))
-        else Nil)
       case _: Ann.CellRoot.Range => Seq(
         "rangeSearchStoredSelf" -> (() => Ann.rangeSearchStoredSelf(sp,
           dir, "vec_id", "embedding", typedlit(queries.head), 1.0)
@@ -201,14 +187,11 @@ class StoredReadSpec extends SparkSpecBase {
         assert(e.getMessage.contains("torn cell merge"), who)
       }
       graft.io.Markers.remove(spark, root.dir, "_graft_merge_pending")
-      // a retrained model swapped in under the pinned fingerprint; the
-      // writeQuantized-only root pins none, so nothing can tell
+      // a retrained model swapped in under the pinned fingerprint
       Ann.buildIvf(docs.withColumn("label", (col("label") + 1) % 3),
           "label", "embedding")
         .centroids.write.mode("overwrite").parquet(s"${root.dir}/centroids")
-      if (name == "SQ writeQuantized-only")
-        readers(root).foreach { case (_, read) => read() }
-      else readers(root).foreach { case (who, read) =>
+      readers(root).foreach { case (who, read) =>
         val e = intercept[IllegalStateException](read())
         assert(e.getMessage.contains("different IVF model"), who)
       }

@@ -30,8 +30,8 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     val built = Ann.buildIvfSq(e, "embedding", model, Ann.Cosine)
     // NB: register with built.model — the spherical build normalizes
     // the centroids, and probes must be chosen against those
-    val index = Ann.IvfSqIndex(built.quantized.persist(),
-      built.bounds.persist(), built.model)
+    val index = built.copy(quantized = built.quantized.persist(),
+      bounds = built.bounds.persist())
     AnnIndex.install(spark)
     AnnIndex.register(Binding.Quantized("embedding", "vec_id", () => index,
       Ann.Cosine, probes = 3, refine = 5))
@@ -66,7 +66,7 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     val e = embeddings
     val model = Ann.buildIvf(e, "label", "embedding")
     val built = Ann.buildIvfBitq(e, "embedding", model, Ann.Cosine)
-    val index = Ann.IvfBitIndex(built.quantized.persist(), built.model)
+    val index = built.copy(quantized = built.quantized.persist())
     AnnIndex.install(spark)
     AnnIndex.register(Binding.Quantized("embedding", "vec_id", () => index,
       Ann.Cosine, probes = 3, refine = 5))
@@ -419,7 +419,6 @@ class AnnCosineDeleteSpec extends SparkSpecBase {
     val idx = Ann.buildIvfSq(reg.table(td), "v", model, Ann.L2)
     val root = Files.createTempDirectory("graft-qseat-root").toString
     Ann.writeQuantized(idx, root)
-    Ann.ensureQuantizedRoot(sp, root, idx, spherical = false)
     // drain one cluster's cell to a single row, then the MERGE seat
     val doomed = (5 until 30 by 3).map(_.toLong).toDF("rid")
     assert(Ann.deleteStoredIds(sp, s"$root/quantized", "rid",

@@ -325,8 +325,8 @@ class AnnRewriteSpec extends SparkSpecBase {
       "(corpus-wide candidate budgets would starve filtered results)") {
     val (e, model, _) = setup()
     val built = Ann.buildIvfSq(e, "embedding", model, Ann.L2)
-    val index = Ann.IvfSqIndex(built.quantized.persist(),
-      built.bounds.persist(), model)
+    val index = built.copy(quantized = built.quantized.persist(),
+      bounds = built.bounds.persist())
     // tight refine: were the rewrite to engage, the global top-10
     // candidates would shrink to ~1-2 rows under the 1-in-7 filter
     AnnIndex.register(Binding.Quantized("embedding", "vec_id", () => index,
@@ -393,7 +393,7 @@ class AnnRewriteSpec extends SparkSpecBase {
   test("quantized and maxsim registries collide loudly across owners") {
     val (e, model, _) = setup()
     val built = Ann.buildIvfSq(e, "embedding", model, Ann.L2)
-    val index = Ann.IvfSqIndex(built.quantized, built.bounds, model)
+    val index = built
     AnnIndex.register(Binding.Quantized("embedding", "vec_id", () => index,
       Ann.L2, probes = 3, refine = 5, owner = "tabA"))
     try {
@@ -445,8 +445,8 @@ class AnnRewriteSpec extends SparkSpecBase {
     val built = Ann.buildIvfSq(e, "embedding", model, Ann.L2)
     // persisted = the index at rest: phase-1 scans the materialized
     // codes, never the full-precision vector column
-    val index = Ann.IvfSqIndex(built.quantized.persist(),
-      built.bounds.persist(), model)
+    val index = built.copy(quantized = built.quantized.persist(),
+      bounds = built.bounds.persist())
     AnnIndex.register(Binding.Quantized("embedding", "vec_id", () => index,
       Ann.L2, probes = 3, refine = 5))
     try {
@@ -482,7 +482,7 @@ class AnnRewriteSpec extends SparkSpecBase {
       "two-phase path and matches the explicit operator") {
     val (e, model, _) = setup()
     val built = Ann.buildIvfBitq(e, "embedding", model, Ann.L2)
-    val index = Ann.IvfBitIndex(built.quantized.persist(), model)
+    val index = built.copy(quantized = built.quantized.persist())
     AnnIndex.register(Binding.Quantized("embedding", "vec_id", () => index,
       Ann.L2, probes = 3, refine = 5))
     try {
@@ -512,7 +512,7 @@ class AnnRewriteSpec extends SparkSpecBase {
     assert(Ann.defaultBitqRefine(Ann.Cosine) === 40)
     val (e, model, _) = setup()
     val built = Ann.buildIvfBitq(e, "embedding", model, Ann.Cosine)
-    val index = Ann.IvfBitIndex(built.quantized.persist(), model)
+    val index = built.copy(quantized = built.quantized.persist())
     // the candidate multiplier the rewrite uses for the bound index
     def refine = AnnIndex.lookup("embedding").collectFirst {
       case b: Binding.Quantized => b.refineFor(b.resolve()) }
@@ -532,8 +532,8 @@ class AnnRewriteSpec extends SparkSpecBase {
   test("quantized rewrite is a fixpoint on its own output") {
     val (e, model, _) = setup()
     val built = Ann.buildIvfSq(e, "embedding", model, Ann.L2)
-    val index = Ann.IvfSqIndex(built.quantized.persist(),
-      built.bounds.persist(), model)
+    val index = built.copy(quantized = built.quantized.persist(),
+      bounds = built.bounds.persist())
     AnnIndex.register(Binding.Quantized("embedding", "vec_id", () => index,
       Ann.L2, probes = 3, refine = 5))
     try {

@@ -136,20 +136,18 @@ class StreamSpec extends SparkSpecBase {
     assert(enc.filter(col("vec_id") === 10L)
       .select("pq_codes").head.getSeq[Int](0) === batchCodes)
     // same artifacts: restart allowed (idempotent root)
-    Ann.ensureQuantizedRoot(spark, dir, idx, spherical = false)
+    Ann.ensureQuantizedRoot(spark, dir, idx)
     // retrained codebooks (same geometry): refused by digest
     val retrained = Ann.PqModel(idx.pq.m, idx.pq.subDim,
       idx.pq.codebooks.map(_.map { case (id, c) =>
         (id, c.map(_ + 1.0)) }))
     val e1 = intercept[IllegalArgumentException] {
-      Ann.ensureQuantizedRoot(spark, dir, idx.copy(pq = retrained),
-        spherical = false)
+      Ann.ensureQuantizedRoot(spark, dir, idx.copy(pq = retrained))
     }
     assert(e1.getMessage.contains("digest"))
     // different geometry: refused by the marker
     val e2 = intercept[IllegalArgumentException] {
-      Ann.ensureQuantizedRoot(spark, dir, idx.copy(spherical = true),
-        spherical = true)
+      Ann.ensureQuantizedRoot(spark, dir, idx.copy(spherical = true))
     }
     assert(e2.getMessage.contains("geometry"))
   }
@@ -772,10 +770,10 @@ class StreamSpec extends SparkSpecBase {
     }
     assert(a === b)
     // same artifacts: restart allowed (idempotent root)
-    Ann.ensureQuantizedRoot(sp, dir, batch, spherical = false)
+    Ann.ensureQuantizedRoot(sp, dir, batch)
     // a cosine restart would mix two residual spaces: refused
     val e1 = intercept[IllegalArgumentException] {
-      Ann.ensureQuantizedRoot(sp, dir, batch, spherical = true)
+      Ann.ensureQuantizedRoot(sp, dir, batch.copy(spherical = true))
     }
     assert(e1.getMessage.contains("spherical"))
     // a retrained model: refused by the fingerprint marker
@@ -785,8 +783,7 @@ class StreamSpec extends SparkSpecBase {
         .withColumn("__cell", pmod(col("vec_id"), lit(4))),
       "__cell", "embedding")
     val e2 = intercept[IllegalStateException] {
-      Ann.ensureQuantizedRoot(sp, dir, batch.copy(model = model2),
-        spherical = false)
+      Ann.ensureQuantizedRoot(sp, dir, batch.copy(model = model2))
     }
     assert(e2.getMessage.contains("different IVF model"))
   }
@@ -1031,7 +1028,6 @@ class StreamSpec extends SparkSpecBase {
     val quant = tmp("graft-fam-sq")
     val sq = Ann.buildIvfSq(base, "embedding", model, Ann.L2)
     Ann.writeQuantized(sq, quant)
-    Ann.ensureQuantizedRoot(sp, quant, sq, spherical = false)
     val vecs = MemoryStream[(Long, Seq[Double], Int)].toDF()
       .toDF("vec_id", "embedding", "label")
     val docs = MemoryStream[(Long, Seq[Seq[Double]])].toDF()

@@ -13,14 +13,24 @@ with two spaces then `def `; members of nested types and `private` defs
 are not counted. `--defs` also prints those defs' names, sorted, one
 line per object, so two checkouts can be compared by name.
 
+`--against REV` compares the working tree with the git revision REV
+(its tracked files, read through `git show`): each file whose code-line
+count differs as `REV -> tree (delta)`, the totals per root, and per
+object the public-def counts with the added (+) and removed (-) names.
+The last line says how many counts differ, so "0 counts differ" means
+the tree and REV count the same.
+
 Run it from the root of a checkout; roots are relative to it.
 
 Usage: python3 tools/loc.py [root ...]        (default: src/main)
        python3 tools/loc.py --summary [root ...]  (totals only)
        python3 tools/loc.py --defs [root ...]     (plus the def names)
+       python3 tools/loc.py --against REV [root ...]
 """
 import re
+import subprocess
 import sys
+from collections import Counter
 from pathlib import Path
 
 # (object, the file that declares it)
@@ -67,13 +77,14 @@ def code_lines(text):
     return n
 
 
-def public_defs(name, path):
+def public_defs(name, text):
     """Names of the public defs in the block of top-level
-    `object <name>`, in declaration order (an overloaded name appears
-    once per def) — a file may declare several top-level objects."""
+    `object <name>` in `text`, in declaration order (an overloaded name
+    appears once per def) — a file may declare several top-level
+    objects."""
     names = []
     inside = False
-    for line in path.read_text().splitlines():
+    for line in text.splitlines():
         if not inside:
             inside = line.startswith(f"object {name} ")
         elif line.rstrip() == "}":
@@ -85,7 +96,57 @@ def public_defs(name, path):
     return names
 
 
+def git(*args):
+    return subprocess.run(["git", *args], check=True, capture_output=True,
+                          text=True).stdout
+
+
+def tree_sources(root):
+    """{path: text} of the .scala files under `root` in the working tree."""
+    return {str(f): f.read_text() for f in sorted(Path(root).rglob("*.scala"))}
+
+
+def rev_sources(rev, root):
+    """{path: text} of the tracked .scala files under `root` at `rev`."""
+    paths = git("ls-tree", "-r", "--name-only", rev, "--", root).split("\n")
+    return {p: git("show", f"{rev}:{p}") for p in paths if p.endswith(".scala")}
+
+
+def against(rev, roots):
+    """Print REV -> tree counts; returns the number of counts that
+    differ."""
+    differ = 0
+    for root in roots:
+        old = {p: code_lines(t) for p, t in rev_sources(rev, root).items()}
+        new = {p: code_lines(t) for p, t in tree_sources(root).items()}
+        for p in sorted(old.keys() | new.keys()):
+            a, b = old.get(p, 0), new.get(p, 0)
+            if a != b or (p in old) != (p in new):
+                differ += 1
+                print(f"{a:7d} -> {b:7d}  ({b - a:+d})  {p}")
+        a, b = sum(old.values()), sum(new.values())
+        print(f"{a:7d} -> {b:7d}  ({b - a:+d})  total code lines under "
+              f"{root} ({len(old)} -> {len(new)} files)")
+    for name, path in OBJECTS:
+        was = rev_sources(rev, str(path)).get(str(path), "")
+        now = path.read_text() if path.exists() else ""
+        a, b = public_defs(name, was), public_defs(name, now)
+        added = sorted((Counter(b) - Counter(a)).elements())
+        removed = sorted((Counter(a) - Counter(b)).elements())
+        differ += len(added) + len(removed)
+        names = " ".join([f"+{n}" for n in added] + [f"-{n}" for n in removed])
+        print(f"{len(a):7d} -> {len(b):7d}  ({len(b) - len(a):+d})  public "
+              f"defs in object {name}" + (f": {names}" if names else ""))
+    print(f"{differ} counts differ from {rev}")
+    return differ
+
+
 def main(argv):
+    if "--against" in argv:
+        i = argv.index("--against")
+        roots = argv[:i] + argv[i + 2:]
+        against(argv[i + 1], roots or ["src/main"])
+        return
     flags = {"--summary", "--defs"}
     summary = "--summary" in argv
     roots = [a for a in argv if a not in flags] or ["src/main"]
@@ -100,7 +161,7 @@ def main(argv):
         print(f"{total:7d}  total code lines under {root} "
               f"({len(files)} files)")
     for name, path in OBJECTS:
-        defs = public_defs(name, path)
+        defs = public_defs(name, path.read_text())
         print(f"{len(defs):7d}  public defs in object {name}")
         if "--defs" in argv:
             print(f"         {name}: {' '.join(sorted(defs))}")
