@@ -1224,7 +1224,7 @@ object ScaleSmoke {
     }
 
     // Streamed DENSE cadence at 16× (VERDICT r17 #4): the s33
-    // lifecycle's per-batch cost — ingestDenseRootAppend (idempotent
+    // lifecycle's per-batch cost — Stream.ingestAppend (idempotent
     // assign-and-append) + the wired split policy — timed ALONE, so a
     // regression in the dense seat's per-batch path can't hide behind
     // the argument that its pieces are timed elsewhere. Root build
@@ -1256,9 +1256,10 @@ object ScaleSmoke {
       val ckpt = java.nio.file.Files
         .createTempDirectory("graft_smoke_sdense_ckpt").toString
       val input = MemoryStream[(Long, Seq[Double], Int)]
-      val q = graft.streaming.Stream.ingestDenseRootAppend(
+      val q = graft.streaming.Stream.ingestAppend(
         input.toDF().toDF("vec_id", "embedding", "label"), "vec_id",
-        sdDir, ckpt, splitMaxRows = Some(math.max(1L, maxOcc - 1)))
+        ops.Ann.cellRoot(spark, sdDir, None), ckpt,
+        splitMaxRows = Some(math.max(1L, maxOcc - 1)))
       try {
         time("stream_dense_append") {
           val batches = 4
@@ -1313,10 +1314,11 @@ object ScaleSmoke {
       val ckpt = java.nio.file.Files
         .createTempDirectory("graft_smoke_sqstream_ckpt").toString
       val input = MemoryStream[(Long, Seq[Double], Int)]
-      val q = graft.streaming.Stream.ingestQuantizedFreshAppend(
+      val q = graft.streaming.Stream.ingestAppend(
         input.toDF().toDF("vec_id", "embedding", "label"), "vec_id",
-        "embedding", sqDir, ckpt, compactRatio = Some(0.0),
-        splitMaxRows = Some(math.max(1L, maxOcc - 1)))
+        ops.Ann.cellRoot(spark, sqDir, Some("embedding")), ckpt,
+        splitMaxRows = Some(math.max(1L, maxOcc - 1)),
+        compactRatio = Some(0.0))
       try {
         time("stream_quantized_append") {
           val batches = 4
@@ -1467,11 +1469,12 @@ object ScaleSmoke {
 
     if (only.forall(_.exists("append_ivf_cells".startsWith))) {
       val apModel = ops.Ann.buildIvf(vecs, "label", "embedding")
-      val apPath = java.nio.file.Files
-        .createTempDirectory("graft_smoke_apivf").toString + "/rows"
-      ops.Ann.writePartitioned(
-        ops.Ann.assign(vecs, "embedding", apModel, ops.Ann.L2), apPath)
-      ops.Ann.ensureIvfModelMarker(spark, apPath, apModel)
+      val apRoot = java.nio.file.Files
+        .createTempDirectory("graft_smoke_apivf").toString
+      ops.Ann.writeDenseRoot(
+        ops.Ann.assign(vecs, "embedding", apModel, ops.Ann.L2),
+        "embedding", apModel, ops.Ann.L2, apRoot)
+      val apPath = s"$apRoot/rows"
       // a 200-row batch drawn from TWO ASSIGNED cells (labels don't
       // cluster the synthetic embeddings — cell membership does):
       // touches exactly 2 of the model's cells; fresh ids beyond
@@ -1484,8 +1487,8 @@ object ScaleSmoke {
         .localCheckpoint(true)
       val apBatchN = apBatch.count()
       time("append_ivf_cells") {
-        val n = ops.Ann.appendIvfIdempotent(spark, apPath, apModel,
-          apBatch, "vec_id", "embedding")
+        val n = ops.Ann.appendIdempotent(
+          ops.Ann.cellRoot(spark, apRoot, None), apBatch, "vec_id")
         require(n == apBatchN, s"appended $n of $apBatchN batch rows")
         n
       }
@@ -1504,8 +1507,8 @@ object ScaleSmoke {
             touched.length.toDouble / cellCount * 2,
           s"append probe not cell-bounded: $probedRows of $totalRows " +
             s"rows under ${touched.length} of $cellCount touched cells")
-        require(ops.Ann.appendIvfIdempotent(spark, apPath, apModel,
-            apBatch, "vec_id", "embedding") == 0L,
+        require(ops.Ann.appendIdempotent(
+            ops.Ann.cellRoot(spark, apRoot, None), apBatch, "vec_id") == 0L,
           "redelivered batch appended rows at 16x")
       }
     }

@@ -647,8 +647,8 @@ object Ann {
   }
 
   /** The ONE mixed-schema guard for every graduated-root append
-    * (every [[CellRoot]] family, flat dense cells, BM25 and sparse
-    * postings): batch and stored schemas must agree as
+    * (every [[CellRoot]] family, BM25 and sparse postings): batch
+    * and stored schemas must agree as
     * nullability-normalized (name → type) maps — mode("append")
     * happily writes files whose later reads resolve from an arbitrary
     * footer. `exempt` names the partition column(s): directory-name
@@ -1116,43 +1116,6 @@ object Ann {
     assigned.write.mode("overwrite").partitionBy("centroid_id")
       .parquet(path)
 
-  /** Batch APPEND into a flat [[writePartitioned]] dense-cell layout
-    * made REPLAY-SAFE by id — the caller-held-model member of the
-    * graduated-root maintenance family (the self-contained roots,
-    * quantized ones included, grow through [[appendIdempotent]]; a
-    * quantized root's raw rows land in its `fresh/` side table, since
-    * its codes are bound to training-time bounds/codebooks). New rows
-    * are assigned under the model the layout's fingerprint pins (a
-    * retrained model refuses via [[ensureIvfModelMarker]]), rows whose
-    * id already exists in the touched cells are dropped
-    * (crash-redelivery appends nothing), and the batch schema must
-    * match the stored rows nullability-normalized. A flat layout
-    * never splits, so the touched-cells probe is always sound.
-    * Returns rows appended. */
-  def appendIvfIdempotent(spark: org.apache.spark.sql.SparkSession,
-                          path: String, model: IvfModel,
-                          newRows: DataFrame, idCol: String,
-                          vecCol: String,
-                          metric: Metric = L2): Long = {
-    // the marker must EXIST — ensureIvfModelMarker alone would ADOPT
-    // the caller's model on an unmarked layout, silently mixing two
-    // geometries when the caller's model is a retrain (the pin is
-    // declared at build time, validated here)
-    if (readIvfModelMarker(spark, path).isEmpty)
-      throw new IllegalStateException(
-        s"appendIvfIdempotent: $path has no IVF model marker — pin " +
-          "the build model first (ensureIvfModelMarker at write time)")
-    ensureIvfModelMarker(spark, path, model)
-    requireBatchLayout(spark, path)
-    val stored = spark.read.parquet(path)
-    val assigned = assign(newRows, vecCol, model, metric)
-    val touched = distinctLongKeys(assigned, col(model.idCol))
-    if (touched.isEmpty) return 0L
-    appendAbsent(assigned,
-      stored.filter(col(model.idCol).isin(touched: _*)).select(col(idCol)),
-      idCol, model.idCol, stored.schema, path, "appendIvfIdempotent")
-  }
-
   /** The ONE write step of every replay-safe append (and of the
     * quantized compaction): drop the rows whose `idCol` is already in
     * `existing`, materialize the survivors once (micro-batch-sized;
@@ -1183,27 +1146,6 @@ object Ann {
     }
     n
   }
-
-  /** [[appendIvfIdempotent]] for a GRADUATED maxsim (multivec IVF)
-    * layout — the MULTIVEC member of the graduated-root maintenance
-    * family, closing its last modality (range, composed matryoshka,
-    * BM25, sparse, dense cells, quantized fresh were the others): the
-    * at-rest maxsim layout IS an IVF layout over the persisted
-    * token-mean (`Stream.ingestMaxsim`'s delegation, at rest), so the
-    * append computes the SAME summarized mean ([[tokenMeanCol]],
-    * identical dim and rounding — the one transform both build and
-    * query paths share) and delegates with the family's pinned
-    * spherical assignment (cosine, `buildMaxsimIvf`'s convention).
-    * Id-keyed replay-safe; marker-must-exist, retrained-model and
-    * mixed-schema refusals all inherited. Returns rows appended. */
-  def appendMaxsimIdempotent(spark: org.apache.spark.sql.SparkSession,
-                             path: String, model: IvfModel,
-                             newDocs: DataFrame, idCol: String,
-                             mvCol: String, dim: Int,
-                             meanCol: String = "mv_mean"): Long =
-    appendIvfIdempotent(spark, path, model,
-      newDocs.withColumn(meanCol, tokenMeanCol(col(mvCol), dim)),
-      idCol, meanCol, Cosine)
 
   /** Deterministic digest of a model's centroid set (id-sorted, exact
     * double rendering) — the identity a GROWING layout must pin: rows
@@ -1435,14 +1377,16 @@ object Ann {
     }
 
   /** GRADUATE a flat [[writePartitioned]] layout into a
-    * self-contained dense root IN PLACE — the migration seat for
-    * every layout [[appendIvfIdempotent]] / `ingestIvfAppend` grew
-    * before round 17: the top-level cell directories move (atomic
-    * per-dir renames — metadata ops, zero data bytes) under
-    * `dir/rows`, the caller's model (which MUST be the layout's pin
-    * — validated, never adopted) lands as `dir/centroids`, and the
-    * family marker commits last. Stop-the-world like every
-    * graduation ([[graft.streaming.Stream.compactStored]]'s
+    * self-contained dense root IN PLACE — the step a flat layout takes
+    * before it can grow: a flat layout stores only its model's
+    * fingerprint, so nothing appends to it; the graduated root owns
+    * its centroids and grows through [[appendIdempotent]] /
+    * `Stream.ingestAppend` like every cell root. The top-level cell
+    * directories move (atomic per-dir renames — metadata ops, zero
+    * data bytes) under `dir/rows`, the caller's model (which MUST be
+    * the layout's pin — validated, never adopted) lands as
+    * `dir/centroids`, and the family marker commits last.
+    * Stop-the-world like every graduation ([[graft.streaming.Stream.compactStored]]'s
     * contract): readers of the flat path must be quiesced first — a
     * half-moved dir reads LOUDLY wrong (conflicting partition
     * structures), never silently partial, and re-running this op
@@ -1486,19 +1430,6 @@ object Ann {
     graft.io.Markers.write(spark, dir, DenseCellsMarker,
       s"${metricToken(metric)}|$vecCol")
   }
-
-  /** [[appendIdempotent]] for a MAXSIM dense root (a
-    * [[writeDenseRoot]] layout over the persisted token-mean, metric
-    * Cosine — [[appendMaxsimIdempotent]]'s self-contained twin): the
-    * summarized mean is computed by the ONE transform both build and
-    * query share ([[tokenMeanCol]]) and the dense append does the
-    * rest, so the two paths cannot drift. */
-  def appendMaxsimRootIdempotent(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      newDocs: DataFrame, idCol: String, mvCol: String, dim: Int,
-      meanCol: String = "mv_mean"): Long =
-    appendIdempotent(cellRoot(spark, dir, None),
-      newDocs.withColumn(meanCol, tokenMeanCol(col(mvCol), dim)), idCol)
 
   /** Scalar-quantization (SQ) model: per-dimension [min, max] over the
     * corpus. The reference's index quantizes vectors internally (RaBitQ
@@ -2347,7 +2278,8 @@ object Ann {
     * moved rows, the side rows a split inherits, the `fresh/` refusal,
     * the per-row health distance and the steps of a replay-safe
     * append — and [[splitOverfull]], [[mergeUnderfull]],
-    * [[indexHealth]] and [[appendIdempotent]] are written once over
+    * [[indexHealth]], [[appendIdempotent]] and its stream
+    * [[graft.streaming.Stream.ingestAppend]] are written once over
     * it; every stored reader opens it through [[CellRoot.readModel]],
     * and [[searchStored]] takes each family's probe space and ranking
     * step from it. A case holds the root's IMMUTABLE identity (family,
@@ -2395,6 +2327,8 @@ object Ann {
       ensureIvfModelMarker(spark, dir, model)
       model
     }
+    /** The batch column an append assigns on. */
+    private[graft] def assignCol: String
     /** A batch in the stored row form, carrying the cell column. */
     private[ops] def appendRows(batch: DataFrame, model: IvfModel,
                                 idCol: String): DataFrame =
@@ -2482,6 +2416,7 @@ object Ann {
       private[ops] def trainSpace: (DataFrame => DataFrame, String) =
         (identity[DataFrame] _, vec)
       override private[ops] def radiiVecCol: Option[String] = Some(vec)
+      private[graft] def assignCol: String = vec
       private[ops] def reassigner: (DataFrame, IvfModel) => DataFrame = {
         val v = vec
         (rows, reduced) => assign(rows, v, reduced, L2)
@@ -2543,6 +2478,7 @@ object Ann {
                            dir: String, metric: Metric, vecCol: String)
         extends CellRoot {
       private[ops] def kind: String = "dense"
+      private[graft] def assignCol: String = vecCol
       private[ops] def trainSpace: (DataFrame => DataFrame, String) =
         if (metric == Cosine)
           ((df: DataFrame) => withNormalized(df, vecCol, "__nv"), "__nv")
@@ -2587,12 +2523,14 @@ object Ann {
         requireNoPendingMerge(spark, dir)
         pinnedModel
       }
+      private[graft] def assignCol: String = vecCol.getOrElse(
+        throw new IllegalStateException(s"$dir is a composed " +
+          "matryoshka-IVF root: an append slices the batch's vector " +
+          "column, and none was named"))
       override private[ops] def appendRows(batch: DataFrame,
                                            model: IvfModel,
                                            idCol: String): DataFrame = {
-        val vec = vecCol.getOrElse(throw new IllegalStateException(
-          s"$dir is a composed matryoshka-IVF root: an append slices " +
-            "the batch's vector column, and none was named"))
+        val vec = assignCol
         val keep = (spark.read.parquet(s"$dir/rows").columns.toSet --
           Set(idCol, "emb_pre", "emb_full", model.idCol)).toSeq.sorted
         keep.foreach(c => require(batch.columns.contains(c),
@@ -2744,6 +2682,7 @@ object Ann {
         throw new IllegalStateException(s"$dir is a quantized root: " +
           "moved rows re-encode from the table's vector column, and " +
           "none was named"))
+      private[graft] def assignCol: String = vec
       override private[ops] def requireMaintainable(who: String): Unit =
         require(!freshExists(spark, dir),
           s"$who: $dir carries a fresh/ side table — compact it first " +
@@ -2893,7 +2832,8 @@ object Ann {
 
   /** Batch APPEND into a [[CellRoot]], REPLAY-SAFE by id — the one
     * growth path of every self-contained cell family (dense and
-    * maxsim, composed matryoshka-IVF, range, quantized). A
+    * maxsim, composed matryoshka-IVF, range, quantized), and the
+    * per-batch step of [[graft.streaming.Stream.ingestAppend]]. A
     * foreachBatch sink can redeliver a batch after a crash, and a
     * blind re-append would duplicate every row, so under the
     * immutable-row contract (one id, one vector) rows whose `idCol`
@@ -4928,8 +4868,7 @@ object Ann {
     * exists — the caller can log the decision. Results are identical
     * across the trigger by [[compactQuantizedFresh]]'s contract (the
     * s26 pin); callers wire it post-append
-    * ([[graft.streaming.Stream.ingestQuantizedFreshAppend]]'s
-    * `compactRatio`) or at attach
+    * ([[graft.streaming.Stream.ingestAppend]]'s `compactRatio`) or at attach
     * ([[graft.core.Engine]]`.compactFreshIfNeeded`). */
   def compactQuantizedFreshIfNeeded(root: CellRoot.Quantized,
                                     idCol: String,

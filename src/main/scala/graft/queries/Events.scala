@@ -599,7 +599,7 @@ object Events {
   }
 
   /** s19: streamed MAINTENANCE of a graduated range root
-    * ([[graft.streaming.Stream.ingestRangeAppend]]) — the one index
+    * ([[graft.streaming.Stream.ingestAppend]]) — the one index
     * family whose streaming story previously stopped at graduation:
     * half the corpus is batch-built into a
     * [[graft.ops.Ann.writeRangeIndex]] root, the other half arrives
@@ -636,9 +636,9 @@ object Events {
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_s19_ckpt").toString
     val input = MemoryStream[(Long, Seq[Double], Int)]
-    val q = graft.streaming.Stream.ingestRangeAppend(
+    val q = graft.streaming.Stream.ingestAppend(
       input.toDF().toDF("vec_id", "embedding", "label"), "vec_id",
-      "embedding", root, ckpt)
+      graft.ops.Ann.cellRoot(s, root, Some("embedding")), ckpt)
     try {
       val batches = 3
       (0 until batches).foreach { b =>
@@ -733,7 +733,7 @@ object Events {
       .head().getSeq[Double](0).toSeq
 
   /** s21: streamed MAINTENANCE of a graduated composed matryoshka-IVF
-    * root ([[graft.streaming.Stream.ingestMatryoshkaIvfAppend]]) —
+    * root ([[graft.streaming.Stream.ingestAppend]]) —
     * s19's twin for the r78 layout: half the corpus batch-built under
     * the full-corpus model, the other half in three micro-batches
     * through foreachBatch over the id-keyed replay-safe append. Pins:
@@ -757,9 +757,9 @@ object Events {
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_s21_ckpt").toString
     val input = MemoryStream[(Long, Seq[Double])]
-    val q = graft.streaming.Stream.ingestMatryoshkaIvfAppend(
-      input.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-      root, ckpt)
+    val q = graft.streaming.Stream.ingestAppend(
+      input.toDF().toDF("vec_id", "embedding"), "vec_id",
+      graft.ops.Ann.cellRoot(s, root, Some("embedding")), ckpt)
     try {
       val batches = 3
       (0 until batches).foreach { b =>
@@ -877,15 +877,16 @@ object Events {
     df.select(col("id").as("doc_id"), col("score"))
   }
 
-  /** s24: streamed MAINTENANCE of a graduated dense-cell layout
-    * ([[graft.streaming.Stream.ingestIvfAppend]]) — the plain-IVF
+  /** s24: streamed MAINTENANCE of a dense cell root
+    * ([[graft.streaming.Stream.ingestAppend]]) — the plain-IVF
     * member completing the graduated-root maintenance family (s19
-    * range, s21 composed matryoshka, s22 BM25, s23 sparse; the
-    * quantized layouts rebuild by design): half the corpus
-    * batch-written under the full-corpus label model, the other half
-    * in three micro-batches. Pins: a replayed batch appends zero
-    * rows; the probed stored search partition-prunes the grown
-    * layout and lands on r09's probe replay verbatim. */
+    * range, s21 composed matryoshka, s22 BM25, s23 sparse): half the
+    * corpus written as a [[graft.ops.Ann.writeDenseRoot]] root under
+    * the full-corpus label model, the other half in three
+    * micro-batches. Pins: a replayed batch appends zero rows; the
+    * probed stored search ([[graft.ops.Ann.searchStored]])
+    * partition-prunes the grown root and lands on r09's probe replay
+    * verbatim. */
   def streamIvfAppend(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     implicit val sc = s.sqlContext
@@ -896,15 +897,11 @@ object Events {
       .select(col("vec_id"),
         col("embedding").cast("array<double>").as("embedding"),
         col("label"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_s24_rows").toString + "/rows"
-    graft.ops.Ann.writePartitioned(
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_s24_root").toString
+    graft.ops.Ann.writeDenseRoot(
       graft.ops.Ann.assign(base, "embedding", model, graft.ops.Ann.L2),
-      path)
-    // the model pin is DECLARED at build time; the append path only
-    // validates (an unmarked layout refuses — adopt-on-append would
-    // let a retrained model silently mix two geometries)
-    graft.ops.Ann.ensureIvfModelMarker(s, path, model)
+      "embedding", model, graft.ops.Ann.L2, root)
     val rows = e.filter(col("vec_id") % 2 === 1)
       .select(col("vec_id"), col("embedding").cast("array<double>"),
         col("label"))
@@ -912,9 +909,9 @@ object Events {
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_s24_ckpt").toString
     val input = MemoryStream[(Long, Seq[Double], Int)]
-    val q = graft.streaming.Stream.ingestIvfAppend(
+    val q = graft.streaming.Stream.ingestAppend(
       input.toDF().toDF("vec_id", "embedding", "label"), "vec_id",
-      "embedding", model, graft.ops.Ann.L2, path, ckpt)
+      graft.ops.Ann.cellRoot(s, root, None), ckpt)
     try {
       val batches = 3
       (0 until batches).foreach { b =>
@@ -923,17 +920,15 @@ object Events {
         q.processAllAvailable()
       }
     } finally q.stop()
-    val dup = graft.ops.Ann.appendIvfIdempotent(s, path, model,
+    val dup = graft.ops.Ann.appendIdempotent(
+      graft.ops.Ann.cellRoot(s, root, None),
       rows.take(rows.length / 3).toDF("vec_id", "embedding", "label"),
-      "vec_id", "embedding")
+      "vec_id")
     require(dup == 0L,
       s"s24: replayed batch appended $dup rows — append not replay-safe")
-    val qv = e.filter(col("vec_id") === 5)
-      .select(col("embedding").cast("array<double>"))
-      .head().getSeq[Double](0).toSeq
-    val df = graft.ops.Ann.searchIvfStored(s, path, "vec_id",
-      "embedding", model, typedlit(qv), graft.ops.Ann.L2, probes = 3,
-      k = 10)
+    val df = graft.ops.Ann.searchStored(
+      graft.ops.Ann.cellRoot(s, root, None), "vec_id", qvecSeqOf(s, d, 5),
+      probes = 3, k = 10)
     val phys = df.queryExecution.executedPlan.toString
     Retrieval.assertPartitionPruned(phys, "centroid_id",
       "grown dense-cell search")
@@ -985,9 +980,9 @@ object Events {
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_s25_ckpt").toString
     val input = MemoryStream[(Long, Seq[Double], Int)]
-    val q = graft.streaming.Stream.ingestQuantizedFreshAppend(
+    val q = graft.streaming.Stream.ingestAppend(
       input.toDF().toDF("vec_id", "embedding", "label"), "vec_id",
-      "embedding", dir, ckpt)
+      graft.ops.Ann.cellRoot(s, dir, Some("embedding")), ckpt)
     try {
       val batches = 3
       (0 until batches).foreach { b =>
@@ -1021,7 +1016,7 @@ object Events {
     * existed and was oracle-pinned a no-op, but nothing TRIGGERED it;
     * at 100 TB fresh/ grows until someone remembers). s26's exact
     * chain with `compactRatio = 0.15` wired into
-    * [[graft.streaming.Stream.ingestQuantizedFreshAppend]] — 0.15,
+    * [[graft.streaming.Stream.ingestAppend]] — 0.15,
     * NOT the asymptotic per-batch ratio (1/6 ÷ 1/2 = 1/3)'s
     * boundary-adjacent 0.2: the trigger is a STRICT >, and a corpus
     * whose streamed half divides evenly by 3 would put a batch
@@ -1057,9 +1052,10 @@ object Events {
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_s28_ckpt").toString
     val input = MemoryStream[(Long, Seq[Double], Int)]
-    val q = graft.streaming.Stream.ingestQuantizedFreshAppend(
+    val q = graft.streaming.Stream.ingestAppend(
       input.toDF().toDF("vec_id", "embedding", "label"), "vec_id",
-      "embedding", dir, ckpt, compactRatio = Some(0.15))
+      graft.ops.Ann.cellRoot(s, dir, Some("embedding")), ckpt,
+      compactRatio = Some(0.15))
     try {
       val batches = 3
       (0 until batches).foreach { b =>
@@ -1122,9 +1118,9 @@ object Events {
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_s26_ckpt").toString
     val input = MemoryStream[(Long, Seq[Double], Int)]
-    val q = graft.streaming.Stream.ingestQuantizedFreshAppend(
+    val q = graft.streaming.Stream.ingestAppend(
       input.toDF().toDF("vec_id", "embedding", "label"), "vec_id",
-      "embedding", dir, ckpt)
+      graft.ops.Ann.cellRoot(s, dir, Some("embedding")), ckpt)
     try {
       val batches = 3
       (0 until batches).foreach { b =>
@@ -1187,9 +1183,9 @@ object Events {
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_s27_ckpt").toString
     val input = MemoryStream[(Long, Seq[Double], Int)]
-    val q = graft.streaming.Stream.ingestQuantizedFreshAppend(
+    val q = graft.streaming.Stream.ingestAppend(
       input.toDF().toDF("vec_id", "embedding", "label"), "vec_id",
-      "embedding", dir, ckpt)
+      graft.ops.Ann.cellRoot(s, dir, Some("embedding")), ckpt)
     try {
       val batches = 3
       (0 until batches).foreach { b =>
@@ -1217,7 +1213,7 @@ object Events {
     * was the actuator for the r66 health signal, but nothing
     * triggered it, so a streamed root's hot cells grew until probes
     * over-read. s19's chain runs with
-    * [[graft.streaming.Stream.ingestRangeAppend]]'s new
+    * [[graft.streaming.Stream.ingestAppend]]'s
     * `splitMaxRows` wired the way an operator would wire it — from
     * the OBSERVED occupancy (the r66 health signal): one below the
     * full-corpus maximum cell, so the policy MUST fire by stream end
@@ -1264,9 +1260,10 @@ object Events {
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_s29_ckpt").toString
     val input = MemoryStream[(Long, Seq[Double], Int)]
-    val q = graft.streaming.Stream.ingestRangeAppend(
+    val q = graft.streaming.Stream.ingestAppend(
       input.toDF().toDF("vec_id", "embedding", "label"), "vec_id",
-      "embedding", root, ckpt, splitMaxRows = Some(maxRows))
+      graft.ops.Ann.cellRoot(s, root, Some("embedding")), ckpt,
+      splitMaxRows = Some(maxRows))
     try {
       val batches = 2 // no-fire batch, then the firing one
       (0 until batches).foreach { b =>
@@ -1314,7 +1311,7 @@ object Events {
     * north-star layout, closing the asymmetry where the layout the
     * reference's own index runs (vchordrq holds IVF and truncation
     * together) was the one whose hot cells nothing bounded:
-    * [[graft.streaming.Stream.ingestMatryoshkaIvfAppend]]'s new
+    * [[graft.streaming.Stream.ingestAppend]]'s
     * `splitMaxRows` is wired from the OBSERVED occupancy (one below
     * the full-corpus maximum cell, so the policy MUST fire by stream
     * end while near-balanced siblings stay put — the s29 lesson),
@@ -1355,9 +1352,10 @@ object Events {
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_s31_ckpt").toString
     val input = MemoryStream[(Long, Seq[Double])]
-    val q = graft.streaming.Stream.ingestMatryoshkaIvfAppend(
-      input.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-      root, ckpt, splitMaxRows = Some(maxRows))
+    val q = graft.streaming.Stream.ingestAppend(
+      input.toDF().toDF("vec_id", "embedding"), "vec_id",
+      graft.ops.Ann.cellRoot(s, root, Some("embedding")), ckpt,
+      splitMaxRows = Some(maxRows))
     try {
       val batches = 2 // no-fire batch, then the firing one
       (0 until batches).foreach { b =>
@@ -1387,7 +1385,7 @@ object Events {
 
   /** s32: the QUANTIZED lifecycle closed — compaction and the
     * overfull-cell split run as ONE streamed policy cadence
-    * ([[graft.streaming.Stream.ingestQuantizedFreshAppend]]'s
+    * ([[graft.streaming.Stream.ingestAppend]]'s
     * `compactRatio` + `splitMaxRows`): each batch appends raw into
     * `fresh/`, the ratio-0 policy folds it immediately (the s28
     * trigger), and the split re-partitions any cell past the
@@ -1429,10 +1427,11 @@ object Events {
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_s32_ckpt").toString
     val input = MemoryStream[(Long, Seq[Double], Int)]
-    val q = graft.streaming.Stream.ingestQuantizedFreshAppend(
+    val q = graft.streaming.Stream.ingestAppend(
       input.toDF().toDF("vec_id", "embedding", "label"), "vec_id",
-      "embedding", dir, ckpt, compactRatio = Some(0.0),
-      splitMaxRows = Some(math.max(1L, maxOcc - 1)))
+      graft.ops.Ann.cellRoot(s, dir, Some("embedding")), ckpt,
+      splitMaxRows = Some(math.max(1L, maxOcc - 1)),
+      compactRatio = Some(0.0))
     try {
       val batches = 2
       (0 until batches).foreach { b =>
@@ -1463,13 +1462,15 @@ object Events {
   /** s30: streamed MAINTENANCE of a GRADUATED maxsim layout — the
     * multivec member closing the graduated-root append family's last
     * modality (s19 range, s21 composed, s22 BM25, s23 sparse, s24
-    * dense, s25-s27 quantized fresh): the root is batch-built from
-    * the EVEN half of s11's corpus under the full-corpus label-mean
-    * model (the offline seat — an ingest model always predates the
-    * stream), the odd half streams through
-    * [[graft.streaming.Stream.ingestMaxsimAppend]] (per-batch
-    * token-mean summarization + spherical assignment + id-keyed
-    * replay-safe append), a redelivered batch appends ZERO, and
+    * dense, s25-s27 quantized fresh): the root is a cosine
+    * [[graft.ops.Ann.writeDenseRoot]] over the persisted token mean,
+    * built from the EVEN half of s11's corpus under the full-corpus
+    * label-mean model (the offline seat — an ingest model always
+    * predates the stream), the odd half streams through
+    * [[graft.streaming.Stream.ingestAppend]] (per-batch token mean by
+    * [[graft.ops.Ann.tokenMeanCol]], the call that built the root, +
+    * the root's cosine assignment + id-keyed replay-safe append), a
+    * redelivered batch appends ZERO, and
     * s11's exact two-phase read answers r26's oracle verbatim —
     * grown equals built for the multivec family too. */
   def streamMaxsimAppend(s: SparkSession, d: String): DataFrame = {
@@ -1491,21 +1492,23 @@ object Events {
       .createTempDirectory("graft_s30_dir").toString
     // graduated root from the even half: the same columns
     // ingestMaxsim lands (id, vecs, mean) + the cell partition
-    graft.ops.Ann.writePartitioned(
+    graft.ops.Ann.writeDenseRoot(
       graft.ops.Ann.assign(
         withMean.filter(col("vec_id") % 2 === 0)
           .select(col("vec_id"), col("vecs"), col("mv_mean")),
-        "mv_mean", model, graft.ops.Ann.Cosine), dir)
-    graft.ops.Ann.ensureIvfModelMarker(s, dir, model)
+        "mv_mean", model, graft.ops.Ann.Cosine),
+      "mv_mean", model, graft.ops.Ann.Cosine, dir)
+    def withMeanOf(df: DataFrame) =
+      df.withColumn("mv_mean", graft.ops.Ann.tokenMeanCol(col("vecs"), dim))
     val rows = docs.filter(col("vec_id") % 2 === 1)
       .select(col("vec_id"), col("vecs"))
       .as[(Long, Seq[Seq[Double]])].collect().toSeq.sortBy(_._1)
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_s30_ckpt").toString
     val input = MemoryStream[(Long, Seq[Seq[Double]])]
-    val q = graft.streaming.Stream.ingestMaxsimAppend(
-      input.toDF().toDF("vec_id", "vecs"), "vec_id", "vecs", dim,
-      model, dir, ckpt)
+    val q = graft.streaming.Stream.ingestAppend(
+      withMeanOf(input.toDF().toDF("vec_id", "vecs")), "vec_id",
+      graft.ops.Ann.cellRoot(s, dir, None), ckpt)
     try {
       val batches = 3
       (0 until batches).foreach { b =>
@@ -1515,12 +1518,13 @@ object Events {
       }
     } finally q.stop()
     // redelivery appends ZERO (id-keyed replay safety)
-    val dup = graft.ops.Ann.appendMaxsimIdempotent(s, dir, model,
-      rows.take(rows.length / 3).toDF("vec_id", "vecs"), "vec_id",
-      "vecs", dim)
+    val dup = graft.ops.Ann.appendIdempotent(
+      graft.ops.Ann.cellRoot(s, dir, None),
+      withMeanOf(rows.take(rows.length / 3).toDF("vec_id", "vecs")),
+      "vec_id")
     require(dup == 0L,
       s"s30: replayed batch appended $dup rows — append not replay-safe")
-    val stored = s.read.parquet(dir)
+    val stored = s.read.parquet(s"$dir/rows")
     require(stored.count() == docs.count(),
       "s30: grown root does not hold the full corpus")
     val cand = graft.ops.Ann.maxsimCandidatesIvf(stored, "vec_id",
@@ -1535,12 +1539,12 @@ object Events {
 
   /** s33: threshold-triggered OVERFULL-CELL SPLIT on the streamed
     * DENSE-root maintenance path — s29's recipe on the FOURTH and
-    * last cell-partitioned family (VERDICT r16 #1: the plain layout
-    * `ingestIvfAppend` grows had no actuator, and COULD not have one
-    * — its geometry lived in the caller's hands; the self-contained
-    * dense root owns its centroids, so
-    * [[graft.streaming.Stream.ingestDenseRootAppend]]'s `splitMaxRows`
-    * can retrain and re-pin without stranding anyone's model). The
+    * last cell-partitioned family (VERDICT r16 #1: a flat
+    * [[graft.ops.Ann.writePartitioned]] layout has no actuator, and
+    * COULD not have one — its geometry lives in the caller's hands;
+    * the self-contained dense root owns its centroids, so
+    * [[graft.streaming.Stream.ingestAppend]]'s `splitMaxRows` can
+    * retrain and re-pin without stranding anyone's model). The
     * even half lands as a [[graft.ops.Ann.writeDenseRoot]] root, the
     * odd half streams in with the observed-occupancy threshold, and
     * the final search at all-probe answers r01's index-free exact
@@ -1581,9 +1585,10 @@ object Events {
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_s33_ckpt").toString
     val input = MemoryStream[(Long, Seq[Double], Int)]
-    val q = graft.streaming.Stream.ingestDenseRootAppend(
+    val q = graft.streaming.Stream.ingestAppend(
       input.toDF().toDF("vec_id", "embedding", "label"), "vec_id",
-      root, ckpt, splitMaxRows = Some(maxRows))
+      graft.ops.Ann.cellRoot(s, root, None), ckpt,
+      splitMaxRows = Some(maxRows))
     try {
       val batches = 2 // no-fire batch, then the firing one
       (0 until batches).foreach { b =>
@@ -1623,17 +1628,18 @@ object Events {
   /** s34: threshold-triggered OVERFULL-CELL SPLIT on the streamed
     * MAXSIM (multivec) maintenance path — the graduated maxsim
     * layout IS a dense root over the persisted token-mean (Cosine by
-    * construction), so
-    * [[graft.streaming.Stream.ingestMaxsimRootAppend]] rides the
-    * dense seat and inherits its whole actuator story: the even half
-    * lands as a cosine [[graft.ops.Ann.writeDenseRoot]] over
-    * (vec_id, vecs, mv_mean), the odd half streams in (the mean
-    * computed per batch by the ONE shared transform), the hottest
+    * construction), so it streams through
+    * [[graft.streaming.Stream.ingestAppend]] like any dense root and
+    * inherits its whole actuator story: the even half lands as a
+    * cosine [[graft.ops.Ann.writeDenseRoot]] over (vec_id, vecs,
+    * mv_mean), the odd half streams in (the mean computed per batch
+    * by [[graft.ops.Ann.tokenMeanCol]], the call that built the
+    * root), the hottest
     * mean-cell splits ON THE UNIT SPHERE, and the final search is
     * the EXACT maxsim top-10 (phase-1 keep-N covers the corpus at
     * all-probe, so cell homes are invisible) — an index-free
     * sum-of-max oracle in plain SQL. Pins: policy fired, replayed
-    * batch appends zero through the maxsim delegation. */
+    * batch appends zero. */
   def streamMaxsimSplit(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     implicit val sc = s.sqlContext
@@ -1670,9 +1676,11 @@ object Events {
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_s34_ckpt").toString
     val input = MemoryStream[(Long, Seq[Seq[Double]])]
-    val q = graft.streaming.Stream.ingestMaxsimRootAppend(
-      input.toDF().toDF("vec_id", "vecs"), "vec_id", "vecs", dim,
-      root, ckpt, splitMaxRows = Some(maxRows))
+    val q = graft.streaming.Stream.ingestAppend(
+      input.toDF().toDF("vec_id", "vecs").withColumn("mv_mean",
+        graft.ops.Ann.tokenMeanCol(col("vecs"), dim)), "vec_id",
+      graft.ops.Ann.cellRoot(s, root, None), ckpt,
+      splitMaxRows = Some(maxRows))
     try {
       val batches = 2 // no-fire batch, then the firing one
       (0 until batches).foreach { b =>
@@ -1684,9 +1692,11 @@ object Events {
     val cellsNow = s.read.parquet(s"$root/centroids").count()
     require(cellsNow > lists,
       s"s34: split policy never fired — $cellsNow cells, trained $lists")
-    val dup = graft.ops.Ann.appendMaxsimRootIdempotent(s, root,
-      rows.take(rows.length / 2).toDF("vec_id", "vecs"), "vec_id",
-      "vecs", dim)
+    val dup = graft.ops.Ann.appendIdempotent(
+      graft.ops.Ann.cellRoot(s, root, None),
+      rows.take(rows.length / 2).toDF("vec_id", "vecs").withColumn(
+        "mv_mean", graft.ops.Ann.tokenMeanCol(col("vecs"), dim)),
+      "vec_id")
     require(dup == 0L,
       s"s34: replayed batch appended $dup rows post-split")
     val stored = s.read.parquet(s"$root/rows")

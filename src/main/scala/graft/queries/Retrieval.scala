@@ -1791,9 +1791,8 @@ object Retrieval {
 
   /** r98: SPLIT of an overfull cell on a COSINE dense root
     * ([[Ann.splitOverfull]]) — the round-17 closure of the
-    * actuator matrix: the plain cell-partitioned layout
-    * `ingestIvfAppend` grows was the last family whose hot cells
-    * nothing bounded (VERDICT r16 #1). The full corpus lands as a
+    * actuator matrix: the plain cell-partitioned layout was the last
+    * family whose hot cells nothing bounded (VERDICT r16 #1). The full corpus lands as a
     * self-contained dense root under the SPHERICAL geometry (cosine
     * assignment — the maxsim family's by construction), the
     * observed-occupancy threshold flags exactly the hottest cell(s),

@@ -260,7 +260,8 @@ object Stream {
     * [[compactStored]](`dir/<data subdir>`, "centroid_id") graduation
     * the root IS a [[graft.ops.Ann.writeQuantized]] layout:
     * [[graft.ops.Ann.searchStored]] and `attachStoredIndex` work
-    * unchanged. */
+    * unchanged, and it keeps growing through [[ingestAppend]] (raw
+    * rows into `fresh/`). */
   def ingestQuantized(vectors: DataFrame, vecCol: String,
                       index: graft.ops.Ann.QuantIndex,
                       metric: graft.ops.Ann.Metric,
@@ -313,8 +314,8 @@ object Stream {
     * with different dims/metric or a retrained model refuses). After
     * [[compactStored]](`dir/rows`) graduation the root IS a
     * writeMatryoshkaIvf layout: [[graft.ops.Ann.searchStored]],
-    * [[graft.ops.Ann.appendIdempotent]] and the cell-confined delete
-    * all work unchanged. */
+    * [[graft.ops.Ann.appendIdempotent]] (streamed: [[ingestAppend]])
+    * and the cell-confined delete all work unchanged. */
   def ingestMatryoshkaIvf(vectors: DataFrame, idCol: String,
                           vecCol: String, dims: Int,
                           model: graft.ops.Ann.IvfModel,
@@ -346,166 +347,109 @@ object Stream {
       model, metric, Nil))
   }
 
-  /** Continuous APPEND into a GRADUATED dense-cell layout
-    * ([[graft.ops.Ann.writePartitioned]] / a compacted [[ingestIvf]]
-    * root) — the plain-IVF member of the graduated-root maintenance
-    * family, over [[graft.ops.Ann.appendIvfIdempotent]]: the model is
-    * caller-supplied (a plain cell layout stores only the
-    * fingerprint, not the centroids) and validated against the
-    * layout's pin at START; each micro-batch assigns, drops
-    * already-present ids, and appends cell-partitioned. */
-  def ingestIvfAppend(vectors: DataFrame, idCol: String, vecCol: String,
-                      model: graft.ops.Ann.IvfModel,
-                      metric: graft.ops.Ann.Metric, path: String,
-                      checkpoint: String)
+  /** Continuous APPEND into a GRADUATED cell root — the one
+    * maintenance stream of every self-contained cell family (dense and
+    * maxsim dense, composed matryoshka-IVF, range, quantized). A
+    * graduated root is a batch layout (a restarted file sink's fresh
+    * commit log would hide it — [[requireStreamableLayout]]'s
+    * refusal), so its growth runs as foreachBatch over the id-keyed
+    * replay-safe [[graft.ops.Ann.appendIdempotent]]: a
+    * crash-redelivered batch appends nothing, and the family's append
+    * steps come from the resolved `root` (a range root grows its radii
+    * before a batch's rows land, a quantized root lands raw rows in
+    * `fresh/`, encoded on read). `rows` must carry the column the root
+    * assigns on; a maxsim root's is the token mean, added with
+    * [[graft.ops.Ann.tokenMeanCol]] as the root's build added it. A
+    * flat [[graft.ops.Ann.writePartitioned]] layout grows only after
+    * [[graft.ops.Ann.graduateDenseRoot]] promotes it.
+    *
+    * After each batch's append the policy runs: every cell past
+    * `splitMaxRows` splits ([[graft.ops.Ann.splitOverfull]], under the
+    * root's own pinned geometry; a sub-cell still overfull catches the
+    * next batch's pass). A quantized root's split refuses while
+    * `fresh/` exists, so there `compactRatio` folds `fresh/` once it
+    * outgrows ratio·|main|
+    * ([[graft.ops.Ann.compactQuantizedFreshIfNeeded]] — results
+    * identical across the trigger) and the split runs right after a
+    * fold.
+    *
+    * At START, before any mutation, it refuses a non-positive
+    * `splitMaxRows`, a malformed `compactRatio` or one on a
+    * non-quantized root, a quantized `splitMaxRows` without
+    * `compactRatio` (it could never fire), a root without a pinned IVF
+    * model marker, and `rows` without the root's assign column. Then
+    * it heals crash debris ([[graft.ops.Ann.healRoot]] — the stream
+    * owns policies whose swaps can crash mid-batch, so it restarts over
+    * its own debris instead of wedging) and reads `centroids/` (loud
+    * when missing). */
+  def ingestAppend(rows: DataFrame, idCol: String,
+                   root: graft.ops.Ann.CellRoot, checkpoint: String,
+                   splitMaxRows: Option[Long] = None,
+                   compactRatio: Option[Double] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = vectors.sparkSession
-    // fail at START, mutate NOTHING: the marker must already exist
-    // (declared at build time) and match — ensureIvfModelMarker alone
-    // would ADOPT the caller's model into an unmarked (or arbitrary)
-    // directory before the first batch ever validates the layout
-    if (graft.ops.Ann.readIvfModelMarker(spark, path).isEmpty)
-      throw new IllegalStateException(
-        s"ingestIvfAppend: $path has no IVF model marker — not a " +
-          "pinned dense-cell layout (ensureIvfModelMarker at build " +
-          "time)")
-    graft.ops.Ann.ensureIvfModelMarker(spark, path, model)
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Ann.appendIvfIdempotent(spark, path, model, batch,
-          idCol, vecCol, metric)
-        ()
+    import graft.ops.Ann
+    val (spark, dir) = (root.spark, root.dir)
+    val quantized = root match {
+      case q: Ann.CellRoot.Quantized => Some(q)
+      case _ => None
+    }
+    startForeachBatch(rows, checkpoint) {
+      splitMaxRows.foreach(m => require(m > 0,
+        s"ingestAppend: splitMaxRows must be positive, got $m — a " +
+          "non-positive threshold would flag every cell every batch"))
+      compactRatio.foreach { r =>
+        require(quantized.isDefined, s"ingestAppend: compactRatio " +
+          s"folds a quantized root's fresh/ side table — $dir is not a " +
+          "quantized root")
+        require(r >= 0.0 && !r.isNaN && !r.isInfinity,
+          s"ingestAppend: compactRatio must be a finite ratio >= 0, " +
+            s"got $r")
       }
-      .start()
+      require(quantized.isEmpty || splitMaxRows.isEmpty ||
+          compactRatio.isDefined,
+        "ingestAppend: splitMaxRows on a quantized root needs " +
+          "compactRatio — the overfull split runs on the compacted " +
+          "(fresh-less) root, so the two thresholds form one cadence")
+      if (Ann.readIvfModelMarker(spark, dir).isEmpty)
+        throw new IllegalStateException(
+          s"ingestAppend: $dir has no pinned IVF model marker — not a " +
+            "graduated root")
+      val vec = root.assignCol
+      require(rows.columns.contains(vec),
+        s"ingestAppend: $dir assigns on '$vec', which the stream lacks " +
+          s"(columns ${rows.columns.mkString(", ")})")
+      Ann.healRoot(spark, dir)
+      spark.read.parquet(s"$dir/centroids") // loud when centroids miss
+    } { batch =>
+      Ann.appendIdempotent(root, batch, idCol)
+      quantized match {
+        case Some(q) => compactRatio.foreach { r =>
+          if (Ann.compactQuantizedFreshIfNeeded(q, idCol, r).isDefined)
+            splitMaxRows.foreach(m => Ann.splitOverfull(q, m))
+        }
+        case None => splitMaxRows.foreach(m => Ann.splitOverfull(root, m))
+      }
+    }
   }
 
-  /** Continuous APPEND into a GRADUATED maxsim (multivec IVF) layout
-    * — the MULTIVEC member of the graduated-root maintenance family,
-    * closing its last modality: [[ingestMaxsim]] grows a fresh
-    * commit-log dir, but a graduated ([[compactStored]]) layout is
-    * batch, so continued growth runs as foreachBatch over the
-    * id-keyed replay-safe
-    * [[graft.ops.Ann.appendMaxsimIdempotent]] (per-batch token-mean
-    * summarization under the layout's own dim + the pinned spherical
-    * assignment). Fails at START, not first batch, when `path`
-    * carries no pinned IVF model marker or the caller's model is a
-    * retrain. */
-  def ingestMaxsimAppend(docs: DataFrame, idCol: String,
-                         mvCol: String, dim: Int,
-                         model: graft.ops.Ann.IvfModel, path: String,
-                         checkpoint: String,
-                         meanCol: String = "mv_mean")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    // ONE delegation, the ingestMaxsim-over-ingestIvf shape: the
-    // summarized mean rides the streaming frame, and the start-time
-    // refusals + per-batch idempotent append are the dense member's
-    // verbatim (a second copy of that logic would drift)
-    ingestIvfAppend(
-      docs.withColumn(meanCol,
-        graft.ops.Ann.tokenMeanCol(col(mvCol), dim)),
-      idCol, meanCol, model, graft.ops.Ann.Cosine, path, checkpoint)
-
-  /** Continuous APPEND into a SELF-CONTAINED dense root
-    * ([[graft.ops.Ann.writeDenseRoot]] — or a flat layout promoted by
-    * [[graft.ops.Ann.graduateDenseRoot]]), completing the
-    * maintenance-actuator matrix: [[ingestIvfAppend]] serves the
-    * legacy flat layout, but that layout's geometry lives in the
-    * caller's hands (only the fingerprint is pinned), so no split
-    * policy can ever ride it — a split re-pins the model and every
-    * caller-supplied copy goes stale. The dense ROOT owns its
-    * centroids, so each micro-batch assigns under the DISK model
-    * ([[graft.ops.Ann.appendIdempotent]] — id-keyed replay-safe,
-    * heals crash debris at entry) and keeps working across every
-    * split/merge the policy triggers.
-    *
-    * `splitMaxRows` wires the OVERFULL-CELL SPLIT POLICY into the
-    * cadence ([[rootAppend]]'s default policy): after each batch's
-    * append, any cell past the threshold locally retrains into
-    * sub-cells under the root's own pinned metric (cosine roots on
-    * the unit sphere), the marker re-pins, and from then on the
-    * split-history marker makes the replay probe read the whole
-    * layout. Malformed thresholds refuse at stream START. */
-  def ingestDenseRootAppend(vectors: DataFrame, idCol: String,
-                            root: String, checkpoint: String,
-                            splitMaxRows: Option[Long] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rootAppend[graft.ops.Ann.CellRoot.Dense](vectors, idCol, None, root,
-      checkpoint, splitMaxRows, "ingestDenseRootAppend")
-
-  /** [[ingestDenseRootAppend]] for a MAXSIM dense root — the
-    * graduated multivec layout IS a dense root over the persisted
-    * token-mean (metric Cosine by construction —
-    * [[ingestMaxsimAppend]]'s delegation, with actuators): the
-    * summarized mean rides the streaming frame through the ONE
-    * transform build and query share, and the dense seat does the
-    * rest, split policy included. The root's pinned vector column
-    * must be `meanCol` (validated at START — a root pinned to a
-    * different column would refuse inside the first batch's assign,
-    * far from the misuse). */
-  def ingestMaxsimRootAppend(docs: DataFrame, idCol: String,
-                             mvCol: String, dim: Int, root: String,
-                             checkpoint: String,
-                             splitMaxRows: Option[Long] = None,
-                             meanCol: String = "mv_mean")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rootAppend[graft.ops.Ann.CellRoot.Dense](
-      docs.withColumn(meanCol,
-        graft.ops.Ann.tokenMeanCol(col(mvCol), dim)),
-      idCol, None, root, checkpoint, splitMaxRows,
-      "ingestMaxsimRootAppend",
-      check = dense =>
-        require(dense.vecCol == meanCol &&
-            dense.metric == graft.ops.Ann.Cosine,
-          s"ingestMaxsimRootAppend: $root is pinned to (${dense.metric}, " +
-            s"'${dense.vecCol}') but the maxsim family appends (Cosine, " +
-            s"'$meanCol') — one root, one geometry"))
-
-  /** The start-and-loop body of every graduated cell-root append
-    * stream. At START, before `writeStream` and before any mutation
-    * but the heal: refuse a non-positive `splitMaxRows`, resolve the
-    * root once as family `R` (`vecCol` names the batch's vector
-    * column where the family does not record it), run the seat's
-    * `check`, refuse a root without a pinned IVF model marker, heal
-    * crash debris (the stream owns policies whose swaps and markers
-    * can crash mid-batch — it must restart over its own debris, not
-    * wedge), and read `centroids/` (loud when missing). Per
-    * micro-batch: [[graft.ops.Ann.appendIdempotent]], then
-    * `afterAppend` — by default the overfull-cell split at
-    * `splitMaxRows`. */
-  private def rootAppend[R <: graft.ops.Ann.CellRoot](
-      vectors: DataFrame, idCol: String, vecCol: Option[String],
-      root: String, checkpoint: String, splitMaxRows: Option[Long],
-      who: String, check: R => Unit = (_: R) => (),
-      afterAppend: Option[R => Unit] = None)(
-      implicit tag: scala.reflect.ClassTag[R])
+  /** The start order of every foreachBatch append stream, written
+    * once ([[startFileSink]]'s shape): run `refuse` — the seat's START
+    * refusals, then any heal — and only then start `rows` through
+    * `onBatch` per micro-batch, checkpointed at `checkpoint`. A refused
+    * start starts no stream. */
+  private def startForeachBatch(rows: DataFrame, checkpoint: String)(
+      refuse: => Unit)(onBatch: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = vectors.sparkSession
-    splitMaxRows.foreach(m => require(m > 0,
-      s"$who: splitMaxRows must be positive, got $m — a non-positive " +
-        "threshold would flag every cell every batch"))
-    val cells = graft.ops.Ann.cellRoot(spark, root, vecCol).as[R](who)
-    check(cells)
-    if (graft.ops.Ann.readIvfModelMarker(spark, root).isEmpty)
-      throw new IllegalStateException(
-        s"$who: $root has no pinned IVF model marker — not a graduated " +
-          "root")
-    graft.ops.Ann.healRoot(spark, root)
-    spark.read.parquet(s"$root/centroids") // loud when centroids miss
-    val after = afterAppend.getOrElse((r: R) =>
-      splitMaxRows.foreach(m => graft.ops.Ann.splitOverfull(r, m)))
-    vectors.writeStream
+    refuse
+    rows.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Ann.appendIdempotent(cells, batch, idCol)
-        after(cells)
-      }
+      .foreachBatch { (batch: DataFrame, _: Long) => onBatch(batch) }
       .start()
   }
 
   /** Continuous APPEND into a GRADUATED BM25 postings layout — the
     * keyword member of the graduated-root maintenance family
-    * ([[ingestRangeAppend]]'s pattern): [[ingestBm25]] grows a fresh
+    * ([[ingestAppend]]'s pattern): [[ingestBm25]] grows a fresh
     * commit-log dir, but a compacted layout is batch, so continued
     * growth runs as foreachBatch over the id-keyed replay-safe
     * [[graft.ops.Bm25.appendPostingsIdempotent]] (which also pins the
@@ -516,18 +460,15 @@ object Stream {
                          graft.functions.Tokenizers.Simple)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = docs.sparkSession
-    if (graft.ops.Bm25.readBucketsMarker(spark, dir).isEmpty)
-      throw new IllegalStateException(
-        s"ingestBm25Append: $dir has no postings marker — not a " +
-          "graduated writePostings layout")
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Bm25.appendPostingsIdempotent(spark, dir, batch,
-          idCol, textCol, tok)
-        ()
-      }
-      .start()
+    startForeachBatch(docs, checkpoint) {
+      if (graft.ops.Bm25.readBucketsMarker(spark, dir).isEmpty)
+        throw new IllegalStateException(
+          s"ingestBm25Append: $dir has no postings marker — not a " +
+            "graduated writePostings layout")
+    } { batch =>
+      graft.ops.Bm25.appendPostingsIdempotent(spark, dir, batch, idCol,
+        textCol, tok)
+    }
   }
 
   /** Continuous APPEND into a GRADUATED sparse postings layout —
@@ -537,143 +478,15 @@ object Stream {
                          valCol: String, dir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = docs.sparkSession
-    if (graft.functions.Sparse.readBucketsMarker(spark, dir).isEmpty)
-      throw new IllegalStateException(
-        s"ingestSparseAppend: $dir has no postings marker — not a " +
-          "graduated sparse writePostings layout")
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.functions.Sparse.appendPostingsIdempotent(spark, dir,
-          batch, idCol, idxCol, valCol)
-        ()
-      }
-      .start()
-  }
-
-  /** Continuous APPEND into an already-graduated COMPOSED
-    * matryoshka-IVF root — [[ingestRangeAppend]]'s twin for the
-    * [[graft.ops.Ann.writeMatryoshkaIvf]] layout, closing the same
-    * gap: [[ingestMatryoshkaIvf]] grows a FRESH commit-log dir, but a
-    * graduated root is a batch layout, so its continued growth runs
-    * as foreachBatch over the id-keyed replay-safe
-    * [[graft.ops.Ann.appendIdempotent]]. Fails at START, not first
-    * batch, on a non-root.
-    *
-    * `splitMaxRows` wires the OVERFULL-CELL SPLIT POLICY into the
-    * composed root's maintenance cadence ([[rootAppend]]'s default
-    * policy), closing the asymmetry where the north-star layout was
-    * the one whose hot cells nothing bounded: after each batch's
-    * append, any cell past the threshold locally retrains into
-    * sub-cells under the root's own pinned geometry
-    * ([[graft.ops.Ann.splitOverfull]] — only its directories
-    * rewritten, marker re-pinned); a sub-cell still overfull after
-    * one k=2 split catches the next batch's pass. Malformed
-    * thresholds refuse at stream START, before any mutation. */
-  def ingestMatryoshkaIvfAppend(vectors: DataFrame, idCol: String,
-                                vecCol: String, root: String,
-                                checkpoint: String,
-                                splitMaxRows: Option[Long] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rootAppend[graft.ops.Ann.CellRoot.MrlIvf](vectors, idCol,
-      Some(vecCol), root, checkpoint, splitMaxRows,
-      "ingestMatryoshkaIvfAppend")
-
-  /** Continuous APPEND into an already-graduated
-    * [[graft.ops.Ann.writeRangeIndex]] root — the MAINTENANCE stream
-    * the range family lacked: the other twins stream into a fresh
-    * commit-log dir and graduate once, but a graduated range root is
-    * a batch layout (a restarted file sink's fresh commit log would
-    * hide it — [[requireStreamableLayout]]'s refusal), so its
-    * continued growth runs as foreachBatch over
-    * [[graft.ops.Ann.appendIdempotent]]: each micro-batch grows the
-    * covering radii BEFORE its rows become visible (the r67 soundness
-    * order, per batch), and a crash-redelivered batch appends nothing
-    * (id-keyed replay safety standing in for the commit log the batch
-    * layout no longer has). Fails at START, not first batch, when
-    * `root` is not a graduated range index.
-    *
-    * `splitMaxRows` wires the OVERFULL-CELL SPLIT POLICY into the
-    * maintenance cadence (the s28 lesson for the cell-growth
-    * families: [[graft.ops.Ann.splitOverfull]] existed as the
-    * actuator for the r66 health signal, but nothing TRIGGERED it —
-    * at 100 TB a streamed root's hot cells grow until probes
-    * over-read and radii over-admit). After each batch's append, any
-    * cell that crossed the threshold locally retrains into sub-cells
-    * (only its directories rewritten, marker re-pinned — results
-    * invariant, the r69 contract); a sub-cell still overfull after
-    * one k=2 split catches the next batch's pass. Malformed
-    * thresholds refuse at stream START, before any mutation. */
-  def ingestRangeAppend(vectors: DataFrame, idCol: String,
-                        vecCol: String, root: String,
-                        checkpoint: String,
-                        splitMaxRows: Option[Long] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rootAppend[graft.ops.Ann.CellRoot.Range](vectors, idCol,
-      Some(vecCol), root, checkpoint, splitMaxRows, "ingestRangeAppend")
-
-  /** Continuous APPEND into a GRADUATED quantized root (SQ / PQ /
-    * 1-bit) — the quantized member of the graduated-root maintenance
-    * family, closing its last gap: codes are bound to training-time
-    * bounds/codebooks, so instead of re-encoding per batch the rows
-    * land RAW in the root's fresh side table
-    * ([[graft.ops.Ann.appendIdempotent]] — id-keyed replay-safe,
-    * existence probe pruned to touched cells of fresh AND main), are
-    * encoded ON READ by [[graft.ops.Ann.searchStored]] and
-    * [[graft.ops.Ann.knnJoinQuantizedFresh]], and fold into
-    * the main layout at [[graft.ops.Ann.compactQuantizedFresh]].
-    * Fails at START, not first batch, when `root` carries no
-    * quantized geometry marker or no pinned IVF model.
-    *
-    * `compactRatio` + `splitMaxRows` form ONE policy cadence (the s28
-    * + s29 lessons on the quantized lifecycle): fresh/ graduates when
-    * it outgrows ratio·|main|, and immediately after a fold the
-    * overfull-cell split re-partitions any cell past `splitMaxRows`
-    * ([[graft.ops.Ann.splitOverfull]] — it refuses on a
-    * live fresh/, so riding the compaction trigger is the only sound
-    * wiring; `splitMaxRows` without `compactRatio` refuses at
-    * START). */
-  def ingestQuantizedFreshAppend(vectors: DataFrame, idCol: String,
-                                 vecCol: String, root: String,
-                                 checkpoint: String,
-                                 compactRatio: Option[Double] = None,
-                                 splitMaxRows: Option[Long] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // a malformed ratio must refuse at stream START, not first batch
-    compactRatio.foreach(r =>
-      require(r >= 0.0 && !r.isNaN && !r.isInfinity,
-        s"ingestQuantizedFreshAppend: compactRatio must be a finite " +
-          s"ratio >= 0, got $r"))
-    // the quantized split refuses while fresh/ exists, so the split
-    // policy can only ride the compaction trigger — a split threshold
-    // without a compaction ratio would silently never fire
-    require(splitMaxRows.isEmpty || compactRatio.isDefined,
-      "ingestQuantizedFreshAppend: splitMaxRows needs compactRatio — " +
-        "the overfull split runs on the compacted (fresh-less) root, " +
-        "so the two thresholds form ONE policy cadence")
-    rootAppend[graft.ops.Ann.CellRoot.Quantized](vectors, idCol,
-      Some(vecCol), root, checkpoint, splitMaxRows,
-      "ingestQuantizedFreshAppend",
-      afterAppend = Some(cells =>
-        // the post-append POLICY seat (r14 verdict #4): with a ratio
-        // wired, fresh/ graduates as soon as it outgrows ratio·|main|
-        // — results identical across the trigger
-        // (compactQuantizedFresh's contract), so a stream can run
-        // forever without fresh/ growing unboundedly
-        compactRatio.foreach { r =>
-          val compacted = graft.ops.Ann
-            .compactQuantizedFreshIfNeeded(cells, idCol, r)
-          // the SPLIT half of the lifecycle (round 16): compaction is
-          // exactly what grows hot cells, so the overfull policy runs
-          // right after a fold emptied fresh/ — the only moment the
-          // quantized split's no-fresh precondition holds by
-          // construction. Flagged cells re-partition (SQ codes stay
-          // bit-identical under inherited bounds; 1-bit re-encodes),
-          // the marker re-pins, and the next batch's append assigns
-          // under the post-split disk centroids.
-          if (compacted.isDefined)
-            splitMaxRows.foreach(m => graft.ops.Ann.splitOverfull(cells, m))
-        }))
+    startForeachBatch(docs, checkpoint) {
+      if (graft.functions.Sparse.readBucketsMarker(spark, dir).isEmpty)
+        throw new IllegalStateException(
+          s"ingestSparseAppend: $dir has no postings marker — not a " +
+            "graduated sparse writePostings layout")
+    } { batch =>
+      graft.functions.Sparse.appendPostingsIdempotent(spark, dir, batch,
+        idCol, idxCol, valCol)
+    }
   }
 
   /** Continuous matryoshka ingest — the FLAT member of the at-rest

@@ -292,54 +292,6 @@ case class SortedIntersectSize(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Scaled L2 distance over SQ8 code arrays: √ Σ ((aᵢ − bᵢ) · sᵢ)² where
-  * s is the per-dimension dequantization scale — the scan kernel of the
-  * scalar-quantized ANN path ([[graft.ops.Quant]]). Codes are longs
-  * (0..255 after SQ8), scales doubles; the fold is sequential
-  * left-to-right like every Vec distance. */
-case class ScaledL2(first: Expression, second: Expression,
-                    third: Expression)
-  extends TernaryExpression with ImplicitCastInputTypes with Serializable {
-  override def prettyName: String = "scaled_l2"
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(a: Any, b: Any, s: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val sc = s.asInstanceOf[ArrayData]
-    var acc = 0.0
-    var i = 0
-    val n = x.numElements()
-    while (i < n) {
-      val d = (x.getLong(i) - y.getLong(i)) * sc.getDouble(i)
-      acc += d * d
-      i += 1
-    }
-    math.sqrt(acc)
-  }
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, s) => {
-      val acc = ctx.freshName("acc")
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val d = ctx.freshName("d")
-      s"""
-      double $acc = 0.0;
-      int $n = $a.numElements();
-      for (int $i = 0; $i < $n; $i++) {
-        double $d = ($a.getLong($i) - $b.getLong($i)) * $s.getDouble($i);
-        $acc += $d * $d;
-      }
-      ${ev.value} = Math.sqrt($acc);"""
-    })
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 /** Per-dimension helpers shared by [[SqL2Adc]] and [[SqEncode]] — the
   * interpreted `eval` and the generated code call the same functions,
   * so the two evaluation modes cannot drift apart. */
@@ -699,9 +651,6 @@ object VecExprs {
   def sqEncode(vec: Column, mins: Column, maxs: Column): Column =
     c(SqEncode(ExpressionUtils.expression(vec),
       ExpressionUtils.expression(mins), ExpressionUtils.expression(maxs)))
-  def scaledL2(a: Column, b: Column, scales: Column): Column =
-    c(ScaledL2(ExpressionUtils.expression(a), ExpressionUtils.expression(b),
-      ExpressionUtils.expression(scales)))
   def sparseDotQ(indices: Column, values: Column,
                  qIdx: Seq[Int], qVal: Seq[Double]): Column =
     c(SparseDotQ(ExpressionUtils.expression(indices),

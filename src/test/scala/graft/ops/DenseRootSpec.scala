@@ -344,34 +344,6 @@ class DenseRootSpec extends SparkSpecBase {
     assert(got === want)
   }
 
-  test("ingestDenseRootAppend refuses at START on a non-root and on " +
-      "a non-positive threshold, before any mutation") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sc = sp.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val input = MemoryStream[(Long, Seq[Double])]
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-dense-ckpt").toString
-    val stray = tmp("notroot")
-    val e = intercept[IllegalStateException] {
-      graft.streaming.Stream.ingestDenseRootAppend(
-        input.toDF().toDF("vec_id", "embedding"), "vec_id", stray,
-        ckpt)
-    }
-    assert(e.getMessage.contains("dense cell-root marker"))
-    val docs = corpus(sp)
-    val model = Ann.buildIvf(docs, "cluster", "embedding")
-    val dir = tmp("threshold")
-    Ann.writeDenseRoot(Ann.assign(docs, "embedding", model, Ann.L2),
-      "embedding", model, Ann.L2, dir)
-    intercept[IllegalArgumentException] {
-      graft.streaming.Stream.ingestDenseRootAppend(
-        input.toDF().toDF("vec_id", "embedding"), "vec_id", dir,
-        ckpt, splitMaxRows = Some(0L))
-    }
-  }
-
   test("engine maintenance triad: dense roots dispatch by marker; " +
       "an unrecognized dir refuses by family name, not a path error") {
     val sp = spark

@@ -1945,39 +1945,40 @@ class OpsSpec extends SparkSpecBase {
         java.nio.file.Files.createTempDirectory("graft_bm25_bare")
           .toString, late, "doc_id", "text")
     }
-    // dense cells: the fingerprint pins the model; partial redelivery
+    // dense cells: the root's fingerprint pins its model; partial
+    // redelivery
     val vecs = (0L until 20L).map { i =>
       (i, i % 2, Seq.tabulate(3)(j => ((i * 3 + j) % 7).toDouble))
     }.toDF("vec_id", "label", "embedding")
     val model = graft.ops.Ann.buildIvf(vecs, "label", "embedding")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivf_app").toString + "/rows"
-    graft.ops.Ann.writePartitioned(graft.ops.Ann.assign(
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_ivf_app").toString
+    graft.ops.Ann.writeDenseRoot(graft.ops.Ann.assign(
       vecs.filter(col("vec_id") < 10), "embedding", model,
-      graft.ops.Ann.L2), path)
-    // an UNMARKED layout refuses the append — adopt-on-append would
-    // let a retrained model silently mix two geometries
-    intercept[IllegalStateException] {
-      graft.ops.Ann.appendIvfIdempotent(sp, path, model,
-        vecs.filter(col("vec_id") >= 10), "vec_id", "embedding")
-    }
-    graft.ops.Ann.ensureIvfModelMarker(sp, path, model)
+      graft.ops.Ann.L2), "embedding", model, graft.ops.Ann.L2, root)
+    def append(df: org.apache.spark.sql.DataFrame) =
+      graft.ops.Ann.appendIdempotent(
+        graft.ops.Ann.cellRoot(sp, root, None), df, "vec_id")
     val batch = vecs.filter(col("vec_id") >= 10 && col("vec_id") < 15)
-    assert(graft.ops.Ann.appendIvfIdempotent(sp, path, model, batch,
-      "vec_id", "embedding") === 5L)
+    assert(append(batch) === 5L)
     // partial redelivery (3 old + 5 new): only the new rows land
-    assert(graft.ops.Ann.appendIvfIdempotent(sp, path, model,
-      vecs.filter(col("vec_id") >= 12), "vec_id", "embedding") === 5L)
-    assert(sp.read.parquet(path).count() === 20L)
-    // a RETRAINED model refuses (two geometries in one layout)
-    val retrained = model.copy(centroids = model.centroids
-      .withColumn("centroid",
+    assert(append(vecs.filter(col("vec_id") >= 12)) === 5L)
+    assert(sp.read.parquet(s"$root/rows").count() === 20L)
+    // a RETRAINED model swapped in as the root's centroids refuses (two
+    // geometries in one layout)
+    model.centroids.withColumn("centroid",
         org.apache.spark.sql.functions.transform(col("centroid"),
-          x => x + lit(1.0))))
-    intercept[IllegalStateException] {
-      graft.ops.Ann.appendIvfIdempotent(sp, path, retrained, batch,
-        "vec_id", "embedding")
-    }
+          x => x + lit(1.0)))
+      .write.mode("overwrite").parquet(s"$root/centroids")
+    intercept[IllegalStateException](append(batch))
+    // a flat writePartitioned layout is not a root: it grows only
+    // after graduateDenseRoot
+    val flat = java.nio.file.Files
+      .createTempDirectory("graft_ivf_flat").toString
+    graft.ops.Ann.writePartitioned(graft.ops.Ann.assign(vecs, "embedding",
+      model, graft.ops.Ann.L2), flat)
+    intercept[IllegalStateException](
+      graft.ops.Ann.cellRoot(sp, flat, None))
   }
 
   test("matryoshkaBatch agrees with the per-query explicit form on " +

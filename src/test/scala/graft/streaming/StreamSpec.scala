@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpecBase
 
 class StreamSpec extends SparkSpecBase {
+  import StreamSpec.AppendCase
 
   private def ts(min: Int) = new Timestamp(min * 60000L)
 
@@ -842,10 +843,10 @@ class StreamSpec extends SparkSpecBase {
       eps = 1.2).isEmpty)
   }
 
-  test("ingestRangeAppend (s19): streamed batches grow a graduated " +
-      "root with sound radii; a redelivered batch appends nothing; " +
-      "an outlier appended past its cell's old radius is still found; " +
-      "a non-range root refuses at start") {
+  test("ingestAppend on a range root (s19): streamed batches grow a " +
+      "graduated root with sound radii; a redelivered batch appends " +
+      "nothing; an outlier appended past its cell's old radius is " +
+      "still found; a non-root refuses before any stream starts") {
     val sp = spark
     import sp.implicits._
     implicit val sc = sp.sqlContext
@@ -867,9 +868,9 @@ class StreamSpec extends SparkSpecBase {
     val appended = Seq((100L, Seq(0.5, 0.1), 0),
       (101L, Seq(3.0, 0.0), 0))
     val input = MemoryStream[(Long, Seq[Double], Int)]
-    val q = Stream.ingestRangeAppend(
+    val q = Stream.ingestAppend(
       input.toDF().toDF("vec_id", "embedding", "label"), "vec_id",
-      "embedding", root,
+      Ann.cellRoot(sp, root, Some("embedding")),
       java.nio.file.Files.createTempDirectory("graft-sapp-c").toString)
     try {
       appended.foreach { r =>
@@ -895,18 +896,21 @@ class StreamSpec extends SparkSpecBase {
         "label"),
       "vec_id")
     assert(fresh === 1L)
-    // a non-range root refuses at START, not first batch
-    intercept[Exception] {
-      Stream.ingestRangeAppend(
+    // a non-root refuses at START, not first batch: the resolver
+    // finds no cell family
+    intercept[IllegalStateException] {
+      Stream.ingestAppend(
         input.toDF().toDF("vec_id", "embedding", "label"), "vec_id",
-        "embedding", java.nio.file.Files
+        Ann.cellRoot(sp, java.nio.file.Files
           .createTempDirectory("graft-sapp-bare").toString,
+          Some("embedding")),
         java.nio.file.Files
           .createTempDirectory("graft-sapp-bare-c").toString)
     }
+    assert(sp.streams.active.isEmpty)
   }
 
-  test("ingestRangeAppend restart SELF-HEALS a root stranded by a " +
+  test("ingestAppend restart SELF-HEALS a root stranded by a " +
       "crashed split swap: centroids aside as __old no longer wedges " +
       "the stream at its start-time load") {
     val sp = spark
@@ -931,9 +935,9 @@ class StreamSpec extends SparkSpecBase {
     val input = MemoryStream[(Long, Seq[Double], Int)]
     // the restart must NOT die on the missing live path — the heal
     // runs before the start-time centroids read
-    val q = Stream.ingestRangeAppend(
+    val q = Stream.ingestAppend(
       input.toDF().toDF("vec_id", "embedding", "label"), "vec_id",
-      "embedding", root,
+      Ann.cellRoot(sp, root, Some("embedding")),
       java.nio.file.Files.createTempDirectory("graft-heal-c").toString,
       splitMaxRows = Some(100L))
     try {
@@ -946,9 +950,10 @@ class StreamSpec extends SparkSpecBase {
     assert(sp.read.parquet(s"$root/rows").count() === 21L)
   }
 
-  test("ingestRangeAppend splitMaxRows (s29): a batch that pushes a " +
-      "cell past the threshold triggers the overfull split in-stream " +
-      "(results invariant); a non-positive threshold refuses at START") {
+  test("ingestAppend splitMaxRows on a range root (s29): a batch that " +
+      "pushes a cell past the threshold triggers the overfull split " +
+      "in-stream (results invariant); a non-positive threshold refuses " +
+      "at START") {
     val sp = spark
     import sp.implicits._
     implicit val sc = sp.sqlContext
@@ -966,9 +971,9 @@ class StreamSpec extends SparkSpecBase {
     // non-positive threshold refuses at START, before any mutation
     val input = MemoryStream[(Long, Seq[Double], Int)]
     intercept[IllegalArgumentException] {
-      Stream.ingestRangeAppend(
+      Stream.ingestAppend(
         input.toDF().toDF("vec_id", "embedding", "label"), "vec_id",
-        "embedding", root, java.nio.file.Files
+        Ann.cellRoot(sp, root, Some("embedding")), java.nio.file.Files
           .createTempDirectory("graft-split-c0").toString,
         splitMaxRows = Some(0L))
     }
@@ -976,9 +981,9 @@ class StreamSpec extends SparkSpecBase {
     // post-append pass must split it while cell 1 (10 rows) stays
     val appended = (200L until 206L).map(i =>
       (i, Seq((i - 200L) * 0.015, 0.0), 0))
-    val q = Stream.ingestRangeAppend(
+    val q = Stream.ingestAppend(
       input.toDF().toDF("vec_id", "embedding", "label"), "vec_id",
-      "embedding", root, java.nio.file.Files
+      Ann.cellRoot(sp, root, Some("embedding")), java.nio.file.Files
         .createTempDirectory("graft-split-c").toString,
       splitMaxRows = Some(12L))
     try {
@@ -1005,59 +1010,145 @@ class StreamSpec extends SparkSpecBase {
       appended.toDF("vec_id", "embedding", "label"), "vec_id") === 0L)
   }
 
-  test("every graduated-root seat refuses a root of another family at " +
-      "START with the resolver's typed refusal; no stream starts") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sc = sp.sqlContext
+  /** (vec_id, vecs = two copies of the embedding, label, mv_mean): a
+    * maxsim root's rows, the token mean added by the call its build
+    * uses. */
+  private def maxsimRows(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("vec_id"),
+        array(col("embedding"), col("embedding")).as("vecs"), col("label"))
+      .withColumn("mv_mean", graft.ops.Ann.tokenMeanCol(col("vecs"), 2))
+
+  private val appendCases: Seq[AppendCase] = {
     import graft.ops.Ann
-    val base = (0L until 20L).map { i =>
-      val c = if (i % 2 == 0) 0.0 else 10.0
-      (i, Seq(c + (i % 5) * 0.02, c), (i % 2).toInt)
-    }.toDF("vec_id", "embedding", "label")
-    val model = Ann.buildIvf(base, "label", "embedding")
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
-    val assigned = Ann.assign(base, "embedding", model, Ann.L2)
-    val range = tmp("graft-fam-range")
-    Ann.writeRangeIndex(assigned, "embedding", model, range)
-    val dense = tmp("graft-fam-dense")
-    Ann.writeDenseRoot(assigned, "embedding", model, Ann.L2, dense)
-    val mrlIvf = tmp("graft-fam-mrl")
-    Ann.writeMatryoshkaIvf(base, "vec_id", "embedding", dims = 1, model,
-      mrlIvf)
-    val quant = tmp("graft-fam-sq")
-    val sq = Ann.buildIvfSq(base, "embedding", model, Ann.L2)
-    Ann.writeQuantized(sq, quant)
-    val vecs = MemoryStream[(Long, Seq[Double], Int)].toDF()
-      .toDF("vec_id", "embedding", "label")
-    val docs = MemoryStream[(Long, Seq[Seq[Double]])].toDF()
-      .toDF("vec_id", "vecs")
-    val seats: Seq[(String, String => Any)] = Seq(
-      ("ingestDenseRootAppend", root => Stream.ingestDenseRootAppend(
-        vecs, "vec_id", root, tmp("graft-fam-c"))),
-      ("ingestMaxsimRootAppend", root => Stream.ingestMaxsimRootAppend(
-        docs, "vec_id", "vecs", 2, root, tmp("graft-fam-c"))),
-      ("ingestMatryoshkaIvfAppend", root =>
-        Stream.ingestMatryoshkaIvfAppend(vecs, "vec_id", "embedding",
-          root, tmp("graft-fam-c"))),
-      ("ingestRangeAppend", root => Stream.ingestRangeAppend(vecs,
-        "vec_id", "embedding", root, tmp("graft-fam-c"))),
-      ("ingestQuantizedFreshAppend", root =>
-        Stream.ingestQuantizedFreshAppend(vecs, "vec_id", "embedding",
-          root, tmp("graft-fam-c"))))
-    val others = Map(
-      "ingestDenseRootAppend" -> Seq(range, mrlIvf, quant),
-      "ingestMaxsimRootAppend" -> Seq(range, mrlIvf, quant),
-      "ingestMatryoshkaIvfAppend" -> Seq(range, dense, quant),
-      "ingestRangeAppend" -> Seq(dense, mrlIvf, quant),
-      "ingestQuantizedFreshAppend" -> Seq(range, dense, mrlIvf))
-    seats.foreach { case (who, start) =>
-      others(who).foreach { root =>
-        val e = intercept[IllegalStateException](start(root))
-        assert(e.getMessage.startsWith(s"$who: $root is a "),
-          s"$who over $root: ${e.getMessage}")
-        assert(sp.streams.active.isEmpty, s"$who started a stream")
+    def model(df: org.apache.spark.sql.DataFrame, v: String) =
+      Ann.buildIvf(df, "label", v)
+    val sq = (base: org.apache.spark.sql.DataFrame, dir: String) => {
+      Ann.writeQuantized(Ann.buildIvfSq(base, "embedding",
+        model(base, "embedding"), Ann.L2), dir)
+      Some("embedding")
+    }
+    Seq(
+      AppendCase("a dense L2 root", (base, dir) => {
+        val m = model(base, "embedding")
+        Ann.writeDenseRoot(Ann.assign(base, "embedding", m, Ann.L2),
+          "embedding", m, Ann.L2, dir)
+        None
+      }),
+      AppendCase("a maxsim dense cosine root", (base, dir) => {
+        val docs = maxsimRows(base)
+        val m = model(docs, "mv_mean")
+        Ann.writeDenseRoot(Ann.assign(docs, "mv_mean", m, Ann.Cosine),
+          "mv_mean", m, Ann.Cosine, dir)
+        None
+      }, frame = maxsimRows, assignsOn = "mv_mean"),
+      AppendCase("a composed MRL-IVF root", (base, dir) => {
+        Ann.writeMatryoshkaIvf(base, "vec_id", "embedding", dims = 1,
+          model(base, "embedding"), dir)
+        Some("embedding")
+      }),
+      AppendCase("a range root", (base, dir) => {
+        val m = model(base, "embedding")
+        Ann.writeRangeIndex(Ann.assign(base, "embedding", m, Ann.L2),
+          "embedding", m, dir)
+        Some("embedding")
+      }),
+      // ratio 0 folds fresh/ every batch, and the split follows the fold
+      AppendCase("a quantized SQ root", sq, compactRatio = Some(0.0)),
+      // no fold, so no split: the quantized split waits for compaction
+      AppendCase("a quantized SQ root below its compaction ratio", sq,
+        compactRatio = Some(100.0), cellsAfter = 2L))
+  }
+
+  /** Every file and dir under `dir` with an MD5 of each file's bytes. */
+  private def listing(dir: String): Seq[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala.map { p =>
+      val digest =
+        if (java.nio.file.Files.isDirectory(p)) "dir"
+        else java.security.MessageDigest.getInstance("MD5")
+          .digest(java.nio.file.Files.readAllBytes(p))
+          .map("%02x".format(_)).mkString
+      (root.relativize(p).toString, digest)
+    }.toList.sorted
+    finally walk.close()
+  }
+
+  appendCases.foreach { c =>
+    test(s"ingestAppend over ${c.name}: each START refusal starts no " +
+        "stream and leaves the root byte-identical; a redelivered batch " +
+        "appends 0; the split / compaction policy fires as configured") {
+      val sp = spark
+      import sp.implicits._
+      implicit val sc = sp.sqlContext
+      import graft.ops.Ann
+      def tmp(p: String) =
+        java.nio.file.Files.createTempDirectory(p).toString
+      // two angular clusters (distinct directions, so cosine roots can
+      // split them too); the batch sits inside cell 0, apart from its
+      // base rows
+      def polar(th: Double, r: Double) =
+        Seq(r * math.cos(th), r * math.sin(th))
+      val base = (0L until 20L).map { i =>
+        val k = i / 2
+        (i, polar((if (i % 2 == 0) 0.1 else 1.4) + 0.02 * k,
+          1.0 + 0.01 * k), (i % 2).toInt)
+      }.toDF("vec_id", "embedding", "label")
+      val batch = (200L until 206L).map(i =>
+        (i, polar(0.5 + 0.02 * (i - 200L), 1.05), 0))
+      val dir = tmp("graft-append-table")
+      val root = Ann.cellRoot(sp, dir, c.build(base, dir))
+      def rows(): Long = {
+        val fresh = new java.io.File(dir, "fresh")
+        sp.read.parquet(s"$dir/${root.dataSub}").count() +
+          (if (fresh.exists()) sp.read.parquet(fresh.toString).count()
+           else 0L)
       }
+      val input = MemoryStream[(Long, Seq[Double], Int)]
+      val stream = c.frame(input.toDF().toDF("vec_id", "embedding", "label"))
+      def start(rows: org.apache.spark.sql.DataFrame = stream,
+                split: Option[Long] = c.splitMaxRows,
+                ratio: Option[Double] = c.compactRatio) =
+        Stream.ingestAppend(rows, "vec_id", root, tmp("graft-append-c"),
+          split, ratio)
+      def refuses[E <: Throwable](how: => Any)(
+          implicit tag: scala.reflect.ClassTag[E]): Unit = {
+        val before = listing(dir)
+        intercept[E](how)
+        assert(sp.streams.active.isEmpty, "a refused start left a stream")
+        assert(listing(dir) === before, "a refused start wrote to the root")
+      }
+      refuses[IllegalArgumentException](start(split = Some(0L)))
+      refuses[IllegalArgumentException](start(rows = stream.drop(c.assignsOn)))
+      root match {
+        case _: Ann.CellRoot.Quantized =>
+          refuses[IllegalArgumentException](start(ratio = None))
+          refuses[IllegalArgumentException](
+            start(ratio = Some(Double.NaN)))
+        case _ =>
+          refuses[IllegalArgumentException](start(ratio = Some(0.5)))
+      }
+      val q = start()
+      val grown = try {
+        input.addData(batch: _*)
+        q.processAllAvailable()
+        val n = rows()
+        input.addData(batch: _*) // redelivery through the stream
+        q.processAllAvailable()
+        n
+      } finally q.stop()
+      assert(grown === 26L)
+      assert(rows() === 26L, "the redelivered batch appended rows")
+      assert(Ann.appendIdempotent(root,
+        c.frame(batch.toDF("vec_id", "embedding", "label")),
+        "vec_id") === 0L)
+      assert(sp.read.parquet(s"$dir/centroids").count() === c.cellsAfter)
+      c.compactRatio.foreach(r => assert(
+        new java.io.File(dir, "fresh").exists() === (r > 0.0),
+        "fresh/ must fold under ratio 0 and stay below the ratio"))
+      graft.io.Markers.remove(sp, dir, "_graft_ivf_model")
+      refuses[IllegalStateException](start())
     }
   }
 
@@ -1176,4 +1267,22 @@ class StreamSpec extends SparkSpecBase {
     assert(!graft.io.Markers.exists(sp, dir, "_graft_matryoshka"))
     assert(!Ann.isMatryoshkaRoot(sp, dir))
   }
+}
+
+object StreamSpec {
+  /** A graduated cell root for the [[Stream.ingestAppend]] table:
+    * `build` writes it at a dir from the base corpus and returns the
+    * vector column its resolver takes; `frame` turns a (vec_id,
+    * embedding, label) frame into the rows the root takes; `assignsOn`
+    * is the column the root assigns on. Every root starts with two
+    * 10-row cells, and the streamed batch lands 6 rows in cell 0. */
+  private final case class AppendCase(
+      name: String,
+      build: (org.apache.spark.sql.DataFrame, String) => Option[String],
+      frame: org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame = df => df,
+      assignsOn: String = "embedding",
+      splitMaxRows: Option[Long] = Some(12L),
+      compactRatio: Option[Double] = None,
+      cellsAfter: Long = 3L)
 }
